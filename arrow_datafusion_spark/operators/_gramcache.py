@@ -1,26 +1,15 @@
-"""Worker-global gram-set cache for the exact-Jaccard verify stage.
+"""Worker-global memo dicts for the minhash kernels (``shared_dict``).
 
 Guide §4.5: state that is expensive even per task belongs in a module-level
 global guarded by a PID check, so a REUSED Python worker
-(``spark.python.worker.reuse``, default on) keeps it across tasks. The
-verify UDF's closure is re-pickled per task, but the ``import`` it executes
+(``spark.python.worker.reuse``, default on) keeps it across tasks. A kernel
+UDF's closure is re-pickled per task, but the ``import`` it executes
 returns this worker-process module singleton, which survives the task.
 
-What is cached: the frozenset of grams per (gram-kind, text) — a pure
-function of the text content, recomputed from the inputs whenever a worker
-process starts fresh. NOT cached: any query result, any per-dataset
-artifact. Workers die with their SparkSession's JVM, so nothing persists
-across bench/oracle invocations (each bench section runs in its own
-subprocess with a fresh JVM and fresh workers).
-
-Memory bound — FREEZE, never clear: cached sets are charged an estimate of
-their real footprint; once the budget is spent, new entries are computed
-and returned WITHOUT being cached. Callers keep their own small per-batch
-L1 dict, so a frozen L2 degrades exactly to the r13 per-batch behavior —
-a clear-on-full policy was measured CATASTROPHIC here (10× corpus probe:
-per-worker text volume exceeds any sane budget, and clearing mid-batch
-evicts the very texts the current batch still needs, re-tokenizing every
-text once per PAIR instead of once per batch).
+What is cached is each caller's own business (the minhash kernels keep
+per-gram digests: a pure function of the gram, recomputed whenever a
+worker process starts fresh). Each caller bounds its own dict. Workers die
+with their SparkSession's JVM, so nothing persists across sessions.
 """
 
 from __future__ import annotations
@@ -28,21 +17,7 @@ from __future__ import annotations
 import os
 
 _PID: int | None = None
-_CACHE: dict = {}
-_COST = 0
 _DICTS: dict = {}
-# ~bytes the cached frozensets may occupy before the cache freezes;
-# per-gram overhead (str header + set slot) dominates short grams
-_BUDGET = int(os.environ.get("SPARK_GRAFT_GRAM_CACHE_BYTES", 256 << 20))
-_PER_GRAM_OVERHEAD = 64
-
-
-def _pid_guard() -> None:
-    global _PID, _CACHE, _COST, _DICTS
-    pid = os.getpid()
-    if pid != _PID:
-        # fresh (or forked) worker: never trust inherited state
-        _PID, _CACHE, _COST, _DICTS = pid, {}, 0, {}
 
 
 def shared_dict(kind_key) -> dict:
@@ -56,24 +31,12 @@ def shared_dict(kind_key) -> dict:
     is responsible for bounding ITS dict; the PID guard here only
     protects against inherited state in forked workers.
     """
-    _pid_guard()
+    global _PID, _DICTS
+    pid = os.getpid()
+    if pid != _PID:
+        # fresh (or forked) worker: never trust inherited state
+        _PID, _DICTS = pid, {}
     d = _DICTS.get(kind_key)
     if d is None:
         d = _DICTS[kind_key] = {}
     return d
-
-
-def gram_set(kind_key, text, gram_fn):
-    """``gram_fn(text)`` memoized per (kind_key, text) in this worker,
-    under the freeze-when-full budget described in the module docstring."""
-    global _COST
-    _pid_guard()
-    k = (kind_key, text)
-    s = _CACHE.get(k)
-    if s is None:
-        s = gram_fn(text)
-        cost = sum(len(g) for g in s) + len(s) * _PER_GRAM_OVERHEAD
-        if _COST + cost <= _BUDGET:
-            _CACHE[k] = s
-            _COST += cost
-    return s

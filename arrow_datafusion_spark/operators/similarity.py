@@ -263,7 +263,9 @@ def lsh_cosine_topk(
 _CENTROID_UDFS: dict[tuple, "object"] = {}
 
 
-def _centroid_scores_udf(cent_vecs: list[list[float]], cent_norms: list[float]):
+def _centroid_scores_udf(
+    cent_vecs: list[list[float]], cent_norms: list[float], deterministic: bool = True
+):
     """Arrow-batched centroid scoring: returns, per input vector,
     struct<nrm: its norm, sims: array of cosine vs each centroid>.
 
@@ -272,6 +274,9 @@ def _centroid_scores_udf(cent_vecs: list[list[float]], cent_norms: list[float]):
     build; the centroids themselves are still collected from the input on
     EVERY call and merely compared — nothing dataset-derived is reused
     across datasets, and a changed corpus yields a different key.
+    ``deterministic`` is part of the key: PySpark's asNondeterministic()
+    flips the UDF object it is called on, so the nondeterministic variant
+    is a separate object and the cached deterministic one never changes.
 
     Bit-identical to the Column-expression form by construction: the numpy
     loop accumulates PER DIMENSION across the row batch
@@ -288,6 +293,7 @@ def _centroid_scores_udf(cent_vecs: list[list[float]], cent_norms: list[float]):
     memo_key = (
         tuple(tuple(v) for v in cent_vecs),
         tuple(float(x) for x in cent_norms),
+        deterministic,
     )
     cached = _CENTROID_UDFS.get(memo_key)
     if cached is not None:
@@ -296,7 +302,6 @@ def _centroid_scores_udf(cent_vecs: list[list[float]], cent_norms: list[float]):
     C = [np.asarray(v, dtype=np.float64) for v in cent_vecs]
     cn = [float(x) for x in cent_norms]
 
-    @pandas_udf("struct<nrm: double, sims: array<double>>")
     def _score(vs: pd.Series) -> pd.DataFrame:
         if len(vs) == 0:
             return pd.DataFrame({"nrm": [], "sims": []})
@@ -314,10 +319,13 @@ def _centroid_scores_udf(cent_vecs: list[list[float]], cent_norms: list[float]):
             sims[:, ci] = acc / (nrm * cn[ci])
         return pd.DataFrame({"nrm": nrm, "sims": list(sims)})
 
+    udf = pandas_udf(_score, "struct<nrm: double, sims: array<double>>")
+    if not deterministic:
+        udf = udf.asNondeterministic()
     if len(_CENTROID_UDFS) >= 64:  # bound a long session's memo
         _CENTROID_UDFS.clear()
-    _CENTROID_UDFS[memo_key] = _score
-    return _score
+    _CENTROID_UDFS[memo_key] = udf
+    return udf
 
 
 _PAIR_DOT_UDF = []
@@ -406,9 +414,8 @@ def ivf_cosine_topk(
     # the knife-edge ops stay in one engine.
     cent_ids = [int(r[0]) for r in cent_rows]
     cent_vecs = [[float(x) for x in r[1]] for r in cent_rows]
-    scorer = _centroid_scores_udf(
-        cent_vecs, [_py_norm(v) for v in cent_vecs]
-    )
+    cent_norms = [_py_norm(v) for v in cent_vecs]
+    scorer = _centroid_scores_udf(cent_vecs, cent_norms)
 
     # asNondeterministic (guide §4.4): the inner probe join infers an
     # isnotnull(cluster) filter and pushes it below the assignment
@@ -418,9 +425,11 @@ def ivf_cosine_topk(
     # scoring twice). Marking the corpus-side scorer non-deterministic
     # pins it to a single evaluation; the values are unchanged (the
     # kernel is pure), only the optimizer's freedom to duplicate it goes.
+    # The probe side keeps the deterministic scorer.
+    corpus_scorer = _centroid_scores_udf(cent_vecs, cent_norms, deterministic=False)
     e = corpus.select(
         F.col(id_col).alias("n_id"), _as_double(F.col(vec_col)).alias("nv")
-    ).withColumn("cs", scorer.asNondeterministic()(F.col("nv")))
+    ).withColumn("cs", corpus_scorer(F.col("nv")))
 
     def _scored_structs(sims_col: str, negate: bool) -> str:
         """SQL text of the array<struct<s,c>> of per-centroid scores;

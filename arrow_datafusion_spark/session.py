@@ -14,6 +14,12 @@ Scale notes (100 TB target):
   only the AQE *initial* value (adaptive coalescing picks the final count).
 - autoBroadcastJoinThreshold raised: TPC-H dims (region/nation/supplier/
   customer/part) stay broadcast-able well past SF100.
+- Codegen cache sized to the plan working set (CODEGEN_CACHE_ENTRIES): 1000
+  entries hold the 314 classes of the 22 TPC-H plans (~27-39 KB heap and
+  ~6-7 KB metaspace each), which Spark's default 100 evicted before reuse.
+  perfbench tpch_df, 10 same-seed A/B pairs (seeds 21-30, 4 cores):
+  throughput_qps median 2.17 -> 2.80, latency_p50_s 0.44 -> 0.33 s, and
+  14.1 -> 0 compiles per warm statement.
 """
 
 from __future__ import annotations
@@ -36,6 +42,18 @@ EXTRA_TABLES = ("events", "documents", "embeddings")
 ALL_TABLES = TPCH_TABLES + EXTRA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# spark.sql.codegen.cache.maxEntries. One pass of the 22 TPC-H plans compiles
+# 314 distinct generated classes at sf0.01 (290 at sf0.001); Spark's default
+# of 100 evicts each class before its plan runs again. A cached entry retains
+# ~27-39 KB of heap and ~6-7 KB of metaspace (~1.8 loaded classes), measured
+# through the JVM's MemoryPoolMXBeans by emptying a full cache after two
+# passes. 1000 entries (3x the TPC-H working set, room for the SQL front end's
+# and the operators' plans in the same session) bound the cache at ~46 MB.
+# The conf is static and read once per JVM, at the first codegen, so it is set
+# in build_spark only: _RUNTIME_CONFS / prepare() cannot apply it to a session
+# built elsewhere (the driver's plain session keeps Spark's 100).
+CODEGEN_CACHE_ENTRIES = 1000
 
 # Runtime (SQL) confs — safe to set on a session we did not build, e.g. the
 # driver-provided one. Static JVM confs (memory, master) go in build_spark only.
@@ -71,6 +89,7 @@ def build_spark(app: str = "arrow-datafusion-spark", cpus: int | None = None) ->
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
     )

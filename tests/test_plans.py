@@ -415,3 +415,55 @@ def test_ngram_prune_keeps_verified_pairs_byte_identical(spark, sf_dir):
         ).collect()
     }
     assert pruned == unpruned and len(pruned) > 0
+
+
+def test_ivf_scorer_memo_keeps_determinism(spark):
+    """ann_ivf scores every corpus vector in ONE ArrowEvalPython node: the
+    corpus-side scorer is nondeterministic, so the optimizer cannot
+    duplicate it below the probe join's inferred isnotnull(cluster). That
+    scorer is memoized as its own object, because asNondeterministic()
+    mutates the UDF it is called on: the cached deterministic scorer (the
+    probe side's) must stay deterministic."""
+    from arrow_datafusion_spark.operators import similarity as SIM
+
+    df = _QUERIES["ann_ivf"](spark, _SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"ArrowEvalPython \[_score\(nv", plan)) == 1, plan
+    df.collect()
+    memo = SIM._CENTROID_UDFS
+    assert {key[-1] for key in memo} == {True, False}
+    for key, udf in memo.items():
+        assert udf._unwrapped.deterministic is key[-1]
+        assert udf.deterministic is key[-1]
+
+
+def _compile_count(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_tpch_plans_compile_nothing(spark):
+    """build_spark sizes Spark's generated-class cache to hold the 22
+    TPC-H plans' classes, so a second pass recompiles none of them (at
+    Spark's default of 100 entries every class is evicted before its plan
+    runs again). AQE numbers codegen stages in the order query stages
+    finish, so a query whose final plan differs between the passes may
+    need new classes; only repeated plans are held to zero."""
+    from arrow_datafusion_spark.queries import tpch
+
+    def run_pass() -> dict[str, tuple[str, int]]:
+        out = {}
+        for name, build in tpch.QUERIES.items():
+            before = _compile_count(spark)
+            df = build(spark, _SF)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = re.sub(r"plan_id=\d+", "plan_id", re.sub(r"#\d+L?", "#", plan))
+            out[name] = (plan, _compile_count(spark) - before)
+        return out
+
+    first, second = run_pass(), run_pass()
+    repeated = [n for n in first if first[n][0] == second[n][0]]
+    assert len(repeated) >= 15, sorted(set(first) - set(repeated))
+    recompiled = {n: second[n][1] for n in repeated if second[n][1]}
+    assert not recompiled, recompiled

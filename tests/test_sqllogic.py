@@ -556,9 +556,9 @@ def test_reference_sqllogictest_file(spark, fname):
     ]
     assert not stale, f"stale _KNOWN entries (records now pass): {stale}"
     # on a floor miss, show WHY records were skipped: the common benign
-    # cause is a record exceeding slt.py's 60 s cancel bound on a loaded
-    # box (the skip note carries the cancellation text), which is box
-    # state, not an engine regression
+    # cause is a record exceeding slt._RECORD_TIMEOUT_S, the per-record
+    # cancel bound, on a loaded box (the skip note carries the
+    # cancellation text), which is box state, not an engine regression
     assert rep.passed >= _FILES[fname], (
         rep.summary() + "\nskips:\n" + "\n".join(rep.skips[-12:])
     )
