@@ -39,6 +39,7 @@ from arrow_datafusion_spark.session import (
     load_table,
     prepare,
 )
+from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, lex, quote
 
 # PostgreSQL-ish type names DataFusion accepts that Spark SQL spells differently
 _TYPE_MAP = {
@@ -167,28 +168,6 @@ _TYPEOF_MAP_SQL = (
     "'timestamp','Timestamp(Microsecond, Some(\"UTC\"))',"
     "'timestamp_ntz','Timestamp(Microsecond, None)','void','Null')"
 )
-
-
-def _strip_leading_comments(q: str) -> str:
-    """Drop leading whitespace, ``-- ...`` line comments and ``/* ... */``
-    block comments so statement-head regexes see the first real token."""
-    i, n = 0, len(q)
-    while i < n:
-        if q[i].isspace():
-            i += 1
-        elif q.startswith("--", i):
-            j = q.find("\n", i)
-            if j < 0:
-                return ""
-            i = j + 1
-        elif q.startswith("/*", i):
-            j = q.find("*/", i + 2)
-            if j < 0:
-                return ""
-            i = j + 2
-        else:
-            break
-    return q[i:]
 
 
 def _match_paren(q: str, i: int) -> int | None:
@@ -677,7 +656,7 @@ def _rewrite_array_fns(q: str) -> str:
     return q
 
 
-def _rewrite_subscripts(q: str, lits: list[str] | None = None) -> str:
+def _rewrite_subscripts(q: str, lx: Lexed) -> str:
     """DataFusion's postfix subscript operators (sql/src/expr/mod.rs array
     indexing): ``x[i]`` is 1-BASED with NULL out of range; ``x[a:b]`` is an
     inclusive 1-based slice with negative ends counting from the back.
@@ -738,13 +717,10 @@ def _rewrite_subscripts(q: str, lits: list[str] | None = None) -> str:
         # struct['field']: a string subscript on a struct constructor is
         # FIELD ACCESS (the reference resolves it against the c0..cN
         # names) — element_at only works for maps/arrays
-        mfield = re.fullmatch(r"\x00(\d+)\x00", inner.strip())
-        if (
-            lits is not None
-            and mfield
-            and re.match(r"(named_)?struct\s*\(", base, re.IGNORECASE)
+        fieldname = lx.string(inner)
+        if fieldname is not None and re.match(
+            r"(named_)?struct\s*\(", base, re.IGNORECASE
         ):
-            fieldname = lits[int(mfield.group(1))].strip("'")
             repl = f"{base}.{fieldname}"
             q = q[:start] + repl + q[close + 1 :]
             i = start + len(repl)
@@ -1018,7 +994,7 @@ _SUBSECOND_SCALE = {
 }
 
 
-def _fold_literal_subsecond(arg: str, unit: str, lits: list[str]) -> str | None:
+def _fold_literal_subsecond(arg: str, unit: str, lx: Lexed) -> str | None:
     """EXTRACT/date_part of (sub)second units from a LITERAL timestamp with
     FRACTIONAL digits: constant-fold at rewrite time using the text's full
     precision. date_part.rs keeps nanoseconds; Spark timestamps are µs
@@ -1026,12 +1002,10 @@ def _fold_literal_subsecond(arg: str, unit: str, lits: list[str]) -> str | None:
     literal's digits are still in the query text, and the reference's own
     optimizer constant-folds these expressions too. Returns None when the
     argument is not a fractional timestamp literal (runtime path applies)."""
-    m = re.fullmatch(
-        r"(?:TIMESTAMP\s+)?\x00(\d+)\x00", arg.strip(), re.IGNORECASE
-    )
+    m = re.fullmatch(rf"(?:TIMESTAMP\s+)?({LIT})", arg.strip(), re.IGNORECASE)
     if not m:
         return None
-    raw = lits[int(m.group(1))].strip("'").strip()
+    raw = lx.string(m.group(1)).strip()
     tm = re.fullmatch(
         r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:(\d{2})(?:\.(\d+))"
         r"(?:Z|[+-]\d{2}:?(?:\d{2})?)?",
@@ -1053,18 +1027,8 @@ def _find_call(q: str, name: str, start: int = 0) -> tuple[int, int, int] | None
     (name_start, args_start, close_paren_index) with balanced parens/brackets
     (string literals must already be shielded)."""
     m = re.compile(rf"\b{name}\s*\(", re.IGNORECASE).search(q, start)
-    if not m:
-        return None
-    depth, i = 1, m.end()
-    while i < len(q) and depth:
-        if q[i] in "([":
-            depth += 1
-        elif q[i] in ")]":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return m.start(), m.end(), i - 1
+    close = _match_paren(q, m.end() - 1) if m else None
+    return None if close is None else (m.start(), m.end(), close)
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -1142,10 +1106,10 @@ def _validate_arrow_tz(tz: str) -> None:
         ) from None
 
 
-def _rewrite_arrow_calls(q: str, lits: list[str], pfad: bool = False) -> str:
+def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
     """arrow_cast(expr, 'Type') → CAST / expression; arrow_typeof(expr) →
     Arrow-name lookup over typeof(). Runs on a string-shielded query;
-    ``lits`` resolves the shielded type-name literal. ``pfad`` carries the
+    ``lx`` resolves the shielded type-name literal. ``pfad`` carries the
     session's sql_parser.parse_float_as_decimal setting (it changes the
     reference's LITERAL typing, which arrow_typeof resolves statically)."""
     pos = 0
@@ -1160,8 +1124,9 @@ def _rewrite_arrow_calls(q: str, lits: list[str], pfad: bool = False) -> str:
             continue
         expr = parts[0].strip()
         tlit = parts[1].strip()
-        m = re.fullmatch(r"\x00(\d+)\x00", tlit)
-        tname = (lits[int(m.group(1))].strip("'") if m else tlit.strip("'"))
+        tname = lx.string(tlit)
+        if tname is None:
+            tname = tlit.strip("'")
         tm = re.fullmatch(r"time(?:32|64)\(\s*(\w+)\s*\)", tname.strip(), re.IGNORECASE)
         if tm:
             factor = _TIME_UNIT_NS_SQL[tm.group(1).lower()]
@@ -1204,7 +1169,7 @@ def _rewrite_arrow_calls(q: str, lits: list[str], pfad: bool = False) -> str:
                     _validate_arrow_tz(tz)
                     wall = f"to_utc_timestamp(CAST({expr} AS TIMESTAMP_NTZ), '{tz}')"
                     if re.fullmatch(
-                        r"(?:TIMESTAMP\s+)?\x00\d+\x00(?:\s*::\s*TIMESTAMP)?",
+                        rf"(?:TIMESTAMP\s+)?{LIT}(?:\s*::\s*TIMESTAMP)?",
                         expr.strip(),
                         re.IGNORECASE,
                     ):
@@ -1364,7 +1329,7 @@ def _rewrite_bracket_literals(q: str) -> str:
         j = i - 1
         while j >= 0 and q[j].isspace():
             j -= 1
-        if j >= 0 and (q[j].isalnum() or q[j] in "_)]`\x00"):
+        if j >= 0 and (q[j].isalnum() or q[j] in f"_)]`{MARK}"):
             # ... unless the preceding word is a SQL keyword — 'SELECT [1]'
             # or 'WHEN [..]' introduces a literal, not a subscript base
             k = j
@@ -1388,31 +1353,27 @@ def _rewrite_bracket_literals(q: str) -> str:
     return q
 
 
-def _rewrite_sql(q: str, pfad: bool = False) -> str:
+def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     """Rewrite the PostgreSQL-isms DataFusion accepts but Spark SQL rejects.
 
     Spark 4 already handles ``::`` casts, ``||`` concat, and ANSI intervals,
-    so only a short list remains. String literals are shielded first so the
-    rewrites can't touch quoted text.
+    so only a short list remains. The rewrites read the lexed statement's
+    shielded text, so none can touch quoted text; the literals are restored
+    on return.
     """
-    # shield '...' literals
-    lits: list[str] = []
-
-    def _shield(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    q = re.sub(r"'(?:[^']|'')*'", _shield, q)
+    q = lx.text
 
     # double-quoted IDENTIFIERS (SQL standard / Postgres — the reference
     # never treats "..." as a string) → Spark backticks
     q = re.sub(r'"([^"]*)"', lambda m: f"`{m.group(1)}`", q)
 
     # a !~ b / a ~* b / a ~ b  →  (NOT) a RLIKE b  (case-insensitive via (?i))
-    q = re.sub(r"!~\*", " NOT RLIKE \x01(?i)\x01 || ", q)
-    q = re.sub(r"!~", " NOT RLIKE ", q)
-    q = re.sub(r"~\*", " RLIKE \x01(?i)\x01 || ", q)
-    q = re.sub(r"(?<![<>!=\^])~(?!=)", " RLIKE ", q)
+    if "~" in q:
+        ci = lx.add("'(?i)'")
+        q = re.sub(r"!~\*", f" NOT RLIKE {ci} || ", q)
+        q = re.sub(r"!~", " NOT RLIKE ", q)
+        q = re.sub(r"~\*", f" RLIKE {ci} || ", q)
+        q = re.sub(r"(?<![<>!=\^])~(?!=)", " RLIKE ", q)
 
     # `interval '5' years|months|hours`: sqlparser-rs does NOT accept
     # these plural words as interval units — the word becomes a column
@@ -1422,7 +1383,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # reference's parse. (Plural milliseconds/microseconds/nanoseconds ARE
     # units in sqlparser — untouched.)
     q = re.sub(
-        r"\bINTERVAL\s+(\x00\d+\x00)\s+(years|months|hours)\b",
+        rf"\bINTERVAL\s+({LIT})\s+(years|months|hours)\b",
         r"(INTERVAL \1) AS \2",
         q,
         flags=re.IGNORECASE,
@@ -1432,7 +1393,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # `>>`/`<<` (sqlparser-rs PG-style: additive > xor > shift), Spark the
     # reverse — re-group simple-token xor chains adjacent to a shift so
     # `d ^ 7 >> 4` evaluates as `(d ^ 7) >> 4` (scalar.slt:1059)
-    _tok = r"[\w.\x00]+"
+    _tok = rf"[\w.{MARK}]+"
     # unary minus binds TIGHTER than ^ in the reference ((-2) ^ 2), so a
     # clearly-unary leading minus (after an operator / paren / keyword)
     # goes INSIDE the regrouping parens; Spark also parses the minus
@@ -1476,14 +1437,12 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
         if len(parts) != 4:
             pos = e
             continue
-        mfl = re.fullmatch(r"\x00(\d+)\x00", parts[3])
-        mrep = re.fullmatch(r"\x00(\d+)\x00", parts[2])
+        rep = lx.literal(parts[2])
         if (
-            mfl
-            and lits[int(mfl.group(1))].strip("'") == "g"
-            and mrep
-            and "\\" not in lits[int(mrep.group(1))]
-            and "$" not in lits[int(mrep.group(1))]
+            lx.string(parts[3]) == "g"
+            and rep is not None
+            and "\\" not in rep
+            and "$" not in rep
         ):
             repl = f"\x02regexp_replace\x02({parts[0]}, {parts[1]}, {parts[2]})"
         else:
@@ -1585,25 +1544,25 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # corpus surface is display-only; sub-µs time arithmetic remains
     # unrepresentable, documented)
     def _time_ns_lit(m: "re.Match[str]") -> str:
-        text = lits[int(m.group(2))].strip("'")
+        text = lx.string(m.group(1))
         if re.fullmatch(r"\d{1,2}:\d{2}:\d{2}\.\d{7,9}", text):
             return m.group(1)  # keep only the shielded string literal
         return m.group(0)
 
-    q = re.sub(r"\bTIME\s+(\x00(\d+)\x00)", _time_ns_lit, q, flags=re.IGNORECASE)
+    q = re.sub(rf"\bTIME\s+({LIT})", _time_ns_lit, q, flags=re.IGNORECASE)
     #   TIMESTAMP '...'::bigint  — the literal is already Timestamp(ns) in
     #   the reference, so a direct ::bigint is the same ns reinterpret
     #   (an optional redundant ::timestamp hop joins the match);
     #   CAST(TIMESTAMP '...' AS BIGINT) — same kernel, CAST spelling.
     q = re.sub(
-        r"\bTIMESTAMP\s+(\x00\d+\x00)\s*(?:::\s*TIMESTAMP\s*)?"
+        rf"\bTIMESTAMP\s+({LIT})\s*(?:::\s*TIMESTAMP\s*)?"
         r"::\s*BIGINT\b(?:\s*/\s*(\d+))?",
         _ts_bigint,
         q,
         flags=re.IGNORECASE,
     )
     q = re.sub(
-        r"\bCAST\s*\(\s*TIMESTAMP\s+(\x00\d+\x00)\s+AS\s+BIGINT\s*\)()",
+        rf"\bCAST\s*\(\s*TIMESTAMP\s+({LIT})\s+AS\s+BIGINT\s*\)()",
         _ts_bigint,
         q,
         flags=re.IGNORECASE,
@@ -1621,7 +1580,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # the reference's reinterpret, for every source type).
     def _ts_bigint_any(m: "re.Match[str]") -> str:
         src = m.group(1).strip()
-        if re.fullmatch(r"\x00\d+\x00", src):
+        if lx.literal(src) is not None:
             return _ts_bigint(m)
         # the integral THEN branch routes through STRING because Spark
         # type-checks BOTH branches at analysis time: a DATE source would
@@ -1638,7 +1597,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
         return f"({ns} div {m.group(2)})" if m.group(2) else ns
 
     _TS_SRC = (
-        r"(\x00\d+\x00"
+        rf"({LIT}"
         r"|(?:`[^`]+`|\w+)(?:\s*\.\s*(?:`[^`]+`|\w+))*"
         r"|\((?:[^()]|\([^()]*\))*\))"
     )
@@ -1690,10 +1649,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
             break
         s, a, e = hit
         parts = _split_top_level(q[a:e])
-        m = re.fullmatch(r"\x00(\d+)\x00", parts[1].strip()) if (
-            len(parts) == 2
-        ) else None
-        algo = lits[int(m.group(1))].strip("'").lower() if m else None
+        algo = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
         if algo not in _DIGEST_FORMS:
             pos = e
             continue
@@ -1782,7 +1738,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # array[...] literals; arrow_cast / arrow_typeof as SQL functions
     q = _rewrite_array_literals(q)
     q = _rewrite_bracket_literals(q)
-    q = _rewrite_arrow_calls(q, lits, pfad=pfad)
+    q = _rewrite_arrow_calls(q, lx, pfad=pfad)
 
     # string concat skips NULLs in the reference (Postgres semantics;
     # string/concat.rs) where Spark's concat propagates them — concat_ws('')
@@ -1852,7 +1808,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
         )
         if msub:
             unit = msub.group(1).lower()
-            folded = _fold_literal_subsecond(msub.group(2).strip(), unit, lits)
+            folded = _fold_literal_subsecond(msub.group(2).strip(), unit, lx)
             if folded is not None:
                 q = q[:s] + folded + q[e + 1:]
                 pos = s + len(folded)
@@ -1911,7 +1867,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     }
 
     def _interval_lit(m: "re.Match[str]") -> str:
-        raw = lits[int(m.group(1))].strip("'").strip()
+        raw = lx.string(m.group(1)).strip()
         toks = raw.split()
         total, i, needs_rewrite = 0.0, 0, False
         while i < len(toks):
@@ -1941,7 +1897,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
             f"{secs:09.6f}' DAY TO SECOND"
         )
 
-    q = re.sub(r"\binterval\s+\x00(\d+)\x00(?!\s*[A-Za-z])", _interval_lit, q,
+    q = re.sub(rf"\binterval\s+({LIT})(?!\s*[A-Za-z])", _interval_lit, q,
                flags=re.IGNORECASE)
 
     # encode/decode(x, 'base64'|'hex') (functions/src/encoding/inner.rs):
@@ -1960,10 +1916,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
                 break
             s, a, e = hit
             parts = _split_top_level(q[a:e])
-            m = re.fullmatch(r"\x00(\d+)\x00", parts[1].strip()) if (
-                len(parts) == 2
-            ) else None
-            enc = lits[int(m.group(1))].strip("'").lower() if m else None
+            enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
             if enc not in forms:
                 pos = e
                 continue
@@ -2024,8 +1977,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
         s, a, e = hit
         parts = _split_top_level(q[a:e])
         first = parts[0].strip() if parts else ""
-        m = re.fullmatch(r"\x00(\d+)\x00", first)
-        unit = (lits[int(m.group(1))].strip("'").lower() if m else "")
+        unit = (lx.string(first) or "").lower()
         sub = {"millisecond": "1000", "microsecond": "1000000",
                "nanosecond": "1000000000"}
         if len(parts) != 2 or unit not in ("dow", "epoch", "second", *sub):
@@ -2037,7 +1989,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
         elif unit == "epoch":
             repl = _epoch_expr(arg)
         else:
-            repl = _fold_literal_subsecond(arg, unit, lits)
+            repl = _fold_literal_subsecond(arg, unit, lx)
             if repl is None and unit == "second":
                 # non-literal seconds: Spark's extract is already right
                 pos = e
@@ -2067,25 +2019,22 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
             continue
         if not re.search(r"\bTIMESTAMPTZ\b", parts[1], re.IGNORECASE):
             continue
-        om = re.fullmatch(
-            r"TIMESTAMP\s+\x00(\d+)\x00", parts[2], re.IGNORECASE
-        )
+        om = re.fullmatch(rf"TIMESTAMP\s+({LIT})", parts[2], re.IGNORECASE)
         if not om:
             continue
-        oi = int(om.group(1))
-        raw = lits[oi].strip("'")
+        raw = lx.string(om.group(1))
         if not re.search(r"(?:Z|[+-]\d{2}:?\d{2})\s*$", raw):
             if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw.strip()):
                 # a date-only literal needs a time part before the offset
                 # suffix or Spark rejects the typed literal
-                lits[oi] = f"'{raw.strip()} 00:00:00Z'"
+                lx.replace(om.group(1), quote(f"{raw.strip()} 00:00:00Z"))
             else:
-                lits[oi] = f"'{raw}Z'"
+                lx.replace(om.group(1), quote(f"{raw}Z"))
     # TIMESTAMPTZ literals: Spark has no TIMESTAMPTZ typed-literal syntax —
     # the session is pinned UTC, so a plain TIMESTAMP cast preserves the
     # instant (offsets in the text are applied by the cast)
     q = re.sub(
-        r"\bTIMESTAMPTZ\s+(\x00\d+\x00)", r"CAST(\1 AS TIMESTAMP)", q,
+        rf"\bTIMESTAMPTZ\s+({LIT})", r"CAST(\1 AS TIMESTAMP)", q,
         flags=re.IGNORECASE,
     )
     # date_bin (datetime/date_bin.rs): widen the SQL surface beyond the
@@ -2108,10 +2057,10 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
             pos = e
             continue
         stride, t_arg, o_arg = parts
-        mlit = re.fullmatch(r"(?:INTERVAL\s+)?\x00(\d+)\x00", stride, re.IGNORECASE)
+        mlit = re.fullmatch(rf"(?:INTERVAL\s+)?({LIT})", stride, re.IGNORECASE)
         months = None
         if mlit:
-            raw = lits[int(mlit.group(1))].strip("'").strip()
+            raw = lx.string(mlit.group(1)).strip()
             toks = raw.split()
             total, i, ok = 0, 0, bool(toks)
             while ok and i < len(toks):
@@ -2129,7 +2078,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
             if ok:
                 months = total
             elif not stride.upper().startswith("INTERVAL"):
-                stride = f"INTERVAL \x00{mlit.group(1)}\x00"
+                stride = f"INTERVAL {mlit.group(1)}"
         if months:
             t_c = f"CAST({t_arg} AS TIMESTAMP)"
             o_c = f"CAST({o_arg} AS TIMESTAMP)"
@@ -2615,7 +2564,7 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # functions-array SQL surface (templates mirror the registry)
     q = _rewrite_array_fns(q)
     # postfix subscripts: 1-based indexing / inclusive slices
-    q = _rewrite_subscripts(q, lits)
+    q = _rewrite_subscripts(q, lx)
     # unnest → explode/inline where a Spark generator can express it
     q = _rewrite_unnest(q)
     # ordered-set aggregates: agg(expr ORDER BY keys) → sorted collect
@@ -2630,45 +2579,12 @@ def _rewrite_sql(q: str, pfad: bool = False) -> str:
     # string-literal column aliases (``AS 'order count'`` — accepted by
     # the reference's parser) → backticked identifiers
     q = re.sub(
-        r"\bAS\s+\x00(\d+)\x00",
-        lambda m: f"AS `{lits[int(m.group(1))][1:-1]}`",
+        rf"\bAS\s+({LIT})",
+        lambda m: f"AS `{lx.string(m.group(1))}`",
         q,
         flags=re.IGNORECASE,
     )
-
-    # unshield; the \x01(?i)\x01 marker becomes a quoted (?i) prefix
-    q = q.replace("\x01(?i)\x01 || ", "'(?i)' || ")
-    q = re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], q)
-    return q
-
-
-def _bind_placeholders(query: str, params) -> tuple[str, dict]:
-    """Rewrite DataFusion placeholders to Spark named-parameter markers.
-
-    ``$1``/``$2`` bind positionally from a list/tuple; ``$name`` binds from
-    a dict. Both become ``:pN``/``:name`` so repeated and out-of-order
-    references work (Spark's ``?`` markers are strictly in-order).
-    String literals are shielded so quoted ``$`` text is untouched.
-    """
-    lits: list[str] = []
-
-    def _shield(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    q = re.sub(r"'(?:[^']|'')*'", _shield, query)
-    args: dict = {}
-    if isinstance(params, (list, tuple)):
-        for i, v in enumerate(params, start=1):
-            args[f"p{i}"] = v
-        q = re.sub(r"\$(\d+)", lambda m: f":p{m.group(1)}", q)
-    elif isinstance(params, dict):
-        args = dict(params)
-        q = re.sub(r"\$([A-Za-z_][A-Za-z0-9_]*)", lambda m: f":{m.group(1)}", q)
-    else:
-        raise TypeError("params must be a list/tuple ($1-style) or dict ($name-style)")
-    q = re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], q)
-    return q, args
+    return lx.unshield(q)
 
 
 def _arrow_type_display(dt) -> str:
@@ -2847,52 +2763,23 @@ def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
     return ", ".join(defs)
 
 
-def _parse_execute_args(arglist: str | None) -> list:
-    """Parse EXECUTE's literal argument list: 'strings' (with '' escapes),
-    integers, floats, booleans, NULL."""
-    if not arglist or not arglist.strip():
-        return []
-    out = []
-    # quoted branch first WITH leading whitespace, so a string literal
-    # containing a comma isn't split by the bare [^,]+ fallback
-    for tok in re.findall(r"\s*'(?:[^']|'')*'|[^,]+", arglist):
-        t = tok.strip()
-        if not t:
-            # whitespace between a quoted literal and the following comma is
-            # captured by the bare [^,]+ branch as an empty token — skip it
-            continue
-        if t.startswith("'"):
-            out.append(t[1:-1].replace("''", "'"))
-        elif t.upper() == "NULL":
-            out.append(None)
-        elif t.upper() in ("TRUE", "FALSE"):
-            out.append(t.upper() == "TRUE")
-        elif re.fullmatch(r"[+-]?\d+", t):
-            out.append(int(t))
-        else:
-            out.append(float(t))
-    return out
+def _parse_with_ctes(lx: Lexed) -> tuple[list[tuple[str, tuple[str, ...] | None, str]], str]:
+    """Parse ``WITH RECURSIVE name[(cols)] AS ( body ) [, ...] rest``;
+    the bodies and rest are shielded text.
 
-
-def _strip_strings(q: str) -> str:
-    """Blank out '...' literals so keyword scans can't match quoted text."""
-    return re.sub(r"'(?:[^']|'')*'", "''", q)
-
-
-def _parse_with_ctes(query: str) -> tuple[list[tuple[str, tuple[str, ...] | None, str]], str]:
-    """Parse ``WITH RECURSIVE name[(cols)] AS ( body ) [, ...] rest``.
-
-    Hand-rolled cursor over balanced parentheses (string literals shielded)
-    — mirrors the statement shapes in the reference's cte.slt; not a full
-    SQL grammar.
+    Hand-rolled cursor over balanced parentheses — mirrors the statement
+    shapes in the reference's cte.slt; not a full SQL grammar.
     """
+    query = lx.text
     m = re.match(r"\s*WITH\s+RECURSIVE\s+", query, re.IGNORECASE)
     pos = m.end()
     ctes: list[tuple[str, tuple[str, ...] | None, str]] = []
     while True:
         m = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*", re.IGNORECASE).match(query, pos)
         if not m:
-            raise ValueError(f"cannot parse CTE name at: {query[pos:pos + 40]!r}")
+            raise ValueError(
+                f"cannot parse CTE name at: {lx.unshield(query[pos:pos + 40])!r}"
+            )
         name = m.group(1)
         pos = m.end()
         cols: tuple[str, ...] | None = None
@@ -2902,24 +2789,15 @@ def _parse_with_ctes(query: str) -> tuple[list[tuple[str, tuple[str, ...] | None
             pos = close + 1
         m = re.compile(r"\s*AS\s*\(", re.IGNORECASE).match(query, pos)
         if not m:
-            raise ValueError(f"expected AS ( at: {query[pos:pos + 40]!r}")
+            raise ValueError(f"expected AS ( at: {lx.unshield(query[pos:pos + 40])!r}")
         start = m.end()
-        depth, i = 1, start
-        while depth and i < len(query):
-            c = query[i]
-            if c == "'":  # skip string literal
-                j = i + 1
-                while j < len(query):
-                    if query[j] == "'" and query[j + 1 : j + 2] != "'":
-                        break
-                    j += 2 if query[j] == "'" else 1
-                i = j
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
-        ctes.append((name, cols, query[start : i - 1]))
+        close = _match_paren(query, start - 1)
+        if close is None:
+            raise ValueError(
+                f"unbalanced CTE body at: {lx.unshield(query[start:start + 40])!r}"
+            )
+        i = close + 1
+        ctes.append((name, cols, query[start:close]))
         m = re.compile(r"\s*,").match(query, i)
         if not m:
             return ctes, query[i:]
@@ -2929,10 +2807,9 @@ def _parse_with_ctes(query: str) -> tuple[list[tuple[str, tuple[str, ...] | None
 def _split_recursive_union(body: str) -> tuple[str, str, bool]:
     """Split a recursive CTE body at its LAST top-level UNION [ALL] (the
     recursive term is the final branch, per PostgreSQL/DataFusion semantics).
-    Returns (base_sql, step_sql, distinct)."""
-    shielded = _strip_strings(body)
+    Returns (base_sql, step_sql, distinct) of shielded text."""
     depth, last = 0, None
-    for m in re.finditer(r"\(|\)|\bUNION(?:\s+ALL)?\b", shielded, re.IGNORECASE):
+    for m in re.finditer(r"\(|\)|\bUNION(?:\s+ALL)?\b", body, re.IGNORECASE):
         tok = m.group(0)
         if tok == "(":
             depth += 1
@@ -3300,8 +3177,12 @@ class SessionContext:
         self._track_path(name, path, lambda: self.register_arrow(name, path))
 
     def register_view(self, name: str, sql: str) -> None:
-        self.register_table(name, self.sql(sql))
-        self._view_defs[name] = sql
+        self._ensure_macros()
+        self._register_view(name, lex(sql))
+
+    def _register_view(self, name: str, lx: Lexed) -> None:
+        self.register_table(name, self._run(lx))
+        self._view_defs[name] = lx.unshield()
         # per-column NAMED TIME ZONES (timestamps.slt:1289-1435, issue
         # #8899): the reference's Timestamp(unit, Some("tz")) rides the
         # column type; Spark holds a single session zone, so record the
@@ -3310,12 +3191,16 @@ class SessionContext:
         # it. Values are stored as the same UTC instants either way.
         self._column_tz.pop(name.lower(), None)
         for m in re.finditer(
-            r"arrow_cast\s*\(\s*[^,()]+,\s*'Timestamp\(\s*\w+\s*,\s*"
-            r"Some\(\s*\"([^\"]+)\"\s*\)\s*\)'\s*\)\s+AS\s+(\w+)",
-            sql,
+            rf"arrow_cast\s*\(\s*[^,()]+,\s*({LIT})\s*\)\s+AS\s+(\w+)",
+            lx.text,
             re.IGNORECASE,
         ):
-            tz = m.group(1).strip()
+            mt = re.fullmatch(
+                r"Timestamp\(\s*\w+\s*,\s*Some\(\s*\"([^\"]+)\"\s*\)\s*\)",
+                lx.string(m.group(1)),
+                re.IGNORECASE,
+            )
+            tz = mt.group(1).strip() if mt else "UTC"
             if tz.upper() not in ("UTC", "+00:00", "Z"):
                 self._column_tz.setdefault(name.lower(), {})[
                     m.group(2).lower()
@@ -3377,245 +3262,131 @@ class SessionContext:
     def sql(self, query: str, params=None) -> DataFrame:
         """Parse/plan/optimize via Catalyst (SURVEY.md §3.1 steps 1–7).
 
-        ``params`` binds DataFusion-style placeholders (``$1``/``$2``
-        positional from a list, ``$name`` named from a dict — the
-        ``Placeholder`` expression, datafusion/expr/src/expr.rs:925) by
-        rewriting them to Spark named-parameter markers and delegating to
-        ``spark.sql(..., args=...)`` — server-side literal binding, not
-        string splicing, so values can't inject SQL.
+        Lex once: the statement is lexed (sql/lex.py) and every later step —
+        memo bump, default-schema strip, dispatch, plan-time checks, each
+        rewrite pass — reads that one shielded text and literal table;
+        ``_rewrite_sql`` restores the literals for ``spark.sql``.
 
-        ``WITH RECURSIVE`` (Spark has no recursion primitive) is detached
-        here and driven through the semi-naive fixpoint in plans/recursive.py
-        (RecursiveQueryExec analog, recursive_query.rs:57); ``COPY ... TO``
-        (statement.rs:186 CopyTo) lowers onto ``df.write``; everything else
-        goes straight to ``spark.sql``.
+        ``params`` binds ``$1`` (list) / ``$name`` (dict) placeholders (the
+        ``Placeholder`` expression, datafusion/expr/src/expr.rs:925) as
+        Spark ``spark.sql(..., args=...)`` markers — server-side literal
+        binding, not string splicing, so values can't inject SQL.
+
+        ``_STATEMENTS`` dispatches on the leading keywords, like the
+        reference's ``statement_to_plan`` (sql/src/statement.rs:182):
+        SET/SHOW (settings layer); EXPLAIN ANALYZE; COPY ... TO (CopyTo →
+        df.write); PREPARE/EXECUTE/DEALLOCATE; CREATE EXTERNAL TABLE;
+        CREATE VIEW; CREATE FUNCTION; DROP VIEW/TABLE/FUNCTION; then, after
+        the plan-time checks (_check_query), WITH RECURSIVE (semi-naive
+        fixpoint, plans/recursive.py), CREATE TABLE, SELECT ... INTO,
+        DESCRIBE and INSERT INTO. Anything else — or a statement its
+        handler declines — goes to ``_spark_sql``: a plain query costs one
+        table lookup.
         """
         self._ensure_macros()
-        if re.match(
-            r"\s*(CREATE|DROP|INSERT|COPY|ALTER|SET)\b",
-            _strip_leading_comments(query),
-            re.IGNORECASE,
-        ):
-            # catalog/settings mutation ahead (possibly via a path that
-            # doesn't route through register_table, e.g. native CTAS /
-            # saveAsTable) — conservatively invalidate the rewrite memo.
-            # Leading '--'/'/*..*/' comments are stripped first so a
-            # commented mutation ('-- x\nCREATE ...') can't dodge the
-            # invalidation (ADVICE r13).
+        lx, args = lex(query), None
+        if params is not None:
+            lx, args = lx.bind(params)
+        return self._run(lx, args)
+
+    # statements that may mutate the catalog or settings (possibly via a
+    # path that doesn't route through register_table, e.g. native CTAS /
+    # saveAsTable): they conservatively invalidate the rewrite memo
+    _MUTATING = frozenset(("CREATE", "DROP", "INSERT", "COPY", "ALTER", "SET"))
+    # DDL/utility statements whose default catalog/schema qualifiers are
+    # stripped (DML queries resolve through Spark's catalog, which has no
+    # 'public' schema)
+    _QUALIFIED = frozenset(("CREATE", "DROP", "DESCRIBE", "DESC", "INSERT", "SHOW"))
+    _MODIFIERS = frozenset(("OR", "REPLACE", "TEMPORARY", "TEMP", "UNBOUNDED"))
+    # leading keyword → (handler, runs after the plan-time checks), or a
+    # dict keyed by the next keyword. A handler returns a DataFrame, or
+    # None to fall through to the query path. The unchecked forms carry no
+    # query text of their own, or re-enter _run with their body.
+    _STATEMENTS: dict = {
+        "SET": ("_sql_set_or_show", False),
+        "SHOW": ("_sql_set_or_show", False),
+        "EXPLAIN": {"ANALYZE": ("_sql_explain_analyze", False)},
+        "COPY": ("_sql_copy_to", False),
+        "PREPARE": ("_sql_prepare", False),
+        "EXECUTE": ("_sql_execute", False),
+        "DEALLOCATE": ("_sql_deallocate", False),
+        "CREATE": {
+            "EXTERNAL": ("_sql_create_external", False),
+            "VIEW": ("_sql_create_view", False),
+            "FUNCTION": ("_sql_create_function", False),
+            "TABLE": ("_sql_create_table", True),
+        },
+        "DROP": {
+            "VIEW": ("_sql_drop_view", False),
+            "TABLE": ("_sql_drop_table", False),
+            "FUNCTION": ("_sql_drop_function", False),
+        },
+        "WITH": {"RECURSIVE": ("_sql_recursive", True)},
+        "SELECT": ("_sql_select_into", True),
+        "DESCRIBE": ("_sql_describe_table", True),
+        "INSERT": {"INTO": ("_sql_insert", True)},
+    }
+
+    def _run(self, lx: Lexed, args=None) -> DataFrame:
+        """Dispatch one lexed (and bound) statement — see ``sql``."""
+        head = lx.head(6)
+        first = head[0] if head else ""
+        if first in self._MUTATING:
             self._rw_version += 1
-        handled = self._sql_set_or_show(query)
-        if handled is not None:
-            return handled
-        # DataFusion's default catalog tree: 'datafusion.public.t',
-        # 'public.t' and 't' name the same session object. Strip the
-        # configured default-catalog/schema qualifiers in DDL/utility
-        # statement heads (DML queries resolve through Spark's catalog,
-        # which has no 'public' schema).
-        if re.match(
-            r"\s*(CREATE|DROP|DESCRIBE|DESC|INSERT|SHOW)\b", query, re.IGNORECASE
-        ):
-            cat = self.settings.get("datafusion.catalog.default_catalog")
-            sch = self.settings.get("datafusion.catalog.default_schema")
-            # shield '...' literals so a quoted string containing
-            # 'public.' survives the qualifier strip intact, and match
-            # case-insensitively (the reference resolves catalog/schema
-            # identifiers case-insensitively)
-            _lits: list[str] = []
+        if first in self._QUALIFIED:
+            lx = self._strip_default_schema(lx)
+        entry = self._STATEMENTS.get(first)
+        if isinstance(entry, dict):
+            nxt = next((w for w in head[1:] if w not in self._MODIFIERS), "")
+            entry = entry.get(nxt)
+        if entry is not None and not entry[1]:
+            res = getattr(self, entry[0])(lx, args)
+            if res is not None:
+                return res
+            entry = None
+        lx = self._check_query(lx)
+        if entry is not None:
+            res = getattr(self, entry[0])(lx, args)
+            if res is not None:
+                return res
+        return self._spark_sql(lx, args)
 
-            def _shield_lit(m: re.Match) -> str:
-                _lits.append(m.group(0))
-                return f"\x00{len(_lits) - 1}\x00"
-
-            query = re.sub(r"'(?:[^']|'')*'", _shield_lit, query)
-            query = re.sub(
+    def _strip_default_schema(self, lx: Lexed) -> Lexed:
+        """DataFusion's default catalog tree: 'datafusion.public.t',
+        'public.t' and 't' name the same session object. Strip the
+        configured default catalog/schema qualifiers, case-insensitively
+        (the reference resolves catalog/schema identifiers that way);
+        literals are shielded, so a quoted 'public.' survives."""
+        cat = self.settings.get("datafusion.catalog.default_catalog")
+        sch = self.settings.get("datafusion.catalog.default_schema")
+        return lx.derive(
+            re.sub(
                 rf"\b(?:{re.escape(cat)}\s*\.\s*)?{re.escape(sch)}\s*\.\s*"
                 r"(?=[A-Za-z_`\"])",
                 "",
-                query,
+                lx.text,
                 flags=re.IGNORECASE,
             )
-            query = re.sub(r"\x00(\d+)\x00", lambda m: _lits[int(m.group(1))], query)
-        m = re.match(r"\s*EXPLAIN\s+ANALYZE\s+(.*)$", query, re.IGNORECASE | re.DOTALL)
-        if m:
-            # DataFusion's EXPLAIN ANALYZE returns a (plan_type, plan) table
-            # of the executed plan with metrics — mirror that shape. The
-            # inner statement recurses through self.sql (with the original
-            # params) so the WITH RECURSIVE / COPY / information_schema
-            # rewrites apply to it too.
-            text = self._analyze_df(self.sql(m.group(1), params))
-            return self.spark.createDataFrame(
-                [("Plan with Metrics", text)], "plan_type string, plan string"
-            )
-        args = None
-        if params is not None:
-            query, args = _bind_placeholders(query, params)
-        if re.match(r"\s*COPY\b", query, re.IGNORECASE):
-            return self._sql_copy_to(query, args)
-        if re.match(r"\s*CREATE\s+(?:UNBOUNDED\s+)?EXTERNAL\s+TABLE\b", query, re.IGNORECASE):
-            return self._sql_create_external(query)
-        m = re.match(
-            # the optional type list may nest parens (DECIMAL(10,2))
-            r"\s*PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s*"
-            r"(\((?:[^()]|\([^()]*\))*\))?\s+AS\s+(.*)$",
-            query,
-            re.IGNORECASE | re.DOTALL,
         )
-        if m:
-            # PREPARE name [(types)] AS query (sql/src/statement.rs Prepare):
-            # store the text; EXECUTE binds $n placeholders positionally.
-            # Plan-time rejections mirror the reference's planner:
-            name, typelist, body = m.group(1).lower(), m.group(2), m.group(3).strip()
-            if name in self._prepared:
-                # duplicate PREPARE without DEALLOCATE
-                raise ValueError(f"prepared statement {name!r} already exists")
-            shielded = re.sub(r"'[^']*'", "''", body)
-            if re.search(r"\$[A-Za-z_]", shielded):
-                # only positional $n placeholders are supported
-                raise ValueError("named placeholders ($foo) are not supported")
-            if re.search(r"\bIS\s+(NOT\s+)?\$\d", shielded, re.IGNORECASE):
-                raise ValueError("IS $n is not a valid placeholder position")
-            used = [int(n) for n in re.findall(r"\$(\d+)", shielded)]
-            if typelist is not None:
-                ntypes = len(_split_top_level(typelist[1:-1]))
-                if used and max(used) > ntypes:
-                    raise ValueError(
-                        f"prepared statement uses ${max(used)} but only "
-                        f"{ntypes} parameter types were declared"
-                    )
-            if re.match(r"\s*(SELECT|VALUES|WITH)\b", body, re.IGNORECASE):
-                # validate the body plans (placeholders bound to NULL) so a
-                # body the reference rejects at PREPARE time (e.g. columns
-                # with no table) fails here, not at first EXECUTE
-                self.sql(re.sub(r"\$\d+", "NULL", body))
-            self._prepared[name] = body
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)\s*(?:\((.*)\))?\s*;?\s*$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            stored = self._prepared.get(m.group(1).lower())
-            if stored is None:
-                raise ValueError(f"no prepared statement named {m.group(1)!r}")
-            return self.sql(stored, _parse_execute_args(m.group(2)))
-        m = re.match(r"\s*DEALLOCATE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$", query, re.IGNORECASE)
-        if m:
-            if self._prepared.pop(m.group(1).lower(), None) is None:
-                # reference errors on deallocating an unknown statement
-                raise ValueError(f"no prepared statement named {m.group(1)!r}")
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMPORARY\s+|TEMP\s+)?VIEW\s+"
-            r"(IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+(.*)$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # DataFusion's CREATE VIEW (sql/src/statement.rs CreateView) is a
-            # SESSION-catalog object; Spark's native CREATE VIEW tries to
-            # persist and rejects references to temp views, so route through
-            # register_view (temp view + recorded definition for
-            # information_schema.views). The body recurses through self.sql,
-            # so rewrites (:: casts, macros, recursion) apply inside views.
-            or_replace, if_not_exists, name = m.group(1), m.group(2), m.group(3)
-            body = m.group(4).strip().rstrip(";")
-            if self.table_exist(name) and not or_replace:
-                if if_not_exists:
-                    return self.spark.createDataFrame([], "result string")
-                raise ValueError(f"view {name!r} already exists (use OR REPLACE)")
-            self.register_view(name, body)
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
-            query,
-            re.IGNORECASE,
-        )
-        if m:
-            if_exists, name = m.group(1), m.group(2)
-            if not self.table_exist(name):
-                if if_exists:
-                    return self.spark.createDataFrame([], "result string")
-                raise ValueError(f"no view named {name!r}")
-            if name not in self._view_defs and not any(
-                t.name == name and t.tableType == "VIEW"
-                for t in self.spark.catalog.listTables()
-            ):
-                # drop_view_cant_drop_table (ddl.slt): the name resolves to
-                # a TABLE — DROP VIEW must not remove it
-                raise ValueError(f"View {name!r} doesn't exist.")
-            self.deregister_table(name)
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
-            query,
-            re.IGNORECASE,
-        )
-        if m and m.group(1) in self._view_defs:
-            # drop_table_cant_drop_view (ddl.slt): the name is a session
-            # VIEW — DROP TABLE must not remove it
-            raise ValueError(f"Table {m.group(1)!r} doesn't exist.")
-        if m:
-            # managed-table DROP falls through to Spark below; either way
-            # the per-table DEFAULT/NOT NULL records must not survive
-            self._col_defaults.pop(m.group(1).lower(), None)
-            self._not_null.pop(m.group(1).lower(), None)
-            self._ctas_non_null.pop(m.group(1).lower(), None)
-        if m and any(
-            t.name == m.group(1) and t.tableType == "TEMPORARY"
-            for t in self.spark.catalog.listTables()
-        ):
-            # DataFusion's DROP TABLE drops session-registered tables too;
-            # ours are temp views, which Spark's DROP TABLE won't touch.
-            # Real managed tables (CTAS) fall through to Spark below.
-            self.deregister_table(m.group(1))
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)"
-            r"\s*;?\s*$",
-            query,
-            re.IGNORECASE,
-        )
-        if m:
-            # DROP FUNCTION (statement.rs DropFunction): removes the name
-            # from the session registry; later references fail to plan.
-            if_exists, fname = bool(m.group(1)), m.group(2).lower()
-            from arrow_datafusion_spark.functions.scalar import SCALAR as _scalar_reg
 
-            exists = fname not in self._dropped_functions and (
-                fname in _scalar_reg or self.spark.catalog.functionExists(fname)
-            )
-            if not exists and not if_exists:
-                raise ValueError("Execution error: Function does not exist")
-            self._dropped_functions.add(fname)
-            return self.spark.createDataFrame([], "result string")
-        mcf = re.match(
-            r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?FUNCTION\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?`?([A-Za-z_]\w*)`?",
-            query,
-            re.IGNORECASE,
-        )
-        if mcf:
-            # re-registering a dropped name resurrects it (the registry is
-            # live, not append-only) — and the statement itself must not
-            # trip the dropped-name plan scan below
-            self._dropped_functions.discard(mcf.group(1).lower())
-        if self._dropped_functions and not mcf:
-            shielded = _strip_strings(query)
-            for fname in self._dropped_functions:
-                if re.search(rf"\b{fname}\s*\(", shielded, re.IGNORECASE):
-                    raise ValueError(f"Invalid function '{fname}'")
-        shielded_q = _strip_strings(query)
+    def _check_query(self, lx: Lexed) -> Lexed:
+        """Plan-time rejections for text Spark would accept or misplan,
+        then the information_schema binding; returns the statement to
+        plan."""
+        q = lx.text
+        for fname in self._dropped_functions:
+            if re.search(rf"\b{fname}\s*\(", q, re.IGNORECASE):
+                raise ValueError(f"Invalid function '{fname}'")
         if re.search(
             r"\b(ROWS|RANGE|GROUPS)\s+BETWEEN\b[^()]*?"
             r"(\bNULL\s+(PRECEDING|FOLLOWING)|-\s*\d+\s+(PRECEDING|FOLLOWING))",
-            shielded_q,
+            q,
             re.IGNORECASE | re.DOTALL,
         ) or re.search(
             # non-BETWEEN shorthand ("ROWS -1 PRECEDING") — anchored to the
             # frame keyword so "SELECT a - 5 preceding" (alias) can't match
             r"\b(ROWS|RANGE|GROUPS)\s+-\s*\d+\s+(PRECEDING|FOLLOWING)",
-            shielded_q,
+            q,
             re.IGNORECASE,
         ):
             # window frame offsets must be non-negative integers (the
@@ -3624,26 +3395,214 @@ class SessionContext:
             raise ValueError(
                 "Invalid window frame: frame offsets must be non negative integers"
             )
-        if re.search(r"\bNTILE\s*\(\s*\)", shielded_q, re.IGNORECASE):
+        if re.search(r"\bNTILE\s*\(\s*\)", q, re.IGNORECASE):
             # ntile.rs: NTILE requires an argument
             raise ValueError("NTILE requires a positive integer")
-        if re.match(r"\s*WITH\s+RECURSIVE\b", query, re.IGNORECASE):
-            if not self.settings.get_bool("datafusion.execution.enable_recursive_ctes"):
-                raise ValueError(
-                    "This feature is not implemented: Recursive CTEs are "
-                    "not enabled"
-                )
-            return self._sql_recursive(query, args)
         if re.search(
             r"\binformation_schema\s*\.\s*(tables|columns|views|schemata|df_settings)\b",
-            _strip_strings(query),
+            q,
             re.IGNORECASE,
         ):
-            query = self._bind_information_schema(query)
+            lx = self._bind_information_schema(lx)
+        return lx
+
+    def _empty_result(self) -> DataFrame:
+        return self.spark.createDataFrame([], "result string")
+
+    def _sql_explain_analyze(self, lx: Lexed, args) -> DataFrame | None:
+        """DataFusion's EXPLAIN ANALYZE returns a (plan_type, plan) table of
+        the executed plan with metrics — mirror that shape. The inner
+        statement re-enters _run, so the WITH RECURSIVE / COPY /
+        information_schema handling applies to it too."""
+        m = re.match(r"\s*EXPLAIN\s+ANALYZE\s+(.*)$", lx.text, re.IGNORECASE | re.DOTALL)
+        if m is None:
+            return None
+        text = self._analyze_df(self._run(lx.derive(m.group(1)), args))
+        return self.spark.createDataFrame(
+            [("Plan with Metrics", text)], "plan_type string, plan string"
+        )
+
+    def _sql_prepare(self, lx: Lexed, args) -> DataFrame | None:
+        """PREPARE name [(types)] AS query (sql/src/statement.rs Prepare):
+        store the lexed body; EXECUTE binds $n placeholders positionally.
+        Plan-time rejections mirror the reference's planner."""
+        m = re.match(
+            # the optional type list may nest parens (DECIMAL(10,2))
+            r"\s*PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s*"
+            r"(\((?:[^()]|\([^()]*\))*\))?\s+AS\s+(.*)$",
+            lx.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if m is None:
+            return None
+        name, typelist, body = m.group(1).lower(), m.group(2), m.group(3).strip()
+        if name in self._prepared:
+            # duplicate PREPARE without DEALLOCATE
+            raise ValueError(f"prepared statement {name!r} already exists")
+        if re.search(r"\$[A-Za-z_]", body):
+            # only positional $n placeholders are supported
+            raise ValueError("named placeholders ($foo) are not supported")
+        if re.search(r"\bIS\s+(NOT\s+)?\$\d", body, re.IGNORECASE):
+            raise ValueError("IS $n is not a valid placeholder position")
+        used = [int(n) for n in re.findall(r"\$(\d+)", body)]
+        if typelist is not None:
+            ntypes = len(_split_top_level(typelist[1:-1]))
+            if used and max(used) > ntypes:
+                raise ValueError(
+                    f"prepared statement uses ${max(used)} but only "
+                    f"{ntypes} parameter types were declared"
+                )
+        if re.match(r"\s*(SELECT|VALUES|WITH)\b", body, re.IGNORECASE):
+            # validate the body plans (placeholders bound to NULL) so a
+            # body the reference rejects at PREPARE time (e.g. columns
+            # with no table) fails here, not at first EXECUTE
+            self._run(lx.derive(re.sub(r"\$\d+", "NULL", body)))
+        self._prepared[name] = lx.derive(body)
+        return self._empty_result()
+
+    def _sql_execute(self, lx: Lexed, args) -> DataFrame | None:
+        m = re.match(
+            r"\s*EXECUTE\s+([A-Za-z_][A-Za-z0-9_]*)\s*(?:\((.*)\))?\s*;?\s*$",
+            lx.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if m is None:
+            return None
+        stored = self._prepared.get(m.group(1).lower())
+        if stored is None:
+            raise ValueError(f"no prepared statement named {m.group(1)!r}")
+        return self._run(*stored.bind(lx.values(m.group(2) or "")))
+
+    def _sql_deallocate(self, lx: Lexed, args) -> DataFrame | None:
+        m = re.match(
+            r"\s*DEALLOCATE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$", lx.text, re.IGNORECASE
+        )
+        if m is None:
+            return None
+        if self._prepared.pop(m.group(1).lower(), None) is None:
+            # reference errors on deallocating an unknown statement
+            raise ValueError(f"no prepared statement named {m.group(1)!r}")
+        return self._empty_result()
+
+    def _sql_create_view(self, lx: Lexed, args) -> DataFrame | None:
+        """DataFusion's CREATE VIEW (sql/src/statement.rs CreateView) is a
+        SESSION-catalog object; Spark's native CREATE VIEW tries to persist
+        and rejects references to temp views, so route through
+        register_view (temp view + recorded definition for
+        information_schema.views). The body re-enters _run, so rewrites
+        (:: casts, macros, recursion) apply inside views."""
+        m = re.match(
+            r"\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMPORARY\s+|TEMP\s+)?VIEW\s+"
+            r"(IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+(.*)$",
+            lx.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if m is None:
+            return None
+        or_replace, if_not_exists, name = m.group(1), m.group(2), m.group(3)
+        if self.table_exist(name) and not or_replace:
+            if if_not_exists:
+                return self._empty_result()
+            raise ValueError(f"view {name!r} already exists (use OR REPLACE)")
+        self._register_view(name, lx.derive(m.group(4).strip().rstrip(";")))
+        return self._empty_result()
+
+    def _sql_create_function(self, lx: Lexed, args) -> None:
+        """Re-registering a dropped name resurrects it (the registry is
+        live, not append-only) — before the plan-time checks scan for
+        dropped names. Spark then runs the statement."""
+        m = re.match(
+            r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?FUNCTION\s+"
+            r"(?:IF\s+NOT\s+EXISTS\s+)?`?([A-Za-z_]\w*)`?",
+            lx.text,
+            re.IGNORECASE,
+        )
+        if m:
+            self._dropped_functions.discard(m.group(1).lower())
+        return None
+
+    def _sql_drop_view(self, lx: Lexed, args) -> DataFrame | None:
+        m = re.match(
+            r"\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
+            lx.text,
+            re.IGNORECASE,
+        )
+        if m is None:
+            return None
+        if_exists, name = m.group(1), m.group(2)
+        if not self.table_exist(name):
+            if if_exists:
+                return self._empty_result()
+            raise ValueError(f"no view named {name!r}")
+        if name not in self._view_defs and not any(
+            t.name == name and t.tableType == "VIEW"
+            for t in self.spark.catalog.listTables()
+        ):
+            # drop_view_cant_drop_table (ddl.slt): the name resolves to
+            # a TABLE — DROP VIEW must not remove it
+            raise ValueError(f"View {name!r} doesn't exist.")
+        self.deregister_table(name)
+        return self._empty_result()
+
+    def _sql_drop_table(self, lx: Lexed, args) -> DataFrame | None:
+        m = re.match(
+            r"\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
+            lx.text,
+            re.IGNORECASE,
+        )
+        if m is None:
+            return None
+        name = m.group(1)
+        if name in self._view_defs:
+            # drop_table_cant_drop_view (ddl.slt): the name is a session
+            # VIEW — DROP TABLE must not remove it
+            raise ValueError(f"Table {name!r} doesn't exist.")
+        # managed-table DROP falls through to Spark; either way the
+        # per-table DEFAULT/NOT NULL records must not survive
+        self._col_defaults.pop(name.lower(), None)
+        self._not_null.pop(name.lower(), None)
+        self._ctas_non_null.pop(name.lower(), None)
+        if any(
+            t.name == name and t.tableType == "TEMPORARY"
+            for t in self.spark.catalog.listTables()
+        ):
+            # DataFusion's DROP TABLE drops session-registered tables too;
+            # ours are temp views, which Spark's DROP TABLE won't touch.
+            # Real managed tables (CTAS) fall through to Spark.
+            self.deregister_table(name)
+            return self._empty_result()
+        return None
+
+    def _sql_drop_function(self, lx: Lexed, args) -> DataFrame | None:
+        """DROP FUNCTION (statement.rs DropFunction): removes the name from
+        the session registry; later references fail to plan."""
+        m = re.match(
+            r"\s*DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)"
+            r"\s*;?\s*$",
+            lx.text,
+            re.IGNORECASE,
+        )
+        if m is None:
+            return None
+        if_exists, fname = bool(m.group(1)), m.group(2).lower()
+        from arrow_datafusion_spark.functions.scalar import SCALAR as _scalar_reg
+
+        exists = fname not in self._dropped_functions and (
+            fname in _scalar_reg or self.spark.catalog.functionExists(fname)
+        )
+        if not exists and not if_exists:
+            raise ValueError("Execution error: Function does not exist")
+        self._dropped_functions.add(fname)
+        return self._empty_result()
+
+    def _sql_create_table(self, lx: Lexed, args) -> DataFrame:
+        """CREATE [OR REPLACE] TABLE: column-list forms (with or without a
+        source query), CTAS AS VALUES, and CTAS; other shapes run
+        natively."""
         mor = re.match(
             r"(\s*CREATE\s+)OR\s+REPLACE\s+(TABLE\s+)(?:(IF\s+NOT\s+EXISTS)\s+)?"
             r"([A-Za-z_][A-Za-z0-9_]*)",
-            query,
+            lx.text,
             re.IGNORECASE,
         )
         if mor and mor.group(3):
@@ -3656,8 +3615,9 @@ class SessionContext:
             # build the replacement under a temp name first, then atomically
             # drop-and-rename; a malformed new definition leaves the old
             # table intact.
+            q = lx.text
             name = mor.group(4)
-            stripped = query[: mor.end(1)] + query[mor.start(2) :]
+            stripped = q[: mor.end(1)] + q[mor.start(2) :]
             if self.table_exist(name):
                 tmp = f"{name}__cor_new"
                 pos = mor.end(1) + (mor.start(4) - mor.start(2))
@@ -3665,7 +3625,7 @@ class SessionContext:
                 tmp_query = stripped[:pos] + tmp + stripped[pos + len(name) :]
                 self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
                 self.deregister_table(tmp)
-                res = self.sql(tmp_query, args)  # raises → old table intact
+                res = self._run(lx.derive(tmp_query), args)  # raises → old table intact
                 self.spark.sql(f"DROP TABLE IF EXISTS {name}")
                 self.deregister_table(name)
                 # the replacement's DEFAULT/NOT NULL records were captured
@@ -3689,54 +3649,46 @@ class SessionContext:
                     self.register_table(name, self.table(tmp))
                     self.deregister_table(tmp)
                 return res
-            query = stripped
+            lx = lx.derive(stripped)
         m = re.match(
             # CREATE TABLE name (coldefs) [AS query] — Spark rejects a
             # schema in CTAS; DataFusion casts the query output positionally
             r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
             r"([A-Za-z_][A-Za-z0-9_]*)\s*\(((?:[^()]|\([^()]*\))*)\)\s*"
             r"(?:AS\s+(.*?))?\s*;?\s*$",
-            query,
+            lx.text,
             re.IGNORECASE | re.DOTALL,
         )
         if m and m.group(4):
             return self._sql_create_table_cols(
-                m.group(2), m.group(3), m.group(4), bool(m.group(1)), args
+                m.group(2),
+                lx.unshield(m.group(3)),
+                lx.derive(m.group(4)),
+                bool(m.group(1)),
+                args,
             )
-        if m and re.fullmatch(r"\s*;?\s*", query[m.end() :] or ""):
+        if m:
             # CREATE TABLE name (cols) without a source: empty table with
             # the schema run through the DataFusion→Spark type map (TEXT,
             # TIMESTAMP WITH TIME ZONE, unsigned widening — Spark's native
             # DDL parser rejects those spellings)
-            name = m.group(2)
+            name, coldefs = m.group(2), lx.unshield(m.group(3))
             if m.group(1) and self.table_exist(name):
-                return self.spark.createDataFrame([], "result string")
+                return self._empty_result()
             self.spark.createDataFrame(
                 [],
                 _column_defs_to_ddl(
-                    m.group(3),
+                    coldefs,
                     self.settings.get_bool("datafusion.sql_parser.enable_ident_normalization"),
                 ),
             ).write.mode("ignore" if m.group(1) else "errorifexists").saveAsTable(name)
-            self._record_not_null(name, m.group(3))
-            self._record_defaults(name, m.group(3))
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"\s*SELECT\s+(.*?)\s+INTO\s+([A-Za-z_][A-Za-z0-9_]*)\s+(FROM\s+.*)$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # Postgres SELECT ... INTO tbl FROM ... (the reference plans it
-            # as CTAS — sql/src/statement.rs SELECT INTO handling)
-            return self.sql(
-                f"CREATE TABLE {m.group(2)} AS SELECT {m.group(1)} {m.group(3)}",
-                args,
-            )
+            self._record_not_null(name, coldefs)
+            self._record_defaults(name, coldefs)
+            return self._empty_result()
         m = re.match(
             r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
             r"([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+(.*)$",
-            query,
+            lx.text,
             re.IGNORECASE | re.DOTALL,
         )
         if m and re.match(r"\s*\(?\s*VALUES\b", m.group(3), re.IGNORECASE):
@@ -3746,8 +3698,10 @@ class SessionContext:
             # listing order scrambles them. One literal list → one file.
             if_not_exists, name, body = bool(m.group(1)), m.group(2), m.group(3)
             if if_not_exists and self.table_exist(name):
-                return self.spark.createDataFrame([], "result string")
-            self._spark_sql(body.strip().rstrip(";"), args).coalesce(1).write.mode(
+                return self._empty_result()
+            self._spark_sql(lx.derive(body.strip().rstrip(";")), args).coalesce(
+                1
+            ).write.mode(
                 "ignore" if if_not_exists else "errorifexists"
             ).saveAsTable(name)
             self._record_defaults(name, "")
@@ -3756,75 +3710,96 @@ class SessionContext:
             # typing — information_schema.slt DESCRIBE some_table: Int64
             # YES), unlike SELECT-CTAS; no nullability capture here
             self._ctas_non_null.pop(name.lower(), None)
-            return self.spark.createDataFrame([], "result string")
+            return self._empty_result()
         if m:
             # CTAS without a column list: run natively, then clear any
             # DEFAULT/NOT NULL records a prior same-named table left behind
             # (clear only after success — a failed CTAS leaves the old
             # table, and its records, intact)
-            res = self._spark_sql(query, args)
+            res = self._spark_sql(lx, args)
             self._record_defaults(m.group(2), "")
             self._record_not_null(m.group(2), "")
-            self._record_ctas_nullability(m.group(2), m.group(3), args)
+            self._record_ctas_nullability(m.group(2), lx.derive(m.group(3)), args)
             return res
+        return self._spark_sql(lx, args)
+
+    def _sql_select_into(self, lx: Lexed, args) -> DataFrame | None:
+        """Postgres SELECT ... INTO tbl FROM ... (the reference plans it as
+        CTAS — sql/src/statement.rs SELECT INTO handling)."""
+        m = re.match(
+            r"\s*SELECT\s+(.*?)\s+INTO\s+([A-Za-z_][A-Za-z0-9_]*)\s+(FROM\s+.*)$",
+            lx.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if m is None:
+            return None
+        return self._run(
+            lx.derive(f"CREATE TABLE {m.group(2)} AS SELECT {m.group(1)} {m.group(3)}"),
+            args,
+        )
+
+    def _sql_describe_table(self, lx: Lexed, args) -> DataFrame | None:
         m = re.match(
             r"\s*DESCRIBE\s+(?:TABLE\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
-            query,
+            lx.text,
             re.IGNORECASE,
         )
         if m and self.table_exist(m.group(1)):
             return self._sql_describe(m.group(1))
-        m = re.match(r"\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z0-9_]*)\b", query, re.IGNORECASE)
-        if m:
-            # DataFusion's INSERT reports the inserted row count as a
-            # one-row `count` result (DataSinkExec); Spark's INSERT returns
-            # nothing, so the count comes from a before/after table count.
-            target = m.group(1)
-            if target in self._external_sinks:
-                return self._insert_external(target, query, args)
-            self._validate_insert(target, query, args)
-            try:
-                before = self.spark.table(target).count()
-            except Exception:
-                before = None
-            has_collist = bool(re.match(
-                r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*\(", query, re.IGNORECASE
-            ))
-            body_is_values = bool(re.match(
-                r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*(?:\([^)]*\))?\s*\(?\s*VALUES\b",
-                query, re.IGNORECASE,
-            ))
-            if body_is_values or (
-                has_collist and self._col_defaults.get(target.lower())
-            ):
-                # coerced path: evaluates recorded column DEFAULTs Spark's
-                # native path would NULL-fill, and writes literal VALUES as
-                # ONE coalesced file so MemTable insertion order stays
-                # observable downstream (string_agg / last_value without
-                # ORDER BY follow scan order in the reference; Spark's
-                # native INSERT scatters literal rows across
-                # defaultParallelism files, scrambling scan order).
-                # Literal rows are bounded by the statement text —
-                # coalesce(1) cannot become a scale problem.
-                self._insert_coerced(target, query, args)
-                after = self.spark.table(target).count()
-                return self.spark.createDataFrame([(after - before,)], "count bigint")
-            try:
-                self._spark_sql(query, args).collect()
-            except Exception:
-                # DataFusion COERCES literals to the target column types
-                # (string → date/timestamp/decimal); Spark's ANSI store-
-                # assignment rejects the implicit cast. Re-run with the
-                # source positionally cast to the table schema. A column
-                # list fills unnamed columns with NULL (the reference's
-                # Insert planning); coalesce(1) keeps literal-row order
-                # (MemTable insertion order is observable downstream).
-                self._insert_coerced(target, query, args)
-            if before is None:
-                return self.spark.createDataFrame([], "count bigint")
+        return None
+
+    def _sql_insert(self, lx: Lexed, args) -> DataFrame | None:
+        """DataFusion's INSERT reports the inserted row count as a one-row
+        `count` result (DataSinkExec); Spark's INSERT returns nothing, so
+        the count comes from a before/after table count."""
+        m = re.match(r"\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z0-9_]*)\b", lx.text, re.IGNORECASE)
+        if m is None:
+            return None
+        target = m.group(1)
+        if target in self._external_sinks:
+            return self._insert_external(target, lx, args)
+        self._validate_insert(target, lx, args)
+        try:
+            before = self.spark.table(target).count()
+        except Exception:
+            before = None
+        has_collist = bool(re.match(
+            r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*\(", lx.text, re.IGNORECASE
+        ))
+        body_is_values = bool(re.match(
+            r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*(?:\([^)]*\))?\s*\(?\s*VALUES\b",
+            lx.text, re.IGNORECASE,
+        ))
+        if body_is_values or (
+            has_collist and self._col_defaults.get(target.lower())
+        ):
+            # coerced path: evaluates recorded column DEFAULTs Spark's
+            # native path would NULL-fill, and writes literal VALUES as
+            # ONE coalesced file so MemTable insertion order stays
+            # observable downstream (string_agg / last_value without
+            # ORDER BY follow scan order in the reference; Spark's
+            # native INSERT scatters literal rows across
+            # defaultParallelism files, scrambling scan order).
+            # Literal rows are bounded by the statement text —
+            # coalesce(1) cannot become a scale problem.
+            self._insert_coerced(target, lx, args)
             after = self.spark.table(target).count()
             return self.spark.createDataFrame([(after - before,)], "count bigint")
-        return self._spark_sql(query, args)
+        try:
+            self._spark_sql(lx, args).collect()
+        except Exception:
+            # DataFusion COERCES literals to the target column types
+            # (string → date/timestamp/decimal); Spark's ANSI store-
+            # assignment rejects the implicit cast. Re-run with the
+            # source positionally cast to the table schema. A column
+            # list fills unnamed columns with NULL (the reference's
+            # Insert planning); coalesce(1) keeps literal-row order
+            # (MemTable insertion order is observable downstream).
+            self._insert_coerced(target, lx, args)
+        if before is None:
+            return self.spark.createDataFrame([], "count bigint")
+        after = self.spark.table(target).count()
+        return self.spark.createDataFrame([(after - before,)], "count bigint")
 
     def _reregister_external(self, name: str) -> None:
         """(Re-)register an external sink table from its on-disk files —
@@ -3890,19 +3865,22 @@ class SessionContext:
         self.register_table(name, df)
         self._track_path(name, path, lambda: self._reregister_external(name))
 
-    def _insert_external(self, target: str, query: str, args) -> DataFrame:
-        """INSERT INTO an external table → append files at its location
-        (the reference's FileSinkExec), then re-list. Returns the count."""
-        sink = self._external_sinks[target]
+    @staticmethod
+    def _insert_parts(lx: Lexed) -> tuple[str | None, Lexed]:
+        """(column list, source query) of ``INSERT INTO t [(cols)] source``."""
         m = re.match(
             r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
             r"(?:\(([^)]*)\))?\s*(.*)$",
-            query,
+            lx.text,
             re.IGNORECASE | re.DOTALL,
         )
-        if not m:
-            raise ValueError(f"cannot parse INSERT: {query[:80]!r}")
-        collist, body = m.group(1), m.group(2).strip().rstrip(";")
+        return m.group(1), lx.derive(m.group(2).strip().rstrip(";"))
+
+    def _insert_external(self, target: str, lx: Lexed, args) -> DataFrame:
+        """INSERT INTO an external table → append files at its location
+        (the reference's FileSinkExec), then re-list. Returns the count."""
+        sink = self._external_sinks[target]
+        collist, body = self._insert_parts(lx)
         schema = self.spark.table(target).schema
         names = (
             [c.strip().lower() for c in collist.split(",")]
@@ -3963,7 +3941,7 @@ class SessionContext:
                         "schema specifies non-nullable"
                     )
         out = src.select(*sel)
-        if re.match(r"\s*\(?\s*VALUES\b", body, re.IGNORECASE):
+        if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE):
             out = out.coalesce(1)  # keep literal-row order in the file
         n = out.count()
         fmt, path, parts = sink["fmt"], sink["path"], sink["parts"]
@@ -4108,12 +4086,14 @@ class SessionContext:
             rows, "column_name string, data_type string, is_nullable string"
         )
 
-    def _record_ctas_nullability(self, name: str, body: str, args=None) -> None:
+    def _record_ctas_nullability(self, name: str, body: Lexed, args=None) -> None:
         """Capture the CTAS SELECT's non-nullable output fields for the
         introspection surfaces (see _ctas_non_null). Lazy schema analysis
         only — the body is planned, never executed here."""
         try:
-            schema = self._spark_sql(body.strip().rstrip(";"), args).schema
+            schema = self._spark_sql(
+                body.derive(body.text.strip().rstrip(";")), args
+            ).schema
         except Exception:
             self._ctas_non_null.pop(name.lower(), None)
             return
@@ -4177,21 +4157,13 @@ class SessionContext:
         else:
             self._col_defaults.pop(name.lower(), None)
 
-    def _validate_insert(self, target: str, query: str, args) -> None:
+    def _validate_insert(self, target: str, lx: Lexed, args) -> None:
         """The reference's Insert planning checks, which Spark's native
         INSERT lets through (insert.slt): duplicate names in the column
         list, source/target column-count mismatch, and NULLs reaching a
         declared NOT NULL column (missing from the column list, or
         present in the inserted data)."""
-        m = re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
-            r"(?:\(([^)]*)\))?\s*(.*)$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            return
-        collist, body = m.group(1), m.group(2).strip().rstrip(";")
+        collist, body = self._insert_parts(lx)
         schema_cols = [f.name.lower() for f in self.spark.table(target).schema]
         names = (
             [c.strip().strip('"`').lower() for c in collist.split(",")]
@@ -4231,17 +4203,9 @@ class SessionContext:
                     "specifies non-nullable"
                 )
 
-    def _insert_coerced(self, target: str, query: str, args) -> None:
+    def _insert_coerced(self, target: str, lx: Lexed, args) -> None:
         """INSERT with the source cast to the target schema (see caller)."""
-        m = re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
-            r"(?:\(([^)]*)\))?\s*(.*)$",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse INSERT: {query[:80]!r}")
-        collist, body = m.group(1), m.group(2).strip().rstrip(";")
+        collist, body = self._insert_parts(lx)
         schema = self.spark.table(target).schema
         names = (
             [c.strip().lower() for c in collist.split(",")]
@@ -4261,21 +4225,21 @@ class SessionContext:
         src.select(*sel).coalesce(1).write.insertInto(target)
 
     def _sql_create_table_cols(
-        self, name: str, coldefs: str, body: str, if_not_exists: bool, args
+        self, name: str, coldefs: str, body: Lexed, if_not_exists: bool, args
     ) -> DataFrame:
         """``CREATE TABLE name (a type, ...) AS query`` — positional cast +
         rename of the query output (sql/src/statement.rs CreateTable with
         both a schema and a source query)."""
         if if_not_exists and self.table_exist(name):
-            return self.spark.createDataFrame([], "result string")
+            return self._empty_result()
         ddl = _column_defs_to_ddl(
             coldefs,
             self.settings.get_bool("datafusion.sql_parser.enable_ident_normalization"),
         )
         defs = _split_top_level(ddl)
         # placeholders were already bound by sql(); go straight to Spark
-        src = self._spark_sql(body.strip().rstrip(";"), args)
-        if re.match(r"\s*\(?\s*VALUES\b", body, re.IGNORECASE):
+        src = self._spark_sql(body.derive(body.text.strip().rstrip(";")), args)
+        if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE):
             src = src.coalesce(1)  # preserve literal-row order (see CTAS)
         cols = []
         int_types = ("tinyint", "smallint", "int", "bigint")
@@ -4294,7 +4258,7 @@ class SessionContext:
         ).saveAsTable(name)
         self._record_not_null(name, coldefs)
         self._record_defaults(name, coldefs)
-        return self.spark.createDataFrame([], "result string")
+        return self._empty_result()
 
     # -- SET / SHOW statement layer (config.rs ConfigOptions; SET/SHOW
     # planning in sql/src/planner.rs; set_variable.slt, options.slt,
@@ -4315,7 +4279,7 @@ class SessionContext:
         )
         return self.spark.createDataFrame(rows, schema)
 
-    def _sql_set_or_show(self, query: str):
+    def _sql_set_or_show(self, lx: Lexed, args) -> DataFrame | None:
         """Handle SET / SHOW statements; returns a DataFrame when handled,
         None to fall through to the rest of the dispatch.
 
@@ -4327,24 +4291,24 @@ class SessionContext:
         family requires datafusion.catalog.information_schema=true.
         ``spark.*`` keys and Spark-native forms (bare ``SET``, ``SHOW
         FUNCTIONS/DATABASES``) pass through to Spark untouched."""
-        q = query.strip().rstrip(";").strip()
+        q = lx.text.strip().rstrip(";").strip()
         m = re.match(
             r"SET\s+TIME\s*ZONE\s*(?:TO\s+|=\s*)?(.+)$", q, re.IGNORECASE
         )
         if m:
-            self.settings.set("datafusion.execution.time_zone", m.group(1))
-            return self.spark.createDataFrame([], "result string")
+            self.settings.set("datafusion.execution.time_zone", lx.unshield(m.group(1)))
+            return self._empty_result()
         m = re.match(
             r"SET\s+([A-Za-z_][\w.]*)\s*(?:TO\s+|=\s*)(.+)$",
             q,
             re.IGNORECASE | re.DOTALL,
         )
         if m:
-            key, value = m.group(1), m.group(2).strip()
+            key, value = m.group(1), lx.unshield(m.group(2).strip())
             if key.lower().startswith("spark."):
-                return self.spark.sql(q)  # native Spark conf
+                return self.spark.sql(lx.unshield(q))  # native Spark conf
             self.settings.set(key, value)  # raises on unknown namespace
-            return self.spark.createDataFrame([], "result string")
+            return self._empty_result()
         m = re.match(r"SHOW\s+(ALL|TIME\s*ZONE)\s*(VERBOSE)?$", q, re.IGNORECASE)
         if m:
             self._require_info_schema("SHOW [VARIABLE]")
@@ -4366,7 +4330,7 @@ class SessionContext:
         if m:
             key, verbose = m.group(1), bool(m.group(2))
             if key.lower().startswith("spark."):
-                return self.spark.sql(q)
+                return self.spark.sql(lx.unshield(q))
             self._require_info_schema("SHOW [VARIABLE]")
             name = "datafusion." + self.settings._suffix(key)
             v = self.settings.get(key)
@@ -4391,7 +4355,7 @@ class SessionContext:
                     "Error during planning: SHOW COLUMNS with WHERE or LIKE "
                     "is not supported"
                 )
-            return self._show_columns(rest, full)
+            return self._show_columns(lx.unshield(rest), full)
         return None
 
     def _resolve_user_table(self, ident: str) -> str:
@@ -4468,7 +4432,7 @@ class SessionContext:
             "column_name string, data_type string, is_nullable string",
         )
 
-    def _bind_information_schema(self, query: str) -> str:
+    def _bind_information_schema(self, lx: Lexed) -> Lexed:
         """SQL-queryable information_schema (information_schema.rs:45-54
         exposes tables / views / columns / df_settings / schemata):
         references are rebound to freshly-materialized temp views over the
@@ -4481,15 +4445,14 @@ class SessionContext:
         query = re.sub(
             r"\bdatafusion\s*\.\s*(?=information_schema\s*\.)",
             "",
-            query,
+            lx.text,
             flags=re.IGNORECASE,
         )
-        shielded = _strip_strings(query)
 
         def _used(name: str) -> bool:
             return bool(
                 re.search(
-                    rf"\binformation_schema\s*\.\s*{name}\b", shielded, re.IGNORECASE
+                    rf"\binformation_schema\s*\.\s*{name}\b", query, re.IGNORECASE
                 )
             )
 
@@ -4552,9 +4515,9 @@ class SessionContext:
             query,
             flags=re.IGNORECASE,
         )
-        return query
+        return lx.derive(query)
 
-    def _validate_external_ddl(self, rest: str, cols: str | None, name: str) -> None:
+    def _validate_external_ddl(self, lx: Lexed, rest: str, cols: str | None) -> None:
         """Strict clause-tail scan mirroring parser.rs
         ``parse_create_external_table``: the clauses may appear in any
         order, each at most once (WITH ORDER may repeat), and nothing else
@@ -4562,22 +4525,14 @@ class SessionContext:
         tokens, duplicate clauses, and malformed WITH/ORDER; then applies
         the planner's semantic checks (partition column membership,
         CsvOptions key validity, single-file partitioned location,
-        on-disk partition-order inference)."""
+        on-disk partition-order inference). ``rest`` is shielded text."""
         n = len(rest)
 
         def balanced_end(i: int) -> int:  # rest[i] == "(" (caller-checked)
-            depth, j = 1, i + 1
-            while j < n and depth:
-                if rest[j] == "'":  # skip quoted spans (paths may hold parens)
-                    j += 1
-                    while j < n and rest[j] != "'":
-                        j += 1
-                else:
-                    depth += {"(": 1, ")": -1}.get(rest[j], 0)
-                j += 1
-            if depth:
+            j = _match_paren(rest, i)
+            if j is None:
                 raise ValueError('ParserError("Expected ), found: EOF")')
-            return j
+            return j + 1
 
         seen: set[str] = set()
         part_inner: str | None = None
@@ -4590,12 +4545,6 @@ class SessionContext:
                 i += 1
             if i >= n:
                 break
-            if rest[i : i + 2] == "--":  # SQL line comment → skip to EOL
-                nl = rest.find("\n", i)
-                if nl == -1:
-                    break
-                i = nl + 1
-                continue
             tail = rest[i:]
             m = re.match(r"STORED\s+AS\s+(\w+)", tail, re.IGNORECASE)
             if m:
@@ -4605,7 +4554,7 @@ class SessionContext:
                 fmt = m.group(1).lower()
                 i += m.end()
                 continue
-            m = re.match(r"LOCATION\s+'[^']*'", tail, re.IGNORECASE)
+            m = re.match(rf"LOCATION\s+{LIT}", tail, re.IGNORECASE)
             if m:
                 if "location" in seen:
                     raise ValueError('ParserError("LOCATION specified more than once")')
@@ -4674,7 +4623,7 @@ class SessionContext:
                     i += m2.end()
                     continue
                 raise ValueError(f'ParserError("Expected HEADER, found: {m.group(1)}")')
-            m = re.match(r"DELIMITER\s+'[^']*'", tail, re.IGNORECASE)
+            m = re.match(rf"DELIMITER\s+{LIT}", tail, re.IGNORECASE)
             if m:
                 i += m.end()
                 continue
@@ -4683,7 +4632,9 @@ class SessionContext:
                 i += m.end()
                 continue
             tok = re.match(r"(\S+)", tail)
-            raise ValueError(f'ParserError("Unexpected token {tok.group(1)}")')
+            raise ValueError(
+                f'ParserError("Unexpected token {lx.unshield(tok.group(1))}")'
+            )
         # ---- planner semantic checks ----
         if part_inner is not None and cols is not None:
             schema_names = [
@@ -4718,15 +4669,15 @@ class SessionContext:
                 "timestamp_tz_format", "time_format", "null_value",
                 "null_regex", "double_quote", "newlines_in_values",
             }
-            for k, _v in re.findall(r"'((?:[^']|'')*)'\s*=?\s*'((?:[^']|'')*)'", opt_inner):
-                kl = k.lower()
+            for k, _v in re.findall(rf"({LIT})\s*=?\s*({LIT})", opt_inner):
+                kl = lx.string(k).lower()
                 if kl.startswith("format.") and kl[len("format."):] not in valid:
                     raise ValueError(
                         f'Config value "{kl[len("format."):]}" not found on CsvOptions'
                     )
         if part_inner is not None and has_location:
-            mpath = re.search(r"LOCATION\s+'([^']*)'", rest, re.IGNORECASE)
-            path = mpath.group(1) if mpath else ""
+            mpath = re.search(rf"LOCATION\s+({LIT})", rest, re.IGNORECASE)
+            path = lx.string(mpath.group(1)) if mpath else ""
             if re.match(r"^(/|\./|[A-Za-z]:)", path) or "://" not in path:
                 declared = [
                     it.split()[0].strip('"').lower()
@@ -4773,7 +4724,7 @@ class SessionContext:
                     f"Inferred partitions to be {inferred}, but got {declared}"
                 )
 
-    def _sql_create_external(self, query: str) -> DataFrame:
+    def _sql_create_external(self, lx: Lexed, args) -> DataFrame:
         """DataFusion's registration DDL — sql/src/statement.rs
         `CreateExternalTable` / parser.rs `parse_create_external_table`:
         ``CREATE [UNBOUNDED] EXTERNAL TABLE [IF NOT EXISTS] name [(cols)]
@@ -4785,54 +4736,56 @@ class SessionContext:
         the files) — may appear in any order. Routes to the matching
         register_* method so DataFusion SQL scripts register tables
         unchanged; returns an empty 0-row frame like the reference."""
+        query = lx.text
         head = re.match(
             r"\s*CREATE\s+(UNBOUNDED\s+)?EXTERNAL\s+TABLE\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?"
+            r"(IF\s+NOT\s+EXISTS\s+)?"
             r"([A-Za-z_][A-Za-z0-9_]*)\s*",
             query,
             re.IGNORECASE,
         )
         if not head:
-            raise ValueError(f"cannot parse CREATE EXTERNAL TABLE: {query[:80]!r}")
-        unbounded, name = bool(head.group(1)), head.group(2)
-        if_not_exists = bool(
-            re.match(
-                r"\s*CREATE\s+(?:UNBOUNDED\s+)?EXTERNAL\s+TABLE\s+IF\s+NOT\s+EXISTS\b",
-                query,
-                re.IGNORECASE,
+            raise ValueError(
+                f"cannot parse CREATE EXTERNAL TABLE: {lx.unshield()[:80]!r}"
             )
+        unbounded, if_not_exists, name = (
+            bool(head.group(1)), bool(head.group(2)), head.group(3)
         )
         pos = head.end()
         cols = None
         if query[pos : pos + 1] == "(":  # balanced scan: types may nest parens
-            depth, i = 1, pos + 1
-            while depth and i < len(query):
-                depth += {"(": 1, ")": -1}.get(query[i], 0)
-                i += 1
-            cols = query[pos + 1 : i - 1]
-            pos = i
+            close = _match_paren(query, pos)
+            close = len(query) if close is None else close
+            cols = lx.unshield(query[pos + 1 : close])
+            pos = close + 1
         rest = query[pos:]
-        self._validate_external_ddl(rest, cols, name)
+        self._validate_external_ddl(lx, rest, cols)
         m = re.search(r"STORED\s+AS\s+(\w+)", rest, re.IGNORECASE)
         if not m:
-            raise ValueError(f"CREATE EXTERNAL TABLE missing STORED AS: {query[:80]!r}")
+            raise ValueError(
+                f"CREATE EXTERNAL TABLE missing STORED AS: {lx.unshield()[:80]!r}"
+            )
         fmt = m.group(1).lower()
-        m = re.search(r"LOCATION\s+'([^']+)'", rest, re.IGNORECASE)
+        m = re.search(rf"LOCATION\s+({LIT})", rest, re.IGNORECASE)
         if not m:
-            raise ValueError(f"CREATE EXTERNAL TABLE missing LOCATION: {query[:80]!r}")
-        path = m.group(1)
+            raise ValueError(
+                f"CREATE EXTERNAL TABLE missing LOCATION: {lx.unshield()[:80]!r}"
+            )
+        path = lx.string(m.group(1))
         # format options: current OPTIONS('k' 'v' | 'k' = 'v', ...) plus the
         # legacy standalone clauses the reference used to accept
         opts: dict[str, str] = {}
-        mo = re.search(r"OPTIONS\s*\(((?:[^()']|'(?:[^']|'')*')*)\)", rest, re.IGNORECASE)
+        mo = re.search(r"OPTIONS\s*\(([^()]*)\)", rest, re.IGNORECASE)
         if mo:
-            kvs = re.findall(r"'((?:[^']|'')*)'\s*=?\s*'((?:[^']|'')*)'", mo.group(1))
-            opts = {k.lower(): v for k, v in kvs}
+            kvs = re.findall(rf"({LIT})\s*=?\s*({LIT})", mo.group(1))
+            opts = {lx.string(k).lower(): lx.string(v) for k, v in kvs}
         header = bool(re.search(r"WITH\s+HEADER\s+ROW", rest, re.IGNORECASE)) or opts.get(
             "format.has_header", opts.get("has_header", "")
         ).lower() in ("true", "1")
-        md = re.search(r"DELIMITER\s+'([^']+)'", rest, re.IGNORECASE)
-        delim = md.group(1) if md else opts.get("format.delimiter", opts.get("delimiter"))
+        md = re.search(rf"DELIMITER\s+({LIT})", rest, re.IGNORECASE)
+        delim = lx.string(md.group(1)) if md else opts.get(
+            "format.delimiter", opts.get("delimiter")
+        )
         # CSV lexical options (file_format/csv.rs CsvOptions): quote /
         # escape / comment map 1:1 onto Spark's CSV reader options
         csv_lex: dict = {}
@@ -4847,7 +4800,7 @@ class SessionContext:
         if "format.comment" in opts:
             csv_lex["comment"] = opts["format.comment"]
         if if_not_exists and self.table_exist(name):
-            return self.spark.createDataFrame([], "result string")
+            return self._empty_result()
         # object-store LOCATIONs: register credentials/scheme with Spark's
         # Hadoop conf (datafusion-cli object_storage.rs parity)
         path = self.register_object_store(path, opts)
@@ -4869,7 +4822,7 @@ class SessionContext:
         sink_parts = (
             [
                 c.strip().strip("'\"").split()[0]
-                for c in mp.group(1).split(",")
+                for c in lx.unshield(mp.group(1)).split(",")
                 if c.strip()
             ]
             if mp
@@ -4949,12 +4902,12 @@ class SessionContext:
                 self._track_path(
                     name, local, lambda: self._reregister_external(name)
                 )
-                return self.spark.createDataFrame([], "result string")
+                return self._empty_result()
             if sink_parts:
                 # partitioned layout on disk: register through the sink
                 # reader (data schema minus partition cols + discovery)
                 self._reregister_external(name)
-                return self.spark.createDataFrame([], "result string")
+                return self._empty_result()
         if fmt == "parquet":
             self.register_parquet(name, path)
         elif fmt == "csv":
@@ -4970,15 +4923,16 @@ class SessionContext:
             self.register_arrow(name, path)
         else:
             raise ValueError(f"unsupported STORED AS {fmt!r}")
-        return self.spark.createDataFrame([], "result string")
+        return self._empty_result()
 
-    def _spark_sql(self, query: str, args=None) -> DataFrame:
+    def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
         """Rewritten query → spark.sql, carrying bound parameters if any.
 
-        String literals are shielded around the schema-resolving rewrites
-        so none of them can match function-call or operator text INSIDE a
-        quoted string ('select median(x)' stays text); _rewrite_sql below
-        re-shields for its own passes."""
+        The schema-resolving passes and then _rewrite_sql all read the
+        lexed statement's shielded text, so none of them can match
+        function-call or operator text INSIDE a quoted string ('select
+        median(x)' stays text). A pass that emits a literal registers it
+        on a private copy of the literal table."""
         pfad = self.settings.get_bool(
             "datafusion.sql_parser.parse_float_as_decimal"
         )
@@ -4990,16 +4944,9 @@ class SessionContext:
             for k in ("median", "approx")
         )
         memo_key = (
-            query, pfad, self._rw_version, self.settings.version, budgets
+            lx.text, tuple(lx.lits), pfad, self._rw_version,
+            self.settings.version, budgets,
         )
-        _lits: list[str] = []
-
-        def _sh(m: re.Match) -> str:
-            _lits.append(m.group(0))
-            return f"\x00{len(_lits) - 1}\x00"
-
-        query = re.sub(r"'(?:[^']|'')*'", _sh, query)
-        shielded0 = query  # pre-rewrite shielded text, the fp input below
         cached = self._rw_cache.get(memo_key)
         if cached is not None:
             rewritten, rmap_fp = cached
@@ -5014,7 +4961,7 @@ class SessionContext:
             # shielded text). Mismatch falls through to a fresh rewrite.
             if rmap_fp is None or (
                 "__rmap__",
-                self._from_schema_map(shielded0),
+                self._from_schema_map(lx.text),
             ) == rmap_fp:
                 if args:
                     return self.spark.sql(rewritten, args=args)
@@ -5032,17 +4979,17 @@ class SessionContext:
                 _rmap_memo.append(self._from_schema_map(q))
             return _rmap_memo[0]
 
-        query = self._rewrite_tz_date_trunc(query, _lits, rmap=_rmap)
+        work = lx.copy()
+        query = self._rewrite_tz_date_trunc(work.text, work, rmap=_rmap)
         query = self._rewrite_median(query, rmap=_rmap)
         query = self._rewrite_decimal_avg(query, rmap=_rmap)
-        query = self._rewrite_decimal_division(query, rmap=_rmap)
-        query = self._rewrite_deep_array_fns(query, _lits, rmap=_rmap)
+        query = self._rewrite_decimal_division(query, work, rmap=_rmap)
+        query = self._rewrite_deep_array_fns(query, work, rmap=_rmap)
         query = self._rewrite_ts_bigint_bare(query, rmap=_rmap)
         query = self._rewrite_int_division(query, rmap=_rmap)
         query = self._rewrite_f32_math(query, rmap=_rmap)
-        query = self._rewrite_approx_percentile(query, rmap=_rmap)
-        query = re.sub(r"\x00(\d+)\x00", lambda m: _lits[int(m.group(1))], query)
-        rewritten = _rewrite_sql(query, pfad=pfad)
+        query = self._rewrite_approx_percentile(query, work, rmap=_rmap)
+        rewritten = _rewrite_sql(work.derive(query), pfad=pfad)
         # Memo entry: (rewritten, schema-map fingerprint). Fingerprint is
         # None for schema-independent rewrites (no revalidation needed);
         # otherwise the schema map resolved from the pre-rewrite shielded
@@ -5050,7 +4997,7 @@ class SessionContext:
         # the "__rmap__" wrapper keeps a None schema map (unresolvable
         # FROM source) distinguishable from "schema-independent"
         rmap_fp = (
-            ("__rmap__", self._from_schema_map(shielded0))
+            ("__rmap__", self._from_schema_map(lx.text))
             if _rmap_memo
             else None
         )
@@ -5089,16 +5036,8 @@ class SessionContext:
         if m is None:
             return None
         open_at = pos + shield[pos:].index("(")
-        depth, i = 0, open_at
-        while i < len(shield):
-            if shield[i] == "(":
-                depth += 1
-            elif shield[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        i = _match_paren(shield, open_at)
+        if i is None:
             return None
         body = shield[open_at + 1 : i]
         am = re.match(
@@ -5135,7 +5074,7 @@ class SessionContext:
             u = t.upper()
             if u == "NULL":
                 return "null"
-            if re.fullmatch(r"\x00\d+\x00|''", t):
+            if re.fullmatch(LIT, t):
                 return StringType()
             if re.fullmatch(r"[+-]?\d+", t):
                 return LongType()
@@ -5143,9 +5082,9 @@ class SessionContext:
                 return DoubleType()
             if u in ("TRUE", "FALSE"):
                 return BooleanType()
-            if re.fullmatch(r"DATE\s+(\x00\d+\x00|'')", t, re.IGNORECASE):
+            if re.fullmatch(rf"DATE\s+{LIT}", t, re.IGNORECASE):
                 return DateType()
-            if re.fullmatch(r"TIMESTAMP\s+(\x00\d+\x00|'')", t, re.IGNORECASE):
+            if re.fullmatch(rf"TIMESTAMP\s+{LIT}", t, re.IGNORECASE):
                 return TimestampType()
             return None
 
@@ -5184,8 +5123,8 @@ class SessionContext:
         type-aware lowering, the documented §1.2 residual. This is the
         shared resolver behind _rewrite_median / _rewrite_decimal_avg /
         _rewrite_int_division / _rewrite_deep_array_fns, generalizing
-        them past the r9 single-plain-FROM guard."""
-        shield = _strip_strings(q)
+        them past the r9 single-plain-FROM guard. ``q`` is shielded text."""
+        shield = q
         # CTE names shadow catalog tables: `WITH t AS (...) ... FROM t`
         # must NOT resolve through spark.table("t") — a same-named
         # catalog table would silently mis-type the rewrite target. Any
@@ -5317,7 +5256,7 @@ class SessionContext:
         from base tables named elsewhere in the same statement). Used for
         SIZING only, never typing; table-function sources (range(...),
         UDTFs) stay unsized — the guard fails open there, documented."""
-        shield = _strip_strings(q)
+        shield = q
         cte = {
             m.group(1).lower()
             for m in re.finditer(r"\b(\w+)\s+AS\s*\(", shield, re.IGNORECASE)
@@ -5406,7 +5345,7 @@ class SessionContext:
             pos = s_i + len(repl)
         return q
 
-    def _rewrite_decimal_division(self, q: str, rmap=None) -> str:
+    def _rewrite_decimal_division(self, q: str, lx: Lexed, rmap=None) -> str:
         """Decimal / decimal division with arrow-rs's result type and
         TRUNCATION (arrow-arith numeric.rs decimal ``Op::Div``: result
         scale s1+4, precision min(p1+s2+4, 38); the i128 quotient of
@@ -5496,9 +5435,7 @@ class SessionContext:
                 quot = (
                     f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
                     f"OR ({b}) = 0 THEN {quot} "
-                    f"WHEN ({quot}) IS NULL THEN raise_error("
-                    "'decimal division: truncated quotient exceeds BIGINT"
-                    " (documented arrow-parity bound)') "
+                    f"WHEN ({quot}) IS NULL THEN raise_error({overflow}) "
                     f"ELSE ({quot}) END)"
                 )
             return (
@@ -5506,23 +5443,20 @@ class SessionContext:
                 f" AS DECIMAL({pr},{rs}))"
             )
 
-        # rewrite only OUTSIDE string literals (callers shield, but keep
-        # the same defensive split as _rewrite_int_division)
-        segs = re.split(r"('(?:[^']|'')*')", q)
-        return "".join(
-            seg if i % 2 else pat.sub(repl, seg) for i, seg in enumerate(segs)
+        overflow = lx.add(
+            "'decimal division: truncated quotient exceeds BIGINT"
+            " (documented arrow-parity bound)'"
         )
+        return pat.sub(repl, q)
 
     def _array_arg_depth(
-        self, arg: str, schema: dict | None, lits: list[str] | None = None
+        self, arg: str, schema: dict | None, lx: Lexed
     ) -> int | None:
         """Static array-nesting depth of an expression TEXT, or None when
         unresolvable. Resolves columns (alias-aware _from_schema_map), bracket
         literals, make_array/array_repeat chains, and arrow_cast type
-        strings — the shapes the reference's array corpus uses. ``lits``
-        is the caller's literal-shield table: arrow_cast's TYPE STRING is
-        a quoted literal, so it arrives as a placeholder that must be
-        looked back up."""
+        strings — the shapes the reference's array corpus uses. ``lx``
+        resolves arrow_cast's TYPE STRING, a shielded literal."""
         arg = arg.strip()
         if arg.startswith("["):
             # whitespace may separate nested brackets: `[ [1], [2] ]`
@@ -5533,7 +5467,7 @@ class SessionContext:
             if low.startswith(fn) and arg.endswith(")"):
                 inner = _split_top_level(arg[len(fn) : -1])
                 d = (
-                    self._array_arg_depth(inner[0], schema, lits)
+                    self._array_arg_depth(inner[0], schema, lx)
                     if inner
                     else None
                 )
@@ -5541,10 +5475,7 @@ class SessionContext:
         if low.startswith("arrow_cast(") and arg.endswith(")"):
             parts = _split_top_level(arg[len("arrow_cast(") : -1])
             if len(parts) == 2:
-                t = parts[1].strip()
-                m = re.fullmatch(r"\x00(\d+)\x00", t)
-                if m and lits is not None:
-                    t = lits[int(m.group(1))]
+                t = lx.literal(parts[1]) or parts[1].strip()
                 return len(
                     re.findall(r"(?:Fixed_?Size|Large)?List\s*\(", t, re.I)
                 ) or None
@@ -5561,7 +5492,7 @@ class SessionContext:
         return None
 
     def _rewrite_deep_array_fns(
-        self, q: str, lits: list[str] | None = None, rmap=None
+        self, q: str, lx: Lexed, rmap=None
     ) -> str:
         """flatten / array_to_string over NESTED arrays, the reference's
         recursive leaf semantics (functions-array flatten.rs flattens
@@ -5621,7 +5552,7 @@ class SessionContext:
                 ):
                     pos = e
                     continue
-                d = self._array_arg_depth(parts[0], schema, lits)
+                d = self._array_arg_depth(parts[0], schema, lx)
                 if d is None or (kind == "join" and d <= 1):
                     pos = e
                     continue
@@ -5799,13 +5730,9 @@ class SessionContext:
         pat = re.compile(
             rf"(?<![\w.:])({ident})\s*/\s*({ident})(?![\w.:])", re.IGNORECASE
         )
-        # rewrite only OUTSIDE string literals — '1/2' in a literal is text
-        segs = re.split(r"('(?:[^']|'')*')", q)
-        return "".join(
-            seg if i % 2 else pat.sub(repl, seg) for i, seg in enumerate(segs)
-        )
+        return pat.sub(repl, q)
 
-    def _rewrite_approx_percentile(self, q: str, rmap=None) -> str:
+    def _rewrite_approx_percentile(self, q: str, lx: Lexed, rmap=None) -> str:
         """approx_percentile_cont / approx_median /
         approx_percentile_cont_with_weight → the faithful t-digest
         aggregate (functions/tdigest.py — the reference's merging-digest
@@ -5970,11 +5897,12 @@ class SessionContext:
                             f"CAST({parts[1]} AS BIGINT))"
                         )
                     else:
+                        v, w = lx.add("'v'"), lx.add("'w'")
                         pair = (
                             f"CASE WHEN ({parts[0]}) IS NOT NULL AND "
                             f"({parts[1]}) IS NOT NULL THEN named_struct("
-                            f"'v', CAST({parts[0]} AS DOUBLE), "
-                            f"'w', CAST({parts[1]} AS DOUBLE)) END"
+                            f"{v}, CAST({parts[0]} AS DOUBLE), "
+                            f"{w}, CAST({parts[1]} AS DOUBLE)) END"
                         )
                         repl = (
                             f"tdigest_from_list_w(collect_list({pair}), "
@@ -6093,7 +6021,7 @@ class SessionContext:
                 pos = s_i + len(repl)
         return q
 
-    def _rewrite_tz_date_trunc(self, q: str, lits: list[str], rmap=None) -> str:
+    def _rewrite_tz_date_trunc(self, q: str, lx: Lexed, rmap=None) -> str:
         """Zone-aware date_trunc over NAMED-TZ columns (timestamps.slt
         #8899 battery; datetime/date_trunc.rs truncates in the value's own
         time zone): when the argument column's view declared a
@@ -6125,8 +6053,7 @@ class SessionContext:
             if len(parts) != 2:
                 pos = e
                 continue
-            mlit = re.fullmatch(r"\x00(\d+)\x00", parts[0])
-            unit = lits[int(mlit.group(1))].strip("'").lower() if mlit else ""
+            unit = (lx.string(parts[0]) or "").lower()
             mcol = re.fullmatch(
                 r"(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)", parts[1]
             )
@@ -6143,9 +6070,10 @@ class SessionContext:
                 pos = e
                 continue
             tz = next(iter(tzs))
+            tz_lit = lx.add(quote(tz))
             repl = (
                 f"to_utc_timestamp(date_trunc({parts[0]}, "
-                f"from_utc_timestamp({parts[1]}, '{tz}')), '{tz}')"
+                f"from_utc_timestamp({parts[1]}, {tz_lit})), {tz_lit})"
             )
             q = q[:s] + repl + q[e + 1:]
             pos = s + len(repl)
@@ -6245,7 +6173,7 @@ class SessionContext:
             pos = s_i + len(repl)
         return q
 
-    def _sql_copy_to(self, query: str, args=None) -> DataFrame:
+    def _sql_copy_to(self, lx: Lexed, args=None) -> DataFrame:
         """``COPY (query | table) TO 'path' [STORED AS fmt]`` →  df.write.
 
         Mirrors DataFusion's CopyTo statement (sql/src/statement.rs:186,
@@ -6255,26 +6183,30 @@ class SessionContext:
         reference does.
         """
         m = re.match(
-            r"\s*COPY\s+(.+?)\s+TO\s+'([^']+)'"
+            rf"\s*COPY\s+(.+?)\s+TO\s+({LIT})"
             r"(?:\s+STORED\s+AS\s+(\w+)|\s+FORMAT\s+(\w+))?"
             r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
-            r"(?:\s+OPTIONS\s*\(((?:[^()']|'[^']*'|\([^()]*\))*)\))?"
+            r"(?:\s+OPTIONS\s*\(((?:[^()]|\([^()]*\))*)\))?"
             r"\s*;?\s*$",
-            query,
+            lx.text,
             re.IGNORECASE | re.DOTALL,
         )
         if not m:
-            raise ValueError(f"cannot parse COPY statement: {query[:80]!r}")
-        source, path, fmt = m.group(1).strip(), m.group(2), (
+            raise ValueError(f"cannot parse COPY statement: {lx.unshield()[:80]!r}")
+        source, path, fmt = m.group(1).strip(), lx.string(m.group(2)), (
             m.group(3) or m.group(4) or ""
         ).lower()
         part_cols = [
-            c.strip().strip("'\"") for c in (m.group(5) or "").split(",") if c.strip()
+            c.strip().strip("'\"")
+            for c in lx.unshield(m.group(5) or "").split(",")
+            if c.strip()
         ]
         # OPTIONS('k' 'v' | k v, ...) — values may be bare words/numbers
         copts: dict[str, str] = {}
         for item in _split_top_level(m.group(6) or ""):
-            toks = [a or b for a, b in re.findall(r"'([^']*)'|(\S+)", item)]
+            toks = [
+                t if (s := lx.string(t)) is None else s for t in item.split()
+            ]
             if len(toks) == 2:
                 copts[toks[0].lower()] = toks[1]
             elif len(toks) == 1 and toks[0]:
@@ -6282,7 +6214,9 @@ class SessionContext:
             elif len(toks) > 2:
                 # non-literal option value (e.g. `row_group_size 55 + 102`)
                 # — the reference rejects these at plan time
-                raise ValueError(f"invalid COPY option value: {item.strip()!r}")
+                raise ValueError(
+                    f"invalid COPY option value: {lx.unshield(item).strip()!r}"
+                )
         if copts.get("execution.keep_partition_by_columns", "").lower() not in (
             "",
             "true",
@@ -6303,7 +6237,7 @@ class SessionContext:
                 ext, "parquet"
             )
         if source.startswith("("):
-            df = self._spark_sql(source[1:-1].strip(), args)
+            df = self._spark_sql(lx.derive(source[1:-1].strip()), args)
         else:
             df = self.table(source)
         # COPY TO '<name>.<ext>' writes ONE FILE in the reference (a later
@@ -6453,7 +6387,7 @@ class SessionContext:
             with _pa.ipc.new_file(f, tbl.schema) as w:
                 w.write_table(tbl)
 
-    def _sql_recursive(self, query: str, args=None) -> DataFrame:
+    def _sql_recursive(self, lx: Lexed, args=None) -> DataFrame:
         """Evaluate ``WITH RECURSIVE c1 AS (...), c2 AS (...) <select>``.
 
         Each CTE is materialized in order as a temp view (so later CTEs and
@@ -6466,7 +6400,11 @@ class SessionContext:
         """
         from arrow_datafusion_spark.plans.recursive import recursive_query
 
-        ctes, rest = _parse_with_ctes(query)
+        if not self.settings.get_bool("datafusion.execution.enable_recursive_ctes"):
+            raise ValueError(
+                "This feature is not implemented: Recursive CTEs are not enabled"
+            )
+        ctes, rest = _parse_with_ctes(lx)
         shadowed: list[tuple[str, DataFrame | None]] = []
         try:
             for name, cols, body in ctes:
@@ -6475,7 +6413,7 @@ class SessionContext:
                 except Exception:
                     prev = None
                 shadowed.append((name, prev))
-                if re.search(rf"\b{re.escape(name)}\b", _strip_strings(body)):
+                if re.search(rf"\b{re.escape(name)}\b", body):
                     base_sql, step_sql, distinct = _split_recursive_union(body)
                     # Multiple table references to the recursive CTE inside
                     # its own step are rejected, exactly like the reference
@@ -6484,17 +6422,16 @@ class SessionContext:
                     # need per-iteration self-joins; operationally each
                     # composed step would embed the frontier plan TWICE, so
                     # the unrolled plan grows 2^k — exponential analysis.
-                    step_shielded = _strip_strings(step_sql)
                     refs = len(
                         re.findall(
                             rf"\b(?:FROM|JOIN)\s+{re.escape(name)}\b",
-                            step_shielded,
+                            step_sql,
                             re.IGNORECASE,
                         )
                     ) + len(
                         re.findall(
                             rf",\s*{re.escape(name)}\b(?!\s*\()",
-                            step_shielded,
+                            step_sql,
                             re.IGNORECASE,
                         )
                     )
@@ -6504,13 +6441,13 @@ class SessionContext:
                             "recursive references to the same CTE are not "
                             "supported"
                         )
-                    base = self._spark_sql(base_sql, args)
+                    base = self._spark_sql(lx.derive(base_sql), args)
                     if cols:
                         base = base.toDF(*cols)
 
                     def step(
                         frontier: DataFrame,
-                        _sql: str = step_sql,
+                        _sql: Lexed = lx.derive(step_sql),
                         _name: str = name,
                         _cols: tuple[str, ...] | None = cols,
                     ) -> DataFrame:
@@ -6520,11 +6457,11 @@ class SessionContext:
 
                     result = recursive_query(base, step, distinct=distinct)
                 else:
-                    result = self._spark_sql(body, args)
+                    result = self._spark_sql(lx.derive(body), args)
                     if cols:
                         result = result.toDF(*cols)
                 result.createOrReplaceTempView(name)
-            return self._spark_sql(rest, args)
+            return self._spark_sql(lx.derive(rest), args)
         finally:
             for name, prev in reversed(shadowed):
                 if prev is not None:

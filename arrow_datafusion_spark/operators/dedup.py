@@ -15,7 +15,6 @@ classic Broder scheme (shingle → k independent min-hashes → banded LSH).
 
 from __future__ import annotations
 
-import os
 
 import pandas as pd
 
@@ -436,17 +435,6 @@ _JAC_UDFS: dict[tuple, "object"] = {}
 _BROADCAST_TEXT_BYTES_CAP = 64 * 1024 * 1024
 
 
-def _gram_width(gram_fn) -> int:
-    """Upper-bound bytes-per-text-character of a gram set (≤len(text)
-    grams of this width each) — the broadcast-gate multiplier for the
-    grams-shipping verify variant."""
-    try:
-        sample = gram_fn("the quick brown fox jumps over the lazy dog")
-        return max(1, min(max(len(g) for g in sample), 16))
-    except Exception:
-        return 8
-
-
 def _verify_pairs_jaccard(
     pairs: DataFrame,
     df: DataFrame,
@@ -490,69 +478,7 @@ def _verify_pairs_jaccard(
         F.sum(F.octet_length(F.col(text_col).cast("string"))).alias("bytes")
     ).first()
     small = (stats["bytes"] or 0) <= _BROADCAST_TEXT_BYTES_CAP
-    # A/B toggle (VERDICT r11 #7): ship="grams" tokenizes each candidate
-    # doc ONCE and ships the distinct-gram SET (array<string>) through the
-    # pair join instead of the raw text, trading shuffle/broadcast bytes
-    # for skipping the per-pair re-tokenization; Jaccard is computed from
-    # the same sets, so the verified pair set is byte-identical
-    # (tests/test_plans.py asserts it). Default stays "text" (the measured
-    # winner — BENCH_SCALE.md round-12 A/B); the env toggle exists so the
-    # 1000× probe can A/B without code edits.
-    ship = os.environ.get("SPARK_GRAFT_MINHASH_SHIP", "text")
-    if ship == "grams":
-        gkey = ("gramarr",) + (cache_key or ())
-        gram_arr = _JAC_UDFS.get(gkey)
-        if gram_arr is None:
-
-            def gram_arr_batch(tv):
-                import pandas as pd
-
-                return pd.Series([list(gram_fn(t)) for t in tv])
-
-            gram_arr = F.pandas_udf(gram_arr_batch, "array<string>")
-            _JAC_UDFS[gkey] = gram_arr
-        cand_docs = cand_docs.select(
-            F.col(id_col), gram_arr(F.col(text_col)).alias("__grams__")
-        ).localCheckpoint(eager=True)
-        # the broadcast gate must price what is actually shipped: a gram
-        # array is at most k bytes per text character (≤len(text) grams of
-        # k chars), so scale the measured text bytes by that upper bound
-        small = ((stats["bytes"] or 0) * _gram_width(gram_fn)) <= (
-            _BROADCAST_TEXT_BYTES_CAP
-        )
-        a = cand_docs.select(
-            F.col(id_col).alias("doc_a"), F.col("__grams__").alias("text_a")
-        )
-        b = cand_docs.select(
-            F.col(id_col).alias("doc_b"), F.col("__grams__").alias("text_b")
-        )
-        skey = ("setjac",)
-        jac_sets = _JAC_UDFS.get(skey)
-        if jac_sets is None:
-
-            def jac_sets_batch(av, bv):
-                import pandas as pd
-
-                out = []
-                for x, y in zip(av, bv):
-                    sx, sy = set(x), set(y)
-                    inter = len(sx & sy)
-                    out.append(inter / (len(sx) + len(sy) - inter))
-                return pd.Series(out)
-
-            jac_sets = F.pandas_udf(jac_sets_batch, "double")
-            _JAC_UDFS[skey] = jac_sets
-        spread = pairs.repartition(_parallelism(df), "doc_a")
-        if small:
-            a, b = F.broadcast(a), F.broadcast(b)
-        return (
-            spread.join(a, "doc_a")
-            .join(b, "doc_b")
-            .select(
-                "doc_a", "doc_b", jac_sets("text_a", "text_b").alias("jaccard")
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+    # Negative result (BENCH_SCALE.md r12): shipping gram sets instead of texts lost its A/B.
     # Repartition the PAIRS (two ids/row) before attaching texts, not
     # after: repartitioning the joined result would ship text_a+text_b
     # (~4 KB/pair — ~300 MB at sf0.1's 80k pairs) through the exchange;

@@ -31,6 +31,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from arrow_datafusion_spark.sql.lex import LIT, lex, quote
+
 
 @dataclass
 class Record:
@@ -602,38 +604,6 @@ def _has_top_level_order_by(sql: str) -> bool:
     return False
 
 
-def _double_literal_backslashes(sql: str) -> str:
-    """The reference lexes '...' literals with NO backslash-escape
-    processing (Postgres standard_conforming_strings); Spark's default
-    lexer processes them ('\\b' → backspace). Doubling each backslash
-    INSIDE single-quoted spans makes Spark reconstruct the reference's
-    exact bytes — an input-encoding shim at the slt boundary only, so the
-    engine's own generated SQL (written for Spark's lexer) is untouched.
-    '' quote-escapes are preserved."""
-    if "\\" not in sql:
-        return sql
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        out.append(ch)
-        i += 1
-        if ch != "'":
-            continue
-        while i < n:  # inside a literal
-            c = sql[i]
-            if c == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append("''")
-                    i += 2
-                    continue
-                out.append("'")
-                i += 1
-                break
-            out.append("\\\\" if c == "\\" else c)
-            i += 1
-    return "".join(out)
-
-
 def _norm_interval_arrays(line: str) -> str | None:
     """Replace every ``[elem, elem, …]`` span whose elements ALL parse as
     intervals with a canonical seconds form; None when the line has no
@@ -932,12 +902,13 @@ def _resolve_rel_paths(sql: str, base_dir: str | None) -> str:
 
     # TO '<path>' only appears in COPY statements — rewriting TO in other
     # statements would mangle SET ... TO '<value>' assignments
-    if not re.match(r"\s*(?:COPY|CREATE)\b", sql, re.IGNORECASE):
+    lx = lex(sql)
+    if lx.head(1) not in (("COPY",), ("CREATE",)):
         return sql
 
     def fix(m: "re.Match[str]") -> str:
-        p = m.group(2)
-        if p.startswith(("/", "file:", "s3", "hdfs:")) or p.startswith(
+        p = lx.string(m.group(2))
+        if not p or p.startswith(("/", "file:", "s3", "hdfs:")) or p.startswith(
             "test_files/scratch"
         ):
             return m.group(0)
@@ -992,9 +963,11 @@ def _resolve_rel_paths(sql: str, base_dir: str | None) -> str:
             )
             if _os.path.exists(alt):
                 full = alt
-        return f"{m.group(1)}'{full}'"
+        return m.group(1) + lx.add(quote(full))
 
-    return re.sub(r"((?:LOCATION|TO)\s+)'([^']+)'", fix, sql, flags=re.IGNORECASE)
+    return lx.unshield(
+        re.sub(rf"((?:LOCATION|TO)\s+)({LIT})", fix, lx.text, flags=re.IGNORECASE)
+    )
 
 
 _BETWEEN_ARITH_RE = re.compile(
@@ -1041,22 +1014,6 @@ def _fold_between_literal_arith(sql: str) -> str:
 
 
 _FLOAT_LIT_RE = re.compile(r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])")
-
-
-def _float_literals_to_double(sql: str) -> str:
-    """Dialect normalization: the reference's parser types bare decimal
-    literals Float64 (§1.2); Spark types them DECIMAL(p,s), which changes
-    arithmetic precision (2.0/3 → 6-digit decimal) and display (1 vs
-    1.0). Rewrite each to an explicit DOUBLE cast, shielding strings."""
-    lits: list[str] = []
-
-    def shield(m: "re.Match[str]") -> str:
-        lits.append(m.group(0))
-        return f"\x03{len(lits) - 1}\x03"
-
-    sql = re.sub(r"'(?:[^']|'')*'", shield, sql)
-    sql = _FLOAT_LIT_RE.sub(lambda m: f"CAST({m.group(1)} AS DOUBLE)", sql)
-    return re.sub(r"\x03(\d+)\x03", lambda m: lits[int(m.group(1))], sql)
 
 
 def _expand_includes(text: str, base_dir: str, depth: int = 0) -> str:
@@ -1238,23 +1195,37 @@ def _run_records(ctx, records, rep: SltReport, stop_on_fail: bool) -> None:
             t.cancel()
 
     def _effective_sql(sql: str) -> str:
-        """The decimal-literal→DOUBLE rewrite is a DIALECT normalization
-        (the reference parser types bare decimal literals Float64 by
-        default) — it must not touch SET/SHOW statement values, and it
-        turns itself off while datafusion.sql_parser.parse_float_as_decimal
-        is set (then Spark's native DECIMAL literal typing is exactly the
-        reference's configured behavior — options.slt:112+)."""
-        if re.match(r"\s*(SET|SHOW)\b", sql, re.IGNORECASE):
-            return sql
+        """Dialect normalization at the slt boundary, on the lexed record:
+
+        - The reference lexes '...' literals with NO backslash-escape
+          processing (Postgres standard_conforming_strings); Spark's
+          default lexer processes them ('\\b' → backspace). Doubling each
+          backslash inside literals makes Spark reconstruct the reference's
+          exact bytes (the engine's own generated SQL, written for Spark's
+          lexer, is untouched).
+        - The reference's parser types bare decimal literals Float64
+          (§1.2); Spark types them DECIMAL(p,s), which changes arithmetic
+          precision (2.0/3 → 6-digit decimal) and display (1 vs 1.0), so
+          each becomes an explicit DOUBLE cast. Not in SET/SHOW statement
+          values, and not while datafusion.sql_parser.parse_float_as_decimal
+          is set (then Spark's native DECIMAL literal typing is exactly the
+          reference's configured behavior — options.slt:112+)."""
+        lx = lex(sql)
+        lx.lits[:] = [lit.replace("\\", "\\\\") for lit in lx.lits]
         settings = getattr(ctx, "settings", None)
-        if settings is not None and settings.get_bool(
-            "datafusion.sql_parser.parse_float_as_decimal"
+        if lx.head(1) in (("SET",), ("SHOW",)) or (
+            settings is not None
+            and settings.get_bool("datafusion.sql_parser.parse_float_as_decimal")
         ):
-            return sql
-        return _float_literals_to_double(_fold_between_literal_arith(sql))
+            return lx.unshield()
+        text = _FLOAT_LIT_RE.sub(
+            lambda m: f"CAST({m.group(1)} AS DOUBLE)",
+            _fold_between_literal_arith(lx.text),
+        )
+        return lx.unshield(text)
 
     for rec in records:
-        sql = _effective_sql(_double_literal_backslashes(rec.sql))
+        sql = _effective_sql(rec.sql)
         if rec.kind == "statement_error":
             try:
                 run_bounded(lambda: ctx.sql(sql).collect())
@@ -1288,7 +1259,7 @@ def _run_records(ctx, records, rep: SltReport, stop_on_fail: bool) -> None:
             rep.skipped += 1
             rep.skips.append(f"{rec.line}: SHOW CREATE TABLE (engine-specific)")
             continue
-        # backslashes in literals are safe: _double_literal_backslashes
+        # backslashes in literals are safe: _effective_sql doubles them
         # rewrites them at this boundary, matching the reference's
         # Postgres-style (non-escaping) lexing without a session-wide conf
         try:

@@ -10,6 +10,8 @@ import os
 import sys
 import uuid as uuid_mod
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window  # noqa: E402
@@ -1093,3 +1095,90 @@ def test_rewrite_memo_invalidated_by_commented_mutation(spark):
         assert ctx._rw_version > v1
     finally:
         spark.sql("DROP TABLE IF EXISTS memo_cmt_t")
+
+
+@pytest.mark.parametrize("lead", ["-- it's a comment\n", "/* it's a\nblock */ "])
+def test_leading_comment_routes_like_the_bare_statement(spark, tmp_path, lead):
+    # every statement form dispatches on its leading keywords after the
+    # lexer drops comments; an apostrophe inside a comment opens no literal
+    ctx = SessionContext(spark)
+    tag = "line" if lead.startswith("--") else "block"
+    out = str(tmp_path / f"cmt_{tag}.parquet")
+    ext, tbl = f"cmt_ext_{tag}", f"cmt_t_{tag}"
+    try:
+        copied = ctx.sql(f"{lead}COPY (SELECT 1 AS a) TO '{out}'").first()
+        assert copied["count"] == 1
+        ctx.sql(
+            f"{lead}CREATE EXTERNAL TABLE {ext} (a INT) STORED AS PARQUET "
+            f"LOCATION '{out}'"
+        )
+        assert ctx.sql(f"SELECT a FROM {ext}").first().a == 1
+        ctx.sql(f"{lead}PREPARE cmt_p AS SELECT $1 + 1 AS v")
+        assert ctx.sql("EXECUTE cmt_p(1)").first().v == 2
+        ctx.sql(f"CREATE TABLE {tbl} (a INT)")
+        inserted = ctx.sql(f"{lead}INSERT INTO {tbl} VALUES (1), (2)").collect()
+        assert [tuple(r) for r in inserted] == [(2,)]
+        ctx.sql(f"{lead}SET datafusion.execution.batch_size = 2048")
+        assert str(ctx.settings.get("datafusion.execution.batch_size")) == "2048"
+    finally:
+        ctx.deregister_table(ext)
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_apostrophes_outside_literals_leave_literals_alone(spark):
+    ctx = SessionContext(spark)
+    assert ctx.sql("-- it's\nSELECT 'x~y' AS s").first().s == "x~y"
+    row = ctx.sql("""SELECT 1 AS "it's", 'x~y' AS s""").first()
+    assert tuple(row) == (1, "x~y")
+
+
+def test_broadcast_hint_survives_the_front_end(spark):
+    # a /*+ hint */ is not a comment: Spark must still read it
+    ctx = SessionContext(spark)
+    spark.createDataFrame([(i, i) for i in range(50)], "k int, v int")\
+        .createOrReplaceTempView("hint_a")
+    spark.createDataFrame([(i, i) for i in range(50)], "k int, w int")\
+        .createOrReplaceTempView("hint_b")
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = ctx.sql(
+            "-- hinted\nSELECT /*+ BROADCAST(b) */ a.k, b.w "
+            "FROM hint_a a JOIN hint_b b ON a.k = b.k"
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        spark.catalog.dropTempView("hint_a")
+        spark.catalog.dropTempView("hint_b")
+
+
+def test_only_the_lexer_shields_literals():
+    # sql/lex.py is the one module that knows how literals are delimited
+    # and how a shielded literal is spelled: no other module carries a
+    # literal regex, a sentinel regex or a shield closure
+    import glob
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "arrow_datafusion_spark",
+    )
+    banned = re.compile(
+        r"'\(\?:\[\^'\]\|''\)\*'"  # the '(?:[^']|'')*' literal pattern
+        r"|'\(?\[\^'\]"  # '[^']*' / '([^']+)' literal scans
+        r"|\\x0[03]"  # \x00 / \x03 sentinels
+        r"|def _?sh(?:ield\w*)?\("  # shield closures
+    )
+    allowed = {os.path.join("sql", "lex.py"), os.path.join("sources", "avro.py")}
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel in allowed:
+            continue
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                if banned.search(line):
+                    offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)

@@ -297,31 +297,6 @@ def test_minhash_prune_keeps_verified_pairs_byte_identical(spark, sf_dir):
     assert pruned == unpruned and pruned
 
 
-def test_minhash_grams_shipping_pairs_byte_identical(spark, sf_dir, monkeypatch):
-    """Round-12 verify-stage A/B (VERDICT r11 #7): shipping distinct-gram
-    SETS through the pair join (SPARK_GRAFT_MINHASH_SHIP=grams) instead of
-    raw text must produce the byte-identical verified pair set — the
-    Jaccard is computed from the same sets either way."""
-    from arrow_datafusion_spark.operators.dedup import minhash_near_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def run():
-        return {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in minhash_near_duplicates(
-                docs, "doc_id", "text", threshold=0.4
-            ).collect()
-        }
-
-    monkeypatch.delenv("SPARK_GRAFT_MINHASH_SHIP", raising=False)
-    text_pairs = run()
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_SHIP", "grams")
-    gram_pairs = run()
-    assert text_pairs == gram_pairs
-    assert len(text_pairs) > 0
-
-
 def test_bucket_norm_kernel_matches_column_form(spark, sf_dir):
     """Round-13 kernel swap: the fused Arrow bucket+norm kernel
     (_bucket_norm_udf) must be BIT-identical to the Column-expression
