@@ -39,19 +39,14 @@ from arrow_datafusion_spark.session import (
     load_table,
     prepare,
 )
-from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, lex, quote
-
-# PostgreSQL-ish type names DataFusion accepts that Spark SQL spells differently
-_TYPE_MAP = {
-    "text": "STRING",
-    "bytea": "BINARY",
-    "float4": "FLOAT",
-    "float8": "DOUBLE",
-    "int2": "SMALLINT",
-    "int4": "INT",
-    "int8": "BIGINT",
-    "bool": "BOOLEAN",
-}
+from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex, quote
+from arrow_datafusion_spark.sql.rewrite import (
+    _TYPE_MAP,
+    _find_call,
+    _match_paren,
+    _rewrite_sql,
+    _split_top_level,
+)
 
 # SQL-macro definitions (Spark 4 SQL UDFs) registered once per session so
 # DataFusion's function names resolve inside ctx.sql() even where Spark's
@@ -107,2484 +102,6 @@ _SQL_MACROS = (
     "CREATE OR REPLACE TEMPORARY FUNCTION iszero(x DOUBLE) "
     "RETURNS BOOLEAN RETURN x = CAST(0.0 AS DOUBLE)",
 )
-
-
-# SQL-level list_* → array_* renames: semantics verified identical between
-# the DataFusion alias and the Spark native (1-based positions, sort order,
-# set-op multiplicity). See _rewrite_sql.
-_SQL_LIST_ALIASES = {
-    "list_sort": "array_sort",
-    "list_distinct": "array_distinct",
-    "list_except": "array_except",
-    "list_intersect": "array_intersect",
-    "list_union": "array_union",
-    "list_repeat": "array_repeat",
-    # list_position / list_contains are NOT simple renames: the reference
-    # returns NULL for not-found positions and false for no-match contains
-    # (position.rs / array_has) — handled by the semantic rewrite below.
-    "list_reverse": "reverse",
-    "list_append": "array_append",
-    "list_prepend": "array_prepend",
-    "list_join": "array_join",
-    # array concatenation is Spark's concat(); the marker shields it from
-    # the string-concat → concat_ws rewrite below, and is renamed back after
-    "list_cat": "\x02array_concat\x02",
-    "list_concat": "\x02array_concat\x02",
-    "array_cat": "\x02array_concat\x02",
-    "array_concat": "\x02array_concat\x02",
-    "make_list": "array",
-    # non-list simple renames sharing the same swap mechanism
-    "starts_with": "startswith",
-    "ends_with": "endswith",
-    "today": "current_date",
-    "row": "struct",  # ROW(a, b) value constructor (ExprPlanner RowExpr)
-    "string_to_list": "string_to_array",
-    "array_push_back": "array_append",
-    "list_push_back": "array_append",
-    "array_push_front": "array_prepend",
-    "list_push_front": "array_prepend",
-    "make_array": "array",
-}
-
-
-# Arrow type-name (lowercased) → Spark SQL type name, for arrow_cast in SQL
-# (shares the semantic table with functions/scalar._ARROW_TO_SPARK_TYPE).
-_ARROW_SQL_TYPES = {
-    "utf8": "STRING", "largeutf8": "STRING", "utf8view": "STRING",
-    "int8": "TINYINT", "int16": "SMALLINT", "int32": "INT", "int64": "BIGINT",
-    "uint8": "SMALLINT", "uint16": "INT", "uint32": "BIGINT",
-    "uint64": "DECIMAL(20,0)",
-    "float16": "FLOAT", "float32": "FLOAT", "float64": "DOUBLE",
-    "boolean": "BOOLEAN", "binary": "BINARY", "largebinary": "BINARY",
-    "date32": "DATE", "date64": "DATE",
-}
-
-# typeof() name → Arrow display name for arrow_typeof in SQL (same table as
-# functions/scalar._SPARK_TO_ARROW_NAME, inlined as a map literal).
-_TYPEOF_MAP_SQL = (
-    "map('tinyint','Int8','smallint','Int16','int','Int32','bigint','Int64',"
-    "'float','Float32','double','Float64','string','Utf8','boolean','Boolean',"
-    "'binary','Binary','date','Date32',"
-    "'timestamp','Timestamp(Microsecond, Some(\"UTC\"))',"
-    "'timestamp_ntz','Timestamp(Microsecond, None)','void','Null')"
-)
-
-
-def _match_paren(q: str, i: int) -> int | None:
-    """Index of the ')' matching the '(' at ``i`` (brackets count too)."""
-    depth = 0
-    for j in range(i, len(q)):
-        if q[j] in "([":
-            depth += 1
-        elif q[j] in ")]":
-            depth -= 1
-            if depth == 0:
-                return j
-    return None
-
-
-def _wrap_values(q: str) -> str:
-    """Rename inline-VALUES columns to the reference's names: DataFusion
-    derives ``column1..columnN`` (sql/src/planner.rs values planning) where
-    Spark derives ``col1..colN``. Each ``VALUES (..), (..)`` list becomes
-    ``(SELECT col1 AS column1, ... FROM (VALUES ...))`` so downstream
-    references to columnN resolve. INSERT statements are left alone —
-    their VALUES feed a named schema, and a parenthesized subquery after
-    the table name would parse as a column list."""
-    if re.match(r"\s*INSERT\b", q, re.IGNORECASE):
-        return q
-    pat = re.compile(r"\bVALUES\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(q, pos)
-        if not m:
-            return q
-        i = m.end() - 1
-        arity = None
-        end = None
-        while True:
-            j = _match_paren(q, i)
-            if j is None:
-                return q  # malformed — leave for Spark's parser to report
-            if arity is None:
-                arity = len(_split_top_level(q[i + 1 : j]))
-            k = j + 1
-            while k < len(q) and q[k].isspace():
-                k += 1
-            if k < len(q) and q[k] == ",":
-                k += 1
-                while k < len(q) and q[k].isspace():
-                    k += 1
-                if k < len(q) and q[k] == "(":
-                    i = k
-                    continue
-                return q  # VALUES (..), <non-tuple> — not an inline table
-            end = j + 1
-            break
-        inner = q[m.start() : end]
-        sel = ", ".join(f"col{n + 1} AS column{n + 1}" for n in range(arity))
-        repl = f"(SELECT {sel} FROM ({inner}))"
-        q = q[: m.start()] + repl + q[end:]
-        pos = m.start() + len(repl)
-
-
-# ranking / offset window functions take no frame in Spark (it rejects an
-# explicit ROWS/RANGE on them) while DataFusion accepts AND IGNORES one
-# (window.slt rn2/rank2/cd2 equal their frameless twins) — strip it.
-_FRAMELESS_WINDOW_FNS = (
-    "row_number",
-    "rank",
-    "dense_rank",
-    "percent_rank",
-    "cume_dist",
-    "ntile",
-    "lag",
-    "lead",
-)
-
-
-def _spec_has_order_by(spec: str) -> bool:
-    depth = 0
-    for m in re.finditer(r"[()\[\]]|\bORDER\s+BY\b", spec, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return True
-    return False
-
-
-def _strip_rank_frames(q: str) -> str:
-    for fn in _FRAMELESS_WINDOW_FNS:
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, _a, e = hit
-            m = re.compile(
-                r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?OVER\s*\(", re.IGNORECASE
-            ).match(q, e + 1)
-            if not m:
-                pos = e
-                continue
-            o_open = m.end() - 1
-            o_close = _match_paren(q, o_open)
-            if o_close is None:
-                pos = e
-                continue
-            spec = q[o_open + 1 : o_close]
-            # first top-level frame keyword starts the frame clause, which
-            # is always the final window-spec component
-            depth = 0
-            cut = None
-            for wm in re.finditer(r"[()\[\]]|\b(ROWS|RANGE|GROUPS)\b", spec, re.IGNORECASE):
-                t = wm.group(0)
-                if t in "([":
-                    depth += 1
-                elif t in ")]":
-                    depth -= 1
-                elif depth == 0:
-                    cut = wm.start()
-                    break
-            if cut is not None:
-                spec = spec[:cut].rstrip()
-            # DataFusion runs ranking/offset functions over an UNORDERED
-            # window (natural order; all rows peers for rank) where Spark
-            # demands an ORDER BY — a constant key reproduces exactly that
-            if not _spec_has_order_by(spec):
-                spec = (spec.rstrip() + " ORDER BY 1").lstrip()
-            if spec != q[o_open + 1 : o_close]:
-                q = q[: o_open + 1] + spec + q[o_close:]
-            pos = s_i + 1
-    return q
-
-
-def _fix_window_specs(q: str) -> str:
-    """Frame-spec forms DataFusion accepts but Spark rejects, applied to
-    EVERY ``OVER (...)``:
-
-    - ``ROWS|RANGE|GROUPS CURRENT ROW`` shorthand → the BETWEEN form.
-    - RANGE numeric bounds wider than the (narrow-int) sort key overflow
-      Spark's bound-to-key cast (CAST_OVERFLOW on ``RANGE BETWEEN 10000
-      PRECEDING`` over a TINYINT key; DataFusion widens instead) — widen
-      the single sort key to BIGINT when a bound literal exceeds 127.
-    """
-    pat = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(q, pos)
-        if m is None:
-            return q
-        o_open = m.end() - 1
-        o_close = _match_paren(q, o_open)
-        if o_close is None:
-            pos = o_open + 1
-            continue
-        spec = orig = q[o_open + 1 : o_close]
-        spec = re.sub(
-            r"\b(ROWS|RANGE|GROUPS)\s+(CURRENT\s+ROW|(\S+)\s+PRECEDING)\b",
-            lambda mm: f"{mm.group(1)} BETWEEN {mm.group(2)} AND CURRENT ROW",
-            spec,
-            flags=re.IGNORECASE,
-        )
-        fr = re.search(r"\bRANGE\s+BETWEEN\b(.*)$", spec, re.IGNORECASE | re.DOTALL)
-        if fr:
-            bounds = [
-                int(b)
-                for b in re.findall(
-                    r"\b(\d+)\s+(?:PRECEDING|FOLLOWING)", fr.group(1)
-                )
-            ]
-            ob = re.search(r"\bORDER\s+BY\b", spec, re.IGNORECASE)
-            if bounds and max(bounds) > 127 and ob:
-                seg = spec[ob.end() : fr.start()]
-                items = _split_top_level(seg)
-                if len(items) == 1:
-                    it = items[0].strip()
-                    mm = re.match(
-                        r"(.*?)((?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?)$",
-                        it,
-                        re.IGNORECASE | re.DOTALL,
-                    )
-                    expr, suffix = mm.group(1).strip(), mm.group(2)
-                    spec = (
-                        spec[: ob.end()]
-                        + f" CAST({expr} AS BIGINT){suffix} "
-                        + spec[fr.start() :]
-                    )
-        if spec != orig:
-            q = q[: o_open + 1] + spec + q[o_close:]
-            pos = o_open + 1 + len(spec) + 1
-        else:
-            pos = o_close
-    return q
-
-
-def _typed_empty(arr: str) -> str:
-    """A [] with the element type of ``arr`` (works when arr is NULL)."""
-    return f"slice(transform(array(1), __i -> try_element_at({arr}, 1)), 1, 0)"
-
-
-def _arr_first_pos(arr: str, v: str) -> str:
-    """1-based index of the first element null-safely equal to v, or NULL."""
-    return (
-        f"try_element_at(filter(sequence(1, size({arr})), "
-        f"__i -> try_element_at({arr}, __i) <=> ({v})), 1)"
-    )
-
-
-def _t_element(p):
-    return f"try_element_at({p[0]}, {p[1]})"
-
-
-def _t_slice(p):
-    # re-emit as a subscript; _rewrite_subscripts (which runs later)
-    # supplies the 1-based/negative-end/NULL-to-[] semantics
-    return f"({p[0]})[{p[1]}:{p[2]}]"
-
-
-def _t_pop_back(p):
-    a = p[0]
-    # NULL list pops to [] (kernels treat NULL input as empty)
-    return f"coalesce(slice({a}, 1, greatest(size({a}) - 1, 0)), {_typed_empty(a)})"
-
-
-def _t_pop_front(p):
-    a = p[0]
-    return f"coalesce(slice({a}, 2, greatest(size({a}) - 1, 0)), {_typed_empty(a)})"
-
-
-def _t_range(p):
-    empty = "slice(sequence(1, 1), 1, 0)"
-    if len(p) == 1:  # range(stop) = 0..stop-1
-        return f"(CASE WHEN ({p[0]}) <= 0 THEN {empty} ELSE sequence(0, ({p[0]}) - 1) END)"
-    if len(p) == 2:
-        a, b = p
-        return (
-            f"(CASE WHEN ({a}) >= ({b}) THEN {empty} "
-            f"ELSE sequence({a}, ({b}) - 1) END)"
-        )
-    a, b, c = p
-    return (
-        f"(CASE WHEN (({c}) > 0 AND ({a}) >= ({b})) OR "
-        f"(({c}) < 0 AND ({a}) <= ({b})) THEN {empty} "
-        f"ELSE sequence({a}, ({b}) - CAST(sign({c}) AS INT), {c}) END)"
-    )
-
-
-def _t_generate_series(p):
-    empty = "slice(sequence(1, 1), 1, 0)"
-    if len(p) == 2:
-        a, b = p
-        return (
-            f"(CASE WHEN ({a}) > ({b}) THEN {empty} ELSE sequence({a}, {b}) END)"
-        )
-    return f"sequence({p[0]}, {p[1]}, {p[2]})"
-
-
-def _t_has_all(p):
-    return f"(size(array_except({p[1]}, {p[0]})) = 0)"
-
-
-def _t_has_any(p):
-    return f"arrays_overlap({p[0]}, {p[1]})"
-
-
-def _t_resize(p):
-    # a NULL list resizes as if empty (array.slt:6523 pads a NULL row)
-    a0, s = p[0], f"coalesce({p[1]}, 0)"  # NULL size resizes to []
-    a = f"coalesce({a0}, {_typed_empty(a0)})"
-    v = p[2] if len(p) > 2 else f"try_element_at({a0}, size({a0}) + 1)"
-    return (
-        f"(CASE WHEN ({s}) <= size({a}) THEN slice({a}, 1, {s}) "
-        f"ELSE concat({a}, transform(sequence(1, ({s}) - size({a})), "
-        f"__i -> {v})) END)"
-    )
-
-
-def _t_positions(p):
-    a, v = p
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL WHEN size({a}) = 0 "
-        f"THEN slice(sequence(1, 1), 1, 0) "
-        f"ELSE filter(sequence(1, size({a})), "
-        f"__i -> try_element_at({a}, __i) <=> ({v})) END)"
-    )
-
-
-def _t_replace_n(p, n=None):
-    a, f_, t = p[0], p[1], p[2]
-    n = n or p[3]
-    elem = f"try_element_at({a}, __i)"
-    cnt = f"size(filter(slice({a}, 1, __i), __z -> __z <=> ({f_})))"
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL WHEN size({a}) = 0 THEN {a} "
-        f"ELSE transform(sequence(1, size({a})), "
-        f"__i -> CASE WHEN {elem} <=> ({f_}) AND {cnt} <= ({n}) "
-        f"THEN {t} ELSE {elem} END) END)"
-    )
-
-
-def _t_replace_all(p):
-    a, f_, t = p
-    return (
-        f"transform({a}, __x -> CASE WHEN __x <=> ({f_}) THEN {t} "
-        "ELSE __x END)"
-    )
-
-
-def _t_remove_n(p, n=None):
-    a, v = p[0], p[1]
-    n = n or p[2]
-    elem = f"try_element_at({a}, __i)"
-    cnt = f"size(filter(slice({a}, 1, __i), __z -> __z <=> ({v})))"
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL WHEN size({a}) = 0 THEN {a} "
-        f"ELSE transform(filter(sequence(1, size({a})), "
-        f"__i -> NOT ({elem} <=> ({v}) AND {cnt} <= ({n}))), "
-        f"__i -> try_element_at({a}, __i)) END)"
-    )
-
-
-def _t_distinct(p):
-    a = p[0]
-    null_elem = f"try_element_at({a}, size({a}) + 1)"  # typed NULL
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE concat("
-        f"CASE WHEN exists({a}, __x -> __x IS NULL) "
-        f"THEN array({null_elem}) ELSE {_typed_empty(a)} END, "
-        f"array_distinct(filter({a}, __x -> __x IS NOT NULL))) END)"
-    )
-
-
-def _t_except(p):
-    a, b = p
-    # NULL subtrahend behaves as empty; NULL minuend stays NULL
-    return f"array_except({a}, coalesce({b}, {_typed_empty(b)}))"
-
-
-def _t_array_to_string(p):
-    # Rust's float Display drops a whole number's ".0" — mirror it, then
-    # join (NULLs are skipped, matching the reference). The reference
-    # additionally joins the LEAVES of nested arrays; a CASE over nesting
-    # depth cannot type-check in Spark (branches would differ in type), so
-    # nested inputs remain a documented partial.
-    a, sep = p[0], p[1]
-    elems = (
-        f"transform({a}, __x -> regexp_replace(CAST(__x AS STRING), "
-        "'^(-?\\\\d+)\\\\.0$', '$1'))"
-    )
-    tail = f", {p[2]}" if len(p) > 2 else ""
-    return f"array_join({elems}, {sep}{tail})"
-
-
-def _t_dims(p):
-    a = p[0]
-    e1 = f"try_element_at({a}, 1)"
-    e2 = f"try_element_at({e1}, 1)"
-    return (
-        f"(CASE WHEN size({a}) = 0 THEN NULL "  # dims of [] is NULL
-        f"WHEN typeof({a}) LIKE 'array<array<array%' "
-        f"THEN array(size({a}), size({e1}), size({e2})) "
-        f"WHEN typeof({a}) LIKE 'array<array%' "
-        f"THEN array(size({a}), size({e1})) "
-        f"ELSE array(size({a})) END)"
-    )
-
-
-def _t_ndims(p):
-    a = p[0]
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE "
-        f"CAST((length(typeof({a})) - "
-        f"length(replace(typeof({a}), 'array<', ''))) / 6 AS INT) END)"
-    )
-
-
-def _t_length(p):
-    if len(p) == 1:
-        return f"size({p[0]})"
-    a, d = p
-    return (
-        f"(CASE WHEN ({d}) = 1 THEN size({a}) "
-        f"WHEN ({d}) = 2 THEN size(try_element_at({a}, 1)) END)"
-    )
-
-
-def _t_empty(p):
-    return f"(size({p[0]}) = 0)"
-
-
-# SQL-callable surface for the functions-array family the DataFrame
-# registry already implements (§2.9) — each template mirrors the
-# registry's semantics (1-based, NULL out-of-range, first-occurrence).
-_ARRAY_FN_TEMPLATES = {
-    "array_element": _t_element,
-    "array_extract": _t_element,
-    "list_extract": _t_element,
-    "list_element": _t_element,
-    "array_slice": _t_slice,
-    "list_slice": _t_slice,
-    "array_pop_back": _t_pop_back,
-    "list_pop_back": _t_pop_back,
-    "array_pop_front": _t_pop_front,
-    "list_pop_front": _t_pop_front,
-    "range": _t_range,
-    "generate_series": _t_generate_series,
-    "array_has_all": _t_has_all,
-    "list_has_all": _t_has_all,
-    "array_has_any": _t_has_any,
-    "list_has_any": _t_has_any,
-    "array_resize": _t_resize,
-    "list_resize": _t_resize,
-    "array_positions": _t_positions,
-    "list_positions": _t_positions,
-    "array_replace": lambda p: _t_replace_n(p, n="1"),
-    "list_replace": lambda p: _t_replace_n(p, n="1"),
-    "array_replace_n": _t_replace_n,
-    "list_replace_n": _t_replace_n,
-    "array_replace_all": _t_replace_all,
-    "list_replace_all": _t_replace_all,
-    "array_remove_n": _t_remove_n,
-    "list_remove_n": _t_remove_n,
-    "array_dims": _t_dims,
-    "list_dims": _t_dims,
-    "array_ndims": _t_ndims,
-    "list_ndims": _t_ndims,
-    "array_length": _t_length,
-    "list_length": _t_length,
-    "array_empty": _t_empty,
-    "list_empty": _t_empty,
-    "empty": _t_empty,
-    "array_reverse": lambda p: f"reverse({p[0]})",
-    "array_distinct": _t_distinct,
-    "array_except": _t_except,
-    "array_to_string": _t_array_to_string,
-    "array_join": _t_array_to_string,
-    "list_to_string": _t_array_to_string,
-    "list_join": _t_array_to_string,
-}
-
-_ARRAY_FN_ARITY = {
-    "array_element": (2,), "array_extract": (2,), "list_extract": (2,),
-    "list_element": (2,),
-    "array_slice": (3,), "list_slice": (3,),
-    "array_pop_back": (1,), "list_pop_back": (1,),
-    "array_pop_front": (1,), "list_pop_front": (1,),
-    "range": (1, 2, 3), "generate_series": (2, 3),
-    "array_has_all": (2,), "list_has_all": (2,),
-    "array_has_any": (2,), "list_has_any": (2,),
-    "array_resize": (2, 3), "list_resize": (2, 3),
-    "array_positions": (2,), "list_positions": (2,),
-    "array_replace": (3,), "list_replace": (3,),
-    "array_replace_n": (4,), "list_replace_n": (4,),
-    "array_replace_all": (3,), "list_replace_all": (3,),
-    "array_remove_n": (3,), "list_remove_n": (3,),
-    "array_dims": (1,), "list_dims": (1,),
-    "array_ndims": (1,), "list_ndims": (1,),
-    "array_length": (1, 2), "list_length": (1, 2),
-    "array_empty": (1,), "list_empty": (1,), "empty": (1,),
-    "array_reverse": (1,),
-    "array_distinct": (1,), "array_except": (2,),
-    "array_to_string": (2, 3), "array_join": (2, 3),
-    "list_to_string": (2, 3), "list_join": (2, 3),
-}
-
-
-def _rewrite_array_fns(q: str) -> str:
-    for fn, tmpl in _ARRAY_FN_TEMPLATES.items():
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) not in _ARRAY_FN_ARITY[fn]:
-                pos = e
-                continue
-            try:
-                repl = tmpl(parts)
-            except Exception:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    return q
-
-
-def _rewrite_subscripts(q: str, lx: Lexed) -> str:
-    """DataFusion's postfix subscript operators (sql/src/expr/mod.rs array
-    indexing): ``x[i]`` is 1-BASED with NULL out of range; ``x[a:b]`` is an
-    inclusive 1-based slice with negative ends counting from the back.
-    Spark's native ``[]`` is 0-based array access — rewrite to
-    try_element_at / slice. Runs after array-literal rewriting, so every
-    remaining postfix bracket is a subscript."""
-    i = 0
-    while i < len(q):
-        if q[i] != "[":
-            i += 1
-            continue
-        j = i - 1
-        while j >= 0 and q[j].isspace():
-            j -= 1
-        if j < 0 or not (q[j].isalnum() or q[j] in "_)]`"):
-            i += 1
-            continue
-        close = _match_paren(q, i)
-        if close is None:
-            i += 1
-            continue
-        if q[j] in ")]":
-            depth, k = 0, j
-            while k >= 0:
-                if q[k] in ")]":
-                    depth += 1
-                elif q[k] in "([":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
-            k -= 1
-            while k >= 0 and (q[k].isalnum() or q[k] in "_."):
-                k -= 1
-            start = k + 1
-        else:
-            k = j
-            while k >= 0 and (q[k].isalnum() or q[k] in "_.`"):
-                k -= 1
-            start = k + 1
-        base = q[start : j + 1].strip()
-        inner = q[i + 1 : close]
-        # split a top-level single colon (not '::' casts)
-        parts, depth, cut = None, 0, None
-        for ci, ch in enumerate(inner):
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif (
-                ch == ":"
-                and depth == 0
-                and inner[ci - 1 : ci] != ":"
-                and inner[ci + 1 : ci + 2] != ":"
-            ):
-                cut = ci
-                break
-        # struct['field']: a string subscript on a struct constructor is
-        # FIELD ACCESS (the reference resolves it against the c0..cN
-        # names) — element_at only works for maps/arrays
-        fieldname = lx.string(inner)
-        if fieldname is not None and re.match(
-            r"(named_)?struct\s*\(", base, re.IGNORECASE
-        ):
-            repl = f"{base}.{fieldname}"
-            q = q[:start] + repl + q[close + 1 :]
-            i = start + len(repl)
-            continue
-        if cut is not None:
-            a = inner[:cut].strip() or "1"
-            b = inner[cut + 1 :].strip() or f"size({base})"
-            # start 0 behaves as 1; END 0 stays 0 (x[0:0] is empty);
-            # negative ends count from the back
-            # NULL bounds are unbounded; negative bounds count from the
-            # back, and a start that falls before index 1 yields []
-            a_n = (
-                f"(CASE WHEN ({a}) IS NULL THEN 1 "
-                f"WHEN ({a}) < 0 THEN size({base}) + ({a}) + 1 "
-                f"WHEN ({a}) = 0 THEN 1 ELSE ({a}) END)"
-            )
-            b_n = (
-                f"(CASE WHEN ({b}) IS NULL THEN size({base}) "
-                f"WHEN ({b}) < 0 THEN size({base}) + ({b}) + 1 "
-                f"ELSE ({b}) END)"
-            )
-            # NULL[a:b] is [] in the reference, not NULL; the transform
-            # trick builds a typed empty array of base's element type
-            typed_empty = _typed_empty(base)
-            repl = (
-                f"(CASE WHEN {a_n} < 1 THEN {typed_empty} "
-                f"ELSE coalesce(slice({base}, {a_n}, "
-                f"greatest({b_n} - {a_n} + 1, 0)), {typed_empty}) END)"
-            )
-        else:
-            repl = f"try_element_at({base}, {inner.strip()})"
-        q = q[:start] + repl + q[close + 1 :]
-        i = start + len(repl)
-    return q
-
-
-def _rewrite_unnest(q: str) -> str:
-    """unnest → Spark generators, for the shapes a generator can express:
-
-    - table-function form ``FROM unnest(e)`` → a one-row derived table
-      running the generator (``explode`` for arrays; ``inline(array(e))``
-      expands a struct's fields to columns, which IS unnest-of-struct).
-    - projection form, when the query has exactly ONE unnest and it is a
-      bare top-level select item → the same generator inline (Spark
-      allows one generator beside regular columns).
-
-    Expression-wrapped (``unnest(x) + 1``) and multi-unnest zip forms have
-    no Spark generator equivalent and are left for the caller to reject.
-    """
-
-    def gen_for(arg: str) -> str:
-        if re.match(r"\s*(named_)?struct\s*\(", arg, re.IGNORECASE):
-            return f"inline(array({arg}))"
-        return f"explode({arg})"
-
-    pos = 0
-    while True:
-        m = re.compile(r"\b(from|join)\s+unnest\s*\(", re.IGNORECASE).search(q, pos)
-        if m is None:
-            break
-        o = m.end() - 1
-        c = _match_paren(q, o)
-        if c is None:
-            pos = o + 1
-            continue
-        args = [a.strip() for a in _split_top_level(q[o + 1 : c])]
-        if len(args) != 1:
-            pos = c
-            continue
-        repl = f"{m.group(1)} (SELECT {gen_for(args[0])})"
-        q = q[: m.start()] + repl + q[c + 1 :]
-        pos = m.start() + len(repl)
-    if len(re.findall(r"\bunnest\s*\(", q, re.IGNORECASE)) == 1:
-        hit = _find_call(q, "unnest", 0)
-        if hit is not None:
-            s_i, a, e = hit
-            args = [x.strip() for x in _split_top_level(q[a:e])]
-            before = q[:s_i].rstrip().lower()
-            if len(args) == 1 and (
-                before.endswith("select") or before.endswith(",")
-            ):
-                q = q[:s_i] + gen_for(args[0]) + q[e + 1 :]
-    return q
-
-
-def _top_level_order_by(s: str) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0 ORDER BY keyword in ``s``."""
-    depth = 0
-    for m in re.finditer(r"[()\[\]]|\bORDER\s+BY\b", s, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return m.start(), m.end()
-    return None
-
-
-_ORDERED_AGG_FNS = ("array_agg", "first_value", "last_value", "nth_value")
-
-
-def _rewrite_ordered_aggs(q: str) -> str:
-    """Ordered-set aggregates — ``agg(expr ORDER BY keys)`` in a GROUP BY
-    context (reference: array_agg.rs / first_last.rs / nth_value.rs order
-    clauses). Spark has no ORDER BY inside aggregate args, but the
-    semantics compose exactly: collect (value, keys) structs, array_sort
-    with a comparator encoding each key's direction and null placement,
-    project the values. first/last/nth are element lookups on the sorted
-    array (try_element_at: out-of-range → NULL)."""
-    for fn in _ORDERED_AGG_FNS:
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            if re.match(
-                r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?(?:OVER|WITHIN)\b",
-                q[e + 1 :],
-                re.IGNORECASE,
-            ):
-                pos = e
-                continue  # window/WITHIN-GROUP form, not the agg-arg form
-            argstr = q[a:e]
-            ob = _top_level_order_by(argstr)
-            if ob is None:
-                pos = e
-                continue
-            head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
-            if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
-                pos = e
-                continue
-            exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
-            if not exprs:
-                pos = e
-                continue
-            keys = []
-            for it in (x.strip() for x in _split_top_level(sortseg)):
-                if not it:
-                    continue
-                mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
-                nulls = mnf.group(1).upper() if mnf else None
-                core = it[: mnf.start()].strip() if mnf else it
-                md = re.search(r"\b(ASC|DESC)\s*$", core, re.IGNORECASE)
-                desc = bool(md and md.group(1).upper() == "DESC")
-                core = core[: md.start()].strip() if md else core
-                if nulls is None:  # Postgres default: ASC→LAST, DESC→FIRST
-                    nulls = "FIRST" if desc else "LAST"
-                keys.append((core, desc, nulls))
-            val = exprs[0]
-            fields = ", ".join(
-                [f"({val}) AS __v"]
-                + [f"({k[0]}) AS __k{i}" for i, k in enumerate(keys)]
-            )
-            cases = []
-            for i, (_kx, desc, nulls) in enumerate(keys):
-                nl = -1 if nulls == "FIRST" else 1
-                lt, gt = (1, -1) if desc else (-1, 1)
-                cases += [
-                    f"WHEN l.__k{i} IS NULL AND r.__k{i} IS NOT NULL THEN {nl}",
-                    f"WHEN r.__k{i} IS NULL AND l.__k{i} IS NOT NULL THEN {-nl}",
-                    f"WHEN l.__k{i} < r.__k{i} THEN {lt}",
-                    f"WHEN l.__k{i} > r.__k{i} THEN {gt}",
-                ]
-            cmp_sql = "(l, r) -> CASE " + " ".join(cases) + " ELSE 0 END"
-            sorted_vals = (
-                f"transform(array_sort(collect_list(struct({fields})), "
-                f"{cmp_sql}), s -> s.__v)"
-            )
-            if fn == "array_agg":
-                repl = sorted_vals
-            elif fn == "first_value":
-                repl = f"try_element_at({sorted_vals}, 1)"
-            elif fn == "last_value":
-                repl = f"try_element_at({sorted_vals}, -1)"
-            else:  # nth_value(expr, n ORDER BY ...)
-                n_arg = exprs[1] if len(exprs) > 1 else "1"
-                repl = f"try_element_at({sorted_vals}, {n_arg})"
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    return q
-
-
-_SORT_TERMINATORS = frozenset(
-    {
-        "LIMIT",
-        "OFFSET",
-        "ROWS",
-        "RANGE",
-        "GROUPS",
-        "WINDOW",
-        "FETCH",
-        "UNION",
-        "EXCEPT",
-        "INTERSECT",
-        "HAVING",
-        "QUALIFY",
-    }
-)
-
-
-def _add_null_ordering(q: str) -> str:
-    """Make the reference's (Postgres) default sort null-placement explicit:
-    ASC → NULLS LAST, DESC → NULLS FIRST (planner `nulls_first = !asc`).
-    Spark's defaults are the opposite (NULLS FIRST for ASC), which flips
-    both sort output and RANGE-frame membership whenever a sort key is
-    nullable. Applies to every ORDER BY — top-level, window spec, and
-    aggregate-internal — leaving explicit NULLS FIRST/LAST untouched."""
-    pat = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(q, pos)
-        if not m:
-            return q
-        start = m.end()
-        depth = 0
-        j = start
-        end = len(q)
-        while j < len(q):
-            c = q[j]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    end = j
-                    break
-                depth -= 1
-            elif c == ";" and depth == 0:
-                end = j
-                break
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                k = j
-                while k < len(q) and (q[k].isalnum() or q[k] == "_"):
-                    k += 1
-                if q[j:k].upper() in _SORT_TERMINATORS:
-                    end = j
-                    break
-                j = k
-                continue
-            j += 1
-        items = []
-        for it in _split_top_level(q[start:end]):
-            s = it.strip()
-            if not s or re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", s, re.IGNORECASE):
-                items.append(s)
-            elif re.search(r"\bDESC\s*$", s, re.IGNORECASE):
-                items.append(s + " NULLS FIRST")
-            else:
-                items.append(s + " NULLS LAST")
-        seg = " " + ", ".join(items) + " "
-        q = q[:start] + seg + q[end:]
-        pos = start + len(seg)
-
-
-def _epoch_expr(x: str) -> str:
-    """EXTRACT(EPOCH FROM x) / date_part('epoch', x) — Float64 seconds since
-    1970 (date_part.rs): fractional for timestamps, whole days × 86400 for
-    dates. Branch on the runtime type so one rewrite serves both (every
-    branch analyzes for any input type; only the matching one evaluates)."""
-    return (
-        f"(CASE WHEN typeof({x}) = 'date' "
-        f"THEN CAST(unix_date(CAST({x} AS DATE)) AS DOUBLE) * 86400 "
-        f"ELSE unix_micros(CAST({x} AS TIMESTAMP)) / 1E6 END)"
-    )
-
-
-_SUBSECOND_SCALE = {
-    "second": 1, "millisecond": 1000, "microsecond": 1000000,
-    "nanosecond": 1000000000,
-}
-
-
-def _fold_literal_subsecond(arg: str, unit: str, lx: Lexed) -> str | None:
-    """EXTRACT/date_part of (sub)second units from a LITERAL timestamp with
-    FRACTIONAL digits: constant-fold at rewrite time using the text's full
-    precision. date_part.rs keeps nanoseconds; Spark timestamps are µs
-    (§1.2 ns→µs policy), so the runtime path truncates — but here the
-    literal's digits are still in the query text, and the reference's own
-    optimizer constant-folds these expressions too. Returns None when the
-    argument is not a fractional timestamp literal (runtime path applies)."""
-    m = re.fullmatch(rf"(?:TIMESTAMP\s+)?({LIT})", arg.strip(), re.IGNORECASE)
-    if not m:
-        return None
-    raw = lx.string(m.group(1)).strip()
-    tm = re.fullmatch(
-        r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:(\d{2})(?:\.(\d+))"
-        r"(?:Z|[+-]\d{2}:?(?:\d{2})?)?",
-        raw,
-    )
-    if not tm:
-        return None
-    from decimal import Decimal
-
-    secs = Decimal(tm.group(1)) + Decimal("0." + tm.group(2))
-    val = secs * _SUBSECOND_SCALE[unit]
-    if unit == "nanosecond":
-        return f"CAST({int(val)} AS BIGINT)"
-    return f"CAST({format(val.normalize(), 'f')} AS DOUBLE)"
-
-
-def _find_call(q: str, name: str, start: int = 0) -> tuple[int, int, int] | None:
-    """Locate ``name ( ... )`` at word boundary from ``start``; returns
-    (name_start, args_start, close_paren_index) with balanced parens/brackets
-    (string literals must already be shielded)."""
-    m = re.compile(rf"\b{name}\s*\(", re.IGNORECASE).search(q, start)
-    close = _match_paren(q, m.end() - 1) if m else None
-    return None if close is None else (m.start(), m.end(), close)
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
-
-
-def _arrow_type_to_sql(t: str) -> str | None:
-    """Arrow type display name → Spark SQL type, or None when the cast
-    needs an expression wrapper (time types). Raises on Decimal256 > 38."""
-    tl = t.strip().lower()
-    m = re.fullmatch(r"decimal(?:128|256)\(\s*(\d+)\s*,\s*(-?\d+)\s*\)", tl)
-    if m:
-        p, s = int(m.group(1)), int(m.group(2))
-        if p > 38:
-            raise ValueError(
-                f"Decimal256({p}, {s}) exceeds Spark's DECIMAL(38) precision ceiling"
-            )
-        return f"DECIMAL({p},{s})"
-    m = re.fullmatch(r"dictionary\(\s*[^,]+,\s*(.+)\)", tl)
-    if m:  # dictionary encoding is physical; cast to the value type
-        return _arrow_type_to_sql(m.group(1))
-    # List kinds are all ARRAY<T> in Spark (size/offset-width are physical)
-    m = re.fullmatch(r"(?:large)?list\((.+)\)", tl)
-    if m:
-        inner = _arrow_type_to_sql(m.group(1).strip())
-        return f"ARRAY<{inner}>" if inner else None
-    m = re.fullmatch(r"fixedsizelist\(\s*\d+\s*,\s*(.+)\)", tl)
-    if m:
-        inner = _arrow_type_to_sql(m.group(1).strip())
-        return f"ARRAY<{inner}>" if inner else None
-    m = re.fullmatch(r"timestamp\(\s*\w+\s*,\s*none\s*\)", tl)
-    if m:
-        return "TIMESTAMP_NTZ"
-    m = re.fullmatch(r"timestamp\(\s*\w+\s*,\s*some\(.*\)\s*\)", tl)
-    if m:
-        return "TIMESTAMP"
-    return _ARROW_SQL_TYPES.get(tl)
-
-
-_TIME_UNIT_NS_SQL = {"second": 1_000_000_000, "millisecond": 1_000_000,
-                     "microsecond": 1_000, "nanosecond": 1}
-
-
-def _validate_arrow_tz(tz: str) -> None:
-    """Reject timezones arrow's parser rejects (arrow_typeof.slt:338's
-    +25:00 'statement error' golden) — and anything Java's ZoneId would
-    refuse at execution, so the failure is loud and parse-time like the
-    reference's."""
-    m = re.fullmatch(r"[+-](\d{2}):(\d{2})", tz)
-    if m:
-        if int(m.group(1)) > 18 or int(m.group(2)) > 59:
-            raise ValueError(
-                f'Invalid timezone "{tz}": failed to parse timezone'
-            )
-        return
-    try:
-        import zoneinfo
-
-        zoneinfo.ZoneInfo(tz)
-    except Exception:
-        raise ValueError(
-            f'Invalid timezone "{tz}": failed to parse timezone'
-        ) from None
-
-
-def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
-    """arrow_cast(expr, 'Type') → CAST / expression; arrow_typeof(expr) →
-    Arrow-name lookup over typeof(). Runs on a string-shielded query;
-    ``lx`` resolves the shielded type-name literal. ``pfad`` carries the
-    session's sql_parser.parse_float_as_decimal setting (it changes the
-    reference's LITERAL typing, which arrow_typeof resolves statically)."""
-    pos = 0
-    while True:
-        hit = _find_call(q, "arrow_cast", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
-        if len(parts) != 2:
-            pos = a
-            continue
-        expr = parts[0].strip()
-        tlit = parts[1].strip()
-        tname = lx.string(tlit)
-        if tname is None:
-            tname = tlit.strip("'")
-        tm = re.fullmatch(r"time(?:32|64)\(\s*(\w+)\s*\)", tname.strip(), re.IGNORECASE)
-        if tm:
-            factor = _TIME_UNIT_NS_SQL[tm.group(1).lower()]
-            repl = f"(CAST({expr} AS BIGINT) * {factor})"
-        else:
-            sql_type = _arrow_type_to_sql(tname)
-            repl = f"CAST({expr} AS {sql_type})" if sql_type else f"CAST({expr} AS {tname})"
-            # NAMED/OFFSET timezone target (Timestamp(unit, Some("tz"))):
-            # arrow's NTZ→TZ cast is WALL-CLOCK-PRESERVING — the stored
-            # value shifts so the wall time reads the same in the target
-            # zone (cast kernel; arrow_typeof.slt:325-337 goldens) — while
-            # TZ→TZ is instant-preserving (metadata relabel). Spark holds
-            # one session zone (UTC), so the lowering converts the wall
-            # clock to the UTC instant via to_utc_timestamp; the display
-            # zone is absorbed by the instant-keyed slt comparator.
-            # Statically-NTZ sources (string/timestamp literals) convert
-            # directly; other shapes branch on typeof() at runtime (NTZ/
-            # string → wall-preserving, LTZ → instant-preserving).
-            tzs = re.fullmatch(
-                r"timestamp\(\s*\w+\s*,\s*some\(\s*\"([^\"]+)\"\s*\)\s*\)",
-                tname.strip(),
-                re.IGNORECASE,
-            )
-            _int_shape = re.fullmatch(
-                r"[+-]?\d+"
-                r"|\(\s*unix_micros\(.*"
-                # the runtime-typed reinterpret chain (both branches BIGINT)
-                r"|\(+\s*CASE\s+WHEN\s+typeof\(.*unix_micros\(.*"
-                r"|CAST\s*\(.*\s+AS\s+(?:TINYINT|SMALLINT|INT|INTEGER|BIGINT)\s*\)",
-                expr.strip(),
-                re.IGNORECASE | re.DOTALL,
-            )
-            if tzs and not _int_shape:
-                tz = re.sub(
-                    r"^([+-])(\d{2})(?::?(\d{2}))?$",
-                    lambda mm: f"{mm.group(1)}{mm.group(2)}:{mm.group(3) or '00'}",
-                    tzs.group(1).strip(),
-                )
-                if tz.upper() not in ("UTC", "+00:00", "Z"):
-                    _validate_arrow_tz(tz)
-                    wall = f"to_utc_timestamp(CAST({expr} AS TIMESTAMP_NTZ), '{tz}')"
-                    if re.fullmatch(
-                        rf"(?:TIMESTAMP\s+)?{LIT}(?:\s*::\s*TIMESTAMP)?",
-                        expr.strip(),
-                        re.IGNORECASE,
-                    ):
-                        repl = wall
-                    else:
-                        repl = (
-                            f"(CASE WHEN typeof({expr}) IN "
-                            "('string','timestamp_ntz','date') "
-                            f"THEN {wall} ELSE CAST({expr} AS TIMESTAMP) END)"
-                        )
-            # second/millisecond timestamps TRUNCATE to their unit in the
-            # reference (arrow cast); Spark's µs timestamp keeps sub-unit
-            # digits, so a µs-precision source would survive the cast
-            tsm = re.fullmatch(
-                r"timestamp\(\s*(second|millisecond)\s*,.*\)", tname.strip(), re.IGNORECASE
-            )
-            if tsm:
-                unit = tsm.group(1).upper()
-                repl = f"CAST(date_trunc('{unit}', {repl}) AS {sql_type})"
-            # arrow's int→Timestamp(unit) cast REINTERPRETS the integer as
-            # a count of that unit (common/src/scalar — i64 storage value);
-            # Spark's int→TIMESTAMP means SECONDS (and int→TIMESTAMP_NTZ
-            # doesn't analyze at all). A runtime typeof() CASE can't carry
-            # this (Spark analyzes BOTH branches), so the lowering is
-            # static: it fires when the expression's shape proves an
-            # integral type — an integer literal, an explicit integer
-            # CAST, or the `::timestamp::bigint` reinterpret chain lowered
-            # above (whose marker is unix_micros). Other shapes keep the
-            # plain cast (documented §1.2 residual).
-            tsall = re.fullmatch(
-                r"timestamp\(\s*(second|millisecond|microsecond|nanosecond)\s*,.*\)",
-                tname.strip(),
-                re.IGNORECASE,
-            )
-            if tsall and re.fullmatch(
-                r"[+-]?\d+"
-                r"|\(\s*unix_micros\(.*"
-                # the runtime-typed reinterpret chain (both branches BIGINT)
-                r"|\(+\s*CASE\s+WHEN\s+typeof\(.*unix_micros\(.*"
-                r"|CAST\s*\(.*\s+AS\s+(?:TINYINT|SMALLINT|INT|INTEGER|BIGINT)\s*\)",
-                expr.strip(),
-                re.IGNORECASE | re.DOTALL,
-            ):
-                unit_fn = {
-                    "second": "timestamp_seconds(CAST({0} AS BIGINT))",
-                    "millisecond": "timestamp_millis(CAST({0} AS BIGINT))",
-                    "microsecond": "timestamp_micros(CAST({0} AS BIGINT))",
-                    "nanosecond": "timestamp_micros(CAST({0} AS BIGINT) div 1000)",
-                }[tsall.group(1).lower()]
-                repl = f"CAST({unit_fn.format(expr)} AS {sql_type})"
-            # arrow's int→Date32/Date64 cast REINTERPRETS the integer as
-            # days/milliseconds since epoch; Spark's int→DATE cast errors.
-            # typeof() is constant-folded, so the branch costs nothing.
-            dm = re.fullmatch(r"date(32|64)", tname.strip(), re.IGNORECASE)
-            if dm:
-                conv = (
-                    f"date_add(DATE'1970-01-01', CAST({expr} AS INT))"
-                    if dm.group(1) == "32"
-                    else f"CAST(timestamp_millis(CAST({expr} AS BIGINT)) AS DATE)"
-                )
-                repl = (
-                    f"(CASE WHEN typeof({expr}) IN "
-                    "('tinyint','smallint','int','bigint') "
-                    f"THEN {conv} ELSE CAST({expr} AS DATE) END)"
-                )
-        q = q[:s] + repl + q[e + 1:]
-        # re-scan from the replacement start: the EXPR may itself contain
-        # nested arrow_cast calls (group.slt time32 chains)
-        pos = s
-    pos = 0
-    while True:
-        hit = _find_call(q, "arrow_typeof", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
-        # INTEGER LITERAL argument: resolve the reference's literal typing
-        # STATICALLY (sql/planner: all in-range integer literals are Int64
-        # — never Int32 like Spark's parser; i64-overflow → UInt64 when it
-        # fits u64; beyond u64 → Float64 by default, Decimal128(digits, 0)
-        # under sql_parser.parse_float_as_decimal — options.slt:106/134)
-        mint = re.fullmatch(r"[+-]?\d+", expr)
-        if mint:
-            v = int(expr)
-            if -(2**63) <= v < 2**63:
-                tname_lit = "Int64"
-            elif 0 <= v < 2**64:
-                tname_lit = "UInt64"
-            elif pfad:
-                tname_lit = f"Decimal128({len(str(abs(v)))}, 0)"
-            else:
-                tname_lit = "Float64"
-            repl = f"'{tname_lit}'"
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-            continue
-        # exact-name map first; parameterized decimals fall through to a
-        # regexp rename (decimal(p,s) → Decimal128(p, s)); anything else
-        # keeps its Spark name (documented §1.2 display fallback)
-        repl = (
-            f"coalesce(element_at({_TYPEOF_MAP_SQL}, typeof({expr})), "
-            f"regexp_replace(typeof({expr}), "
-            "'^decimal\\\\((\\\\d+),(\\\\d+)\\\\)$', 'Decimal128($1, $2)'))"
-        )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    # NULL-propagating isnan (nans.rs): Spark's builtin returns false on
-    # NULL where the reference returns NULL; a SQL UDF can't shadow a
-    # builtin, so wrap at rewrite time
-    pos = 0
-    while True:
-        hit = _find_call(q, "isnan", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
-        # NB: inner call stays the BUILTIN isnan — Spark defines NaN = NaN
-        # as true, so the x <> x idiom does NOT detect NaN here. The walker
-        # resumes past the replacement, so the inner name is not re-wrapped.
-        repl = f"(CASE WHEN ({expr}) IS NULL THEN NULL ELSE isnan({expr}) END)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    return q
-
-
-def _rewrite_array_literals(q: str) -> str:
-    """Postgres ``array[...]`` literals → Spark ``array(...)`` calls
-    (string literals must already be shielded). Subscripts like
-    ``expr[1]`` are untouched — only the ``array`` keyword form matches."""
-    while True:
-        m = re.search(r"\barray\s*\[", q, re.IGNORECASE)
-        if not m:
-            return q
-        depth, i = 1, m.end()
-        while i < len(q) and depth:
-            if q[i] == "[":
-                depth += 1
-            elif q[i] == "]":
-                depth -= 1
-            i += 1
-        if depth:
-            return q
-        inner = q[m.end():i - 1]
-        q = q[:m.start()] + "array(" + inner + ")" + q[i:]
-
-
-def _rewrite_bracket_literals(q: str) -> str:
-    """Bare ``[1, 2, 3]`` array literals (DuckDB-style, accepted by the
-    reference's parser) → ``array(...)``. A bracket is a LITERAL when it
-    does not follow a value expression (identifier/closing paren/bracket)
-    — otherwise it is a subscript and left for _rewrite_subscripts."""
-    i = 0
-    while i < len(q):
-        if q[i] != "[":
-            i += 1
-            continue
-        j = i - 1
-        while j >= 0 and q[j].isspace():
-            j -= 1
-        if j >= 0 and (q[j].isalnum() or q[j] in f"_)]`{MARK}"):
-            # ... unless the preceding word is a SQL keyword — 'SELECT [1]'
-            # or 'WHEN [..]' introduces a literal, not a subscript base
-            k = j
-            while k >= 0 and (q[k].isalnum() or q[k] == "_"):
-                k -= 1
-            word = q[k + 1 : j + 1].upper()
-            if word not in (
-                "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "AND", "OR",
-                "NOT", "IN", "BY", "ON", "RETURN", "UNION", "ALL",
-                "DISTINCT", "HAVING", "LIMIT", "OFFSET", "AS", "CASE",
-                "BETWEEN", "LIKE", "IS", "VALUES", "SET",
-            ):
-                i += 1
-                continue
-        close = _match_paren(q, i)
-        if close is None:
-            i += 1
-            continue
-        q = q[:i] + "array(" + q[i + 1 : close] + ")" + q[close + 1 :]
-        i += len("array(")
-    return q
-
-
-def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
-    """Rewrite the PostgreSQL-isms DataFusion accepts but Spark SQL rejects.
-
-    Spark 4 already handles ``::`` casts, ``||`` concat, and ANSI intervals,
-    so only a short list remains. The rewrites read the lexed statement's
-    shielded text, so none can touch quoted text; the literals are restored
-    on return.
-    """
-    q = lx.text
-
-    # double-quoted IDENTIFIERS (SQL standard / Postgres — the reference
-    # never treats "..." as a string) → Spark backticks
-    q = re.sub(r'"([^"]*)"', lambda m: f"`{m.group(1)}`", q)
-
-    # a !~ b / a ~* b / a ~ b  →  (NOT) a RLIKE b  (case-insensitive via (?i))
-    if "~" in q:
-        ci = lx.add("'(?i)'")
-        q = re.sub(r"!~\*", f" NOT RLIKE {ci} || ", q)
-        q = re.sub(r"!~", " NOT RLIKE ", q)
-        q = re.sub(r"~\*", f" RLIKE {ci} || ", q)
-        q = re.sub(r"(?<![<>!=\^])~(?!=)", " RLIKE ", q)
-
-    # `interval '5' years|months|hours`: sqlparser-rs does NOT accept
-    # these plural words as interval units — the word becomes a column
-    # ALIAS and the unit-less string parses as SECONDS (interval.slt:40
-    # documents the Postgres-matching quirk: "years is parsed as a column
-    # name"). Spark accepts the plurals as real units, so rewrite to the
-    # reference's parse. (Plural milliseconds/microseconds/nanoseconds ARE
-    # units in sqlparser — untouched.)
-    q = re.sub(
-        rf"\bINTERVAL\s+({LIT})\s+(years|months|hours)\b",
-        r"(INTERVAL \1) AS \2",
-        q,
-        flags=re.IGNORECASE,
-    )
-
-    # operator precedence: the reference parses `^` (XOR) TIGHTER than
-    # `>>`/`<<` (sqlparser-rs PG-style: additive > xor > shift), Spark the
-    # reverse — re-group simple-token xor chains adjacent to a shift so
-    # `d ^ 7 >> 4` evaluates as `(d ^ 7) >> 4` (scalar.slt:1059)
-    _tok = rf"[\w.{MARK}]+"
-    # unary minus binds TIGHTER than ^ in the reference ((-2) ^ 2), so a
-    # clearly-unary leading minus (after an operator / paren / keyword)
-    # goes INSIDE the regrouping parens; Spark also parses the minus
-    # tighter than ^, so the grouped text evaluates identically
-    _pre = (
-        r"(^|[(,=<>+*/%]|\b(?:SELECT|WHEN|THEN|ELSE|AND|OR|WHERE|NOT|IN"
-        r"|VALUES|RETURN)\b)"
-    )
-    q = re.sub(
-        rf"{_pre}(\s*)(-\s*(?:{_tok})(?:\s*\^\s*{_tok})+)\s*(>>|<<)",
-        r"\1\2(\3) \4",
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        rf"((?:{_tok})(?:\s*\^\s*{_tok})+)\s*(>>|<<)", r"(\1) \2", q
-    )
-    q = re.sub(
-        rf"(>>|<<)(\s*)(-?\s*(?:{_tok})(?:\s*\^\s*{_tok})+)(?!\s*\^)",
-        r"\1\2(\3)",
-        q,
-    )
-
-    # (these two loops run BEFORE any internal lowering below —
-    # arrow_typeof/array_to_string emit Java-style regexp_replace text
-    # that must stay on Spark's kernel, not get re-routed)
-    # regexp_replace: the reference replaces the FIRST match unless 'g'
-    # (Postgres), with \1-style backrefs. Keep the replace-all no-backref
-    # form ('g' flag, no backslash in the replacement literal) on Spark's
-    # JVM kernel — that's the hot path (pipeline redaction etc.) — and
-    # route everything else through the session UDF.
-    pos = 0
-    while True:
-        hit = _find_call(q, "regexp_replace", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) == 3:
-            parts.append("''")
-        if len(parts) != 4:
-            pos = e
-            continue
-        rep = lx.literal(parts[2])
-        if (
-            lx.string(parts[3]) == "g"
-            and rep is not None
-            and "\\" not in rep
-            and "$" not in rep
-        ):
-            repl = f"\x02regexp_replace\x02({parts[0]}, {parts[1]}, {parts[2]})"
-        else:
-            repl = (
-                f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
-            )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    q = q.replace("\x02regexp_replace\x02(", "regexp_replace(")
-    # regexp_match → the session UDF (registered by _ensure_macros); the
-    # 2-arg form means "no flags" — pass '' (a NULL flags COLUMN stays
-    # NULL-strict like Postgres)
-    pos = 0
-    while True:
-        hit = _find_call(q, "regexp_match", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) == 2:
-            parts.append("''")
-        if len(parts) != 3:
-            pos = e
-            continue
-        repl = f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-
-
-    # postgres type names — only in cast positions (``::type`` or
-    # ``CAST(x AS type)``), since names like ``text`` are also valid columns
-    # postgres array-type casts FIRST (the [] would otherwise read as a
-    # subscript/literal): ::int[] → ::ARRAY<INT>
-    def _arr_cast(m: "re.Match[str]") -> str:
-        base = _TYPE_MAP.get(m.group(2).lower(), m.group(2))
-        return f"{m.group(1)}ARRAY<{base}>{m.group(3)}"
-
-    q = re.sub(r"(::\s*)(\w+)\s*\[\s*\]()", _arr_cast, q)
-    q = re.sub(r"(\bAS\s+)(\w+)\s*\[\s*\](\s*\))", _arr_cast, q, flags=re.IGNORECASE)
-    for pg, sp in _TYPE_MAP.items():
-        q = re.sub(rf"::\s*{pg}\b", f"::{sp}", q, flags=re.IGNORECASE)
-        q = re.sub(rf"\bAS\s+{pg}\s*\)", f"AS {sp})", q, flags=re.IGNORECASE)
-    # integer→DATE cast: arrow REINTERPRETS the int as days since epoch
-    # (same Date32 rule as arrow_cast above — common/src/scalar handles
-    # Date32 as i32 days); Spark's INT→DATE cast is an analysis error, so
-    # lower the ClickBench-style `x::INT::DATE` chain onto
-    # DATE_FROM_UNIX_DATE, which is exactly days-since-epoch→date
-    q = re.sub(
-        r"((?:`[^`]+`|\w+)(?:\s*\.\s*(?:`[^`]+`|\w+))*"
-        r"|\((?:[^()]|\([^()]*\))*\))"
-        r"\s*::\s*(?:INT|INTEGER|BIGINT|SMALLINT|TINYINT)\s*::\s*DATE\b",
-        r"DATE_FROM_UNIX_DATE(CAST(\1 AS INT))",
-        q,
-        flags=re.IGNORECASE,
-    )
-    # the same reinterpret in CAST spellings (r12 spelling-consistency
-    # probes — one-token-away spellings must not diverge or error):
-    # CAST(CAST(x AS INT) AS DATE), CAST(x::INT AS DATE),
-    # CAST(x AS INT)::DATE
-    _INT_T = r"(?:INT|INTEGER|BIGINT|SMALLINT|TINYINT)"
-    q = re.sub(
-        rf"\bCAST\s*\(\s*CAST\s*\(\s*((?:[^()]|\([^()]*\))*?)\s+AS\s+{_INT_T}"
-        r"\s*\)\s+AS\s+DATE\s*\)",
-        r"DATE_FROM_UNIX_DATE(CAST(\1 AS INT))",
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        r"\bCAST\s*\(\s*((?:`[^`]+`|\w+)(?:\s*\.\s*(?:`[^`]+`|\w+))*"
-        rf"|\((?:[^()]|\([^()]*\))*\))\s*::\s*{_INT_T}\s+AS\s+DATE\s*\)",
-        r"DATE_FROM_UNIX_DATE(CAST(\1 AS INT))",
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        rf"\b(CAST\s*\(\s*(?:[^()]|\([^()]*\))*?\s+AS\s+{_INT_T}\s*\))"
-        r"\s*::\s*DATE\b",
-        r"DATE_FROM_UNIX_DATE(CAST(\1 AS INT))",
-        q,
-        flags=re.IGNORECASE,
-    )
-    # timestamp→integer cast: arrow REINTERPRETS the value as the source
-    # unit's count — a `::timestamp` source is Timestamp(NANOSECOND) in
-    # the reference (string casts default to ns), so `::timestamp::bigint`
-    # is the epoch-ns count; Spark's ts→bigint cast means epoch SECONDS.
-    # An immediately following integer-literal divisor joins the same
-    # rewrite because the reference's bigint/bigint `/` TRUNCATES where
-    # Spark's `/` is fractional (joins.slt test_timestamps_table chains:
-    # ts::timestamp::bigint / 1000 → µs count).
-    def _ts_bigint(m: "re.Match[str]") -> str:
-        ns = f"unix_micros(CAST({m.group(1)} AS TIMESTAMP)) * 1000"
-        return f"({ns} div {m.group(2)})" if m.group(2) else f"({ns})"
-
-    # TIME literal with NANOSECOND-precision fraction (7-9 digits): the
-    # reference types it Time64(Nanosecond) by written precision; Spark's
-    # TIME is capped at µs, which would silently drop the ns digits. The
-    # §1.2 policy maps Time64(ns) COLUMNS to BIGINT ns; for a bare literal
-    # the lossless form is its own Display text (timestamps.slt:452 —
-    # corpus surface is display-only; sub-µs time arithmetic remains
-    # unrepresentable, documented)
-    def _time_ns_lit(m: "re.Match[str]") -> str:
-        text = lx.string(m.group(1))
-        if re.fullmatch(r"\d{1,2}:\d{2}:\d{2}\.\d{7,9}", text):
-            return m.group(1)  # keep only the shielded string literal
-        return m.group(0)
-
-    q = re.sub(rf"\bTIME\s+({LIT})", _time_ns_lit, q, flags=re.IGNORECASE)
-    #   TIMESTAMP '...'::bigint  — the literal is already Timestamp(ns) in
-    #   the reference, so a direct ::bigint is the same ns reinterpret
-    #   (an optional redundant ::timestamp hop joins the match);
-    #   CAST(TIMESTAMP '...' AS BIGINT) — same kernel, CAST spelling.
-    q = re.sub(
-        rf"\bTIMESTAMP\s+({LIT})\s*(?:::\s*TIMESTAMP\s*)?"
-        r"::\s*BIGINT\b(?:\s*/\s*(\d+))?",
-        _ts_bigint,
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        rf"\bCAST\s*\(\s*TIMESTAMP\s+({LIT})\s+AS\s+BIGINT\s*\)()",
-        _ts_bigint,
-        q,
-        flags=re.IGNORECASE,
-    )
-    # generic chain: any source — a shielded string literal, an
-    # identifier, or a parenthesized expression — cast
-    # ::timestamp::bigint.  CAST(<src>::timestamp AS BIGINT) and
-    # CAST(CAST(<src> AS TIMESTAMP) AS BIGINT) are the same shape in CAST
-    # spellings. A string-literal source is statically a ns PARSE; other
-    # sources branch on typeof() at runtime, because arrow's
-    # int→Timestamp(ns) cast REINTERPRETS the integer as ns — so an
-    # INTEGRAL source's ::timestamp::bigint round-trip is the IDENTITY
-    # (src unchanged), not ×10⁹ (the r12 spelling-consistency probe:
-    # `i::timestamp::bigint` must agree with its CAST spelling and with
-    # the reference's reinterpret, for every source type).
-    def _ts_bigint_any(m: "re.Match[str]") -> str:
-        src = m.group(1).strip()
-        if lx.literal(src) is not None:
-            return _ts_bigint(m)
-        # the integral THEN branch routes through STRING because Spark
-        # type-checks BOTH branches at analysis time: a DATE source would
-        # reject a direct DATE→BIGINT cast (DATATYPE_MISMATCH) even
-        # though that branch is never taken — the string round-trip is
-        # analysis-valid for every type and value-identical for integral
-        # sources (r12 advice regression fix)
-        ns = (
-            f"(CASE WHEN typeof({src}) IN "
-            "('tinyint','smallint','int','bigint') "
-            f"THEN CAST(CAST({src} AS STRING) AS BIGINT) "
-            f"ELSE unix_micros(CAST({src} AS TIMESTAMP)) * 1000 END)"
-        )
-        return f"({ns} div {m.group(2)})" if m.group(2) else ns
-
-    _TS_SRC = (
-        rf"({LIT}"
-        r"|(?:`[^`]+`|\w+)(?:\s*\.\s*(?:`[^`]+`|\w+))*"
-        r"|\((?:[^()]|\([^()]*\))*\))"
-    )
-    q = re.sub(
-        _TS_SRC + r"\s*::\s*TIMESTAMP\s*::\s*BIGINT\b(?:\s*/\s*(\d+))?",
-        _ts_bigint_any,
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        r"\bCAST\s*\(\s*" + _TS_SRC + r"\s*::\s*TIMESTAMP\s+AS\s+BIGINT\s*\)()",
-        _ts_bigint_any,
-        q,
-        flags=re.IGNORECASE,
-    )
-    q = re.sub(
-        r"\bCAST\s*\(\s*CAST\s*\(\s*" + _TS_SRC
-        + r"\s+AS\s+TIMESTAMP\s*\)\s+AS\s+BIGINT\s*\)()",
-        _ts_bigint_any,
-        q,
-        flags=re.IGNORECASE,
-    )
-    # bare VARCHAR in cast position: DataFusion's VARCHAR is unbounded
-    # (→ Utf8); Spark 4 requires a length parameter — only the
-    # parameterless spelling is rewritten (VARCHAR(10) stays)
-    q = re.sub(r"::\s*varchar\b(?!\s*\()", "::STRING", q, flags=re.IGNORECASE)
-    q = re.sub(r"\bAS\s+varchar\s*\)", "AS STRING)", q, flags=re.IGNORECASE)
-
-    # digest(x, 'algo') / shaN(x) (functions/src/crypto): binary digests.
-    # Spark's md5/sha1/sha2 return HEX STRINGS — unhex() recovers the
-    # reference's binary return type (slt displays binary as lower-hex,
-    # so round-tripping through hex is exact). blake2 → hashlib UDF;
-    # blake3 → the pure-Python spec implementation (functions/blake3.py).
-    _DIGEST_FORMS = {
-        "md5": "unhex(md5({0}))",
-        "sha1": "unhex(sha1({0}))",
-        "sha224": "unhex(sha2({0}, 224))",
-        "sha256": "unhex(sha2({0}, 256))",
-        "sha384": "unhex(sha2({0}, 384))",
-        "sha512": "unhex(sha2({0}, 512))",
-        "blake2b": "df_blake2({0}, 'blake2b')",
-        "blake2s": "df_blake2({0}, 'blake2s')",
-        "blake3": "df_blake3({0})",
-    }
-    pos = 0
-    while True:
-        hit = _find_call(q, "digest", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
-        algo = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
-        if algo not in _DIGEST_FORMS:
-            pos = e
-            continue
-        repl = _DIGEST_FORMS[algo].format(parts[0].strip())
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    for algo in ("sha224", "sha256", "sha384", "sha512"):
-        pos = 0
-        while True:
-            hit = _find_call(q, algo, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            repl = _DIGEST_FORMS[algo].format(q[a:e])
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-    # to_hex(int): lowercase hex display (functions/src/string/to_hex.rs)
-    pos = 0
-    while True:
-        hit = _find_call(q, "to_hex", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        repl = f"lower(hex({q[a:e]}))"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-
-    # DataFusion's list_* alias spellings → the type-generic Spark builtin
-    # (functions-array registers a list_* alias per array_* udf). Only
-    # aliases whose Spark native has IDENTICAL semantics are renamed —
-    # e.g. list_remove is NOT here (DataFusion removes the first
-    # occurrence; Spark's array_remove removes all).
-    for alias, native in _SQL_LIST_ALIASES.items():
-        q = re.sub(rf"\b{alias}\s*\(", f"{native}(", q, flags=re.IGNORECASE)
-
-    # array_position/list_position: the reference returns NULL when the
-    # element is not found (position.rs) where Spark returns 0; the 3-arg
-    # form searches from a 1-based start index. array_has/list_contains:
-    # the reference returns false for NULL needles and null-containing
-    # no-match arrays (array.slt:4976) where Spark yields NULL. Markers
-    # (\x02) shield the emitted Spark natives from re-rewriting.
-    for fn in ("list_position", "list_indexof", "array_indexof", "array_position"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) == 3:
-                arr, v, f = parts
-                sub = (
-                    f"slice({arr}, {f}, greatest(size({arr}) - ({f}) + 1, 0))"
-                )
-                repl = (
-                    f"(nullif(\x02array_position\x02({sub}, {v}), 0) + ({f}) - 1)"
-                )
-            elif len(parts) == 2:
-                repl = f"nullif(\x02array_position\x02({parts[0]}, {parts[1]}), 0)"
-            else:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    for fn in ("list_contains", "list_has", "array_has"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) != 2:
-                pos = e
-                continue
-            repl = (
-                f"(CASE WHEN ({parts[0]}) IS NULL THEN NULL ELSE "
-                f"coalesce(\x02array_contains\x02({parts[0]}, {parts[1]}), "
-                "false) END)"
-            )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    q = q.replace("\x02array_position\x02(", "array_position(")
-    q = q.replace("\x02array_contains\x02(", "array_contains(")
-
-    # array[...] literals; arrow_cast / arrow_typeof as SQL functions
-    q = _rewrite_array_literals(q)
-    q = _rewrite_bracket_literals(q)
-    q = _rewrite_arrow_calls(q, lx, pfad=pfad)
-
-    # string concat skips NULLs in the reference (Postgres semantics;
-    # string/concat.rs) where Spark's concat propagates them — concat_ws('')
-    # has the reference's behavior. Array concatenation (the list_cat/
-    # array_cat aliases above) was renamed to a marker first so it keeps
-    # Spark's array concat. chr() handles full Unicode code points in the
-    # reference (chr.rs); Spark's wraps at 256 — Java's %c does not.
-    q = re.sub(r"\bconcat\s*\(", "concat_ws('', ", q, flags=re.IGNORECASE)
-    # array concatenation treats NULL inputs as empty in the reference
-    # (array.slt:2811 concatenates around a NULL column); Spark's concat
-    # propagates NULL — coalesce each arg to a typed []
-    marker = "\x02array_concat\x02("
-    s = q.find(marker)
-    while s != -1:
-        o = s + len(marker) - 1
-        c = _match_paren(q, o)
-        if c is None:
-            q = q[:s] + "concat(" + q[o + 1 :]
-            s = q.find(marker)
-            continue
-        parts = [p.strip() for p in _split_top_level(q[o + 1 : c])]
-        inner = "concat(" + ", ".join(
-            f"coalesce({p}, "
-            f"slice(transform(array(1), __i -> try_element_at({p}, 1)), 1, 0))"
-            for p in parts
-        ) + ")"
-        # ALL-NULL inputs concatenate to NULL; any non-NULL treats the
-        # NULL side as empty (array.slt:2799 vs :2811)
-        repl = (
-            f"(CASE WHEN coalesce({', '.join(parts)}) IS NULL THEN NULL "
-            f"ELSE {inner} END)"
-            if len(parts) > 1
-            else inner
-        )
-        q = q[:s] + repl + q[c + 1 :]
-        s = q.find(marker)
-    # chr: full Unicode code point (chr.rs; Spark's char wraps at 256).
-    # Java's %c needs an explicit NULL guard (it would print "null").
-    pos = 0
-    while True:
-        hit = _find_call(q, "chr", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
-        repl = (
-            f"(CASE WHEN ({expr}) IS NULL THEN NULL "
-            f"ELSE format_string('%c', CAST({expr} AS INT)) END)"
-        )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    # dow: the reference follows Postgres (Sunday=0..Saturday=6); Spark's
-    # extract dayofweek is 1-based (Sunday=1)
-    pos = 0
-    while True:
-        hit = _find_call(q, "extract", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        inner = q[a:e]
-        # the unit may be a quoted identifier — EXTRACT("dow" FROM …) —
-        # already converted to backticks by the quote rewrite above
-        msub = re.match(
-            r"\s*[`\"]?(second|millisecond|microsecond|nanosecond)[`\"]?\s+from\s+(.*)$",
-            inner,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if msub:
-            unit = msub.group(1).lower()
-            folded = _fold_literal_subsecond(msub.group(2).strip(), unit, lx)
-            if folded is not None:
-                q = q[:s] + folded + q[e + 1:]
-                pos = s + len(folded)
-                continue
-            if unit == "second":
-                # non-literal: Spark's native extract(second) (µs fraction)
-                pos = e
-                continue
-            # sub-second units (functions/src/datetime/date_part.rs):
-            # fractional seconds scaled — Spark only has second; values
-            # beyond µs resolution are governed by the ns→µs policy
-            scale = {"millisecond": "1000", "microsecond": "1000000",
-                     "nanosecond": "1000000000"}[unit]
-            expr = f"(extract(second FROM {msub.group(2).strip()}) * {scale})"
-            if unit == "nanosecond":
-                # the reference returns an integer nanosecond count
-                expr = f"CAST({expr} AS BIGINT)"
-            q = q[:s] + expr + q[e + 1:]
-            pos = s + len(expr)
-            continue
-        mep = re.match(
-            r"\s*[`\"]?epoch[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
-        )
-        if mep:
-            # epoch (date_part.rs): Float64 seconds since 1970, fractional;
-            # dates count whole days (both branches analyze for any input —
-            # only the matching one evaluates)
-            x = mep.group(1).strip()
-            repl = _epoch_expr(x)
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-            continue
-        m = re.match(
-            r"\s*[`\"]?dow[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
-        )
-        if not m:
-            pos = e
-            continue
-        repl = f"(extract(dayofweek FROM {m.group(1).strip()}) - 1)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    # Interval literal spellings Spark's parser rejects but the reference
-    # accepts (sql/src/expr/value.rs interval parsing): a bare number is
-    # SECONDS ("interval '1'"), units may be fractional ("interval '0.5
-    # minute'"), and a trailing bare number after unit pairs is seconds
-    # ("interval '1 day 1'"). Day-time-only forms rewrite to an exact
-    # DAY TO SECOND literal; year/month forms are left alone (Spark's
-    # year-month interval type can't round-trip through this surface).
-    _DT_UNITS = {
-        "day": 86400.0, "days": 86400.0, "d": 86400.0,
-        "hour": 3600.0, "hours": 3600.0, "h": 3600.0,
-        "minute": 60.0, "minutes": 60.0, "min": 60.0, "mins": 60.0,
-        "second": 1.0, "seconds": 1.0, "sec": 1.0, "secs": 1.0,
-        "millisecond": 1e-3, "milliseconds": 1e-3,
-        "week": 604800.0, "weeks": 604800.0,
-    }
-
-    def _interval_lit(m: "re.Match[str]") -> str:
-        raw = lx.string(m.group(1)).strip()
-        toks = raw.split()
-        total, i, needs_rewrite = 0.0, 0, False
-        while i < len(toks):
-            try:
-                n = float(toks[i])
-            except ValueError:
-                return m.group(0)  # not number-led — leave for Spark
-            if i + 1 < len(toks):
-                unit = toks[i + 1].lower()
-                if unit not in _DT_UNITS:
-                    return m.group(0)  # year/month or unknown — leave
-                total += n * _DT_UNITS[unit]
-                if n != int(n):
-                    needs_rewrite = True  # fractional unit count
-                i += 2
-            else:
-                total += n  # trailing bare number = seconds
-                needs_rewrite = True
-                i += 1
-        if not needs_rewrite or total < 0:
-            return m.group(0)
-        days, rem = divmod(total, 86400.0)
-        hours, rem = divmod(rem, 3600.0)
-        mins, secs = divmod(rem, 60.0)
-        return (
-            f"INTERVAL '{int(days)} {int(hours):02d}:{int(mins):02d}:"
-            f"{secs:09.6f}' DAY TO SECOND"
-        )
-
-    q = re.sub(rf"\binterval\s+({LIT})(?!\s*[A-Za-z])", _interval_lit, q,
-               flags=re.IGNORECASE)
-
-    # encode/decode(x, 'base64'|'hex') (functions/src/encoding/inner.rs):
-    # Spark's builtins of the same name are charset converters — map the
-    # reference's encodings onto base64/hex primitives (hex lowercased to
-    # match Arrow's display). Unknown encoding names fall through to
-    # Spark's error, matching the reference's rejection.
-    for fn, forms in (
-        ("encode", {"base64": "base64({0})", "hex": "lower(hex({0}))"}),
-        ("decode", {"base64": "unbase64({0})", "hex": "unhex({0})"}),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            parts = _split_top_level(q[a:e])
-            enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
-            if enc not in forms:
-                pos = e
-                continue
-            repl = forms[enc].format(parts[0].strip())
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-    # overlay (string/overlay.rs:90): the reference DIVERGES from
-    # Postgres/Spark — when start_pos exceeds the string, the prefix is
-    # DROPPED (overlay('123' placing 'abc' from 4) = 'abc', not '123abc'),
-    # and the 4-arg replace length is min(len, char_length(str)). Rewrite
-    # both the PLACING and comma forms into the reference's exact
-    # composition; NULL in any argument → NULL (the row-wise match arms).
-    pos = 0
-    while True:
-        hit = _find_call(q, "overlay", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        inner = q[a:e]
-        mp = re.match(
-            r"(?is)\s*(.+?)\s+placing\s+(.+?)\s+from\s+(.+?)(?:\s+for\s+(.+?))?\s*$",
-            inner,
-        )
-        if mp:
-            so, c, p, ln = (g.strip() if g else None for g in mp.groups())
-        else:
-            parts = [x.strip() for x in _split_top_level(inner)]
-            if len(parts) not in (3, 4):
-                pos = e
-                continue
-            so, c, p = parts[:3]
-            ln = parts[3] if len(parts) == 4 else None
-        rl = (
-            f"least(CAST({ln} AS BIGINT), char_length({so}))"
-            if ln is not None
-            else f"char_length({c})"
-        )
-        null_guard = f"{so} IS NULL OR {c} IS NULL OR ({p}) IS NULL" + (
-            f" OR ({ln}) IS NULL" if ln is not None else ""
-        )
-        repl = (
-            f"(CASE WHEN {null_guard} THEN CAST(NULL AS STRING) ELSE "
-            f"CONCAT("
-            f"CASE WHEN ({p}) > 1 AND ({p}) - 1 < char_length({so}) "
-            f"THEN substring({so}, 1, CAST(({p}) - 1 AS INT)) ELSE '' END, "
-            f"{c}, "
-            f"CASE WHEN ({p}) + {rl} - 1 < char_length({so}) "
-            f"THEN substring({so}, CAST(({p}) + {rl} AS INT)) ELSE '' END"
-            f") END)"
-        )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_part", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
-        first = parts[0].strip() if parts else ""
-        unit = (lx.string(first) or "").lower()
-        sub = {"millisecond": "1000", "microsecond": "1000000",
-               "nanosecond": "1000000000"}
-        if len(parts) != 2 or unit not in ("dow", "epoch", "second", *sub):
-            pos = e
-            continue
-        arg = parts[1].strip()
-        if unit == "dow":
-            repl = f"(extract(dayofweek FROM {arg}) - 1)"
-        elif unit == "epoch":
-            repl = _epoch_expr(arg)
-        else:
-            repl = _fold_literal_subsecond(arg, unit, lx)
-            if repl is None and unit == "second":
-                # non-literal seconds: Spark's extract is already right
-                pos = e
-                continue
-            if repl is None:
-                repl = f"(extract(second FROM {arg}) * {sub[unit]})"
-                if unit == "nanosecond":
-                    repl = f"CAST({repl} AS BIGINT)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    # mixed NTZ/TZ date_bin coercion (date_bin.rs argument coercion;
-    # timestamps.slt:1673): when the SOURCE argument is TIMESTAMPTZ and
-    # the ORIGIN a plain TIMESTAMP literal, the reference reinterprets the
-    # origin's WALL time as UTC; Spark would parse it in the session zone.
-    # Append an explicit Z to the shielded origin literal — each literal
-    # occurrence has its own shield slot, so the mutation is local. Runs
-    # BEFORE the TIMESTAMPTZ lowering below erases the TZ marker.
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_bin", pos)
-        if hit is None:
-            break
-        _s, a, e = hit
-        pos = e
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 3:
-            continue
-        if not re.search(r"\bTIMESTAMPTZ\b", parts[1], re.IGNORECASE):
-            continue
-        om = re.fullmatch(rf"TIMESTAMP\s+({LIT})", parts[2], re.IGNORECASE)
-        if not om:
-            continue
-        raw = lx.string(om.group(1))
-        if not re.search(r"(?:Z|[+-]\d{2}:?\d{2})\s*$", raw):
-            if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw.strip()):
-                # a date-only literal needs a time part before the offset
-                # suffix or Spark rejects the typed literal
-                lx.replace(om.group(1), quote(f"{raw.strip()} 00:00:00Z"))
-            else:
-                lx.replace(om.group(1), quote(f"{raw}Z"))
-    # TIMESTAMPTZ literals: Spark has no TIMESTAMPTZ typed-literal syntax —
-    # the session is pinned UTC, so a plain TIMESTAMP cast preserves the
-    # instant (offsets in the text are applied by the cast)
-    q = re.sub(
-        rf"\bTIMESTAMPTZ\s+({LIT})", r"CAST(\1 AS TIMESTAMP)", q,
-        flags=re.IGNORECASE,
-    )
-    # date_bin (datetime/date_bin.rs): widen the SQL surface beyond the
-    # fixed-width 3-arg macro — 2-arg form defaults origin to the epoch,
-    # bare string strides coerce to INTERVAL, and month/year strides bin
-    # with the reference's calendar algorithm (date_bin_months_interval:
-    # floor the calendar-month distance to the stride, add to origin with
-    # end-of-month clamping, step back one stride if the bin overshoots).
-    _MONTH_UNITS = {"mon": 1, "month": 1, "months": 1, "year": 12, "years": 12}
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_bin", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) == 2:
-            parts.append("TIMESTAMP '1970-01-01 00:00:00'")
-        if len(parts) != 3:
-            pos = e
-            continue
-        stride, t_arg, o_arg = parts
-        mlit = re.fullmatch(rf"(?:INTERVAL\s+)?({LIT})", stride, re.IGNORECASE)
-        months = None
-        if mlit:
-            raw = lx.string(mlit.group(1)).strip()
-            toks = raw.split()
-            total, i, ok = 0, 0, bool(toks)
-            while ok and i < len(toks):
-                if i + 1 < len(toks) and re.fullmatch(r"-?\d+", toks[i]) and \
-                        toks[i + 1].lower() in _MONTH_UNITS:
-                    total += int(toks[i]) * _MONTH_UNITS[toks[i + 1].lower()]
-                    i += 2
-                else:
-                    ok = False
-            if ok and total == 0:
-                # date_bin.rs:330 — a zero stride is rejected before any
-                # binning; falling through would surface Spark's own (and
-                # differently-worded) error from date_bin(INTERVAL '0 mon')
-                raise ValueError("Execution error: DATE_BIN stride must be non-zero")
-            if ok:
-                months = total
-            elif not stride.upper().startswith("INTERVAL"):
-                stride = f"INTERVAL {mlit.group(1)}"
-        if months:
-            t_c = f"CAST({t_arg} AS TIMESTAMP)"
-            o_c = f"CAST({o_arg} AS TIMESTAMP)"
-            md = f"((year({t_c}) - year({o_c})) * 12 + month({t_c}) - month({o_c}))"
-            if months > 0:
-                # compute_distance floors toward -inf for positive strides
-                d = f"({md} - pmod({md}, {months}))"
-            else:
-                # negative stride: the reference skips the round-down branch
-                # (stride > 1 is false) → truncating remainder, which is
-                # Spark's native % semantics
-                d = f"({md} - ({md} % {months}))"
-            b = f"({o_c} + make_ym_interval(0, CAST({d} AS INT)))"
-            repl = (
-                f"(CASE WHEN {b} > {t_c} "
-                f"THEN {o_c} + make_ym_interval(0, CAST({d} - {months} AS INT)) "
-                f"ELSE {b} END)"
-            )
-        else:
-            repl = f"date_bin({stride}, CAST({t_arg} AS TIMESTAMP), CAST({o_arg} AS TIMESTAMP))"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    # left/right with NEGATIVE n drop |n| chars from the other end in the
-    # reference (Postgres semantics, string/left.rs); Spark returns ''
-    for fn, pos_form, neg_form in (
-        (
-            "left",
-            "left({s}, {n})",
-            "substring({s}, 1, greatest(length({s}) + ({n}), 0))",
-        ),
-        (
-            "right",
-            "right({s}, {n})",
-            "substring({s}, least(-({n}), length({s})) + 1)",
-        ),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = _split_top_level(q[a:e])
-            if len(parts) != 2:
-                pos = e
-                continue
-            sarg, narg = parts[0].strip(), parts[1].strip()
-            repl = (
-                f"(CASE WHEN ({narg}) < 0 THEN "
-                + neg_form.format(s=sarg, n=narg)
-                + " ELSE "
-                + pos_form.format(s=sarg, n=narg)
-                + " END)"
-            )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    # substr/substring with a NEGATIVE OR ZERO literal start follows
-    # Postgres virtual-position semantics in the reference (substr.rs:
-    # positions before 1 exist but hold nothing) — Spark counts negative
-    # starts from the string END. Only statically-negative literals are
-    # rewritten; column/expression starts keep Spark semantics.
-    for fn in ("substr", "substring"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) not in (2, 3) or not re.fullmatch(r"-\d+|0", parts[1]):
-                pos = e
-                continue
-            start = int(parts[1])
-            if len(parts) == 2:
-                repl = f"substring({parts[0]}, 1)"
-            else:
-                # effective length shrinks by the virtual prefix (1 - start)
-                repl = (
-                    f"substring({parts[0]}, 1, "
-                    f"greatest(({parts[2]}) - {1 - start}, 0))"
-                )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    # two-arg ltrim/rtrim/trim: the reference takes (string, chars); Spark's
-    # positional builtins take (trimStr, string) — swap
-    for fn in ("ltrim", "rtrim", "trim"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            parts = _split_top_level(q[a:e])
-            if len(parts) != 2:
-                pos = e
-                continue
-            repl = f"{fn}({parts[1].strip()}, {parts[0].strip()})"
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-
-    # inline VALUES → reference column names (column1..columnN)
-    q = _wrap_values(q)
-    # SQL-surface aggregate spellings Spark names differently
-    for alias, native in (
-        ("var_sample", "var_samp"),
-        ("var_population", "var_pop"),
-        ("var", "var_samp"),
-        ("covar_sample", "covar_samp"),
-        ("covar_population", "covar_pop"),
-        ("covar", "covar_samp"),
-        ("mean", "avg"),
-    ):
-        q = re.sub(rf"\b{alias}\s*\(", f"{native}(", q, flags=re.IGNORECASE)
-    # corr: the reference computes it from POPULATION statistics and returns
-    # 0.0 (not NULL) when either side has zero variance — including a single
-    # pair, where var_pop = 0 (correlation.rs:161). Spark's corr NULLs the
-    # degenerate cases; wrap it. Pairwise-masked stddevs so one-sided NULLs
-    # can't flip the zero-variance test. n>=2 nonzero-variance values are
-    # identical (the (n-1)/n factors cancel in the ratio).
-    pos = 0
-    while True:
-        hit = _find_call(q, "corr", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if (
-            len(parts) != 2
-            or parts[0].upper().startswith("DISTINCT")
-            # window form (corr(...) OVER ...): leave Spark's native corr —
-            # the CASE wrapper is an aggregate-position rewrite only
-            or re.match(r"\s*OVER\b", q[e + 1 :], re.IGNORECASE)
-        ):
-            pos = e
-            continue
-        x, y = parts
-        pair = f"(({x}) IS NOT NULL AND ({y}) IS NOT NULL)"
-        repl = (
-            f"CASE WHEN stddev_pop(CASE WHEN {pair} THEN ({x}) END) = 0 "
-            f"OR stddev_pop(CASE WHEN {pair} THEN ({y}) END) = 0 "
-            f"THEN 0.0 ELSE corr(({x}), ({y})) END"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    # approx_distinct → Spark's HLL++ AT THE REFERENCE'S PRECISION: the
-    # reference's HLL is fixed at 2^14 registers (hyperloglog.rs HLL_P=14,
-    # standard error 1.04/sqrt(16384) = 0.8125%); Spark's default rsd 5%
-    # uses far fewer. Spark derives p = ceil(2·log2(1.106/rsd)) — constant
-    # 1.106, NOT the textbook 1.04 (HyperLogLogPlusPlus.scala) — so
-    # rsd=0.00865 ∈ [1.106/2^7, 1.106/2^6.75) lands p=14 exactly and both
-    # engines run a 16384-register HLL. Small cardinalities land in the
-    # linear-counting regime where both return the EXACT count
-    # (aggregate.slt:1051's golden 100). Residual-bit hash artifacts can
-    # still differ at large cardinalities (ahash vs xxhash64 — documented).
-    pos = 0
-    while True:
-        hit = _find_call(q, "approx_distinct", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        repl = f"approx_count_distinct({q[a:e]}, 0.00865)"
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    # to_timestamp_<unit>: polymorphic in the reference (datetime/
-    # to_timestamp.rs) — integer = unit count since epoch, timestamp/
-    # string = cast TRUNCATED to the unit. The typed SQL-macro form cast
-    # timestamps through BIGINT (= seconds), garbling non-integer args.
-    for fn_name, unit, intconv in (
-        ("to_timestamp_seconds", "SECOND", "timestamp_seconds(CAST({x} AS BIGINT))"),
-        ("to_timestamp_millis", "MILLISECOND", "timestamp_millis(CAST({x} AS BIGINT))"),
-        ("to_timestamp_micros", "MICROSECOND", "timestamp_micros(CAST({x} AS BIGINT))"),
-        ("to_timestamp_nanos", None, "timestamp_micros(CAST({x} AS BIGINT) div 1000)"),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn_name, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) != 1:
-                pos = e
-                continue
-            x = parts[0]
-            ts_form = (
-                f"date_trunc('{unit}', CAST({x} AS TIMESTAMP))"
-                if unit
-                else f"CAST({x} AS TIMESTAMP)"
-            )
-            repl = (
-                f"(CASE WHEN typeof({x}) LIKE 'timestamp%' "
-                f"OR typeof({x}) = 'string' OR typeof({x}) = 'date' "
-                f"THEN {ts_form} ELSE {intconv.format(x=x)} END)"
-            )
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    # math edge semantics (functions/src/math): Rust's ln/log of 0 is
-    # -Infinity and of negatives NaN (Spark: NULL); 1-arg log is BASE 10;
-    # nanvl propagates NULL args; signum(+0) is 1.0
-    def _log_guard(inner: str, x: str) -> str:
-        return (
-            f"(CASE WHEN ({x}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
-            f"WHEN ({x}) < 0 THEN CAST('NaN' AS DOUBLE) "
-            f"ELSE {inner} END)"
-        )
-
-    for fn_name, spark_fn in (
-        ("ln", "ln"), ("log2", "log2"), ("log10", "log10"), ("log", None)
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn_name, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if fn_name == "log":
-                if len(parts) == 1:  # log(x) = log10 in the reference
-                    repl = _log_guard(f"log10({parts[0]})", parts[0])
-                elif len(parts) == 2:
-                    # negative BASE is NaN too (f64::log semantics)
-                    repl = (
-                        f"(CASE WHEN ({parts[0]}) < 0 "
-                        "THEN CAST('NaN' AS DOUBLE) ELSE "
-                        + _log_guard(f"log({parts[0]}, {parts[1]})", parts[1])
-                        + " END)"
-                    )
-                else:
-                    pos = e
-                    continue
-            elif len(parts) == 1:
-                repl = _log_guard(f"{spark_fn}({parts[0]})", parts[0])
-            else:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "nanvl", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        x, y = parts
-        repl = (
-            f"(CASE WHEN ({x}) IS NULL OR ({y}) IS NULL THEN NULL "
-            f"ELSE nanvl({x}, {y}) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "signum", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        x = q[a:e].strip()
-        repl = f"(CASE WHEN ({x}) = 0 THEN CAST(1.0 AS DOUBLE) ELSE sign({x}) END)"
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    # integer-literal division TRUNCATES in the reference (Int64 / Int64
-    # → Int64); Spark's / is always fractional. Only statically-integer
-    # literal pairs are rewritten — column operand types are unknowable
-    # at the text layer (documented §1.2 divergence). A parenthesized
-    # bare literal is the same operand one token away — `(7)/(2)` must
-    # truncate like `7/2` (r12 verdict What's-wrong #2); the lookbehind
-    # keeps `f(7)/(2)` (a CALL result, unknowable type) out of the fold.
-    q = re.sub(
-        r"(?<![\w.])(\(\s*\d+\s*\)|\d+)\s*/\s*(\(\s*\d+\s*\)|\d+)(?![\w.])",
-        r"(\1 div \2)",
-        q,
-    )
-    # DDL/cast type spelling Spark's parser rejects
-    q = re.sub(
-        r"\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b", "TIMESTAMP", q, flags=re.IGNORECASE
-    )
-    # IN ((SELECT ...)) — Spark's parser rejects the doubled parens the
-    # reference accepts around a subquery list
-    pos = 0
-    while True:
-        m = re.compile(r"\bIN\s*\(", re.IGNORECASE).search(q, pos)
-        if m is None:
-            break
-        o = m.end() - 1
-        c = _match_paren(q, o)
-        if c is None:
-            pos = o + 1
-            continue
-        inner = q[o + 1 : c].strip()
-        if (
-            inner.startswith("(")
-            and _match_paren(inner, 0) == len(inner) - 1
-            and re.match(r"\(\s*select\b", inner, re.IGNORECASE)
-        ):
-            q = q[: o + 1] + inner[1:-1] + q[c:]
-        pos = o + 1
-
-    # struct(...) with positional args: the reference names fields c0..cN
-    # (struct.rs); Spark derives col1..colN / source column names
-    pos = 0
-    while True:
-        hit = _find_call(q, "struct", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if (
-            not parts
-            or any(not p or p == "*" or p.endswith(".*") for p in parts)
-            or any(re.search(r"\bAS\s+\w+\s*$", p, re.IGNORECASE) for p in parts)
-        ):
-            pos = e
-            continue
-        repl = (
-            "named_struct("
-            + ", ".join(f"'c{i}', {p}" for i, p in enumerate(parts))
-            + ")"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-
-    # RIGHT SEMI/ANTI JOIN → mirrored LEFT form (Spark has left-only
-    # semi/anti; the relation swap is exactly the reference's planning)
-    q = re.sub(
-        r"\bFROM\s+([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+"
-        r"RIGHT\s+(SEMI|ANTI)\s+JOIN\s+"
-        r"([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+(ON)\b",
-        r"FROM \3 LEFT \2 JOIN \1 \4",
-        q,
-        flags=re.IGNORECASE,
-    )
-    # array_agg KEEPS null elements in the reference (array_agg.rs
-    # accumulates the raw column, nulls included); Spark's collect_list
-    # drops them. DISTINCT form: re-attach one typed NULL when the input
-    # had any. Plain form: collect non-null STRUCT wrappers and unwrap.
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_agg", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        argstr = q[a:e]
-        md = re.match(r"\s*DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
-        if _top_level_order_by(argstr) is not None:
-            pos = e
-            continue
-        if not md:
-            x = argstr.strip()
-            if not x or "*" in x or re.match(r"\s*OVER\b", q[e + 1 :], re.IGNORECASE):
-                # window form: the transform wrapper would detach OVER from
-                # the aggregate — leave Spark's native (null-dropping)
-                pos = e
-                continue
-            repl = f"transform(\x02array_agg\x02(struct(({x}) AS __v)), s -> s.__v)"
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-            continue
-        x = md.group(1).strip()
-        typed_null = f"array(first(CASE WHEN false THEN {x} END))"
-        repl = (
-            f"(CASE WHEN count(*) > count({x}) "
-            f"THEN concat({typed_null}, \x02array_agg\x02(DISTINCT {x})) "
-            f"ELSE \x02array_agg\x02(DISTINCT {x}) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_agg\x02(", "array_agg(")
-    # array_intersect keeps FIRST-array element order in the reference
-    # (set_ops.rs); Spark's hash-based kernel reorders — express as an
-    # order-preserving null-safe filter
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_intersect", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        a1, a2 = parts
-        # the reference's kernel emits the distinct intersection ASCENDING
-        # (array.slt 5455-5482: [false, true], [1, 3], [11, 33])
-        repl = (
-            f"array_sort(filter(array_distinct({a1}), "
-            f"x -> exists({a2}, y -> y <=> x)))"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    # array_append(NULL, v) builds [v] in the reference (array_append.rs
-    # treats a NULL list as empty); Spark propagates the NULL
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_append", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        arr, v = parts
-        repl = (
-            f"(CASE WHEN ({arr}) IS NULL THEN array({v}) "
-            f"ELSE \x02array_append\x02({arr}, {v}) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_append\x02(", "array_append(")
-    # array_remove removes the FIRST occurrence in the reference
-    # (array_remove.rs; Spark's removes all) and accepts NULL needles —
-    # null-safe first-index lookup + splice. array_remove_all IS Spark's.
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_remove_all", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        arr, v = parts
-        # NULL needle keeps the array in the reference; Spark's
-        # array_remove would propagate NULL
-        repl = (
-            f"(CASE WHEN ({v}) IS NULL THEN {arr} "
-            f"ELSE \x02array_remove_all\x02({arr}, {v}) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_remove", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        arr, v = parts
-        p_expr = (
-            f"try_element_at(filter(sequence(1, size({arr})), "
-            f"i -> try_element_at({arr}, i) <=> {v}), 1)"
-        )
-        repl = (
-            # size=0 first: sequence(1, 0) would step BACKWARD to index 0
-            f"(CASE WHEN ({arr}) IS NULL THEN NULL "
-            f"WHEN size({arr}) = 0 THEN {arr} "
-            f"WHEN {p_expr} IS NULL THEN {arr} "
-            f"ELSE concat(slice({arr}, 1, {p_expr} - 1), "
-            f"slice({arr}, {p_expr} + 1, size({arr}) - {p_expr})) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_remove_all\x02(", "array_remove(")
-    # cardinality counts LEAF elements recursively and returns NULL for a
-    # flat empty array (functions-array cardinality.rs — not Spark's size)
-    pos = 0
-    while True:
-        hit = _find_call(q, "cardinality", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 1:
-            pos = e
-            continue
-        x = parts[0]
-        repl = (
-            f"(CASE WHEN typeof({x}) LIKE 'array<array<array%' "
-            f"THEN size(flatten(flatten({x}))) "
-            f"WHEN typeof({x}) LIKE 'array<array%' "
-            f"THEN size(flatten({x})) ELSE nullif(size({x}), 0) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    # functions-array SQL surface (templates mirror the registry)
-    q = _rewrite_array_fns(q)
-    # postfix subscripts: 1-based indexing / inclusive slices
-    q = _rewrite_subscripts(q, lx)
-    # unnest → explode/inline where a Spark generator can express it
-    q = _rewrite_unnest(q)
-    # ordered-set aggregates: agg(expr ORDER BY keys) → sorted collect
-    q = _rewrite_ordered_aggs(q)
-    # ranking/offset window functions: drop frames Spark rejects
-    q = _strip_rank_frames(q)
-    # frame shorthands + narrow-int RANGE keys Spark rejects
-    q = _fix_window_specs(q)
-    # make the reference's (Postgres) default null placement explicit
-    q = _add_null_ordering(q)
-
-    # string-literal column aliases (``AS 'order count'`` — accepted by
-    # the reference's parser) → backticked identifiers
-    q = re.sub(
-        rf"\bAS\s+({LIT})",
-        lambda m: f"AS `{lx.string(m.group(1))}`",
-        q,
-        flags=re.IGNORECASE,
-    )
-    return lx.unshield(q)
 
 
 def _arrow_type_display(dt) -> str:

@@ -190,7 +190,7 @@ def pure_inputs() -> list[dict]:
 
 def rewrite_pure(sql: str, pfad: bool) -> dict:
     """``lex`` → ``_rewrite_sql`` (unshielded) or the error class."""
-    from arrow_datafusion_spark.context import _rewrite_sql
+    from arrow_datafusion_spark.sql.rewrite import _rewrite_sql
     from arrow_datafusion_spark.sql.lex import lex
 
     try:
