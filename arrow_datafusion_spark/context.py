@@ -42,10 +42,11 @@ from arrow_datafusion_spark.session import (
 from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex, quote
 from arrow_datafusion_spark.sql.rewrite import (
     _TYPE_MAP,
-    _find_call,
+    _lower_approx_percentile,
     _match_paren,
     _rewrite_sql,
     _split_top_level,
+    rewrite_calls,
 )
 
 # SQL-macro definitions (Spark 4 SQL UDFs) registered once per session so
@@ -2484,7 +2485,7 @@ class SessionContext:
                     return self.spark.sql(rewritten, args=args)
                 return self.spark.sql(rewritten)
 
-        # the six type-aware rewrites share one lazily-computed schema map
+        # the type-aware rewrites share one lazily-computed schema map
         # (their FROM/JOIN clauses are never edited by any pass, so the
         # map stays valid across passes); each pass still gates on its own
         # trigger regex first, so statements with no rewrite surface pay
@@ -2795,7 +2796,7 @@ class SessionContext:
             names.append(t)
         return names
 
-    def _rewrite_decimal_avg(self, q: str, rmap=None) -> str:
+    def _rewrite_decimal_avg(self, q: str, rmap) -> str:
         """Decimal AVG with the reference's TRUNCATING division
         (functions-aggregate/src/average.rs DecimalAverager: the i128 sum
         is integer-divided by the count, truncating toward zero at result
@@ -2816,36 +2817,27 @@ class SessionContext:
         long before Decimal128 does; such magnitudes keep Spark's avg."""
         if not re.search(r"\bavg\s*\(", q, re.IGNORECASE):
             return q
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         if resolved is None:
             return q
         schema, _ = resolved
         from pyspark.sql.types import DecimalType
-        pos = 0
-        while True:
-            hit = _find_call(q, "avg", pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
+
+        def avg(_fn: str, args: list[str], after: str) -> str | None:
             # windowed / filtered aggregates keep Spark semantics: the
             # CAST(... div ...) form cannot take an OVER or FILTER clause
             # (the truncation emulation exists for the grouped slt form)
-            if re.match(r"\s*(OVER|FILTER)\b", q[e + 1 :], re.IGNORECASE):
-                pos = e
-                continue
-            arg = q[a:e].strip()
+            if re.match(r"\s*(OVER|FILTER)\b", after, re.IGNORECASE):
+                return None
+            arg = ", ".join(args)
             dt = (
                 schema.get(arg.lower())
                 if re.fullmatch(r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg)
                 else None
             )
-            if not isinstance(dt, DecimalType):
-                pos = e
-                continue
+            if not isinstance(dt, DecimalType) or dt.scale + 4 > 19:
+                return None
             p, s = dt.precision, dt.scale
-            if s + 4 > 19:
-                pos = e
-                continue
             scale10 = 10 ** (s + 4)
             # the quotient is cast to DECIMAL(19,0), NOT (38,0): under
             # Spark's precision-cap rule a 38-digit dividend forces the
@@ -2853,16 +2845,15 @@ class SessionContext:
             # very thing this rewrite removes); 19 integer digits leave
             # the capped result scale at 19, so the /10^(s+4) rescale is
             # exact for every s ≤ 15
-            repl = (
+            return (
                 f"CAST(CAST((CAST(SUM({arg}) AS DECIMAL(38,{s})) * {scale10})"
                 f" div COUNT({arg}) AS DECIMAL(19,0)) / {scale10}"
                 f" AS DECIMAL({min(p + 4, 38)},{s + 4}))"
             )
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-        return q
 
-    def _rewrite_decimal_division(self, q: str, lx: Lexed, rmap=None) -> str:
+        return rewrite_calls(q, "avg", avg)
+
+    def _rewrite_decimal_division(self, q: str, lx: Lexed, rmap) -> str:
         """Decimal / decimal division with arrow-rs's result type and
         TRUNCATION (arrow-arith numeric.rs decimal ``Op::Div``: result
         scale s1+4, precision min(p1+s2+4, 38); the i128 quotient of
@@ -2890,7 +2881,7 @@ class SessionContext:
 
         def _schema() -> dict | None:
             if not _schema_memo:
-                resolved = (rmap or self._from_schema_map)(q)
+                resolved = rmap(q)
                 _schema_memo.append(resolved[0] if resolved else None)
             return _schema_memo[0]
 
@@ -3009,7 +3000,7 @@ class SessionContext:
         return None
 
     def _rewrite_deep_array_fns(
-        self, q: str, lx: Lexed, rmap=None
+        self, q: str, lx: Lexed, rmap
     ) -> str:
         """flatten / array_to_string over NESTED arrays, the reference's
         recursive leaf semantics (functions-array flatten.rs flattens
@@ -3026,7 +3017,7 @@ class SessionContext:
             for s in ("flatten", "to_string", "_join", "cardinality", "dims", "length")
         ):
             return q
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         schema = resolved[0] if resolved else None
 
         def flattened(arg: str, times: int) -> str:
@@ -3035,87 +3026,74 @@ class SessionContext:
                 out = f"flatten({out})"
             return out
 
-        for fn, kind in (
-            ("array_to_string", "join"),
-            ("list_to_string", "join"),
-            ("array_join", "join"),
-            ("list_join", "join"),
-            ("flatten", "flatten"),
-            # cardinality counts LEAF elements recursively, NULL for a
-            # flat empty array (functions-array cardinality.rs). The
-            # runtime typeof-CASE fallback (further down the pipeline)
-            # cannot type-check for FLAT inputs — static depth makes
-            # those exact too. Same for array_dims (per-level sizes via a
-            # try_element_at chain) and 2-arg array_length (size along a
-            # dimension): their templates' probe chains fail ANALYSIS on
-            # flat inputs.
-            ("cardinality", "card"),
-            ("array_dims", "dims"),
-            ("list_dims", "dims"),
-            ("array_length", "len"),
-            ("list_length", "len"),
-        ):
-            pos = 0
-            while True:
-                hit = _find_call(q, fn, pos)
-                if hit is None:
-                    break
-                s_i, a, e = hit
-                parts = [p.strip() for p in _split_top_level(q[a:e])]
-                if (
-                    not parts
-                    or (kind in ("card", "dims") and len(parts) != 1)
-                    or (kind == "len" and len(parts) != 2)
-                ):
-                    pos = e
-                    continue
-                d = self._array_arg_depth(parts[0], schema, lx)
-                if d is None or (kind == "join" and d <= 1):
-                    pos = e
-                    continue
-                arg = parts[0]
-                if kind == "join":
-                    parts[0] = flattened(arg, d - 1)
-                    repl = f"{fn}({', '.join(parts)})"
-                elif kind == "card":
-                    # empty OUTER array is NULL at every depth
-                    # (compute_array_dims yields None → cardinality NULL);
-                    # nested-empty like [[]] stays 0
-                    repl = (
-                        f"nullif(size({arg}), 0)"
-                        if d == 1
-                        else (
-                            f"(CASE WHEN size({arg}) = 0 THEN NULL "
-                            f"ELSE size({flattened(arg, d - 1)}) END)"
-                        )
-                    )
-                elif kind == "dims":
-                    chain, sizes = arg, []
-                    for _ in range(d):
-                        sizes.append(f"size({chain})")
-                        chain = f"try_element_at({chain}, 1)"
-                    repl = (
-                        f"(CASE WHEN ({arg}) IS NULL THEN NULL "
-                        f"WHEN size({arg}) = 0 THEN NULL "
-                        f"ELSE array({', '.join(sizes)}) END)"
-                    )
-                elif kind == "len":
-                    dim = parts[1]
-                    chain, whens = arg, []
-                    for k in range(1, d + 1):
-                        whens.append(f"WHEN ({dim}) = {k} THEN size({chain})")
-                        chain = f"try_element_at({chain}, 1)"
-                    # dims past the nesting depth are NULL (length.rs)
-                    repl = f"(CASE {' '.join(whens)} END)"
-                elif d == 1:  # reference flatten(flat) = identity
-                    repl = f"({arg})"
-                else:
-                    repl = flattened(arg, d - 1)
-                q = q[: s_i] + repl + q[e + 1 :]
-                pos = s_i + len(repl)
-        return q
+        def call(fn: str, parts: list[str], _after: str) -> str | None:
+            kind = self._DEEP_ARRAY_FNS[fn]
+            if (kind in ("card", "dims") and len(parts) != 1) or (
+                kind == "len" and len(parts) != 2
+            ):
+                return None
+            d = self._array_arg_depth(parts[0], schema, lx)
+            if d is None or (kind == "join" and d <= 1):
+                return None
+            arg = parts[0]
+            if kind == "join":
+                return f"{fn}({', '.join([flattened(arg, d - 1), *parts[1:]])})"
+            if kind == "card":
+                # empty OUTER array is NULL at every depth
+                # (compute_array_dims yields None → cardinality NULL);
+                # nested-empty like [[]] stays 0
+                if d == 1:
+                    return f"nullif(size({arg}), 0)"
+                return (
+                    f"(CASE WHEN size({arg}) = 0 THEN NULL "
+                    f"ELSE size({flattened(arg, d - 1)}) END)"
+                )
+            if kind == "dims":
+                chain, sizes = arg, []
+                for _ in range(d):
+                    sizes.append(f"size({chain})")
+                    chain = f"try_element_at({chain}, 1)"
+                return (
+                    f"(CASE WHEN ({arg}) IS NULL THEN NULL "
+                    f"WHEN size({arg}) = 0 THEN NULL "
+                    f"ELSE array({', '.join(sizes)}) END)"
+                )
+            if kind == "len":
+                dim = parts[1]
+                chain, whens = arg, []
+                for k in range(1, d + 1):
+                    whens.append(f"WHEN ({dim}) = {k} THEN size({chain})")
+                    chain = f"try_element_at({chain}, 1)"
+                # dims past the nesting depth are NULL (length.rs)
+                return f"(CASE {' '.join(whens)} END)"
+            if d == 1:  # reference flatten(flat) = identity
+                return f"({arg})"
+            return flattened(arg, d - 1)
 
-    def _rewrite_ts_bigint_bare(self, q: str, rmap=None) -> str:
+        return rewrite_calls(q, tuple(self._DEEP_ARRAY_FNS), call)
+
+    # the functions _rewrite_deep_array_fns lowers, by kind. cardinality
+    # counts LEAF elements recursively, NULL for a flat empty array
+    # (functions-array cardinality.rs). The runtime typeof-CASE fallback
+    # (further down the pipeline) cannot type-check for FLAT inputs —
+    # static depth makes those exact too. Same for array_dims (per-level
+    # sizes via a try_element_at chain) and 2-arg array_length (size
+    # along a dimension): their templates' probe chains fail ANALYSIS on
+    # flat inputs.
+    _DEEP_ARRAY_FNS = {
+        "array_to_string": "join",
+        "list_to_string": "join",
+        "array_join": "join",
+        "list_join": "join",
+        "flatten": "flatten",
+        "cardinality": "card",
+        "array_dims": "dims",
+        "list_dims": "dims",
+        "array_length": "len",
+        "list_length": "len",
+    }
+
+    def _rewrite_ts_bigint_bare(self, q: str, rmap) -> str:
         """Bare (hop-less) timestamp→integer cast: ``CAST(t AS BIGINT)``
         / ``t::bigint`` over a column that statically resolves to
         TimestampType lowers to ``unix_micros(t) * 1000`` — the epoch-NS
@@ -3134,7 +3112,7 @@ class SessionContext:
         up = q.upper()
         if "BIGINT" not in up and "::" not in q:
             return q
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         if resolved is None:
             return q
         schema, _ = resolved
@@ -3171,7 +3149,7 @@ class SessionContext:
         )
         return q
 
-    def _rewrite_int_division(self, q: str, rmap=None) -> str:
+    def _rewrite_int_division(self, q: str, rmap) -> str:
         """Integer COLUMN division truncates in the reference (Int64/Int64 →
         Int64, like Rust's `/`); Spark's `/` is always fractional. The
         literal/literal pair is folded in _rewrite_sql; this closes the
@@ -3189,7 +3167,7 @@ class SessionContext:
         statically-typed operand shape)."""
         if "/" not in q:
             return q
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         # unresolvable FROM (or none): columns can't type, but statically
         # integral spellings still rewrite — schema lookups just miss
         schema = resolved[0] if resolved else {}
@@ -3249,7 +3227,7 @@ class SessionContext:
         )
         return pat.sub(repl, q)
 
-    def _rewrite_approx_percentile(self, q: str, lx: Lexed, rmap=None) -> str:
+    def _rewrite_approx_percentile(self, q: str, lx: Lexed, rmap) -> str:
         """approx_percentile_cont / approx_median /
         approx_percentile_cont_with_weight → the faithful t-digest
         aggregate (functions/tdigest.py — the reference's merging-digest
@@ -3287,7 +3265,7 @@ class SessionContext:
         if not getattr(self, "_tdigest_registered", False):
             register_udafs(self.spark)
             self._tdigest_registered = True
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         schema = resolved[0] if resolved else None
         guarded = False  # above the byte cap: native sketch, no collect
         try:
@@ -3308,157 +3286,9 @@ class SessionContext:
         except Exception:
             guarded = False
 
-        def _typed(inner: str, arg: str) -> str:
-            from pyspark.sql.types import (
-                ByteType,
-                FloatType,
-                IntegerType,
-                LongType,
-                ShortType,
-            )
+        return _lower_approx_percentile(q, lx, schema, guarded)
 
-            dt = (
-                schema.get(arg.strip().lower())
-                if schema is not None
-                and re.fullmatch(
-                    r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg.strip()
-                )
-                else None
-            )
-            sql_t = {
-                ByteType: "TINYINT",
-                ShortType: "SMALLINT",
-                IntegerType: "INT",
-                LongType: "BIGINT",
-                FloatType: "FLOAT",
-            }.get(type(dt))
-            return f"CAST({inner} AS {sql_t})" if sql_t else inner
-
-        for fn_name in (
-            "approx_percentile_cont_with_weight",
-            "approx_percentile_cont",
-            "approx_median",
-        ):
-            pos = 0
-            while True:
-                hit = _find_call(q, fn_name, pos)
-                if hit is None:
-                    break
-                s_i, a, e = hit
-                parts = [p.strip() for p in _split_top_level(q[a:e])]
-                if parts and re.match(r"DISTINCT\b", parts[0], re.IGNORECASE):
-                    pos = e  # reference rejects DISTINCT here — let the
-                    continue  # name fall through to Spark's resolver error
-                windowed = re.match(
-                    r"\s*(OVER|FILTER)\b", q[e + 1 :], re.IGNORECASE
-                )
-                if fn_name == "approx_median" and len(parts) == 1:
-                    if windowed:
-                        # the collect_list form can't carry the trailing
-                        # OVER/FILTER clause — exact percentile keeps the
-                        # approximate contract there
-                        repl = f"percentile({parts[0]}, 0.5)"
-                    elif guarded:
-                        repl = (
-                            f"percentile_approx(CAST({parts[0]} AS DOUBLE), "
-                            f"0.5D, 10000)"
-                        )
-                    else:
-                        repl = (
-                            f"tdigest_from_list(collect_list("
-                            f"CAST({parts[0]} AS DOUBLE)), 0.5D, 100)"
-                        )
-                elif fn_name == "approx_percentile_cont" and len(parts) in (2, 3):
-                    if len(parts) == 3 and (
-                        not re.fullmatch(r"\+?\d+", parts[2])
-                        or int(parts[2]) == 0
-                    ):
-                        # approx_percentile_cont.rs:169: the centroid
-                        # budget must be a positive integer LITERAL
-                        # (reject negatives, floats, column references) —
-                        # plan-time error in the reference
-                        raise ValueError(
-                            "approx_percentile_cont: centroid count (third "
-                            "argument) must be a positive integer literal, "
-                            f"got {parts[2]!r}"
-                        )
-                    msize = parts[2] if len(parts) == 3 else "100"
-                    if windowed:
-                        repl = f"percentile({parts[0]}, {parts[1]})"
-                    elif guarded:
-                        repl = (
-                            f"percentile_approx(CAST({parts[0]} AS DOUBLE), "
-                            f"CAST({parts[1]} AS DOUBLE), 10000)"
-                        )
-                    else:
-                        repl = (
-                            f"tdigest_from_list(collect_list("
-                            f"CAST({parts[0]} AS DOUBLE)), "
-                            f"CAST({parts[1]} AS DOUBLE), {msize})"
-                        )
-                elif (
-                    fn_name == "approx_percentile_cont_with_weight"
-                    and len(parts) == 3
-                ):
-                    if windowed or guarded:
-                        # Spark's percentile frequency argument must be a
-                        # positive INTEGRAL type; the reference accepts any
-                        # numeric weight (convert_to_float) — CAST truncates
-                        # fractional weights toward zero (documented trade).
-                        # Above the byte cap this is also the fallback:
-                        # exact percentile's value→count map is bounded by
-                        # DISTINCT values, not group size — no native
-                        # weighted sketch exists in Spark.
-                        repl = (
-                            f"percentile({parts[0]}, {parts[2]}, "
-                            f"CAST({parts[1]} AS BIGINT))"
-                        )
-                    else:
-                        v, w = lx.add("'v'"), lx.add("'w'")
-                        pair = (
-                            f"CASE WHEN ({parts[0]}) IS NOT NULL AND "
-                            f"({parts[1]}) IS NOT NULL THEN named_struct("
-                            f"{v}, CAST({parts[0]} AS DOUBLE), "
-                            f"{w}, CAST({parts[1]} AS DOUBLE)) END"
-                        )
-                        repl = (
-                            f"tdigest_from_list_w(collect_list({pair}), "
-                            f"CAST({parts[2]} AS DOUBLE))"
-                        )
-                else:
-                    pos = e
-                    continue
-                end = e + 1  # one past ')' — extended over trailing clauses
-                if not windowed:
-                    repl = _typed(repl, parts[0])
-                else:
-                    # consume the trailing FILTER (...) / OVER (...) chain
-                    # into the replacement so the input-type cast can wrap
-                    # the WHOLE windowed aggregate — `CAST(f(...) OVER (...)
-                    # AS T)` parses; `CAST(f(...) AS T) OVER (...)` doesn't
-                    while True:
-                        cm = re.match(
-                            r"\s*(?:FILTER|OVER)\s*\(",
-                            q[end:],
-                            re.IGNORECASE,
-                        )
-                        if not cm:
-                            break
-                        close = _match_paren(q, end + cm.end() - 1)
-                        if close is None:
-                            break
-                        end = close + 1
-                    if re.match(r"\s*(OVER|FILTER)\b", q[end:], re.IGNORECASE):
-                        # named-window `OVER w` — can't bound the clause,
-                        # keep the untyped double estimate
-                        repl = repl + q[e + 1 : end]
-                    else:
-                        repl = _typed(repl + q[e + 1 : end], parts[0])
-                q = q[:s_i] + repl + q[end:]
-                pos = s_i + len(repl)
-        return q
-
-    def _rewrite_f32_math(self, q: str, rmap=None) -> str:
+    def _rewrite_f32_math(self, q: str, rmap) -> str:
         """Float32 math kernels. §1.2 widens f32 compute to f64, and the slt
         comparator absorbs that at ≤9 significant digits — but three corpus
         shapes carry f32 artifacts OUTSIDE that window, where the reference
@@ -3493,7 +3323,7 @@ class SessionContext:
 
         schema: dict | None = None
         if re.search(r"\b(round|sqrt)\s*\(", q, re.IGNORECASE):
-            resolved = (rmap or self._from_schema_map)(q)
+            resolved = rmap(q)
             schema = resolved[0] if resolved else None
         if schema is None:
             return q
@@ -3506,39 +3336,23 @@ class SessionContext:
                 and isinstance(schema.get(tok.lower()), FloatType)
             )
 
-        for fn in ("round", "sqrt"):
-            pos = 0
-            while True:
-                hit = _find_call(q, fn, pos)
-                if hit is None:
-                    break
-                s_i, a, e = hit
-                args = [t.strip() for t in _split_top_level(q[a:e])]
-                maxargs = 1 if fn == "sqrt" else 2
-                if not args or not _float_col(args[0]) or len(args) > maxargs:
-                    # resume from the args start, NOT past the closing
-                    # paren: a same-named call nested in the rejected
-                    # call's arguments (round(abs(round(c1, 2)))) must
-                    # still be visited
-                    pos = a
-                    continue
-                if fn == "sqrt":
-                    repl = f"CAST(SQRT({args[0]}) AS FLOAT)"
-                else:
-                    sc = args[1] if len(args) == 2 else "0"
-                    if not re.fullmatch(r"\d|10", sc):
-                        pos = a  # non-literal / out-of-range scale: Spark
-                        continue
-                    p10 = 10 ** int(sc)
-                    repl = (
-                        f"CAST(ROUND(CAST({args[0]} * CAST({p10} AS FLOAT) "
-                        f"AS FLOAT), 0) / {p10} AS FLOAT)"
-                    )
-                q = q[:s_i] + repl + q[e + 1 :]
-                pos = s_i + len(repl)
-        return q
+        def call(fn: str, args: list[str], _after: str) -> str | None:
+            if not _float_col(args[0]) or len(args) > (1 if fn == "sqrt" else 2):
+                return None
+            if fn == "sqrt":
+                return f"CAST(SQRT({args[0]}) AS FLOAT)"
+            sc = args[1] if len(args) == 2 else "0"
+            if not re.fullmatch(r"\d|10", sc):
+                return None  # non-literal / out-of-range scale: Spark
+            p10 = 10 ** int(sc)
+            return (
+                f"CAST(ROUND(CAST({args[0]} * CAST({p10} AS FLOAT) "
+                f"AS FLOAT), 0) / {p10} AS FLOAT)"
+            )
 
-    def _rewrite_tz_date_trunc(self, q: str, lx: Lexed, rmap=None) -> str:
+        return rewrite_calls(q, ("round", "sqrt"), call)
+
+    def _rewrite_tz_date_trunc(self, q: str, lx: Lexed, rmap) -> str:
         """Zone-aware date_trunc over NAMED-TZ columns (timestamps.slt
         #8899 battery; datetime/date_trunc.rs truncates in the value's own
         time zone): when the argument column's view declared a
@@ -3556,20 +3370,14 @@ class SessionContext:
             r"\bdate_trunc\s*\(", q, re.IGNORECASE
         ):
             return q
-        got = rmap(q) if rmap else None
+        got = rmap(q)
         if not got:
             return q
         _, tables = got
-        pos = 0
-        while True:
-            hit = _find_call(q, "date_trunc", pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
+
+        def call(_fn: str, parts: list[str], _after: str) -> str | None:
             if len(parts) != 2:
-                pos = e
-                continue
+                return None
             unit = (lx.string(parts[0]) or "").lower()
             mcol = re.fullmatch(
                 r"(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)", parts[1]
@@ -3577,26 +3385,22 @@ class SessionContext:
             if unit not in ("day", "week", "month", "quarter", "year") or (
                 mcol is None
             ):
-                pos = e
-                continue
+                return None
             col = mcol.group(2).lower()
             tzs = {
                 self._column_tz.get(t.lower(), {}).get(col) for t in tables
             } - {None}
             if len(tzs) != 1:
-                pos = e
-                continue
-            tz = next(iter(tzs))
-            tz_lit = lx.add(quote(tz))
-            repl = (
+                return None
+            tz_lit = lx.add(quote(next(iter(tzs))))
+            return (
                 f"to_utc_timestamp(date_trunc({parts[0]}, "
                 f"from_utc_timestamp({parts[1]}, {tz_lit})), {tz_lit})"
             )
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-        return q
 
-    def _rewrite_median(self, q: str, rmap=None) -> str:
+        return rewrite_calls(q, "date_trunc", call)
+
+    def _rewrite_median(self, q: str, rmap) -> str:
         """Type-preserving exact median (median.rs calculate_median): the
         reference returns the INPUT type — for an even count the two middle
         values are averaged in the native type's arithmetic, i.e.
@@ -3625,7 +3429,7 @@ class SessionContext:
         instead of truncating — the documented trade at scale."""
         if not re.search(r"\bmedian\s*\(", q, re.IGNORECASE):
             return q
-        resolved = (rmap or self._from_schema_map)(q)
+        resolved = rmap(q)
         if resolved is None:
             return q
         schema, tables = resolved
@@ -3642,21 +3446,14 @@ class SessionContext:
             return q
         from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
 
-        pos = 0
-        while True:
-            hit = _find_call(q, "median", pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            if re.match(r"\s*(OVER|FILTER)\b", q[e + 1 :], re.IGNORECASE):
-                pos = e
-                continue
-            argstr = q[a:e].strip()
+        def call(_fn: str, args: list[str], after: str) -> str | None:
+            if re.match(r"\s*(OVER|FILTER)\b", after, re.IGNORECASE):
+                return None
+            argstr = ", ".join(args)
             md = re.match(r"DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
             x = (md.group(1) if md else argstr).strip()
             if not re.fullmatch(r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", x):
-                pos = e
-                continue
+                return None
             dtype = schema.get(x.lower())
             collect = "collect_set" if md else "collect_list"
             A = f"array_sort({collect}({x}))"
@@ -3679,16 +3476,14 @@ class SessionContext:
                 )
                 even = f"CAST(CAST(({u} div 2) AS DECIMAL(38,{s_})) / {scale_f} AS {t})"
             else:
-                pos = e
-                continue
-            repl = (
+                return None
+            return (
                 f"(CASE WHEN size({A}) = 0 THEN CAST(NULL AS {t}) "
                 f"WHEN size({A}) % 2 = 1 THEN CAST({m2} AS {t}) "
                 f"ELSE CAST({even} AS {t}) END)"
             )
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-        return q
+
+        return rewrite_calls(q, "median", call)
 
     def _sql_copy_to(self, lx: Lexed, args=None) -> DataFrame:
         """``COPY (query | table) TO 'path' [STORED AS fmt]`` →  df.write.

@@ -1,12 +1,33 @@
 """The rewrite layer of the SQL front end: the PostgreSQL-isms DataFusion
 accepts but Spark SQL rejects, rewritten over a lexed statement's shielded
 text (``sql/lex.py``) before ``SessionContext`` hands it to ``spark.sql``.
-``_rewrite_sql`` is the entry point.
+``_rewrite_sql`` is the entry point; ``SessionContext``'s schema-reading
+passes run before it and use the same call rewriter.
+
+This module is the only one that finds and replaces function calls.
+``rewrite_calls(q, names, fn)`` is the primitive, and its contract is:
+
+- **one scan**: a single left-to-right pass finds the calls of any of
+  ``names`` (word boundary, case-insensitive, balanced parens);
+- **bottom-up**: a call's arguments are rewritten before the call
+  itself, so a call nested in a call of the same function is rewritten
+  at every depth, as the reference's analyzer rewrites expression trees
+  bottom-up (datafusion/optimizer/src/analyzer/mod.rs:90-94);
+- **emitted text is never rescanned**: a replacement may contain a call
+  of a name it handles (``array_append`` lowers onto Spark's own
+  ``array_append``) and the scan resumes after it.
+
+A pass whose rewrite must see another function's output runs as its own
+``rewrite_calls`` step after it; the step order in ``_rewrite_sql`` is
+behaviour. Three scans still use ``_find_call``, because they read or
+edit text outside the call's own span; each says so where it calls it.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from functools import lru_cache
 
 from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, quote
 
@@ -40,12 +61,11 @@ _SQL_LIST_ALIASES = {
     "list_append": "array_append",
     "list_prepend": "array_prepend",
     "list_join": "array_join",
-    # array concatenation is Spark's concat(); the marker shields it from
-    # the string-concat → concat_ws rewrite below, and is renamed back after
-    "list_cat": "\x02array_concat\x02",
-    "list_concat": "\x02array_concat\x02",
-    "array_cat": "\x02array_concat\x02",
-    "array_concat": "\x02array_concat\x02",
+    # array concatenation is Spark's concat(), lowered from array_concat
+    # after the string-concat → concat_ws rewrite below
+    "list_cat": "array_concat",
+    "list_concat": "array_concat",
+    "array_cat": "array_concat",
     "make_list": "array",
     # non-list simple renames sharing the same swap mechanism
     "starts_with": "startswith",
@@ -174,6 +194,7 @@ def _strip_rank_frames(q: str) -> str:
     for fn in _FRAMELESS_WINDOW_FNS:
         pos = 0
         while True:
+            # edits the OVER (...) spec after the call, not the call itself
             hit = _find_call(q, fn, pos)
             if hit is None:
                 break
@@ -340,7 +361,7 @@ def _t_generate_series(p):
 
 
 def _t_has_all(p):
-    return f"(size(array_except({p[1]}, {p[0]})) = 0)"
+    return f"(size({_t_except([p[1], p[0]])}) = 0)"
 
 
 def _t_has_any(p):
@@ -426,13 +447,15 @@ def _t_array_to_string(p):
     # additionally joins the LEAVES of nested arrays; a CASE over nesting
     # depth cannot type-check in Spark (branches would differ in type), so
     # nested inputs remain a documented partial.
-    a, sep = p[0], p[1]
-    elems = (
+    tail = f", {p[2]}" if len(p) > 2 else ""
+    return f"array_join({_t_display(p[0])}, {p[1]}{tail})"
+
+
+def _t_display(a):
+    return (
         f"transform({a}, __x -> regexp_replace(CAST(__x AS STRING), "
         "'^(-?\\\\d+)\\\\.0$', '$1'))"
     )
-    tail = f", {p[2]}" if len(p) > 2 else ""
-    return f"array_join({elems}, {sep}{tail})"
 
 
 def _t_dims(p):
@@ -475,99 +498,54 @@ def _t_empty(p):
 # SQL-callable surface for the functions-array family the DataFrame
 # registry already implements (§2.9) — each template mirrors the
 # registry's semantics (1-based, NULL out-of-range, first-occurrence).
+# name → (accepted argument counts, template)
 _ARRAY_FN_TEMPLATES = {
-    "array_element": _t_element,
-    "array_extract": _t_element,
-    "list_extract": _t_element,
-    "list_element": _t_element,
-    "array_slice": _t_slice,
-    "list_slice": _t_slice,
-    "array_pop_back": _t_pop_back,
-    "list_pop_back": _t_pop_back,
-    "array_pop_front": _t_pop_front,
-    "list_pop_front": _t_pop_front,
-    "range": _t_range,
-    "generate_series": _t_generate_series,
-    "array_has_all": _t_has_all,
-    "list_has_all": _t_has_all,
-    "array_has_any": _t_has_any,
-    "list_has_any": _t_has_any,
-    "array_resize": _t_resize,
-    "list_resize": _t_resize,
-    "array_positions": _t_positions,
-    "list_positions": _t_positions,
-    "array_replace": lambda p: _t_replace_n(p, n="1"),
-    "list_replace": lambda p: _t_replace_n(p, n="1"),
-    "array_replace_n": _t_replace_n,
-    "list_replace_n": _t_replace_n,
-    "array_replace_all": _t_replace_all,
-    "list_replace_all": _t_replace_all,
-    "array_remove_n": _t_remove_n,
-    "list_remove_n": _t_remove_n,
-    "array_dims": _t_dims,
-    "list_dims": _t_dims,
-    "array_ndims": _t_ndims,
-    "list_ndims": _t_ndims,
-    "array_length": _t_length,
-    "list_length": _t_length,
-    "array_empty": _t_empty,
-    "list_empty": _t_empty,
-    "empty": _t_empty,
-    "array_reverse": lambda p: f"reverse({p[0]})",
-    "array_distinct": _t_distinct,
-    "array_except": _t_except,
-    "array_to_string": _t_array_to_string,
-    "array_join": _t_array_to_string,
-    "list_to_string": _t_array_to_string,
-    "list_join": _t_array_to_string,
+    name: (arities, template)
+    for names, arities, template in (
+        (("array_element", "array_extract", "list_extract", "list_element"),
+         (2,), _t_element),
+        (("array_slice", "list_slice"), (3,), _t_slice),
+        (("array_pop_back", "list_pop_back"), (1,), _t_pop_back),
+        (("array_pop_front", "list_pop_front"), (1,), _t_pop_front),
+        (("range",), (1, 2, 3), _t_range),
+        (("generate_series",), (2, 3), _t_generate_series),
+        (("array_has_all", "list_has_all"), (2,), _t_has_all),
+        (("array_has_any", "list_has_any"), (2,), _t_has_any),
+        (("array_resize", "list_resize"), (2, 3), _t_resize),
+        (("array_positions", "list_positions"), (2,), _t_positions),
+        (("array_replace", "list_replace"), (3,), lambda p: _t_replace_n(p, n="1")),
+        (("array_replace_n", "list_replace_n"), (4,), _t_replace_n),
+        (("array_replace_all", "list_replace_all"), (3,), _t_replace_all),
+        (("array_remove_n", "list_remove_n"), (3,), _t_remove_n),
+        (("array_dims", "list_dims"), (1,), _t_dims),
+        (("array_ndims", "list_ndims"), (1,), _t_ndims),
+        (("array_length", "list_length"), (1, 2), _t_length),
+        (("array_empty", "list_empty", "empty"), (1,), _t_empty),
+        (("array_reverse",), (1,), lambda p: f"reverse({p[0]})"),
+        (("array_distinct",), (1,), _t_distinct),
+        (("array_except",), (2,), _t_except),
+        # lowered onto array_join's template, which formats the elements
+        # a second time (a no-op on already-formatted text)
+        (("array_to_string",), (2, 3),
+         lambda p: _t_array_to_string([_t_display(p[0]), *p[1:]])),
+        (("array_join", "list_to_string", "list_join"), (2, 3), _t_array_to_string),
+    )
+    for name in names
 }
-
-_ARRAY_FN_ARITY = {
-    "array_element": (2,), "array_extract": (2,), "list_extract": (2,),
-    "list_element": (2,),
-    "array_slice": (3,), "list_slice": (3,),
-    "array_pop_back": (1,), "list_pop_back": (1,),
-    "array_pop_front": (1,), "list_pop_front": (1,),
-    "range": (1, 2, 3), "generate_series": (2, 3),
-    "array_has_all": (2,), "list_has_all": (2,),
-    "array_has_any": (2,), "list_has_any": (2,),
-    "array_resize": (2, 3), "list_resize": (2, 3),
-    "array_positions": (2,), "list_positions": (2,),
-    "array_replace": (3,), "list_replace": (3,),
-    "array_replace_n": (4,), "list_replace_n": (4,),
-    "array_replace_all": (3,), "list_replace_all": (3,),
-    "array_remove_n": (3,), "list_remove_n": (3,),
-    "array_dims": (1,), "list_dims": (1,),
-    "array_ndims": (1,), "list_ndims": (1,),
-    "array_length": (1, 2), "list_length": (1, 2),
-    "array_empty": (1,), "list_empty": (1,), "empty": (1,),
-    "array_reverse": (1,),
-    "array_distinct": (1,), "array_except": (2,),
-    "array_to_string": (2, 3), "array_join": (2, 3),
-    "list_to_string": (2, 3), "list_join": (2, 3),
-}
+_ARRAY_FNS = tuple(_ARRAY_FN_TEMPLATES)
 
 
 def _rewrite_array_fns(q: str) -> str:
-    for fn, tmpl in _ARRAY_FN_TEMPLATES.items():
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) not in _ARRAY_FN_ARITY[fn]:
-                pos = e
-                continue
-            try:
-                repl = tmpl(parts)
-            except Exception:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    return q
+    def call(fn: str, parts: list[str], _after: str) -> str | None:
+        arities, template = _ARRAY_FN_TEMPLATES[fn]
+        if len(parts) not in arities:
+            return None
+        try:
+            return template(parts)
+        except Exception:
+            return None
+
+    return rewrite_calls(q, _ARRAY_FNS, call)
 
 
 def _rewrite_subscripts(q: str, lx: Lexed) -> str:
@@ -708,6 +686,8 @@ def _rewrite_unnest(q: str) -> str:
         q = q[: m.start()] + repl + q[c + 1 :]
         pos = m.start() + len(repl)
     if len(re.findall(r"\bunnest\s*\(", q, re.IGNORECASE)) == 1:
+        # decided by the text before the call, which rewrite_calls does
+        # not see
         hit = _find_call(q, "unnest", 0)
         if hit is not None:
             s_i, a, e = hit
@@ -745,78 +725,67 @@ def _rewrite_ordered_aggs(q: str) -> str:
     with a comparator encoding each key's direction and null placement,
     project the values. first/last/nth are element lookups on the sorted
     array (try_element_at: out-of-range → NULL)."""
-    for fn in _ORDERED_AGG_FNS:
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            if re.match(
-                r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?(?:OVER|WITHIN)\b",
-                q[e + 1 :],
-                re.IGNORECASE,
-            ):
-                pos = e
-                continue  # window/WITHIN-GROUP form, not the agg-arg form
-            argstr = q[a:e]
-            ob = _top_level_order_by(argstr)
-            if ob is None:
-                pos = e
+
+    def call(fn: str, args: list[str], after: str) -> str | None:
+        if re.match(
+            r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?(?:OVER|WITHIN)\b",
+            after,
+            re.IGNORECASE,
+        ):
+            return None  # window/WITHIN-GROUP form, not the agg-arg form
+        argstr = ", ".join(args)
+        ob = _top_level_order_by(argstr)
+        if ob is None:
+            return None
+        head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
+        if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
+            return None
+        exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
+        if not exprs:
+            return None
+        keys = []
+        for it in (x.strip() for x in _split_top_level(sortseg)):
+            if not it:
                 continue
-            head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
-            if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
-                pos = e
-                continue
-            exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
-            if not exprs:
-                pos = e
-                continue
-            keys = []
-            for it in (x.strip() for x in _split_top_level(sortseg)):
-                if not it:
-                    continue
-                mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
-                nulls = mnf.group(1).upper() if mnf else None
-                core = it[: mnf.start()].strip() if mnf else it
-                md = re.search(r"\b(ASC|DESC)\s*$", core, re.IGNORECASE)
-                desc = bool(md and md.group(1).upper() == "DESC")
-                core = core[: md.start()].strip() if md else core
-                if nulls is None:  # Postgres default: ASC→LAST, DESC→FIRST
-                    nulls = "FIRST" if desc else "LAST"
-                keys.append((core, desc, nulls))
-            val = exprs[0]
-            fields = ", ".join(
-                [f"({val}) AS __v"]
-                + [f"({k[0]}) AS __k{i}" for i, k in enumerate(keys)]
-            )
-            cases = []
-            for i, (_kx, desc, nulls) in enumerate(keys):
-                nl = -1 if nulls == "FIRST" else 1
-                lt, gt = (1, -1) if desc else (-1, 1)
-                cases += [
-                    f"WHEN l.__k{i} IS NULL AND r.__k{i} IS NOT NULL THEN {nl}",
-                    f"WHEN r.__k{i} IS NULL AND l.__k{i} IS NOT NULL THEN {-nl}",
-                    f"WHEN l.__k{i} < r.__k{i} THEN {lt}",
-                    f"WHEN l.__k{i} > r.__k{i} THEN {gt}",
-                ]
-            cmp_sql = "(l, r) -> CASE " + " ".join(cases) + " ELSE 0 END"
-            sorted_vals = (
-                f"transform(array_sort(collect_list(struct({fields})), "
-                f"{cmp_sql}), s -> s.__v)"
-            )
-            if fn == "array_agg":
-                repl = sorted_vals
-            elif fn == "first_value":
-                repl = f"try_element_at({sorted_vals}, 1)"
-            elif fn == "last_value":
-                repl = f"try_element_at({sorted_vals}, -1)"
-            else:  # nth_value(expr, n ORDER BY ...)
-                n_arg = exprs[1] if len(exprs) > 1 else "1"
-                repl = f"try_element_at({sorted_vals}, {n_arg})"
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    return q
+            mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
+            nulls = mnf.group(1).upper() if mnf else None
+            core = it[: mnf.start()].strip() if mnf else it
+            md = re.search(r"\b(ASC|DESC)\s*$", core, re.IGNORECASE)
+            desc = bool(md and md.group(1).upper() == "DESC")
+            core = core[: md.start()].strip() if md else core
+            if nulls is None:  # Postgres default: ASC→LAST, DESC→FIRST
+                nulls = "FIRST" if desc else "LAST"
+            keys.append((core, desc, nulls))
+        val = exprs[0]
+        fields = ", ".join(
+            [f"({val}) AS __v"]
+            + [f"({k[0]}) AS __k{i}" for i, k in enumerate(keys)]
+        )
+        cases = []
+        for i, (_kx, desc, nulls) in enumerate(keys):
+            nl = -1 if nulls == "FIRST" else 1
+            lt, gt = (1, -1) if desc else (-1, 1)
+            cases += [
+                f"WHEN l.__k{i} IS NULL AND r.__k{i} IS NOT NULL THEN {nl}",
+                f"WHEN r.__k{i} IS NULL AND l.__k{i} IS NOT NULL THEN {-nl}",
+                f"WHEN l.__k{i} < r.__k{i} THEN {lt}",
+                f"WHEN l.__k{i} > r.__k{i} THEN {gt}",
+            ]
+        cmp_sql = "(l, r) -> CASE " + " ".join(cases) + " ELSE 0 END"
+        sorted_vals = (
+            f"transform(array_sort(collect_list(struct({fields})), "
+            f"{cmp_sql}), s -> s.__v)"
+        )
+        if fn == "array_agg":
+            return sorted_vals
+        if fn == "first_value":
+            return f"try_element_at({sorted_vals}, 1)"
+        if fn == "last_value":
+            return f"try_element_at({sorted_vals}, -1)"
+        n_arg = exprs[1] if len(exprs) > 1 else "1"  # nth_value(expr, n ORDER BY ...)
+        return f"try_element_at({sorted_vals}, {n_arg})"
+
+    return rewrite_calls(q, _ORDERED_AGG_FNS, call)
 
 
 _SORT_TERMINATORS = frozenset(
@@ -939,10 +908,52 @@ def _fold_literal_subsecond(arg: str, unit: str, lx: Lexed) -> str | None:
 def _find_call(q: str, name: str, start: int = 0) -> tuple[int, int, int] | None:
     """Locate ``name ( ... )`` at word boundary from ``start``; returns
     (name_start, args_start, close_paren_index) with balanced parens/brackets
-    (string literals must already be shielded)."""
+    (string literals must already be shielded). Only for the scans that
+    edit text outside the call itself; everything else uses rewrite_calls."""
     m = re.compile(rf"\b{name}\s*\(", re.IGNORECASE).search(q, start)
     close = _match_paren(q, m.end() - 1) if m else None
     return None if close is None else (m.start(), m.end(), close)
+
+
+CallRewrite = Callable[[str, list[str], str], "str | None"]
+
+
+@lru_cache(maxsize=128)
+def _call_pattern(names: tuple[str, ...]) -> re.Pattern:
+    return re.compile(rf"\b({'|'.join(names)})\s*\(", re.IGNORECASE)
+
+
+def rewrite_calls(q: str, names: str | tuple[str, ...], fn: CallRewrite) -> str:
+    """Rewrite every call of the functions ``names`` in shielded text
+    (see the module docstring): ``fn(name, args, after)`` gets the
+    lower-cased name, the stripped top-level arguments (already rewritten)
+    and the text after the closing paren, and returns the replacement for
+    the whole call, or None to keep it."""
+    pat = _call_pattern((names,) if isinstance(names, str) else names)
+    if pat.search(q) is None:
+        return q
+    return _rewrite_span(q, 0, len(q), pat, fn)
+
+
+def _rewrite_span(q: str, start: int, end: int, pat: re.Pattern, fn: CallRewrite) -> str:
+    out, pos = [], start
+    while (m := pat.search(q, pos, end)) is not None:
+        close = _match_paren(q, m.end() - 1)
+        if close is None:  # unbalanced: not a call, but its text may hold some
+            out.append(q[pos : m.end()])
+            pos = m.end()
+            continue
+        args = _rewrite_span(q, m.end(), close, pat, fn)
+        repl = fn(
+            m.group(1).lower(),
+            [a.strip() for a in _split_top_level(args)],
+            q[close + 1 :],
+        )
+        out.append(q[pos : m.start()])
+        out.append(q[m.start() : m.end()] + args + ")" if repl is None else repl)
+        pos = close + 1
+    out.append(q[pos:end])
+    return "".join(out)
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -1026,16 +1037,11 @@ def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
     ``lx`` resolves the shielded type-name literal. ``pfad`` carries the
     session's sql_parser.parse_float_as_decimal setting (it changes the
     reference's LITERAL typing, which arrow_typeof resolves statically)."""
-    pos = 0
-    while True:
-        hit = _find_call(q, "arrow_cast", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
+
+    def cast(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 2:
-            pos = a
-            continue
+            return None
+        expr, tlit = parts
         expr = parts[0].strip()
         tlit = parts[1].strip()
         tname = lx.string(tlit)
@@ -1118,15 +1124,7 @@ def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
                 tname.strip(),
                 re.IGNORECASE,
             )
-            if tsall and re.fullmatch(
-                r"[+-]?\d+"
-                r"|\(\s*unix_micros\(.*"
-                # the runtime-typed reinterpret chain (both branches BIGINT)
-                r"|\(+\s*CASE\s+WHEN\s+typeof\(.*unix_micros\(.*"
-                r"|CAST\s*\(.*\s+AS\s+(?:TINYINT|SMALLINT|INT|INTEGER|BIGINT)\s*\)",
-                expr.strip(),
-                re.IGNORECASE | re.DOTALL,
-            ):
+            if tsall and _int_shape:
                 unit_fn = {
                     "second": "timestamp_seconds(CAST({0} AS BIGINT))",
                     "millisecond": "timestamp_millis(CAST({0} AS BIGINT))",
@@ -1149,64 +1147,49 @@ def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
                     "('tinyint','smallint','int','bigint') "
                     f"THEN {conv} ELSE CAST({expr} AS DATE) END)"
                 )
-        q = q[:s] + repl + q[e + 1:]
-        # re-scan from the replacement start: the EXPR may itself contain
-        # nested arrow_cast calls (group.slt time32 chains)
-        pos = s
-    pos = 0
-    while True:
-        hit = _find_call(q, "arrow_typeof", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
+        return repl
+
+    # bottom-up: an EXPR holding a nested arrow_cast (group.slt time32
+    # chains) arrives already lowered
+    q = rewrite_calls(q, "arrow_cast", cast)
+
+    def typeof(_fn: str, args: list[str], _after: str) -> str:
+        expr = ", ".join(args)
         # INTEGER LITERAL argument: resolve the reference's literal typing
         # STATICALLY (sql/planner: all in-range integer literals are Int64
         # — never Int32 like Spark's parser; i64-overflow → UInt64 when it
         # fits u64; beyond u64 → Float64 by default, Decimal128(digits, 0)
         # under sql_parser.parse_float_as_decimal — options.slt:106/134)
-        mint = re.fullmatch(r"[+-]?\d+", expr)
-        if mint:
+        if re.fullmatch(r"[+-]?\d+", expr):
             v = int(expr)
             if -(2**63) <= v < 2**63:
-                tname_lit = "Int64"
-            elif 0 <= v < 2**64:
-                tname_lit = "UInt64"
-            elif pfad:
-                tname_lit = f"Decimal128({len(str(abs(v)))}, 0)"
-            else:
-                tname_lit = "Float64"
-            repl = f"'{tname_lit}'"
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-            continue
+                return "'Int64'"
+            if 0 <= v < 2**64:
+                return "'UInt64'"
+            return f"'Decimal128({len(str(abs(v)))}, 0)'" if pfad else "'Float64'"
         # exact-name map first; parameterized decimals fall through to a
         # regexp rename (decimal(p,s) → Decimal128(p, s)); anything else
         # keeps its Spark name (documented §1.2 display fallback)
-        repl = (
+        return (
             f"coalesce(element_at({_TYPEOF_MAP_SQL}, typeof({expr})), "
             f"regexp_replace(typeof({expr}), "
             "'^decimal\\\\((\\\\d+),(\\\\d+)\\\\)$', 'Decimal128($1, $2)'))"
         )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+
+    q = rewrite_calls(q, "arrow_typeof", typeof)
     # NULL-propagating isnan (nans.rs): Spark's builtin returns false on
     # NULL where the reference returns NULL; a SQL UDF can't shadow a
-    # builtin, so wrap at rewrite time
-    pos = 0
-    while True:
-        hit = _find_call(q, "isnan", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
-        # NB: inner call stays the BUILTIN isnan — Spark defines NaN = NaN
-        # as true, so the x <> x idiom does NOT detect NaN here. The walker
-        # resumes past the replacement, so the inner name is not re-wrapped.
-        repl = f"(CASE WHEN ({expr}) IS NULL THEN NULL ELSE isnan({expr}) END)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    return q
+    # builtin, so wrap at rewrite time. The inner call stays the BUILTIN
+    # isnan — Spark defines NaN = NaN as true, so the x <> x idiom does NOT
+    # detect NaN here.
+    return rewrite_calls(
+        q,
+        "isnan",
+        lambda _fn, args, _after: (
+            f"(CASE WHEN ({', '.join(args)}) IS NULL THEN NULL "
+            f"ELSE isnan({', '.join(args)}) END)"
+        ),
+    )
 
 
 def _rewrite_array_literals(q: str) -> str:
@@ -1331,7 +1314,7 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         q,
     )
 
-    # (these two loops run BEFORE any internal lowering below —
+    # (these two rewrites run BEFORE any internal lowering below —
     # arrow_typeof/array_to_string emit Java-style regexp_replace text
     # that must stay on Spark's kernel, not get re-routed)
     # regexp_replace: the reference replaces the FIRST match unless 'g'
@@ -1339,18 +1322,11 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # form ('g' flag, no backslash in the replacement literal) on Spark's
     # JVM kernel — that's the hot path (pipeline redaction etc.) — and
     # route everything else through the session UDF.
-    pos = 0
-    while True:
-        hit = _find_call(q, "regexp_replace", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def regexp_replace(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) == 3:
             parts.append("''")
         if len(parts) != 4:
-            pos = e
-            continue
+            return None
         rep = lx.literal(parts[2])
         if (
             lx.string(parts[3]) == "g"
@@ -1358,32 +1334,22 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             and "\\" not in rep
             and "$" not in rep
         ):
-            repl = f"\x02regexp_replace\x02({parts[0]}, {parts[1]}, {parts[2]})"
-        else:
-            repl = (
-                f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
-            )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    q = q.replace("\x02regexp_replace\x02(", "regexp_replace(")
+            return f"regexp_replace({parts[0]}, {parts[1]}, {parts[2]})"
+        return f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
+
+    q = rewrite_calls(q, "regexp_replace", regexp_replace)
+
     # regexp_match → the session UDF (registered by _ensure_macros); the
     # 2-arg form means "no flags" — pass '' (a NULL flags COLUMN stays
     # NULL-strict like Postgres)
-    pos = 0
-    while True:
-        hit = _find_call(q, "regexp_match", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def regexp_match(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) == 2:
             parts.append("''")
         if len(parts) != 3:
-            pos = e
-            continue
-        repl = f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+            return None
+        return f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
+
+    q = rewrite_calls(q, "regexp_match", regexp_match)
 
 
     # postgres type names — only in cast positions (``::type`` or
@@ -1556,40 +1522,23 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         "blake2s": "df_blake2({0}, 'blake2s')",
         "blake3": "df_blake3({0})",
     }
-    pos = 0
-    while True:
-        hit = _find_call(q, "digest", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
+
+    def digest(_fn: str, parts: list[str], _after: str) -> str | None:
         algo = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
         if algo not in _DIGEST_FORMS:
-            pos = e
-            continue
-        repl = _DIGEST_FORMS[algo].format(parts[0].strip())
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    for algo in ("sha224", "sha256", "sha384", "sha512"):
-        pos = 0
-        while True:
-            hit = _find_call(q, algo, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            repl = _DIGEST_FORMS[algo].format(q[a:e])
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
+            return None
+        return _DIGEST_FORMS[algo].format(parts[0])
+
+    q = rewrite_calls(q, "digest", digest)
+    q = rewrite_calls(
+        q,
+        ("sha224", "sha256", "sha384", "sha512"),
+        lambda fn, args, _after: _DIGEST_FORMS[fn].format(", ".join(args)),
+    )
     # to_hex(int): lowercase hex display (functions/src/string/to_hex.rs)
-    pos = 0
-    while True:
-        hit = _find_call(q, "to_hex", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        repl = f"lower(hex({q[a:e]}))"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+    q = rewrite_calls(
+        q, "to_hex", lambda _fn, args, _after: f"lower(hex({', '.join(args)}))"
+    )
 
     # DataFusion's list_* alias spellings → the type-generic Spark builtin
     # (functions-array registers a list_* alias per array_* udf). Only
@@ -1603,51 +1552,27 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # element is not found (position.rs) where Spark returns 0; the 3-arg
     # form searches from a 1-based start index. array_has/list_contains:
     # the reference returns false for NULL needles and null-containing
-    # no-match arrays (array.slt:4976) where Spark yields NULL. Markers
-    # (\x02) shield the emitted Spark natives from re-rewriting.
-    for fn in ("list_position", "list_indexof", "array_indexof", "array_position"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) == 3:
-                arr, v, f = parts
-                sub = (
-                    f"slice({arr}, {f}, greatest(size({arr}) - ({f}) + 1, 0))"
-                )
-                repl = (
-                    f"(nullif(\x02array_position\x02({sub}, {v}), 0) + ({f}) - 1)"
-                )
-            elif len(parts) == 2:
-                repl = f"nullif(\x02array_position\x02({parts[0]}, {parts[1]}), 0)"
-            else:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    for fn in ("list_contains", "list_has", "array_has"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) != 2:
-                pos = e
-                continue
-            repl = (
-                f"(CASE WHEN ({parts[0]}) IS NULL THEN NULL ELSE "
-                f"coalesce(\x02array_contains\x02({parts[0]}, {parts[1]}), "
-                "false) END)"
-            )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
-    q = q.replace("\x02array_position\x02(", "array_position(")
-    q = q.replace("\x02array_contains\x02(", "array_contains(")
+    # no-match arrays (array.slt:4976) where Spark yields NULL.
+    def position(_fn: str, parts: list[str], _after: str) -> str | None:
+        if len(parts) == 3:
+            arr, v, f = parts
+            sub = f"slice({arr}, {f}, greatest(size({arr}) - ({f}) + 1, 0))"
+            return f"(nullif(array_position({sub}, {v}), 0) + ({f}) - 1)"
+        if len(parts) == 2:
+            return f"nullif(array_position({parts[0]}, {parts[1]}), 0)"
+        return None
+
+    q = rewrite_calls(
+        q, ("list_position", "list_indexof", "array_indexof", "array_position"), position
+    )
+    q = rewrite_calls(
+        q,
+        ("list_contains", "list_has", "array_has"),
+        lambda _fn, parts, _after: None if len(parts) != 2 else (
+            f"(CASE WHEN ({parts[0]}) IS NULL THEN NULL ELSE "
+            f"coalesce(array_contains({parts[0]}, {parts[1]}), false) END)"
+        ),
+    )
 
     # array[...] literals; arrow_cast / arrow_typeof as SQL functions
     q = _rewrite_array_literals(q)
@@ -1657,62 +1582,42 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # string concat skips NULLs in the reference (Postgres semantics;
     # string/concat.rs) where Spark's concat propagates them — concat_ws('')
     # has the reference's behavior. Array concatenation (the list_cat/
-    # array_cat aliases above) was renamed to a marker first so it keeps
-    # Spark's array concat. chr() handles full Unicode code points in the
-    # reference (chr.rs); Spark's wraps at 256 — Java's %c does not.
+    # array_cat aliases above) is array_concat until after this rewrite, so
+    # it keeps Spark's array concat.
     q = re.sub(r"\bconcat\s*\(", "concat_ws('', ", q, flags=re.IGNORECASE)
+
     # array concatenation treats NULL inputs as empty in the reference
     # (array.slt:2811 concatenates around a NULL column); Spark's concat
     # propagates NULL — coalesce each arg to a typed []
-    marker = "\x02array_concat\x02("
-    s = q.find(marker)
-    while s != -1:
-        o = s + len(marker) - 1
-        c = _match_paren(q, o)
-        if c is None:
-            q = q[:s] + "concat(" + q[o + 1 :]
-            s = q.find(marker)
-            continue
-        parts = [p.strip() for p in _split_top_level(q[o + 1 : c])]
+    def array_concat(_fn: str, parts: list[str], _after: str) -> str:
         inner = "concat(" + ", ".join(
-            f"coalesce({p}, "
-            f"slice(transform(array(1), __i -> try_element_at({p}, 1)), 1, 0))"
-            for p in parts
+            f"coalesce({p}, {_typed_empty(p)})" for p in parts
         ) + ")"
+        if len(parts) == 1:
+            return inner
         # ALL-NULL inputs concatenate to NULL; any non-NULL treats the
         # NULL side as empty (array.slt:2799 vs :2811)
-        repl = (
+        return (
             f"(CASE WHEN coalesce({', '.join(parts)}) IS NULL THEN NULL "
             f"ELSE {inner} END)"
-            if len(parts) > 1
-            else inner
         )
-        q = q[:s] + repl + q[c + 1 :]
-        s = q.find(marker)
+
+    q = rewrite_calls(q, "array_concat", array_concat)
     # chr: full Unicode code point (chr.rs; Spark's char wraps at 256).
     # Java's %c needs an explicit NULL guard (it would print "null").
-    pos = 0
-    while True:
-        hit = _find_call(q, "chr", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        expr = q[a:e].strip()
-        repl = (
-            f"(CASE WHEN ({expr}) IS NULL THEN NULL "
-            f"ELSE format_string('%c', CAST({expr} AS INT)) END)"
-        )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+    q = rewrite_calls(
+        q,
+        "chr",
+        lambda _fn, args, _after: (
+            f"(CASE WHEN ({', '.join(args)}) IS NULL THEN NULL "
+            f"ELSE format_string('%c', CAST({', '.join(args)} AS INT)) END)"
+        ),
+    )
+
     # dow: the reference follows Postgres (Sunday=0..Saturday=6); Spark's
     # extract dayofweek is 1-based (Sunday=1)
-    pos = 0
-    while True:
-        hit = _find_call(q, "extract", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        inner = q[a:e]
+    def extract(_fn: str, args: list[str], _after: str) -> str | None:
+        inner = ", ".join(args)
         # the unit may be a quoted identifier — EXTRACT("dow" FROM …) —
         # already converted to backticks by the quote rewrite above
         msub = re.match(
@@ -1724,25 +1629,18 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             unit = msub.group(1).lower()
             folded = _fold_literal_subsecond(msub.group(2).strip(), unit, lx)
             if folded is not None:
-                q = q[:s] + folded + q[e + 1:]
-                pos = s + len(folded)
-                continue
+                return folded
             if unit == "second":
                 # non-literal: Spark's native extract(second) (µs fraction)
-                pos = e
-                continue
+                return None
             # sub-second units (functions/src/datetime/date_part.rs):
             # fractional seconds scaled — Spark only has second; values
             # beyond µs resolution are governed by the ns→µs policy
             scale = {"millisecond": "1000", "microsecond": "1000000",
                      "nanosecond": "1000000000"}[unit]
             expr = f"(extract(second FROM {msub.group(2).strip()}) * {scale})"
-            if unit == "nanosecond":
-                # the reference returns an integer nanosecond count
-                expr = f"CAST({expr} AS BIGINT)"
-            q = q[:s] + expr + q[e + 1:]
-            pos = s + len(expr)
-            continue
+            # the reference returns an integer nanosecond count
+            return f"CAST({expr} AS BIGINT)" if unit == "nanosecond" else expr
         mep = re.match(
             r"\s*[`\"]?epoch[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
         )
@@ -1750,20 +1648,15 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             # epoch (date_part.rs): Float64 seconds since 1970, fractional;
             # dates count whole days (both branches analyze for any input —
             # only the matching one evaluates)
-            x = mep.group(1).strip()
-            repl = _epoch_expr(x)
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
-            continue
+            return _epoch_expr(mep.group(1).strip())
         m = re.match(
             r"\s*[`\"]?dow[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
         )
         if not m:
-            pos = e
-            continue
-        repl = f"(extract(dayofweek FROM {m.group(1).strip()}) - 1)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+            return None
+        return f"(extract(dayofweek FROM {m.group(1).strip()}) - 1)"
+
+    q = rewrite_calls(q, "extract", extract)
     # Interval literal spellings Spark's parser rejects but the reference
     # accepts (sql/src/expr/value.rs interval parsing): a bare number is
     # SECONDS ("interval '1'"), units may be fractional ("interval '0.5
@@ -1819,37 +1712,27 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # reference's encodings onto base64/hex primitives (hex lowercased to
     # match Arrow's display). Unknown encoding names fall through to
     # Spark's error, matching the reference's rejection.
-    for fn, forms in (
-        ("encode", {"base64": "base64({0})", "hex": "lower(hex({0}))"}),
-        ("decode", {"base64": "unbase64({0})", "hex": "unhex({0})"}),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            parts = _split_top_level(q[a:e])
-            enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
-            if enc not in forms:
-                pos = e
-                continue
-            repl = forms[enc].format(parts[0].strip())
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
+    forms = {
+        "encode": {"base64": "base64({0})", "hex": "lower(hex({0}))"},
+        "decode": {"base64": "unbase64({0})", "hex": "unhex({0})"},
+    }
+
+    def coding(fn: str, parts: list[str], _after: str) -> str | None:
+        enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
+        if enc not in forms[fn]:
+            return None
+        return forms[fn][enc].format(parts[0])
+
+    q = rewrite_calls(q, ("encode", "decode"), coding)
+
     # overlay (string/overlay.rs:90): the reference DIVERGES from
     # Postgres/Spark — when start_pos exceeds the string, the prefix is
     # DROPPED (overlay('123' placing 'abc' from 4) = 'abc', not '123abc'),
     # and the 4-arg replace length is min(len, char_length(str)). Rewrite
     # both the PLACING and comma forms into the reference's exact
     # composition; NULL in any argument → NULL (the row-wise match arms).
-    pos = 0
-    while True:
-        hit = _find_call(q, "overlay", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        inner = q[a:e]
+    def overlay(_fn: str, args: list[str], _after: str) -> str | None:
+        inner = ", ".join(args)
         mp = re.match(
             r"(?is)\s*(.+?)\s+placing\s+(.+?)\s+from\s+(.+?)(?:\s+for\s+(.+?))?\s*$",
             inner,
@@ -1859,8 +1742,7 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         else:
             parts = [x.strip() for x in _split_top_level(inner)]
             if len(parts) not in (3, 4):
-                pos = e
-                continue
+                return None
             so, c, p = parts[:3]
             ln = parts[3] if len(parts) == 4 else None
         rl = (
@@ -1871,7 +1753,7 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         null_guard = f"{so} IS NULL OR {c} IS NULL OR ({p}) IS NULL" + (
             f" OR ({ln}) IS NULL" if ln is not None else ""
         )
-        repl = (
+        return (
             f"(CASE WHEN {null_guard} THEN CAST(NULL AS STRING) ELSE "
             f"CONCAT("
             f"CASE WHEN ({p}) > 1 AND ({p}) - 1 < char_length({so}) "
@@ -1881,39 +1763,32 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             f"THEN substring({so}, CAST(({p}) + {rl} AS INT)) ELSE '' END"
             f") END)"
         )
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_part", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = _split_top_level(q[a:e])
-        first = parts[0].strip() if parts else ""
-        unit = (lx.string(first) or "").lower()
+
+    q = rewrite_calls(q, "overlay", overlay)
+
+    def date_part(_fn: str, parts: list[str], _after: str) -> str | None:
+        unit = (lx.string(parts[0]) or "").lower()
         sub = {"millisecond": "1000", "microsecond": "1000000",
                "nanosecond": "1000000000"}
         if len(parts) != 2 or unit not in ("dow", "epoch", "second", *sub):
-            pos = e
-            continue
-        arg = parts[1].strip()
+            return None
+        arg = parts[1]
         if unit == "dow":
-            repl = f"(extract(dayofweek FROM {arg}) - 1)"
-        elif unit == "epoch":
-            repl = _epoch_expr(arg)
-        else:
-            repl = _fold_literal_subsecond(arg, unit, lx)
-            if repl is None and unit == "second":
-                # non-literal seconds: Spark's extract is already right
-                pos = e
-                continue
-            if repl is None:
-                repl = f"(extract(second FROM {arg}) * {sub[unit]})"
-                if unit == "nanosecond":
-                    repl = f"CAST({repl} AS BIGINT)"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+            return f"(extract(dayofweek FROM {arg}) - 1)"
+        if unit == "epoch":
+            return _epoch_expr(arg)
+        repl = _fold_literal_subsecond(arg, unit, lx)
+        if repl is None and unit == "second":
+            # non-literal seconds: Spark's extract is already right
+            return None
+        if repl is None:
+            repl = f"(extract(second FROM {arg}) * {sub[unit]})"
+            if unit == "nanosecond":
+                repl = f"CAST({repl} AS BIGINT)"
+        return repl
+
+    q = rewrite_calls(q, "date_part", date_part)
+
     # mixed NTZ/TZ date_bin coercion (date_bin.rs argument coercion;
     # timestamps.slt:1673): when the SOURCE argument is TIMESTAMPTZ and
     # the ORIGIN a plain TIMESTAMP literal, the reference reinterprets the
@@ -1921,21 +1796,14 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # Append an explicit Z to the shielded origin literal — each literal
     # occurrence has its own shield slot, so the mutation is local. Runs
     # BEFORE the TIMESTAMPTZ lowering below erases the TZ marker.
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_bin", pos)
-        if hit is None:
-            break
-        _s, a, e = hit
-        pos = e
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def utc_origin(_fn: str, parts: list[str], _after: str) -> None:
         if len(parts) != 3:
-            continue
+            return
         if not re.search(r"\bTIMESTAMPTZ\b", parts[1], re.IGNORECASE):
-            continue
+            return
         om = re.fullmatch(rf"TIMESTAMP\s+({LIT})", parts[2], re.IGNORECASE)
         if not om:
-            continue
+            return
         raw = lx.string(om.group(1))
         if not re.search(r"(?:Z|[+-]\d{2}:?\d{2})\s*$", raw):
             if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw.strip()):
@@ -1944,6 +1812,8 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
                 lx.replace(om.group(1), quote(f"{raw.strip()} 00:00:00Z"))
             else:
                 lx.replace(om.group(1), quote(f"{raw}Z"))
+
+    q = rewrite_calls(q, "date_bin", utc_origin)
     # TIMESTAMPTZ literals: Spark has no TIMESTAMPTZ typed-literal syntax —
     # the session is pinned UTC, so a plain TIMESTAMP cast preserves the
     # instant (offsets in the text are applied by the cast)
@@ -1958,18 +1828,12 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # floor the calendar-month distance to the stride, add to origin with
     # end-of-month clamping, step back one stride if the bin overshoots).
     _MONTH_UNITS = {"mon": 1, "month": 1, "months": 1, "year": 12, "years": 12}
-    pos = 0
-    while True:
-        hit = _find_call(q, "date_bin", pos)
-        if hit is None:
-            break
-        s, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+
+    def date_bin(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) == 2:
             parts.append("TIMESTAMP '1970-01-01 00:00:00'")
         if len(parts) != 3:
-            pos = e
-            continue
+            return None
         stride, t_arg, o_arg = parts
         mlit = re.fullmatch(rf"(?:INTERVAL\s+)?({LIT})", stride, re.IGNORECASE)
         months = None
@@ -2013,85 +1877,63 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             )
         else:
             repl = f"date_bin({stride}, CAST({t_arg} AS TIMESTAMP), CAST({o_arg} AS TIMESTAMP))"
-        q = q[:s] + repl + q[e + 1:]
-        pos = s + len(repl)
+        return repl
+
+    q = rewrite_calls(q, "date_bin", date_bin)
     # left/right with NEGATIVE n drop |n| chars from the other end in the
     # reference (Postgres semantics, string/left.rs); Spark returns ''
-    for fn, pos_form, neg_form in (
-        (
-            "left",
+    sides = {
+        "left": (
             "left({s}, {n})",
             "substring({s}, 1, greatest(length({s}) + ({n}), 0))",
         ),
-        (
-            "right",
+        "right": (
             "right({s}, {n})",
             "substring({s}, least(-({n}), length({s})) + 1)",
         ),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = _split_top_level(q[a:e])
-            if len(parts) != 2:
-                pos = e
-                continue
-            sarg, narg = parts[0].strip(), parts[1].strip()
-            repl = (
-                f"(CASE WHEN ({narg}) < 0 THEN "
-                + neg_form.format(s=sarg, n=narg)
-                + " ELSE "
-                + pos_form.format(s=sarg, n=narg)
-                + " END)"
-            )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
+    }
+
+    def side(fn: str, parts: list[str], _after: str) -> str | None:
+        if len(parts) != 2:
+            return None
+        sarg, narg = parts
+        pos_form, neg_form = sides[fn]
+        return (
+            f"(CASE WHEN ({narg}) < 0 THEN "
+            + neg_form.format(s=sarg, n=narg)
+            + " ELSE "
+            + pos_form.format(s=sarg, n=narg)
+            + " END)"
+        )
+
+    q = rewrite_calls(q, ("left", "right"), side)
+
     # substr/substring with a NEGATIVE OR ZERO literal start follows
     # Postgres virtual-position semantics in the reference (substr.rs:
     # positions before 1 exist but hold nothing) — Spark counts negative
     # starts from the string END. Only statically-negative literals are
     # rewritten; column/expression starts keep Spark semantics.
-    for fn in ("substr", "substring"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) not in (2, 3) or not re.fullmatch(r"-\d+|0", parts[1]):
-                pos = e
-                continue
-            start = int(parts[1])
-            if len(parts) == 2:
-                repl = f"substring({parts[0]}, 1)"
-            else:
-                # effective length shrinks by the virtual prefix (1 - start)
-                repl = (
-                    f"substring({parts[0]}, 1, "
-                    f"greatest(({parts[2]}) - {1 - start}, 0))"
-                )
-            q = q[:s_i] + repl + q[e + 1:]
-            pos = s_i + len(repl)
+    def substr(_fn: str, parts: list[str], _after: str) -> str | None:
+        if len(parts) not in (2, 3) or not re.fullmatch(r"-\d+|0", parts[1]):
+            return None
+        if len(parts) == 2:
+            return f"substring({parts[0]}, 1)"
+        # effective length shrinks by the virtual prefix (1 - start)
+        return (
+            f"substring({parts[0]}, 1, "
+            f"greatest(({parts[2]}) - {1 - int(parts[1])}, 0))"
+        )
+
+    q = rewrite_calls(q, ("substr", "substring"), substr)
     # two-arg ltrim/rtrim/trim: the reference takes (string, chars); Spark's
     # positional builtins take (trimStr, string) — swap
-    for fn in ("ltrim", "rtrim", "trim"):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn, pos)
-            if hit is None:
-                break
-            s, a, e = hit
-            parts = _split_top_level(q[a:e])
-            if len(parts) != 2:
-                pos = e
-                continue
-            repl = f"{fn}({parts[1].strip()}, {parts[0].strip()})"
-            q = q[:s] + repl + q[e + 1:]
-            pos = s + len(repl)
+    q = rewrite_calls(
+        q,
+        ("ltrim", "rtrim", "trim"),
+        lambda fn, parts, _after: (
+            f"{fn}({parts[1]}, {parts[0]})" if len(parts) == 2 else None
+        ),
+    )
 
     # inline VALUES → reference column names (column1..columnN)
     q = _wrap_values(q)
@@ -2106,37 +1948,31 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         ("mean", "avg"),
     ):
         q = re.sub(rf"\b{alias}\s*\(", f"{native}(", q, flags=re.IGNORECASE)
+
     # corr: the reference computes it from POPULATION statistics and returns
     # 0.0 (not NULL) when either side has zero variance — including a single
     # pair, where var_pop = 0 (correlation.rs:161). Spark's corr NULLs the
     # degenerate cases; wrap it. Pairwise-masked stddevs so one-sided NULLs
     # can't flip the zero-variance test. n>=2 nonzero-variance values are
     # identical (the (n-1)/n factors cancel in the ratio).
-    pos = 0
-    while True:
-        hit = _find_call(q, "corr", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def corr(_fn: str, parts: list[str], after: str) -> str | None:
         if (
             len(parts) != 2
             or parts[0].upper().startswith("DISTINCT")
             # window form (corr(...) OVER ...): leave Spark's native corr —
             # the CASE wrapper is an aggregate-position rewrite only
-            or re.match(r"\s*OVER\b", q[e + 1 :], re.IGNORECASE)
+            or re.match(r"\s*OVER\b", after, re.IGNORECASE)
         ):
-            pos = e
-            continue
+            return None
         x, y = parts
         pair = f"(({x}) IS NOT NULL AND ({y}) IS NOT NULL)"
-        repl = (
+        return (
             f"CASE WHEN stddev_pop(CASE WHEN {pair} THEN ({x}) END) = 0 "
             f"OR stddev_pop(CASE WHEN {pair} THEN ({y}) END) = 0 "
             f"THEN 0.0 ELSE corr(({x}), ({y})) END"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+
+    q = rewrite_calls(q, "corr", corr)
     # approx_distinct → Spark's HLL++ AT THE REFERENCE'S PRECISION: the
     # reference's HLL is fixed at 2^14 registers (hyperloglog.rs HLL_P=14,
     # standard error 1.04/sqrt(16384) = 0.8125%); Spark's default rsd 5%
@@ -2147,48 +1983,40 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     # linear-counting regime where both return the EXACT count
     # (aggregate.slt:1051's golden 100). Residual-bit hash artifacts can
     # still differ at large cardinalities (ahash vs xxhash64 — documented).
-    pos = 0
-    while True:
-        hit = _find_call(q, "approx_distinct", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        repl = f"approx_count_distinct({q[a:e]}, 0.00865)"
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+    q = rewrite_calls(
+        q,
+        "approx_distinct",
+        lambda _fn, args, _after: f"approx_count_distinct({', '.join(args)}, 0.00865)",
+    )
     # to_timestamp_<unit>: polymorphic in the reference (datetime/
     # to_timestamp.rs) — integer = unit count since epoch, timestamp/
     # string = cast TRUNCATED to the unit. The typed SQL-macro form cast
     # timestamps through BIGINT (= seconds), garbling non-integer args.
-    for fn_name, unit, intconv in (
-        ("to_timestamp_seconds", "SECOND", "timestamp_seconds(CAST({x} AS BIGINT))"),
-        ("to_timestamp_millis", "MILLISECOND", "timestamp_millis(CAST({x} AS BIGINT))"),
-        ("to_timestamp_micros", "MICROSECOND", "timestamp_micros(CAST({x} AS BIGINT))"),
-        ("to_timestamp_nanos", None, "timestamp_micros(CAST({x} AS BIGINT) div 1000)"),
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn_name, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if len(parts) != 1:
-                pos = e
-                continue
-            x = parts[0]
-            ts_form = (
-                f"date_trunc('{unit}', CAST({x} AS TIMESTAMP))"
-                if unit
-                else f"CAST({x} AS TIMESTAMP)"
-            )
-            repl = (
-                f"(CASE WHEN typeof({x}) LIKE 'timestamp%' "
-                f"OR typeof({x}) = 'string' OR typeof({x}) = 'date' "
-                f"THEN {ts_form} ELSE {intconv.format(x=x)} END)"
-            )
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
+    units = {
+        "to_timestamp_seconds": ("SECOND", "timestamp_seconds(CAST({x} AS BIGINT))"),
+        "to_timestamp_millis": ("MILLISECOND", "timestamp_millis(CAST({x} AS BIGINT))"),
+        "to_timestamp_micros": ("MICROSECOND", "timestamp_micros(CAST({x} AS BIGINT))"),
+        "to_timestamp_nanos": (None, "timestamp_micros(CAST({x} AS BIGINT) div 1000)"),
+    }
+
+    def to_timestamp(fn: str, parts: list[str], _after: str) -> str | None:
+        if len(parts) != 1:
+            return None
+        x = parts[0]
+        unit, intconv = units[fn]
+        ts_form = (
+            f"date_trunc('{unit}', CAST({x} AS TIMESTAMP))"
+            if unit
+            else f"CAST({x} AS TIMESTAMP)"
+        )
+        return (
+            f"(CASE WHEN typeof({x}) LIKE 'timestamp%' "
+            f"OR typeof({x}) = 'string' OR typeof({x}) = 'date' "
+            f"THEN {ts_form} ELSE {intconv.format(x=x)} END)"
+        )
+
+    q = rewrite_calls(q, tuple(units), to_timestamp)
+
     # math edge semantics (functions/src/math): Rust's ln/log of 0 is
     # -Infinity and of negatives NaN (Spark: NULL); 1-arg log is BASE 10;
     # nanvl propagates NULL args; signum(+0) is 1.0
@@ -2199,64 +2027,41 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             f"ELSE {inner} END)"
         )
 
-    for fn_name, spark_fn in (
-        ("ln", "ln"), ("log2", "log2"), ("log10", "log10"), ("log", None)
-    ):
-        pos = 0
-        while True:
-            hit = _find_call(q, fn_name, pos)
-            if hit is None:
-                break
-            s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
-            if fn_name == "log":
-                if len(parts) == 1:  # log(x) = log10 in the reference
-                    repl = _log_guard(f"log10({parts[0]})", parts[0])
-                elif len(parts) == 2:
-                    # negative BASE is NaN too (f64::log semantics)
-                    repl = (
-                        f"(CASE WHEN ({parts[0]}) < 0 "
-                        "THEN CAST('NaN' AS DOUBLE) ELSE "
-                        + _log_guard(f"log({parts[0]}, {parts[1]})", parts[1])
-                        + " END)"
-                    )
-                else:
-                    pos = e
-                    continue
-            elif len(parts) == 1:
-                repl = _log_guard(f"{spark_fn}({parts[0]})", parts[0])
-            else:
-                pos = e
-                continue
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "nanvl", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def log(fn: str, parts: list[str], _after: str) -> str | None:
+        if fn != "log":
+            return _log_guard(f"{fn}({parts[0]})", parts[0]) if len(parts) == 1 else None
+        if len(parts) == 1:  # log(x) = log10 in the reference
+            return _log_guard(f"log10({parts[0]})", parts[0])
+        if len(parts) == 2:
+            # negative BASE is NaN too (f64::log semantics)
+            return (
+                f"(CASE WHEN ({parts[0]}) < 0 "
+                "THEN CAST('NaN' AS DOUBLE) ELSE "
+                + _log_guard(f"log({parts[0]}, {parts[1]})", parts[1])
+                + " END)"
+            )
+        return None
+
+    q = rewrite_calls(q, ("ln", "log2", "log10", "log"), log)
+
+    def nanvl(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 2:
-            pos = e
-            continue
+            return None
         x, y = parts
-        repl = (
+        return (
             f"(CASE WHEN ({x}) IS NULL OR ({y}) IS NULL THEN NULL "
             f"ELSE nanvl({x}, {y}) END)"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "signum", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        x = q[a:e].strip()
-        repl = f"(CASE WHEN ({x}) = 0 THEN CAST(1.0 AS DOUBLE) ELSE sign({x}) END)"
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+
+    q = rewrite_calls(q, "nanvl", nanvl)
+    q = rewrite_calls(
+        q,
+        "signum",
+        lambda _fn, args, _after: (
+            f"(CASE WHEN ({', '.join(args)}) = 0 THEN CAST(1.0 AS DOUBLE) "
+            f"ELSE sign({', '.join(args)}) END)"
+        ),
+    )
     # integer-literal division TRUNCATES in the reference (Int64 / Int64
     # → Int64); Spark's / is always fractional. Only statically-integer
     # literal pairs are rewritten — column operand types are unknowable
@@ -2296,27 +2101,18 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
 
     # struct(...) with positional args: the reference names fields c0..cN
     # (struct.rs); Spark derives col1..colN / source column names
-    pos = 0
-    while True:
-        hit = _find_call(q, "struct", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if (
-            not parts
-            or any(not p or p == "*" or p.endswith(".*") for p in parts)
-            or any(re.search(r"\bAS\s+\w+\s*$", p, re.IGNORECASE) for p in parts)
+    def struct(_fn: str, parts: list[str], _after: str) -> str | None:
+        if any(not p or p == "*" or p.endswith(".*") for p in parts) or any(
+            re.search(r"\bAS\s+\w+\s*$", p, re.IGNORECASE) for p in parts
         ):
-            pos = e
-            continue
-        repl = (
+            return None
+        return (
             "named_struct("
             + ", ".join(f"'c{i}', {p}" for i, p in enumerate(parts))
             + ")"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+
+    q = rewrite_calls(q, "struct", struct)
 
     # RIGHT SEMI/ANTI JOIN → mirrored LEFT form (Spark has left-only
     # semi/anti; the relation swap is exactly the reference's planning)
@@ -2328,122 +2124,81 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         q,
         flags=re.IGNORECASE,
     )
+
     # array_agg KEEPS null elements in the reference (array_agg.rs
     # accumulates the raw column, nulls included); Spark's collect_list
     # drops them. DISTINCT form: re-attach one typed NULL when the input
     # had any. Plain form: collect non-null STRUCT wrappers and unwrap.
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_agg", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        argstr = q[a:e]
+    def array_agg(_fn: str, args: list[str], after: str) -> str | None:
+        argstr = ", ".join(args)
         md = re.match(r"\s*DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
         if _top_level_order_by(argstr) is not None:
-            pos = e
-            continue
+            return None
         if not md:
             x = argstr.strip()
-            if not x or "*" in x or re.match(r"\s*OVER\b", q[e + 1 :], re.IGNORECASE):
+            if not x or "*" in x or re.match(r"\s*OVER\b", after, re.IGNORECASE):
                 # window form: the transform wrapper would detach OVER from
                 # the aggregate — leave Spark's native (null-dropping)
-                pos = e
-                continue
-            repl = f"transform(\x02array_agg\x02(struct(({x}) AS __v)), s -> s.__v)"
-            q = q[:s_i] + repl + q[e + 1 :]
-            pos = s_i + len(repl)
-            continue
+                return None
+            return f"transform(array_agg(struct(({x}) AS __v)), s -> s.__v)"
         x = md.group(1).strip()
         typed_null = f"array(first(CASE WHEN false THEN {x} END))"
-        repl = (
+        return (
             f"(CASE WHEN count(*) > count({x}) "
-            f"THEN concat({typed_null}, \x02array_agg\x02(DISTINCT {x})) "
-            f"ELSE \x02array_agg\x02(DISTINCT {x}) END)"
+            f"THEN concat({typed_null}, array_agg(DISTINCT {x})) "
+            f"ELSE array_agg(DISTINCT {x}) END)"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_agg\x02(", "array_agg(")
+
+    q = rewrite_calls(q, "array_agg", array_agg)
+
     # array_intersect keeps FIRST-array element order in the reference
     # (set_ops.rs); Spark's hash-based kernel reorders — express as an
     # order-preserving null-safe filter
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_intersect", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def array_intersect(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 2:
-            pos = e
-            continue
+            return None
         a1, a2 = parts
         # the reference's kernel emits the distinct intersection ASCENDING
         # (array.slt 5455-5482: [false, true], [1, 3], [11, 33])
-        repl = (
+        return (
             f"array_sort(filter(array_distinct({a1}), "
             f"x -> exists({a2}, y -> y <=> x)))"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+
+    q = rewrite_calls(q, "array_intersect", array_intersect)
+
     # array_append(NULL, v) builds [v] in the reference (array_append.rs
     # treats a NULL list as empty); Spark propagates the NULL
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_append", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def array_append(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 2:
-            pos = e
-            continue
+            return None
         arr, v = parts
-        repl = (
+        return (
             f"(CASE WHEN ({arr}) IS NULL THEN array({v}) "
-            f"ELSE \x02array_append\x02({arr}, {v}) END)"
+            f"ELSE array_append({arr}, {v}) END)"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_append\x02(", "array_append(")
+
+    q = rewrite_calls(q, "array_append", array_append)
+
     # array_remove removes the FIRST occurrence in the reference
     # (array_remove.rs; Spark's removes all) and accepts NULL needles —
     # null-safe first-index lookup + splice. array_remove_all IS Spark's.
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_remove_all", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def remove(fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 2:
-            pos = e
-            continue
+            return None
         arr, v = parts
-        # NULL needle keeps the array in the reference; Spark's
-        # array_remove would propagate NULL
-        repl = (
-            f"(CASE WHEN ({v}) IS NULL THEN {arr} "
-            f"ELSE \x02array_remove_all\x02({arr}, {v}) END)"
-        )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    pos = 0
-    while True:
-        hit = _find_call(q, "array_remove", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
-        if len(parts) != 2:
-            pos = e
-            continue
-        arr, v = parts
+        if fn == "array_remove_all":
+            # NULL needle keeps the array in the reference; Spark's
+            # array_remove would propagate NULL
+            return (
+                f"(CASE WHEN ({v}) IS NULL THEN {arr} "
+                f"ELSE array_remove({arr}, {v}) END)"
+            )
         p_expr = (
             f"try_element_at(filter(sequence(1, size({arr})), "
             f"i -> try_element_at({arr}, i) <=> {v}), 1)"
         )
-        repl = (
+        return (
             # size=0 first: sequence(1, 0) would step BACKWARD to index 0
             f"(CASE WHEN ({arr}) IS NULL THEN NULL "
             f"WHEN size({arr}) = 0 THEN {arr} "
@@ -2451,30 +2206,23 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             f"ELSE concat(slice({arr}, 1, {p_expr} - 1), "
             f"slice({arr}, {p_expr} + 1, size({arr}) - {p_expr})) END)"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
-    q = q.replace("\x02array_remove_all\x02(", "array_remove(")
+
+    q = rewrite_calls(q, ("array_remove_all", "array_remove"), remove)
+
     # cardinality counts LEAF elements recursively and returns NULL for a
     # flat empty array (functions-array cardinality.rs — not Spark's size)
-    pos = 0
-    while True:
-        hit = _find_call(q, "cardinality", pos)
-        if hit is None:
-            break
-        s_i, a, e = hit
-        parts = [p.strip() for p in _split_top_level(q[a:e])]
+    def cardinality(_fn: str, parts: list[str], _after: str) -> str | None:
         if len(parts) != 1:
-            pos = e
-            continue
+            return None
         x = parts[0]
-        repl = (
+        return (
             f"(CASE WHEN typeof({x}) LIKE 'array<array<array%' "
             f"THEN size(flatten(flatten({x}))) "
             f"WHEN typeof({x}) LIKE 'array<array%' "
             f"THEN size(flatten({x})) ELSE nullif(size({x}), 0) END)"
         )
-        q = q[:s_i] + repl + q[e + 1 :]
-        pos = s_i + len(repl)
+
+    q = rewrite_calls(q, "cardinality", cardinality)
     # functions-array SQL surface (templates mirror the registry)
     q = _rewrite_array_fns(q)
     # postfix subscripts: 1-based indexing / inclusive slices
@@ -2499,3 +2247,162 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         flags=re.IGNORECASE,
     )
     return lx.unshield(q)
+
+
+def _lower_approx_percentile(
+    q: str, lx: Lexed, schema: dict | None, guarded: bool
+) -> str:
+    """The call lowering of SessionContext._rewrite_approx_percentile,
+    given the statement's schema map and whether the byte guard fired."""
+
+    def _typed(inner: str, arg: str) -> str:
+        from pyspark.sql.types import (
+            ByteType,
+            FloatType,
+            IntegerType,
+            LongType,
+            ShortType,
+        )
+
+        dt = (
+            schema.get(arg.strip().lower())
+            if schema is not None
+            and re.fullmatch(
+                r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg.strip()
+            )
+            else None
+        )
+        sql_t = {
+            ByteType: "TINYINT",
+            ShortType: "SMALLINT",
+            IntegerType: "INT",
+            LongType: "BIGINT",
+            FloatType: "FLOAT",
+        }.get(type(dt))
+        return f"CAST({inner} AS {sql_t})" if sql_t else inner
+
+    for fn_name in (
+        "approx_percentile_cont_with_weight",
+        "approx_percentile_cont",
+        "approx_median",
+    ):
+        pos = 0
+        while True:
+            # a windowed call's replacement takes in the FILTER/OVER chain
+            # after its closing paren
+            hit = _find_call(q, fn_name, pos)
+            if hit is None:
+                break
+            s_i, a, e = hit
+            parts = [p.strip() for p in _split_top_level(q[a:e])]
+            if parts and re.match(r"DISTINCT\b", parts[0], re.IGNORECASE):
+                pos = e  # reference rejects DISTINCT here — let the
+                continue  # name fall through to Spark's resolver error
+            windowed = re.match(
+                r"\s*(OVER|FILTER)\b", q[e + 1 :], re.IGNORECASE
+            )
+            if fn_name == "approx_median" and len(parts) == 1:
+                if windowed:
+                    # the collect_list form can't carry the trailing
+                    # OVER/FILTER clause — exact percentile keeps the
+                    # approximate contract there
+                    repl = f"percentile({parts[0]}, 0.5)"
+                elif guarded:
+                    repl = (
+                        f"percentile_approx(CAST({parts[0]} AS DOUBLE), "
+                        f"0.5D, 10000)"
+                    )
+                else:
+                    repl = (
+                        f"tdigest_from_list(collect_list("
+                        f"CAST({parts[0]} AS DOUBLE)), 0.5D, 100)"
+                    )
+            elif fn_name == "approx_percentile_cont" and len(parts) in (2, 3):
+                if len(parts) == 3 and (
+                    not re.fullmatch(r"\+?\d+", parts[2])
+                    or int(parts[2]) == 0
+                ):
+                    # approx_percentile_cont.rs:169: the centroid
+                    # budget must be a positive integer LITERAL
+                    # (reject negatives, floats, column references) —
+                    # plan-time error in the reference
+                    raise ValueError(
+                        "approx_percentile_cont: centroid count (third "
+                        "argument) must be a positive integer literal, "
+                        f"got {parts[2]!r}"
+                    )
+                msize = parts[2] if len(parts) == 3 else "100"
+                if windowed:
+                    repl = f"percentile({parts[0]}, {parts[1]})"
+                elif guarded:
+                    repl = (
+                        f"percentile_approx(CAST({parts[0]} AS DOUBLE), "
+                        f"CAST({parts[1]} AS DOUBLE), 10000)"
+                    )
+                else:
+                    repl = (
+                        f"tdigest_from_list(collect_list("
+                        f"CAST({parts[0]} AS DOUBLE)), "
+                        f"CAST({parts[1]} AS DOUBLE), {msize})"
+                    )
+            elif (
+                fn_name == "approx_percentile_cont_with_weight"
+                and len(parts) == 3
+            ):
+                if windowed or guarded:
+                    # Spark's percentile frequency argument must be a
+                    # positive INTEGRAL type; the reference accepts any
+                    # numeric weight (convert_to_float) — CAST truncates
+                    # fractional weights toward zero (documented trade).
+                    # Above the byte cap this is also the fallback:
+                    # exact percentile's value→count map is bounded by
+                    # DISTINCT values, not group size — no native
+                    # weighted sketch exists in Spark.
+                    repl = (
+                        f"percentile({parts[0]}, {parts[2]}, "
+                        f"CAST({parts[1]} AS BIGINT))"
+                    )
+                else:
+                    v, w = lx.add("'v'"), lx.add("'w'")
+                    pair = (
+                        f"CASE WHEN ({parts[0]}) IS NOT NULL AND "
+                        f"({parts[1]}) IS NOT NULL THEN named_struct("
+                        f"{v}, CAST({parts[0]} AS DOUBLE), "
+                        f"{w}, CAST({parts[1]} AS DOUBLE)) END"
+                    )
+                    repl = (
+                        f"tdigest_from_list_w(collect_list({pair}), "
+                        f"CAST({parts[2]} AS DOUBLE))"
+                    )
+            else:
+                pos = e
+                continue
+            end = e + 1  # one past ')' — extended over trailing clauses
+            if not windowed:
+                repl = _typed(repl, parts[0])
+            else:
+                # consume the trailing FILTER (...) / OVER (...) chain
+                # into the replacement so the input-type cast can wrap
+                # the WHOLE windowed aggregate — `CAST(f(...) OVER (...)
+                # AS T)` parses; `CAST(f(...) AS T) OVER (...)` doesn't
+                while True:
+                    cm = re.match(
+                        r"\s*(?:FILTER|OVER)\s*\(",
+                        q[end:],
+                        re.IGNORECASE,
+                    )
+                    if not cm:
+                        break
+                    close = _match_paren(q, end + cm.end() - 1)
+                    if close is None:
+                        break
+                    end = close + 1
+                if re.match(r"\s*(OVER|FILTER)\b", q[end:], re.IGNORECASE):
+                    # named-window `OVER w` — can't bound the clause,
+                    # keep the untyped double estimate
+                    repl = repl + q[e + 1 : end]
+                else:
+                    repl = _typed(repl + q[e + 1 : end], parts[0])
+            q = q[:s_i] + repl + q[end:]
+            pos = s_i + len(repl)
+    return q

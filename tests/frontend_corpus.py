@@ -7,9 +7,10 @@ produces or the class of the error it raises. Two kinds of record:
 - *pure* records replay ``lex`` → ``_rewrite_sql`` (which unshields on
   return) with no Spark session. Their sources are every ``SELECT``/``WITH``
   string constant in ``tests/test_*.py`` and
-  ``arrow_datafusion_spark/queries/*.py``, the ``parse_float_as_decimal``
-  variant of each that carries ``arrow_typeof``, and the hand-written
-  ``EXTRA`` statements below, which reach every call rewrite.
+  ``arrow_datafusion_spark/queries/*.py`` and the hand-written ``EXTRA``
+  statements below, which reach every call rewrite; a statement that
+  carries ``arrow_typeof`` is also replayed under
+  ``parse_float_as_decimal``.
 - *typed* records replay ``SessionContext._spark_sql`` over the small
   catalog built by ``typed_catalog``: the schema-reading passes run
   against live table schemas, and ``spark.sql`` is stubbed so the text it
@@ -84,6 +85,7 @@ EXTRA = (
     "SELECT arrow_cast('2020-01-01 00:00:00', 'Timestamp(Second, Some(\"+01:00\"))') FROM t",
     "SELECT arrow_cast(x, 'Timestamp(Millisecond, None)'), arrow_cast(1, 'Date32'), arrow_cast(x, 'Time32(Second)') FROM t",
     "SELECT arrow_typeof(arrow_cast(x, 'Int32')), isnan(x), isnan(NULL) FROM t",
+    "SELECT arrow_typeof(18446744073709551616), arrow_typeof(9223372036854775808), arrow_typeof(-5)",
     "SELECT unnest(a) FROM t",
     "SELECT x FROM unnest(make_array(1, 2)) JOIN unnest(struct(1, 2)) ON true",
     "SELECT row_number() OVER (ORDER BY x ROWS BETWEEN 1 PRECEDING AND CURRENT ROW), rank() OVER (PARTITION BY y) FROM t",
@@ -178,14 +180,11 @@ def source_statements() -> list[tuple[str, str]]:
 
 
 def pure_inputs() -> list[dict]:
-    out = []
-    for src, text in source_statements():
-        out.append({"src": src, "sql": text, "pfad": False})
-        if "arrow_typeof" in text:
-            out.append({"src": src, "sql": text, "pfad": True})
-    for text in EXTRA:
-        out.append({"src": "extra", "sql": text, "pfad": False})
-    return out
+    return [
+        {"src": src, "sql": text, "pfad": pfad}
+        for src, text in source_statements() + [("extra", t) for t in EXTRA]
+        for pfad in ((False, True) if "arrow_typeof" in text else (False,))
+    ]
 
 
 def rewrite_pure(sql: str, pfad: bool) -> dict:
@@ -200,38 +199,19 @@ def rewrite_pure(sql: str, pfad: bool) -> dict:
 
 
 def typed_catalog(ctx) -> None:
-    """Register the relations the TYPED statements read."""
-    from decimal import Decimal
-
-    from pyspark.sql import types as T
-
-    spark = ctx.spark
-    num = T.StructType([
-        T.StructField("i", T.IntegerType()),
-        T.StructField("j", T.LongType()),
-        T.StructField("d", T.DecimalType(10, 2)),
-        T.StructField("d2", T.DecimalType(12, 3)),
-        T.StructField("w", T.DecimalType(30, 10)),
-        T.StructField("f", T.FloatType()),
-    ])
-    ctx.register_table("fe_num", spark.createDataFrame(
-        [(1, 2, Decimal("1.50"), Decimal("0.250"), Decimal("1"), 0.5)], num
-    ))
-    arr = T.StructType([
-        T.StructField("a1", T.ArrayType(T.IntegerType())),
-        T.StructField("n2", T.ArrayType(T.ArrayType(T.IntegerType()))),
-        T.StructField("n3", T.ArrayType(T.ArrayType(T.ArrayType(T.IntegerType())))),
-    ])
-    ctx.register_table("fe_arr", spark.createDataFrame(
-        [([1], [[1, 2]], [[[1]]])], arr
-    ))
-    ctx.sql(
-        "CREATE OR REPLACE VIEW fe_ts AS SELECT 1 AS k, "
-        "TIMESTAMP '2020-01-01 00:00:00' AS ts"
-    )
-    ctx.sql(
-        "CREATE OR REPLACE VIEW fe_tz AS SELECT arrow_cast(ts, "
-        "'Timestamp(Nanosecond, Some(\"Europe/Berlin\"))') AS ts FROM fe_ts"
+    """Register the relations the TYPED statements read. They hold no rows
+    (the passes read only schemas), so building them compiles no code."""
+    for name, schema in (
+        ("fe_num", "i INT, j BIGINT, d DECIMAL(10,2), d2 DECIMAL(12,3), "
+                   "w DECIMAL(30,10), f FLOAT"),
+        ("fe_arr", "a1 ARRAY<INT>, n2 ARRAY<ARRAY<INT>>, n3 ARRAY<ARRAY<ARRAY<INT>>>"),
+        ("fe_ts", "k INT, ts TIMESTAMP"),
+    ):
+        ctx.register_table(name, ctx.spark.createDataFrame([], schema))
+    ctx.register_view(
+        "fe_tz",
+        "SELECT arrow_cast(ts, 'Timestamp(Nanosecond, Some(\"Europe/Berlin\"))') "
+        "AS ts FROM fe_ts",
     )
 
 

@@ -1182,3 +1182,107 @@ def test_only_the_lexer_shields_literals():
                 if banned.search(line):
                     offenders.append(f"{rel}:{n}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_only_the_rewrite_module_finds_calls():
+    # sql/rewrite.py is the one module that finds and replaces function
+    # calls: rewrite_calls scans once, bottom-up. At most three scans there
+    # still call _find_call, each because it reads or edits text outside
+    # the call's span, and each says so in a comment right above the call.
+    # No module carries a \x02 marker shielding emitted text from a rescan.
+    import ast
+    import glob
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "arrow_datafusion_spark",
+    )
+    rewrite = os.path.join("sql", "rewrite.py")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        with open(path, encoding="utf-8") as f:
+            text = f.read()
+        lines = text.split("\n")
+        for n, line in enumerate(lines, 1):
+            if "\\x02" in line or "\x02" in line:
+                offenders.append(f"{rel}:{n}: marker: {line.strip()}")
+            if rel != rewrite and "_find_call(" in line:
+                offenders.append(f"{rel}:{n}: call scan: {line.strip()}")
+        if rel != rewrite:
+            continue
+        callers = set()
+        for fn in ast.parse(text).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name == "_find_call":
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "_find_call"
+                ):
+                    callers.add(fn.name)
+                    if not lines[node.lineno - 2].strip().startswith("#"):
+                        offenders.append(
+                            f"{rel}:{node.lineno}: _find_call in {fn.name} "
+                            "without a comment saying why"
+                        )
+        if len(callers) > 3:
+            offenders.append(f"{rel}: {len(callers)} _find_call callers: {sorted(callers)}")
+    assert not offenders, "\n".join(offenders)
+
+
+@pytest.mark.parametrize(
+    "sql,want",
+    [
+        ("SELECT regexp_replace(regexp_replace('aaa', 'a', 'b'), 'a', 'c') AS v", "bca"),
+        ("SELECT array_append(array_append(CAST(NULL AS INT[]), 1), 2) AS v", [1, 2]),
+        ("SELECT array_remove(array_remove(make_array(1, 2, 1, 2), 1), 2) AS v", [1, 2]),
+    ],
+)
+def test_nested_call_keeps_the_reference_semantics(spark, sql, want):
+    # the inner call of the same function is lowered too, not left with
+    # Spark's semantics (first-match regexp_replace, NULL-as-empty
+    # array_append, first-occurrence array_remove)
+    assert SessionContext(spark).sql(sql).first().v == want
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        "regexp_replace({}, 'a', 'b')",
+        "regexp_match({}, 'a')",
+        "to_hex({})",
+        "chr({})",
+        "signum({})",
+        "digest({}, 'md5')",
+        "sha256({})",
+        "encode({}, 'hex')",
+        "decode({}, 'base64')",
+        "overlay({} PLACING 'x' FROM 2)",
+        "date_part('dow', {})",
+        "struct({}, 1)",
+        "approx_distinct({})",
+        "to_timestamp_millis({})",
+        "array_intersect({}, b)",
+        "cardinality({})",
+        "array_remove({}, 1)",
+        "array_has_all({}, b)",
+        "range({})",
+        "arrow_typeof({})",
+        "substr({}, -1)",
+    ],
+)
+def test_same_function_nesting_rewrites_every_depth(call):
+    # each of these lowerings leaves no call of its own name behind, so
+    # the name must be gone from the rewritten text at any nesting depth
+    import re
+
+    from arrow_datafusion_spark.sql.lex import lex
+    from arrow_datafusion_spark.sql.rewrite import _rewrite_sql
+
+    name = call.split("(")[0]
+    text = "x"
+    for depth in range(1, 5):
+        text = call.format(text)
+        out = _rewrite_sql(lex(f"SELECT {text} FROM t"))
+        assert not re.search(rf"\b{name}\s*\(", out, re.IGNORECASE), (depth, out)

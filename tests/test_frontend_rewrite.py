@@ -52,3 +52,50 @@ def test_typed_records_replay(typed_ctx):
         [r for r in RECORDS if r.get("typed")],
         lambda r: fc.rewrite_typed(typed_ctx, r["sql"]),
     )
+
+
+# fast/full tier (tests/conftest.py): reduced derandomized prefix by default
+_FULL = bool(os.environ.get("SPARK_GRAFT_FULL_TESTS"))
+
+
+def _ex(full_count: int) -> int:
+    return full_count if _FULL else max(full_count // 6, 10)
+
+
+def _piece():
+    """(text, text after lexing and unshielding): the lexer drops a line
+    comment (its newline stays) and turns a block comment into one space."""
+    from hypothesis import strategies as st
+
+    word = st.text("abcXYZ019_ ,.()=<>+\n\t", min_size=1, max_size=8)
+    inner = st.text("ab c'\"`-/*+\n", max_size=8)
+    return st.one_of(
+        word.map(lambda w: (w, w)),
+        inner.map(lambda t: "'" + t.replace("'", "''") + "'").map(lambda t: (t, t)),
+        inner.map(lambda t: '"' + t.replace('"', '""') + '"').map(lambda t: (t, t)),
+        inner.map(lambda t: "`" + t.replace("`", "``") + "`").map(lambda t: (t, t)),
+        inner.map(lambda t: ("--" + t.replace("\n", " ") + "\n", "\n")),
+        inner.filter(lambda t: "*/" not in t and not t.startswith("+"))
+        .map(lambda t: ("/*" + t + "*/", " ")),
+        st.text("ab (1)", max_size=6).map(lambda t: ("/*+ " + t + " */",) * 2),
+    )
+
+
+def test_lex_round_trips_all_but_comments():
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from arrow_datafusion_spark.sql.lex import lex
+
+    @settings(
+        max_examples=_ex(600),
+        derandomize=True,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(st.lists(_piece(), max_size=12))
+    def check(pieces):
+        sql = "".join(p[0] for p in pieces)
+        assert lex(sql).unshield() == "".join(p[1] for p in pieces), sql
+
+    check()
