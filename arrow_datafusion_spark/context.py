@@ -2964,13 +2964,22 @@ class SessionContext:
         unresolvable. Resolves columns (alias-aware _from_schema_map), bracket
         literals, make_array/array_repeat chains, and arrow_cast type
         strings — the shapes the reference's array corpus uses. ``lx``
-        resolves arrow_cast's TYPE STRING, a shielded literal."""
+        resolves arrow_cast's TYPE STRING, a shielded literal.
+
+        Calls are rewritten bottom-up, so a flatten in ``arg`` is already
+        Spark's one-level flatten (or the ``(x)`` identity emitted for a
+        flat input): both are seen through."""
         arg = arg.strip()
+        low = arg.lower()
+        if arg.startswith("(") and _match_paren(arg, 0) == len(arg) - 1:
+            return self._array_arg_depth(arg[1:-1], schema, lx)
+        if low.startswith("flatten(") and _match_paren(arg, 7) == len(arg) - 1:
+            d = self._array_arg_depth(arg[8:-1], schema, lx)
+            return d - 1 if d and d > 1 else None
         if arg.startswith("["):
             # whitespace may separate nested brackets: `[ [1], [2] ]`
             m = re.match(r"(?:\[\s*)+", arg)
             return m.group(0).count("[")
-        low = arg.lower()
         for fn in ("make_array(", "array_repeat("):
             if low.startswith(fn) and arg.endswith(")"):
                 inner = _split_top_level(arg[len(fn) : -1])

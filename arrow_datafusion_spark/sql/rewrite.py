@@ -524,11 +524,8 @@ _ARRAY_FN_TEMPLATES = {
         (("array_reverse",), (1,), lambda p: f"reverse({p[0]})"),
         (("array_distinct",), (1,), _t_distinct),
         (("array_except",), (2,), _t_except),
-        # lowered onto array_join's template, which formats the elements
-        # a second time (a no-op on already-formatted text)
-        (("array_to_string",), (2, 3),
-         lambda p: _t_array_to_string([_t_display(p[0]), *p[1:]])),
-        (("array_join", "list_to_string", "list_join"), (2, 3), _t_array_to_string),
+        (("array_to_string", "array_join", "list_to_string", "list_join"),
+         (2, 3), _t_array_to_string),
     )
     for name in names
 }

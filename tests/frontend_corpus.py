@@ -137,6 +137,9 @@ TYPED = (
     "SELECT array_to_string(n2, ','), list_join(n3, '-'), flatten(n3), flatten(a1) FROM fe_arr",
     "SELECT cardinality(n2), cardinality(a1), array_dims(n3), array_length(n2, 2) FROM fe_arr",
     "SELECT array_to_string(make_array(make_array(1, 2), make_array(3)), ',') FROM fe_arr",
+    "SELECT flatten(flatten(n3)) FROM fe_arr",
+    "SELECT flatten(flatten(n2)) FROM fe_arr",
+    "SELECT flatten(flatten(a1)) FROM fe_arr",
     # _rewrite_ts_bigint_bare
     "SELECT ts::bigint, CAST(ts AS BIGINT) / 1000, ts::timestamp::bigint FROM fe_ts",
     # _rewrite_int_division
