@@ -1242,8 +1242,24 @@ def test_only_the_rewrite_module_finds_calls():
 def test_nested_call_keeps_the_reference_semantics(spark, sql, want):
     # the inner call of the same function is lowered too, not left with
     # Spark's semantics (first-match regexp_replace, NULL-as-empty
-    # array_append, first-occurrence array_remove)
-    assert SessionContext(spark).sql(sql).first().v == want
+    # array_append, first-occurrence array_remove). Evaluated without
+    # generated code: classes compiled here would fill the session's
+    # codegen cache ahead of test_plans' warm-plan compile check.
+    confs = {
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        assert SessionContext(spark).sql(sql).first().v == want
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize(
