@@ -213,6 +213,7 @@ def register_udafs(spark) -> None:
     # which the type-hint-based inference cannot resolve
     @pandas_udf("double", PandasUDFType.SCALAR)
     def tdigest_from_list(arrs, q, max_size):
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         out = []
         for arr, qq, mm in zip(arrs, q, max_size):
             if arr is None or len(arr) == 0:
@@ -225,6 +226,7 @@ def register_udafs(spark) -> None:
 
     @pandas_udf("double", PandasUDFType.SCALAR)
     def tdigest_from_list_w(arrs, q):
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         # arr: list of {v, w} structs (nulls pre-filtered by collect_list)
         out = []
         for arr, qq in zip(arrs, q):

@@ -155,9 +155,9 @@ def _fast_band_udf(k: int, num_hashes: int, rows_per_band: int):
         A = rng.integers(1, 1 << 31, size=num_hashes, dtype=np.uint64)
         B = rng.integers(0, M, size=num_hashes, dtype=np.uint64)
         # worker-global, PID-guarded (see _minhash_band_udf's cache note)
-        from arrow_datafusion_spark.operators import _gramcache as GC
+        from arrow_datafusion_spark import worker
 
-        crc_cache = GC.shared_dict(("mh_crc", k))
+        crc_cache = worker.shared_dict(("mh_crc", k))
         crc32 = zlib.crc32
         bands, ngs = [], []
         for t in texts:
@@ -227,9 +227,9 @@ def _minhash_band_udf(k: int, num_hashes: int, rows_per_band: int):
         # every task, so a closure-attribute cache never outlived one task;
         # the module singleton survives in a reused worker, so a warm
         # worker's md5 work collapses to dict hits across tasks too.
-        from arrow_datafusion_spark.operators import _gramcache as GC
+        from arrow_datafusion_spark import worker
 
-        cache = GC.shared_dict(("mh_slices", nseeds, num_hashes))
+        cache = worker.shared_dict(("mh_slices", nseeds, num_hashes))
         md5_ = hashlib.md5
 
         def gram_slices(g: str):
@@ -479,6 +479,9 @@ def _verify_pairs_jaccard(
     ).first()
     small = (stats["bytes"] or 0) <= _BROADCAST_TEXT_BYTES_CAP
     # Negative result (BENCH_SCALE.md r12): shipping gram sets instead of texts lost its A/B.
+    # Negative result: a JVM gram join (explode distinct grams, join on gram within the pairs,
+    # count) gave byte-identical pairs but lost: warm dedup_minhash 1.72 -> 2.36 s at perfbench
+    # sf0.01 and 3.86 -> 13.33 s at --sf 0.1 (medians of 3 seeds each).
     # Repartition the PAIRS (two ids/row) before attaching texts, not
     # after: repartitioning the joined result would ship text_a+text_b
     # (~4 KB/pair — ~300 MB at sf0.1's 80k pairs) through the exchange;
@@ -512,6 +515,7 @@ def _verify_pairs_jaccard(
     if jac is None:
 
         def jac_batch(av, bv):
+            import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
             import pandas as pd
 
             # Each doc appears in ~20 pairs (80k pairs over 4k docs at
@@ -545,7 +549,10 @@ def _verify_pairs_jaccard(
                 out.append(inter / (len(sx) + len(sy) - inter))
             return pd.Series(out)
 
-        jac = F.pandas_udf(jac_batch, "double")
+        # Marked nondeterministic only so that the optimizer keeps the
+        # threshold filter above the projection: pushed below it, the filter
+        # inlines the UDF call and every verified pair runs it twice.
+        jac = F.pandas_udf(jac_batch, "double").asNondeterministic()
         if cache_key is not None:
             _JAC_UDFS[cache_key] = jac
     # Candidate-doc texts: BROADCAST both sides when the measured byte size
@@ -557,11 +564,16 @@ def _verify_pairs_jaccard(
     # correct shape.
     if small:
         a, b = F.broadcast(a), F.broadcast(b)
+    # The stage ends in an exchange that carries only the verified pairs, so
+    # the UDF runs once per candidate pair: a caller's global sort samples
+    # its range bounds in a job of its own, and without this exchange that
+    # job re-ran the whole join and UDF stage (two identical 0.6 s jobs).
     return (
         spread.join(a, "doc_a")
         .join(b, "doc_b")
         .select("doc_a", "doc_b", jac("text_a", "text_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
+        .repartition("doc_a")
     )
 
 
@@ -612,6 +624,7 @@ def simhash16_arrow(tokens: Column) -> Column:
 
         @pandas_udf(IntegerType())
         def _simhash(tok_series: pd.Series) -> pd.Series:
+            import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
             memo: dict[str, int] = {}
 
             def parity_mask(tok: str) -> int:
@@ -669,6 +682,7 @@ def simhash64_arrow(tokens: Column) -> Column:
 
         @pandas_udf(StringType())
         def _simhash64(tok_series: pd.Series) -> pd.Series:
+            import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
             memo: dict[str, int] = {}
 
             def parity_mask(tok: str) -> int:
@@ -746,6 +760,7 @@ def word_ngrams_arrow(tokens: Column, n: int = 3) -> Column:
 
         @pandas_udf(ArrayType(StringType()))
         def _ngrams(tok_series: pd.Series) -> pd.Series:
+            import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
             out = []
             k = n
             for toks in tok_series:

@@ -51,6 +51,7 @@ def extract_byte_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = f"{id_col} long, n_bytes int, payload_md5 string, mean_byte double"
 
     def batches(it: Iterator) -> Iterator:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import hashlib
         import math
 
@@ -105,6 +106,7 @@ def fake_decode_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = f"{id_col} long, width int, height int, pixels array<float>"
 
     def batches(it: Iterator) -> Iterator:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import pandas as pd
 
         def decode(b) -> tuple[int, int, list[float]]:
@@ -136,6 +138,7 @@ def resize_pooled(df: DataFrame, factor: int = 2, id_col: str = "doc_id") -> Dat
     schema = f"{id_col} long, width int, height int, pixels array<float>"
 
     def batches(it: Iterator) -> Iterator:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import numpy as np
         import pandas as pd
 
@@ -172,6 +175,7 @@ def sample_frames(
     schema = f"{id_col} long, frame_idx int, frame_md5 string, n_bytes int"
 
     def batches(it: Iterator) -> Iterator:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import hashlib
 
         import pandas as pd

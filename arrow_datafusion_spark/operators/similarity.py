@@ -179,6 +179,7 @@ def _bucket_norm_udf(planes: int, dims: int):
 
     @pandas_udf("struct<bucket: int, nrm: double>")
     def _bn(vs: pd.Series) -> pd.DataFrame:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         if len(vs) == 0:
             return pd.DataFrame(
                 {"bucket": pd.Series([], dtype="int32"), "nrm": []}
@@ -303,6 +304,7 @@ def _centroid_scores_udf(
     cn = [float(x) for x in cent_norms]
 
     def _score(vs: pd.Series) -> pd.DataFrame:
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         if len(vs) == 0:
             return pd.DataFrame({"nrm": [], "sims": []})
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
@@ -341,6 +343,7 @@ def dot_arrow(a: Column, b: Column) -> Column:
 
         @pandas_udf("double")
         def _pair_dot(av: pd.Series, bv: pd.Series) -> pd.Series:
+            import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
             if len(av) == 0:
                 return pd.Series([], dtype="float64")
             A = np.stack([np.asarray(v, dtype=np.float64) for v in av])

@@ -20,6 +20,15 @@ Scale notes (100 TB target):
   perfbench tpch_df, 10 same-seed A/B pairs (seeds 21-30, 4 cores):
   throughput_qps median 2.17 -> 2.80, latency_p50_s 0.44 -> 0.33 s, and
   14.1 -> 0 compiles per warm statement.
+- Python-task floor: PySpark's worker calls importlib.invalidate_caches()
+  at the start of every task, and on CPython 3.11.7 (3.12 too; not 3.13)
+  that re-reads the central directory of every cached zip importer: 14 for
+  pyspark.zip at 7-18 ms each and 2 for the spark-core jar at 50-54 ms
+  each, 210-296 ms before each Python task starts (three workers, 4 cores;
+  0.1-0.2 ms with the shim). arrow_datafusion_spark.worker, imported by
+  every engine pandas UDF, installs a zip importer per worker process that
+  re-reads an archive only when it changed. A user's own UDF in a worker
+  that never ran an engine UDF still pays the floor.
 """
 
 from __future__ import annotations

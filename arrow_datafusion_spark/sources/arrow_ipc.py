@@ -77,6 +77,7 @@ def write_arrow_partitioned(df, path: str) -> None:
     schema = df.schema
 
     def _write_part(pdfs):
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import pyarrow as pa
         import pyarrow.ipc as ipc
         from pyspark import TaskContext

@@ -444,6 +444,7 @@ def write_avro_partitioned(
     cols = [f["name"] for f in schema["fields"]]
 
     def _write_part(rows_iter):
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         from pyspark import TaskContext
 
         rows = [tuple(r[c] for c in cols) for r in rows_iter]

@@ -127,6 +127,7 @@ def stateful_type_counts(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
+        import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import pandas as pd
 
         n = state.get[0] if state.exists else 0

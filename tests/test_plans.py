@@ -417,14 +417,31 @@ def _compile_count(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def _empty_codegen_cache(spark) -> None:
+    """Invalidate Spark's generated-class cache (the private ``cache`` of
+    the ``CodeGenerator`` object, reached by reflection)."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    cache = field.get(cls.getField("MODULE$").get(None))
+    cache.invalidateAll()
+    assert cache.size() == 0
+
+
 def test_warm_tpch_plans_compile_nothing(spark):
     """build_spark sizes Spark's generated-class cache to hold the 22
     TPC-H plans' classes, so a second pass recompiles none of them (at
     Spark's default of 100 entries every class is evicted before its plan
     runs again). AQE numbers codegen stages in the order query stages
     finish, so a query whose final plan differs between the passes may
-    need new classes; only repeated plans are held to zero."""
+    need new classes; only repeated plans are held to zero. The cache is
+    emptied first, so the classes earlier tests compiled into the shared
+    session cannot push these out."""
     from arrow_datafusion_spark.queries import tpch
+
+    _empty_codegen_cache(spark)
 
     def run_pass() -> dict[str, tuple[str, int]]:
         out = {}
