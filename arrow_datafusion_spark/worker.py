@@ -25,8 +25,8 @@ Two things live here:
   ``zipimport`` only drops the cached entry. The shim swaps those importers,
   and the path hook that makes new ones, for ``StampedZipImporter``, which
   re-reads an archive only when its ``(st_mtime_ns, st_size)`` changed.
-  Importing this module outside a Spark task (the driver, a test) installs
-  nothing.
+  Importing this module outside a Spark task (in the Spark application's
+  own process, or in a test) installs nothing.
 """
 
 from __future__ import annotations
