@@ -42,6 +42,14 @@ from arrow_datafusion_spark.session import (
     load_table,
     prepare,
 )
+from arrow_datafusion_spark.sources.avro import avro_schema_of
+from arrow_datafusion_spark.sources.sink import (
+    EXT_FORMATS,
+    file_target_format,
+    has_files,
+    local_path,
+    write_sink,
+)
 from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex, quote
 from arrow_datafusion_spark.sql.rewrite import (
     _TYPE_MAP,
@@ -153,6 +161,33 @@ def _arrow_type_display(dt) -> str:
         "timestamp_ntz": "Timestamp(Microsecond, None)", "void": "Null",
     }
     return names.get(dt.simpleString(), dt.simpleString())
+
+
+# simpleString → widening rank; a cast up the ranks never nulls a value
+_WIDENING = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3, "float": 4, "double": 5}
+
+
+def _cast_keeps_values(src, dst) -> bool:
+    """Whether casting any non-NULL ``src`` value to ``dst`` yields a
+    non-NULL value, so an INSERT's lossy-cast check cannot fire."""
+    a, b = src.simpleString(), dst.simpleString()
+    return (
+        a == b
+        or a == "void"
+        or b == "string"
+        or (a in _WIDENING and b in _WIDENING and _WIDENING[a] <= _WIDENING[b])
+        or {a, b} <= {"date", "timestamp", "timestamp_ntz"}
+    )
+
+
+def _written_rows(done: DataFrame) -> int:
+    """Rows an INSERT that spark.sql ran eagerly wrote: its write command's
+    ``numOutputRows`` metric, read off the executed plan (no job). AQE
+    wraps the command in a result stage when its source shuffles."""
+    node = done._jdf.queryExecution().executedPlan().commandPhysicalPlan()
+    while (name := node.getClass().getSimpleName()) != "DataWritingCommandExec":
+        node = node.executedPlan() if name == "AdaptiveSparkPlanExec" else node.plan()
+    return node.metrics().get("numOutputRows").get().value()
 
 
 # DataFusion aws.* OPTION keys → per-bucket fs.s3a.bucket.<b>.* conf keys
@@ -574,27 +609,30 @@ class SessionContext:
         return _resolve_object_store_location(self.spark, path, options)
 
     def register_parquet(self, name: str, path: str) -> None:
-        self.register_table(
-            name, self.spark.read.parquet(self.register_object_store(path))
+        loc = self.register_object_store(path)
+        df = self.spark.read.parquet(loc)
+        self.register_table(name, df)
+        # a refresh re-lists the files under the schema read here, like the
+        # reference's ListingTable, and so runs no schema-inference job
+        self._track_path(
+            name,
+            path,
+            lambda: self.register_table(name, self.spark.read.schema(df.schema).parquet(loc)),
         )
-        self._track_path(name, path, lambda: self.register_parquet(name, path))
 
     def _track_path(self, name: str, path: str, redo) -> None:
         base = re.split(r"[*?\[]", path, 1)[0].rstrip("/")
         self._path_tables[name] = (base, redo)
 
     def _refresh_path_tables(self, written_path: str) -> None:
-        """Re-register any path table whose base directory contains the
+        """Re-register any path table whose base path is, or contains, the
         just-written target, so its file listing picks up the new files."""
         import os as _os
 
-        target = _os.path.abspath(
-            written_path[len("file://"):]
-            if written_path.startswith("file://")
-            else written_path
-        )
+        target = _os.path.abspath(local_path(written_path))
         for name, (base, redo) in list(self._path_tables.items()):
-            if target.startswith(_os.path.abspath(base) + _os.sep):
+            base = _os.path.abspath(base)
+            if target == base or target.startswith(base + _os.sep):
                 redo()
 
     def register_csv(self, name: str, path: str, schema: str | None = None, **options) -> None:
@@ -1292,26 +1330,24 @@ class SessionContext:
     def _sql_insert(self, lx: Lexed, args) -> DataFrame | None:
         """DataFusion's INSERT reports the inserted row count as a one-row
         `count` result (DataSinkExec); Spark's INSERT returns nothing, so
-        the count comes from a before/after table count."""
+        the count comes from the write: the command's own output-row
+        metric, or an Observation on the coerced write."""
         m = re.match(r"\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z0-9_]*)\b", lx.text, re.IGNORECASE)
         if m is None:
             return None
         target = m.group(1)
         if target in self._external_sinks:
             return self._insert_external(target, lx, args)
-        self._validate_insert(target, lx, args)
-        try:
-            before = self.spark.table(target).count()
-        except Exception:
-            before = None
+        src, body, cols = self._insert_columns(target, lx, args)
+        checks = self._insert_checks(
+            target, src, cols, self._not_null.get(target.lower(), frozenset())
+        )
+        if checks:
+            self._raise_insert_checks(src.agg(*checks).first().asDict())
         has_collist = bool(re.match(
             r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*\(", lx.text, re.IGNORECASE
         ))
-        body_is_values = bool(re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*(?:\([^)]*\))?\s*\(?\s*VALUES\b",
-            lx.text, re.IGNORECASE,
-        ))
-        if body_is_values or (
+        if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE) or (
             has_collist and self._col_defaults.get(target.lower())
         ):
             # coerced path: evaluates recorded column DEFAULTs Spark's
@@ -1323,11 +1359,10 @@ class SessionContext:
             # defaultParallelism files, scrambling scan order).
             # Literal rows are bounded by the statement text —
             # coalesce(1) cannot become a scale problem.
-            self._insert_coerced(target, lx, args)
-            after = self.spark.table(target).count()
-            return self._result([(after - before,)], "count bigint")
+            n = self._insert_coerced(target, src, cols)
+            return self._result([(n,)], "count bigint")
         try:
-            self._spark_sql(lx, args).collect()
+            done = self._spark_sql(lx, args)
         except Exception:
             # DataFusion COERCES literals to the target column types
             # (string → date/timestamp/decimal); Spark's ANSI store-
@@ -1336,11 +1371,10 @@ class SessionContext:
             # list fills unnamed columns with NULL (the reference's
             # Insert planning); coalesce(1) keeps literal-row order
             # (MemTable insertion order is observable downstream).
-            self._insert_coerced(target, lx, args)
-        if before is None:
-            return self._result([], "count bigint")
-        after = self.spark.table(target).count()
-        return self._result([(after - before,)], "count bigint")
+            n = self._insert_coerced(target, src, cols)
+        else:
+            n = _written_rows(done)
+        return self._result([(n,)], "count bigint")
 
     def _reregister_external(self, name: str) -> None:
         """(Re-)register an external sink table from its on-disk files —
@@ -1349,17 +1383,7 @@ class SessionContext:
         file schema and table partition columns)."""
         sink = self._external_sinks[name]
         fmt, path, parts = sink["fmt"], sink["path"], sink["parts"]
-        import os as _os
-
-        has_files = _os.path.isfile(path) or (
-            _os.path.isdir(path)
-            and any(
-                not f.startswith((".", "_"))
-                for _, _, fs in _os.walk(path)
-                for f in fs
-            )
-        )
-        if not has_files:
+        if not has_files(path):
             self.register_table(
                 name, self._result([], sink["schema"])
             )
@@ -1381,10 +1405,7 @@ class SessionContext:
             if data_schema:
                 reader = reader.schema(data_schema)
             if fmt == "csv":
-                ropts = {"header": sink["header"], **sink.get("csv_lex", {})}
-                if sink.get("delim"):
-                    ropts["sep"] = sink["delim"]
-                df = reader.options(**ropts).csv(path)
+                df = reader.options(**sink["options"]).csv(path)
             elif fmt == "json":
                 df = reader.json(path)
             elif fmt == "avro":
@@ -1406,88 +1427,36 @@ class SessionContext:
         self.register_table(name, df)
         self._track_path(name, path, lambda: self._reregister_external(name))
 
-    @staticmethod
-    def _insert_parts(lx: Lexed) -> tuple[str | None, Lexed]:
-        """(column list, source query) of ``INSERT INTO t [(cols)] source``."""
-        m = re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
-            r"(?:\(([^)]*)\))?\s*(.*)$",
-            lx.text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        return m.group(1), lx.derive(m.group(2).strip().rstrip(";"))
-
     def _insert_external(self, target: str, lx: Lexed, args) -> DataFrame:
         """INSERT INTO an external table → append files at its location
         (the reference's FileSinkExec), then re-list. Returns the count."""
         sink = self._external_sinks[target]
-        collist, body = self._insert_parts(lx)
-        schema = self.spark.table(target).schema
-        names = (
-            [c.strip().lower() for c in collist.split(",")]
-            if collist
-            else [f.name.lower() for f in schema]
+        src, body, cols = self._insert_columns(target, lx, args)
+        checks = self._insert_checks(
+            target, src, cols, sink["not_null"], lossy_casts=True
         )
-        if len(names) != len(set(names)):
-            dup = next(c for c in names if names.count(c) > 1)
-            raise ValueError(
-                f"Schema contains duplicate unqualified field name {dup}"
-            )
-        src = self._spark_sql(body, args)
-        if len(src.columns) != len(names):
-            raise ValueError("Column count doesn't match insert query!")
-        sel, checks = [], []
-        not_null = sink.get("not_null", set())
-        for f in schema:
-            if f.name.lower() in names:
-                i = names.index(f.name.lower())
-                src_c = src[src.columns[i]]
-                cast_c = src_c.cast(f.dataType)
-                sel.append(cast_c.alias(f.name))
-                # the reference REJECTS lossy casts (Arrow cast error);
-                # Spark's non-ANSI cast nulls them — detect and raise
-                checks.append(
-                    F.sum(
-                        F.when(src_c.isNotNull() & cast_c.isNull(), 1).otherwise(0)
-                    ).alias(f"cast__{f.name}")
-                )
-                if f.name.lower() in not_null:
-                    checks.append(
-                        F.sum(F.when(cast_c.isNull(), 1).otherwise(0)).alias(
-                            f"null__{f.name}"
-                        )
-                    )
-            else:
-                d = self._col_defaults.get(target.lower(), {}).get(f.name.lower())
-                if f.name.lower() in not_null and (
-                    d is None or d.strip().lower() == "null"
-                ):
-                    raise ValueError(
-                        f"Invalid batch column at '{f.name}' has null but "
-                        "schema specifies non-nullable"
-                    )
-                fill = F.expr(d) if d is not None else F.lit(None)
-                sel.append(fill.cast(f.dataType).alias(f.name))
-        # one aggregate gives the row count and the pre-write checks
-        crow = src.agg(F.count(F.lit(1)).alias("n"), *checks).first().asDict()
-        n = crow.pop("n")
-        for k, v in crow.items():
-            if v:
-                kind, col = k.split("__", 1)
-                if kind == "cast":
-                    raise ValueError(
-                        f"Cast error: cannot cast value to {col}'s type"
-                    )
-                raise ValueError(
-                    f"Invalid batch column at '{col}' has null but "
-                    "schema specifies non-nullable"
-                )
-        out = src.select(*sel)
+        # an UNBOUNDED single file is rewritten as old ∪ new rows, so the
+        # write's own count would include the old ones: count the new rows
+        # in the checks' aggregate instead
+        n = None
+        if checks or sink["single_file"]:
+            counts = src.agg(F.count(F.lit(1)).alias("n"), *checks).first().asDict()
+            n = counts.pop("n")
+            self._raise_insert_checks(counts)
+        out = self._insert_select(target, src, cols)
         if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE):
             out = out.coalesce(1)  # keep literal-row order in the file
-        fmt, path, parts = sink["fmt"], sink["path"], sink["parts"]
-        if sink.get("single_file"):
-            if not sink.get("unbounded"):
+        fmt, path = sink["fmt"], sink["path"]
+        # avro parts are written with the DECLARED table schema, not this
+        # batch's inferred nullability — all part files of one table share
+        # one Avro schema
+        options = (
+            {"schema": avro_schema_of(StructType([f for f, _ in cols]))}
+            if fmt == "avro"
+            else sink["options"]
+        )
+        if sink["single_file"]:
+            if not sink["unbounded"]:
                 # ListingTable rejects single-file inserts; only the
                 # StreamTable (UNBOUNDED) path appends to one file
                 raise ValueError(
@@ -1496,94 +1465,15 @@ class SessionContext:
                     "`/`. To append to an existing file use StreamTable, "
                     "e.g. by using CREATE UNBOUNDED EXTERNAL TABLE"
                 )
-            self._insert_single_file(target, out, sink)
-            self._reregister_external(target)
-            return self._result([(n,)], "count bigint")
-        if fmt == "arrow":
-            self._insert_external_arrow(out, path, parts)
-        elif fmt == "avro":
-            if parts:
-                raise NotImplementedError(
-                    "partitioned Avro INSERT sinks are not supported"
-                )
-            from arrow_datafusion_spark.sources.avro import (
-                avro_schema_of,
-                write_avro_partitioned,
-            )
-
-            # write with the DECLARED table schema, not this batch's
-            # inferred nullability — all part files of one table share
-            # one Avro schema
-            write_avro_partitioned(
-                out, path, schema=avro_schema_of(schema), mode="append"
-            )
+            if os.path.isfile(path):
+                out = self.table(target).unionAll(out)
+            write_sink(out, fmt, path, layout="single_file", options=options)
         else:
-            w = out.write.mode("append")
-            if fmt == "csv":
-                wopts = {"header": sink["header"], **sink.get("csv_lex", {})}
-                if sink.get("delim"):
-                    wopts["sep"] = sink["delim"]
-                w = w.options(**wopts)
-            if parts:
-                w = w.partitionBy(*parts)
-            w.format(fmt).save(path)
+            n = write_sink(
+                out, fmt, path, partition_by=sink["parts"], options=options
+            )
         self._reregister_external(target)
         return self._result([(n,)], "count bigint")
-
-    def _insert_single_file(self, target: str, out: DataFrame, sink) -> None:
-        """UNBOUNDED single-file sink: append the new rows to the one file
-        (StreamTable append semantics) via read-union-rewrite."""
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-
-        fmt, path = sink["fmt"], sink["path"]
-        combined = out
-        if _os.path.isfile(path):
-            combined = self.table(target).unionAll(out)
-        wopts: dict = {}
-        if fmt == "csv":
-            wopts = {"header": sink["header"], **sink.get("csv_lex", {})}
-            if sink.get("delim"):
-                wopts["sep"] = sink["delim"]
-        tmp = path + ".__sink_tmp__"
-        combined.coalesce(1).write.mode("overwrite").options(**wopts).format(
-            fmt
-        ).save(tmp)
-        parts_files = sorted(_glob.glob(_os.path.join(tmp, "part-*")))
-        _os.makedirs(_os.path.dirname(path) or ".", exist_ok=True)
-        if _os.path.exists(path):
-            _os.remove(path)
-        if parts_files:
-            _shutil.move(parts_files[0], path)
-        else:
-            open(path, "w").close()
-        _shutil.rmtree(tmp, ignore_errors=True)
-
-    def _insert_external_arrow(self, out: DataFrame, path: str, parts) -> None:
-        """Arrow IPC sink files (interchange format — driver-materialized
-        like _copy_to_arrow; large exports should prefer parquet)."""
-        import os as _os
-
-        import pyarrow as _pa
-
-        def _write_one(df, d) -> None:
-            _os.makedirs(d, exist_ok=True)
-            seq = sum(1 for f in _os.listdir(d) if f.endswith(".arrow"))
-            tbl = df.toArrow()
-            with _pa.OSFile(_os.path.join(d, f"part-{seq}.arrow"), "wb") as fh:
-                with _pa.ipc.new_file(fh, tbl.schema) as w:
-                    w.write_table(tbl)
-
-        if not parts:
-            _write_one(out, path)
-            return
-        for r in out.select(*parts).distinct().collect():
-            sub, d = out, path
-            for p in parts:
-                sub = sub.filter(F.col(p) == r[p])
-                d = _os.path.join(d, f"{p}={r[p]}")
-            _write_one(sub.drop(*parts), d)
 
     def _sql_describe(self, name: str) -> DataFrame:
         """DataFusion's DESCRIBE: (column_name, data_type, is_nullable)
@@ -1698,72 +1588,117 @@ class SessionContext:
         else:
             self._col_defaults.pop(name.lower(), None)
 
-    def _validate_insert(self, target: str, lx: Lexed, args) -> None:
-        """The reference's Insert planning checks, which Spark's native
-        INSERT lets through (insert.slt): duplicate names in the column
-        list, source/target column-count mismatch, and NULLs reaching a
-        declared NOT NULL column (missing from the column list, or
-        present in the inserted data)."""
-        collist, body = self._insert_parts(lx)
-        schema_cols = [f.name.lower() for f in self.spark.table(target).schema]
+    def _insert_columns(self, target: str, lx: Lexed, args):
+        """The reference's INSERT column mapping (insert.slt), shared by
+        catalog and external targets: (source frame, source query, and per
+        target column in schema order ``(field, source column index or
+        None)``, None where a column list omits the column). Rejects
+        duplicate names in the column list and a source/target
+        column-count mismatch, which Spark's native INSERT lets through.
+        Plans the source only — no job."""
+        m = re.match(
+            r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
+            r"(?:\(([^)]*)\))?\s*(.*)$",
+            lx.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        collist, body = m.group(1), lx.derive(m.group(2).strip().rstrip(";"))
+        schema = self.spark.table(target).schema
         names = (
             [c.strip().strip('"`').lower() for c in collist.split(",")]
             if collist
-            else schema_cols
+            else [f.name.lower() for f in schema]
         )
         if len(names) != len(set(names)):
             dup = next(c for c in names if names.count(c) > 1)
             raise ValueError(
                 f"Schema contains duplicate unqualified field name {dup}"
             )
-        src = self._spark_sql(body, args)  # plan only — no job
+        src = self._spark_sql(body, args)
         if len(src.columns) != len(names):
             raise ValueError("Column count doesn't match insert query!")
-        nn = self._not_null.get(target.lower(), frozenset())
-        if not nn:
-            return
-        dflts = self._col_defaults.get(target.lower(), {})
-        for col in nn - set(names):
-            d = dflts.get(col)
-            if d is not None and d.strip().lower() != "null":
-                continue  # a non-NULL default fills the column
-            raise ValueError(
-                f"Invalid batch column at '{col}' has null but schema "
-                "specifies non-nullable"
-            )
-        checks = [
-            F.sum(F.when(src[src.columns[names.index(col)]].isNull(), 1)
-                  .otherwise(0)).alias(col)
-            for col in nn
+        cols = [
+            (f, names.index(f.name.lower()) if f.name.lower() in names else None)
+            for f in schema
         ]
-        nulls = src.agg(*checks).first()
-        for col in nn:
-            if nulls[col]:
+        return src, body, cols
+
+    def _insert_checks(
+        self, target: str, src: DataFrame, cols, not_null, lossy_casts: bool = False
+    ) -> list:
+        """The pre-write checks of an INSERT, as aggregate columns over the
+        source (empty when none can fail). NULLs must not reach a declared
+        NOT NULL column: an omitted one without a non-NULL DEFAULT is
+        rejected here, a present one is counted. With ``lossy_casts``
+        (file sinks) a cast that turns a value NULL is counted too: the
+        reference REJECTS lossy casts (Arrow cast error) where Spark's
+        non-ANSI cast nulls them."""
+        dflts = self._col_defaults.get(target.lower(), {})
+        checks = []
+        for f, i in cols:
+            key = f.name.lower()
+            if i is None:
+                d = dflts.get(key)
+                if key in not_null and (d is None or d.strip().lower() == "null"):
+                    raise ValueError(
+                        f"Invalid batch column at '{f.name}' has null but "
+                        "schema specifies non-nullable"
+                    )
+                continue
+            src_c = src[src.columns[i]]
+            if lossy_casts and not _cast_keeps_values(
+                src.schema[i].dataType, f.dataType
+            ):
+                cast_c = src_c.cast(f.dataType)
+                checks.append(
+                    F.sum(
+                        F.when(src_c.isNotNull() & cast_c.isNull(), 1).otherwise(0)
+                    ).alias(f"cast__{f.name}")
+                )
+            if key in not_null:
+                checks.append(
+                    F.sum(F.when(src_c.isNull(), 1).otherwise(0)).alias(
+                        f"null__{f.name}"
+                    )
+                )
+        return checks
+
+    @staticmethod
+    def _raise_insert_checks(counts: dict) -> None:
+        for k, v in counts.items():
+            if v:
+                kind, col = k.split("__", 1)
+                if kind == "cast":
+                    raise ValueError(
+                        f"Cast error: cannot cast value to {col}'s type"
+                    )
                 raise ValueError(
-                    f"Invalid batch column at '{col}' has null but schema "
-                    "specifies non-nullable"
+                    f"Invalid batch column at '{col}' has null but "
+                    "schema specifies non-nullable"
                 )
 
-    def _insert_coerced(self, target: str, lx: Lexed, args) -> None:
-        """INSERT with the source cast to the target schema (see caller)."""
-        collist, body = self._insert_parts(lx)
-        schema = self.spark.table(target).schema
-        names = (
-            [c.strip().lower() for c in collist.split(",")]
-            if collist
-            else [f.name.lower() for f in schema]
-        )
-        src = self._spark_sql(body, args)
+    def _insert_select(self, target: str, src: DataFrame, cols) -> DataFrame:
+        """The source cast positionally to the target schema; a column the
+        column list omits takes its recorded DEFAULT, else NULL."""
+        dflts = self._col_defaults.get(target.lower(), {})
         sel = []
-        for f in schema:
-            if f.name.lower() in names:
-                i = names.index(f.name.lower())
-                sel.append(src[src.columns[i]].cast(f.dataType).alias(f.name))
+        for f, i in cols:
+            if i is not None:
+                c = src[src.columns[i]]
             else:
-                d = self._col_defaults.get(target.lower(), {}).get(f.name.lower())
-                fill = F.expr(d) if d is not None else F.lit(None)
-                sel.append(fill.cast(f.dataType).alias(f.name))
-        src.select(*sel).coalesce(1).write.insertInto(target)
+                d = dflts.get(f.name.lower())
+                c = F.expr(d) if d is not None else F.lit(None)
+            sel.append(c.cast(f.dataType).alias(f.name))
+        return src.select(*sel)
+
+    def _insert_coerced(self, target: str, src: DataFrame, cols) -> int:
+        """INSERT with the source cast to the target schema (see caller);
+        returns the rows written, observed on the write."""
+        written = Observation()
+        self._insert_select(target, src, cols).coalesce(1).observe(
+            written, F.count(F.lit(1)).alias("n")
+        ).write.insertInto(target)
+        return written.get["n"]
 
     def _sql_create_table_cols(
         self, name: str, coldefs: str, body: Lexed, if_not_exists: bool, args
@@ -2327,19 +2262,19 @@ class SessionContext:
         delim = lx.string(md.group(1)) if md else opts.get(
             "format.delimiter", opts.get("delimiter")
         )
-        # CSV lexical options (file_format/csv.rs CsvOptions): quote /
-        # escape / comment map 1:1 onto Spark's CSV reader options
-        csv_lex: dict = {}
+        # the table's Spark CSV options, for its reads and its INSERT
+        # writes alike. The lexical ones (file_format/csv.rs CsvOptions):
+        # quote / escape / comment map 1:1 onto Spark's CSV options
+        csv_opts: dict = {"header": header}
+        if delim:
+            csv_opts["sep"] = delim
         if "format.quote" in opts:
-            csv_lex["quote"] = opts["format.quote"]
-        if "format.escape" in opts:
-            csv_lex["escape"] = opts["format.escape"]
-        else:
-            # arrow's CSV dialect escapes quotes by DOUBLING ("") by
-            # default; univocity's default is backslash — pin to arrow's
-            csv_lex["escape"] = '"'
+            csv_opts["quote"] = opts["format.quote"]
+        # arrow's CSV dialect escapes quotes by DOUBLING ("") by default;
+        # univocity's default is backslash — pin to arrow's
+        csv_opts["escape"] = opts.get("format.escape", '"')
         if "format.comment" in opts:
-            csv_lex["comment"] = opts["format.comment"]
+            csv_opts["comment"] = opts["format.comment"]
         if if_not_exists and self.table_exist(name):
             return self._empty_result()
         # object-store LOCATIONs: register credentials/scheme with Spark's
@@ -2369,7 +2304,7 @@ class SessionContext:
             if mp
             else []
         )
-        local = path[len("file://") :] if path.startswith("file://") else path
+        local = local_path(path)
         if not re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", local) and fmt in (
             "parquet",
             "csv",
@@ -2378,13 +2313,6 @@ class SessionContext:
             "arrow",
             "avro",
         ):
-            import os as _os
-
-            single_file = bool(
-                re.search(
-                    r"\.(csv|json|ndjson|parquet|arrow|avro)$", local, re.IGNORECASE
-                )
-            )
             if schema and sink_parts:
                 # the reference moves partition columns to the END of the
                 # logical schema (insert_to_external.slt:159 'partitioned
@@ -2413,23 +2341,13 @@ class SessionContext:
                 "fmt": "json" if fmt == "ndjson" else fmt,
                 "path": local,
                 "schema": schema,
-                "header": header,
-                "delim": delim,
-                "csv_lex": csv_lex,
+                "options": csv_opts if fmt == "csv" else {},
                 "parts": sink_parts,
-                "single_file": single_file,
+                "single_file": file_target_format(local) is not None,
                 "unbounded": unbounded,
                 "not_null": not_null,
             }
-            has_files = _os.path.isfile(local) or (
-                _os.path.isdir(local)
-                and any(
-                    not f.startswith((".", "_"))
-                    for _, _, fs in _os.walk(local)
-                    for f in fs
-                )
-            )
-            if not has_files:
+            if not has_files(local):
                 if schema is None:
                     raise ValueError(
                         "CREATE EXTERNAL TABLE over an empty location "
@@ -2452,10 +2370,7 @@ class SessionContext:
         if fmt == "parquet":
             self.register_parquet(name, path)
         elif fmt == "csv":
-            kw: dict = {"header": header, **csv_lex}
-            if delim:
-                kw["sep"] = delim
-            self.register_csv(name, path, schema=schema, **kw)
+            self.register_csv(name, path, schema=schema, **csv_opts)
         elif fmt in ("json", "ndjson"):
             self.register_json(name, path, schema=schema)
         elif fmt == "avro":
@@ -3518,11 +3433,11 @@ class SessionContext:
         return rewrite_calls(q, "median", call)
 
     def _sql_copy_to(self, lx: Lexed, args=None) -> DataFrame:
-        """``COPY (query | table) TO 'path' [STORED AS fmt]`` →  df.write.
+        """``COPY (query | table) TO 'path' [STORED AS fmt]`` → write_sink.
 
         Mirrors DataFusion's CopyTo statement (sql/src/statement.rs:186,
         logical plan CopyTo): the source runs as a regular query, the sink
-        is a Spark file writer (distributed, per-partition files), and the
+        is the executor-side file writer (sources/sink.py), and the
         statement returns a single-row ``count`` DataFrame like the
         reference does.
         """
@@ -3576,24 +3491,11 @@ class SessionContext:
                     "Format not explicitly set and unable to get file "
                     "extension! Use STORED AS to define file format."
                 )
-            ext = path.rsplit(".", 1)[-1].lower()
-            fmt = {"csv": "csv", "json": "json", "ndjson": "json", "avro": "avro"}.get(
-                ext, "parquet"
-            )
+            fmt = EXT_FORMATS.get(path.rsplit(".", 1)[-1].lower(), "parquet")
         if source.startswith("("):
             df = self._spark_sql(lx.derive(source[1:-1].strip()), args)
         else:
             df = self.table(source)
-        # COPY TO '<name>.<ext>' writes ONE FILE in the reference (a later
-        # directory-scan table over the parent must find real files, not
-        # Spark part-file directories): write a single-partition temp dir
-        # and move the part file to the target. Extension-less directory
-        # targets keep the distributed per-partition layout, and APPEND new
-        # files (the reference adds files to an existing directory;
-        # copy.slt:188 expects 2+4 = 6 rows after a second COPY).
-        single_file = bool(
-            re.search(r"\.(csv|json|ndjson|parquet|arrow|avro)$", path, re.IGNORECASE)
-        ) and not re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", path.replace("file://", ""))
         # writer options from COPY OPTIONS (format.* namespace)
         header = copts.get("format.has_header", "false").lower() in ("true", "1")
         compression = copts.get("format.compression", "")
@@ -3618,123 +3520,35 @@ class SessionContext:
             # univocity quotes comment-leading fields unless the writer's
             # comment char is moved off '#'
             wopts["comment"] = "\u0001"
-        if compression and compression != "uncompressed":
+        if compression and compression != "uncompressed" and fmt not in ("arrow", "avro"):
             wopts["compression"] = compression
-        if fmt == "arrow":
-            self._copy_to_arrow(df, path, single_file)
-            n = df.count()
-            return self._result([(n,)], "count bigint")
-        if fmt == "avro":
-            self._copy_to_avro(df, path, single_file)
-            n = df.count()
-            return self._result([(n,)], "count bigint")
-        if single_file:
-            writer_df = df.coalesce(1)
-        else:
-            # a directory may hold files from earlier writes, so its count
-            # is observed on the write itself (one job, no second run)
-            written = Observation()
-            writer_df = df.observe(written, F.count(F.lit(1)).alias("n"))
-        writer = writer_df.write.options(**wopts)
-        if part_cols:
-            if copts.get("execution.keep_partition_by_columns", "").lower() == "true":
-                raise NotImplementedError(
-                    "keep_partition_by_columns: Spark's partitioned writer "
-                    "always factors partition columns into the directory key"
-                )
-            writer = writer.partitionBy(*part_cols)
-        if single_file:
-            import glob as _glob
-            import os as _os
-            import shutil as _shutil
-
-            local = path[len("file://") :] if path.startswith("file://") else path
-            tmp = local + ".__copy_tmp__"
-            writer.mode("overwrite").format(fmt).save(tmp)
-            parts = sorted(_glob.glob(_os.path.join(tmp, "part-*")))
-            _os.makedirs(_os.path.dirname(local) or ".", exist_ok=True)
-            if _os.path.isdir(local):
-                _shutil.rmtree(local)
-            if parts:
-                _shutil.move(parts[0], local)
-            else:  # empty result: emit an empty file like the reference
-                open(local, "w").close()
-            _shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            writer.mode("append").format(fmt).save(path)
+        if part_cols and copts.get(
+            "execution.keep_partition_by_columns", ""
+        ).lower() == "true":
+            raise NotImplementedError(
+                "keep_partition_by_columns: Spark's partitioned writer "
+                "always factors partition columns into the directory key"
+            )
+        # COPY TO '<name>.<ext>' writes ONE FILE in the reference (a later
+        # directory-scan table over the parent must find real files, not
+        # Spark part-file directories). Extension-less directory targets
+        # keep the distributed per-partition layout, and APPEND new files
+        # (the reference adds files to an existing directory; copy.slt:188
+        # expects 2+4 = 6 rows after a second COPY).
+        n = write_sink(
+            df,
+            fmt,
+            path,
+            layout="single_file" if file_target_format(path) else "append",
+            partition_by=part_cols,
+            options=wopts,
+        )
         # tables registered over this path (or a parent directory) hold a
         # file listing pinned at registration — re-register them so they
         # see the new files (the reference's ListingTable re-lists per
         # query)
         self._refresh_path_tables(path)
-        if not single_file:
-            return self._result([(written.get["n"],)], "count bigint")
-        # a single file's row count from the WRITTEN file (parquet: footer
-        # metadata only), not a re-execution of the source query. Empty
-        # csv/json results write no data files and defeat schema inference —
-        # fall back to executing the source's count (DataFusion returns
-        # count=0 there).
-        reader = self.spark.read.options(**wopts)
-        try:
-            n = reader.format(fmt).load(path).count()
-        except Exception:
-            n = df.count()
         return self._result([(n,)], "count bigint")
-
-    def _copy_to_avro(self, df: DataFrame, path: str, single_file: bool) -> None:
-        """COPY ... STORED AS AVRO → container files via the pure-Python
-        writer (sources/avro.py — BEYOND the reference, whose Avro surface
-        is read-only). Directory targets write one part per DataFrame
-        partition (executor-side, distributed) and APPEND on re-COPY like
-        the other formats; a '<name>.avro' target writes one file."""
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-
-        from arrow_datafusion_spark.sources.avro import write_avro_partitioned
-
-        local = path[len("file://") :] if path.startswith("file://") else path
-        if single_file:
-            tmp = local + ".__avro_tmp__"
-            write_avro_partitioned(df.coalesce(1), tmp)
-            parts = sorted(_glob.glob(_os.path.join(tmp, "part-*.avro")))
-            _os.makedirs(_os.path.dirname(local) or ".", exist_ok=True)
-            if _os.path.isdir(local):
-                _shutil.rmtree(local)
-            if parts:
-                _shutil.move(parts[0], local)
-            else:  # empty result: a valid header-only container
-                from arrow_datafusion_spark.sources.avro import (
-                    avro_schema_of,
-                    write_avro,
-                )
-
-                write_avro(local, avro_schema_of(df.schema), [])
-            _shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            write_avro_partitioned(df, local, mode="append")
-        self._refresh_path_tables(path)
-
-    def _copy_to_arrow(self, df: DataFrame, path: str, single_file: bool) -> None:
-        """COPY ... STORED AS ARROW → one Arrow IPC file (the reference's
-        ArrowWriter also emits a single stream per target). Arrow is the
-        interchange sink — materialized via the driver like the reference's
-        single-writer sink; large exports should prefer parquet."""
-        import os as _os
-
-        import pyarrow as _pa
-
-        local = path[len("file://") :] if path.startswith("file://") else path
-        tbl = df.toArrow()
-        if single_file:
-            target = local
-            _os.makedirs(_os.path.dirname(local) or ".", exist_ok=True)
-        else:
-            _os.makedirs(local, exist_ok=True)
-            target = _os.path.join(local, "part-0.arrow")
-        with _pa.OSFile(target, "wb") as f:
-            with _pa.ipc.new_file(f, tbl.schema) as w:
-                w.write_table(tbl)
 
     def _sql_recursive(self, lx: Lexed, args=None) -> DataFrame:
         """Evaluate ``WITH RECURSIVE c1 AS (...), c2 AS (...) <select>``.

@@ -157,7 +157,8 @@ class DataFrame:
     def write_avro(self, path: str, mode: str = "overwrite", **opts) -> None:
         """Distributed Avro container-file sink (one part per partition)
         — BEYOND the reference, whose Avro surface is read-only
-        (file_format/avro.rs); reads back via register_avro."""
-        from arrow_datafusion_spark.sources.avro import write_avro_partitioned
+        (file_format/avro.rs); reads back via register_avro. ``opts`` are
+        the Avro writer's ``schema``, ``codec`` and ``rows_per_block``."""
+        from arrow_datafusion_spark.sources.sink import write_sink
 
-        write_avro_partitioned(self.df, path, mode=mode, **opts)
+        write_sink(self.df, "avro", path, layout=mode, options=opts)

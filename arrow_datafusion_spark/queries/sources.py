@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrow_datafusion_spark.context import SessionContext
+from arrow_datafusion_spark.sources.sink import write_sink
 from arrow_datafusion_spark.session import load_tables
 
 _DEC = "decimal(38,6)"
@@ -43,12 +44,12 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered aggregate. Exercises CsvExec + csv writer both ways."""
     ctx = SessionContext(spark)
     path = _tmp("customer_csv")
-    (
-        _t(spark, sf_dir, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
+    write_sink(
+        _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal"),
+        "csv",
+        path,
+        layout="overwrite",
+        options={"header": True},
     )
     ctx.register_csv("customer_csv", path)
     return ctx.sql("""
@@ -75,11 +76,11 @@ def scan_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Exercises NdJsonExec + json writer."""
     ctx = SessionContext(spark)
     path = _tmp("events_json")
-    (
-        _t(spark, sf_dir, "events")
-        .select("event_id", "event_type", "value")
-        .write.mode("overwrite")
-        .json(path)
+    write_sink(
+        _t(spark, sf_dir, "events").select("event_id", "event_type", "value"),
+        "json",
+        path,
+        layout="overwrite",
     )
     ctx.register_json("events_json", path)
     return ctx.sql("""
@@ -101,15 +102,16 @@ GROUP BY event_type ORDER BY event_type
 # --------------------------------------------------------------------------
 def scan_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → per-partition Arrow IPC files (executor-side
-    mapInPandas sink — nothing through the driver) → register_arrow
+    mapInArrow sink — nothing through the driver) → register_arrow
     (batch-parallel arrow_ipc data source, ArrowExec role) → per-lang
     aggregate."""
-    from arrow_datafusion_spark.sources.arrow_ipc import write_arrow_partitioned
-
     ctx = SessionContext(spark)
     path = _tmp("documents_arrow")
-    write_arrow_partitioned(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars"), path
+    write_sink(
+        _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars"),
+        "arrow",
+        path,
+        layout="overwrite",
     )
     ctx.register_arrow("documents_arrow", path)
     return ctx.sql("""
@@ -127,12 +129,10 @@ FROM documents GROUP BY lang ORDER BY lang
 # --------------------------------------------------------------------------
 def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """supplier → Avro container files (deflate, one per partition,
-    executor-side foreachPartition — nothing through the driver) →
+    executor-side — nothing through the driver) →
     register_avro (spark-avro jar absent here, so the pure-Python
     block-parallel DataSource in sources/avro.py serves the scan) →
     per-nation aggregate."""
-    from arrow_datafusion_spark.sources import avro as A
-
     ctx = SessionContext(spark)
     path = _tmp("supplier_avro")
     schema = {
@@ -145,14 +145,14 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "s_acctbal", "type": "double"},
         ],
     }
-    A.write_avro_partitioned(
+    write_sink(
         _t(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
         ),
+        "avro",
         path,
-        schema,
-        codec="deflate",
-        rows_per_block=64,
+        layout="overwrite",
+        options={"schema": schema, "codec": "deflate", "rows_per_block": 64},
     )
     ctx.register_avro("supplier_avro", path)
     return ctx.sql("""
@@ -175,8 +175,6 @@ def scan_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     avro_to_arrow/schema.rs composite coverage): an array field, a map
     field, and a nested record per row, written executor-side, read back
     block-parallel, and unpacked with Spark array/map/struct accessors."""
-    from arrow_datafusion_spark.sources import avro as A
-
     ctx = SessionContext(spark)
     path = _tmp("nation_avro_nested")
     schema = {
@@ -211,7 +209,13 @@ def scan_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_regionkey").cast("long").alias("region"),
         ).alias("info"),
     )
-    A.write_avro_partitioned(nation, path, schema, codec="deflate", rows_per_block=8)
+    write_sink(
+        nation,
+        "avro",
+        path,
+        layout="overwrite",
+        options={"schema": schema, "codec": "deflate", "rows_per_block": 8},
+    )
     ctx.register_avro("nation_nested", path)
     return ctx.sql("""
         SELECT n_nationkey,
@@ -244,12 +248,14 @@ def write_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The filter on the partition column must prune directories at 100 TB."""
     ctx = SessionContext(spark)
     path = _tmp("lineitem_part")
-    (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-        .write.mode("overwrite")
-        .partitionBy("l_returnflag")
-        .parquet(path)
+    write_sink(
+        _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
+        ),
+        "parquet",
+        path,
+        layout="overwrite",
+        partition_by=["l_returnflag"],
     )
     ctx.register_parquet("lineitem_rt", path)
     return ctx.sql("""

@@ -12,9 +12,13 @@ Exposed through PySpark's Python Data Source API as
 - Execution (executors): each task memory-maps its file and yields just its
   record batch — pyarrow does zero-copy reads off the footer index.
 
-The sink side (`write_arrow_partitioned`) writes one IPC file per DataFrame
-partition via mapInPandas — no driver materialization, mirroring how a
-cluster job would emit IPC shards to shared storage.
+The sink side (`write_arrow_partitioned`, reached through
+``sources.sink.write_sink``) writes one IPC file per DataFrame partition
+via mapInArrow — no driver materialization, mirroring how a cluster job
+would emit IPC shards to shared storage. An append numbers its parts after
+the highest existing part index, and the writer returns each partition's
+row count from the same pass, so a COPY or INSERT counts its rows without
+re-running its source.
 """
 
 from __future__ import annotations
@@ -65,41 +69,66 @@ def _partition_columns(base: str, files: list[str]) -> dict[str, dict[str, objec
     return out
 
 
-def write_arrow_partitioned(df, path: str) -> None:
+def write_arrow_partitioned(df, path: str, mode: str = "overwrite", partition_by=()) -> list[int]:
     """Each DataFrame partition → one ``part-NNNNN.arrow`` IPC file under
-    ``path`` (executor-side; Arrow batches pass through mapInPandas so no
-    row ever reaches the driver)."""
+    ``path``, or under its ``key=value/`` directory per partition value when
+    ``partition_by`` is set (the value columns leave the file, hive-style).
+    Executor-side: Arrow batches pass through mapInArrow, so no row reaches
+    the driver. ``mode="append"`` numbers new parts from the max existing
+    part index + 1 (``sink.open_part_dir``). Returns each partition's row
+    count, from the same pass."""
     import os
-    import shutil
 
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    schema = df.schema
+    from arrow_datafusion_spark.sources.sink import open_part_dir
 
-    def _write_part(pdfs):
+    offset = open_part_dir(path, mode)
+    keys = list(partition_by)
+
+    def _write_part(batches):
+        import functools
+        import operator
+
         import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.ipc as ipc
         from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(schema)
-        writer = None
-        pid = TaskContext.get().partitionId()
-        for pdf in pdfs:
-            tbl = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-            if writer is None:
-                sink = pa.OSFile(os.path.join(path, f"part-{pid:05d}.arrow"), "wb")
-                writer = ipc.new_file(sink, arrow_schema)
-            writer.write_table(tbl)
-        if writer is not None:
-            writer.close()
-            sink.close()
-        return iter(())  # sink-only: emit no rows
+        name = f"part-{TaskContext.get().partitionId() + offset:05d}.arrow"
+        writers: dict[tuple, tuple] = {}  # partition values → (file, writer)
+        n = 0
 
-    # mapInPandas gives Arrow-batched input; the empty-schema output makes
-    # this a pure side-effecting sink stage (count() forces execution).
-    df.mapInPandas(_write_part, "ok int").count()
+        def write(key: tuple, tbl) -> None:
+            if key not in writers:
+                d = os.path.join(path, *(
+                    f"{k}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                    for k, v in zip(keys, key)
+                ))
+                os.makedirs(d, exist_ok=True)
+                sink = pa.OSFile(os.path.join(d, name), "wb")
+                writers[key] = (sink, ipc.new_file(sink, tbl.schema))
+            writers[key][1].write_table(tbl)
+
+        try:
+            for batch in batches:
+                n += batch.num_rows
+                tbl = pa.Table.from_batches([batch])
+                if not keys:
+                    write((), tbl)
+                    continue
+                for key in tbl.group_by(keys, use_threads=False).aggregate([]).to_pylist():
+                    match = functools.reduce(operator.and_, (
+                        pc.field(k).is_null() if v is None else pc.field(k) == v
+                        for k, v in key.items()
+                    ))
+                    write(tuple(key[k] for k in keys), tbl.filter(match).drop_columns(keys))
+        finally:
+            for sink, writer in writers.values():
+                writer.close()
+                sink.close()
+        yield pa.RecordBatch.from_pydict({"n": [n]}, schema=pa.schema([("n", pa.int64())]))
+
+    return [r.n for r in df.mapInArrow(_write_part, "n long").collect()]
 
 
 # Type-coercion policy (SURVEY §1.2; reference Arrow types at
@@ -203,12 +232,16 @@ try:  # Python Data Source API (Spark 4+)
                     parts.extend(
                         _IpcBatch(f, i, pv) for i in range(r.num_record_batches)
                     )
+            # a schema-only file (an empty COPY result) has no batches;
+            # Spark hands the reader None when there are no partitions
             return parts
 
-        def read(self, partition: _IpcBatch):
+        def read(self, partition: _IpcBatch | None):
             import pyarrow as pa
             import pyarrow.ipc as ipc
 
+            if partition is None:
+                return
             # Yield the RecordBatch itself — the Python Data Source API
             # ships Arrow batches to the JVM without per-row Python object
             # conversion, keeping the scan Arrow-native end to end.

@@ -26,7 +26,8 @@ mapping (datafusion/core/src/datasource/avro_to_arrow/schema.rs).
 
 Write side (BEYOND the reference, which is reader-only): ``write_avro``
 (single container file), ``write_avro_partitioned`` (distributed — one
-part file per DataFrame partition via executor-side foreachPartition),
+part file per DataFrame partition, written on the executors and counted
+in the same pass),
 and ``avro_schema_of`` (Spark schema → Avro record schema). Exposed
 publicly through ``COPY ... TO ... STORED AS AVRO`` and the facade's
 ``write_avro``; temporal columns are rejected with a cast hint rather
@@ -38,7 +39,6 @@ from __future__ import annotations
 
 import io
 import json
-import re
 import struct
 import zlib
 from collections.abc import Iterator
@@ -416,49 +416,42 @@ def write_avro_partitioned(
     codec: str = "deflate",
     rows_per_block: int = 1000,
     mode: str = "overwrite",
-) -> None:
+) -> list[int]:
     """Distributed Avro write: each DataFrame partition writes its own
-    ``part-NNNNN.avro`` container file under ``path`` (executor-side
-    foreachPartition — no driver materialization; the reader's dir scan
-    picks up all parts). Targets a filesystem shared by the executors, the
-    same contract as any Spark file sink. ``mode='append'`` adds part
-    files after the existing ones (the COPY-TO-directory contract the
-    other formats follow); schema defaults to ``avro_schema_of(df)``."""
+    ``part-NNNNN.avro`` container file under ``path`` (executor-side — no
+    driver materialization; the reader's dir scan picks up all parts).
+    Targets a filesystem shared by the executors, the same contract as any
+    Spark file sink. ``mode='append'`` numbers new parts from the max
+    existing part index + 1 (``sink.open_part_dir``); schema defaults to
+    ``avro_schema_of(df)``. Returns each partition's row count, from the
+    same pass."""
     import os
-    import shutil
+
+    from arrow_datafusion_spark.sources.sink import open_part_dir
 
     if schema is None:
         schema = avro_schema_of(df.schema)
-    if mode == "overwrite":
-        shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    # offset = max existing part INDEX + 1 (not the file count): empty
-    # partitions skip their write, leaving gaps in part numbers — a
-    # count-based offset could land a later append on an existing index
-    # and 'wb' would destroy previously inserted rows
-    offset = 0
-    for f in os.listdir(path):
-        m = re.match(r"part-(\d+)\.avro$", f)
-        if m:
-            offset = max(offset, int(m.group(1)) + 1)
+    offset = open_part_dir(path, mode)
     cols = [f["name"] for f in schema["fields"]]
 
-    def _write_part(rows_iter):
+    def _write_part(index, rows_iter):
         import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
-        from pyspark import TaskContext
 
         rows = [tuple(r[c] for c in cols) for r in rows_iter]
         if rows:
-            pid = TaskContext.get().partitionId() + offset
             write_avro(
-                os.path.join(path, f"part-{pid:05d}.avro"),
+                os.path.join(path, f"part-{index + offset:05d}.avro"),
                 schema,
                 rows,
                 codec=codec,
                 rows_per_block=rows_per_block,
             )
+        yield len(rows)
 
-    df.foreachPartition(_write_part)
+    # mapPartitionsWithIndex, not foreachPartition: the action itself
+    # hands back each partition's count (an Observation never fills on an
+    # RDD action, which runs outside a SQL execution)
+    return df.rdd.mapPartitionsWithIndex(_write_part).collect()
 
 
 # ---------------------------------------------------------------- file reader
