@@ -322,8 +322,8 @@ def _registries() -> tuple[dict, dict]:
         #     q3 rebuilt (un-hinted left-semi on projected BUILDING customer
         #     keys; compute-over-floor 0.065s -> ~0) and q10 rebuilt
         #     (per-customer revenue aggregated BELOW the customer join;
-        #     0.052s -> ~0) — r7 A/B in tools/ab_tpch.py, hashes verified
-        #     unchanged vs oracle at sf0.01 before landing
+        #     0.052s -> ~0) — r7 A/B (the since-deleted tools/ab_tpch.py),
+        #     hashes verified unchanged vs oracle at sf0.01 before landing
         "tpch_q3", "tpch_q10",
         #     q12 (SHUFFLE_HASH build side) and q13 (per-custkey pre-agg
         #     below the customer join) rebuilt from the SF1 bench lens —

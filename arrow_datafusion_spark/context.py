@@ -9,8 +9,9 @@ SURVEY.md §3.1 steps 1–7. Registration methods map 1:1:
 
     DataFusion                                  here
     ----------                                  ----
-    ctx.register_parquet(name, path)            same (spark.read.parquet + view)
-    ctx.register_csv / register_json / avro     same
+    ctx.register_parquet(name, path)            same (sources/listing.py
+    ctx.register_csv / json / avro / arrow      read_listing + view; the
+    CREATE EXTERNAL TABLE                       ListingTable role)
     ctx.register_table(name, provider)          register_table(name, df)
     ctx.table(name)                             same
     ctx.sql(q) -> DataFrame                     same (returns pyspark DataFrame)
@@ -43,6 +44,7 @@ from arrow_datafusion_spark.session import (
     prepare,
 )
 from arrow_datafusion_spark.sources.avro import avro_schema_of
+from arrow_datafusion_spark.sources.listing import FORMATS, read_listing, table_schema
 from arrow_datafusion_spark.sources.sink import (
     EXT_FORMATS,
     file_target_format,
@@ -252,6 +254,20 @@ def _resolve_object_store_location(spark, path: str, options=None) -> str:
     return path
 
 
+# INSERT INTO name [(column list)]: parentheses open a column list unless a
+# query starts inside them — `INSERT INTO t (SELECT ...)` / `(VALUES ...)`
+# is a parenthesized source
+_INSERT_HEAD = (
+    r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
+    r"(?:\((?!\s*(?:SELECT|VALUES|WITH)\b)([^)]*)\))?"
+)
+
+
+def _listing_base(path: str) -> str:
+    """A table location up to its first glob character."""
+    return re.split(r"[*?\[]", path, 1)[0].rstrip("/")
+
+
 def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
     """'name type, ...' column defs → Spark DDL schema string: split on
     top-level commas only (types like DECIMAL(10,2) contain commas) and map
@@ -414,14 +430,13 @@ class SessionContext:
         # the view body (per-column Timestamp(_, Some("tz")) — §2.2
         # named-tz columns; consumed by _rewrite_tz_date_trunc)
         self._column_tz: dict[str, dict[str, str]] = {}
-        # external tables that can act as INSERT sinks (FileSinkExec /
-        # insert_to_external: name → format/path/schema/partitioning)
-        self._external_sinks: dict[str, dict] = {}
-        # path-registered tables: name → (base_path, re-register thunk).
-        # A COPY that lands new files under base_path re-runs the thunk so
-        # the table re-lists its files (ListingTable re-lists per query;
-        # a Spark path DataFrame pins its file index at read time).
-        self._path_tables: dict[str, tuple] = {}
+        # file-backed tables (the ListingTable role): name → {fmt, path,
+        # schema, declared, parts, options}; a CREATE EXTERNAL TABLE over a
+        # local location is also an INSERT sink (FileSinkExec) and carries
+        # single_file and unbounded. A write under the location re-lists
+        # the table (_relist) under the fixed schema: a Spark path
+        # DataFrame pins its file index at read time.
+        self._listings: dict[str, dict] = {}
         # DataFusion-compatible config registry (settings.py): SET/SHOW
         # SQL, information_schema.df_settings, and live Spark conf mapping.
         # datafusion-cli enables information_schema at startup — this
@@ -609,135 +624,76 @@ class SessionContext:
         return _resolve_object_store_location(self.spark, path, options)
 
     def register_parquet(self, name: str, path: str) -> None:
-        loc = self.register_object_store(path)
-        df = self.spark.read.parquet(loc)
-        self.register_table(name, df)
-        # a refresh re-lists the files under the schema read here, like the
-        # reference's ListingTable, and so runs no schema-inference job
-        self._track_path(
-            name,
-            path,
-            lambda: self.register_table(name, self.spark.read.schema(df.schema).parquet(loc)),
-        )
-
-    def _track_path(self, name: str, path: str, redo) -> None:
-        base = re.split(r"[*?\[]", path, 1)[0].rstrip("/")
-        self._path_tables[name] = (base, redo)
-
-    def _refresh_path_tables(self, written_path: str) -> None:
-        """Re-register any path table whose base path is, or contains, the
-        just-written target, so its file listing picks up the new files."""
-        import os as _os
-
-        target = _os.path.abspath(local_path(written_path))
-        for name, (base, redo) in list(self._path_tables.items()):
-            base = _os.path.abspath(base)
-            if target == base or target.startswith(base + _os.sep):
-                redo()
+        self._register_listing(name, "parquet", path)
 
     def register_csv(self, name: str, path: str, schema: str | None = None, **options) -> None:
         """CSV registration — explicit DDL ``schema`` wins; otherwise infer
         at registration time like the reference (file_format/csv.rs
         ``infer_schema``)."""
-        options.setdefault("header", True)
-        reader = self.spark.read
-        if schema:
-            reader = reader.schema(schema)
-            options.pop("inferSchema", None)
-        else:
-            options.setdefault("inferSchema", True)
-        self.register_table(
-            name,
-            reader.options(**options).csv(self.register_object_store(path)),
-        )
-        self._track_path(
-            name, path, lambda: self.register_csv(name, path, schema=schema, **options)
-        )
+        self._register_listing(name, "csv", path, schema, options=options)
 
     def register_json(self, name: str, path: str, schema: str | None = None, **options) -> None:
         """Newline-delimited JSON (NdJsonExec, physical_plan/json.rs:53)."""
-        reader = self.spark.read
-        if schema:
-            reader = reader.schema(schema)
-        self.register_table(
-            name,
-            reader.options(**options).json(self.register_object_store(path)),
-        )
-        self._track_path(
-            name, path, lambda: self.register_json(name, path, schema=schema, **options)
-        )
-
-    # Per-SparkSession (weak) state shared across SessionContext instances:
-    # whether the spark-avro jar answered the probe, and which Python data
-    # sources are already registered (re-registering costs a py4j round-trip
-    # and a Python-worker spin-up each time).
-    _AVRO_JAR: "weakref.WeakKeyDictionary[SparkSession, bool]" = None
-    _PY_SOURCES: "weakref.WeakKeyDictionary[SparkSession, set]" = None
-
-    def _ensure_py_source(self, fmt: str) -> None:
-        done = SessionContext._PY_SOURCES.setdefault(self.spark, set())
-        if fmt in done:
-            return
-        if fmt == "avro_py":
-            from arrow_datafusion_spark.sources import avro as _mod
-        else:
-            from arrow_datafusion_spark.sources import arrow_ipc as _mod
-        _mod.register(self.spark)
-        done.add(fmt)
+        self._register_listing(name, "json", path, schema, options=options)
 
     def register_avro(self, name: str, path: str) -> None:
-        """Avro scan (AvroExec, physical_plan/avro.rs:38). Prefers the
-        spark-avro connector; falls back to the built-in pure-Python block-
-        parallel reader (sources/avro.py) when the connector is absent. Only
-        a connector-not-found error downgrades (and is cached per session) —
-        a bad path or corrupt file propagates rather than silently switching
-        readers."""
-        path = self.register_object_store(path)
-        if SessionContext._AVRO_JAR.get(self.spark, True):
-            try:
-                df = self.spark.read.format("avro").load(path)
-                SessionContext._AVRO_JAR[self.spark] = True
-                self.register_table(name, df)
-                return
-            except Exception as ex:
-                msg = str(ex)
-                # Spark error class is the stable signal; message substrings
-                # cover older builds that phrase the error differently.
-                err_class = ""
-                for attr in ("getCondition", "getErrorClass"):
-                    try:
-                        err_class = getattr(ex, attr)() or ""
-                        break
-                    except Exception:
-                        continue
-                if "DATA_SOURCE_NOT_FOUND" not in err_class and not any(
-                    s in msg
-                    for s in (
-                        "Failed to find data source",
-                        "DATA_SOURCE_NOT_FOUND",
-                        "ClassNotFoundException",
-                        "Avro is built-in but external data source module",
-                    )
-                ):
-                    raise
-                SessionContext._AVRO_JAR[self.spark] = False
-        self._ensure_py_source("avro_py")
-        self.register_table(name, self.spark.read.format("avro_py").load(path))
-        self._track_path(name, path, lambda: self.register_avro(name, path))
+        """Avro scan (AvroExec, physical_plan/avro.rs:38): the spark-avro
+        connector, or the block-parallel Python reader (sources/avro.py)
+        when the connector is absent."""
+        self._register_listing(name, "avro", path)
 
     def register_arrow(self, name: str, path: str) -> None:
         """Arrow IPC file or directory of files (ArrowExec,
         physical_plan/arrow_file.rs:49) — served by the block-parallel
         Python data source in sources/arrow_ipc.py (one task per IPC record
         batch); rows never pass through the driver."""
-        self._ensure_py_source("arrow_ipc")
-        self.register_table(
-            name,
-            self.spark.read.format("arrow_ipc").load(
-                self.register_object_store(path)
-            ),
-        )
-        self._track_path(name, path, lambda: self.register_arrow(name, path))
+        self._register_listing(name, "arrow", path)
+
+    def _register_listing(
+        self, name: str, fmt: str, path: str, schema=None, parts=(), options=None, **sink
+    ) -> None:
+        """Register a file-backed table: record its listing and read it
+        (sources/listing.py). ``schema`` (a StructType or DDL string) is
+        the declared one; without it the first read fixes the schema from
+        the files. ``sink`` (single_file, unbounded) makes it an INSERT
+        target."""
+        if isinstance(schema, str):
+            schema = StructType.fromDDL(schema)
+        self._relist(name, {
+            "fmt": FORMATS[fmt],
+            "path": local_path(self.register_object_store(path)),
+            "schema": None if schema is None else table_schema(schema, parts),
+            "declared": schema is not None,
+            "parts": list(parts),
+            "options": dict(options or {}),
+            **sink,
+        })
+
+    def _relist(self, name: str, rec: dict | None = None) -> None:
+        """(Re-)register a file-backed table from the files now at its
+        location, under its fixed schema; an INSERT sink whose location
+        holds no files yet is a typed empty relation."""
+        rec = self._listings[name] if rec is None else rec
+        if "unbounded" in rec and not has_files(rec["path"]):
+            df = self._result([], rec["schema"])
+        else:
+            df = read_listing(
+                self.spark, rec["fmt"], rec["path"], schema=rec["schema"],
+                partition_by=rec["parts"], options=rec["options"],
+            )
+            if rec["schema"] is None:
+                rec["schema"] = df.schema
+        self._listings[name] = rec
+        self.register_table(name, df)
+
+    def _refresh_path_tables(self, written_path: str) -> None:
+        """Re-list every file-backed table whose location is, or contains,
+        the just-written target, so it sees the new files."""
+        target = os.path.abspath(local_path(written_path))
+        for name, rec in list(self._listings.items()):
+            base = os.path.abspath(_listing_base(rec["path"]))
+            if target == base or target.startswith(base + os.sep):
+                self._relist(name)
 
     def register_view(self, name: str, sql: str) -> None:
         self._ensure_macros()
@@ -780,12 +736,7 @@ class SessionContext:
         self._rw_version += 1
         self._view_defs.pop(name, None)
         self._column_tz.pop(name.lower(), None)
-        self._path_tables.pop(name, None)
-        # per-table DDL state must die with the table, or a later
-        # CREATE TABLE of the same name inherits stale DEFAULT/NOT NULL
-        self._col_defaults.pop(name.lower(), None)
-        self._not_null.pop(name.lower(), None)
-        self._ctas_non_null.pop(name.lower(), None)
+        self._move_table_state(name)
         # keep session.load_tables' registered-view memo honest
         from arrow_datafusion_spark import session as _session
 
@@ -810,15 +761,13 @@ class SessionContext:
     # -- readers (DataFrame API entry, SURVEY.md §3.2) ----------------------
 
     def read_parquet(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+        return read_listing(self.spark, "parquet", path)
 
     def read_csv(self, path: str, **options) -> DataFrame:
-        options.setdefault("header", True)
-        options.setdefault("inferSchema", True)
-        return self.spark.read.options(**options).csv(path)
+        return read_listing(self.spark, "csv", path, options=options)
 
     def read_json(self, path: str, **options) -> DataFrame:
-        return self.spark.read.options(**options).json(path)
+        return read_listing(self.spark, "json", path, options=options)
 
     # -- the entry point ----------------------------------------------------
 
@@ -969,7 +918,7 @@ class SessionContext:
             lx = self._bind_information_schema(lx)
         return lx
 
-    def _result(self, rows, schema: str) -> DataFrame:
+    def _result(self, rows, schema: str | StructType) -> DataFrame:
         """Rows a statement builds in Python (a COPY or INSERT count, the
         EXPLAIN, SHOW, DESCRIBE and information_schema rows, an empty
         table), as a local Arrow relation: collecting it runs no Spark job.
@@ -977,7 +926,7 @@ class SessionContext:
         when collected: 0.35-0.77 s for these statements' results on a
         4-core box, against 8-37 ms here. PySpark's Arrow conversion
         carries neither ``INTERVAL YEAR TO MONTH`` nor calendar intervals."""
-        struct = StructType.fromDDL(schema)
+        struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
         arrow = to_arrow_schema(struct)
         cols = list(zip(*rows)) if rows else [()] * len(arrow)
         table = pa.Table.from_arrays(
@@ -1137,10 +1086,8 @@ class SessionContext:
             # VIEW — DROP TABLE must not remove it
             raise ValueError(f"Table {name!r} doesn't exist.")
         # managed-table DROP falls through to Spark; either way the
-        # per-table DEFAULT/NOT NULL records must not survive
-        self._col_defaults.pop(name.lower(), None)
-        self._not_null.pop(name.lower(), None)
-        self._ctas_non_null.pop(name.lower(), None)
+        # per-table records must not survive
+        self._move_table_state(name)
         if any(
             t.name == name and t.tableType == "TEMPORARY"
             for t in self.spark.catalog.listTables()
@@ -1207,16 +1154,9 @@ class SessionContext:
                 res = self._run(lx.derive(tmp_query), args)  # raises → old table intact
                 self.spark.sql(f"DROP TABLE IF EXISTS {name}")
                 self.deregister_table(name)
-                # the replacement's DEFAULT/NOT NULL records were captured
-                # under the temp name — follow the rename
-                if tmp.lower() in self._col_defaults:
-                    self._col_defaults[name.lower()] = self._col_defaults.pop(tmp.lower())
-                if tmp.lower() in self._not_null:
-                    self._not_null[name.lower()] = self._not_null.pop(tmp.lower())
-                if tmp.lower() in self._ctas_non_null:
-                    self._ctas_non_null[name.lower()] = self._ctas_non_null.pop(
-                        tmp.lower()
-                    )
+                # the replacement's records were captured under the temp
+                # name — follow the rename
+                self._move_table_state(tmp, name)
                 if any(
                     t.name == tmp and t.tableType != "TEMPORARY"
                     for t in self._catalog_tables()
@@ -1336,7 +1276,7 @@ class SessionContext:
         if m is None:
             return None
         target = m.group(1)
-        if target in self._external_sinks:
+        if "unbounded" in self._listings.get(target, ()):
             return self._insert_external(target, lx, args)
         src, body, cols = self._insert_columns(target, lx, args)
         checks = self._insert_checks(
@@ -1344,9 +1284,7 @@ class SessionContext:
         )
         if checks:
             self._raise_insert_checks(src.agg(*checks).first().asDict())
-        has_collist = bool(re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_]\w*\s*\(", lx.text, re.IGNORECASE
-        ))
+        has_collist = re.match(_INSERT_HEAD, lx.text, re.IGNORECASE).group(1) is not None
         if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE) or (
             has_collist and self._col_defaults.get(target.lower())
         ):
@@ -1376,64 +1314,14 @@ class SessionContext:
             n = _written_rows(done)
         return self._result([(n,)], "count bigint")
 
-    def _reregister_external(self, name: str) -> None:
-        """(Re-)register an external sink table from its on-disk files —
-        partition columns come from hive-style directory discovery, data
-        columns from the declared schema (ListingTable's split between
-        file schema and table partition columns)."""
-        sink = self._external_sinks[name]
-        fmt, path, parts = sink["fmt"], sink["path"], sink["parts"]
-        if not has_files(path):
-            self.register_table(
-                name, self._result([], sink["schema"])
-            )
-            self._track_path(name, path, lambda: self._reregister_external(name))
-            return
-        if fmt == "arrow":
-            self._ensure_py_source("arrow_ipc")
-            df = self.spark.read.format("arrow_ipc").load(path)
-        else:
-            data_schema = sink["schema"]
-            if data_schema and parts:
-                low = {p.lower() for p in parts}
-                data_schema = ", ".join(
-                    d
-                    for d in _split_top_level(data_schema)
-                    if d.strip().split()[0].lower() not in low
-                )
-            reader = self.spark.read
-            if data_schema:
-                reader = reader.schema(data_schema)
-            if fmt == "csv":
-                df = reader.options(**sink["options"]).csv(path)
-            elif fmt == "json":
-                df = reader.json(path)
-            elif fmt == "avro":
-                self._ensure_py_source("avro_py")
-                df = self.spark.read.format("avro_py").load(path)
-            else:
-                df = reader.parquet(path)
-            if parts and sink["schema"]:
-                # discovery re-infers partition value types (e.g. int for
-                # a=10) — cast back to the DECLARED types, in the logical
-                # data-cols-then-partition-cols order
-                sel = []
-                for d in _split_top_level(sink["schema"]):
-                    toks = d.strip().split()
-                    sel.append(
-                        F.col(toks[0]).cast(" ".join(toks[1:])).alias(toks[0])
-                    )
-                df = df.select(*sel)
-        self.register_table(name, df)
-        self._track_path(name, path, lambda: self._reregister_external(name))
-
     def _insert_external(self, target: str, lx: Lexed, args) -> DataFrame:
         """INSERT INTO an external table → append files at its location
         (the reference's FileSinkExec), then re-list. Returns the count."""
-        sink = self._external_sinks[target]
+        sink = self._listings[target]
         src, body, cols = self._insert_columns(target, lx, args)
         checks = self._insert_checks(
-            target, src, cols, sink["not_null"], lossy_casts=True
+            target, src, cols, self._not_null.get(target.lower(), frozenset()),
+            lossy_casts=True,
         )
         # an UNBOUNDED single file is rewritten as old ∪ new rows, so the
         # write's own count would include the old ones: count the new rows
@@ -1472,39 +1360,35 @@ class SessionContext:
             n = write_sink(
                 out, fmt, path, partition_by=sink["parts"], options=options
             )
-        self._reregister_external(target)
+        self._relist(target)
         return self._result([(n,)], "count bigint")
 
     def _sql_describe(self, name: str) -> DataFrame:
         """DataFusion's DESCRIBE: (column_name, data_type, is_nullable)
         with Arrow Debug type display and YES/NO nullability.
 
-        Path-registered parquet tables read the FOOTER schema (pyarrow)
-        instead of Spark's catalog schema: Spark's parquet reader relaxes
+        A parquet table registered without a column list reads the FOOTER
+        schema (pyarrow) instead of Spark's: Spark's parquet reader relaxes
         all nullability to true (map values, required columns), while the
         reference's DESCRIBE reports the file's own declared nullability
-        (map.slt:24 — `value Int64 nullable: false`, `timestamp Utf8 NO`)."""
-        fields = None
-        info = self._path_tables.get(name)
-        if info:
+        (map.slt:24 — `value Int64 nullable: false`, `timestamp Utf8 NO`).
+        A declared column list is the table's schema as it stands."""
+        fields = self.spark.table(name).schema.fields
+        rec = self._listings.get(name)
+        if rec and rec["fmt"] == "parquet" and not rec["declared"]:
+            import glob
+
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            base = _listing_base(rec["path"])
+            files = [base]
+            if os.path.isdir(base):
+                files = sorted(glob.glob(os.path.join(base, "*.parquet")))
             try:
-                import glob as _glob
-                import os as _os
-
-                import pyarrow.parquet as _pq
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                base = info[0]
-                f = base
-                if _os.path.isdir(base):
-                    cands = sorted(_glob.glob(_os.path.join(base, "*.parquet")))
-                    f = cands[0] if cands else base
-                if f.endswith(".parquet") or _os.path.isfile(f):
-                    fields = from_arrow_schema(_pq.read_schema(f)).fields
+                fields = from_arrow_schema(pq.read_schema(files[0])).fields
             except Exception:
-                fields = None
-        if fields is None:
-            fields = self.spark.table(name).schema.fields
+                pass  # no footer at hand (object store, partition tree)
         rows = [
             (
                 f.name,
@@ -1544,6 +1428,21 @@ class SessionContext:
             and key not in self._ctas_non_null.get(tname.lower(), ())
             and key not in self._not_null.get(tname.lower(), ())
         )
+
+    def _move_table_state(self, name: str, to: str | None = None) -> None:
+        """Forget the per-table records of ``name`` — column DEFAULTs, the
+        declared NOT NULL and CTAS non-null sets, the listing record — or,
+        with ``to``, move them to that name: a dropped table's records must
+        not reach a later table of the same name."""
+        for records, old, new in (
+            (self._col_defaults, name.lower(), to and to.lower()),
+            (self._not_null, name.lower(), to and to.lower()),
+            (self._ctas_non_null, name.lower(), to and to.lower()),
+            (self._listings, name, to),
+        ):
+            rec = records.pop(old, None)
+            if new and rec is not None:
+                records[new] = rec
 
     def _record_not_null(self, name: str, coldefs: str) -> None:
         """Remember which columns of a CREATE TABLE (coldefs) declared
@@ -1596,12 +1495,7 @@ class SessionContext:
         duplicate names in the column list and a source/target
         column-count mismatch, which Spark's native INSERT lets through.
         Plans the source only — no job."""
-        m = re.match(
-            r"\s*INSERT\s+INTO\s+[A-Za-z_][A-Za-z0-9_]*\s*"
-            r"(?:\(([^)]*)\))?\s*(.*)$",
-            lx.text,
-            re.IGNORECASE | re.DOTALL,
-        )
+        m = re.match(_INSERT_HEAD + r"\s*(.*)$", lx.text, re.IGNORECASE | re.DOTALL)
         collist, body = m.group(1), lx.derive(m.group(2).strip().rstrip(";"))
         schema = self.spark.table(target).schema
         names = (
@@ -1993,7 +1887,7 @@ class SessionContext:
         )
         return lx.derive(query)
 
-    def _validate_external_ddl(self, lx: Lexed, rest: str, cols: str | None) -> None:
+    def _external_clauses(self, lx: Lexed, rest: str, cols: str | None) -> dict:
         """Strict clause-tail scan mirroring parser.rs
         ``parse_create_external_table``: the clauses may appear in any
         order, each at most once (WITH ORDER may repeat), and nothing else
@@ -2001,7 +1895,10 @@ class SessionContext:
         tokens, duplicate clauses, and malformed WITH/ORDER; then applies
         the planner's semantic checks (partition column membership,
         CsvOptions key validity, single-file partitioned location,
-        on-disk partition-order inference). ``rest`` is shielded text."""
+        on-disk partition-order inference). ``rest`` is shielded text.
+        Returns the clauses: ``fmt``, ``location``, the ``options`` and
+        ``partitioned`` parenthesis bodies (shielded), ``header_row`` and
+        ``delimiter``."""
         n = len(rest)
 
         def balanced_end(i: int) -> int:  # rest[i] == "(" (caller-checked)
@@ -2014,7 +1911,8 @@ class SessionContext:
         part_inner: str | None = None
         fmt: str | None = None
         opt_inner: str | None = None
-        has_location = False
+        location = delimiter = None
+        header_row = False
         i = 0
         while True:
             while i < n and (rest[i].isspace() or rest[i] == ";"):
@@ -2030,12 +1928,12 @@ class SessionContext:
                 fmt = m.group(1).lower()
                 i += m.end()
                 continue
-            m = re.match(rf"LOCATION\s+{LIT}", tail, re.IGNORECASE)
+            m = re.match(rf"LOCATION\s+({LIT})", tail, re.IGNORECASE)
             if m:
                 if "location" in seen:
                     raise ValueError('ParserError("LOCATION specified more than once")')
                 seen.add("location")
-                has_location = True
+                location = lx.string(m.group(1))
                 i += m.end()
                 continue
             m = re.match(r"OPTIONS\s*\(", tail, re.IGNORECASE)
@@ -2096,11 +1994,13 @@ class SessionContext:
                             f'ParserError("Expected ROW, found: '
                             f'{nxt.group(1) if nxt else "EOF"}")'
                         )
+                    header_row = True
                     i += m2.end()
                     continue
                 raise ValueError(f'ParserError("Expected HEADER, found: {m.group(1)}")')
-            m = re.match(rf"DELIMITER\s+{LIT}", tail, re.IGNORECASE)
+            m = re.match(rf"DELIMITER\s+({LIT})", tail, re.IGNORECASE)
             if m:
+                delimiter = lx.string(m.group(1))
                 i += m.end()
                 continue
             m = re.match(r"COMPRESSION\s+TYPE\s+\w+", tail, re.IGNORECASE)
@@ -2151,16 +2051,17 @@ class SessionContext:
                     raise ValueError(
                         f'Config value "{kl[len("format."):]}" not found on CsvOptions'
                     )
-        if part_inner is not None and has_location:
-            mpath = re.search(rf"LOCATION\s+({LIT})", rest, re.IGNORECASE)
-            path = lx.string(mpath.group(1)) if mpath else ""
-            if re.match(r"^(/|\./|[A-Za-z]:)", path) or "://" not in path:
+        if part_inner is not None and location is not None:
+            if re.match(r"^(/|\./|[A-Za-z]:)", location) or "://" not in location:
                 declared = [
                     it.split()[0].strip('"').lower()
                     for it in _split_top_level(part_inner)
                     if it.split()
                 ]
-                self._check_disk_partitions(path, declared)
+                self._check_disk_partitions(location, declared)
+        return {"fmt": fmt, "location": location, "options": opt_inner,
+                "partitioned": part_inner, "header_row": header_row,
+                "delimiter": delimiter}
 
     @staticmethod
     def _check_disk_partitions(path: str, declared: list[str]) -> None:
@@ -2209,9 +2110,10 @@ class SessionContext:
         ``format.has_header``, ``format.delimiter``), legacy
         ``WITH HEADER ROW`` / ``DELIMITER 'c'``, and ``PARTITIONED BY`` /
         ``WITH ORDER`` (accepted, advisory here — Spark derives both from
-        the files) — may appear in any order. Routes to the matching
-        register_* method so DataFusion SQL scripts register tables
-        unchanged; returns an empty 0-row frame like the reference."""
+        the files) — may appear in any order. Registers through the same
+        listing record and reader as the register_* methods, so DataFusion
+        SQL scripts register tables unchanged; returns an empty 0-row frame
+        like the reference."""
         query = lx.text
         head = re.match(
             r"\s*CREATE\s+(UNBOUNDED\s+)?EXTERNAL\s+TABLE\s+"
@@ -2235,33 +2137,21 @@ class SessionContext:
             cols = lx.unshield(query[pos + 1 : close])
             pos = close + 1
         rest = query[pos:]
-        self._validate_external_ddl(lx, rest, cols)
-        m = re.search(r"STORED\s+AS\s+(\w+)", rest, re.IGNORECASE)
-        if not m:
-            raise ValueError(
-                f"CREATE EXTERNAL TABLE missing STORED AS: {lx.unshield()[:80]!r}"
-            )
-        fmt = m.group(1).lower()
-        m = re.search(rf"LOCATION\s+({LIT})", rest, re.IGNORECASE)
-        if not m:
-            raise ValueError(
-                f"CREATE EXTERNAL TABLE missing LOCATION: {lx.unshield()[:80]!r}"
-            )
-        path = lx.string(m.group(1))
+        clauses = self._external_clauses(lx, rest, cols)
+        for clause, key in (("STORED AS", "fmt"), ("LOCATION", "location")):
+            if clauses[key] is None:
+                raise ValueError(
+                    f"CREATE EXTERNAL TABLE missing {clause}: {lx.unshield()[:80]!r}"
+                )
+        fmt, path = clauses["fmt"], clauses["location"]
         # format options: current OPTIONS('k' 'v' | 'k' = 'v', ...) plus the
         # legacy standalone clauses the reference used to accept
-        opts: dict[str, str] = {}
-        mo = re.search(r"OPTIONS\s*\(([^()]*)\)", rest, re.IGNORECASE)
-        if mo:
-            kvs = re.findall(rf"({LIT})\s*=?\s*({LIT})", mo.group(1))
-            opts = {lx.string(k).lower(): lx.string(v) for k, v in kvs}
-        header = bool(re.search(r"WITH\s+HEADER\s+ROW", rest, re.IGNORECASE)) or opts.get(
+        kvs = re.findall(rf"({LIT})\s*=?\s*({LIT})", clauses["options"] or "")
+        opts = {lx.string(k).lower(): lx.string(v) for k, v in kvs}
+        header = clauses["header_row"] or opts.get(
             "format.has_header", opts.get("has_header", "")
         ).lower() in ("true", "1")
-        md = re.search(rf"DELIMITER\s+({LIT})", rest, re.IGNORECASE)
-        delim = lx.string(md.group(1)) if md else opts.get(
-            "format.delimiter", opts.get("delimiter")
-        )
+        delim = clauses["delimiter"] or opts.get("format.delimiter", opts.get("delimiter"))
         # the table's Spark CSV options, for its reads and its INSERT
         # writes alike. The lexical ones (file_format/csv.rs CsvOptions):
         # quote / escape / comment map 1:1 onto Spark's CSV options
@@ -2288,97 +2178,43 @@ class SessionContext:
             if cols
             else None
         )
-        # External tables are INSERT sinks in the reference (FileSinkExec,
-        # datasource/file_format/write/orchestration.rs): record the sink
-        # shape, and allow registration over an EMPTY/missing location
-        # (files appear at first INSERT).
-        mp = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", rest, re.IGNORECASE)
         # PARTITIONED BY entries may be bare names or carry inline types
         # ("PARTITIONED BY (a string, b string)") — the name is token 0
-        sink_parts = (
-            [
-                c.strip().strip("'\"").split()[0]
-                for c in lx.unshield(mp.group(1)).split(",")
-                if c.strip()
-            ]
-            if mp
-            else []
-        )
-        local = local_path(path)
-        if not re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", local) and fmt in (
-            "parquet",
-            "csv",
-            "json",
-            "ndjson",
-            "arrow",
-            "avro",
-        ):
-            if schema and sink_parts:
-                # the reference moves partition columns to the END of the
-                # logical schema (insert_to_external.slt:159 'partitioned
-                # cols are moved to the end')
-                low = {p.lower() for p in sink_parts}
-                defs = _split_top_level(schema)
-                by_name = {d.strip().split()[0].lower(): d.strip() for d in defs}
-                data = [d for d in defs if d.strip().split()[0].lower() not in low]
-                parts_defs = [
-                    by_name.get(pn.lower(), f"{pn} STRING") for pn in sink_parts
-                ]
-                schema = ", ".join([d.strip() for d in data] + parts_defs)
-            not_null = (
-                {
-                    d.strip().split()[0].lower()
-                    for d in _split_top_level(cols)
-                    if re.search(r"\bNOT\s+NULL\b", d, re.IGNORECASE)
-                }
-                if cols
-                else set()
-            )
-            # per-column DEFAULTs apply to external sinks too
-            # (insert_to_external.slt column-defaults section)
-            self._record_defaults(name, cols or "")
-            self._external_sinks[name] = {
-                "fmt": "json" if fmt == "ndjson" else fmt,
-                "path": local,
-                "schema": schema,
-                "options": csv_opts if fmt == "csv" else {},
-                "parts": sink_parts,
-                "single_file": file_target_format(local) is not None,
-                "unbounded": unbounded,
-                "not_null": not_null,
-            }
-            if not has_files(local):
-                if schema is None:
-                    raise ValueError(
-                        "CREATE EXTERNAL TABLE over an empty location "
-                        f"requires a column list: {path!r}"
-                    )
-                # the location is created lazily on first INSERT (the
-                # reference's ListingTable never touches disk at CREATE
-                # time either — a LOCATION like 'file://path/to/table'
-                # must not leave a stray directory behind)
-                self.register_table(name, self._result([], schema))
-                self._track_path(
-                    name, local, lambda: self._reregister_external(name)
-                )
-                return self._empty_result()
-            if sink_parts:
-                # partitioned layout on disk: register through the sink
-                # reader (data schema minus partition cols + discovery)
-                self._reregister_external(name)
-                return self._empty_result()
-        if fmt == "parquet":
-            self.register_parquet(name, path)
-        elif fmt == "csv":
-            self.register_csv(name, path, schema=schema, **csv_opts)
-        elif fmt in ("json", "ndjson"):
-            self.register_json(name, path, schema=schema)
-        elif fmt == "avro":
-            self.register_avro(name, path)
-        elif fmt == "arrow":
-            self.register_arrow(name, path)
-        else:
+        parts = [
+            c.strip().strip("'\"").split()[0]
+            for c in lx.unshield(clauses["partitioned"] or "").split(",")
+            if c.strip()
+        ]
+        if fmt not in FORMATS:
             raise ValueError(f"unsupported STORED AS {fmt!r}")
+        # External tables over a local location are INSERT sinks in the
+        # reference (FileSinkExec, datasource/file_format/write/
+        # orchestration.rs) and may be registered over an EMPTY or missing
+        # location: files appear at the first INSERT. The location is
+        # created lazily then — the reference's ListingTable never touches
+        # disk at CREATE time either, so a LOCATION like
+        # 'file://path/to/table' must not leave a stray directory behind.
+        local = local_path(path)
+        sink = {}
+        if not re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", local):
+            sink = {"single_file": file_target_format(local) is not None,
+                    "unbounded": unbounded}
+            if schema is None and not has_files(local):
+                raise ValueError(
+                    "CREATE EXTERNAL TABLE over an empty location "
+                    f"requires a column list: {path!r}"
+                )
+        self._record_not_null(name, cols or "")
+        # per-column DEFAULTs apply to external sinks too
+        # (insert_to_external.slt column-defaults section)
+        self._record_defaults(name, cols or "")
+        # the reference moves partition columns to the END of the logical
+        # schema (insert_to_external.slt:159 'partitioned cols are moved to
+        # the end'); the listing reader does that
+        self._register_listing(
+            name, fmt, path, schema, parts,
+            options=csv_opts if fmt == "csv" else None, **sink,
+        )
         return self._empty_result()
 
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
@@ -3814,5 +3650,3 @@ class SessionContext:
 # class-level weak containers (declared here so the class body's annotations
 # stay readable; weakly keyed so stopped sessions are collectable)
 SessionContext._MACROS_DONE = weakref.WeakSet()
-SessionContext._AVRO_JAR = weakref.WeakKeyDictionary()
-SessionContext._PY_SOURCES = weakref.WeakKeyDictionary()

@@ -772,8 +772,8 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts, and Spark's SHJ spills since 3.2 if it doesn't.
     # r7 SF1 A/B (min-of-3): 1.15s -> 0.69s wall, compute 0.93 -> 0.32s;
     # every alternative shape (broadcast orders, column pruning, pre-
-    # computed priority flag) measured neutral-to-worse — see
-    # tools/ab_tpch.py.
+    # computed priority flag) measured neutral-to-worse (r7 A/B; its
+    # query variants, tools/ab_tpch.py, are in git history).
     orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
     return _sorted_small(
         orders.hint("SHUFFLE_HASH")

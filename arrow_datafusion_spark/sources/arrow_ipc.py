@@ -207,6 +207,22 @@ def _coerce_batch(batch):
     return pa.RecordBatch.from_arrays(cols, schema=_coerce_schema(batch.schema))
 
 
+def _conform(batch, schema):
+    """``batch`` as the columns Spark asked for (a table's schema given to
+    the reader): matched by name, case-insensitively, and cast where the
+    file's type differs, like the reference's schema adapter; a column the
+    file lacks is NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
+
+    cols = {n.lower(): c for n, c in zip(batch.schema.names, batch.columns)}
+    arrays = [cols.get(f.name.lower(), pa.nulls(batch.num_rows)) for f in schema]
+    return pa.RecordBatch.from_arrays([
+        a if from_arrow_type(a.type) == f.dataType else a.cast(to_arrow_type(f.dataType))
+        for a, f in zip(arrays, schema)
+    ], names=schema.names)
+
+
 try:  # Python Data Source API (Spark 4+)
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
@@ -215,8 +231,8 @@ try:  # Python Data Source API (Spark 4+)
             self.path, self.batch, self.part_vals = path, batch, part_vals
 
     class _IpcReader(DataSourceReader):
-        def __init__(self, options):
-            self.base = options["path"]
+        def __init__(self, options, schema):
+            self.base, self.schema = options["path"], schema
             self.files = _list_files(self.base)
             self.part_cols = _partition_columns(self.base, self.files)
 
@@ -258,7 +274,7 @@ try:  # Python Data Source API (Spark 4+)
                     arrays.append(pa.array([v] * batch.num_rows, type=t))
                     names.append(k)
                 batch = pa.RecordBatch.from_arrays(arrays, names=names)
-            yield batch
+            yield _conform(batch, self.schema)
 
     class ArrowIpcDataSource(DataSource):
         """``spark.read.format("arrow_ipc").load(path)`` — one Spark task
@@ -288,7 +304,7 @@ try:  # Python Data Source API (Spark 4+)
             return from_arrow_schema(sch)
 
         def reader(self, schema):
-            return _IpcReader(self.options)
+            return _IpcReader(self.options, schema)
 
     def register(spark) -> None:
         spark.dataSource.register(ArrowIpcDataSource)

@@ -124,9 +124,9 @@ def main() -> None:
     ap.add_argument(
         "--floors",
         action="store_true",
-        help="also measure each query's sf0.001 floor back-to-back (the "
-        "ab_tpch.py discipline) and report compute-over-floor — the "
-        "BENCH_SF1.md closed-at-floor accounting",
+        help="also measure each query's sf0.001 floor back-to-back and "
+        "report compute-over-floor — the BENCH_SF1.md closed-at-floor "
+        "accounting",
     )
     args = ap.parse_args()
 
@@ -176,7 +176,7 @@ def main() -> None:
         spark._jvm.System.gc()
         q = name.removeprefix("tpch_")
         timings[q] = bench._min_of(lambda: fn(spark, lay).collect(), args.n)
-        if args.floors:  # same-query sf0.001 wall, back-to-back (ab_tpch)
+        if args.floors:  # same-query sf0.001 wall, back-to-back
             floors[q] = bench._min_of(
                 lambda: fn(spark, warm).collect(), args.n
             )
