@@ -44,7 +44,7 @@ from arrow_datafusion_spark.session import (
     prepare,
 )
 from arrow_datafusion_spark.sources.avro import avro_schema_of
-from arrow_datafusion_spark.sources.listing import FORMATS, read_listing, table_schema
+from arrow_datafusion_spark.sources.listing import FORMATS, file_schema, read_listing, table_schema
 from arrow_datafusion_spark.sources.sink import (
     EXT_FORMATS,
     file_target_format,
@@ -431,7 +431,7 @@ class SessionContext:
         # named-tz columns; consumed by _rewrite_tz_date_trunc)
         self._column_tz: dict[str, dict[str, str]] = {}
         # file-backed tables (the ListingTable role): name → {fmt, path,
-        # schema, declared, parts, options}; a CREATE EXTERNAL TABLE over a
+        # schema, parts, options}; a CREATE EXTERNAL TABLE over a
         # local location is also an INSERT sink (FileSinkExec) and carries
         # single_file and unbounded. A write under the location re-lists
         # the table (_relist) under the fixed schema: a Spark path
@@ -607,6 +607,9 @@ class SessionContext:
         if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             df.createOrReplaceTempView(name)
         self._tables[name] = df
+        # the frame replaces any file-backed table of that name (_relist
+        # records its listing after this call)
+        self._listings.pop(name, None)
         self._rw_version += 1
 
     def register_object_store(self, path: str, options: dict | None = None) -> str:
@@ -663,7 +666,6 @@ class SessionContext:
             "fmt": FORMATS[fmt],
             "path": local_path(self.register_object_store(path)),
             "schema": None if schema is None else table_schema(schema, parts),
-            "declared": schema is not None,
             "parts": list(parts),
             "options": dict(options or {}),
             **sink,
@@ -681,10 +683,10 @@ class SessionContext:
                 self.spark, rec["fmt"], rec["path"], schema=rec["schema"],
                 partition_by=rec["parts"], options=rec["options"],
             )
-            if rec["schema"] is None:
-                rec["schema"] = df.schema
-        self._listings[name] = rec
+            if rec["schema"] is None:  # a footer's keeps the nullability Spark's read drops
+                rec["schema"] = file_schema(rec["fmt"], rec["path"], rec["options"]) or df.schema
         self.register_table(name, df)
+        self._listings[name] = rec
 
     def _refresh_path_tables(self, written_path: str) -> None:
         """Re-list every file-backed table whose location is, or contains,
@@ -1154,9 +1156,6 @@ class SessionContext:
                 res = self._run(lx.derive(tmp_query), args)  # raises → old table intact
                 self.spark.sql(f"DROP TABLE IF EXISTS {name}")
                 self.deregister_table(name)
-                # the replacement's records were captured under the temp
-                # name — follow the rename
-                self._move_table_state(tmp, name)
                 if any(
                     t.name == tmp and t.tableType != "TEMPORARY"
                     for t in self._catalog_tables()
@@ -1166,7 +1165,10 @@ class SessionContext:
                     # replacement landed as a session registration (temp
                     # view) — re-register under the target name
                     self.register_table(name, self.table(tmp))
-                    self.deregister_table(tmp)
+                # the replacement's records were captured under the temp
+                # name — follow the rename, then forget the temp name
+                self._move_table_state(tmp, name)
+                self.deregister_table(tmp)
                 return res
             lx = lx.derive(stripped)
         m = re.match(
@@ -1364,41 +1366,11 @@ class SessionContext:
         return self._result([(n,)], "count bigint")
 
     def _sql_describe(self, name: str) -> DataFrame:
-        """DataFusion's DESCRIBE: (column_name, data_type, is_nullable)
-        with Arrow Debug type display and YES/NO nullability.
-
-        A parquet table registered without a column list reads the FOOTER
-        schema (pyarrow) instead of Spark's: Spark's parquet reader relaxes
-        all nullability to true (map values, required columns), while the
-        reference's DESCRIBE reports the file's own declared nullability
-        (map.slt:24 — `value Int64 nullable: false`, `timestamp Utf8 NO`).
-        A declared column list is the table's schema as it stands."""
-        fields = self.spark.table(name).schema.fields
-        rec = self._listings.get(name)
-        if rec and rec["fmt"] == "parquet" and not rec["declared"]:
-            import glob
-
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            base = _listing_base(rec["path"])
-            files = [base]
-            if os.path.isdir(base):
-                files = sorted(glob.glob(os.path.join(base, "*.parquet")))
-            try:
-                fields = from_arrow_schema(pq.read_schema(files[0])).fields
-            except Exception:
-                pass  # no footer at hand (object store, partition tree)
-        rows = [
-            (
-                f.name,
-                _arrow_type_display(f.dataType),
-                "YES" if f.nullable and self._is_nullable(name, f) else "NO",
-            )
-            for f in fields
-        ]
+        """DataFusion's DESCRIBE: (column_name, data_type, is_nullable), as
+        information_schema.columns lists them."""
         return self._result(
-            rows, "column_name string, data_type string, is_nullable string"
+            [(r[3], r[7], r[6]) for r in self._ansi_columns_rows([name])],
+            "column_name string, data_type string, is_nullable string",
         )
 
     def _record_ctas_nullability(self, name: str, body: Lexed, args=None) -> None:
@@ -1758,7 +1730,11 @@ class SessionContext:
         sch = self.settings.get("datafusion.catalog.default_schema")
         rows = []
         for tname in names:
-            for i, f in enumerate(self.spark.table(tname).schema.fields):
+            # a file-backed table's fixed schema; a parquet footer's keeps the
+            # file's nullability (map.slt:24 — `value Int64 nullable: false`)
+            rec = self._listings.get(tname)
+            schema = rec["schema"] if rec and rec["schema"] else self.spark.table(tname).schema
+            for i, f in enumerate(schema):
                 arrow = _arrow_type_display(f.dataType)
                 char_octet = prec = radix = scale = None
                 if arrow in ("Utf8", "Binary"):

@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 
 __all__ = ["WINDOW", "rows_frame", "range_frame", "groups_frame"]
 
-UNBOUNDED_PRECEDING = Window.unboundedPreceding
-UNBOUNDED_FOLLOWING = Window.unboundedFollowing
-CURRENT_ROW = Window.currentRow
-
-
 WINDOW: dict[str, Callable[..., Column]] = {
     "row_number": lambda: F.row_number(),
     "rank": lambda: F.rank(),

@@ -300,12 +300,6 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df
 
 
-def _shingle_df(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("doc"), char_shingles(F.col(text_col), k).alias("shingles")
-    )
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,

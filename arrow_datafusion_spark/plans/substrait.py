@@ -38,11 +38,15 @@ from __future__ import annotations
 import base64
 import datetime
 import json
+import os
 import re
 from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from arrow_datafusion_spark.sources.listing import read_listing
+from arrow_datafusion_spark.sources.sink import local_path
 
 __all__ = ["consume_plan", "consume_plan_file"]
 
@@ -267,21 +271,11 @@ class _Consumer:
             # back to resolving a single item's BASENAME as a registered
             # table (consumer.rs:692 extract_filename — the named-table
             # convention round-trip tests rely on).
-            import os as _os
-
             items = _get(lf, "items", [])
-            uris = [
-                _get(it, "uri_file") or _get(it, "uri_path") or ""
-                for it in items
-            ]
-            paths = [
-                u[len("file://"):] if u.startswith("file://") else u
-                for u in uris
-            ]
-            if paths and all(
-                p.endswith(".parquet") and _os.path.exists(p) for p in paths
-            ):
-                df = self.ctx.spark.read.parquet(*paths)
+            uris = [_get(it, "uri_file") or _get(it, "uri_path") or "" for it in items]
+            paths = [local_path(u) for u in uris]
+            if paths and all(p.endswith(".parquet") and os.path.exists(p) for p in paths):
+                df = read_listing(self.ctx.spark, "parquet", paths)
             elif len(items) == 1:
                 name = uris[0].rstrip("/").rsplit("/", 1)[-1]
                 df = self.ctx.table(name)

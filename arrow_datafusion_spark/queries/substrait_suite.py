@@ -59,10 +59,11 @@ def _ensure_fixture() -> str:
 def substrait_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arrow_datafusion_spark.context import SessionContext
     from arrow_datafusion_spark.plans.substrait import consume_plan_file
+    from arrow_datafusion_spark.sources.listing import read_listing
 
     ctx = SessionContext(spark)
     ctx.register_table(
-        "FILENAME_PLACEHOLDER_0", spark.read.parquet(_ensure_fixture())
+        "FILENAME_PLACEHOLDER_0", read_listing(spark, "parquet", _ensure_fixture())
     )
     out = consume_plan_file(ctx, _Q1_PLAN)
     # decimal → double normalization (sums are exact decimals on both

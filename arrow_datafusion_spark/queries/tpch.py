@@ -30,7 +30,7 @@ Spark-first notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrow_datafusion_spark.session import load_tables
@@ -62,13 +62,6 @@ def _esum(col: Column | str, alias: str) -> Column:
     for every TPC-H group here; beyond that use _dsum."""
     s = F.sum(F.round(_c(col) * 10000).cast("long"))
     return (F.round(s / 100.0) / 100.0).alias(alias)
-
-
-def _davg(col: Column | str, alias: str, scale: int = 4) -> Column:
-    """Order-independent average: exact decimal sum / count, one double division."""
-    return F.round(
-        F.sum(_c(col).cast(_DEC)).cast("double") / F.count(F.lit(1)), scale
-    ).alias(alias)
 
 
 def _rev():

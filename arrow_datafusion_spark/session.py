@@ -38,6 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arrow_datafusion_spark.sources.listing import read_listing
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -137,8 +139,8 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # DataFrame handles are immutable logical plans — memoize per (session, dir,
-# table) so repeated queries don't re-run parquet footer/schema jobs (~100 ms
-# each; at 22 bench queries × ~4 tables that is seconds of pure overhead).
+# table): reading the 10 fixture tables afresh runs no Spark job but still
+# costs ~0.29 s of py4j round-trips per load_tables call (~4 ms memoized).
 # Keyed by applicationId (stable, unique per live session — unlike id(spark),
 # which CPython can reuse after a stopped session is GC'd).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
@@ -169,7 +171,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     prepare(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_listing(spark, "parquet", table_path(sf_dir, name))
     if name == "events":
         df = normalize_ts(df)
     _TABLE_CACHE[key] = df
@@ -178,9 +180,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # (appId, view name) → sf_dir it was last registered for. Re-registering the
 # same view on every load_tables call costs a py4j/catalog round-trip per
-# table per query (~0.15 s per TPC-H query); skip when nothing changed. If a
-# caller re-points a view name at different data behind our back it must
-# register its own view (SessionContext does — it never routes through here).
+# table per query (~0.09 s for the 10 fixture views); skip when nothing
+# changed. If a caller re-points a view name at different data behind our
+# back it must register its own view (SessionContext does — it never routes
+# through here).
 _VIEW_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -424,9 +424,6 @@ class Settings:
             )
         return suffix
 
-    def is_known(self, key: str) -> bool:
-        return key.lower().removeprefix("datafusion.") in _REGISTRY
-
     def get(self, key: str) -> str | None:
         return self._values[self._suffix(key)]
 

@@ -11,11 +11,10 @@ new parts from the highest existing part index + 1; every format returns
 its row count from the write itself, in the same Spark job.
 
 `listing.py` — `read_listing`, the one file reader behind every
-file-backed table (ListingTable): the register_* methods, CREATE EXTERNAL
-TABLE, the re-list after a COPY or INSERT into the location, and the
-DataFrame facade's read_*. A table's schema is fixed at registration (the
-declared column list, else the one read from the files then); every
-re-list reads under it and runs no inference job, and the frame has that
-schema's names and types whatever the files hold. Hive partition values
-are typed as declared, partition columns last.
+file-backed table (ListingTable) and every parquet read in the engine. A
+table's schema is fixed at registration (the declared column list, else
+the one read from the files then: a local parquet table's from a footer,
+with no Spark job); every re-list reads under it and runs no inference
+job, and the frame has that schema's names and types whatever the files
+hold. Hive partition values are typed as declared, partition columns last.
 """

@@ -45,8 +45,6 @@ from collections.abc import Iterator
 
 MAGIC = b"Obj\x01"
 
-_PRIMITIVES = ("boolean", "int", "long", "float", "double", "string", "bytes")
-
 
 # ---------------------------------------------------------------- binary codec
 def _zigzag_encode(n: int) -> int:

@@ -2,7 +2,8 @@
 (datafusion/core/src/datasource/listing/table.rs:617) and the read side of
 ``write_sink``: ``register_parquet`` / ``csv`` / ``json`` / ``avro`` /
 ``arrow``, CREATE EXTERNAL TABLE, the re-list after a COPY or an INSERT
-into the location, and the DataFrame facade's ``read_*`` all read here.
+into the location, the DataFrame facade's ``read_*`` and every other
+parquet read in the engine (``session.load_table`` too) all read here.
 
 ``read_listing`` owns the three decisions every such read makes:
 
@@ -18,9 +19,9 @@ into the location, and the DataFrame facade's ``read_*`` all read here.
   schema). Parquet reads integer and float columns at their widest type,
   which Spark's reader accepts from any narrower file type, and casts them
   down; the arrow reader casts each batch; avro files are read as they are
-  and cast. Without a schema the reader infers one from the files: a table
-  does that once, at registration, and re-lists under the schema it got,
-  so a re-list runs no inference job.
+  and cast. Without one, a local parquet table's comes from a footer
+  (``file_schema``, no Spark job), any other's from Spark's inference: once,
+  at registration; a re-list reads under the schema it got.
 - **Hive partitions.** Partition values come from the ``key=value/``
   directories, typed as the schema declares; the data columns come first
   and the partition columns last (a partition column the schema does not
@@ -29,10 +30,16 @@ into the location, and the DataFrame facade's ``read_*`` all read here.
 
 from __future__ import annotations
 
+import json
+import os
 import weakref
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from arrow_datafusion_spark.sources.sink import local_path
 
 # STORED AS name → format
 FORMATS = {"parquet": "parquet", "csv": "csv", "json": "json",
@@ -57,9 +64,9 @@ def table_schema(schema: T.StructType, partition_by=()) -> T.StructType:
     )
 
 
-def read_listing(spark, fmt: str, path: str, *, schema: T.StructType | None = None,
+def read_listing(spark, fmt: str, path: str | list[str], *, schema: T.StructType | None = None,
                  partition_by=(), options: dict | None = None):
-    """The files at ``path`` as a DataFrame of ``fmt`` rows.
+    """The files at ``path``, one location or several, as ``fmt`` rows.
 
     ``options`` are Spark reader options for parquet/csv/json (csv reads a
     header and, without a schema, infers the column types unless told
@@ -68,7 +75,8 @@ def read_listing(spark, fmt: str, path: str, *, schema: T.StructType | None = No
         raise ValueError(f"unsupported STORED AS {fmt!r}")
     fmt = FORMATS[fmt.lower()]
     if schema is not None:
-        schema = table_schema(schema, partition_by)
+        # the casts below must target nullable types, as Spark's readers do
+        schema = _nullable(table_schema(schema, partition_by))
     if fmt == "avro":
         df = _read_avro(spark, path)
     else:
@@ -86,6 +94,9 @@ def read_listing(spark, fmt: str, path: str, *, schema: T.StructType | None = No
                               for f in schema])
                 if fmt == "parquet" else schema
             )
+        elif fmt == "parquet" and (found := file_schema(fmt, path, options)) is not None:
+            # the files' own schema: read as it is, nothing to cast
+            reader = reader.schema(found)
         if fmt == "arrow":
             fmt = _py_source(spark, "arrow_ipc")
         df = reader.options(**options).format(fmt).load(path)
@@ -95,6 +106,51 @@ def read_listing(spark, fmt: str, path: str, *, schema: T.StructType | None = No
             for f in schema
         ])
     return df
+
+
+def file_schema(fmt: str, path: str | list[str], options: dict | None = None):
+    """The schema Spark's non-merging inference gives a local parquet file
+    or directory of files, read on the driver from the footer of the first
+    data file in name order instead of in a Spark job, with the file's own
+    nullability. None, and Spark infers, for anything else: reader options,
+    a list, glob or URL, hive partition directories, and footer types the
+    mapping does not reproduce (INT96, nanosecond timestamps, unsigned
+    integers, null)."""
+    if fmt != "parquet" or options or not isinstance(path, str):
+        return None
+    path = local_path(path)
+    names = sorted(n for n in os.listdir(path) if n[0] not in "._") if os.path.isdir(path) else []
+    if names and not any(os.path.isdir(os.path.join(path, n)) for n in names):
+        path = os.path.join(path, names[0])
+    if not os.path.isfile(path):
+        return None
+    try:
+        meta = pq.read_metadata(path)
+        spark_json = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if spark_json:  # Spark wrote the file: its inference reads the schema stored here
+            return T.StructType.fromJson(json.loads(spark_json))
+        for i in range(meta.num_columns):
+            col = meta.schema.column(i)
+            logical = json.loads(col.logical_type.to_json())
+            if (col.physical_type == "INT96" or logical["Type"] == "Null"
+                    or logical.get("timeUnit") == "nanoseconds"
+                    or logical.get("isSigned") is False):
+                return None
+        return from_arrow_schema(meta.schema.to_arrow_schema(), prefer_timestamp_ntz=True)
+    except (OSError, ValueError, TypeError, KeyError, NotImplementedError):
+        return None  # no footer the mapping reads: Spark infers, or reports why
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                             for f in dt])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
 
 
 def _types(schema: T.StructType) -> list:

@@ -303,14 +303,6 @@ def _typed_empty(arr: str) -> str:
     return f"slice(transform(array(1), __i -> try_element_at({arr}, 1)), 1, 0)"
 
 
-def _arr_first_pos(arr: str, v: str) -> str:
-    """1-based index of the first element null-safely equal to v, or NULL."""
-    return (
-        f"try_element_at(filter(sequence(1, size({arr})), "
-        f"__i -> try_element_at({arr}, __i) <=> ({v})), 1)"
-    )
-
-
 def _t_element(p):
     return f"try_element_at({p[0]}, {p[1]})"
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrow_datafusion_spark.session import normalize_ts, prepare, table_path
+from arrow_datafusion_spark.sources.listing import read_listing
 
 __all__ = [
     "read_events_stream",
@@ -34,12 +35,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs; the fixture is a single file, so tests see one deterministic
     batch.
 
-    The stream schema is taken from the parquet footer (one batch-read
-    footer job at setup) rather than hard-coded, so fixture storage-type
-    changes (ns-as-long vs µs NTZ) can't desynchronize batch and stream;
-    normalize_ts then applies the same ts policy as the batch path."""
+    The stream schema is the batch reader's (a footer read, no job) rather
+    than hard-coded, so fixture storage-type changes (ns-as-long vs µs NTZ)
+    can't desynchronize batch and stream; normalize_ts then applies the
+    same ts policy as the batch path."""
     prepare(spark)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = read_listing(spark, "parquet", table_path(sf_dir, "events")).schema
     # FileStreamSource requires a directory or glob, not a bare file path —
     # a single-char glob on the suffix keeps the base path at the directory.
     path = table_path(sf_dir, "events")[:-1] + "[t]"

@@ -6,17 +6,21 @@ For every format a table's column types are fixed when it is registered:
 same after an INSERT and after a COPY into the table's location. A dropped
 external table leaves no record behind, a re-list after a COPY runs no
 schema-inference job, and a parenthesized INSERT source is a query, not a
-column list.
-"""
+column list. A local parquet table takes its schema from a footer read on
+the driver: registering one runs no Spark job, the schema equals Spark's
+own inference on every parquet file the tests read or write, and its
+nullability reaches DESCRIBE and ``information_schema.columns`` alike."""
 
 from __future__ import annotations
 
 import ast
+import glob
 import os
 
 import pytest
 
-from tests.test_sink import _run
+from tests.test_sink import SRC as NATION_SRC
+from tests.test_sink import _run, in_job_group
 
 FORMATS = ("parquet", "csv", "json", "arrow", "avro")
 # files hold k as BIGINT; a declared table reads it as INT
@@ -25,10 +29,12 @@ ARROW_NAMES = {"int": "Int32", "bigint": "Int64", "string": "Utf8"}
 
 
 @pytest.fixture(scope="module")
-def ctx(spark):
+def ctx(spark, sf_dir):
     from arrow_datafusion_spark.context import SessionContext
 
-    return SessionContext(spark.newSession())
+    c = SessionContext(spark.newSession())
+    c.register_parquet("nation", f"{sf_dir}/nation.parquet")
+    return c
 
 
 def _header(fmt: str) -> str:
@@ -133,3 +139,139 @@ def test_context_reads_files_only_through_read_listing():
         and node.value.attr == "read"
     ]
     assert found == []
+
+
+def test_package_reads_files_only_through_sources():
+    """No ``spark.read.<format>`` outside ``sources/``: every parquet read
+    goes through ``read_listing`` and its footer schema."""
+    import arrow_datafusion_spark
+
+    pkg = os.path.dirname(arrow_datafusion_spark.__file__)
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, pkg).startswith("sources" + os.sep):
+            continue
+        found += [
+            f"{os.path.relpath(path, pkg)}: {ast.unparse(node)}"
+            for node in ast.walk(ast.parse(open(path).read()))
+            if isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "read"
+        ]
+    assert found == []
+
+
+def test_parquet_registration_runs_no_job(spark, ctx, sf_dir, tmp_path):
+    from arrow_datafusion_spark.session import ALL_TABLES, load_tables
+
+    sc = spark.sparkContext
+    # a location no earlier load_tables call has memoized
+    data = tmp_path / "fixtures"
+    data.mkdir()
+    for t in ALL_TABLES:
+        os.symlink(f"{sf_dir}/{t}.parquet", data / f"{t}.parquet")
+    tables, jobs = in_job_group(sc, lambda: load_tables(spark.newSession(), str(data)))
+    assert (sorted(tables), jobs) == (sorted(ALL_TABLES), 0)
+    _, jobs = in_job_group(
+        sc, lambda: ctx.register_parquet("jobs_nation", f"{sf_dir}/nation.parquet")
+    )
+    assert jobs == 0
+    loc = f"{tmp_path}/ext/"
+    ctx.sql(f"COPY ({NATION_SRC}) TO '{loc}' STORED AS PARQUET").collect()
+    _, jobs = in_job_group(
+        sc, lambda: ctx.sql(f"CREATE EXTERNAL TABLE jobs_ext STORED AS PARQUET LOCATION '{loc}'")
+    )
+    assert jobs == 0
+    assert ctx.sql("SELECT count(*) FROM jobs_ext").collect() == ctx.sql(
+        "SELECT count(*) FROM jobs_nation"
+    ).collect()
+
+
+def test_footer_nullability_reaches_describe_and_information_schema(ctx, tmp_path):
+    loc = f"{tmp_path}/rp/"
+    ctx.sql(f"COPY (SELECT 1 AS a) TO '{loc}' STORED AS PARQUET").collect()
+    ctx.sql(f"CREATE EXTERNAL TABLE listing_rp STORED AS PARQUET LOCATION '{loc}'")
+    described = [tuple(r) for r in ctx.sql("DESCRIBE listing_rp").collect()]
+    listed = [
+        tuple(r)
+        for r in ctx.sql(
+            "SELECT column_name, data_type, is_nullable FROM information_schema.columns "
+            "WHERE table_name = 'listing_rp'"
+        ).collect()
+    ]
+    assert described == listed == [("a", "Int32", "NO")]
+
+
+def test_a_view_replaces_a_file_backed_table(ctx, tmp_path):
+    loc = f"{tmp_path}/v/"
+    ctx.sql(f"COPY (SELECT 1 AS a) TO '{loc}' STORED AS PARQUET").collect()
+    ctx.register_parquet("listing_view", loc)
+    ctx.register_view("listing_view", "SELECT 'x' AS z")
+    # the listing is gone: a COPY into its old location re-lists nothing
+    ctx.sql(f"COPY (SELECT 2 AS a) TO '{loc}' STORED AS PARQUET").collect()
+    assert [tuple(r) for r in ctx.sql("SELECT * FROM listing_view").collect()] == [("x",)]
+    assert [tuple(r) for r in ctx.sql("DESCRIBE listing_view").collect()] == [
+        ("z", "Utf8", "NO")
+    ]
+
+
+# every Spark type a COPY writes, none of them nullable
+TYPED_SRC = (
+    "SELECT 1 AS a, array(1, 2) AS arr, map('k', 1) AS mp, named_struct('x', 1) AS st, "
+    "DATE '2020-01-01' AS dt, TIMESTAMP '2020-01-01 00:00:00' AS ts, "
+    "TIMESTAMP_NTZ '2020-01-01 00:00:00' AS tn, CAST(1.5 AS DECIMAL(10, 2)) AS dc, "
+    "CAST(1 AS TINYINT) AS ti, CAST(1 AS SMALLINT) AS si, CAST(1.5 AS FLOAT) AS fl, "
+    "X'01' AS bn, true AS bo"
+)
+
+
+def test_footer_schema_matches_spark_inference(spark, ctx, sf_dir, tmp_path):
+    """On every parquet file the tests read or write, the footer's column
+    names and types are Spark's inference, and a table read through it has
+    Spark's schema; where the footer cannot say (nanosecond timestamps,
+    unsigned integers, hive partitions) Spark infers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arrow_datafusion_spark.sources.listing import file_schema, read_listing
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(
+        glob.glob(f"{os.path.dirname(sf_dir)}/sf0.001/*.parquet")
+        + glob.glob(f"{sf_dir}/*.parquet")
+        + glob.glob(f"{repo}/tests/fixtures/**/*.parquet", recursive=True)
+        + [f"{repo}/tests/fixtures/substrait/nation_dir"]
+    )
+    # the file sink's outputs: a directory, a second COPY into it, one
+    # file, an empty file, every written type, a hive-partitioned tree
+    for target, src, clause in (
+        ("dir/", NATION_SRC, "STORED AS PARQUET"),
+        ("dir/", NATION_SRC, "STORED AS PARQUET"),
+        ("one.parquet", NATION_SRC, ""),
+        ("empty.parquet", f"{NATION_SRC} WHERE false", ""),
+        ("typed/", TYPED_SRC, "STORED AS PARQUET"),
+        ("parts/", NATION_SRC, "STORED AS PARQUET PARTITIONED BY (name)"),
+    ):
+        ctx.sql(f"COPY ({src}) TO '{tmp_path}/{target}' {clause}").collect()
+    paths += [f"{tmp_path}/{t}" for t in ("dir", "one.parquet", "empty.parquet", "typed", "parts")]
+    # types Spark reads differently from their Arrow mapping
+    for name, arr in (
+        ("ns", pa.array([1], pa.timestamp("ns"))),
+        ("u32", pa.array([1], pa.uint32())),
+    ):
+        pq.write_table(pa.table({name: arr}), f"{tmp_path}/{name}.parquet")
+        paths.append(f"{tmp_path}/{name}.parquet")
+
+    def named_types(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    inferred = []
+    for path in paths:
+        spark_schema = spark.read.parquet(path).schema
+        footer = file_schema("parquet", path)
+        if footer is None:
+            inferred.append(os.path.basename(path))
+        else:
+            assert named_types(footer) == named_types(spark_schema), path
+        assert read_listing(spark, "parquet", path).schema == spark_schema, path
+    assert sorted(inferred) == ["ns.parquet", "parts", "u32.parquet"]

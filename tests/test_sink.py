@@ -40,16 +40,23 @@ def nation(ctx):
 
 
 def _run(ctx, text: str, timeout: float = 120.0) -> tuple[int, int]:
-    """(returned count, Spark jobs) of one statement, collected on a
-    thread in its own job group and joined with a bound."""
-    sc = ctx.spark.sparkContext
+    """(returned count, Spark jobs) of one statement."""
+    ((n,),), jobs = in_job_group(
+        ctx.spark.sparkContext, lambda: ctx.sql(text).collect(), timeout, text
+    )
+    return n, jobs
+
+
+def in_job_group(sc, fn, timeout: float = 120.0, what: str = "") -> tuple:
+    """(``fn()``, Spark jobs it ran), run on a thread in its own job group
+    and joined with a bound."""
     group = f"sink-{uuid.uuid4().hex}"
     out: dict = {}
 
     def body():
         sc.setJobGroup(group, group)
         try:
-            out["rows"] = ctx.sql(text).collect()
+            out["value"] = fn()
         except Exception as exc:  # re-raised on the test's thread
             out["error"] = exc
         finally:
@@ -58,11 +65,10 @@ def _run(ctx, text: str, timeout: float = 120.0) -> tuple[int, int]:
     t = threading.Thread(target=body, daemon=True)
     t.start()
     t.join(timeout)
-    assert not t.is_alive(), f"no result within {timeout:.0f} s: {text}"
+    assert not t.is_alive(), f"no result within {timeout:.0f} s: {what}"
     if "error" in out:
         raise out["error"]
-    (n,), = out["rows"]
-    return n, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out["value"], len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(ctx, table: str) -> list[tuple]:
