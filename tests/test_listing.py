@@ -127,20 +127,6 @@ def test_parenthesized_insert_source(ctx, tmp_path, external):
         ctx.spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_context_reads_files_only_through_read_listing():
-    import arrow_datafusion_spark.context as context
-
-    tree = ast.parse(open(context.__file__).read())
-    found = [
-        ast.unparse(node)
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Attribute)
-        and isinstance(node.value, ast.Attribute)
-        and node.value.attr == "read"
-    ]
-    assert found == []
-
-
 def test_package_reads_files_only_through_sources():
     """No ``spark.read.<format>`` outside ``sources/``: every parquet read
     goes through ``read_listing`` and its footer schema."""
@@ -223,6 +209,18 @@ TYPED_SRC = (
     "CAST(1 AS TINYINT) AS ti, CAST(1 AS SMALLINT) AS si, CAST(1.5 AS FLOAT) AS fl, "
     "X'01' AS bn, true AS bo"
 )
+
+
+def test_relist_under_a_footer_schema_with_non_null_nested_types(ctx, tmp_path):
+    """The fixed schema holds non-null array elements, map values and
+    struct fields; the re-list after a COPY still reads every file."""
+    loc = f"{tmp_path}/nested/"
+    copy = f"COPY ({TYPED_SRC}) TO '{loc}' STORED AS PARQUET"
+    ctx.sql(copy).collect()
+    ctx.sql(f"CREATE EXTERNAL TABLE listing_nested STORED AS PARQUET LOCATION '{loc}'")
+    ctx.sql(copy).collect()
+    rows = ctx.sql("SELECT arr, mp['k'], st.x FROM listing_nested").collect()
+    assert [(r[0], r[1], r[2]) for r in rows] == [([1, 2], 1, 1)] * 2
 
 
 def test_footer_schema_matches_spark_inference(spark, ctx, sf_dir, tmp_path):
