@@ -29,6 +29,7 @@ import os
 import re
 import weakref
 from collections.abc import Callable
+from dataclasses import dataclass, field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -293,7 +294,7 @@ def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
                 cname = f"`{cname[1:-1]}`"
             elif cname[:1] != "`" and normalize:
                 cname = cname.lower()
-            # DEFAULT clauses are recorded separately (_record_defaults)
+            # DEFAULT clauses are recorded separately (_constraints)
             # and applied at INSERT time — strip them from the DDL type
             ctype = re.sub(r"\s+DEFAULT\s+.+$", "", ctype, flags=re.IGNORECASE | re.DOTALL)
             # constraint suffixes are advisory here (Spark DDL schema
@@ -395,6 +396,50 @@ def _split_recursive_union(body: str) -> tuple[str, str, bool]:
     return body[: last.start()], body[last.end() :], distinct
 
 
+# a single-part SQL identifier: the names a temp view can take
+_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+
+
+def _key(name: str) -> str:
+    """A table's record key: the identifier as the reference normalizes an
+    unquoted one (lower-cased), which is also how Spark's case-insensitive
+    catalog names temp views and managed tables."""
+    return name.lower()
+
+
+@dataclass
+class _Table:
+    """One session table's state (the reference's TableProvider,
+    provider.rs:38: schema, constraints, column defaults and source)."""
+
+    # the registered frame; None for a managed table Spark holds
+    df: DataFrame | None = None
+    # a file-backed table (the ListingTable role): {fmt, path, schema,
+    # parts, options}; one over a local location is also an INSERT sink
+    # (FileSinkExec) and carries single_file and unbounded. A write under
+    # the location re-lists the table (_relist) under the fixed schema: a
+    # Spark path DataFrame pins its file index at read time.
+    listing: dict | None = None
+    # a view's defining SQL, for information_schema.views
+    view_sql: str | None = None
+    # column → named time zone declared via arrow_cast in the view body
+    # (per-column Timestamp(_, Some("tz")) — §2.2 named-tz columns;
+    # consumed by _rewrite_tz_date_trunc)
+    column_tz: dict[str, str] = field(default_factory=dict)
+    # declared NOT NULL columns: Spark managed storage drops nullability,
+    # but the reference REJECTS inserts that would null one
+    not_null: frozenset = frozenset()
+    # a CTAS SELECT's non-null columns (information_schema.slt: `i Int32
+    # NO` after CREATE TABLE t AS SELECT 1::int), which Spark's managed
+    # parquet reads back nullable. DISPLAY ONLY (DESCRIBE /
+    # information_schema / SHOW COLUMNS); INSERT checks use not_null.
+    ctas_non_null: frozenset = frozenset()
+    # declared per-column DEFAULT expressions (statement.rs column
+    # defaults), evaluated AT INSERT TIME for columns a column-list INSERT
+    # omits
+    defaults: dict[str, str] = field(default_factory=dict)
+
+
 class SessionContext:
     """DataFusion-shaped session facade over a tuned SparkSession."""
 
@@ -409,7 +454,8 @@ class SessionContext:
 
     def __init__(self, spark: SparkSession | None = None):
         self.spark = prepare(spark) if spark is not None else build_spark()
-        self._tables: dict[str, DataFrame] = {}
+        # every per-table record, read and written through _key only
+        self._records: dict[str, _Table] = {}
         self._prepared: dict[str, str] = {}
         # SQL-rewrite memo: query text → final rewritten string. The whole
         # rewrite pipeline is a pure function of (query text, catalog
@@ -424,19 +470,6 @@ class SessionContext:
         # call, unchanged.
         self._rw_cache: dict = {}
         self._rw_version = 0
-        # view name → defining SQL, for information_schema.views
-        self._view_defs: dict[str, str] = {}
-        # view → {column → named time zone} declared via arrow_cast in
-        # the view body (per-column Timestamp(_, Some("tz")) — §2.2
-        # named-tz columns; consumed by _rewrite_tz_date_trunc)
-        self._column_tz: dict[str, dict[str, str]] = {}
-        # file-backed tables (the ListingTable role): name → {fmt, path,
-        # schema, parts, options}; a CREATE EXTERNAL TABLE over a
-        # local location is also an INSERT sink (FileSinkExec) and carries
-        # single_file and unbounded. A write under the location re-lists
-        # the table (_relist) under the fixed schema: a Spark path
-        # DataFrame pins its file index at read time.
-        self._listings: dict[str, dict] = {}
         # DataFusion-compatible config registry (settings.py): SET/SHOW
         # SQL, information_schema.df_settings, and live Spark conf mapping.
         # datafusion-cli enables information_schema at startup — this
@@ -451,21 +484,6 @@ class SessionContext:
         # dropping a built-in makes later calls error) — Spark can't drop
         # builtins, so dropped names are tracked and rejected at plan time.
         self._dropped_functions: set[str] = set()
-        # declared NOT NULL columns per CREATE TABLE (coldefs) table —
-        # Spark managed storage drops nullability, but the reference
-        # REJECTS inserts that would null a non-nullable column
-        self._not_null: dict[str, frozenset] = {}
-        # declared per-column DEFAULT expressions (statement.rs column
-        # defaults): evaluated AT INSERT TIME for columns a column-list
-        # INSERT omits
-        self._col_defaults: dict[str, dict[str, str]] = {}
-        # CTAS keeps the SELECT's nullability in the reference's catalog
-        # (information_schema.slt: `i Int32 NO` after CREATE TABLE t AS
-        # SELECT 1::int); Spark's managed parquet reads back all-nullable,
-        # so the non-null field set is captured at create time. DISPLAY
-        # ONLY (DESCRIBE / information_schema / SHOW COLUMNS) — INSERT
-        # validation keeps using the DECLARED NOT NULL set (_not_null).
-        self._ctas_non_null: dict[str, frozenset] = {}
 
     # -- registration (ListingTable role, datasource/listing/table.rs:617) ---
 
@@ -596,21 +614,27 @@ class SessionContext:
             SessionContext._MACROS_DONE.add(self.spark)
 
     def register_table(self, name: str, df: DataFrame) -> None:
+        """The frame replaces any table of that name, and its record."""
+        self._bind(name, _Table(df))
+
+    def _bind(self, name: str, rec: _Table) -> None:
+        """Make ``rec`` (its frame set) the session table ``name``."""
         # names that aren't valid single-part view identifiers (e.g. a
         # Substrait LocalFiles basename like 'region.parquet' —
-        # consumer.rs:692 keeps the extension) resolve through the dict
-        # below only; SQL-side references need a valid name. Pre-validate
+        # consumer.rs:692 keeps the extension) resolve through the record
+        # only; SQL-side references need a valid name. Pre-validate
         # instead of swallowing createOrReplaceTempView errors wholesale:
         # a registration that fails for a DIFFERENT reason must propagate,
         # or a stale prior view under the same name would keep serving
-        # old data to SQL while the dict holds the new DataFrame.
-        if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-            df.createOrReplaceTempView(name)
-        self._tables[name] = df
-        # the frame replaces any file-backed table of that name (_relist
-        # records its listing after this call)
-        self._listings.pop(name, None)
+        # old data to SQL while the record holds the new DataFrame.
+        if re.fullmatch(_IDENT, name):
+            rec.df.createOrReplaceTempView(name)
+        self._records[_key(name)] = rec
         self._rw_version += 1
+
+    def _record(self, name: str) -> _Table:
+        """The record of table ``name``, or an empty one."""
+        return self._records.get(_key(name)) or _Table()
 
     def register_object_store(self, path: str, options: dict | None = None) -> str:
         """Object-store registration (datafusion-cli/src/object_storage.rs
@@ -662,38 +686,41 @@ class SessionContext:
         target."""
         if isinstance(schema, str):
             schema = StructType.fromDDL(schema)
-        self._relist(name, {
+        self._relist(name, _Table(listing={
             "fmt": FORMATS[fmt],
             "path": local_path(self.register_object_store(path)),
             "schema": None if schema is None else table_schema(schema, parts),
             "parts": list(parts),
             "options": dict(options or {}),
             **sink,
-        })
+        }))
 
-    def _relist(self, name: str, rec: dict | None = None) -> None:
+    def _relist(self, name: str, rec: _Table | None = None) -> None:
         """(Re-)register a file-backed table from the files now at its
         location, under its fixed schema; an INSERT sink whose location
-        holds no files yet is a typed empty relation."""
-        rec = self._listings[name] if rec is None else rec
-        if "unbounded" in rec and not has_files(rec["path"]):
-            df = self._result([], rec["schema"])
+        holds no files yet is a typed empty relation. A re-list swaps the
+        frame and keeps the record's constraints."""
+        rec = self._records[_key(name)] if rec is None else rec
+        lst = rec.listing
+        if "unbounded" in lst and not has_files(lst["path"]):
+            rec.df = self._result([], lst["schema"])
         else:
-            df = read_listing(
-                self.spark, rec["fmt"], rec["path"], schema=rec["schema"],
-                partition_by=rec["parts"], options=rec["options"],
+            rec.df = read_listing(
+                self.spark, lst["fmt"], lst["path"], schema=lst["schema"],
+                partition_by=lst["parts"], options=lst["options"],
             )
-            if rec["schema"] is None:  # a footer's keeps the nullability Spark's read drops
-                rec["schema"] = file_schema(rec["fmt"], rec["path"], rec["options"]) or df.schema
-        self.register_table(name, df)
-        self._listings[name] = rec
+            if lst["schema"] is None:  # a footer's keeps the nullability Spark's read drops
+                lst["schema"] = file_schema(lst["fmt"], lst["path"], lst["options"]) or rec.df.schema
+        self._bind(name, rec)
 
     def _refresh_path_tables(self, written_path: str) -> None:
         """Re-list every file-backed table whose location is, or contains,
         the just-written target, so it sees the new files."""
         target = os.path.abspath(local_path(written_path))
-        for name, rec in list(self._listings.items()):
-            base = os.path.abspath(_listing_base(rec["path"]))
+        for name, rec in list(self._records.items()):
+            if rec.listing is None:
+                continue
+            base = os.path.abspath(_listing_base(rec.listing["path"]))
             if target == base or target.startswith(base + os.sep):
                 self._relist(name)
 
@@ -702,15 +729,13 @@ class SessionContext:
         self._register_view(name, lex(sql))
 
     def _register_view(self, name: str, lx: Lexed) -> None:
-        self.register_table(name, self._run(lx))
-        self._view_defs[name] = lx.unshield()
+        rec = _Table(self._run(lx), view_sql=lx.unshield())
         # per-column NAMED TIME ZONES (timestamps.slt:1289-1435, issue
         # #8899): the reference's Timestamp(unit, Some("tz")) rides the
         # column type; Spark holds a single session zone, so record the
         # zone declared by a view-body `arrow_cast(col, '...Some("tz")')
         # AS alias` here and let zone-aware rewrites (date_trunc) consult
         # it. Values are stored as the same UTC instants either way.
-        self._column_tz.pop(name.lower(), None)
         for m in re.finditer(
             rf"arrow_cast\s*\(\s*[^,()]+,\s*({LIT})\s*\)\s+AS\s+(\w+)",
             lx.text,
@@ -723,9 +748,8 @@ class SessionContext:
             )
             tz = mt.group(1).strip() if mt else "UTC"
             if tz.upper() not in ("UTC", "+00:00", "Z"):
-                self._column_tz.setdefault(name.lower(), {})[
-                    m.group(2).lower()
-                ] = tz
+                rec.column_tz[m.group(2).lower()] = tz
+        self._bind(name, rec)
 
     def register_testdata(self, sf_dir: str = DEFAULT_SF_DIR) -> None:
         """Register the driver's fixture tables (TESTDATA.md)."""
@@ -734,31 +758,33 @@ class SessionContext:
 
     def deregister_table(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
-        self._tables.pop(name, None)
+        self._records.pop(_key(name), None)
         self._rw_version += 1
-        self._view_defs.pop(name, None)
-        self._column_tz.pop(name.lower(), None)
-        self._move_table_state(name)
         # keep session.load_tables' registered-view memo honest
         from arrow_datafusion_spark import session as _session
 
-        _session._VIEW_CACHE.pop((self.spark.sparkContext.applicationId, name), None)
+        _session._VIEW_CACHE.pop((self.spark.sparkContext.applicationId, _key(name)), None)
 
     # -- catalog ------------------------------------------------------------
 
     def table(self, name: str) -> DataFrame:
-        return self._tables.get(name) or self.spark.table(name)
+        df = self._record(name).df
+        return self.spark.table(name) if df is None else df
 
     def tables(self) -> list[str]:
+        """Spark's catalog names (lower-cased, like the record keys) and
+        the registered frames whose names are no SQL identifier."""
         return sorted(
-            {t.name for t in self._catalog_tables()} | set(self._tables)
+            {t.name for t in self._catalog_tables()}
+            | {k for k, rec in self._records.items() if rec.df is not None}
         )
 
     def table_exist(self, name: str) -> bool:
-        ts = self.tables()
-        # Spark's catalog lowercases managed-table names while resolution
-        # stays case-insensitive — mirror that here
-        return name in ts or name.lower() in {t.lower() for t in ts}
+        """One of tables(), asked of Spark's catalog by name: a listing
+        (listTables) costs ~0.15 s, a lookup ~2 ms."""
+        return self._record(name).df is not None or bool(
+            re.fullmatch(_IDENT, name) and self.spark.catalog.tableExists(name)
+        )
 
     # -- readers (DataFrame API entry, SURVEY.md §3.2) ----------------------
 
@@ -1064,8 +1090,8 @@ class SessionContext:
             if if_exists:
                 return self._empty_result()
             raise ValueError(f"no view named {name!r}")
-        if name not in self._view_defs and not any(
-            t.name == name and t.tableType == "VIEW"
+        if self._record(name).view_sql is None and not any(
+            t.name == _key(name) and t.tableType == "VIEW"
             for t in self.spark.catalog.listTables()
         ):
             # drop_view_cant_drop_table (ddl.slt): the name resolves to
@@ -1083,15 +1109,15 @@ class SessionContext:
         if m is None:
             return None
         name = m.group(1)
-        if name in self._view_defs:
+        if self._record(name).view_sql is not None:
             # drop_table_cant_drop_view (ddl.slt): the name is a session
             # VIEW — DROP TABLE must not remove it
             raise ValueError(f"Table {name!r} doesn't exist.")
         # managed-table DROP falls through to Spark; either way the
-        # per-table records must not survive
-        self._move_table_state(name)
+        # table's record must not survive
+        self._records.pop(_key(name), None)
         if any(
-            t.name == name and t.tableType == "TEMPORARY"
+            t.name == _key(name) and t.tableType == "TEMPORARY"
             for t in self.spark.catalog.listTables()
         ):
             # DataFusion's DROP TABLE drops session-registered tables too;
@@ -1156,18 +1182,21 @@ class SessionContext:
                 res = self._run(lx.derive(tmp_query), args)  # raises → old table intact
                 self.spark.sql(f"DROP TABLE IF EXISTS {name}")
                 self.deregister_table(name)
+                # the replacement's record was made under the temp name —
+                # it follows the rename, then the temp name is forgotten
+                rec = self._records.pop(_key(tmp), None) or _Table()
                 if any(
-                    t.name == tmp and t.tableType != "TEMPORARY"
+                    t.name == _key(tmp) and t.tableType != "TEMPORARY"
                     for t in self._catalog_tables()
                 ):
                     self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
+                    self._records[_key(name)] = rec
                 else:
                     # replacement landed as a session registration (temp
                     # view) — re-register under the target name
-                    self.register_table(name, self.table(tmp))
-                # the replacement's records were captured under the temp
-                # name — follow the rename, then forget the temp name
-                self._move_table_state(tmp, name)
+                    if rec.df is None:
+                        rec.df = self.spark.table(tmp)
+                    self._bind(name, rec)
                 self.deregister_table(tmp)
                 return res
             lx = lx.derive(stripped)
@@ -1194,17 +1223,17 @@ class SessionContext:
             # TIMESTAMP WITH TIME ZONE, unsigned widening — Spark's native
             # DDL parser rejects those spellings)
             name, coldefs = m.group(2), lx.unshield(m.group(3))
-            if m.group(1) and self.table_exist(name):
+            if self._name_taken(name, m.group(1)):
                 return self._empty_result()
+            declared = self._constraints(coldefs)
             self._result(
                 [],
                 _column_defs_to_ddl(
                     coldefs,
                     self.settings.get_bool("datafusion.sql_parser.enable_ident_normalization"),
                 ),
-            ).write.mode("ignore" if m.group(1) else "errorifexists").saveAsTable(name)
-            self._record_not_null(name, coldefs)
-            self._record_defaults(name, coldefs)
+            ).write.saveAsTable(name)
+            self._declare(name, *declared)
             return self._empty_result()
         m = re.match(
             r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
@@ -1217,30 +1246,26 @@ class SessionContext:
             # that preserves insertion order; Spark's native CTAS fans the
             # literal rows across defaultParallelism files whose read-back
             # listing order scrambles them. One literal list → one file.
-            if_not_exists, name, body = bool(m.group(1)), m.group(2), m.group(3)
-            if if_not_exists and self.table_exist(name):
+            name, body = m.group(2), m.group(3)
+            if self._name_taken(name, m.group(1)):
                 return self._empty_result()
             self._spark_sql(lx.derive(body.strip().rstrip(";")), args).coalesce(
                 1
-            ).write.mode(
-                "ignore" if if_not_exists else "errorifexists"
-            ).saveAsTable(name)
-            self._record_defaults(name, "")
-            self._record_not_null(name, "")
+            ).write.saveAsTable(name)
             # VALUES rows stay NULLABLE in the reference (Values relation
             # typing — information_schema.slt DESCRIBE some_table: Int64
             # YES), unlike SELECT-CTAS; no nullability capture here
-            self._ctas_non_null.pop(name.lower(), None)
+            self._declare(name)
             return self._empty_result()
         if m:
-            # CTAS without a column list: run natively, then clear any
-            # DEFAULT/NOT NULL records a prior same-named table left behind
-            # (clear only after success — a failed CTAS leaves the old
-            # table, and its records, intact)
+            # CTAS without a column list: run natively, then record the
+            # SELECT's non-null columns (a failed CTAS records nothing)
+            if self._name_taken(m.group(2), m.group(1)):
+                return self._empty_result()
             res = self._spark_sql(lx, args)
-            self._record_defaults(m.group(2), "")
-            self._record_not_null(m.group(2), "")
-            self._record_ctas_nullability(m.group(2), lx.derive(m.group(3)), args)
+            self._declare(
+                m.group(2), ctas_non_null=self._non_null_output(lx.derive(m.group(3)), args)
+            )
             return res
         return self._spark_sql(lx, args)
 
@@ -1278,17 +1303,16 @@ class SessionContext:
         if m is None:
             return None
         target = m.group(1)
-        if "unbounded" in self._listings.get(target, ()):
+        rec = self._record(target)
+        if rec.listing and "unbounded" in rec.listing:
             return self._insert_external(target, lx, args)
         src, body, cols = self._insert_columns(target, lx, args)
-        checks = self._insert_checks(
-            target, src, cols, self._not_null.get(target.lower(), frozenset())
-        )
+        checks = self._insert_checks(target, src, cols)
         if checks:
             self._raise_insert_checks(src.agg(*checks).first().asDict())
         has_collist = re.match(_INSERT_HEAD, lx.text, re.IGNORECASE).group(1) is not None
         if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE) or (
-            has_collist and self._col_defaults.get(target.lower())
+            has_collist and rec.defaults
         ):
             # coerced path: evaluates recorded column DEFAULTs Spark's
             # native path would NULL-fill, and writes literal VALUES as
@@ -1319,12 +1343,9 @@ class SessionContext:
     def _insert_external(self, target: str, lx: Lexed, args) -> DataFrame:
         """INSERT INTO an external table → append files at its location
         (the reference's FileSinkExec), then re-list. Returns the count."""
-        sink = self._listings[target]
+        sink = self._record(target).listing
         src, body, cols = self._insert_columns(target, lx, args)
-        checks = self._insert_checks(
-            target, src, cols, self._not_null.get(target.lower(), frozenset()),
-            lossy_casts=True,
-        )
+        checks = self._insert_checks(target, src, cols, lossy_casts=True)
         # an UNBOUNDED single file is rewritten as old ∪ new rows, so the
         # write's own count would include the old ones: count the new rows
         # in the checks' aggregate instead
@@ -1373,70 +1394,55 @@ class SessionContext:
             "column_name string, data_type string, is_nullable string",
         )
 
-    def _record_ctas_nullability(self, name: str, body: Lexed, args=None) -> None:
-        """Capture the CTAS SELECT's non-nullable output fields for the
-        introspection surfaces (see _ctas_non_null). Lazy schema analysis
-        only — the body is planned, never executed here."""
+    def _non_null_output(self, body: Lexed, args=None) -> frozenset:
+        """A CTAS SELECT's non-nullable output columns (the record's
+        display-only ctas_non_null). Lazy schema analysis only — the body
+        is planned, never executed here."""
         try:
             schema = self._spark_sql(
                 body.derive(body.text.strip().rstrip(";")), args
             ).schema
         except Exception:
-            self._ctas_non_null.pop(name.lower(), None)
-            return
-        nn = frozenset(f.name.lower() for f in schema.fields if not f.nullable)
-        if nn:
-            self._ctas_non_null[name.lower()] = nn
-        else:
-            self._ctas_non_null.pop(name.lower(), None)
+            return frozenset()
+        return frozenset(f.name.lower() for f in schema.fields if not f.nullable)
 
     def _is_nullable(self, tname: str, field) -> bool:
         """Spark's managed parquet reads back all-nullable — overlay the
-        session records: CTAS-captured non-null fields and DECLARED NOT
-        NULL columns (both lost by the storage round-trip)."""
-        key = field.name.lower()
-        return (
-            field.nullable
-            and key not in self._ctas_non_null.get(tname.lower(), ())
-            and key not in self._not_null.get(tname.lower(), ())
-        )
+        table's record: its CTAS non-null and declared NOT NULL columns
+        (both lost by the storage round-trip)."""
+        rec = self._record(tname)
+        return field.nullable and field.name.lower() not in rec.not_null | rec.ctas_non_null
 
-    def _move_table_state(self, name: str, to: str | None = None) -> None:
-        """Forget the per-table records of ``name`` — column DEFAULTs, the
-        declared NOT NULL and CTAS non-null sets, the listing record — or,
-        with ``to``, move them to that name: a dropped table's records must
-        not reach a later table of the same name."""
-        for records, old, new in (
-            (self._col_defaults, name.lower(), to and to.lower()),
-            (self._not_null, name.lower(), to and to.lower()),
-            (self._ctas_non_null, name.lower(), to and to.lower()),
-            (self._listings, name, to),
-        ):
-            rec = records.pop(old, None)
-            if new and rec is not None:
-                records[new] = rec
+    def _name_taken(self, name: str, if_not_exists) -> bool:
+        """Whether a CREATE of ``name`` is a no-op: a name any table or
+        view holds is one with IF NOT EXISTS and the reference's error
+        without (SessionContext create_memory_table /
+        create_external_table)."""
+        if not self.table_exist(name):
+            return False
+        if if_not_exists:
+            return True
+        raise ValueError(f"Execution error: Table '{name}' already exists")
 
-    def _record_not_null(self, name: str, coldefs: str) -> None:
-        """Remember which columns of a CREATE TABLE (coldefs) declared
-        NOT NULL (managed storage loses nullability; see _not_null)."""
-        nn = set()
+    def _declare(
+        self, name: str, not_null=frozenset(), defaults=None, ctas_non_null=frozenset()
+    ) -> None:
+        """Set a just-created table's constraints on its record; a prior
+        same-named table's constraints must not reach it."""
+        rec = self._records.setdefault(_key(name), _Table())
+        rec.not_null, rec.defaults, rec.ctas_non_null = not_null, defaults or {}, ctas_non_null
+
+    def _constraints(self, coldefs: str) -> tuple[frozenset, dict[str, str]]:
+        """A CREATE TABLE column list's NOT NULL columns and per-column
+        DEFAULT expressions (statement.rs column defaults). The reference
+        evaluates a DEFAULT at INSERT time for columns a column-list INSERT
+        omits, and REJECTS one that references columns at plan time — so
+        call this before the table is created."""
+        nn, out = set(), {}
         for d in _split_top_level(coldefs):
             toks = d.strip().split()
             if toks and re.search(r"\bNOT\s+NULL\b", d, re.IGNORECASE):
                 nn.add(toks[0].strip('"`').lower())
-        if nn:
-            self._not_null[name.lower()] = frozenset(nn)
-        else:
-            self._not_null.pop(name.lower(), None)
-
-    def _record_defaults(self, name: str, coldefs: str) -> None:
-        """Remember per-column DEFAULT expressions (statement.rs column
-        defaults). The reference evaluates them at INSERT time for columns
-        a column-list INSERT omits, and REJECTS defaults that reference
-        columns at plan time."""
-        out: dict[str, str] = {}
-        for d in _split_top_level(coldefs):
-            toks = d.strip().split()
             md = re.search(r"\bDEFAULT\s+(.+)$", d, re.IGNORECASE | re.DOTALL)
             if not toks or not md:
                 continue
@@ -1454,10 +1460,7 @@ class SessionContext:
                     f"expression: {exc}"
                 ) from None
             out[toks[0].strip('"`').lower()] = expr
-        if out:
-            self._col_defaults[name.lower()] = out
-        else:
-            self._col_defaults.pop(name.lower(), None)
+        return frozenset(nn), out
 
     def _insert_columns(self, target: str, lx: Lexed, args):
         """The reference's INSERT column mapping (insert.slt), shared by
@@ -1490,7 +1493,7 @@ class SessionContext:
         return src, body, cols
 
     def _insert_checks(
-        self, target: str, src: DataFrame, cols, not_null, lossy_casts: bool = False
+        self, target: str, src: DataFrame, cols, lossy_casts: bool = False
     ) -> list:
         """The pre-write checks of an INSERT, as aggregate columns over the
         source (empty when none can fail). NULLs must not reach a declared
@@ -1499,7 +1502,8 @@ class SessionContext:
         (file sinks) a cast that turns a value NULL is counted too: the
         reference REJECTS lossy casts (Arrow cast error) where Spark's
         non-ANSI cast nulls them."""
-        dflts = self._col_defaults.get(target.lower(), {})
+        rec = self._record(target)
+        dflts, not_null = rec.defaults, rec.not_null
         checks = []
         for f, i in cols:
             key = f.name.lower()
@@ -1546,7 +1550,7 @@ class SessionContext:
     def _insert_select(self, target: str, src: DataFrame, cols) -> DataFrame:
         """The source cast positionally to the target schema; a column the
         column list omits takes its recorded DEFAULT, else NULL."""
-        dflts = self._col_defaults.get(target.lower(), {})
+        dflts = self._record(target).defaults
         sel = []
         for f, i in cols:
             if i is not None:
@@ -1572,8 +1576,9 @@ class SessionContext:
         """``CREATE TABLE name (a type, ...) AS query`` — positional cast +
         rename of the query output (sql/src/statement.rs CreateTable with
         both a schema and a source query)."""
-        if if_not_exists and self.table_exist(name):
+        if self._name_taken(name, if_not_exists):
             return self._empty_result()
+        declared = self._constraints(coldefs)
         ddl = _column_defs_to_ddl(
             coldefs,
             self.settings.get_bool("datafusion.sql_parser.enable_ident_normalization"),
@@ -1595,11 +1600,8 @@ class SessionContext:
             else:
                 col = col.cast(ctype.strip())
             cols.append(col.alias(cname))
-        src.select(*cols).write.mode(
-            "ignore" if if_not_exists else "errorifexists"
-        ).saveAsTable(name)
-        self._record_not_null(name, coldefs)
-        self._record_defaults(name, coldefs)
+        src.select(*cols).write.saveAsTable(name)
+        self._declare(name, *declared)
         return self._empty_result()
 
     # -- SET / SHOW statement layer (config.rs ConfigOptions; SET/SHOW
@@ -1732,8 +1734,8 @@ class SessionContext:
         for tname in names:
             # a file-backed table's fixed schema; a parquet footer's keeps the
             # file's nullability (map.slt:24 — `value Int64 nullable: false`)
-            rec = self._listings.get(tname)
-            schema = rec["schema"] if rec and rec["schema"] else self.spark.table(tname).schema
+            lst = self._record(tname).listing
+            schema = lst["schema"] if lst and lst["schema"] else self.spark.table(tname).schema
             for i, f in enumerate(schema):
                 arrow = _arrow_type_display(f.dataType)
                 char_octet = prec = radix = scale = None
@@ -2141,7 +2143,7 @@ class SessionContext:
         csv_opts["escape"] = opts.get("format.escape", '"')
         if "format.comment" in opts:
             csv_opts["comment"] = opts["format.comment"]
-        if if_not_exists and self.table_exist(name):
+        if self._name_taken(name, if_not_exists):
             return self._empty_result()
         # object-store LOCATIONs: register credentials/scheme with Spark's
         # Hadoop conf (datafusion-cli object_storage.rs parity)
@@ -2180,10 +2182,9 @@ class SessionContext:
                     "CREATE EXTERNAL TABLE over an empty location "
                     f"requires a column list: {path!r}"
                 )
-        self._record_not_null(name, cols or "")
-        # per-column DEFAULTs apply to external sinks too
+        # NOT NULL and per-column DEFAULTs apply to external sinks too
         # (insert_to_external.slt column-defaults section)
-        self._record_defaults(name, cols or "")
+        declared = self._constraints(cols or "")
         # the reference moves partition columns to the END of the logical
         # schema (insert_to_external.slt:159 'partitioned cols are moved to
         # the end'); the listing reader does that
@@ -2191,6 +2192,7 @@ class SessionContext:
             name, fmt, path, schema, parts,
             options=csv_opts if fmt == "csv" else None, **sink,
         )
+        self._declare(name, *declared)
         return self._empty_result()
 
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
@@ -3125,8 +3127,8 @@ class SessionContext:
         golden — a wall-clock path could not produce that), and instants
         are zone-independent. Unresolvable shapes keep Spark's UTC trunc
         (§1.2 residual)."""
-        if not self._column_tz or not re.search(
-            r"\bdate_trunc\s*\(", q, re.IGNORECASE
+        if not re.search(r"\bdate_trunc\s*\(", q, re.IGNORECASE) or not any(
+            rec.column_tz for rec in self._records.values()
         ):
             return q
         got = rmap(q)
@@ -3147,7 +3149,7 @@ class SessionContext:
                 return None
             col = mcol.group(2).lower()
             tzs = {
-                self._column_tz.get(t.lower(), {}).get(col) for t in tables
+                self._record(t).column_tz.get(col) for t in tables
             } - {None}
             if len(tzs) != 1:
                 return None
@@ -3450,12 +3452,15 @@ class SessionContext:
         """listTables() minus the internal ``__info_schema_*`` helper views
         (they exist only to serve information_schema SQL and must not appear
         in listings — the reference serves these from a dedicated provider,
-        not session tables)."""
-        return [
+        not session tables) and minus a managed table a temp view of the
+        same name shadows (the name resolves to the view)."""
+        tables = [
             t
             for t in self.spark.catalog.listTables()
             if not t.name.startswith("__info_schema_")
         ]
+        temp = {t.name for t in tables if t.isTemporary}
+        return [t for t in tables if t.isTemporary or t.name not in temp]
 
     _INFO_SCHEMA_VIEWS = ("columns", "df_settings", "schemata", "tables", "views")
 
@@ -3474,7 +3479,7 @@ class SessionContext:
         for t in self._catalog_tables():
             kind = (
                 "VIEW"
-                if t.tableType == "VIEW" or t.name in self._view_defs
+                if t.tableType == "VIEW" or self._record(t.name).view_sql is not None
                 else "BASE TABLE"
             )
             rows.append((cat, sch, t.name, kind))
@@ -3495,16 +3500,17 @@ class SessionContext:
         records it; DataFrame-registered views have NULL definition, same
         as the reference's non-SQL views)."""
         # Only genuine view objects: names registered through the VIEW path
-        # (_view_defs) or catalog VIEW entries — register_table'd fixtures
-        # are temp views underneath but are TABLES to the user, and the
-        # reference's ViewsTable (information_schema.rs) lists only views.
+        # (a record with view_sql) or catalog VIEW entries —
+        # register_table'd fixtures are temp views underneath but are
+        # TABLES to the user, and the reference's ViewsTable
+        # (information_schema.rs) lists only views.
         cat = self.settings.get("datafusion.catalog.default_catalog")
         sch = self.settings.get("datafusion.catalog.default_schema")
-        rows = [
-            (cat, sch, t.name, self._view_defs.get(t.name))
-            for t in self._catalog_tables()
-            if t.tableType == "VIEW" or t.name in self._view_defs
-        ]
+        rows = []
+        for t in self._catalog_tables():
+            sql = self._record(t.name).view_sql
+            if t.tableType == "VIEW" or sql is not None:
+                rows.append((cat, sch, t.name, sql))
         return self._result(
             rows, "table_catalog string, table_schema string, table_name string, "
             "definition string",

@@ -314,8 +314,7 @@ def agg_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arrow_datafusion_spark.context import SessionContext
 
     ctx = SessionContext(spark)
-    if "lineitem" not in ctx._tables:
-        ctx.register_parquet("lineitem", f"{sf_dir}/lineitem.parquet")
+    ctx.register_parquet("lineitem", f"{sf_dir}/lineitem.parquet")
     return ctx.sql(
         """
         SELECT l_returnflag,

@@ -49,7 +49,10 @@ def _dsum(col: Column | str, alias: str, scale: int = 2) -> Column:
     return F.round(F.sum(_c(col).cast(_DEC)), scale).cast("double").alias(alias)
 
 
-def _esum(col: Column | str, alias: str) -> Column:
+_REV_SQL = "l_extendedprice * (1 - l_discount)"
+
+
+def _esum_sql(sql: str, alias: str) -> Column:
     """Order-independent money sum for summands PROVABLY on the 1e-4 grid
     (price×(1−disc): 2dp×2dp; price×disc; a bare 2dp column): accumulate as
     an e4-scaled bigint instead of Decimal128 — the decimal accumulator is
@@ -59,24 +62,9 @@ def _esum(col: Column | str, alias: str) -> Column:
     exactly-representable integer space (s/100.0 is an exact X.5 double at
     any |X| < 2^52, so HALF_UP agrees with the oracle's decimal rounding).
     Exact while a group's sum < 2^63/1e4 ≈ 9e14 money units — past SF1000
-    for every TPC-H group here; beyond that use _dsum."""
-    s = F.sum(F.round(_c(col) * 10000).cast("long"))
-    return (F.round(s / 100.0) / 100.0).alias(alias)
-
-
-def _rev():
-    """l_extendedprice * (1 - l_discount) — built lazily (needs a live session)."""
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-_REV_SQL = "l_extendedprice * (1 - l_discount)"
-
-
-def _esum_sql(sql: str, alias: str) -> Column:
-    """_esum as ONE parsed string: a Column tree of this shape costs ~10
-    py4j socket crossings per build (~0.65 ms each); F.expr costs one.
-    Plan-identical to _esum (normalized executedPlan equality asserted
-    against the r13 builders, plans/r14 captures)."""
+    for every TPC-H group here; beyond that use _dsum. ONE parsed string:
+    the same Column tree built from F calls costs ~10 py4j socket
+    crossings per build (~0.65 ms each); F.expr costs one."""
     return F.expr(
         f"round(sum(CAST(round(({sql}) * 10000, 0) AS BIGINT)) / 100.0D, 0)"
         f" / 100.0D AS {alias}"
@@ -511,7 +499,7 @@ def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _sorted_small(
         shipping.groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(_esum("volume", "revenue")),
+        .agg(_esum_sql("volume", "revenue")),
         "supp_nation",
         "cust_nation",
         "l_year",
@@ -885,7 +873,7 @@ WHERE l_partkey = p_partkey
 # q15 — top supplier (view + scalar MAX subquery).
 def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, supplier = _t(spark, sf_dir, "lineitem", "supplier")
-    # Revenue accumulates as the exact e4-scaled long (the _esum grid
+    # Revenue accumulates as the exact e4-scaled long (the _esum_sql grid
     # argument — price×(1−disc) sits on the 1e-4 grid, exact past SF1000):
     # r8 idle-box SF1 A/B measured the long accumulator consistently under
     # the Decimal128 form (0.38-0.45s vs 0.43-0.52s wall). Max-tie equality

@@ -9,16 +9,22 @@ schema-inference job, and a parenthesized INSERT source is a query, not a
 column list. A local parquet table takes its schema from a footer read on
 the driver: registering one runs no Spark job, the schema equals Spark's
 own inference on every parquet file the tests read or write, and its
-nullability reaches DESCRIBE and ``information_schema.columns`` alike."""
+nullability reaches DESCRIBE and ``information_schema.columns`` alike.
+
+Every table's state sits in one record keyed by the lower-cased name, as
+Spark's catalog names it: a mixed-case name reads, inserts, drops and
+re-lists one table, and no record outlives its table."""
 
 from __future__ import annotations
 
 import ast
 import glob
+import itertools
 import os
 
 import pytest
 
+from tests.conftest import FULL_TESTS, SF_DIR
 from tests.test_sink import SRC as NATION_SRC
 from tests.test_sink import _run, in_job_group
 
@@ -129,20 +135,25 @@ def test_parenthesized_insert_source(ctx, tmp_path, external):
 
 def test_package_reads_files_only_through_sources():
     """No ``spark.read.<format>`` outside ``sources/``: every parquet read
-    goes through ``read_listing`` and its footer schema."""
+    goes through ``read_listing`` and its footer schema. No ``_records``
+    outside ``context.py``: the table records are the context's own."""
     import arrow_datafusion_spark
 
     pkg = os.path.dirname(arrow_datafusion_spark.__file__)
     found = []
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        if os.path.relpath(path, pkg).startswith("sources" + os.sep):
-            continue
+        rel = os.path.relpath(path, pkg)
         found += [
-            f"{os.path.relpath(path, pkg)}: {ast.unparse(node)}"
+            f"{rel}: {ast.unparse(node)}"
             for node in ast.walk(ast.parse(open(path).read()))
             if isinstance(node, ast.Attribute)
-            and isinstance(node.value, ast.Attribute)
-            and node.value.attr == "read"
+            and (
+                isinstance(node.value, ast.Attribute)
+                and node.value.attr == "read"
+                and not rel.startswith("sources" + os.sep)
+                or node.attr == "_records"
+                and rel != "context.py"
+            )
         ]
     assert found == []
 
@@ -273,3 +284,246 @@ def test_footer_schema_matches_spark_inference(spark, ctx, sf_dir, tmp_path):
             assert named_types(footer) == named_types(spark_schema), path
         assert read_listing(spark, "parquet", path).schema == spark_schema, path
     assert sorted(inferred) == ["ns.parquet", "parts", "u32.parquet"]
+
+
+def _rows(ctx, text: str) -> list[tuple]:
+    return [tuple(r) for r in ctx.sql(text).collect()]
+
+
+def _listed_columns(ctx, table: str) -> list[tuple]:
+    return _rows(
+        ctx,
+        "SELECT column_name, data_type, is_nullable FROM information_schema.columns "
+        f"WHERE table_name = '{table}' ORDER BY ordinal_position",
+    )
+
+
+def _copy(ctx, value: int, loc: str) -> None:
+    ctx.sql(f"COPY (SELECT {value} AS a) TO '{loc}/' STORED AS PARQUET").collect()
+
+
+def _dropped_table_stays_dropped(ctx, loc):
+    _copy(ctx, 1, loc)
+    ctx.register_parquet("Nat", f"{loc}/")
+    ctx.sql("DROP TABLE nat")
+    _copy(ctx, 2, loc)
+    assert not ctx.table_exist("Nat")
+
+
+def _columns_under_any_spelling(ctx, loc):
+    _copy(ctx, 1, loc)
+    ctx.register_parquet("Nat", f"{loc}/")
+    want = [("a", "Int32", "NO")]
+    assert _listed_columns(ctx, "nat") == want
+    for spelling in ("Nat", "nat", "NAT"):
+        assert _rows(ctx, f"DESCRIBE {spelling}") == want
+        assert [r[3:] for r in _rows(ctx, f"SHOW COLUMNS FROM {spelling}")] == want
+
+
+def _a_view_is_a_view(ctx, loc):
+    ctx.register_view("MyView", "SELECT 1 AS v")
+    assert [t for t in ctx.tables() if t.lower() == "myview"] == ["myview"]
+    kinds = _rows(ctx, "SELECT table_name, table_type FROM information_schema.tables")
+    assert ("myview", "VIEW") in kinds
+    assert _rows(ctx, "SELECT table_name FROM information_schema.views") == [("myview",)]
+    with pytest.raises(Exception, match="doesn't exist"):
+        ctx.sql("DROP TABLE myview")
+    ctx.sql("DROP VIEW myview")
+    assert not ctx.table_exist("MyView")
+
+
+def _insert_into_external(ctx, loc):
+    ctx.sql(f"CREATE EXTERNAL TABLE Ext (a INT) STORED AS PARQUET LOCATION '{loc}/'")
+    assert _rows(ctx, "INSERT INTO ext VALUES (1)") == [(1,)]
+    assert _rows(ctx, "SELECT a FROM Ext") == [(1,)]
+
+
+def _insert_into_unbounded(ctx, loc):
+    ctx.sql(f"CREATE UNBOUNDED EXTERNAL TABLE U (a INT) STORED AS CSV LOCATION '{loc}/u.csv'")
+    assert _rows(ctx, "INSERT INTO u VALUES (1)") == [(1,)]
+    assert _rows(ctx, "SELECT a FROM U") == [(1,)]
+
+
+def _drop_forgets_an_external_table(ctx, loc):
+    ctx.sql(f"CREATE EXTERNAL TABLE Ext (a INT) STORED AS PARQUET LOCATION '{loc}/'")
+    ctx.sql("DROP TABLE ext")
+    assert "ext" not in [t.lower() for t in ctx.tables()]
+    _copy(ctx, 1, loc)
+    assert not ctx.table_exist("Ext")
+
+
+def _reload_after_deregister(ctx, loc):
+    from arrow_datafusion_spark.session import load_tables
+
+    # a location no earlier load_tables call has memoized
+    os.symlink(f"{SF_DIR}/region.parquet", f"{loc}/region.parquet")
+    load_tables(ctx.spark, loc, names=("region",))
+    ctx.deregister_table("REGION")
+    load_tables(ctx.spark, loc, names=("region",))
+    assert _rows(ctx, "SELECT count(*) FROM region") == [(5,)]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _dropped_table_stays_dropped,
+        _columns_under_any_spelling,
+        _a_view_is_a_view,
+        _insert_into_external,
+        _insert_into_unbounded,
+        _drop_forgets_an_external_table,
+        _reload_after_deregister,
+    ],
+    ids=lambda case: case.__name__.strip("_"),
+)
+def test_a_mixed_case_name_is_one_table(spark, tmp_path, case):
+    from arrow_datafusion_spark.context import SessionContext
+
+    case(SessionContext(spark.newSession()), str(tmp_path))
+
+
+# every case spelling of two table names
+NAMES = ("sm_a", "SM_A", "Sm_A", "sm_b", "SM_B", "sM_b")
+BASES = ("sm_a", "sm_b")
+
+
+def _ex(full_count: int) -> int:
+    return full_count if FULL_TESTS else max(full_count // 6, 10)
+
+
+def _drop_all(spark) -> None:
+    for base in BASES:
+        for name in (base, f"{base}__cor_new"):
+            spark.catalog.dropTempView(name)
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_table_records_follow_the_catalog(spark, tmp_path):
+    """Random DDL, DML and registrations over mixed-case names: no record
+    outlives its table, DESCRIBE equals ``information_schema.columns``
+    under every spelling, and ``tables()`` lists each table once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from hypothesis import HealthCheck, settings
+    from hypothesis import strategies as st
+    from hypothesis.stateful import (
+        RuleBasedStateMachine,
+        invariant,
+        rule,
+        run_state_machine_as_test,
+    )
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    from arrow_datafusion_spark.context import SessionContext
+
+    session = spark.newSession()
+    _drop_all(session)
+    runs = itertools.count()
+    name = st.sampled_from(NAMES)
+
+    class Tables(RuleBasedStateMachine):
+        def __init__(self):
+            super().__init__()
+            self.ctx = SessionContext(session)
+            self.checks = 0
+            d = tmp_path / f"run{next(runs)}"
+            self.loc = {"parquet": f"{d}/p", "csv": f"{d}/c"}
+            os.makedirs(self.loc["parquet"])
+            os.makedirs(self.loc["csv"])
+            pq.write_table(
+                pa.table({"a": pa.array([1], pa.int32())}), f"{self.loc['parquet']}/0.parquet"
+            )
+            with open(f"{self.loc['csv']}/0.csv", "w") as f:
+                f.write("1\n")
+
+        def teardown(self):
+            _drop_all(session)
+
+        def _try(self, fn) -> None:
+            """A statement may be refused (a name taken, a table missing);
+            the invariants hold either way."""
+            try:
+                fn()
+            except (ValueError, PySparkException, Py4JError):
+                pass
+
+        def _sql(self, text: str) -> None:
+            self._try(lambda: self.ctx.sql(text).collect())
+
+        @rule(name=name, fmt=st.sampled_from(("parquet", "csv")))
+        def register(self, name, fmt):
+            if fmt == "parquet":
+                self._try(lambda: self.ctx.register_parquet(name, self.loc[fmt]))
+            else:
+                self._try(lambda: self.ctx.register_csv(name, self.loc[fmt], "a INT"))
+
+        @rule(name=name)
+        def register_view(self, name):
+            self._try(lambda: self.ctx.register_view(name, "SELECT 1 AS a, 'x' AS b"))
+
+        @rule(name=name)
+        def create_with_columns(self, name):
+            self._sql(f"CREATE TABLE {name} (a INT NOT NULL, b INT DEFAULT 7)")
+
+        @rule(name=name)
+        def create_as_select(self, name):
+            self._sql(f"CREATE TABLE {name} AS SELECT 1 AS a")
+
+        @rule(name=name)
+        def create_external(self, name):
+            self._sql(
+                f"CREATE EXTERNAL TABLE {name} (a INT) STORED AS PARQUET "
+                f"LOCATION '{self.loc['parquet']}/'"
+            )
+
+        @rule(name=name, columns=st.booleans())
+        def create_or_replace(self, name, columns):
+            body = "(a INT NOT NULL)" if columns else "AS SELECT 2 AS a"
+            self._sql(f"CREATE OR REPLACE TABLE {name} {body}")
+
+        @rule(name=name)
+        def drop_table(self, name):
+            self._sql(f"DROP TABLE {name}")
+
+        @rule(name=name)
+        def drop_view(self, name):
+            self._sql(f"DROP VIEW {name}")
+
+        @rule(fmt=st.sampled_from(("parquet", "csv")))
+        def copy(self, fmt):
+            self._sql(f"COPY (SELECT 2 AS a) TO '{self.loc[fmt]}/' STORED AS {fmt}")
+
+        @rule(name=name)
+        def insert(self, name):
+            self._sql(f"INSERT INTO {name} (a) VALUES (3)")
+
+        @invariant()
+        def records_follow_the_catalog(self):
+            live = {t.name for t in session.catalog.listTables()}
+            assert set(self.ctx._records) <= live, "a record outlived its table"
+            tables = self.ctx.tables()
+            assert len(tables) == len({t.lower() for t in tables}), tables
+            # DESCRIBE = information_schema.columns, one spelling per check
+            # in turn, which keeps the default tier well under a minute
+            self.checks += 1
+            for table in set(tables) & set(BASES):
+                spellings = [n for n in NAMES if n.lower() == table]
+                spelling = spellings[self.checks % len(spellings)]
+                assert _rows(self.ctx, f"DESCRIBE {spelling}") == _listed_columns(
+                    self.ctx, table
+                ), spelling
+
+    try:
+        run_state_machine_as_test(
+            Tables,
+            settings=settings(
+                max_examples=_ex(60),
+                stateful_step_count=6,
+                deadline=None,
+                derandomize=True,
+                suppress_health_check=[HealthCheck.too_slow],
+            ),
+        )
+    finally:
+        _drop_all(session)

@@ -530,7 +530,7 @@ def test_reference_sqllogictest_file(spark, fname):
         # every later file's information_schema listings
         for fixture in ("alltypes_plain_multi_files", "table_with_metadata",
                         "table_with_map"):
-            if fixture in ctx._tables:
+            if ctx.table_exist(fixture):
                 ctx.deregister_table(fixture)
     unexplained = [
         f
