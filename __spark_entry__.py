@@ -197,11 +197,11 @@ def _registries() -> tuple[dict, dict]:
         "substrait_exists_scalar", "substrait_setops",
         "substrait_producer_roundtrip", "substrait_tpch_q1",
         "substrait_named_join",
-        #     t-digest SQL surface byte-guarded (approx.exact_max_bytes —
+        #     t-digest SQL surface byte-guarded (typed.EXACT_MAX_BYTES —
         #     VERDICT r10 #1) + windowed fallbacks now input-typed and
         #     with_weight weights cast integral; the approx family and
         #     every ctx.sql-rewrite-routed entry share the layer
-        #     (_from_schema_map CTE column-list fix, f32 nested-call
+        #     (relation-scope CTE column-list fix, f32 nested-call
         #     rescan, ::timestamp::bigint ns-reinterpret, arrow_cast
         #     int→Timestamp unit reinterpret)
         "agg_tdigest", "agg_approx", "sql_basic", "fn_math", "fn_datetime",

@@ -32,6 +32,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -53,15 +54,14 @@ from arrow_datafusion_spark.sources.sink import (
     local_path,
     write_sink,
 )
-from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex, quote
+from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex
 from arrow_datafusion_spark.sql.rewrite import (
     _TYPE_MAP,
-    _lower_approx_percentile,
     _match_paren,
     _rewrite_sql,
     _split_top_level,
-    rewrite_calls,
 )
+from arrow_datafusion_spark.sql.typed import TYPED_PASSES, Relations
 
 # SQL-macro definitions (Spark 4 SQL UDFs) registered once per session so
 # DataFusion's function names resolve inside ctx.sql() even where Spark's
@@ -424,7 +424,7 @@ class _Table:
     view_sql: str | None = None
     # column → named time zone declared via arrow_cast in the view body
     # (per-column Timestamp(_, Some("tz")) — §2.2 named-tz columns;
-    # consumed by _rewrite_tz_date_trunc)
+    # consumed by typed.tz_date_trunc)
     column_tz: dict[str, str] = field(default_factory=dict)
     # declared NOT NULL columns: Spark managed storage drops nullability,
     # but the reference REJECTS inserts that would null one
@@ -763,7 +763,7 @@ class SessionContext:
         # keep session.load_tables' registered-view memo honest
         from arrow_datafusion_spark import session as _session
 
-        _session._VIEW_CACHE.pop((self.spark.sparkContext.applicationId, _key(name)), None)
+        _session._VIEW_CACHE.pop((_session.session_key(self.spark), _key(name)), None)
 
     # -- catalog ------------------------------------------------------------
 
@@ -778,6 +778,14 @@ class SessionContext:
             {t.name for t in self._catalog_tables()}
             | {k for k, rec in self._records.items() if rec.df is not None}
         )
+
+    def _table_type(self, name: str) -> str | None:
+        """The tableType of the catalog object ``name`` resolves to (a temp
+        view shadows a managed table), or None: one lookup by name."""
+        try:
+            return self.spark.catalog.getTable(_key(name)).tableType
+        except AnalysisException:
+            return None
 
     def table_exist(self, name: str) -> bool:
         """One of tables(), asked of Spark's catalog by name: a listing
@@ -1090,10 +1098,7 @@ class SessionContext:
             if if_exists:
                 return self._empty_result()
             raise ValueError(f"no view named {name!r}")
-        if self._record(name).view_sql is None and not any(
-            t.name == _key(name) and t.tableType == "VIEW"
-            for t in self.spark.catalog.listTables()
-        ):
+        if self._record(name).view_sql is None and self._table_type(name) != "VIEW":
             # drop_view_cant_drop_table (ddl.slt): the name resolves to
             # a TABLE — DROP VIEW must not remove it
             raise ValueError(f"View {name!r} doesn't exist.")
@@ -1116,10 +1121,7 @@ class SessionContext:
         # managed-table DROP falls through to Spark; either way the
         # table's record must not survive
         self._records.pop(_key(name), None)
-        if any(
-            t.name == _key(name) and t.tableType == "TEMPORARY"
-            for t in self.spark.catalog.listTables()
-        ):
+        if self._table_type(name) == "TEMPORARY":
             # DataFusion's DROP TABLE drops session-registered tables too;
             # ours are temp views, which Spark's DROP TABLE won't touch.
             # Real managed tables (CTAS) fall through to Spark.
@@ -1185,10 +1187,7 @@ class SessionContext:
                 # the replacement's record was made under the temp name —
                 # it follows the rename, then the temp name is forgotten
                 rec = self._records.pop(_key(tmp), None) or _Table()
-                if any(
-                    t.name == _key(tmp) and t.tableType != "TEMPORARY"
-                    for t in self._catalog_tables()
-                ):
+                if self._table_type(tmp) not in (None, "TEMPORARY"):
                     self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
                     self._records[_key(name)] = rec
                 else:
@@ -2198,1053 +2197,48 @@ class SessionContext:
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
         """Rewritten query → spark.sql, carrying bound parameters if any.
 
-        The schema-resolving passes and then _rewrite_sql all read the
-        lexed statement's shielded text, so none of them can match
-        function-call or operator text INSIDE a quoted string ('select
-        median(x)' stays text). A pass that emits a literal registers it
-        on a private copy of the literal table."""
+        The type-aware passes (sql/typed.py TYPED_PASSES) and then
+        _rewrite_sql all read the lexed statement's shielded text, so none
+        of them can match function-call or operator text INSIDE a quoted
+        string ('select median(x)' stays text). A pass that emits a
+        literal registers it on a private copy of the literal table."""
         pfad = self.settings.get_bool(
             "datafusion.sql_parser.parse_float_as_decimal"
         )
-        # the median/approx lowerings read raw Spark confs (settable
-        # out-of-band, e.g. by tests) — their values must join the key
-        conf = self.spark.conf
-        budgets = tuple(
-            conf.get(f"spark.spark_graft.{k}.exact_max_bytes", None)
-            for k in ("median", "approx")
-        )
         memo_key = (
-            lx.text, tuple(lx.lits), pfad, self._rw_version,
-            self.settings.version, budgets,
+            lx.text, tuple(lx.lits), pfad, self._rw_version, self.settings.version
         )
-        cached = self._rw_cache.get(memo_key)
-        if cached is not None:
-            rewritten, rmap_fp = cached
-            # Schema-DEPENDENT rewrites (a type-aware pass consulted the
-            # live catalog) are revalidated on every hit: table schemas
-            # can change through paths _rw_version cannot see (e.g.
-            # createOrReplaceTempView directly on the SparkSession), so
-            # the resolved schema map is re-fetched (~ms of py4j — far
-            # cheaper than the full regex/rewrite pipeline it replaces)
-            # and compared to the one the cached string was derived from
-            # (ADVICE r13; both sides computed from the SAME pre-rewrite
-            # shielded text). Mismatch falls through to a fresh rewrite.
-            if rmap_fp is None or (
-                "__rmap__",
-                self._from_schema_map(lx.text),
-            ) == rmap_fp:
-                if args:
-                    return self.spark.sql(rewritten, args=args)
-                return self.spark.sql(rewritten)
-
-        # the type-aware rewrites share one lazily-computed schema map
-        # (their FROM/JOIN clauses are never edited by any pass, so the
-        # map stays valid across passes); each pass still gates on its own
-        # trigger regex first, so statements with no rewrite surface pay
-        # ZERO schema fetches
-        _rmap_memo: list = []
-
-        def _rmap(q: str):
-            if not _rmap_memo:
-                _rmap_memo.append(self._from_schema_map(q))
-            return _rmap_memo[0]
-
-        work = lx.copy()
-        query = self._rewrite_tz_date_trunc(work.text, work, rmap=_rmap)
-        query = self._rewrite_median(query, rmap=_rmap)
-        query = self._rewrite_decimal_avg(query, rmap=_rmap)
-        query = self._rewrite_decimal_division(query, work, rmap=_rmap)
-        query = self._rewrite_deep_array_fns(query, work, rmap=_rmap)
-        query = self._rewrite_ts_bigint_bare(query, rmap=_rmap)
-        query = self._rewrite_int_division(query, rmap=_rmap)
-        query = self._rewrite_f32_math(query, rmap=_rmap)
-        query = self._rewrite_approx_percentile(query, work, rmap=_rmap)
-        rewritten = _rewrite_sql(work.derive(query), pfad=pfad)
-        # Memo entry: (rewritten, schema-map fingerprint). Fingerprint is
-        # None for schema-independent rewrites (no revalidation needed);
-        # otherwise the schema map resolved from the pre-rewrite shielded
-        # text, which every later hit re-fetches and compares (above).
-        # the "__rmap__" wrapper keeps a None schema map (unresolvable
-        # FROM source) distinguishable from "schema-independent"
-        rmap_fp = (
-            ("__rmap__", self._from_schema_map(lx.text))
-            if _rmap_memo
-            else None
-        )
-        if len(self._rw_cache) >= 512:  # bound a long session's memo
-            self._rw_cache.clear()
-        self._rw_cache[memo_key] = (rewritten, rmap_fp)
+        # one relation scope per statement, resolved from the pre-rewrite
+        # text at most once (the passes never edit a FROM/JOIN clause)
+        rel = Relations(self.spark, lx.text)
+        hit = self._rw_cache.get(memo_key)
+        # A rewrite that read column types is replayed only while the
+        # relations still resolve to the schema it read: table schemas can
+        # change through paths _rw_version cannot see (e.g.
+        # createOrReplaceTempView directly on the SparkSession). The
+        # fingerprint is None for a schema-independent rewrite.
+        if hit is not None and (hit[1] is None or hit[1] == (rel.schema,)):
+            rewritten = hit[0]
+        else:
+            work = lx.copy()
+            query = work.text
+            for _name, trigger, rewrite in TYPED_PASSES:
+                if trigger.search(query):
+                    query = rewrite(self, query, work, rel)
+            rewritten = _rewrite_sql(work.derive(query), pfad=pfad)
+            if len(self._rw_cache) >= 512:  # bound a long session's memo
+                self._rw_cache.clear()
+            self._rw_cache[memo_key] = (
+                rewritten, (rel.schema,) if rel.resolved else None
+            )
         if args:
             return self.spark.sql(rewritten, args=args)
         return self.spark.sql(rewritten)
 
-    # relation-alias stopwords: a word here after `FROM t` is a clause
-    # keyword, not an alias
-    _ALIAS_STOP = frozenset(
-        """where group order limit offset having union except intersect
-        on using join inner left right full cross natural semi anti
-        outer window qualify lateral values select when then else end
-        set tablesample distribute sort cluster for fetch minus""".split()
-    )
-
-    def _parse_inline_values(
-        self, shield: str, pos: int
-    ) -> tuple[int, str, list[tuple[str, object]]] | None:
-        """Type an inline ``(VALUES (...), ...) AS t(c1, c2)`` derived
-        table from its literal cells so the type-aware lowerings
-        (integer division, median input-typing, decimal division) fire
-        over inline-VALUES FROMs the same way they do over catalog
-        tables (r12 verdict What's-wrong #2 sweep — the reference types
-        bare integer literals Int64, so ``SELECT x/2 FROM (VALUES (7))
-        t(x)`` truncates). Returns ``(next_pos, alias, [(col, DataType),
-        ...])`` or None when the shape is not a literal-only VALUES
-        derived table with a column-alias list. Cells that are not plain
-        literals (expressions, all-NULL columns, mixed incompatible
-        types) leave their column UNTYPED — callers then skip that
-        column's rewrite, the conservative residual."""
-        m = re.match(r"\s*\(\s*VALUES\b", shield[pos:], re.IGNORECASE)
-        if m is None:
-            return None
-        open_at = pos + shield[pos:].index("(")
-        i = _match_paren(shield, open_at)
-        if i is None:
-            return None
-        body = shield[open_at + 1 : i]
-        am = re.match(
-            r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*\(\s*([^()]*?)\s*\)",
-            shield[i + 1 :],
-            re.IGNORECASE,
-        )
-        if am is None or am.group(1).lower() in self._ALIAS_STOP:
-            return None
-        alias = am.group(1)
-        cols = [c.strip().lower() for c in am.group(2).split(",") if c.strip()]
-        rows_txt = body[len(body) - len(body.lstrip()) + 6 :]  # past VALUES
-        row_cells: list[list[str]] = []
-        for part in _split_top_level(rows_txt):
-            part = part.strip()
-            if not (part.startswith("(") and part.endswith(")")):
-                return None
-            row_cells.append(_split_top_level(part[1:-1]))
-        if not row_cells or not cols or any(
-            len(r) != len(cols) for r in row_cells
-        ):
-            return None
-        from pyspark.sql.types import (
-            BooleanType,
-            DateType,
-            DoubleType,
-            LongType,
-            StringType,
-            TimestampType,
-        )
-
-        def _cell(tok: str):
-            t = tok.strip()
-            u = t.upper()
-            if u == "NULL":
-                return "null"
-            if re.fullmatch(LIT, t):
-                return StringType()
-            if re.fullmatch(r"[+-]?\d+", t):
-                return LongType()
-            if re.fullmatch(r"[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?", t):
-                return DoubleType()
-            if u in ("TRUE", "FALSE"):
-                return BooleanType()
-            if re.fullmatch(rf"DATE\s+{LIT}", t, re.IGNORECASE):
-                return DateType()
-            if re.fullmatch(rf"TIMESTAMP\s+{LIT}", t, re.IGNORECASE):
-                return TimestampType()
-            return None
-
-        fields: list[tuple[str, object]] = []
-        for ci, cname in enumerate(cols):
-            kinds: set = set()
-            unresolvable = False
-            for r in row_cells:
-                k = _cell(r[ci])
-                if k is None:
-                    unresolvable = True
-                    break
-                if k != "null":
-                    kinds.add(type(k))
-            if unresolvable:
-                continue  # untyped column — conservative skip
-            if len(kinds) == 1:
-                fields.append((cname, next(iter(kinds))()))
-            elif kinds == {LongType, DoubleType}:
-                fields.append((cname, DoubleType()))
-        return i + 1 + am.end(), alias, fields
-
-    def _from_schema_map(
-        self, q: str
-    ) -> tuple[dict[str, object], list[str]] | None:
-        """Alias-aware column→DataType map for the relations in a query's
-        FROM/JOIN clauses (all nesting levels flattened into one scope).
-
-        Keys are lowercased ``alias.col`` / ``table.col`` per relation,
-        plus bare ``col`` when exactly ONE relation carries that column —
-        the reference's own unambiguity rule, so a self-join's shared
-        columns resolve only through their qualifiers. Returns
-        ``(map, tables)`` or None when any FROM/JOIN source is not a
-        resolvable catalog table (subquery, UDTF call, VALUES, column
-        renames via ``alias(c1, ...)``) — callers then skip their
-        type-aware lowering, the documented §1.2 residual. This is the
-        shared resolver behind _rewrite_median / _rewrite_decimal_avg /
-        _rewrite_int_division / _rewrite_deep_array_fns, generalizing
-        them past the r9 single-plain-FROM guard. ``q`` is shielded text."""
-        shield = q
-        # CTE names shadow catalog tables: `WITH t AS (...) ... FROM t`
-        # must NOT resolve through spark.table("t") — a same-named
-        # catalog table would silently mis-type the rewrite target. Any
-        # `name AS (` capture is treated as a defined name (conservative:
-        # also matches UDTF column-alias forms, which are unresolvable
-        # here anyway).
-        cte_names = {
-            m.group(1).lower()
-            for m in re.finditer(r"\b(\w+)\s+AS\s*\(", shield, re.IGNORECASE)
-        } | {
-            # column-list CTE form `WITH t(a, b) AS (...)` — the char
-            # before AS is ')', so the plain capture above misses `t`
-            m.group(1).lower()
-            for m in re.finditer(
-                r"\b(\w+)\s*\([^()]*\)\s+AS\s*\(", shield, re.IGNORECASE
-            )
-        }
-        # (table, alias, inline-fields) — inline-fields non-None for a
-        # `(VALUES ...) AS t(cols)` derived table typed from its literals
-        rels: list[tuple[str | None, str | None, list | None]] = []
-        ident = r"[A-Za-z_][\w.]*"
-        for m in re.finditer(r"\b(FROM|JOIN)\b", shield, re.IGNORECASE):
-            pos = m.end()
-            while True:
-                seg = shield[pos:]
-                vm = self._parse_inline_values(shield, pos)
-                if vm is not None:
-                    npos, v_alias, v_fields = vm
-                    rels.append((None, v_alias, v_fields))
-                    pos = npos
-                    cm = re.match(r"\s*,", shield[pos:])
-                    if not cm:
-                        break
-                    pos += cm.end()
-                    continue
-                rm = re.match(rf"\s+({ident})\s*", seg)
-                if rm is None:
-                    # `FROM (subquery)`, `FROM VALUES`, lateral, ... —
-                    # unresolvable shape
-                    return None
-                rel = rm.group(1)
-                pos += rm.end()
-                if shield[pos : pos + 1] == "(":
-                    # UDTF / table-function call — not a catalog table
-                    return None
-                if rel.lower() in self._ALIAS_STOP:
-                    # `FROM` inside EXTRACT/SUBSTRING/TRIM text reaches
-                    # here with clause keywords — treat as unresolvable
-                    return None
-                alias = None
-                am = re.match(rf"(?:AS\s+)?([A-Za-z_]\w*)\s*", seg[rm.end() :], re.IGNORECASE)
-                if am and am.group(1).lower() not in self._ALIAS_STOP:
-                    alias = am.group(1)
-                    pos += am.end()
-                    if shield[pos : pos + 1] == "(":
-                        return None  # column-rename alias list
-                rels.append((rel, alias, None))
-                cm = re.match(r"\s*,", shield[pos:])
-                if not cm:
-                    break
-                pos += cm.end()
-        if not rels:
-            return None
-        out: dict[str, object] = {}
-        bare: dict[str, list[object]] = {}
-        tables: list[str] = []
-        quals: set[str] = set()
-        for tbl, alias, inline in rels:
-            if inline is not None:
-                qual = (alias or "").lower()
-                if not qual or qual in quals:
-                    return None
-                quals.add(qual)
-                for c, dt in inline:
-                    out[f"{qual}.{c}"] = dt
-                    bare.setdefault(c, []).append(dt)
-                continue
-            if tbl.lower() in cte_names:
-                return None  # defined in this statement, not the catalog
-            try:
-                fields = self.spark.table(tbl).schema
-            except Exception:
-                return None
-            tables.append(tbl)
-            qual = (alias or tbl).lower()
-            if qual in quals:
-                # the same alias in two scopes (outer FROM t f ... IN
-                # (SELECT ... FROM u f)) — last-wins typing could fire a
-                # value-changing rewrite on the WRONG column; bail out
-                return None
-            quals.add(qual)
-            for f in fields:
-                c = f.name.lower()
-                out[f"{qual}.{c}"] = f.dataType
-                bare.setdefault(c, []).append(f.dataType)
-        for c, dts in bare.items():
-            if len(dts) == 1:
-                out[c] = dts[0]
-        return out, tables
-
-    def _source_size_bytes(self, tables: list[str]) -> int:
-        """Sum of the Catalyst plan-statistics sizes of resolvable source
-        tables — the shared byte-gate input for the group-materializing
-        lowerings (_rewrite_median, _rewrite_approx_percentile). Multi-table
-        queries sum their sources (heuristic: equi-join fan-out past that
-        needs statistics Spark doesn't expose pre-execution; the caps
-        already sit well under executor memory). Long.MaxValue is
-        Catalyst's "size unknown" sentinel (in-memory relations): unknown
-        counts 0 — the gates exist for file-backed tables whose real byte
-        size proves a whole-group collect can't fit."""
-        est = 0
-        for tbl in tables:
-            t_est = int(
-                self.spark.table(tbl)
-                ._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-            if t_est < (1 << 63) - 1:
-                est += t_est
-        return est
-
-    def _loose_source_tables(self, q: str) -> list[str]:
-        """Best-effort base-table extraction for the BYTE GUARDS when the
-        typed resolver bails (subquery-shaped FROMs — VERDICT r11 #5):
-        every catalog-resolvable identifier following FROM/JOIN anywhere
-        in the string-shielded text, CTE names excluded (a CTE re-derives
-        from base tables named elsewhere in the same statement). Used for
-        SIZING only, never typing; table-function sources (range(...),
-        UDTFs) stay unsized — the guard fails open there, documented."""
-        shield = q
-        cte = {
-            m.group(1).lower()
-            for m in re.finditer(r"\b(\w+)\s+AS\s*\(", shield, re.IGNORECASE)
-        }
-        names: list[str] = []
-        for m in re.finditer(
-            r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", shield, re.IGNORECASE
-        ):
-            t = m.group(1)
-            tl = t.lower()
-            if tl in cte or tl in self._ALIAS_STOP or tl in (
-                n.lower() for n in names
-            ):
-                continue
-            try:
-                self.spark.table(t)
-            except Exception:
-                continue
-            names.append(t)
-        return names
-
-    def _rewrite_decimal_avg(self, q: str, rmap) -> str:
-        """Decimal AVG with the reference's TRUNCATING division
-        (functions-aggregate/src/average.rs DecimalAverager: the i128 sum
-        is integer-divided by the count, truncating toward zero at result
-        scale s+4; Spark's decimal divide rounds HALF_UP, so the last
-        digit diverges — tpch.slt q1's avg_disc 0.050144 vs 0.050145).
-
-        Result type matches the reference: Decimal128(p+4 capped 38, s+4).
-        Lowered when the argument is a (possibly alias-qualified) column
-        statically resolvable through _from_schema_map with a DecimalType
-        — the same discipline as _rewrite_median / _rewrite_int_division;
-        subqueries-in-FROM and expression arguments keep Spark's avg
-        (documented §1.2 residual). Exactness: sum is an exact decimal; multiplying
-        by 10^(s+4) makes the target quotient's unscaled value integral,
-        `div` truncates toward zero exactly (the reference's i128 `/`),
-        and the final /10^(s+4) + cast are exact power-of-ten rescales.
-        Bound: the truncated unscaled average must fit a BIGINT
-        (avg < 10^(14-s) absolute) — beyond that the form would overflow
-        long before Decimal128 does; such magnitudes keep Spark's avg."""
-        if not re.search(r"\bavg\s*\(", q, re.IGNORECASE):
-            return q
-        resolved = rmap(q)
-        if resolved is None:
-            return q
-        schema, _ = resolved
-        from pyspark.sql.types import DecimalType
-
-        def avg(_fn: str, args: list[str], after: str) -> str | None:
-            # windowed / filtered aggregates keep Spark semantics: the
-            # CAST(... div ...) form cannot take an OVER or FILTER clause
-            # (the truncation emulation exists for the grouped slt form)
-            if re.match(r"\s*(OVER|FILTER)\b", after, re.IGNORECASE):
-                return None
-            arg = ", ".join(args)
-            dt = (
-                schema.get(arg.lower())
-                if re.fullmatch(r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg)
-                else None
-            )
-            if not isinstance(dt, DecimalType) or dt.scale + 4 > 19:
-                return None
-            p, s = dt.precision, dt.scale
-            scale10 = 10 ** (s + 4)
-            # the quotient is cast to DECIMAL(19,0), NOT (38,0): under
-            # Spark's precision-cap rule a 38-digit dividend forces the
-            # division result's scale down to 6 (HALF_UP rounding — the
-            # very thing this rewrite removes); 19 integer digits leave
-            # the capped result scale at 19, so the /10^(s+4) rescale is
-            # exact for every s ≤ 15
-            return (
-                f"CAST(CAST((CAST(SUM({arg}) AS DECIMAL(38,{s})) * {scale10})"
-                f" div COUNT({arg}) AS DECIMAL(19,0)) / {scale10}"
-                f" AS DECIMAL({min(p + 4, 38)},{s + 4}))"
-            )
-
-        return rewrite_calls(q, "avg", avg)
-
-    def _rewrite_decimal_division(self, q: str, lx: Lexed, rmap) -> str:
-        """Decimal / decimal division with arrow-rs's result type and
-        TRUNCATION (arrow-arith numeric.rs decimal ``Op::Div``: result
-        scale s1+4, precision min(p1+s2+4, 38); the i128 quotient of
-        l·10^(rs−s1+s2) by r's unscaled value — i128 ``/`` truncates
-        toward zero). Spark instead widens the quotient scale to
-        max(6, s1+p2+1) and rounds HALF_UP, so decimal.slt:397's
-        0.7142857142 golden shows Spark's ...42857142857 tail.
-
-        Lowered when BOTH operands are decimal: a (possibly
-        alias-qualified) column resolvable through _from_schema_map with
-        a DecimalType, or an inline ``CAST(x AS DECIMAL(p,s))`` whose
-        type text carries (p,s) directly. Exactness mirrors
-        _rewrite_decimal_avg: the dividend cast's precision is sized so
-        the ·10^rs product is loss-free (pa = 38 − rs − 2, gate
-        p1 ≤ pa), ``div`` truncates toward zero exactly, and the
-        DECIMAL(19,0)/10^rs rescale is exact for rs ≤ 17. The truncated
-        unscaled quotient must fit BIGINT — the same documented bound as
-        the avg lowering. Wider shapes (foo's DECIMAL(38,20)/
-        DECIMAL(38,0), rs=24) keep Spark's division — §1.2 residual."""
-        if "/" not in q:
-            return q
-        from pyspark.sql.types import DecimalType
-
-        _schema_memo: list = []
-
-        def _schema() -> dict | None:
-            if not _schema_memo:
-                resolved = rmap(q)
-                _schema_memo.append(resolved[0] if resolved else None)
-            return _schema_memo[0]
-
-        ident = r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*"
-        parid = r"\(\s*(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*\s*\)"
-        castp = (
-            r"CAST\s*\(\s*[^()]*?\s+AS\s+DECIMAL\s*"
-            r"\(\s*\d+\s*,\s*\d+\s*\)\s*\)"
-        )
-        pat = re.compile(
-            rf"(?<![\w.])({castp}|{parid}|{ident})\s*/\s*"
-            rf"({castp}|{parid}|{ident})(?![\w.])",
-            re.IGNORECASE,
-        )
-
-        def _decimal_ps(tok: str) -> tuple[int, int] | None:
-            cm = re.match(
-                r"CAST\s*\(.*AS\s+DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)\s*\)\s*$",
-                tok,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if cm:
-                return int(cm.group(1)), int(cm.group(2))
-            # a parenthesized single column is the same operand one token
-            # away (r12 spelling-consistency discipline)
-            pm = re.fullmatch(r"\(\s*((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*\)", tok)
-            if pm:
-                tok = pm.group(1)
-            if re.fullmatch(ident, tok):
-                sch = _schema()
-                dt = sch.get(tok.lower()) if sch else None
-                if isinstance(dt, DecimalType):
-                    return dt.precision, dt.scale
-            return None
-
-        def repl(m: re.Match) -> str:
-            a, b = m.group(1).strip(), m.group(2).strip()
-            pa_ps, pb_ps = _decimal_ps(a), _decimal_ps(b)
-            if pa_ps is None or pb_ps is None:
-                return m.group(0)
-            (p1, s1), (p2, s2) = pa_ps, pb_ps
-            rs = s1 + 4
-            pr = min(p1 + s2 + 4, 38)
-            pa = 38 - rs - 2  # dividend cast precision: ·10^rs stays exact
-            if rs > 17 or p1 > pa:
-                return m.group(0)
-            pow10 = 10**rs
-            quot = f"(CAST({a} AS DECIMAL({pa},{s1})) * {pow10}) div ({b})"
-            if pr > 19:
-                # the truncated quotient can exceed BIGINT for this SHAPE
-                # (worst case: |b| = 10^-s2 → up to 10^pr) even though
-                # in-range values divide exactly — decimal.slt:397's
-                # DECIMAL(10,6)/DECIMAL(12,7) golden is pr=21. Spark's
-                # `div` would return NULL on LONG overflow (non-ANSI), a
-                # SILENT divergence from arrow-rs's i128 quotient — make
-                # it LOUD instead of forfeiting the golden (r12 advice,
-                # adjudicated: skip-gating pr>19 would un-green the
-                # reference's own test)
-                quot = (
-                    f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                    f"OR ({b}) = 0 THEN {quot} "
-                    f"WHEN ({quot}) IS NULL THEN raise_error({overflow}) "
-                    f"ELSE ({quot}) END)"
-                )
-            return (
-                f"CAST(CAST({quot} AS DECIMAL(19,0)) / {pow10}"
-                f" AS DECIMAL({pr},{rs}))"
-            )
-
-        overflow = lx.add(
-            "'decimal division: truncated quotient exceeds BIGINT"
-            " (documented arrow-parity bound)'"
-        )
-        return pat.sub(repl, q)
-
-    def _array_arg_depth(
-        self, arg: str, schema: dict | None, lx: Lexed
-    ) -> int | None:
-        """Static array-nesting depth of an expression TEXT, or None when
-        unresolvable. Resolves columns (alias-aware _from_schema_map), bracket
-        literals, make_array/array_repeat chains, and arrow_cast type
-        strings — the shapes the reference's array corpus uses. ``lx``
-        resolves arrow_cast's TYPE STRING, a shielded literal.
-
-        Calls are rewritten bottom-up, so a flatten in ``arg`` is already
-        Spark's one-level flatten (or the ``(x)`` identity emitted for a
-        flat input): both are seen through."""
-        arg = arg.strip()
-        low = arg.lower()
-        if arg.startswith("(") and _match_paren(arg, 0) == len(arg) - 1:
-            return self._array_arg_depth(arg[1:-1], schema, lx)
-        if low.startswith("flatten(") and _match_paren(arg, 7) == len(arg) - 1:
-            d = self._array_arg_depth(arg[8:-1], schema, lx)
-            return d - 1 if d and d > 1 else None
-        if arg.startswith("["):
-            # whitespace may separate nested brackets: `[ [1], [2] ]`
-            m = re.match(r"(?:\[\s*)+", arg)
-            return m.group(0).count("[")
-        for fn in ("make_array(", "array_repeat("):
-            if low.startswith(fn) and arg.endswith(")"):
-                inner = _split_top_level(arg[len(fn) : -1])
-                d = (
-                    self._array_arg_depth(inner[0], schema, lx)
-                    if inner
-                    else None
-                )
-                return (d or 0) + 1
-        if low.startswith("arrow_cast(") and arg.endswith(")"):
-            parts = _split_top_level(arg[len("arrow_cast(") : -1])
-            if len(parts) == 2:
-                t = lx.literal(parts[1]) or parts[1].strip()
-                return len(
-                    re.findall(r"(?:Fixed_?Size|Large)?List\s*\(", t, re.I)
-                ) or None
-        if schema is not None and re.fullmatch(
-            r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg
-        ):
-            from pyspark.sql.types import ArrayType
-
-            dt = schema.get(arg.lower())
-            d = 0
-            while isinstance(dt, ArrayType):
-                d, dt = d + 1, dt.elementType
-            return d or None
-        return None
-
-    def _rewrite_deep_array_fns(
-        self, q: str, lx: Lexed, rmap
-    ) -> str:
-        """flatten / array_to_string over NESTED arrays, the reference's
-        recursive leaf semantics (functions-array flatten.rs flattens
-        RECURSIVELY; array_to_string joins the leaves of any nesting).
-        Spark's flatten removes exactly one level and errors on flat
-        input, and a runtime CASE over depth cannot type-check, so the
-        depth must be static: resolvable argument shapes get flatten
-        applied (depth-1) times (identity for flat input — the reference
-        returns flat arrays unchanged); unresolvable shapes keep Spark's
-        semantics (documented partial)."""
-        low = q.lower()
-        if not any(
-            s in low
-            for s in ("flatten", "to_string", "_join", "cardinality", "dims", "length")
-        ):
-            return q
-        resolved = rmap(q)
-        schema = resolved[0] if resolved else None
-
-        def flattened(arg: str, times: int) -> str:
-            out = arg
-            for _ in range(times):
-                out = f"flatten({out})"
-            return out
-
-        def call(fn: str, parts: list[str], _after: str) -> str | None:
-            kind = self._DEEP_ARRAY_FNS[fn]
-            if (kind in ("card", "dims") and len(parts) != 1) or (
-                kind == "len" and len(parts) != 2
-            ):
-                return None
-            d = self._array_arg_depth(parts[0], schema, lx)
-            if d is None or (kind == "join" and d <= 1):
-                return None
-            arg = parts[0]
-            if kind == "join":
-                return f"{fn}({', '.join([flattened(arg, d - 1), *parts[1:]])})"
-            if kind == "card":
-                # empty OUTER array is NULL at every depth
-                # (compute_array_dims yields None → cardinality NULL);
-                # nested-empty like [[]] stays 0
-                if d == 1:
-                    return f"nullif(size({arg}), 0)"
-                return (
-                    f"(CASE WHEN size({arg}) = 0 THEN NULL "
-                    f"ELSE size({flattened(arg, d - 1)}) END)"
-                )
-            if kind == "dims":
-                chain, sizes = arg, []
-                for _ in range(d):
-                    sizes.append(f"size({chain})")
-                    chain = f"try_element_at({chain}, 1)"
-                return (
-                    f"(CASE WHEN ({arg}) IS NULL THEN NULL "
-                    f"WHEN size({arg}) = 0 THEN NULL "
-                    f"ELSE array({', '.join(sizes)}) END)"
-                )
-            if kind == "len":
-                dim = parts[1]
-                chain, whens = arg, []
-                for k in range(1, d + 1):
-                    whens.append(f"WHEN ({dim}) = {k} THEN size({chain})")
-                    chain = f"try_element_at({chain}, 1)"
-                # dims past the nesting depth are NULL (length.rs)
-                return f"(CASE {' '.join(whens)} END)"
-            if d == 1:  # reference flatten(flat) = identity
-                return f"({arg})"
-            return flattened(arg, d - 1)
-
-        return rewrite_calls(q, tuple(self._DEEP_ARRAY_FNS), call)
-
-    # the functions _rewrite_deep_array_fns lowers, by kind. cardinality
-    # counts LEAF elements recursively, NULL for a flat empty array
-    # (functions-array cardinality.rs). The runtime typeof-CASE fallback
-    # (further down the pipeline) cannot type-check for FLAT inputs —
-    # static depth makes those exact too. Same for array_dims (per-level
-    # sizes via a try_element_at chain) and 2-arg array_length (size
-    # along a dimension): their templates' probe chains fail ANALYSIS on
-    # flat inputs.
-    _DEEP_ARRAY_FNS = {
-        "array_to_string": "join",
-        "list_to_string": "join",
-        "array_join": "join",
-        "list_join": "join",
-        "flatten": "flatten",
-        "cardinality": "card",
-        "array_dims": "dims",
-        "list_dims": "dims",
-        "array_length": "len",
-        "list_length": "len",
-    }
-
-    def _rewrite_ts_bigint_bare(self, q: str, rmap) -> str:
-        """Bare (hop-less) timestamp→integer cast: ``CAST(t AS BIGINT)``
-        / ``t::bigint`` over a column that statically resolves to
-        TimestampType lowers to ``unix_micros(t) * 1000`` — the epoch-NS
-        count, the same unit the ``::timestamp::bigint`` chain rewrite
-        produces, so adding a REDUNDANT ``::timestamp`` hop can no longer
-        change the answer ×10⁹ (r12 verdict What's-wrong #1). Unit
-        policy: **ns**, chosen for chain-consistency — the reference's
-        cast REINTERPRETS the source-unit count and its string→timestamp
-        default is Timestamp(NANOSECOND) (arrow-cast; joins.slt
-        test_timestamps_table goldens are ns), so every spelling of the
-        ts→bigint family in this engine returns ns. Operands that do not
-        schema-resolve to TIMESTAMP (subquery FROMs, expressions) keep
-        Spark's epoch-seconds cast — documented §1.2 residual. An
-        immediately following integer-literal divisor joins the rewrite
-        (truncating ``div``), mirroring the chain arm."""
-        up = q.upper()
-        if "BIGINT" not in up and "::" not in q:
-            return q
-        resolved = rmap(q)
-        if resolved is None:
-            return q
-        schema, _ = resolved
-        from pyspark.sql.types import TimestampType, TimestampNTZType
-
-        def _is_ts(tok: str) -> bool:
-            return isinstance(
-                schema.get(tok.strip().lower()),
-                (TimestampType, TimestampNTZType),
-            )
-
-        ident = r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*"
-
-        def _repl(m: "re.Match[str]") -> str:
-            src, dv = m.group(1), m.group(2)
-            if not _is_ts(src):
-                return m.group(0)
-            ns = f"(unix_micros({src}) * 1000)"
-            return f"({ns} div {dv})" if dv else ns
-
-        # t::bigint — the lookbehind blocks the tail of a ::timestamp
-        # ::bigint chain (handled by the module-level chain rewrite)
-        q = re.sub(
-            rf"(?<![\w.:])({ident})\s*::\s*BIGINT\b(?:\s*/\s*(\d+))?",
-            _repl,
-            q,
-            flags=re.IGNORECASE,
-        )
-        q = re.sub(
-            rf"\bCAST\s*\(\s*({ident})\s+AS\s+BIGINT\s*\)(?:\s*/\s*(\d+))?",
-            _repl,
-            q,
-            flags=re.IGNORECASE,
-        )
-        return q
-
-    def _rewrite_int_division(self, q: str, rmap) -> str:
-        """Integer COLUMN division truncates in the reference (Int64/Int64 →
-        Int64, like Rust's `/`); Spark's `/` is always fractional. The
-        literal/literal pair is folded in _rewrite_sql; this closes the
-        column cases the text layer alone cannot type: `a / b` where each
-        operand is an integer literal or a column statically resolvable
-        through the alias-aware _from_schema_map with an INTEGRAL type
-        lowers to `a div b` — Spark's `div` is Int64 truncating division,
-        the reference's exact semantics. Subqueries-in-FROM and
-        non-integral operands keep Spark's `/` (documented §1.2 residual).
-        Statically-integral operand spellings — integer literals, integer
-        CASTs in either ``CAST(x AS T)`` or ``x::T`` form, and redundant
-        parens around any of those — need no schema, so they divide
-        truncating even in FROM-less / unresolvable-FROM statements (r13:
-        the r12 paren-literal finding generalized to every
-        statically-typed operand shape)."""
-        if "/" not in q:
-            return q
-        resolved = rmap(q)
-        # unresolvable FROM (or none): columns can't type, but statically
-        # integral spellings still rewrite — schema lookups just miss
-        schema = resolved[0] if resolved else {}
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-        _INT_T = r"(?:TINYINT|SMALLINT|INT|INTEGER|BIGINT)"
-        _CAST_INT = re.compile(
-            rf"CAST\s*\(\s*[^()]*?\s+AS\s+{_INT_T}\s*\)\s*$",
-            re.IGNORECASE,
-        )
-        _COLON_INT = re.compile(
-            rf"((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*|\d+)\s*::\s*{_INT_T}\s*$",
-            re.IGNORECASE,
-        )
-
-        def integral(tok: str) -> bool:
-            if re.fullmatch(r"\d+", tok):
-                return True
-            if _CAST_INT.match(tok) or _COLON_INT.match(tok):
-                # an explicit integer CAST is statically integral — the
-                # CAST spelling of an integer operand must divide like the
-                # bare column (r12 spelling-consistency probe); the ::
-                # spelling is the same cast one token away (r13)
-                return True
-            pm = re.fullmatch(r"\(\s*(.*?)\s*\)", tok)
-            if pm:  # parenthesized operand — same token one () away
-                return integral(pm.group(1))
-            return isinstance(
-                schema.get(tok.lower()),
-                (ByteType, ShortType, IntegerType, LongType),
-            )
-
-        def repl(m: re.Match) -> str:
-            a, b = m.group(1), m.group(2)
-            has_col = not (a.isdigit() and b.isdigit())
-            if has_col and integral(a) and integral(b):
-                return f"({a} div {b})"
-            return m.group(0)
-
-        castp = (
-            rf"CAST\s*\(\s*[^()]*?\s+AS\s+{_INT_T}\s*\)"
-            rf"|(?:(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*|\d+)\s*::\s*{_INT_T}"
-        )
-        parid = (
-            rf"\(\s*(?:CAST\s*\(\s*[^()]*?\s+AS\s+{_INT_T}\s*\)"
-            rf"|(?:(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*|\d+)(?:\s*::\s*{_INT_T})?"
-            r")\s*\)"
-        )
-        ident = rf"{castp}|{parid}|(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*|\d+"
-        # the ':' boundary guards keep this from grabbing the TAIL of a
-        # ::-cast chain: in `ts::timestamp::bigint / 1000` the substring
-        # `timestamp::bigint` is a valid ::-integral operand shape, but
-        # folding it would split the chain mid-way (`ts::(timestamp::bigint
-        # div 1000)` — unparseable); chains are the chain rewrite's job
-        pat = re.compile(
-            rf"(?<![\w.:])({ident})\s*/\s*({ident})(?![\w.:])", re.IGNORECASE
-        )
-        return pat.sub(repl, q)
-
-    def _rewrite_approx_percentile(self, q: str, lx: Lexed, rmap) -> str:
-        """approx_percentile_cont / approx_median /
-        approx_percentile_cont_with_weight → the faithful t-digest
-        aggregate (functions/tdigest.py — the reference's merging-digest
-        semantics, functions-aggregate/src/approx_percentile_cont.rs +
-        physical-expr-common/src/aggregate/tdigest.rs), evaluated as
-        ``collect_list`` + a scalar pandas UDF registered per session.
-
-        The result is the reference's Float64 estimate converted to the
-        INPUT type with a truncating cast (`q as i64`,
-        approx_percentile_cont.rs:400) — the input type resolves through
-        the alias-aware _from_schema_map when the argument is a plain
-        column; expression arguments keep the double estimate (the
-        corpus' expression-shaped records are ±5% bound checks, which the
-        estimate satisfies by construction).
-
-        SCALE GUARD: the t-digest lowering materializes each group via
-        ``collect_list`` — behavior the reference does NOT share (its
-        accumulator keeps O(max_size)=100 centroids of streaming state,
-        physical-expr-common/src/aggregate/tdigest.rs:37). When the
-        resolved FROM sources exceed
-        ``spark.spark_graft.approx.exact_max_bytes`` (default 1 GiB),
-        the lowering keeps Spark's native streaming
-        ``percentile_approx(x, q, 10000)`` (KLL-style GK sketch, bounded
-        state) instead: satisfies every corpus ±bound check; the
-        bit-exact t-digest only matters for the slt direct-value
-        goldens, whose fixtures are far under any cap. Subquery-shaped
-        FROMs (round 12) size through _loose_source_tables — the
-        statement's catalog-resolvable base tables — so the guard fires
-        there too; only table-function sources (range(...), UDTFs) stay
-        unsized and fail open, documented."""
-        if not re.search(r"\bapprox_(median|percentile_cont)", q, re.IGNORECASE):
-            return q
-        from arrow_datafusion_spark.functions.tdigest import register_udafs
-
-        if not getattr(self, "_tdigest_registered", False):
-            register_udafs(self.spark)
-            self._tdigest_registered = True
-        resolved = rmap(q)
-        schema = resolved[0] if resolved else None
-        guarded = False  # above the byte cap: native sketch, no collect
-        try:
-            cap = int(
-                self.spark.conf.get(
-                    "spark.spark_graft.approx.exact_max_bytes",
-                    str(1 << 30),
-                )
-            )
-            # subquery-shaped FROMs (typed resolver bails) size through
-            # the loose base-table extraction — a subquery's rows can only
-            # come from base tables named in the same statement (r11 #5)
-            tables = (
-                resolved[1] if resolved is not None
-                else self._loose_source_tables(q)
-            )
-            guarded = bool(tables) and self._source_size_bytes(tables) > cap
-        except Exception:
-            guarded = False
-
-        return _lower_approx_percentile(q, lx, schema, guarded)
-
-    def _rewrite_f32_math(self, q: str, rmap) -> str:
-        """Float32 math kernels. §1.2 widens f32 compute to f64, and the slt
-        comparator absorbs that at ≤9 significant digits — but three corpus
-        shapes carry f32 artifacts OUTSIDE that window, where the reference
-        (functions/src/math) evaluates the kernel at Float32:
-
-        - ``round(c[, s])`` on a Float column (math.slt over
-          aggregate_simple's REAL c1): the reference computes
-          ``(x * 10f32.powi(s)).round() / 10^s`` ENTIRELY at f32 — for
-          c1 = 0.00005f (stored BELOW the decimal, 4.9999998737e-5) the
-          f32 multiply lands within half-ulp of 0.5 and rounds UP to
-          exactly 0.5f, which .round() takes half-away to 1; Spark's
-          round sees the f64-widened 4.9999998737e-5 and ties DOWN. The
-          lowering reproduces the f32 multiply with a true float*float
-          product (Spark's Multiply on two FloatType inputs is Java f32
-          arithmetic), rounds the exact f32 value in f64 (HALF_UP there
-          equals f32 half-away — representable f32 ties are exact in
-          f64), and rescales.
-        - ``sqrt(c)`` on a Float column: sqrt(Float32) → Float32 in the
-          reference where Spark computes DOUBLE (functions.slt's
-          avg(sqrt(c11)) golden 0.658440848589 is the mean of the
-          f32-rounded roots) → ``CAST(sqrt(c) AS FLOAT)``.
-        NOT lowered: 1-arg log over integers (the reference coerces to f32
-        there too, but its golden 0.3010299801826477 is one ulp BELOW the
-        correctly-rounded f32 log10(2) — a platform-libm artifact the
-        reference's own corpus flags as OS-dependent ("round is needed to
-        normalize the outputs of different operating systems",
-        scalar.slt:567) — no portable computation reproduces it).
-
-        Columns resolve through the alias-aware _from_schema_map; every
-        other shape keeps Spark's f64 math (§1.2 policy)."""
-        from pyspark.sql.types import FloatType
-
-        schema: dict | None = None
-        if re.search(r"\b(round|sqrt)\s*\(", q, re.IGNORECASE):
-            resolved = rmap(q)
-            schema = resolved[0] if resolved else None
-        if schema is None:
-            return q
-
-        def _float_col(tok: str) -> bool:
-            return (
-                schema is not None
-                and re.fullmatch(r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", tok)
-                is not None
-                and isinstance(schema.get(tok.lower()), FloatType)
-            )
-
-        def call(fn: str, args: list[str], _after: str) -> str | None:
-            if not _float_col(args[0]) or len(args) > (1 if fn == "sqrt" else 2):
-                return None
-            if fn == "sqrt":
-                return f"CAST(SQRT({args[0]}) AS FLOAT)"
-            sc = args[1] if len(args) == 2 else "0"
-            if not re.fullmatch(r"\d|10", sc):
-                return None  # non-literal / out-of-range scale: Spark
-            p10 = 10 ** int(sc)
-            return (
-                f"CAST(ROUND(CAST({args[0]} * CAST({p10} AS FLOAT) "
-                f"AS FLOAT), 0) / {p10} AS FLOAT)"
-            )
-
-        return rewrite_calls(q, ("round", "sqrt"), call)
-
-    def _rewrite_tz_date_trunc(self, q: str, lx: Lexed, rmap) -> str:
-        """Zone-aware date_trunc over NAMED-TZ columns (timestamps.slt
-        #8899 battery; datetime/date_trunc.rs truncates in the value's own
-        time zone): when the argument column's view declared a
-        Timestamp(_, Some("tz")) type (register_view records it), truncate
-        the WALL CLOCK in that zone — from_utc_timestamp → date_trunc →
-        to_utc_timestamp, whose Java gap/ambiguity resolution (shift
-        forward through DST gaps, earlier offset on ambiguity) matches the
-        reference's chrono-tz behavior on the corpus. Only units COARSER
-        than hour convert: hour/minute/second truncation is instant
-        arithmetic in the reference (the Berlin DST hour repeats in its
-        golden — a wall-clock path could not produce that), and instants
-        are zone-independent. Unresolvable shapes keep Spark's UTC trunc
-        (§1.2 residual)."""
-        if not re.search(r"\bdate_trunc\s*\(", q, re.IGNORECASE) or not any(
-            rec.column_tz for rec in self._records.values()
-        ):
-            return q
-        got = rmap(q)
-        if not got:
-            return q
-        _, tables = got
-
-        def call(_fn: str, parts: list[str], _after: str) -> str | None:
-            if len(parts) != 2:
-                return None
-            unit = (lx.string(parts[0]) or "").lower()
-            mcol = re.fullmatch(
-                r"(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)", parts[1]
-            )
-            if unit not in ("day", "week", "month", "quarter", "year") or (
-                mcol is None
-            ):
-                return None
-            col = mcol.group(2).lower()
-            tzs = {
-                self._record(t).column_tz.get(col) for t in tables
-            } - {None}
-            if len(tzs) != 1:
-                return None
-            tz_lit = lx.add(quote(next(iter(tzs))))
-            return (
-                f"to_utc_timestamp(date_trunc({parts[0]}, "
-                f"from_utc_timestamp({parts[1]}, {tz_lit})), {tz_lit})"
-            )
-
-        return rewrite_calls(q, "date_trunc", call)
-
-    def _rewrite_median(self, q: str, rmap) -> str:
-        """Type-preserving exact median (median.rs calculate_median): the
-        reference returns the INPUT type — for an even count the two middle
-        values are averaged in the native type's arithmetic, i.e.
-        TRUNCATING for integers and decimals ((a+b) i128-div 2), float mean
-        for floats. Spark's median is always an interpolating DOUBLE, which
-        loses both the type and exactness (int64 > 2^53, decimal scale).
-
-        Lowered to a sorted-collect formula when the argument's type is
-        statically resolvable — a possibly alias-qualified column through
-        _from_schema_map — and integral or decimal. Floats keep Spark's median (same
-        value), and unresolvable shapes (joins, subqueries, expressions)
-        keep the interpolating median as the documented divergence.
-        Spark computes the repeated collect_list aggregate once
-        (aggregate-expression deduplication), and `div` truncates toward
-        zero exactly like i128 division (-7 div 2 = -3).
-
-        SCALE CEILING: the lowering materializes a whole group's values in
-        ONE array row. That is behavior parity — median.rs also buffers
-        every group value in a Vec — but Spark's single-row limit is 2 GiB,
-        which arrives much earlier than process memory. The guard below
-        keeps Spark's native interpolating median when the source table's
-        plan-statistics size exceeds
-        ``spark.spark_graft.median.exact_max_bytes`` (default 1 GiB — the
-        upper bound on any group): value-identical for odd counts and for
-        floats; even integer/decimal counts then interpolate in double
-        instead of truncating — the documented trade at scale."""
-        if not re.search(r"\bmedian\s*\(", q, re.IGNORECASE):
-            return q
-        resolved = rmap(q)
-        if resolved is None:
-            return q
-        schema, tables = resolved
-        try:
-            cap = int(
-                self.spark.conf.get(
-                    "spark.spark_graft.median.exact_max_bytes", str(1 << 30)
-                )
-            )
-            est = self._source_size_bytes(tables)
-        except Exception:
-            cap, est = 1, 0
-        if est > cap:
-            return q
-        from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
-
-        def call(_fn: str, args: list[str], after: str) -> str | None:
-            if re.match(r"\s*(OVER|FILTER)\b", after, re.IGNORECASE):
-                return None
-            argstr = ", ".join(args)
-            md = re.match(r"DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
-            x = (md.group(1) if md else argstr).strip()
-            if not re.fullmatch(r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", x):
-                return None
-            dtype = schema.get(x.lower())
-            collect = "collect_set" if md else "collect_list"
-            A = f"array_sort({collect}({x}))"
-            m1 = f"element_at({A}, CAST((size({A}) + 1) div 2 AS INT))"
-            m2 = f"element_at({A}, CAST(size({A}) div 2 + 1 AS INT))"
-            if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
-                t = dtype.simpleString()
-                even = (
-                    f"CASE WHEN {m1} >= 0 THEN {m1} + (({m2} - {m1}) div 2) "
-                    f"WHEN {m2} <= 0 THEN {m2} - (({m2} - {m1}) div 2) "
-                    f"ELSE ({m1} + {m2}) div 2 END"
-                )
-            elif isinstance(dtype, DecimalType):
-                p_, s_ = dtype.precision, dtype.scale
-                t = f"decimal({p_},{s_})"
-                scale_f = 10**s_
-                u = (
-                    f"(CAST(CAST({m1} AS DECIMAL(38,{s_})) * {scale_f} AS DECIMAL(38,0)) "
-                    f"+ CAST(CAST({m2} AS DECIMAL(38,{s_})) * {scale_f} AS DECIMAL(38,0)))"
-                )
-                even = f"CAST(CAST(({u} div 2) AS DECIMAL(38,{s_})) / {scale_f} AS {t})"
-            else:
-                return None
-            return (
-                f"(CASE WHEN size({A}) = 0 THEN CAST(NULL AS {t}) "
-                f"WHEN size({A}) % 2 = 1 THEN CAST({m2} AS {t}) "
-                f"ELSE CAST({even} AS {t}) END)"
-            )
-
-        return rewrite_calls(q, "median", call)
+    def _column_tz(self) -> dict[str, dict[str, str]]:
+        """The named time zones views declared for their columns, by
+        table key (the tz_date_trunc pass reads them)."""
+        return {k: rec.column_tz for k, rec in self._records.items() if rec.column_tz}
 
     def _sql_copy_to(self, lx: Lexed, args=None) -> DataFrame:
         """``COPY (query | table) TO 'path' [STORED AS fmt]`` → write_sink.

@@ -62,6 +62,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arrow_datafusion_spark.session import session_key
+
 _QUERIES_SQL = "/root/reference/benchmarks/queries/clickbench/queries.sql"
 _EXTENDED_SQL = "/root/reference/benchmarks/queries/clickbench/extended.sql"
 
@@ -148,8 +150,8 @@ _LIMIT_TAIL_RE = re.compile(
 # spark.read.parquet(hits) re-registration on EVERY entry invocation
 # (~0.15 s/call of pure fixed cost × 46 statements × warm+timed passes ≈
 # 60% of the cb_verbatim suite total; guide §4.5: heavyweight init once).
-# Keyed by applicationId like session._TABLE_CACHE (stable per live
-# session, safe across a stopped session's id reuse). Registration is
+# Keyed by session like session._TABLE_CACHE: the context registers its
+# table in one SparkSession. Registration is
 # idempotent: all cb_v entries read the same immutable cached fixture.
 _CTX_CACHE: dict = {}
 
@@ -157,14 +159,14 @@ _CTX_CACHE: dict = {}
 def _cb_ctx(spark: SparkSession):
     from arrow_datafusion_spark.context import SessionContext
 
-    key = spark.sparkContext.applicationId
+    key = session_key(spark)
     ctx = _CTX_CACHE.get(key)
     if ctx is None:
         ctx = SessionContext(spark)
         ctx.register_parquet("hits", _hits_parts_path())
         # keep only the live session's entry: a stopped-and-restarted
         # SparkSession in one long process would otherwise leak a full
-        # SessionContext per dead applicationId (ADVICE r13)
+        # SessionContext per dead session (ADVICE r13)
         _CTX_CACHE.clear()
         _CTX_CACHE[key] = ctx
     return ctx

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from arrow_datafusion_spark.context import SessionContext
-from arrow_datafusion_spark.session import load_tables
+from arrow_datafusion_spark.session import load_tables, session_key
 
 _CTX_CACHE: dict[tuple[str, str], SessionContext] = {}
 
@@ -18,7 +18,7 @@ _CTX_CACHE: dict[tuple[str, str], SessionContext] = {}
 def _ctx(spark: SparkSession, sf_dir: str) -> SessionContext:
     """One SessionContext per (session, sf_dir) — registration is idempotent
     and cheap (temp views over cached DataFrame handles)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (session_key(spark), sf_dir)
     ctx = _CTX_CACHE.get(key)
     if ctx is None:
         ctx = SessionContext(spark)
@@ -335,7 +335,7 @@ def sql_decimal_div(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decimal/decimal division with arrow's TRUNCATING semantics
     (arrow-arith numeric.rs decimal ``Op::Div``: result scale s1+4,
     precision p1+s2+4, i128 quotient truncates toward zero —
-    decimal.slt:397's golden; _rewrite_decimal_division). Gates both the
+    decimal.slt:397's golden; typed.decimal_division). Gates both the
     col/col and the col/CAST-literal shapes; the oracle reproduces the
     truncation with exact cent-scaled integer math (values positive, so
     DuckDB's floor-div == trunc)."""

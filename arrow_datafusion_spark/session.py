@@ -79,6 +79,10 @@ _RUNTIME_CONFS = {
     # events.parquet stores TIMESTAMP(NANOS); Spark has no ns type — read as
     # long and convert (ns→µs truncation policy, SURVEY.md §1.2).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # write TIMESTAMP columns as INT64 TIMESTAMP(MICROS), as the reference
+    # writes them, not Spark's default INT96: a deprecated physical type
+    # other readers decode as nanoseconds
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Arrow-accelerated pandas UDF exchange for the operators that need it.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # PySpark's DataFrame debugging captures a Python call site and pushes it
@@ -138,11 +142,16 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
+def session_key(spark: SparkSession) -> str:
+    """The key of a per-session memo: the session's UUID. Every
+    ``newSession()`` shares the applicationId, but a temp view belongs to
+    one session; unlike id(spark), the UUID is never reused."""
+    return spark._jsparkSession.sessionUUID()
+
+
 # DataFrame handles are immutable logical plans — memoize per (session, dir,
 # table): reading the 10 fixture tables afresh runs no Spark job but still
 # costs ~0.29 s of py4j round-trips per load_tables call (~4 ms memoized).
-# Keyed by applicationId (stable, unique per live session — unlike id(spark),
-# which CPython can reuse after a stopped session is GC'd).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -166,7 +175,7 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing types (ts → TIMESTAMP)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (session_key(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
@@ -178,7 +187,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# (appId, view name) → sf_dir it was last registered for. Re-registering the
+# (session key, view name) → sf_dir it was last registered for. Re-registering the
 # same view on every load_tables call costs a py4j/catalog round-trip per
 # table per query (~0.09 s for the 10 fixture views); skip when nothing
 # changed. If a caller re-points a view name at different data behind our
@@ -193,11 +202,11 @@ def load_tables(
     """Load + register temp views (the `register_parquet` role of the
     reference's ListingTable, datafusion/core/src/datasource/listing/table.rs:617)."""
     out: dict[str, DataFrame] = {}
-    app = spark.sparkContext.applicationId
+    sid = session_key(spark)
     for name in names:
         df = load_table(spark, sf_dir, name)
-        if _VIEW_CACHE.get((app, name)) != sf_dir:
+        if _VIEW_CACHE.get((sid, name)) != sf_dir:
             df.createOrReplaceTempView(name)
-            _VIEW_CACHE[(app, name)] = sf_dir
+            _VIEW_CACHE[(sid, name)] = sf_dir
         out[name] = df
     return out

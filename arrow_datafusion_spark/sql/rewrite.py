@@ -2239,10 +2239,10 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
 
 
 def _lower_approx_percentile(
-    q: str, lx: Lexed, schema: dict | None, guarded: bool
+    q: str, lx: Lexed, column_type: Callable, guarded: bool
 ) -> str:
-    """The call lowering of SessionContext._rewrite_approx_percentile,
-    given the statement's schema map and whether the byte guard fired."""
+    """The call lowering of the approx_percentile pass (sql/typed.py),
+    given the statement's column typing and whether the byte guard fired."""
 
     def _typed(inner: str, arg: str) -> str:
         from pyspark.sql.types import (
@@ -2253,14 +2253,7 @@ def _lower_approx_percentile(
             ShortType,
         )
 
-        dt = (
-            schema.get(arg.strip().lower())
-            if schema is not None
-            and re.fullmatch(
-                r"(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*", arg.strip()
-            )
-            else None
-        )
+        dt = column_type(arg)
         sql_t = {
             ByteType: "TINYINT",
             ShortType: "SMALLINT",

@@ -121,32 +121,32 @@ EXTRA = (
 )
 
 # Type-aware statements over the typed_catalog relations, one or more
-# per schema-reading pass of SessionContext._spark_sql.
+# per entry of sql/typed.py TYPED_PASSES.
 TYPED = (
-    # _rewrite_tz_date_trunc
+    # typed.tz_date_trunc
     "SELECT date_trunc('day', ts), date_trunc('hour', ts) FROM fe_tz",
-    # _rewrite_median
+    # typed.median
     "SELECT median(i), median(DISTINCT i), median(d), median(f) FROM fe_num",
     "SELECT median(i) OVER (PARTITION BY j) FROM fe_num",
-    # _rewrite_decimal_avg
+    # typed.decimal_avg
     "SELECT avg(d), avg(i), avg(d) OVER () FROM fe_num",
-    # _rewrite_decimal_division
+    # typed.decimal_division
     "SELECT d / d2, d / CAST(i AS DECIMAL(10,2)), (d) / d2, i / d FROM fe_num",
     "SELECT w / d2 FROM fe_num",
-    # _rewrite_deep_array_fns
+    # typed.deep_array_fns
     "SELECT array_to_string(n2, ','), list_join(n3, '-'), flatten(n3), flatten(a1) FROM fe_arr",
     "SELECT cardinality(n2), cardinality(a1), array_dims(n3), array_length(n2, 2) FROM fe_arr",
     "SELECT array_to_string(make_array(make_array(1, 2), make_array(3)), ',') FROM fe_arr",
     "SELECT flatten(flatten(n3)) FROM fe_arr",
     "SELECT flatten(flatten(n2)) FROM fe_arr",
     "SELECT flatten(flatten(a1)) FROM fe_arr",
-    # _rewrite_ts_bigint_bare
+    # typed.ts_bigint_bare
     "SELECT ts::bigint, CAST(ts AS BIGINT) / 1000, ts::timestamp::bigint FROM fe_ts",
-    # _rewrite_int_division
+    # typed.int_division
     "SELECT i / j, i / 2, (i) / (j), CAST(f AS INT) / j, f / j FROM fe_num",
-    # _rewrite_f32_math
+    # typed.f32_math
     "SELECT round(f, 2), round(f), sqrt(f), round(abs(round(f, 2))), round(d, 1) FROM fe_num",
-    # _rewrite_approx_percentile
+    # typed.approx_percentile
     "SELECT approx_median(i), approx_percentile_cont(f, 0.9), approx_percentile_cont(i, 0.5, 50) FROM fe_num",
     "SELECT approx_percentile_cont_with_weight(i, j, 0.5), approx_median(i) OVER (PARTITION BY j) FROM fe_num",
     "SELECT approx_percentile_cont(i, 0.5) FILTER (WHERE j > 0) OVER (PARTITION BY j) FROM fe_num",

@@ -594,31 +594,29 @@ def test_digest_blake3_sql_surface(spark):
     )
 
 
-def test_median_exact_lowering_has_a_scale_guard(spark, sf_dir):
+def test_median_exact_lowering_has_a_scale_guard(spark, sf_dir, monkeypatch):
     # median.rs parity materializes each group's values in one array row —
-    # above a configured source-size budget the rewrite must keep Spark's
-    # native interpolating median instead (round-7 verdict, What's wrong #2).
+    # above a source-size budget the rewrite must keep Spark's native
+    # interpolating median instead (round-7 verdict, What's wrong #2).
     # The gate reads plan statistics, so it needs a FILE-backED table
     # (in-memory relations report "size unknown", which stays exact).
+    from arrow_datafusion_spark.sql import typed
+
     ctx = SessionContext(spark)
     ctx.register_testdata(sf_dir)
     q = "SELECT median(n_nationkey) AS m FROM nation"  # 0..24 → exact = 12
-    try:
-        # under the (default 1 GiB) budget: exact type-preserving median
-        exact = ctx.sql(q).collect()[0][0]
-        assert exact == 12 and not isinstance(exact, float)
-        spark.conf.set("spark.spark_graft.median.exact_max_bytes", "0")
-        native = ctx.sql(q).collect()[0][0]
-        assert float(native) == 12.0 and isinstance(native, float)
-    finally:
-        spark.conf.unset("spark.spark_graft.median.exact_max_bytes")
+    # under the (1 GiB) budget: exact type-preserving median
+    exact = ctx.sql(q).collect()[0][0]
+    assert exact == 12 and not isinstance(exact, float)
+    monkeypatch.setattr(typed, "EXACT_MAX_BYTES", 0)
+    ctx._rw_cache.clear()  # the budget is a constant: the memo omits it
+    native = ctx.sql(q).collect()[0][0]
+    assert float(native) == 12.0 and isinstance(native, float)
     # in-memory relation: size unknown → exact lowering regardless of cap
     spark.createDataFrame([(1,), (2,)], "x int").createOrReplaceTempView("med_guard_t")
     try:
-        spark.conf.set("spark.spark_graft.median.exact_max_bytes", "0")
         assert ctx.sql("SELECT median(x) AS m FROM med_guard_t").collect()[0][0] == 1
     finally:
-        spark.conf.unset("spark.spark_graft.median.exact_max_bytes")
         spark.catalog.dropTempView("med_guard_t")
 
 
@@ -747,7 +745,7 @@ def test_decimal_division_truncates_like_the_reference(spark):
 
 
 def test_type_aware_rewrites_resolve_joined_and_aliased_tables(spark):
-    # r10: _from_schema_map generalizes the r9 single-plain-FROM guard —
+    # r10: the relation scope generalizes the r9 single-plain-FROM guard —
     # truncating decimal avg, integer division, exact median, and deep
     # array lowerings now apply across JOIN/alias/comma-FROM shapes when
     # the column resolves unambiguously (the reference's own rule)
@@ -795,12 +793,14 @@ def test_type_aware_rewrites_resolve_joined_and_aliased_tables(spark):
         spark.catalog.dropTempView("jr_dim")
 
 
-def test_from_schema_map_bails_on_shadowing_and_alias_reuse(spark):
+def test_relations_bail_on_shadowing_and_alias_reuse(spark):
     # late-r10 screens: (a) a CTE name shadowing a catalog table must NOT
     # resolve through spark.table() — the lowering would fire on the
     # catalog table's type while execution binds the CTE's; (b) the same
     # alias in two scopes (outer FROM + subquery FROM) would last-wins
     # overwrite the qualifier map and type the WRONG column
+    from arrow_datafusion_spark.sql.typed import Relations
+
     ctx = SessionContext(spark)
     from decimal import Decimal
 
@@ -809,29 +809,31 @@ def test_from_schema_map_bails_on_shadowing_and_alias_reuse(spark):
     ).createOrReplaceTempView("fsm_shadow_t")
     try:
         assert (
-            ctx._from_schema_map(
+            Relations(
+                spark,
                 "WITH fsm_shadow_t AS (SELECT 1.0 AS d) "
-                "SELECT avg(d) FROM fsm_shadow_t"
-            )
+                "SELECT avg(d) FROM fsm_shadow_t",
+            ).schema
             is None
         )
         assert (
-            ctx._from_schema_map(
+            Relations(
+                spark,
                 "SELECT avg(f.d) FROM fsm_shadow_t f WHERE f.d IN "
-                "(SELECT d FROM fsm_shadow_t f)"
-            )
+                "(SELECT d FROM fsm_shadow_t f)",
+            ).schema
             is None
         )
         # (c) column-list CTE form `WITH t(a) AS (...)` — the char before
         # AS is ')', which the plain `name AS (` capture missed (r10
-        # advice): the shadowed name must still be treated as a CTE
-        assert (
-            ctx._from_schema_map(
-                "WITH fsm_shadow_t(d) AS (SELECT 1.0) "
-                "SELECT avg(d) FROM fsm_shadow_t"
-            )
-            is None
+        # advice): the shadowed name must still be treated as a CTE, for
+        # typing and for sizing alike
+        cte = Relations(
+            spark,
+            "WITH fsm_shadow_t(d) AS (SELECT 1.0) "
+            "SELECT avg(d) FROM fsm_shadow_t",
         )
+        assert cte.schema is None and cte.tables == []
         # and end-to-end: the CTE's DOUBLE avg keeps Spark semantics (the
         # truncating decimal lowering must not fire on the shadowed name)
         row = ctx.sql(
@@ -843,27 +845,33 @@ def test_from_schema_map_bails_on_shadowing_and_alias_reuse(spark):
         spark.catalog.dropTempView("fsm_shadow_t")
 
 
-def test_from_schema_map_bails_on_unresolvable_shapes(spark):
+def test_relations_bail_on_unresolvable_shapes(spark):
     # subquery-in-FROM, UDTF calls, and EXTRACT's FROM keyword must all
-    # return None (skip lowering) rather than mis-resolve
-    ctx = SessionContext(spark)
-    assert ctx._from_schema_map("SELECT 1 FROM (SELECT 2) s") is None
-    assert ctx._from_schema_map("SELECT * FROM range(10)") is None
+    # leave the schema None (skip lowering) rather than mis-resolve
+    from arrow_datafusion_spark.sql.typed import Relations
+
+    assert Relations(spark, "SELECT 1 FROM (SELECT 2) s").schema is None
+    assert Relations(spark, "SELECT * FROM range(10)").schema is None
     assert (
-        ctx._from_schema_map("SELECT EXTRACT(HOUR FROM ts) FROM nosuch_t")
+        Relations(spark, "SELECT EXTRACT(HOUR FROM ts) FROM nosuch_t").schema
         is None
     )
     spark.createDataFrame([(1,)], "a int").createOrReplaceTempView("fsm_t")
     try:
-        got = ctx._from_schema_map("SELECT a FROM fsm_t AS z")
-        assert got is not None
-        schema, tables = got
-        assert "z.a" in schema and "a" in schema and tables == ["fsm_t"]
+        got = Relations(spark, "SELECT a FROM fsm_t AS z")
+        assert got.schema is not None
+        assert "z.a" in got.schema and "a" in got.schema
+        assert got.tables == ["fsm_t"]
+        assert str(got.column_type("(z.a)")) == "IntegerType()"
+        assert got.column_type("a + 1") is None
         # self-join: bare column ambiguous, qualified forms present
-        schema2, _ = ctx._from_schema_map(
-            "SELECT x.a FROM fsm_t x JOIN fsm_t y ON x.a = y.a"
-        )
+        schema2 = Relations(
+            spark, "SELECT x.a FROM fsm_t x JOIN fsm_t y ON x.a = y.a"
+        ).schema
         assert "x.a" in schema2 and "y.a" in schema2 and "a" not in schema2
+        # a subquery FROM bails typing but still names its base table
+        sub = Relations(spark, "SELECT v FROM (SELECT a AS v FROM fsm_t) s")
+        assert sub.schema is None and sub.tables == ["fsm_t"]
     finally:
         spark.catalog.dropTempView("fsm_t")
 
@@ -1079,6 +1087,34 @@ def test_rewrite_memo_revalidates_out_of_band_schema_changes(spark):
         assert r == 3.5 and isinstance(r, float)
     finally:
         spark.catalog.dropTempView("memo_reval_t")
+
+
+def test_typed_statement_resolves_its_relations_once(spark, monkeypatch):
+    # one relation scope per statement: a memo miss resolves the FROM
+    # relations once for every pass and the fingerprint together, and a
+    # memo hit resolves them once to revalidate; a statement no pass types
+    # resolves nothing
+    from arrow_datafusion_spark.sql import typed
+
+    calls = []
+    resolve = typed._resolve
+    monkeypatch.setattr(
+        typed, "_resolve", lambda *a: calls.append(a[1]) or resolve(*a)
+    )
+    ctx = SessionContext(spark)
+    spark.createDataFrame(
+        [(7, 2, 1.5)], "a int, b int, f float"
+    ).createOrReplaceTempView("memo_once_t")
+    try:
+        q = "SELECT sum(a / b) AS r, median(a) AS m, max(round(f, 1)) AS x FROM memo_once_t"
+        assert ctx.sql(q).collect()[0]["r"] == 3  # miss
+        assert len(calls) == 1
+        assert ctx.sql(q).collect()[0]["r"] == 3  # hit
+        assert len(calls) == 2
+        ctx.sql("SELECT 7 / 2 AS r, a FROM memo_once_t").collect()
+        assert len(calls) == 2
+    finally:
+        spark.catalog.dropTempView("memo_once_t")
 
 
 def test_rewrite_memo_invalidated_by_commented_mutation(spark):

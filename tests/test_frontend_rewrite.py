@@ -54,6 +54,32 @@ def test_typed_records_replay(typed_ctx):
     )
 
 
+def test_every_typed_pass_fires(typed_ctx, monkeypatch):
+    # each entry of the declared pass list changes the text of at least
+    # one typed record, so a pass the corpus cannot reach is seen
+    from arrow_datafusion_spark import context
+
+    fired = set()
+
+    def watched(name, rewrite):
+        def run(ctx, q, lx, rel):
+            out = rewrite(ctx, q, lx, rel)
+            if out != q:
+                fired.add(name)
+            return out
+
+        return run
+
+    passes = context.TYPED_PASSES
+    monkeypatch.setattr(
+        context, "TYPED_PASSES", tuple((n, t, watched(n, f)) for n, t, f in passes)
+    )
+    for rec in RECORDS:
+        if rec.get("typed"):
+            fc.rewrite_typed(typed_ctx, rec["sql"])
+    assert [n for n, _, _ in passes if n not in fired] == []
+
+
 # fast/full tier (tests/conftest.py): reduced derandomized prefix by default
 _FULL = bool(os.environ.get("SPARK_GRAFT_FULL_TESTS"))
 

@@ -527,3 +527,52 @@ def test_table_records_follow_the_catalog(spark, tmp_path):
         )
     finally:
         _drop_all(session)
+
+
+def test_load_tables_registers_in_each_session(spark, tmp_path):
+    # a temp view belongs to one SparkSession, while every newSession()
+    # shares the applicationId: the load_tables memos key by session
+    from arrow_datafusion_spark.session import load_tables
+
+    # a location no earlier load_tables call has memoized
+    os.symlink(f"{SF_DIR}/region.parquet", f"{tmp_path}/region.parquet")
+    sessions = (spark.newSession(), spark.newSession())
+    for s in sessions:
+        load_tables(s, str(tmp_path), names=("region",))
+    for s in sessions:
+        assert s.sql("SELECT count(*) FROM region").collect()[0][0] == 5
+
+
+def test_drop_and_replace_look_the_name_up(spark, monkeypatch):
+    # DROP TABLE, DROP VIEW and CREATE OR REPLACE's rename check decide
+    # what a name is with one catalog lookup: a catalog listing costs
+    # ~0.15 s a call, however few tables it lists
+    from pyspark.sql.catalog import Catalog
+
+    from arrow_datafusion_spark.context import SessionContext
+
+    ctx = SessionContext(spark.newSession())
+
+    def listing(*_a, **_k):
+        raise AssertionError("listTables called")
+
+    monkeypatch.setattr(Catalog, "listTables", listing)
+    ctx.register_table("kind_r", ctx.spark.range(3))
+    with pytest.raises(ValueError, match="doesn't exist"):
+        ctx.sql("DROP VIEW kind_r")  # a registered table is no view
+    ctx.sql("DROP TABLE kind_r")
+    assert not ctx.table_exist("kind_r")
+    ctx.sql("CREATE VIEW kind_v AS SELECT 1 AS a")
+    with pytest.raises(ValueError, match="doesn't exist"):
+        ctx.sql("DROP TABLE kind_v")  # a view is no table
+    ctx.sql("DROP VIEW kind_v")
+    assert not ctx.table_exist("kind_v")
+    try:
+        ctx.sql("CREATE TABLE kind_m AS SELECT 1 AS a")
+        ctx.sql("CREATE OR REPLACE TABLE kind_m AS SELECT 2 AS a")
+        assert ctx.sql("SELECT a FROM kind_m").collect()[0][0] == 2
+        ctx.sql("DROP TABLE kind_m")
+        assert not ctx.table_exist("kind_m")
+    finally:
+        ctx.spark.sql("DROP TABLE IF EXISTS kind_m")
+        ctx.spark.sql("DROP TABLE IF EXISTS kind_m__cor_new")

@@ -204,3 +204,31 @@ def test_format_writers_are_reached_only_through_write_sink():
             ):
                 callers.append(os.path.relpath(path, root))
     assert callers == [os.path.join("sources", "sink.py")]
+
+
+def test_timestamps_are_written_as_int64_micros(ctx, tmp_path):
+    # the reference writes TIMESTAMP(MICROS/NANOS); Spark's default INT96
+    # is a deprecated physical type other readers decode as nanoseconds
+    import glob
+
+    import pyarrow.parquet as pq
+
+    ts = "TIMESTAMP '2020-01-01 00:00:00.123456'"
+    want = ctx.sql(f"SELECT {ts} AS ts").collect()[0][0]
+    copied, ext = f"{tmp_path}/copied/", f"{tmp_path}/ext/"
+    ctx.sql(f"COPY (SELECT {ts} AS ts) TO '{copied}' STORED AS PARQUET").collect()
+    ctx.sql(f"CREATE EXTERNAL TABLE ts_ext (ts TIMESTAMP) STORED AS PARQUET LOCATION '{ext}'")
+    try:
+        ctx.sql(f"INSERT INTO ts_ext SELECT {ts} AS ts").collect()
+        ctx.register_parquet("ts_copied", copied)
+        for table, loc in (("ts_copied", copied), ("ts_ext", ext)):
+            files = glob.glob(f"{loc}*.parquet")
+            assert files, loc
+            for f in files:
+                col = pq.read_metadata(f).schema.column(0)
+                assert col.physical_type == "INT64", (f, col)
+                assert col.converted_type == "TIMESTAMP_MICROS", (f, col)
+            assert ctx.sql(f"SELECT ts FROM {table}").collect()[0][0] == want
+    finally:
+        ctx.deregister_table("ts_ext")
+        ctx.deregister_table("ts_copied")

@@ -42,7 +42,7 @@ _PAIRS = [
     # r13: the BARE (hop-less) spelling must agree with the chain — a
     # redundant ::timestamp hop cannot change the answer ×10⁹ (r12
     # verdict What's-wrong #1; unit policy = ns, documented at
-    # context._rewrite_ts_bigint_bare)
+    # sql/typed.py ts_bigint_bare)
     ("ts_bare_cast_eq_chain",
      "SELECT CAST(t AS BIGINT) AS v FROM sp ORDER BY i",
      "SELECT CAST(CAST(t AS TIMESTAMP) AS BIGINT) AS v FROM sp ORDER BY i"),
@@ -82,7 +82,7 @@ _PAIRS = [
     ("int_div_paren_literal_mixed",
      "SELECT 7/(2) AS v",
      "SELECT (7)/2 AS v"),
-    # r13: inline-VALUES FROMs type through _parse_inline_values — the
+    # r13: inline-VALUES FROMs type through typed._inline_values — the
     # same division/median lowerings as a catalog-backed relation
     ("int_div_inline_values",
      "SELECT x/2 AS v FROM (VALUES (7), (3)) AS tv(x) ORDER BY x",

@@ -38,13 +38,13 @@ _SLT_DIR = "/root/reference/datafusion/sqllogictest/test_files"
 #
 # ROUND-10 AUDIT: 11 closed (SHOW VERBOSE doc text ×4, plural-interval
 # quirk, unordered string_agg, map entry order, CREATE ident
-# normalization, 3 f32-compute entries via _rewrite_f32_math).
+# normalization, 3 f32-compute entries via typed.f32_math).
 #
 # ROUND-12 AUDIT: 9 closed, 44 → 35 — options.slt literal typing ×2,
 # arrow_typeof.slt named-tz casts ×2, timestamps.slt named-tz
 # date_trunc ×2 + TIME ns-literal ×1, map.slt footer-schema DESCRIBE
 # ×1 (all in the r12 first-pass commits), and decimal.slt:397
-# (truncating decimal division — _rewrite_decimal_division).
+# (truncating decimal division — typed.decimal_division).
 #
 # ROUND-11 AUDIT: 12 more closed, 56 → 44 —
 # - joins.slt ×4: int↔timestamp reinterpret casts (the
@@ -72,7 +72,7 @@ _KNOWN = {
     # run via tests/tpch_tbl.py's duckdb-dbgen regeneration):
     # - CLOSED round 9: decimal AVG truncating division (average.rs
     #   DecimalAverager) is now emulated by ctx.sql's
-    #   _rewrite_decimal_avg, so q1's avg_disc golden (line 206) and
+    #   typed.decimal_avg, so q1's avg_disc golden (line 206) and
     #   decimal.slt's avg record (line 121) PASS.
     # - dbgen text streams: duckdb's dbgen port reproduces every numeric/
     #   key/date/name column of classic dbgen at SF0.1 (16 of 22 queries
@@ -121,7 +121,7 @@ _KNOWN = {
     #   reference returns the INPUT type (integer medians truncate, big
     #   int64 medians stay exact, decimal medians keep scale) — §1.2.
     # - f32 compute: CLOSED round 10 for the sqrt/round-over-Float shapes
-    #   (_rewrite_f32_math lowers them to f32 kernels); only the
+    #   (typed.f32_math lowers them to f32 kernels); only the
     #   platform-libm log artifact remains (array.slt:645 below).
     # - corr singular input: reference returns 0.0 for a zero-variance
     #   (single-point) population; Spark and Postgres return NULL.
@@ -158,7 +158,7 @@ _KNOWN = {
     # null-aware anti join emits the NULL-keyed probe row where standard
     # ternary logic (Spark, Postgres) yields no rows.
     ("joins.slt", 3555): "NOT IN null semantics (reference anti-join quirk)",
-    # (decimal.slt:397 CLOSED round 12: _rewrite_decimal_division lowers
+    # (decimal.slt:397 CLOSED round 12: typed.decimal_division lowers
     # decimal col/col and col/CAST-literal division to arrow-rs's result
     # type — Decimal128(p1+s2+4 capped 38, s1+4) — with the i128
     # truncating quotient emulated via `div`, same discipline as the
@@ -181,7 +181,7 @@ _KNOWN = {
     # µs zero-tails in 3-digit groups to recover narrower-unit Displays.)
     # (timestamps.slt:1332/1416 CLOSED round 12: register_view records
     # per-column Timestamp(_, Some("tz")) declarations and
-    # _rewrite_tz_date_trunc truncates day-and-coarser units in the
+    # typed.tz_date_trunc truncates day-and-coarser units in the
     # column's own zone — from_utc_timestamp → date_trunc →
     # to_utc_timestamp, whose Java DST gap/ambiguity resolution matches
     # the chrono-tz goldens; hour/minute stay instant arithmetic like the
@@ -193,7 +193,7 @@ _KNOWN = {
     ("timestamps.slt", 2713): "Date64 intra-day ms dropped by DateType policy",
     # array.slt: FixedSizeList NULL rows materialize null-filled fixed-
     # width lists in the reference. (Recursive flatten / nested
-    # array_to_string CLOSED round 9: ctx.sql's _rewrite_deep_array_fns
+    # array_to_string CLOSED round 9: ctx.sql's typed.deep_array_fns
     # resolves the argument's nesting depth statically — single-FROM
     # column schema, bracket literals, make_array/array_repeat chains,
     # arrow_cast type strings — and applies flatten (depth-1) times, so
@@ -270,7 +270,7 @@ _KNOWN = {
     # through map_entries — JVM order, what arrow's Display shows — so
     # entry order survives the Python dict conversion.)
     # (math.slt:66 + functions.slt:557/562 CLOSED round 10: ctx.sql's
-    # _rewrite_f32_math lowers round/sqrt over Float columns to the
+    # typed.f32_math lowers round/sqrt over Float columns to the
     # reference's f32 kernels — f32-product round ties and f32-rounded
     # sqrt means now match the goldens exactly.)
     # the 2^64-1 INSERT overflows the BIGINT that `BIGINT UNSIGNED`
@@ -293,7 +293,7 @@ _KNOWN = {
     # rounded f32 log10(2) — a platform-libm artifact (the corpus itself
     # notes log outputs are OS-dependent, scalar.slt:567); no portable
     # computation reproduces that exact f32, so this stays pinned even
-    # with _rewrite_f32_math landed (r10 A/B: CAST(LOG10(2) AS FLOAT)
+    # with typed.f32_math landed (r10 A/B: CAST(LOG10(2) AS FLOAT)
     # yields the NEIGHBORING f32 0.3010300099849701)
     ("array.slt", 645): "platform-libm f32 log artifact in array literal",
 }

@@ -138,17 +138,20 @@ def test_digest_accuracy_bound():
         assert abs(est - true) / true < 0.05
 
 
-def test_approx_sql_surface_has_a_byte_guard(ctx):
+def test_approx_sql_surface_has_a_byte_guard(ctx, monkeypatch):
     # round-10 verdict What's wrong #1: the collect_list t-digest lowering
-    # materializes whole groups — above
-    # spark.spark_graft.approx.exact_max_bytes the rewrite must keep
-    # Spark's native streaming percentile_approx (bounded sketch state,
-    # the reference's own O(max_size) contract — tdigest.rs:37) instead.
+    # materializes whole groups — above typed.EXACT_MAX_BYTES the rewrite
+    # must keep Spark's native streaming percentile_approx (bounded sketch
+    # state, the reference's own O(max_size) contract — tdigest.rs:37)
+    # instead.
+    from arrow_datafusion_spark.sql import typed
+
     spark = ctx.spark
     q = "SELECT approx_percentile_cont(c3, 0.95) AS p FROM agg100"
-    exact = ctx.sql(q).collect()[0][0]  # under the default 1 GiB cap
-    try:
-        spark.conf.set("spark.spark_graft.approx.exact_max_bytes", "0")
+    exact = ctx.sql(q).collect()[0][0]  # under the 1 GiB cap
+    with monkeypatch.context() as mp:
+        mp.setattr(typed, "EXACT_MAX_BYTES", 0)
+        ctx._rw_cache.clear()  # the cap is a constant: the memo omits it
         df = ctx.sql(q)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "tdigest_from_list" not in plan
@@ -168,21 +171,18 @@ def test_approx_sql_surface_has_a_byte_guard(ctx):
         )
         assert "collect_list" not in w._jdf.queryExecution().optimizedPlan().toString()
         assert w.collect()[0][0] is not None
-    finally:
-        spark.conf.unset("spark.spark_graft.approx.exact_max_bytes")
-    # in-memory relation: size unknown → bit-exact t-digest regardless
-    spark.createDataFrame([(1,), (2,), (3,)], "x int").createOrReplaceTempView(
-        "apx_guard_t"
-    )
-    try:
-        spark.conf.set("spark.spark_graft.approx.exact_max_bytes", "0")
-        assert (
-            ctx.sql("SELECT approx_median(x) AS m FROM apx_guard_t").collect()[0][0]
-            == 2
+        # in-memory relation: size unknown → bit-exact t-digest regardless
+        spark.createDataFrame([(1,), (2,), (3,)], "x int").createOrReplaceTempView(
+            "apx_guard_t"
         )
-    finally:
-        spark.conf.unset("spark.spark_graft.approx.exact_max_bytes")
-        spark.catalog.dropTempView("apx_guard_t")
+        try:
+            assert (
+                ctx.sql("SELECT approx_median(x) AS m FROM apx_guard_t").collect()[0][0]
+                == 2
+            )
+        finally:
+            spark.catalog.dropTempView("apx_guard_t")
+    ctx._rw_cache.clear()
 
 
 def test_windowed_fallbacks_keep_the_input_type(ctx):
@@ -215,30 +215,28 @@ def test_with_weight_fractional_weight_over_window(ctx):
     assert df.count() == 100
 
 
-def test_approx_byte_guard_covers_subquery_froms(ctx):
+def test_approx_byte_guard_covers_subquery_froms(ctx, monkeypatch):
     # round-11 verdict #5: a subquery-shaped FROM used to skip the byte
-    # guard (the typed resolver bails on it) — the guard must now size the
-    # statement's base tables through _loose_source_tables and keep the
-    # native streaming sketch above the cap.
-    spark = ctx.spark
+    # guard (typing bails on it) — the guard must size the statement's
+    # base tables (Relations.tables) and keep the native streaming sketch
+    # above the cap.
+    from arrow_datafusion_spark.sql import typed
+
     q = (
         "SELECT approx_percentile_cont(v, 0.95) AS p FROM "
         "(SELECT c3 AS v FROM agg100 WHERE c2 > 0) t"
     )
     exact = ctx.sql(q).collect()[0][0]
-    try:
-        spark.conf.set("spark.spark_graft.approx.exact_max_bytes", "0")
+    with monkeypatch.context() as mp:
+        mp.setattr(typed, "EXACT_MAX_BYTES", 0)
+        ctx._rw_cache.clear()  # the cap is a constant: the memo omits it
         df = ctx.sql(q)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "collect_list" not in plan
         assert "percentile_approx" in plan
         assert abs(df.collect()[0][0] - exact) <= max(2, abs(exact) * 0.05)
-    finally:
-        spark.conf.unset("spark.spark_graft.approx.exact_max_bytes")
-    # CTE spelling takes the same guard (the CTE name itself is excluded,
-    # its base table is sized)
-    try:
-        spark.conf.set("spark.spark_graft.approx.exact_max_bytes", "0")
+        # CTE spelling takes the same guard (the CTE name itself is
+        # excluded, its base table is sized)
         df = ctx.sql(
             "WITH s AS (SELECT c3 FROM agg100) "
             "SELECT approx_median(c3) AS m FROM s"
@@ -247,5 +245,4 @@ def test_approx_byte_guard_covers_subquery_froms(ctx):
             df._jdf.queryExecution().optimizedPlan().toString()
         )
         df.collect()
-    finally:
-        spark.conf.unset("spark.spark_graft.approx.exact_max_bytes")
+    ctx._rw_cache.clear()
