@@ -39,11 +39,13 @@ from pyspark.sql.types import StructType
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
 from arrow_datafusion_spark.session import (
+    _VIEW_CACHE,
     ALL_TABLES,
     DEFAULT_SF_DIR,
     build_spark,
-    load_table,
+    load_tables,
     prepare,
+    session_key,
 )
 from arrow_datafusion_spark.sources.avro import avro_schema_of
 from arrow_datafusion_spark.sources.listing import FORMATS, file_schema, read_listing, table_schema
@@ -181,6 +183,13 @@ def _cast_keeps_values(src, dst) -> bool:
         or (a in _WIDENING and b in _WIDENING and _WIDENING[a] <= _WIDENING[b])
         or {a, b} <= {"date", "timestamp", "timestamp_ntz"}
     )
+
+
+def _by_position(df: DataFrame) -> DataFrame:
+    """``df`` with its columns renamed ``_0``, ``_1``, ...: a source column
+    is then looked up by its position. A generated name such as ``1.5``
+    would re-parse as the path `1`.`5`, and two equal names are ambiguous."""
+    return df.toDF(*(f"_{i}" for i in range(len(df.columns))))
 
 
 def _written_rows(done: DataFrame) -> int:
@@ -752,18 +761,23 @@ class SessionContext:
         self._bind(name, rec)
 
     def register_testdata(self, sf_dir: str = DEFAULT_SF_DIR) -> None:
-        """Register the driver's fixture tables (TESTDATA.md)."""
+        """Register the driver's fixture tables (TESTDATA.md) through
+        session.load_tables, which resolves and registers the ones it has
+        not memoized concurrently, then bind their records."""
+        # the views may have been re-pointed since: register them afresh
+        sid = session_key(self.spark)
         for t in ALL_TABLES:
-            self.register_table(t, load_table(self.spark, sf_dir, t))
+            _VIEW_CACHE.pop((sid, t), None)
+        for t, df in load_tables(self.spark, sf_dir).items():
+            self._records[_key(t)] = _Table(df)
+        self._rw_version += 1
 
     def deregister_table(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
         self._records.pop(_key(name), None)
         self._rw_version += 1
         # keep session.load_tables' registered-view memo honest
-        from arrow_datafusion_spark import session as _session
-
-        _session._VIEW_CACHE.pop((_session.session_key(self.spark), _key(name)), None)
+        _VIEW_CACHE.pop((session_key(self.spark), _key(name)), None)
 
     # -- catalog ------------------------------------------------------------
 
@@ -1463,12 +1477,12 @@ class SessionContext:
 
     def _insert_columns(self, target: str, lx: Lexed, args):
         """The reference's INSERT column mapping (insert.slt), shared by
-        catalog and external targets: (source frame, source query, and per
-        target column in schema order ``(field, source column index or
-        None)``, None where a column list omits the column). Rejects
-        duplicate names in the column list and a source/target
-        column-count mismatch, which Spark's native INSERT lets through.
-        Plans the source only — no job."""
+        catalog and external targets: (source frame, its columns named by
+        position; source query; and per target column in schema order
+        ``(field, source column index or None)``, None where a column list
+        omits the column). Rejects duplicate names in the column list and a
+        source/target column-count mismatch, which Spark's native INSERT
+        lets through. Plans the source only — no job."""
         m = re.match(_INSERT_HEAD + r"\s*(.*)$", lx.text, re.IGNORECASE | re.DOTALL)
         collist, body = m.group(1), lx.derive(m.group(2).strip().rstrip(";"))
         schema = self.spark.table(target).schema
@@ -1482,7 +1496,7 @@ class SessionContext:
             raise ValueError(
                 f"Schema contains duplicate unqualified field name {dup}"
             )
-        src = self._spark_sql(body, args)
+        src = _by_position(self._spark_sql(body, args))
         if len(src.columns) != len(names):
             raise ValueError("Column count doesn't match insert query!")
         cols = [
@@ -1584,7 +1598,7 @@ class SessionContext:
         )
         defs = _split_top_level(ddl)
         # placeholders were already bound by sql(); go straight to Spark
-        src = self._spark_sql(body.derive(body.text.strip().rstrip(";")), args)
+        src = _by_position(self._spark_sql(body.derive(body.text.strip().rstrip(";")), args))
         if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE):
             src = src.coalesce(1)  # preserve literal-row order (see CTAS)
         cols = []

@@ -34,9 +34,12 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from py4j.clientserver import ClientServer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from arrow_datafusion_spark.sources.listing import read_listing
 
@@ -85,12 +88,6 @@ _RUNTIME_CONFS = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Arrow-accelerated pandas UDF exchange for the operators that need it.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # PySpark's DataFrame debugging captures a Python call site and pushes it
-    # to the JVM on EVERY DataFrame/Column API call (2+ extra py4j
-    # round-trips each) — measured ~0.1-0.2 s of pure plan-construction
-    # overhead per TPC-H query. Error messages lose the Python call-site
-    # annotation; the stack trace itself is unaffected.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -107,6 +104,13 @@ def build_spark(app: str = "arrow-datafusion-spark", cpus: int | None = None) ->
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
+        # PySpark's DataFrame debugging captures a Python call site and
+        # pushes it to the JVM on EVERY DataFrame/Column API call (2+ extra
+        # py4j round-trips each): ~0.1-0.2 s of plan construction per TPC-H
+        # query. Error messages lose the Python call-site annotation; the
+        # stack trace itself is unaffected. The conf is static: prepare()
+        # turns it off on other sessions through PySpark's own cache.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONFS.items():
         b = b.config(k, v)
@@ -120,21 +124,18 @@ def build_spark(app: str = "arrow-datafusion-spark", cpus: int | None = None) ->
 
 
 def prepare(spark: SparkSession) -> SparkSession:
-    """Idempotently apply runtime confs to an externally-built session."""
-    # The dataFrameDebugging conf above is read ONCE and cached Python-side;
-    # on an externally-built session (the driver's) the cache may already be
-    # True by the time prepare() runs, so seed it directly as well.
-    try:
-        from pyspark.errors import utils as _err_utils
+    """Idempotently apply runtime confs to an externally-built session: one
+    ``spark.conf.set`` round-trip per ``_RUNTIME_CONFS`` entry, ~1.5 ms a
+    call (4 cores). A static conf there would fail here on every session
+    (CANNOT_MODIFY_STATIC_CONFIG), so it goes in build_spark."""
+    # PySpark reads the static dataFrameDebugging conf once, into a
+    # Python-side cache; on an externally-built session (the driver's) that
+    # cache may already be True by now, so seed it directly.
+    from pyspark.errors import utils as _err_utils
 
-        _err_utils._enable_debugging_cache = False
-    except Exception:
-        pass
+    _err_utils._enable_debugging_cache = False
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime conf on this build — keep going
+        spark.conf.set(k, v)
     return spark
 
 
@@ -150,8 +151,10 @@ def session_key(spark: SparkSession) -> str:
 
 
 # DataFrame handles are immutable logical plans — memoize per (session, dir,
-# table): reading the 10 fixture tables afresh runs no Spark job but still
-# costs ~0.29 s of py4j round-trips per load_tables call (~4 ms memoized).
+# table): resolving and registering the 10 fixture tables afresh runs no
+# Spark job but costs ~0.23 s of py4j round-trips and file listing on one
+# thread, ~0.11 s on load_tables' pool (184 py4j calls; 4 cores, sf0.01). A
+# memoized load_tables call makes one py4j call (~0.1 ms).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -173,26 +176,28 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = read_listing(spark, "parquet", table_path(sf_dir, name))
+    return normalize_ts(df) if name == "events" else df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table, normalizing types (ts → TIMESTAMP)."""
+    """Read one testdata table, normalizing types (ts → TIMESTAMP); a memo
+    miss applies the runtime confs first (prepare)."""
     key = (session_key(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    prepare(spark)
-    df = read_listing(spark, "parquet", table_path(sf_dir, name))
-    if name == "events":
-        df = normalize_ts(df)
-    _TABLE_CACHE[key] = df
-    return df
+    if cached is None:
+        prepare(spark)
+        cached = _TABLE_CACHE[key] = _read_table(spark, sf_dir, name)
+    return cached
 
 
-# (session key, view name) → sf_dir it was last registered for. Re-registering the
-# same view on every load_tables call costs a py4j/catalog round-trip per
-# table per query (~0.09 s for the 10 fixture views); skip when nothing
-# changed. If a caller re-points a view name at different data behind our
-# back it must register its own view (SessionContext does — it never routes
-# through here).
+# (session key, view name) → sf_dir it was last registered for. Re-registering
+# the same view on every load_tables call costs a catalog round-trip per table
+# per query (~0.05-0.08 s for the 10 fixture views); skip when nothing
+# changed. If a caller re-points a view name at different data behind our back
+# it must register its own view, or forget its entry here first (SessionContext
+# does both: register_testdata drops its session's entries before loading).
 _VIEW_CACHE: dict[tuple[str, str], str] = {}
 
 
@@ -200,11 +205,38 @@ def load_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = ALL_TABLES
 ) -> dict[str, DataFrame]:
     """Load + register temp views (the `register_parquet` role of the
-    reference's ListingTable, datafusion/core/src/datasource/listing/table.rs:617)."""
-    out: dict[str, DataFrame] = {}
+    reference's ListingTable, datafusion/core/src/datasource/listing/table.rs:617).
+
+    The tables no earlier call memoized are resolved and registered after
+    one prepare(), two or more of them concurrently: in PySpark's
+    pinned-thread mode each pool thread drives its own JVM thread, so the
+    file listings and view analyses use the cores instead of queueing on
+    one py4j connection. The pool threads run in the caller's job group.
+    Memo hits and a single missing table stay on the calling thread."""
     sid = session_key(spark)
+    missing = [n for n in dict.fromkeys(names) if (sid, sf_dir, n) not in _TABLE_CACHE]
+    if missing:
+        prepare(spark)
+
+        def register(name: str) -> DataFrame:
+            df = _read_table(spark, sf_dir, name)
+            df.createOrReplaceTempView(name)
+            return df
+
+        if len(missing) == 1 or not isinstance(spark.sparkContext._gateway, ClientServer):
+            # without pinned threads (PYSPARK_PIN_THREAD=false) a pool thread
+            # would not carry the caller's job group
+            frames = [register(n) for n in missing]
+        else:
+            workers = min(len(missing), spark.sparkContext.defaultParallelism)
+            with ThreadPoolExecutor(workers) as pool:
+                frames = list(pool.map(inheritable_thread_target(spark)(register), missing))
+        for name, df in zip(missing, frames):
+            _TABLE_CACHE[(sid, sf_dir, name)] = df
+            _VIEW_CACHE[(sid, name)] = sf_dir
+    out: dict[str, DataFrame] = {}
     for name in names:
-        df = load_table(spark, sf_dir, name)
+        df = _TABLE_CACHE[(sid, sf_dir, name)]
         if _VIEW_CACHE.get((sid, name)) != sf_dir:
             df.createOrReplaceTempView(name)
             _VIEW_CACHE[(sid, name)] = sf_dir

@@ -88,7 +88,7 @@ def _apply_tuning(spark) -> None:
     (the reference's dfbench likewise runs a fixed-config runtime).
 
     MUST be (re-)applied AFTER the last cache-miss table load of a section:
-    session.prepare() runs inside every uncached load_table and re-asserts
+    session.prepare() runs on every load_table / load_tables memo miss and re-asserts
     the engine-default runtime confs (including adaptive.enabled=true), so
     tuning applied only at session build is silently reverted by warmup."""
     spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -10,6 +10,10 @@ column list. A local parquet table takes its schema from a footer read on
 the driver: registering one runs no Spark job, the schema equals Spark's
 own inference on every parquet file the tests read or write, and its
 nullability reaches DESCRIBE and ``information_schema.columns`` alike.
+``session.load_tables`` resolves the fixture tables on a thread pool that
+carries the caller's job group, registers them in the given session only,
+gives the frames and views a table-by-table read gives, and leaves no
+thread behind. An INSERT or CTAS reads its source columns by position.
 
 Every table's state sits in one record keyed by the lower-cased name, as
 Spark's catalog names it: a mixed-case name reads, inserts, drops and
@@ -133,6 +137,34 @@ def test_parenthesized_insert_source(ctx, tmp_path, external):
         ctx.spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+@pytest.mark.parametrize("external", [False, True], ids=["catalog", "external"])
+def test_insert_source_names_holding_a_dot(ctx, tmp_path, external):
+    # an un-aliased source column is named by its text (`1.5`,
+    # `CAST(2.5 AS INT)`): the source is read by position, not by that name
+    table = f"listing_dotted_{int(external)}"
+    ts = "TIMESTAMP '2020-01-01 00:00:00.123456'"
+    cols = "(a DOUBLE, b INT, c TIMESTAMP)"
+    if external:
+        ctx.sql(f"CREATE EXTERNAL TABLE {table} {cols} STORED AS PARQUET LOCATION '{tmp_path}/d/'")
+    else:
+        ctx.sql(f"CREATE TABLE {table} {cols}")
+    try:
+        want = ctx.sql(f"SELECT {ts}").collect()[0][0]
+        # generated names `1.5`, `CAST(2.5 AS INT)`, `TIMESTAMP '...123456'`;
+        # then two columns both named `2`
+        for src in (f"1.5, CAST(2.5 AS INT), {ts}", f"2, 2, {ts}"):
+            assert ctx.sql(f"INSERT INTO {table} SELECT {src}").collect() == [(1,)]
+        rows = ctx.sql(f"SELECT a, b, c FROM {table} ORDER BY a").collect()
+        assert [tuple(r) for r in rows] == [(1.5, 2, want), (2.0, 2, want)]
+    finally:
+        ctx.spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctx.sql("CREATE TABLE listing_dotted_ctas (a DOUBLE) AS SELECT 1.5")
+    try:
+        assert ctx.sql("SELECT a FROM listing_dotted_ctas").collect() == [(1.5,)]
+    finally:
+        ctx.spark.sql("DROP TABLE IF EXISTS listing_dotted_ctas")
+
+
 def test_package_reads_files_only_through_sources():
     """No ``spark.read.<format>`` outside ``sources/``: every parquet read
     goes through ``read_listing`` and its footer schema. No ``_records``
@@ -158,16 +190,23 @@ def test_package_reads_files_only_through_sources():
     assert found == []
 
 
+def _fixture_links(sf_dir: str, loc) -> str:
+    """A location no earlier load_tables call has memoized, holding the
+    fixture tables."""
+    from arrow_datafusion_spark.session import ALL_TABLES
+
+    os.makedirs(loc)
+    for t in ALL_TABLES:
+        os.symlink(f"{sf_dir}/{t}.parquet", f"{loc}/{t}.parquet")
+    return str(loc)
+
+
 def test_parquet_registration_runs_no_job(spark, ctx, sf_dir, tmp_path):
     from arrow_datafusion_spark.session import ALL_TABLES, load_tables
 
     sc = spark.sparkContext
-    # a location no earlier load_tables call has memoized
-    data = tmp_path / "fixtures"
-    data.mkdir()
-    for t in ALL_TABLES:
-        os.symlink(f"{sf_dir}/{t}.parquet", data / f"{t}.parquet")
-    tables, jobs = in_job_group(sc, lambda: load_tables(spark.newSession(), str(data)))
+    data = _fixture_links(sf_dir, tmp_path / "fixtures")
+    tables, jobs = in_job_group(sc, lambda: load_tables(spark.newSession(), data))
     assert (sorted(tables), jobs) == (sorted(ALL_TABLES), 0)
     _, jobs = in_job_group(
         sc, lambda: ctx.register_parquet("jobs_nation", f"{sf_dir}/nation.parquet")
@@ -529,18 +568,92 @@ def test_table_records_follow_the_catalog(spark, tmp_path):
         _drop_all(session)
 
 
-def test_load_tables_registers_in_each_session(spark, tmp_path):
+def test_load_tables_registers_in_each_session(spark, sf_dir, tmp_path):
     # a temp view belongs to one SparkSession, while every newSession()
-    # shares the applicationId: the load_tables memos key by session
+    # shares the applicationId: the load_tables memos key by session, and
+    # the pool registers the views in the session it was given only
+    from arrow_datafusion_spark.session import ALL_TABLES, load_tables
+
+    data = _fixture_links(sf_dir, tmp_path / "fixtures")
+    first, second = spark.newSession(), spark.newSession()
+    load_tables(first, data)
+    assert all(first.catalog.tableExists(t) for t in ALL_TABLES)
+    assert not any(second.catalog.tableExists(t) for t in ALL_TABLES)
+    load_tables(second, data, names=("region",))
+    for s in (first, second):
+        assert s.sql("SELECT count(*) FROM region").collect()[0][0] == 5
+
+
+def test_registration_jobs_run_in_the_callers_job_group(spark, sf_dir, tmp_path, monkeypatch):
+    # load_tables resolves the tables on a pool: its threads must carry the
+    # caller's job group, or the no-job check above would pass vacuously
+    from arrow_datafusion_spark import session
+
+    read = session._read_table
+
+    def counted(s, loc, name):
+        df = read(s, loc, name)
+        df.count()
+        return df
+
+    monkeypatch.setattr(session, "_read_table", counted)
+    sc = spark.sparkContext
+    pooled = _fixture_links(sf_dir, tmp_path / "pooled")
+    _, jobs = in_job_group(sc, lambda: session.load_tables(spark.newSession(), pooled))
+    alone = _fixture_links(sf_dir, tmp_path / "alone")
+    _, sequential = in_job_group(
+        sc, lambda: [counted(spark, alone, t) for t in session.ALL_TABLES]
+    )
+    assert jobs == sequential >= len(session.ALL_TABLES)
+
+
+def test_concurrent_registration_matches_the_sequential_read(spark, sf_dir, tmp_path):
+    # the pool's views and frames are what read_listing gives table by table
+    from arrow_datafusion_spark.session import ALL_TABLES, load_tables, normalize_ts
+    from arrow_datafusion_spark.sources.listing import read_listing
+
+    data = _fixture_links(sf_dir, tmp_path / "fixtures")
+    s = spark.newSession()
+    tables = load_tables(s, data)
+    assert list(tables) == list(ALL_TABLES)
+    views = [t.name for t in s.catalog.listTables() if t.isTemporary]
+    assert sorted(views) == sorted(ALL_TABLES)
+    for name, df in tables.items():
+        want = read_listing(s, "parquet", f"{data}/{name}.parquet")
+        if name == "events":
+            want = normalize_ts(want)
+        assert df.schema == want.schema == s.table(name).schema, name
+    assert dict(tables["events"].dtypes)["ts"] == "timestamp"
+
+
+def test_repeated_loads_leave_no_threads_behind(spark, sf_dir, tmp_path):
+    import threading
+
     from arrow_datafusion_spark.session import load_tables
 
-    # a location no earlier load_tables call has memoized
-    os.symlink(f"{SF_DIR}/region.parquet", f"{tmp_path}/region.parquet")
-    sessions = (spark.newSession(), spark.newSession())
-    for s in sessions:
-        load_tables(s, str(tmp_path), names=("region",))
-    for s in sessions:
-        assert s.sql("SELECT count(*) FROM region").collect()[0][0] == 5
+    s = spark.newSession()
+    before = threading.active_count()
+    for i in range(20):
+        load_tables(s, _fixture_links(sf_dir, tmp_path / str(i)))
+    assert threading.active_count() == before
+
+
+def test_a_failing_table_fails_the_load(spark, sf_dir, tmp_path):
+    from arrow_datafusion_spark.session import load_tables
+
+    data = _fixture_links(sf_dir, tmp_path / "fixtures")
+    os.remove(f"{data}/orders.parquet")
+    with pytest.raises(Exception, match="orders.parquet"):
+        load_tables(spark.newSession(), data)
+
+
+def test_runtime_confs_are_runtime(spark):
+    # prepare() sets every _RUNTIME_CONFS key on any session: a static
+    # conf there fails on one it did not build
+    from arrow_datafusion_spark.session import _RUNTIME_CONFS
+
+    assert [k for k in _RUNTIME_CONFS if not spark.conf.isModifiable(k)] == []
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_drop_and_replace_look_the_name_up(spark, monkeypatch):
