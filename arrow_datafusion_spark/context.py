@@ -59,11 +59,17 @@ from arrow_datafusion_spark.sources.sink import (
 from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex
 from arrow_datafusion_spark.sql.rewrite import (
     _TYPE_MAP,
+    REWRITE_PASSES,
+    Scope,
     _match_paren,
-    _rewrite_sql,
     _split_top_level,
+    run_passes,
 )
 from arrow_datafusion_spark.sql.typed import TYPED_PASSES, Relations
+
+# The front end's rewrite passes in run order: the type-aware ones, then
+# the stateless layer.
+PASSES = TYPED_PASSES + REWRITE_PASSES
 
 # SQL-macro definitions (Spark 4 SQL UDFs) registered once per session so
 # DataFusion's function names resolve inside ctx.sql() even where Spark's
@@ -92,8 +98,8 @@ _SQL_MACROS = (
     "RETURNS TIMESTAMP RETURN timestamp_micros(n)",
     "CREATE OR REPLACE TEMPORARY FUNCTION to_timestamp_nanos(n BIGINT) "
     "RETURNS TIMESTAMP RETURN timestamp_micros(n div 1000)",
-    # datafusion/functions-array aliases over Spark natives (array_has is a
-    # semantic _rewrite_sql rule — false for NULL needle, not a macro)
+    # datafusion/functions-array aliases over Spark natives (array_has is
+    # the semantic array_has pass — false for NULL needle, not a macro)
     "CREATE OR REPLACE TEMPORARY FUNCTION array_to_string(a ARRAY<STRING>, sep STRING) "
     "RETURNS STRING RETURN array_join(a, sep)",
     # NULL separator splits per character; EMPTY separator does NOT split
@@ -827,7 +833,7 @@ class SessionContext:
         Lex once: the statement is lexed (sql/lex.py) and every later step —
         memo bump, default-schema strip, dispatch, plan-time checks, each
         rewrite pass — reads that one shielded text and literal table;
-        ``_rewrite_sql`` restores the literals for ``spark.sql``.
+        ``_spark_sql`` restores the literals for ``spark.sql``.
 
         ``params`` binds ``$1`` (list) / ``$name`` (dict) placeholders (the
         ``Placeholder`` expression, datafusion/expr/src/expr.rs:925) as
@@ -2211,9 +2217,12 @@ class SessionContext:
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
         """Rewritten query → spark.sql, carrying bound parameters if any.
 
-        The type-aware passes (sql/typed.py TYPED_PASSES) and then
-        _rewrite_sql all read the lexed statement's shielded text, so none
-        of them can match function-call or operator text INSIDE a quoted
+        ``PASSES`` runs in one loop (``run_passes``): the type-aware
+        passes (sql/typed.py), then the stateless ones (sql/rewrite.py),
+        in their declared order. A pass runs only when its trigger matches
+        the text so far, so a trigger matches every text its pass would
+        change. Every pass reads the lexed statement's shielded text, so
+        none can match function-call or operator text INSIDE a quoted
         string ('select median(x)' stays text). A pass that emits a
         literal registers it on a private copy of the literal table."""
         pfad = self.settings.get_bool(
@@ -2235,11 +2244,7 @@ class SessionContext:
             rewritten = hit[0]
         else:
             work = lx.copy()
-            query = work.text
-            for _name, trigger, rewrite in TYPED_PASSES:
-                if trigger.search(query):
-                    query = rewrite(self, query, work, rel)
-            rewritten = _rewrite_sql(work.derive(query), pfad=pfad)
+            rewritten = work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
             if len(self._rw_cache) >= 512:  # bound a long session's memo
                 self._rw_cache.clear()
             self._rw_cache[memo_key] = (

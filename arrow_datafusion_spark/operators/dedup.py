@@ -5,9 +5,9 @@ Scale design (the 100 TB contract):
   16-byte digest. MinHash candidate generation is a self-equi-join on
   (band_id, band_key) — only documents sharing an LSH bucket ever meet, so
   the shuffle carries (doc_id, 4 band keys) per doc, not O(n²) pairs.
-- All hashing is md5 (JVM builtin, whole-stage codegen) so the same
-  computation is expressible in the DuckDB oracle and is cluster-deterministic
-  (no Python, no seed state on executors).
+- All hashing is md5 so the same computation is expressible in the
+  DuckDB oracle (queries/llm.py DEDUP_MINHASH_SQL, the reference MinHash
+  construction) and is cluster-deterministic (no seed state on executors).
 
 Reference has no dedup operator; the MinHash construction follows the
 classic Broder scheme (shingle → k independent min-hashes → banded LSH).
@@ -22,9 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "char_shingles",
-    "minhash_signature",
-    "lsh_band_keys",
     "exact_dedup_groups",
     "minhash_candidate_pairs",
     "minhash_near_duplicates",
@@ -35,53 +32,6 @@ __all__ = [
     "word_ngrams_arrow",
     "ngram_jaccard_pairs",
 ]
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-grams of ``text`` (the MinHash universe)."""
-    n = F.greatest(F.char_length(text) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substr(text, i, F.lit(k)))
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> list[Column]:
-    """num_hashes independent min-hashes over the shingle set.
-
-    One md5('<seed>:' || shingle) yields EIGHT independent 16-bit hash
-    functions (the eight 4-hex-char slices of the digest), so ceil(n/8) md5
-    calls per shingle instead of n. 16 bits is plenty for min-hashing: a
-    ~300-shingle document min-samples a 65,536-value space (≈0.5% in-doc
-    collision rate, band false-positive ≈ (300/65536)^4 ≈ 6e-10), and the
-    md5 count — the dominant CPU and JVM-garbage source at corpus scale —
-    halves vs 32-bit slices. Each min is a plain MIN that survives partial
-    aggregation (computed map-side at 100 TB).
-    """
-    # NB: closure factories, not `lambda sh, s=s:` — PySpark derives the
-    # HOF's arity from the python lambda's full parameter list, so a default
-    # arg would silently receive the element-index column.
-    sig: list[Column] = []
-    for s in range((num_hashes + 7) // 8):
-        digests = F.transform(shingles, _seeded(s))
-        for j in range(min(8, num_hashes - 8 * s)):
-            sig.append(F.array_min(F.transform(digests, _slicer(j))))
-    return sig
-
-
-def lsh_band_keys(sig: list[Column], rows_per_band: int = 4) -> Column:
-    """Group the signature into bands; each band hashes to one bucket key.
-
-    Two docs collide in band b iff their signatures agree on ALL rows of the
-    band — the standard (b, r) S-curve: P(collision) = 1 - (1 - j^r)^b for
-    Jaccard j. Returns array<struct<band int, key string>> to explode.
-    """
-    bands = []
-    for b in range(0, len(sig), rows_per_band):
-        key = F.md5(F.concat_ws("|", *sig[b : b + rows_per_band]))
-        bands.append(
-            F.struct(F.lit(b // rows_per_band).alias("band"), key.alias("key"))
-        )
-    return F.array(*bands)
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -102,110 +52,25 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _seeded(s: int):
-    prefix = f"{s}:"
-    return lambda sh: F.md5(F.concat(F.lit(prefix), sh))
-
-
-def _slicer(j: int):
-    # 4-hex-char (16-bit) slice j of an md5 digest — see minhash_signature
-    return lambda m: F.substring(m, 1 + 4 * j, 4)
-
-
 _SIG_UDFS: dict[tuple, "object"] = {}
 
 
-def _fast_band_udf(k: int, num_hashes: int, rows_per_band: int):
-    """Vectorized NON-crypto signature→band kernel (``kernel="fast"``).
-
-    The r10 profile (tools/profile_minhash.py, 10× corpus) attributed the
-    minhash wall to Python-worker compute in the md5 kernel — executor
-    run 239 s vs 2.8 s of shuffle I/O — so the headroom is hashing, not
-    exchange. This variant derives each gram's ``num_hashes`` 16-bit
-    values from one crc32 via affine maps over a 61-bit Mersenne prime
-    (the classic MinHash hash family, A-range reduced so the products
-    stay exact in uint64), all in one numpy broadcast per document:
-    grams → crc32 vector (C-speed zlib) → ``(crc·A + B) mod M`` matrix →
-    column-min → per-band blake2b-64 keys.
-
-    Mixing is what MinHash bucketing needs (distinct well-spread values
-    per seed); outputs are NOT byte-compatible with the md5
-    construction, so the DuckDB-oracled driver entry keeps ``md5`` — this
-    kernel is the production path where cross-engine reproducibility of
-    BUCKETS (not verified pairs) doesn't matter. Verified near-duplicate
-    output remains exact-Jaccard either way."""
-    key = ("fast", k, num_hashes, rows_per_band)
-    cached = _SIG_UDFS.get(key)
-    if cached is not None:
-        return cached
-    nbands = (num_hashes + rows_per_band - 1) // rows_per_band
-
-    def batch(texts):
-        import zlib
-        from hashlib import blake2b
-
-        import numpy as np
-        import pandas as pd
-
-        # A < 2^31 keeps crc·A exactly representable in uint64 (crc <
-        # 2^32 → product < 2^63), so the mod is the TRUE affine map, not
-        # a wrapped one; M = 2^61-1 (Mersenne prime)
-        M = (1 << 61) - 1
-        rng = np.random.default_rng(0xDEDD)
-        A = rng.integers(1, 1 << 31, size=num_hashes, dtype=np.uint64)
-        B = rng.integers(0, M, size=num_hashes, dtype=np.uint64)
-        # worker-global, PID-guarded (see _minhash_band_udf's cache note)
-        from arrow_datafusion_spark import worker
-
-        crc_cache = worker.shared_dict(("mh_crc", k))
-        crc32 = zlib.crc32
-        bands, ngs = [], []
-        for t in texts:
-            grams = {t[i : i + k] for i in range(max(len(t) - k + 1, 1))}
-            if len(crc_cache) >= 2_000_000:  # bounded under open vocab
-                crc_cache.clear()
-            crcs = np.fromiter(
-                (
-                    crc_cache.get(g) or crc_cache.setdefault(g, crc32(g.encode()) + 1)
-                    for g in grams
-                ),
-                dtype=np.uint64,
-                count=len(grams),
-            )
-            # (crc·A + B) mod M, elementwise over grams×hashes; object
-            # dtype avoided by staying in uint64 (mod keeps it in range)
-            m = (crcs[:, None] * A[None, :] + B[None, :]) % M
-            mins = m.min(axis=0).astype(np.uint16)  # low 16 bits
-            hb = mins.tobytes()
-            w = 2 * rows_per_band
-            bands.append(
-                [
-                    blake2b(hb[b * w : (b + 1) * w], digest_size=8).hexdigest()
-                    for b in range(nbands)
-                ]
-            )
-            ngs.append(len(grams))  # for the candidate-stage prune
-        return pd.DataFrame({"bands": bands, "ng": ngs})
-
-    udf = _SIG_UDFS[key] = F.pandas_udf(
-        batch, "struct<bands: array<string>, ng: int>"
-    )
-    return udf
-
-
 def _minhash_band_udf(k: int, num_hashes: int, rows_per_band: int):
-    """Fused Arrow-batched signature→band-key kernel, byte-identical to the
-    unfused construction: distinct char k-grams → md5('<seed>:'||gram) →
-    min of each 4-hex slice → md5('s1|s2|..') per band. Emits the band
-    keys DIRECTLY (array<string>, one per band) so the plan never ships
-    the num_hashes-element signature array or runs a JVM md5/concat layer
-    — posexplode on the result is the whole banding stage.
+    """Fused Arrow-batched signature→band-key kernel, byte-identical to
+    queries/llm.py DEDUP_MINHASH_SQL: distinct char k-grams →
+    md5('<seed>:'||gram) → min of each 4-hex slice → md5('s1|s2|..') per
+    band. One md5 yields eight 16-bit hash functions (its eight 4-hex
+    slices), and 16 bits suffice for min-hashing: a ~300-gram document
+    samples a 65,536-value space (band false positive ≈ (300/65536)^4).
+    Emits the band keys DIRECTLY (array<string>, one per band) so the plan
+    never ships the num_hashes-element signature array or runs a JVM
+    md5/concat layer — posexplode on the result is the whole banding stage.
 
     Per-gram digest slices are memoized ACROSS batches (python workers are
     reused): common k-grams dominate any real corpus, so the md5 work per
     doc collapses to dict hits + one vectorized np.min. Capped so worker
     RSS stays bounded; lowercase-hex lexicographic min == numeric min, so
-    the uint16 min is exactly the string min of the unfused form.
+    the uint16 min is exactly the string min of the SQL form.
     See minhash_candidate_pairs for why this is a UDF at all.
     Memoized per (k, num_hashes, rows_per_band) so repeated queries reuse
     one UDF object (stable pickle payload across plans).
@@ -307,7 +172,6 @@ def minhash_candidate_pairs(
     k: int = 5,
     num_hashes: int = 16,
     rows_per_band: int = 4,
-    kernel: str = "md5",
     prune_threshold: float | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) via bucket grouping — the scalable
@@ -331,11 +195,7 @@ def minhash_candidate_pairs(
     # hex, so the construction stays engine-exact vs the DuckDB oracle while
     # running ~5× faster. This is the sanctioned UDF exception: built-in
     # operators genuinely can't express the semantics efficiently.
-    band_udf = (
-        _fast_band_udf(k, num_hashes, rows_per_band)
-        if kernel == "fast"
-        else _minhash_band_udf(k, num_hashes, rows_per_band)
-    )
+    band_udf = _minhash_band_udf(k, num_hashes, rows_per_band)
     banded = (
         _spread(df, id_col)
         .select(F.col(id_col).alias("doc"), band_udf(F.col(text_col)).alias("s"))
@@ -395,7 +255,6 @@ def minhash_near_duplicates(
     k: int = 5,
     num_hashes: int = 16,
     rows_per_band: int = 4,
-    kernel: str = "md5",
 ) -> DataFrame:
     """Candidate pairs verified by exact Jaccard over shingle sets.
 
@@ -409,7 +268,7 @@ def minhash_near_duplicates(
     # tiny (LSH collisions only), while its parent subtree (signatures +
     # bucket join over the whole corpus) is the expensive part.
     pairs = minhash_candidate_pairs(
-        df, id_col, text_col, k, num_hashes, rows_per_band, kernel,
+        df, id_col, text_col, k, num_hashes, rows_per_band,
         prune_threshold=threshold,
     ).localCheckpoint(eager=True)
 

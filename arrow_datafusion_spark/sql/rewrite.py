@@ -1,8 +1,20 @@
 """The rewrite layer of the SQL front end: the PostgreSQL-isms DataFusion
 accepts but Spark SQL rejects, rewritten over a lexed statement's shielded
 text (``sql/lex.py``) before ``SessionContext`` hands it to ``spark.sql``.
-``_rewrite_sql`` is the entry point; ``SessionContext``'s schema-reading
-passes run before it and use the same call rewriter.
+
+The layer is ``REWRITE_PASSES``, an ordered tuple of ``Pass(name, trigger,
+fn, cites)`` records; the type-aware passes (``sql/typed.py``
+``TYPED_PASSES``) are the same records, and ``run_passes`` runs both in
+one loop. The pass contract:
+
+- **the order is fixed**: a pass sees the text every earlier pass left,
+  so the order is behaviour;
+- **a trigger matches every text its pass would change**: ``fn`` runs only
+  when ``trigger`` matches, so a statement skips the passes it has no
+  surface for. A one-``rewrite_calls`` pass's trigger is its call pattern
+  and a one-``re.sub`` pass's is its own pattern; a pass of several
+  regexes has a keyword every one of them needs;
+- ``cites`` names the slt goldens (``file:line``) the pass reproduces.
 
 This module is the only one that finds and replaces function calls.
 ``rewrite_calls(q, names, fn)`` is the primitive, and its contract is:
@@ -17,9 +29,8 @@ This module is the only one that finds and replaces function calls.
   of a name it handles (``array_append`` lowers onto Spark's own
   ``array_append``) and the scan resumes after it.
 
-A pass whose rewrite must see another function's output runs as its own
-``rewrite_calls`` step after it; the step order in ``_rewrite_sql`` is
-behaviour. Three scans still use ``_find_call``, because they read or
+A rewrite that must see another function's output is its own pass after
+it. Three scans still use ``_find_call``, because they read or
 edit text outside the call's own span; each says so where it calls it.
 """
 
@@ -27,7 +38,8 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
-from functools import lru_cache
+from functools import lru_cache, partial
+from typing import NamedTuple
 
 from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, quote
 
@@ -46,7 +58,7 @@ _TYPE_MAP = {
 
 # SQL-level list_* → array_* renames: semantics verified identical between
 # the DataFusion alias and the Spark native (1-based positions, sort order,
-# set-op multiplicity). See _rewrite_sql.
+# set-op multiplicity). See the list_aliases pass.
 _SQL_LIST_ALIASES = {
     "list_sort": "array_sort",
     "list_distinct": "array_distinct",
@@ -117,7 +129,7 @@ def _match_paren(q: str, i: int) -> int | None:
     return None
 
 
-def _wrap_values(q: str) -> str:
+def _wrap_values(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Rename inline-VALUES columns to the reference's names: DataFusion
     derives ``column1..columnN`` (sql/src/planner.rs values planning) where
     Spark derives ``col1..colN``. Each ``VALUES (..), (..)`` list becomes
@@ -177,20 +189,24 @@ _FRAMELESS_WINDOW_FNS = (
 )
 
 
-def _spec_has_order_by(spec: str) -> bool:
+_ORDER_BY = r"\bORDER\s+BY\b"
+
+
+def _top_level(s: str, keyword: str) -> tuple[int, int] | None:
+    """(start, end) of the first depth-0 match of ``keyword`` in ``s``."""
     depth = 0
-    for m in re.finditer(r"[()\[\]]|\bORDER\s+BY\b", spec, re.IGNORECASE):
+    for m in re.finditer(rf"[()\[\]]|{keyword}", s, re.IGNORECASE):
         t = m.group(0)
         if t in "([":
             depth += 1
         elif t in ")]":
             depth -= 1
         elif depth == 0:
-            return True
-    return False
+            return m.start(), m.end()
+    return None
 
 
-def _strip_rank_frames(q: str) -> str:
+def _strip_rank_frames(q: str, _lx: Lexed, _scope: Scope) -> str:
     for fn in _FRAMELESS_WINDOW_FNS:
         pos = 0
         while True:
@@ -213,23 +229,13 @@ def _strip_rank_frames(q: str) -> str:
             spec = q[o_open + 1 : o_close]
             # first top-level frame keyword starts the frame clause, which
             # is always the final window-spec component
-            depth = 0
-            cut = None
-            for wm in re.finditer(r"[()\[\]]|\b(ROWS|RANGE|GROUPS)\b", spec, re.IGNORECASE):
-                t = wm.group(0)
-                if t in "([":
-                    depth += 1
-                elif t in ")]":
-                    depth -= 1
-                elif depth == 0:
-                    cut = wm.start()
-                    break
+            cut = _top_level(spec, r"\b(?:ROWS|RANGE|GROUPS)\b")
             if cut is not None:
-                spec = spec[:cut].rstrip()
+                spec = spec[: cut[0]].rstrip()
             # DataFusion runs ranking/offset functions over an UNORDERED
             # window (natural order; all rows peers for rank) where Spark
             # demands an ORDER BY — a constant key reproduces exactly that
-            if not _spec_has_order_by(spec):
+            if _top_level(spec, _ORDER_BY) is None:
                 spec = (spec.rstrip() + " ORDER BY 1").lstrip()
             if spec != q[o_open + 1 : o_close]:
                 q = q[: o_open + 1] + spec + q[o_close:]
@@ -237,7 +243,7 @@ def _strip_rank_frames(q: str) -> str:
     return q
 
 
-def _fix_window_specs(q: str) -> str:
+def _fix_window_specs(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Frame-spec forms DataFusion accepts but Spark rejects, applied to
     EVERY ``OVER (...)``:
 
@@ -308,7 +314,7 @@ def _t_element(p):
 
 
 def _t_slice(p):
-    # re-emit as a subscript; _rewrite_subscripts (which runs later)
+    # re-emit as a subscript; _subscripts (which runs later)
     # supplies the 1-based/negative-end/NULL-to-[] semantics
     return f"({p[0]})[{p[1]}:{p[2]}]"
 
@@ -524,20 +530,17 @@ _ARRAY_FN_TEMPLATES = {
 _ARRAY_FNS = tuple(_ARRAY_FN_TEMPLATES)
 
 
-def _rewrite_array_fns(q: str) -> str:
-    def call(fn: str, parts: list[str], _after: str) -> str | None:
-        arities, template = _ARRAY_FN_TEMPLATES[fn]
-        if len(parts) not in arities:
-            return None
-        try:
-            return template(parts)
-        except Exception:
-            return None
-
-    return rewrite_calls(q, _ARRAY_FNS, call)
+def _array_fns(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    arities, template = _ARRAY_FN_TEMPLATES[fn]
+    if len(parts) not in arities:
+        return None
+    try:
+        return template(parts)
+    except Exception:
+        return None
 
 
-def _rewrite_subscripts(q: str, lx: Lexed) -> str:
+def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
     """DataFusion's postfix subscript operators (sql/src/expr/mod.rs array
     indexing): ``x[i]`` is 1-BASED with NULL out of range; ``x[a:b]`` is an
     inclusive 1-based slice with negative ends counting from the back.
@@ -638,7 +641,7 @@ def _rewrite_subscripts(q: str, lx: Lexed) -> str:
     return q
 
 
-def _rewrite_unnest(q: str) -> str:
+def _unnest(q: str, _lx: Lexed, _scope: Scope) -> str:
     """unnest → Spark generators, for the shapes a generator can express:
 
     - table-function form ``FROM unnest(e)`` → a one-row derived table
@@ -689,24 +692,10 @@ def _rewrite_unnest(q: str) -> str:
     return q
 
 
-def _top_level_order_by(s: str) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0 ORDER BY keyword in ``s``."""
-    depth = 0
-    for m in re.finditer(r"[()\[\]]|\bORDER\s+BY\b", s, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return m.start(), m.end()
-    return None
-
-
 _ORDERED_AGG_FNS = ("array_agg", "first_value", "last_value", "nth_value")
 
 
-def _rewrite_ordered_aggs(q: str) -> str:
+def _ordered_aggs(_lx: Lexed, fn: str, args: list[str], after: str) -> str | None:
     """Ordered-set aggregates — ``agg(expr ORDER BY keys)`` in a GROUP BY
     context (reference: array_agg.rs / first_last.rs / nth_value.rs order
     clauses). Spark has no ORDER BY inside aggregate args, but the
@@ -714,67 +703,63 @@ def _rewrite_ordered_aggs(q: str) -> str:
     with a comparator encoding each key's direction and null placement,
     project the values. first/last/nth are element lookups on the sorted
     array (try_element_at: out-of-range → NULL)."""
-
-    def call(fn: str, args: list[str], after: str) -> str | None:
-        if re.match(
-            r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?(?:OVER|WITHIN)\b",
-            after,
-            re.IGNORECASE,
-        ):
-            return None  # window/WITHIN-GROUP form, not the agg-arg form
-        argstr = ", ".join(args)
-        ob = _top_level_order_by(argstr)
-        if ob is None:
-            return None
-        head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
-        if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
-            return None
-        exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
-        if not exprs:
-            return None
-        keys = []
-        for it in (x.strip() for x in _split_top_level(sortseg)):
-            if not it:
-                continue
-            mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
-            nulls = mnf.group(1).upper() if mnf else None
-            core = it[: mnf.start()].strip() if mnf else it
-            md = re.search(r"\b(ASC|DESC)\s*$", core, re.IGNORECASE)
-            desc = bool(md and md.group(1).upper() == "DESC")
-            core = core[: md.start()].strip() if md else core
-            if nulls is None:  # Postgres default: ASC→LAST, DESC→FIRST
-                nulls = "FIRST" if desc else "LAST"
-            keys.append((core, desc, nulls))
-        val = exprs[0]
-        fields = ", ".join(
-            [f"({val}) AS __v"]
-            + [f"({k[0]}) AS __k{i}" for i, k in enumerate(keys)]
-        )
-        cases = []
-        for i, (_kx, desc, nulls) in enumerate(keys):
-            nl = -1 if nulls == "FIRST" else 1
-            lt, gt = (1, -1) if desc else (-1, 1)
-            cases += [
-                f"WHEN l.__k{i} IS NULL AND r.__k{i} IS NOT NULL THEN {nl}",
-                f"WHEN r.__k{i} IS NULL AND l.__k{i} IS NOT NULL THEN {-nl}",
-                f"WHEN l.__k{i} < r.__k{i} THEN {lt}",
-                f"WHEN l.__k{i} > r.__k{i} THEN {gt}",
-            ]
-        cmp_sql = "(l, r) -> CASE " + " ".join(cases) + " ELSE 0 END"
-        sorted_vals = (
-            f"transform(array_sort(collect_list(struct({fields})), "
-            f"{cmp_sql}), s -> s.__v)"
-        )
-        if fn == "array_agg":
-            return sorted_vals
-        if fn == "first_value":
-            return f"try_element_at({sorted_vals}, 1)"
-        if fn == "last_value":
-            return f"try_element_at({sorted_vals}, -1)"
-        n_arg = exprs[1] if len(exprs) > 1 else "1"  # nth_value(expr, n ORDER BY ...)
-        return f"try_element_at({sorted_vals}, {n_arg})"
-
-    return rewrite_calls(q, _ORDERED_AGG_FNS, call)
+    if re.match(
+        r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s*)?(?:OVER|WITHIN)\b",
+        after,
+        re.IGNORECASE,
+    ):
+        return None  # window/WITHIN-GROUP form, not the agg-arg form
+    argstr = ", ".join(args)
+    ob = _top_level(argstr, _ORDER_BY)
+    if ob is None:
+        return None
+    head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
+    if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
+        return None
+    exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
+    if not exprs:
+        return None
+    keys = []
+    for it in (x.strip() for x in _split_top_level(sortseg)):
+        if not it:
+            continue
+        mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
+        nulls = mnf.group(1).upper() if mnf else None
+        core = it[: mnf.start()].strip() if mnf else it
+        md = re.search(r"\b(ASC|DESC)\s*$", core, re.IGNORECASE)
+        desc = bool(md and md.group(1).upper() == "DESC")
+        core = core[: md.start()].strip() if md else core
+        if nulls is None:  # Postgres default: ASC→LAST, DESC→FIRST
+            nulls = "FIRST" if desc else "LAST"
+        keys.append((core, desc, nulls))
+    val = exprs[0]
+    fields = ", ".join(
+        [f"({val}) AS __v"]
+        + [f"({k[0]}) AS __k{i}" for i, k in enumerate(keys)]
+    )
+    cases = []
+    for i, (_kx, desc, nulls) in enumerate(keys):
+        nl = -1 if nulls == "FIRST" else 1
+        lt, gt = (1, -1) if desc else (-1, 1)
+        cases += [
+            f"WHEN l.__k{i} IS NULL AND r.__k{i} IS NOT NULL THEN {nl}",
+            f"WHEN r.__k{i} IS NULL AND l.__k{i} IS NOT NULL THEN {-nl}",
+            f"WHEN l.__k{i} < r.__k{i} THEN {lt}",
+            f"WHEN l.__k{i} > r.__k{i} THEN {gt}",
+        ]
+    cmp_sql = "(l, r) -> CASE " + " ".join(cases) + " ELSE 0 END"
+    sorted_vals = (
+        f"transform(array_sort(collect_list(struct({fields})), "
+        f"{cmp_sql}), s -> s.__v)"
+    )
+    if fn == "array_agg":
+        return sorted_vals
+    if fn == "first_value":
+        return f"try_element_at({sorted_vals}, 1)"
+    if fn == "last_value":
+        return f"try_element_at({sorted_vals}, -1)"
+    n_arg = exprs[1] if len(exprs) > 1 else "1"  # nth_value(expr, n ORDER BY ...)
+    return f"try_element_at({sorted_vals}, {n_arg})"
 
 
 _SORT_TERMINATORS = frozenset(
@@ -795,7 +780,7 @@ _SORT_TERMINATORS = frozenset(
 )
 
 
-def _add_null_ordering(q: str) -> str:
+def _add_null_ordering(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Make the reference's (Postgres) default sort null-placement explicit:
     ASC → NULLS LAST, DESC → NULLS FIRST (planner `nulls_first = !asc`).
     Spark's defaults are the opposite (NULLS FIRST for ASC), which flips
@@ -1020,11 +1005,11 @@ def _validate_arrow_tz(tz: str) -> None:
         ) from None
 
 
-def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
+def _arrow_calls(q: str, lx: Lexed, scope: Scope) -> str:
     """arrow_cast(expr, 'Type') → CAST / expression; arrow_typeof(expr) →
     Arrow-name lookup over typeof(). Runs on a string-shielded query;
-    ``lx`` resolves the shielded type-name literal. ``pfad`` carries the
-    session's sql_parser.parse_float_as_decimal setting (it changes the
+    ``lx`` resolves the shielded type-name literal. ``scope.pfad`` carries
+    the session's sql_parser.parse_float_as_decimal setting (it changes the
     reference's LITERAL typing, which arrow_typeof resolves statically)."""
 
     def cast(_fn: str, parts: list[str], _after: str) -> str | None:
@@ -1155,7 +1140,7 @@ def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
                 return "'Int64'"
             if 0 <= v < 2**64:
                 return "'UInt64'"
-            return f"'Decimal128({len(str(abs(v)))}, 0)'" if pfad else "'Float64'"
+            return f"'Decimal128({len(str(abs(v)))}, 0)'" if scope.pfad else "'Float64'"
         # exact-name map first; parameterized decimals fall through to a
         # regexp rename (decimal(p,s) → Decimal128(p, s)); anything else
         # keeps its Spark name (documented §1.2 display fallback)
@@ -1181,7 +1166,7 @@ def _rewrite_arrow_calls(q: str, lx: Lexed, pfad: bool = False) -> str:
     )
 
 
-def _rewrite_array_literals(q: str) -> str:
+def _array_literals(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Postgres ``array[...]`` literals → Spark ``array(...)`` calls
     (string literals must already be shielded). Subscripts like
     ``expr[1]`` are untouched — only the ``array`` keyword form matches."""
@@ -1202,11 +1187,11 @@ def _rewrite_array_literals(q: str) -> str:
         q = q[:m.start()] + "array(" + inner + ")" + q[i:]
 
 
-def _rewrite_bracket_literals(q: str) -> str:
+def _bracket_literals(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Bare ``[1, 2, 3]`` array literals (DuckDB-style, accepted by the
     reference's parser) → ``array(...)``. A bracket is a LITERAL when it
     does not follow a value expression (identifier/closing paren/bracket)
-    — otherwise it is a subscript and left for _rewrite_subscripts."""
+    — otherwise it is a subscript and left for _subscripts."""
     i = 0
     while i < len(q):
         if q[i] != "[":
@@ -1239,42 +1224,115 @@ def _rewrite_bracket_literals(q: str) -> str:
     return q
 
 
-def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
-    """Rewrite the PostgreSQL-isms DataFusion accepts but Spark SQL rejects.
+class Scope(NamedTuple):
+    """What a pass may read besides the statement: the session and the
+    statement's ``Relations`` (the type-aware passes, sql/typed.py) and
+    the session's sql_parser.parse_float_as_decimal setting."""
 
-    Spark 4 already handles ``::`` casts, ``||`` concat, and ANSI intervals,
-    so only a short list remains. The rewrites read the lexed statement's
-    shielded text, so none can touch quoted text; the literals are restored
-    on return.
-    """
+    ctx: object = None
+    rel: object = None
+    pfad: bool = False
+
+
+class Pass(NamedTuple):
+    """One rewrite pass. ``fn(q, lx, scope)`` returns the rewritten
+    shielded text; it runs only when ``trigger`` matches the text the
+    earlier passes left. ``cites`` names the slt goldens it reproduces."""
+
+    name: str
+    trigger: re.Pattern
+    fn: Callable[[str, Lexed, Scope], str]
+    cites: tuple[str, ...] = ()
+
+
+def run_passes(passes: tuple[Pass, ...], lx: Lexed, scope: Scope) -> str:
+    """``lx``'s shielded text after ``passes``, in order."""
     q = lx.text
+    for p in passes:
+        if p.trigger.search(q):
+            q = p.fn(q, lx, scope)
+    return q
 
-    # double-quoted IDENTIFIERS (SQL standard / Postgres — the reference
-    # never treats "..." as a string) → Spark backticks
-    q = re.sub(r'"([^"]*)"', lambda m: f"`{m.group(1)}`", q)
 
+# The stateless passes, declared in run order by the helpers below.
+_PASSES: list[Pass] = []
+
+
+def _pass(trigger: str, *, cites: tuple[str, ...] = ()):
+    """Declare ``fn(q, lx, scope)`` as the next pass, run when the
+    case-insensitive ``trigger`` matches."""
+
+    def declare(fn):
+        trig = re.compile(trigger, re.IGNORECASE)
+        _PASSES.append(Pass(fn.__name__.lstrip("_"), trig, fn, cites))
+        return fn
+
+    return declare
+
+
+def _calls(names: str | tuple[str, ...], *, cites: tuple[str, ...] = ()):
+    """Declare ``fn(lx, name, args, after)`` as the next pass: one
+    ``rewrite_calls`` of ``names``, whose call pattern is the trigger."""
+    pat = _call_pattern((names,) if isinstance(names, str) else names)
+
+    def declare(fn):
+        def run(q: str, lx: Lexed, _scope: Scope) -> str:
+            return _rewrite_span(q, 0, len(q), pat, partial(fn, lx))
+
+        _PASSES.append(Pass(fn.__name__.lstrip("_"), pat, run, cites))
+        return fn
+
+    return declare
+
+
+def _sub(name: str, pattern: str, repl, *, cites: tuple[str, ...] = ()):
+    """Declare a one-``re.sub`` pass; its pattern (case-insensitive) is the
+    trigger. A callable ``repl`` is called as ``repl(match, lx)``."""
+    pat = re.compile(pattern, re.IGNORECASE)
+
+    def run(q: str, lx: Lexed, _scope: Scope) -> str:
+        return pat.sub((lambda m: repl(m, lx)) if callable(repl) else repl, q)
+
+    _PASSES.append(Pass(name, pat, run, cites))
+
+
+# -- the stateless passes, in run order --------------------------------------
+#
+# Spark 4 already handles ``::`` casts, ``||`` concat, and ANSI intervals,
+# so only the PostgreSQL-isms below remain.
+
+# double-quoted IDENTIFIERS (SQL standard / Postgres — the reference
+# never treats "..." as a string) → Spark backticks
+_sub("quoted_identifiers", r'"([^"]*)"', lambda m, _lx: f"`{m.group(1)}`")
+
+
+@_pass("~")
+def _regex_match_ops(q: str, lx: Lexed, _scope: Scope) -> str:
     # a !~ b / a ~* b / a ~ b  →  (NOT) a RLIKE b  (case-insensitive via (?i))
-    if "~" in q:
-        ci = lx.add("'(?i)'")
-        q = re.sub(r"!~\*", f" NOT RLIKE {ci} || ", q)
-        q = re.sub(r"!~", " NOT RLIKE ", q)
-        q = re.sub(r"~\*", f" RLIKE {ci} || ", q)
-        q = re.sub(r"(?<![<>!=\^])~(?!=)", " RLIKE ", q)
+    ci = lx.add("'(?i)'")
+    q = re.sub(r"!~\*", f" NOT RLIKE {ci} || ", q)
+    q = re.sub(r"!~", " NOT RLIKE ", q)
+    q = re.sub(r"~\*", f" RLIKE {ci} || ", q)
+    return re.sub(r"(?<![<>!=\^])~(?!=)", " RLIKE ", q)
 
-    # `interval '5' years|months|hours`: sqlparser-rs does NOT accept
-    # these plural words as interval units — the word becomes a column
-    # ALIAS and the unit-less string parses as SECONDS (interval.slt:40
-    # documents the Postgres-matching quirk: "years is parsed as a column
-    # name"). Spark accepts the plurals as real units, so rewrite to the
-    # reference's parse. (Plural milliseconds/microseconds/nanoseconds ARE
-    # units in sqlparser — untouched.)
-    q = re.sub(
-        rf"\bINTERVAL\s+({LIT})\s+(years|months|hours)\b",
-        r"(INTERVAL \1) AS \2",
-        q,
-        flags=re.IGNORECASE,
-    )
 
+# `interval '5' years|months|hours`: sqlparser-rs does NOT accept
+# these plural words as interval units — the word becomes a column
+# ALIAS and the unit-less string parses as SECONDS (interval.slt:40
+# documents the Postgres-matching quirk: "years is parsed as a column
+# name"). Spark accepts the plurals as real units, so rewrite to the
+# reference's parse. (Plural milliseconds/microseconds/nanoseconds ARE
+# units in sqlparser — untouched.)
+_sub(
+    "interval_plural_alias",
+    rf"\bINTERVAL\s+({LIT})\s+(years|months|hours)\b",
+    r"(INTERVAL \1) AS \2",
+    cites=("interval.slt:40",),
+)
+
+
+@_pass("<<|>>", cites=("scalar.slt:1059",))
+def _xor_shift_precedence(q: str, _lx: Lexed, _scope: Scope) -> str:
     # operator precedence: the reference parses `^` (XOR) TIGHTER than
     # `>>`/`<<` (sqlparser-rs PG-style: additive > xor > shift), Spark the
     # reverse — re-group simple-token xor chains adjacent to a shift so
@@ -1297,50 +1355,52 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     q = re.sub(
         rf"((?:{_tok})(?:\s*\^\s*{_tok})+)\s*(>>|<<)", r"(\1) \2", q
     )
-    q = re.sub(
+    return re.sub(
         rf"(>>|<<)(\s*)(-?\s*(?:{_tok})(?:\s*\^\s*{_tok})+)(?!\s*\^)",
         r"\1\2(\3)",
         q,
     )
 
-    # (these two rewrites run BEFORE any internal lowering below —
-    # arrow_typeof/array_to_string emit Java-style regexp_replace text
-    # that must stay on Spark's kernel, not get re-routed)
-    # regexp_replace: the reference replaces the FIRST match unless 'g'
-    # (Postgres), with \1-style backrefs. Keep the replace-all no-backref
-    # form ('g' flag, no backslash in the replacement literal) on Spark's
-    # JVM kernel — that's the hot path (pipeline redaction etc.) — and
-    # route everything else through the session UDF.
-    def regexp_replace(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) == 3:
-            parts.append("''")
-        if len(parts) != 4:
-            return None
-        rep = lx.literal(parts[2])
-        if (
-            lx.string(parts[3]) == "g"
-            and rep is not None
-            and "\\" not in rep
-            and "$" not in rep
-        ):
-            return f"regexp_replace({parts[0]}, {parts[1]}, {parts[2]})"
-        return f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
 
-    q = rewrite_calls(q, "regexp_replace", regexp_replace)
-
-    # regexp_match → the session UDF (registered by _ensure_macros); the
-    # 2-arg form means "no flags" — pass '' (a NULL flags COLUMN stays
-    # NULL-strict like Postgres)
-    def regexp_match(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) == 2:
-            parts.append("''")
-        if len(parts) != 3:
-            return None
-        return f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
-
-    q = rewrite_calls(q, "regexp_match", regexp_match)
+# (these two rewrites run BEFORE any internal lowering below —
+# arrow_typeof/array_to_string emit Java-style regexp_replace text
+# that must stay on Spark's kernel, not get re-routed)
+# regexp_replace: the reference replaces the FIRST match unless 'g'
+# (Postgres), with \1-style backrefs. Keep the replace-all no-backref
+# form ('g' flag, no backslash in the replacement literal) on Spark's
+# JVM kernel — that's the hot path (pipeline redaction etc.) — and
+# route everything else through the session UDF.
+@_calls("regexp_replace")
+def _regexp_replace(lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) == 3:
+        parts.append("''")
+    if len(parts) != 4:
+        return None
+    rep = lx.literal(parts[2])
+    if (
+        lx.string(parts[3]) == "g"
+        and rep is not None
+        and "\\" not in rep
+        and "$" not in rep
+    ):
+        return f"regexp_replace({parts[0]}, {parts[1]}, {parts[2]})"
+    return f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
 
 
+# regexp_match → the session UDF (registered by _ensure_macros); the
+# 2-arg form means "no flags" — pass '' (a NULL flags COLUMN stays
+# NULL-strict like Postgres)
+@_calls("regexp_match")
+def _regexp_match(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) == 2:
+        parts.append("''")
+    if len(parts) != 3:
+        return None
+    return f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
+
+
+@_pass(r"\[\s*\]|\b(?:text|bytea|float4|float8|int2|int4|int8|bool)\b")
+def _pg_type_names(q: str, _lx: Lexed, _scope: Scope) -> str:
     # postgres type names — only in cast positions (``::type`` or
     # ``CAST(x AS type)``), since names like ``text`` are also valid columns
     # postgres array-type casts FIRST (the [] would otherwise read as a
@@ -1354,8 +1414,13 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
     for pg, sp in _TYPE_MAP.items():
         q = re.sub(rf"::\s*{pg}\b", f"::{sp}", q, flags=re.IGNORECASE)
         q = re.sub(rf"\bAS\s+{pg}\s*\)", f"AS {sp})", q, flags=re.IGNORECASE)
+    return q
+
+
+@_pass(r"\bDATE\b")
+def _int_date_casts(q: str, _lx: Lexed, _scope: Scope) -> str:
     # integer→DATE cast: arrow REINTERPRETS the int as days since epoch
-    # (same Date32 rule as arrow_cast above — common/src/scalar handles
+    # (same Date32 rule as arrow_cast — common/src/scalar handles
     # Date32 as i32 days); Spark's INT→DATE cast is an analysis error, so
     # lower the ClickBench-style `x::INT::DATE` chain onto
     # DATE_FROM_UNIX_DATE, which is exactly days-since-epoch→date
@@ -1386,13 +1451,34 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         q,
         flags=re.IGNORECASE,
     )
-    q = re.sub(
+    return re.sub(
         rf"\b(CAST\s*\(\s*(?:[^()]|\([^()]*\))*?\s+AS\s+{_INT_T}\s*\))"
         r"\s*::\s*DATE\b",
         r"DATE_FROM_UNIX_DATE(CAST(\1 AS INT))",
         q,
         flags=re.IGNORECASE,
     )
+
+
+# TIME literal with NANOSECOND-precision fraction (7-9 digits): the
+# reference types it Time64(Nanosecond) by written precision; Spark's
+# TIME is capped at µs, which would silently drop the ns digits. The
+# §1.2 policy maps Time64(ns) COLUMNS to BIGINT ns; for a bare literal
+# the lossless form is its own Display text (timestamps.slt:452 —
+# corpus surface is display-only; sub-µs time arithmetic remains
+# unrepresentable, documented)
+def _time_ns_lit(m: "re.Match[str]", lx: Lexed) -> str:
+    text = lx.string(m.group(1))
+    if re.fullmatch(r"\d{1,2}:\d{2}:\d{2}\.\d{7,9}", text):
+        return m.group(1)  # keep only the shielded string literal
+    return m.group(0)
+
+
+_sub("time_ns_literal", rf"\bTIME\s+({LIT})", _time_ns_lit, cites=("timestamps.slt:452",))
+
+
+@_pass("BIGINT")
+def _timestamp_bigint_casts(q: str, lx: Lexed, _scope: Scope) -> str:
     # timestamp→integer cast: arrow REINTERPRETS the value as the source
     # unit's count — a `::timestamp` source is Timestamp(NANOSECOND) in
     # the reference (string casts default to ns), so `::timestamp::bigint`
@@ -1405,20 +1491,6 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         ns = f"unix_micros(CAST({m.group(1)} AS TIMESTAMP)) * 1000"
         return f"({ns} div {m.group(2)})" if m.group(2) else f"({ns})"
 
-    # TIME literal with NANOSECOND-precision fraction (7-9 digits): the
-    # reference types it Time64(Nanosecond) by written precision; Spark's
-    # TIME is capped at µs, which would silently drop the ns digits. The
-    # §1.2 policy maps Time64(ns) COLUMNS to BIGINT ns; for a bare literal
-    # the lossless form is its own Display text (timestamps.slt:452 —
-    # corpus surface is display-only; sub-µs time arithmetic remains
-    # unrepresentable, documented)
-    def _time_ns_lit(m: "re.Match[str]") -> str:
-        text = lx.string(m.group(1))
-        if re.fullmatch(r"\d{1,2}:\d{2}:\d{2}\.\d{7,9}", text):
-            return m.group(1)  # keep only the shielded string literal
-        return m.group(0)
-
-    q = re.sub(rf"\bTIME\s+({LIT})", _time_ns_lit, q, flags=re.IGNORECASE)
     #   TIMESTAMP '...'::bigint  — the literal is already Timestamp(ns) in
     #   the reference, so a direct ::bigint is the same ns reinterpret
     #   (an optional redundant ::timestamp hop joins the match);
@@ -1482,598 +1554,608 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
         q,
         flags=re.IGNORECASE,
     )
-    q = re.sub(
+    return re.sub(
         r"\bCAST\s*\(\s*CAST\s*\(\s*" + _TS_SRC
         + r"\s+AS\s+TIMESTAMP\s*\)\s+AS\s+BIGINT\s*\)()",
         _ts_bigint_any,
         q,
         flags=re.IGNORECASE,
     )
+
+
+@_pass(r"\bvarchar\b")
+def _bare_varchar(q: str, _lx: Lexed, _scope: Scope) -> str:
     # bare VARCHAR in cast position: DataFusion's VARCHAR is unbounded
     # (→ Utf8); Spark 4 requires a length parameter — only the
     # parameterless spelling is rewritten (VARCHAR(10) stays)
     q = re.sub(r"::\s*varchar\b(?!\s*\()", "::STRING", q, flags=re.IGNORECASE)
-    q = re.sub(r"\bAS\s+varchar\s*\)", "AS STRING)", q, flags=re.IGNORECASE)
+    return re.sub(r"\bAS\s+varchar\s*\)", "AS STRING)", q, flags=re.IGNORECASE)
 
-    # digest(x, 'algo') / shaN(x) (functions/src/crypto): binary digests.
-    # Spark's md5/sha1/sha2 return HEX STRINGS — unhex() recovers the
-    # reference's binary return type (slt displays binary as lower-hex,
-    # so round-tripping through hex is exact). blake2 → hashlib UDF;
-    # blake3 → the pure-Python spec implementation (functions/blake3.py).
-    _DIGEST_FORMS = {
-        "md5": "unhex(md5({0}))",
-        "sha1": "unhex(sha1({0}))",
-        "sha224": "unhex(sha2({0}, 224))",
-        "sha256": "unhex(sha2({0}, 256))",
-        "sha384": "unhex(sha2({0}, 384))",
-        "sha512": "unhex(sha2({0}, 512))",
-        "blake2b": "df_blake2({0}, 'blake2b')",
-        "blake2s": "df_blake2({0}, 'blake2s')",
-        "blake3": "df_blake3({0})",
-    }
 
-    def digest(_fn: str, parts: list[str], _after: str) -> str | None:
-        algo = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
-        if algo not in _DIGEST_FORMS:
-            return None
-        return _DIGEST_FORMS[algo].format(parts[0])
+# digest(x, 'algo') / shaN(x) (functions/src/crypto): binary digests.
+# Spark's md5/sha1/sha2 return HEX STRINGS — unhex() recovers the
+# reference's binary return type (slt displays binary as lower-hex,
+# so round-tripping through hex is exact). blake2 → hashlib UDF;
+# blake3 → the pure-Python spec implementation (functions/blake3.py).
+_DIGEST_FORMS = {
+    "md5": "unhex(md5({0}))",
+    "sha1": "unhex(sha1({0}))",
+    "sha224": "unhex(sha2({0}, 224))",
+    "sha256": "unhex(sha2({0}, 256))",
+    "sha384": "unhex(sha2({0}, 384))",
+    "sha512": "unhex(sha2({0}, 512))",
+    "blake2b": "df_blake2({0}, 'blake2b')",
+    "blake2s": "df_blake2({0}, 'blake2s')",
+    "blake3": "df_blake3({0})",
+}
 
-    q = rewrite_calls(q, "digest", digest)
-    q = rewrite_calls(
-        q,
-        ("sha224", "sha256", "sha384", "sha512"),
-        lambda fn, args, _after: _DIGEST_FORMS[fn].format(", ".join(args)),
-    )
-    # to_hex(int): lowercase hex display (functions/src/string/to_hex.rs)
-    q = rewrite_calls(
-        q, "to_hex", lambda _fn, args, _after: f"lower(hex({', '.join(args)}))"
-    )
 
-    # DataFusion's list_* alias spellings → the type-generic Spark builtin
-    # (functions-array registers a list_* alias per array_* udf). Only
-    # aliases whose Spark native has IDENTICAL semantics are renamed —
-    # e.g. list_remove is NOT here (DataFusion removes the first
-    # occurrence; Spark's array_remove removes all).
-    for alias, native in _SQL_LIST_ALIASES.items():
-        q = re.sub(rf"\b{alias}\s*\(", f"{native}(", q, flags=re.IGNORECASE)
-
-    # array_position/list_position: the reference returns NULL when the
-    # element is not found (position.rs) where Spark returns 0; the 3-arg
-    # form searches from a 1-based start index. array_has/list_contains:
-    # the reference returns false for NULL needles and null-containing
-    # no-match arrays (array.slt:4976) where Spark yields NULL.
-    def position(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) == 3:
-            arr, v, f = parts
-            sub = f"slice({arr}, {f}, greatest(size({arr}) - ({f}) + 1, 0))"
-            return f"(nullif(array_position({sub}, {v}), 0) + ({f}) - 1)"
-        if len(parts) == 2:
-            return f"nullif(array_position({parts[0]}, {parts[1]}), 0)"
+@_calls("digest")
+def _digest(lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    algo = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
+    if algo not in _DIGEST_FORMS:
         return None
+    return _DIGEST_FORMS[algo].format(parts[0])
 
-    q = rewrite_calls(
-        q, ("list_position", "list_indexof", "array_indexof", "array_position"), position
-    )
-    q = rewrite_calls(
-        q,
-        ("list_contains", "list_has", "array_has"),
-        lambda _fn, parts, _after: None if len(parts) != 2 else (
-            f"(CASE WHEN ({parts[0]}) IS NULL THEN NULL ELSE "
-            f"coalesce(array_contains({parts[0]}, {parts[1]}), false) END)"
-        ),
-    )
 
-    # array[...] literals; arrow_cast / arrow_typeof as SQL functions
-    q = _rewrite_array_literals(q)
-    q = _rewrite_bracket_literals(q)
-    q = _rewrite_arrow_calls(q, lx, pfad=pfad)
+@_calls(("sha224", "sha256", "sha384", "sha512"))
+def _sha2(_lx: Lexed, fn: str, args: list[str], _after: str) -> str:
+    return _DIGEST_FORMS[fn].format(", ".join(args))
 
-    # string concat skips NULLs in the reference (Postgres semantics;
-    # string/concat.rs) where Spark's concat propagates them — concat_ws('')
-    # has the reference's behavior. Array concatenation (the list_cat/
-    # array_cat aliases above) is array_concat until after this rewrite, so
-    # it keeps Spark's array concat.
-    q = re.sub(r"\bconcat\s*\(", "concat_ws('', ", q, flags=re.IGNORECASE)
 
-    # array concatenation treats NULL inputs as empty in the reference
-    # (array.slt:2811 concatenates around a NULL column); Spark's concat
-    # propagates NULL — coalesce each arg to a typed []
-    def array_concat(_fn: str, parts: list[str], _after: str) -> str:
-        inner = "concat(" + ", ".join(
-            f"coalesce({p}, {_typed_empty(p)})" for p in parts
-        ) + ")"
-        if len(parts) == 1:
-            return inner
-        # ALL-NULL inputs concatenate to NULL; any non-NULL treats the
-        # NULL side as empty (array.slt:2799 vs :2811)
-        return (
-            f"(CASE WHEN coalesce({', '.join(parts)}) IS NULL THEN NULL "
-            f"ELSE {inner} END)"
-        )
+# to_hex(int): lowercase hex display (functions/src/string/to_hex.rs)
+@_calls("to_hex")
+def _to_hex(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str:
+    return f"lower(hex({', '.join(args)}))"
 
-    q = rewrite_calls(q, "array_concat", array_concat)
-    # chr: full Unicode code point (chr.rs; Spark's char wraps at 256).
-    # Java's %c needs an explicit NULL guard (it would print "null").
-    q = rewrite_calls(
-        q,
-        "chr",
-        lambda _fn, args, _after: (
-            f"(CASE WHEN ({', '.join(args)}) IS NULL THEN NULL "
-            f"ELSE format_string('%c', CAST({', '.join(args)} AS INT)) END)"
-        ),
+
+# DataFusion's list_* alias spellings → the type-generic Spark builtin
+# (functions-array registers a list_* alias per array_* udf). Only
+# aliases whose Spark native has IDENTICAL semantics are renamed —
+# e.g. list_remove is NOT here (DataFusion removes the first
+# occurrence; Spark's array_remove removes all). No native is itself
+# an alias, so one scan renames them all.
+_sub(
+    "list_aliases",
+    rf"\b({'|'.join(_SQL_LIST_ALIASES)})\s*\(",
+    lambda m, _lx: f"{_SQL_LIST_ALIASES[m.group(1).lower()]}(",
+)
+
+
+# array_position/list_position: the reference returns NULL when the
+# element is not found (position.rs) where Spark returns 0; the 3-arg
+# form searches from a 1-based start index.
+@_calls(("list_position", "list_indexof", "array_indexof", "array_position"))
+def _array_position(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) == 3:
+        arr, v, f = parts
+        sub = f"slice({arr}, {f}, greatest(size({arr}) - ({f}) + 1, 0))"
+        return f"(nullif(array_position({sub}, {v}), 0) + ({f}) - 1)"
+    if len(parts) == 2:
+        return f"nullif(array_position({parts[0]}, {parts[1]}), 0)"
+    return None
+
+
+# array_has/list_contains: the reference returns false for NULL needles
+# and null-containing no-match arrays (array.slt:4976) where Spark
+# yields NULL.
+@_calls(("list_contains", "list_has", "array_has"), cites=("array.slt:4976",))
+def _array_has(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    return None if len(parts) != 2 else (
+        f"(CASE WHEN ({parts[0]}) IS NULL THEN NULL ELSE "
+        f"coalesce(array_contains({parts[0]}, {parts[1]}), false) END)"
     )
 
+
+# array[...] literals; arrow_cast / arrow_typeof as SQL functions
+_pass(r"\barray\s*\[")(_array_literals)
+_pass(r"\[")(_bracket_literals)
+_pass(
+    r"\b(?:arrow_cast|arrow_typeof|isnan)\s*\(",
+    cites=(
+        "arrow_typeof.slt:325", "arrow_typeof.slt:338",
+        "options.slt:106", "options.slt:134",
+    ),
+)(_arrow_calls)
+
+# string concat skips NULLs in the reference (Postgres semantics;
+# string/concat.rs) where Spark's concat propagates them — concat_ws('')
+# has the reference's behavior. Array concatenation (the list_cat/
+# array_cat aliases above) is array_concat until after this rewrite, so
+# it keeps Spark's array concat.
+_sub("string_concat", r"\bconcat\s*\(", "concat_ws('', ")
+
+
+# array concatenation treats NULL inputs as empty in the reference
+# (array.slt:2811 concatenates around a NULL column); Spark's concat
+# propagates NULL — coalesce each arg to a typed []
+@_calls("array_concat", cites=("array.slt:2811", "array.slt:2799"))
+def _array_concat(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str:
+    inner = "concat(" + ", ".join(
+        f"coalesce({p}, {_typed_empty(p)})" for p in parts
+    ) + ")"
+    if len(parts) == 1:
+        return inner
+    # ALL-NULL inputs concatenate to NULL; any non-NULL treats the
+    # NULL side as empty (array.slt:2799 vs :2811)
+    return (
+        f"(CASE WHEN coalesce({', '.join(parts)}) IS NULL THEN NULL "
+        f"ELSE {inner} END)"
+    )
+
+
+# chr: full Unicode code point (chr.rs; Spark's char wraps at 256).
+# Java's %c needs an explicit NULL guard (it would print "null").
+@_calls("chr")
+def _chr(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str:
+    return (
+        f"(CASE WHEN ({', '.join(args)}) IS NULL THEN NULL "
+        f"ELSE format_string('%c', CAST({', '.join(args)} AS INT)) END)"
+    )
+
+
+def _date_part_sql(unit: str, arg: str, lx: Lexed) -> str | None:
+    """EXTRACT / date_part of the units where the reference differs from
+    Spark, or None to keep Spark's own."""
     # dow: the reference follows Postgres (Sunday=0..Saturday=6); Spark's
     # extract dayofweek is 1-based (Sunday=1)
-    def extract(_fn: str, args: list[str], _after: str) -> str | None:
-        inner = ", ".join(args)
-        # the unit may be a quoted identifier — EXTRACT("dow" FROM …) —
-        # already converted to backticks by the quote rewrite above
-        msub = re.match(
-            r"\s*[`\"]?(second|millisecond|microsecond|nanosecond)[`\"]?\s+from\s+(.*)$",
-            inner,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if msub:
-            unit = msub.group(1).lower()
-            folded = _fold_literal_subsecond(msub.group(2).strip(), unit, lx)
-            if folded is not None:
-                return folded
-            if unit == "second":
-                # non-literal: Spark's native extract(second) (µs fraction)
-                return None
-            # sub-second units (functions/src/datetime/date_part.rs):
-            # fractional seconds scaled — Spark only has second; values
-            # beyond µs resolution are governed by the ns→µs policy
-            scale = {"millisecond": "1000", "microsecond": "1000000",
-                     "nanosecond": "1000000000"}[unit]
-            expr = f"(extract(second FROM {msub.group(2).strip()}) * {scale})"
-            # the reference returns an integer nanosecond count
-            return f"CAST({expr} AS BIGINT)" if unit == "nanosecond" else expr
-        mep = re.match(
-            r"\s*[`\"]?epoch[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
-        )
-        if mep:
-            # epoch (date_part.rs): Float64 seconds since 1970, fractional;
-            # dates count whole days (both branches analyze for any input —
-            # only the matching one evaluates)
-            return _epoch_expr(mep.group(1).strip())
-        m = re.match(
-            r"\s*[`\"]?dow[`\"]?\s+from\s+(.*)$", inner, re.IGNORECASE | re.DOTALL
-        )
-        if not m:
+    if unit == "dow":
+        return f"(extract(dayofweek FROM {arg}) - 1)"
+    if unit == "epoch":
+        # epoch (date_part.rs): Float64 seconds since 1970, fractional;
+        # dates count whole days (both branches analyze for any input —
+        # only the matching one evaluates)
+        return _epoch_expr(arg)
+    if unit not in _SUBSECOND_SCALE:
+        return None
+    folded = _fold_literal_subsecond(arg, unit, lx)
+    if folded is not None or unit == "second":
+        # a non-literal second is Spark's native extract (µs fraction)
+        return folded
+    # sub-second units (functions/src/datetime/date_part.rs): fractional
+    # seconds scaled — Spark only has second; values beyond µs resolution
+    # are governed by the ns→µs policy
+    expr = f"(extract(second FROM {arg}) * {_SUBSECOND_SCALE[unit]})"
+    # the reference returns an integer nanosecond count
+    return f"CAST({expr} AS BIGINT)" if unit == "nanosecond" else expr
+
+
+@_calls("extract")
+def _extract(lx: Lexed, _fn: str, args: list[str], _after: str) -> str | None:
+    # the unit may be a quoted identifier — EXTRACT("dow" FROM …) —
+    # already converted to backticks by the quoted_identifiers pass
+    m = re.match(
+        r"\s*[`\"]?(\w+)[`\"]?\s+from\s+(.*)$", ", ".join(args), re.IGNORECASE | re.DOTALL
+    )
+    return None if m is None else _date_part_sql(m.group(1).lower(), m.group(2).strip(), lx)
+
+
+# Interval literal spellings Spark's parser rejects but the reference
+# accepts (sql/src/expr/value.rs interval parsing): a bare number is
+# SECONDS ("interval '1'"), units may be fractional ("interval '0.5
+# minute'"), and a trailing bare number after unit pairs is seconds
+# ("interval '1 day 1'"). Day-time-only forms rewrite to an exact
+# DAY TO SECOND literal; year/month forms are left alone (Spark's
+# year-month interval type can't round-trip through this surface).
+_DT_UNITS = {
+    "day": 86400.0, "days": 86400.0, "d": 86400.0,
+    "hour": 3600.0, "hours": 3600.0, "h": 3600.0,
+    "minute": 60.0, "minutes": 60.0, "min": 60.0, "mins": 60.0,
+    "second": 1.0, "seconds": 1.0, "sec": 1.0, "secs": 1.0,
+    "millisecond": 1e-3, "milliseconds": 1e-3,
+    "week": 604800.0, "weeks": 604800.0,
+}
+
+
+def _interval_lit(m: "re.Match[str]", lx: Lexed) -> str:
+    raw = lx.string(m.group(1)).strip()
+    toks = raw.split()
+    total, i, needs_rewrite = 0.0, 0, False
+    while i < len(toks):
+        try:
+            n = float(toks[i])
+        except ValueError:
+            return m.group(0)  # not number-led — leave for Spark
+        if i + 1 < len(toks):
+            unit = toks[i + 1].lower()
+            if unit not in _DT_UNITS:
+                return m.group(0)  # year/month or unknown — leave
+            total += n * _DT_UNITS[unit]
+            if n != int(n):
+                needs_rewrite = True  # fractional unit count
+            i += 2
+        else:
+            total += n  # trailing bare number = seconds
+            needs_rewrite = True
+            i += 1
+    if not needs_rewrite or total < 0:
+        return m.group(0)
+    days, rem = divmod(total, 86400.0)
+    hours, rem = divmod(rem, 3600.0)
+    mins, secs = divmod(rem, 60.0)
+    return (
+        f"INTERVAL '{int(days)} {int(hours):02d}:{int(mins):02d}:"
+        f"{secs:09.6f}' DAY TO SECOND"
+    )
+
+
+_sub("interval_literals", rf"\binterval\s+({LIT})(?!\s*[A-Za-z])", _interval_lit)
+
+# encode/decode(x, 'base64'|'hex') (functions/src/encoding/inner.rs):
+# Spark's builtins of the same name are charset converters — map the
+# reference's encodings onto base64/hex primitives (hex lowercased to
+# match Arrow's display). Unknown encoding names fall through to
+# Spark's error, matching the reference's rejection.
+_CODINGS = {
+    "encode": {"base64": "base64({0})", "hex": "lower(hex({0}))"},
+    "decode": {"base64": "unbase64({0})", "hex": "unhex({0})"},
+}
+
+
+@_calls(("encode", "decode"))
+def _encode_decode(lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
+    if enc not in _CODINGS[fn]:
+        return None
+    return _CODINGS[fn][enc].format(parts[0])
+
+
+# overlay (string/overlay.rs:90): the reference DIVERGES from
+# Postgres/Spark — when start_pos exceeds the string, the prefix is
+# DROPPED (overlay('123' placing 'abc' from 4) = 'abc', not '123abc'),
+# and the 4-arg replace length is min(len, char_length(str)). Rewrite
+# both the PLACING and comma forms into the reference's exact
+# composition; NULL in any argument → NULL (the row-wise match arms).
+@_calls("overlay")
+def _overlay(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str | None:
+    inner = ", ".join(args)
+    mp = re.match(
+        r"(?is)\s*(.+?)\s+placing\s+(.+?)\s+from\s+(.+?)(?:\s+for\s+(.+?))?\s*$",
+        inner,
+    )
+    if mp:
+        so, c, p, ln = (g.strip() if g else None for g in mp.groups())
+    else:
+        parts = [x.strip() for x in _split_top_level(inner)]
+        if len(parts) not in (3, 4):
             return None
-        return f"(extract(dayofweek FROM {m.group(1).strip()}) - 1)"
+        so, c, p = parts[:3]
+        ln = parts[3] if len(parts) == 4 else None
+    rl = (
+        f"least(CAST({ln} AS BIGINT), char_length({so}))"
+        if ln is not None
+        else f"char_length({c})"
+    )
+    null_guard = f"{so} IS NULL OR {c} IS NULL OR ({p}) IS NULL" + (
+        f" OR ({ln}) IS NULL" if ln is not None else ""
+    )
+    return (
+        f"(CASE WHEN {null_guard} THEN CAST(NULL AS STRING) ELSE "
+        f"CONCAT("
+        f"CASE WHEN ({p}) > 1 AND ({p}) - 1 < char_length({so}) "
+        f"THEN substring({so}, 1, CAST(({p}) - 1 AS INT)) ELSE '' END, "
+        f"{c}, "
+        f"CASE WHEN ({p}) + {rl} - 1 < char_length({so}) "
+        f"THEN substring({so}, CAST(({p}) + {rl} AS INT)) ELSE '' END"
+        f") END)"
+    )
 
-    q = rewrite_calls(q, "extract", extract)
-    # Interval literal spellings Spark's parser rejects but the reference
-    # accepts (sql/src/expr/value.rs interval parsing): a bare number is
-    # SECONDS ("interval '1'"), units may be fractional ("interval '0.5
-    # minute'"), and a trailing bare number after unit pairs is seconds
-    # ("interval '1 day 1'"). Day-time-only forms rewrite to an exact
-    # DAY TO SECOND literal; year/month forms are left alone (Spark's
-    # year-month interval type can't round-trip through this surface).
-    _DT_UNITS = {
-        "day": 86400.0, "days": 86400.0, "d": 86400.0,
-        "hour": 3600.0, "hours": 3600.0, "h": 3600.0,
-        "minute": 60.0, "minutes": 60.0, "min": 60.0, "mins": 60.0,
-        "second": 1.0, "seconds": 1.0, "sec": 1.0, "secs": 1.0,
-        "millisecond": 1e-3, "milliseconds": 1e-3,
-        "week": 604800.0, "weeks": 604800.0,
-    }
 
-    def _interval_lit(m: "re.Match[str]") -> str:
-        raw = lx.string(m.group(1)).strip()
+@_calls("date_part")
+def _date_part(lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
+        return None
+    return _date_part_sql((lx.string(parts[0]) or "").lower(), parts[1], lx)
+
+
+# mixed NTZ/TZ date_bin coercion (date_bin.rs argument coercion;
+# timestamps.slt:1673): when the SOURCE argument is TIMESTAMPTZ and
+# the ORIGIN a plain TIMESTAMP literal, the reference reinterprets the
+# origin's WALL time as UTC; Spark would parse it in the session zone.
+# Append an explicit Z to the shielded origin literal — each literal
+# occurrence has its own shield slot, so the mutation is local. Runs
+# BEFORE the TIMESTAMPTZ lowering below erases the TZ marker.
+@_calls("date_bin", cites=("timestamps.slt:1673",))
+def _date_bin_utc_origin(lx: Lexed, _fn: str, parts: list[str], _after: str) -> None:
+    if len(parts) != 3:
+        return
+    if not re.search(r"\bTIMESTAMPTZ\b", parts[1], re.IGNORECASE):
+        return
+    om = re.fullmatch(rf"TIMESTAMP\s+({LIT})", parts[2], re.IGNORECASE)
+    if not om:
+        return
+    raw = lx.string(om.group(1))
+    if not re.search(r"(?:Z|[+-]\d{2}:?\d{2})\s*$", raw):
+        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw.strip()):
+            # a date-only literal needs a time part before the offset
+            # suffix or Spark rejects the typed literal
+            lx.replace(om.group(1), quote(f"{raw.strip()} 00:00:00Z"))
+        else:
+            lx.replace(om.group(1), quote(f"{raw}Z"))
+
+
+# TIMESTAMPTZ literals: Spark has no TIMESTAMPTZ typed-literal syntax —
+# the session is pinned UTC, so a plain TIMESTAMP cast preserves the
+# instant (offsets in the text are applied by the cast)
+_sub("timestamptz_literals", rf"\bTIMESTAMPTZ\s+({LIT})", r"CAST(\1 AS TIMESTAMP)")
+
+# date_bin (datetime/date_bin.rs): widen the SQL surface beyond the
+# fixed-width 3-arg macro — 2-arg form defaults origin to the epoch,
+# bare string strides coerce to INTERVAL, and month/year strides bin
+# with the reference's calendar algorithm (date_bin_months_interval:
+# floor the calendar-month distance to the stride, add to origin with
+# end-of-month clamping, step back one stride if the bin overshoots).
+_MONTH_UNITS = {"mon": 1, "month": 1, "months": 1, "year": 12, "years": 12}
+
+
+@_calls("date_bin")
+def _date_bin(lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) == 2:
+        parts.append("TIMESTAMP '1970-01-01 00:00:00'")
+    if len(parts) != 3:
+        return None
+    stride, t_arg, o_arg = parts
+    mlit = re.fullmatch(rf"(?:INTERVAL\s+)?({LIT})", stride, re.IGNORECASE)
+    months = None
+    if mlit:
+        raw = lx.string(mlit.group(1)).strip()
         toks = raw.split()
-        total, i, needs_rewrite = 0.0, 0, False
-        while i < len(toks):
-            try:
-                n = float(toks[i])
-            except ValueError:
-                return m.group(0)  # not number-led — leave for Spark
-            if i + 1 < len(toks):
-                unit = toks[i + 1].lower()
-                if unit not in _DT_UNITS:
-                    return m.group(0)  # year/month or unknown — leave
-                total += n * _DT_UNITS[unit]
-                if n != int(n):
-                    needs_rewrite = True  # fractional unit count
+        total, i, ok = 0, 0, bool(toks)
+        while ok and i < len(toks):
+            if i + 1 < len(toks) and re.fullmatch(r"-?\d+", toks[i]) and \
+                    toks[i + 1].lower() in _MONTH_UNITS:
+                total += int(toks[i]) * _MONTH_UNITS[toks[i + 1].lower()]
                 i += 2
             else:
-                total += n  # trailing bare number = seconds
-                needs_rewrite = True
-                i += 1
-        if not needs_rewrite or total < 0:
-            return m.group(0)
-        days, rem = divmod(total, 86400.0)
-        hours, rem = divmod(rem, 3600.0)
-        mins, secs = divmod(rem, 60.0)
-        return (
-            f"INTERVAL '{int(days)} {int(hours):02d}:{int(mins):02d}:"
-            f"{secs:09.6f}' DAY TO SECOND"
-        )
-
-    q = re.sub(rf"\binterval\s+({LIT})(?!\s*[A-Za-z])", _interval_lit, q,
-               flags=re.IGNORECASE)
-
-    # encode/decode(x, 'base64'|'hex') (functions/src/encoding/inner.rs):
-    # Spark's builtins of the same name are charset converters — map the
-    # reference's encodings onto base64/hex primitives (hex lowercased to
-    # match Arrow's display). Unknown encoding names fall through to
-    # Spark's error, matching the reference's rejection.
-    forms = {
-        "encode": {"base64": "base64({0})", "hex": "lower(hex({0}))"},
-        "decode": {"base64": "unbase64({0})", "hex": "unhex({0})"},
-    }
-
-    def coding(fn: str, parts: list[str], _after: str) -> str | None:
-        enc = (lx.string(parts[1]) or "").lower() if len(parts) == 2 else ""
-        if enc not in forms[fn]:
-            return None
-        return forms[fn][enc].format(parts[0])
-
-    q = rewrite_calls(q, ("encode", "decode"), coding)
-
-    # overlay (string/overlay.rs:90): the reference DIVERGES from
-    # Postgres/Spark — when start_pos exceeds the string, the prefix is
-    # DROPPED (overlay('123' placing 'abc' from 4) = 'abc', not '123abc'),
-    # and the 4-arg replace length is min(len, char_length(str)). Rewrite
-    # both the PLACING and comma forms into the reference's exact
-    # composition; NULL in any argument → NULL (the row-wise match arms).
-    def overlay(_fn: str, args: list[str], _after: str) -> str | None:
-        inner = ", ".join(args)
-        mp = re.match(
-            r"(?is)\s*(.+?)\s+placing\s+(.+?)\s+from\s+(.+?)(?:\s+for\s+(.+?))?\s*$",
-            inner,
-        )
-        if mp:
-            so, c, p, ln = (g.strip() if g else None for g in mp.groups())
+                ok = False
+        if ok and total == 0:
+            # date_bin.rs:330 — a zero stride is rejected before any
+            # binning; falling through would surface Spark's own (and
+            # differently-worded) error from date_bin(INTERVAL '0 mon')
+            raise ValueError("Execution error: DATE_BIN stride must be non-zero")
+        if ok:
+            months = total
+        elif not stride.upper().startswith("INTERVAL"):
+            stride = f"INTERVAL {mlit.group(1)}"
+    if months:
+        t_c = f"CAST({t_arg} AS TIMESTAMP)"
+        o_c = f"CAST({o_arg} AS TIMESTAMP)"
+        md = f"((year({t_c}) - year({o_c})) * 12 + month({t_c}) - month({o_c}))"
+        if months > 0:
+            # compute_distance floors toward -inf for positive strides
+            d = f"({md} - pmod({md}, {months}))"
         else:
-            parts = [x.strip() for x in _split_top_level(inner)]
-            if len(parts) not in (3, 4):
-                return None
-            so, c, p = parts[:3]
-            ln = parts[3] if len(parts) == 4 else None
-        rl = (
-            f"least(CAST({ln} AS BIGINT), char_length({so}))"
-            if ln is not None
-            else f"char_length({c})"
+            # negative stride: the reference skips the round-down branch
+            # (stride > 1 is false) → truncating remainder, which is
+            # Spark's native % semantics
+            d = f"({md} - ({md} % {months}))"
+        b = f"({o_c} + make_ym_interval(0, CAST({d} AS INT)))"
+        repl = (
+            f"(CASE WHEN {b} > {t_c} "
+            f"THEN {o_c} + make_ym_interval(0, CAST({d} - {months} AS INT)) "
+            f"ELSE {b} END)"
         )
-        null_guard = f"{so} IS NULL OR {c} IS NULL OR ({p}) IS NULL" + (
-            f" OR ({ln}) IS NULL" if ln is not None else ""
-        )
-        return (
-            f"(CASE WHEN {null_guard} THEN CAST(NULL AS STRING) ELSE "
-            f"CONCAT("
-            f"CASE WHEN ({p}) > 1 AND ({p}) - 1 < char_length({so}) "
-            f"THEN substring({so}, 1, CAST(({p}) - 1 AS INT)) ELSE '' END, "
-            f"{c}, "
-            f"CASE WHEN ({p}) + {rl} - 1 < char_length({so}) "
-            f"THEN substring({so}, CAST(({p}) + {rl} AS INT)) ELSE '' END"
-            f") END)"
-        )
+    else:
+        repl = f"date_bin({stride}, CAST({t_arg} AS TIMESTAMP), CAST({o_arg} AS TIMESTAMP))"
+    return repl
 
-    q = rewrite_calls(q, "overlay", overlay)
 
-    def date_part(_fn: str, parts: list[str], _after: str) -> str | None:
-        unit = (lx.string(parts[0]) or "").lower()
-        sub = {"millisecond": "1000", "microsecond": "1000000",
-               "nanosecond": "1000000000"}
-        if len(parts) != 2 or unit not in ("dow", "epoch", "second", *sub):
-            return None
-        arg = parts[1]
-        if unit == "dow":
-            return f"(extract(dayofweek FROM {arg}) - 1)"
-        if unit == "epoch":
-            return _epoch_expr(arg)
-        repl = _fold_literal_subsecond(arg, unit, lx)
-        if repl is None and unit == "second":
-            # non-literal seconds: Spark's extract is already right
-            return None
-        if repl is None:
-            repl = f"(extract(second FROM {arg}) * {sub[unit]})"
-            if unit == "nanosecond":
-                repl = f"CAST({repl} AS BIGINT)"
-        return repl
+# left/right with NEGATIVE n drop |n| chars from the other end in the
+# reference (Postgres semantics, string/left.rs); Spark returns ''
+_SIDES = {
+    "left": (
+        "left({s}, {n})",
+        "substring({s}, 1, greatest(length({s}) + ({n}), 0))",
+    ),
+    "right": (
+        "right({s}, {n})",
+        "substring({s}, least(-({n}), length({s})) + 1)",
+    ),
+}
 
-    q = rewrite_calls(q, "date_part", date_part)
 
-    # mixed NTZ/TZ date_bin coercion (date_bin.rs argument coercion;
-    # timestamps.slt:1673): when the SOURCE argument is TIMESTAMPTZ and
-    # the ORIGIN a plain TIMESTAMP literal, the reference reinterprets the
-    # origin's WALL time as UTC; Spark would parse it in the session zone.
-    # Append an explicit Z to the shielded origin literal — each literal
-    # occurrence has its own shield slot, so the mutation is local. Runs
-    # BEFORE the TIMESTAMPTZ lowering below erases the TZ marker.
-    def utc_origin(_fn: str, parts: list[str], _after: str) -> None:
-        if len(parts) != 3:
-            return
-        if not re.search(r"\bTIMESTAMPTZ\b", parts[1], re.IGNORECASE):
-            return
-        om = re.fullmatch(rf"TIMESTAMP\s+({LIT})", parts[2], re.IGNORECASE)
-        if not om:
-            return
-        raw = lx.string(om.group(1))
-        if not re.search(r"(?:Z|[+-]\d{2}:?\d{2})\s*$", raw):
-            if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw.strip()):
-                # a date-only literal needs a time part before the offset
-                # suffix or Spark rejects the typed literal
-                lx.replace(om.group(1), quote(f"{raw.strip()} 00:00:00Z"))
-            else:
-                lx.replace(om.group(1), quote(f"{raw}Z"))
-
-    q = rewrite_calls(q, "date_bin", utc_origin)
-    # TIMESTAMPTZ literals: Spark has no TIMESTAMPTZ typed-literal syntax —
-    # the session is pinned UTC, so a plain TIMESTAMP cast preserves the
-    # instant (offsets in the text are applied by the cast)
-    q = re.sub(
-        rf"\bTIMESTAMPTZ\s+({LIT})", r"CAST(\1 AS TIMESTAMP)", q,
-        flags=re.IGNORECASE,
+@_calls(("left", "right"))
+def _left_right(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
+        return None
+    sarg, narg = parts
+    pos_form, neg_form = _SIDES[fn]
+    return (
+        f"(CASE WHEN ({narg}) < 0 THEN "
+        + neg_form.format(s=sarg, n=narg)
+        + " ELSE "
+        + pos_form.format(s=sarg, n=narg)
+        + " END)"
     )
-    # date_bin (datetime/date_bin.rs): widen the SQL surface beyond the
-    # fixed-width 3-arg macro — 2-arg form defaults origin to the epoch,
-    # bare string strides coerce to INTERVAL, and month/year strides bin
-    # with the reference's calendar algorithm (date_bin_months_interval:
-    # floor the calendar-month distance to the stride, add to origin with
-    # end-of-month clamping, step back one stride if the bin overshoots).
-    _MONTH_UNITS = {"mon": 1, "month": 1, "months": 1, "year": 12, "years": 12}
 
-    def date_bin(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) == 2:
-            parts.append("TIMESTAMP '1970-01-01 00:00:00'")
-        if len(parts) != 3:
-            return None
-        stride, t_arg, o_arg = parts
-        mlit = re.fullmatch(rf"(?:INTERVAL\s+)?({LIT})", stride, re.IGNORECASE)
-        months = None
-        if mlit:
-            raw = lx.string(mlit.group(1)).strip()
-            toks = raw.split()
-            total, i, ok = 0, 0, bool(toks)
-            while ok and i < len(toks):
-                if i + 1 < len(toks) and re.fullmatch(r"-?\d+", toks[i]) and \
-                        toks[i + 1].lower() in _MONTH_UNITS:
-                    total += int(toks[i]) * _MONTH_UNITS[toks[i + 1].lower()]
-                    i += 2
-                else:
-                    ok = False
-            if ok and total == 0:
-                # date_bin.rs:330 — a zero stride is rejected before any
-                # binning; falling through would surface Spark's own (and
-                # differently-worded) error from date_bin(INTERVAL '0 mon')
-                raise ValueError("Execution error: DATE_BIN stride must be non-zero")
-            if ok:
-                months = total
-            elif not stride.upper().startswith("INTERVAL"):
-                stride = f"INTERVAL {mlit.group(1)}"
-        if months:
-            t_c = f"CAST({t_arg} AS TIMESTAMP)"
-            o_c = f"CAST({o_arg} AS TIMESTAMP)"
-            md = f"((year({t_c}) - year({o_c})) * 12 + month({t_c}) - month({o_c}))"
-            if months > 0:
-                # compute_distance floors toward -inf for positive strides
-                d = f"({md} - pmod({md}, {months}))"
-            else:
-                # negative stride: the reference skips the round-down branch
-                # (stride > 1 is false) → truncating remainder, which is
-                # Spark's native % semantics
-                d = f"({md} - ({md} % {months}))"
-            b = f"({o_c} + make_ym_interval(0, CAST({d} AS INT)))"
-            repl = (
-                f"(CASE WHEN {b} > {t_c} "
-                f"THEN {o_c} + make_ym_interval(0, CAST({d} - {months} AS INT)) "
-                f"ELSE {b} END)"
-            )
-        else:
-            repl = f"date_bin({stride}, CAST({t_arg} AS TIMESTAMP), CAST({o_arg} AS TIMESTAMP))"
-        return repl
 
-    q = rewrite_calls(q, "date_bin", date_bin)
-    # left/right with NEGATIVE n drop |n| chars from the other end in the
-    # reference (Postgres semantics, string/left.rs); Spark returns ''
-    sides = {
-        "left": (
-            "left({s}, {n})",
-            "substring({s}, 1, greatest(length({s}) + ({n}), 0))",
-        ),
-        "right": (
-            "right({s}, {n})",
-            "substring({s}, least(-({n}), length({s})) + 1)",
-        ),
-    }
+# substr/substring with a NEGATIVE OR ZERO literal start follows
+# Postgres virtual-position semantics in the reference (substr.rs:
+# positions before 1 exist but hold nothing) — Spark counts negative
+# starts from the string END. Only statically-negative literals are
+# rewritten; column/expression starts keep Spark semantics.
+@_calls(("substr", "substring"))
+def _substr(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) not in (2, 3) or not re.fullmatch(r"-\d+|0", parts[1]):
+        return None
+    if len(parts) == 2:
+        return f"substring({parts[0]}, 1)"
+    # effective length shrinks by the virtual prefix (1 - start)
+    return (
+        f"substring({parts[0]}, 1, "
+        f"greatest(({parts[2]}) - {1 - int(parts[1])}, 0))"
+    )
 
-    def side(fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 2:
-            return None
-        sarg, narg = parts
-        pos_form, neg_form = sides[fn]
+
+# two-arg ltrim/rtrim/trim: the reference takes (string, chars); Spark's
+# positional builtins take (trimStr, string) — swap
+@_calls(("ltrim", "rtrim", "trim"))
+def _trim(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    return f"{fn}({parts[1]}, {parts[0]})" if len(parts) == 2 else None
+
+
+# inline VALUES → reference column names (column1..columnN)
+_pass(r"\bVALUES\s*\(")(_wrap_values)
+# SQL-surface aggregate spellings Spark names differently (no native is
+# itself an alias, so one scan renames them all)
+_AGG_ALIASES = {
+    "var_sample": "var_samp",
+    "var_population": "var_pop",
+    "var": "var_samp",
+    "covar_sample": "covar_samp",
+    "covar_population": "covar_pop",
+    "covar": "covar_samp",
+    "mean": "avg",
+}
+_sub(
+    "aggregate_aliases",
+    rf"\b({'|'.join(_AGG_ALIASES)})\s*\(",
+    lambda m, _lx: f"{_AGG_ALIASES[m.group(1).lower()]}(",
+)
+
+
+# corr: the reference computes it from POPULATION statistics and returns
+# 0.0 (not NULL) when either side has zero variance — including a single
+# pair, where var_pop = 0 (correlation.rs:161). Spark's corr NULLs the
+# degenerate cases; wrap it. Pairwise-masked stddevs so one-sided NULLs
+# can't flip the zero-variance test. n>=2 nonzero-variance values are
+# identical (the (n-1)/n factors cancel in the ratio).
+@_calls("corr")
+def _corr(_lx: Lexed, _fn: str, parts: list[str], after: str) -> str | None:
+    if (
+        len(parts) != 2
+        or parts[0].upper().startswith("DISTINCT")
+        # window form (corr(...) OVER ...): leave Spark's native corr —
+        # the CASE wrapper is an aggregate-position rewrite only
+        or re.match(r"\s*OVER\b", after, re.IGNORECASE)
+    ):
+        return None
+    x, y = parts
+    pair = f"(({x}) IS NOT NULL AND ({y}) IS NOT NULL)"
+    return (
+        f"CASE WHEN stddev_pop(CASE WHEN {pair} THEN ({x}) END) = 0 "
+        f"OR stddev_pop(CASE WHEN {pair} THEN ({y}) END) = 0 "
+        f"THEN 0.0 ELSE corr(({x}), ({y})) END"
+    )
+
+
+# approx_distinct → Spark's HLL++ AT THE REFERENCE'S PRECISION: the
+# reference's HLL is fixed at 2^14 registers (hyperloglog.rs HLL_P=14,
+# standard error 1.04/sqrt(16384) = 0.8125%); Spark's default rsd 5%
+# uses far fewer. Spark derives p = ceil(2·log2(1.106/rsd)) — constant
+# 1.106, NOT the textbook 1.04 (HyperLogLogPlusPlus.scala) — so
+# rsd=0.00865 ∈ [1.106/2^7, 1.106/2^6.75) lands p=14 exactly and both
+# engines run a 16384-register HLL. Small cardinalities land in the
+# linear-counting regime where both return the EXACT count
+# (aggregate.slt:1051's golden 100). Residual-bit hash artifacts can
+# still differ at large cardinalities (ahash vs xxhash64 — documented).
+@_calls("approx_distinct", cites=("aggregate.slt:1051",))
+def _approx_distinct(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str:
+    return f"approx_count_distinct({', '.join(args)}, 0.00865)"
+
+
+# to_timestamp_<unit>: polymorphic in the reference (datetime/
+# to_timestamp.rs) — integer = unit count since epoch, timestamp/
+# string = cast TRUNCATED to the unit. The typed SQL-macro form cast
+# timestamps through BIGINT (= seconds), garbling non-integer args.
+_TS_UNITS = {
+    "to_timestamp_seconds": ("SECOND", "timestamp_seconds(CAST({x} AS BIGINT))"),
+    "to_timestamp_millis": ("MILLISECOND", "timestamp_millis(CAST({x} AS BIGINT))"),
+    "to_timestamp_micros": ("MICROSECOND", "timestamp_micros(CAST({x} AS BIGINT))"),
+    "to_timestamp_nanos": (None, "timestamp_micros(CAST({x} AS BIGINT) div 1000)"),
+}
+
+
+@_calls(tuple(_TS_UNITS))
+def _to_timestamp(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 1:
+        return None
+    x = parts[0]
+    unit, intconv = _TS_UNITS[fn]
+    ts_form = (
+        f"date_trunc('{unit}', CAST({x} AS TIMESTAMP))"
+        if unit
+        else f"CAST({x} AS TIMESTAMP)"
+    )
+    return (
+        f"(CASE WHEN typeof({x}) LIKE 'timestamp%' "
+        f"OR typeof({x}) = 'string' OR typeof({x}) = 'date' "
+        f"THEN {ts_form} ELSE {intconv.format(x=x)} END)"
+    )
+
+
+# math edge semantics (functions/src/math): Rust's ln/log of 0 is
+# -Infinity and of negatives NaN (Spark: NULL); 1-arg log is BASE 10;
+# nanvl propagates NULL args; signum(+0) is 1.0
+def _log_guard(inner: str, x: str) -> str:
+    return (
+        f"(CASE WHEN ({x}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
+        f"WHEN ({x}) < 0 THEN CAST('NaN' AS DOUBLE) "
+        f"ELSE {inner} END)"
+    )
+
+
+@_calls(("ln", "log2", "log10", "log"))
+def _log(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    if fn != "log":
+        return _log_guard(f"{fn}({parts[0]})", parts[0]) if len(parts) == 1 else None
+    if len(parts) == 1:  # log(x) = log10 in the reference
+        return _log_guard(f"log10({parts[0]})", parts[0])
+    if len(parts) == 2:
+        # negative BASE is NaN too (f64::log semantics)
         return (
-            f"(CASE WHEN ({narg}) < 0 THEN "
-            + neg_form.format(s=sarg, n=narg)
-            + " ELSE "
-            + pos_form.format(s=sarg, n=narg)
+            f"(CASE WHEN ({parts[0]}) < 0 "
+            "THEN CAST('NaN' AS DOUBLE) ELSE "
+            + _log_guard(f"log({parts[0]}, {parts[1]})", parts[1])
             + " END)"
         )
+    return None
 
-    q = rewrite_calls(q, ("left", "right"), side)
 
-    # substr/substring with a NEGATIVE OR ZERO literal start follows
-    # Postgres virtual-position semantics in the reference (substr.rs:
-    # positions before 1 exist but hold nothing) — Spark counts negative
-    # starts from the string END. Only statically-negative literals are
-    # rewritten; column/expression starts keep Spark semantics.
-    def substr(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) not in (2, 3) or not re.fullmatch(r"-\d+|0", parts[1]):
-            return None
-        if len(parts) == 2:
-            return f"substring({parts[0]}, 1)"
-        # effective length shrinks by the virtual prefix (1 - start)
-        return (
-            f"substring({parts[0]}, 1, "
-            f"greatest(({parts[2]}) - {1 - int(parts[1])}, 0))"
-        )
-
-    q = rewrite_calls(q, ("substr", "substring"), substr)
-    # two-arg ltrim/rtrim/trim: the reference takes (string, chars); Spark's
-    # positional builtins take (trimStr, string) — swap
-    q = rewrite_calls(
-        q,
-        ("ltrim", "rtrim", "trim"),
-        lambda fn, parts, _after: (
-            f"{fn}({parts[1]}, {parts[0]})" if len(parts) == 2 else None
-        ),
-    )
-
-    # inline VALUES → reference column names (column1..columnN)
-    q = _wrap_values(q)
-    # SQL-surface aggregate spellings Spark names differently
-    for alias, native in (
-        ("var_sample", "var_samp"),
-        ("var_population", "var_pop"),
-        ("var", "var_samp"),
-        ("covar_sample", "covar_samp"),
-        ("covar_population", "covar_pop"),
-        ("covar", "covar_samp"),
-        ("mean", "avg"),
-    ):
-        q = re.sub(rf"\b{alias}\s*\(", f"{native}(", q, flags=re.IGNORECASE)
-
-    # corr: the reference computes it from POPULATION statistics and returns
-    # 0.0 (not NULL) when either side has zero variance — including a single
-    # pair, where var_pop = 0 (correlation.rs:161). Spark's corr NULLs the
-    # degenerate cases; wrap it. Pairwise-masked stddevs so one-sided NULLs
-    # can't flip the zero-variance test. n>=2 nonzero-variance values are
-    # identical (the (n-1)/n factors cancel in the ratio).
-    def corr(_fn: str, parts: list[str], after: str) -> str | None:
-        if (
-            len(parts) != 2
-            or parts[0].upper().startswith("DISTINCT")
-            # window form (corr(...) OVER ...): leave Spark's native corr —
-            # the CASE wrapper is an aggregate-position rewrite only
-            or re.match(r"\s*OVER\b", after, re.IGNORECASE)
-        ):
-            return None
-        x, y = parts
-        pair = f"(({x}) IS NOT NULL AND ({y}) IS NOT NULL)"
-        return (
-            f"CASE WHEN stddev_pop(CASE WHEN {pair} THEN ({x}) END) = 0 "
-            f"OR stddev_pop(CASE WHEN {pair} THEN ({y}) END) = 0 "
-            f"THEN 0.0 ELSE corr(({x}), ({y})) END"
-        )
-
-    q = rewrite_calls(q, "corr", corr)
-    # approx_distinct → Spark's HLL++ AT THE REFERENCE'S PRECISION: the
-    # reference's HLL is fixed at 2^14 registers (hyperloglog.rs HLL_P=14,
-    # standard error 1.04/sqrt(16384) = 0.8125%); Spark's default rsd 5%
-    # uses far fewer. Spark derives p = ceil(2·log2(1.106/rsd)) — constant
-    # 1.106, NOT the textbook 1.04 (HyperLogLogPlusPlus.scala) — so
-    # rsd=0.00865 ∈ [1.106/2^7, 1.106/2^6.75) lands p=14 exactly and both
-    # engines run a 16384-register HLL. Small cardinalities land in the
-    # linear-counting regime where both return the EXACT count
-    # (aggregate.slt:1051's golden 100). Residual-bit hash artifacts can
-    # still differ at large cardinalities (ahash vs xxhash64 — documented).
-    q = rewrite_calls(
-        q,
-        "approx_distinct",
-        lambda _fn, args, _after: f"approx_count_distinct({', '.join(args)}, 0.00865)",
-    )
-    # to_timestamp_<unit>: polymorphic in the reference (datetime/
-    # to_timestamp.rs) — integer = unit count since epoch, timestamp/
-    # string = cast TRUNCATED to the unit. The typed SQL-macro form cast
-    # timestamps through BIGINT (= seconds), garbling non-integer args.
-    units = {
-        "to_timestamp_seconds": ("SECOND", "timestamp_seconds(CAST({x} AS BIGINT))"),
-        "to_timestamp_millis": ("MILLISECOND", "timestamp_millis(CAST({x} AS BIGINT))"),
-        "to_timestamp_micros": ("MICROSECOND", "timestamp_micros(CAST({x} AS BIGINT))"),
-        "to_timestamp_nanos": (None, "timestamp_micros(CAST({x} AS BIGINT) div 1000)"),
-    }
-
-    def to_timestamp(fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 1:
-            return None
-        x = parts[0]
-        unit, intconv = units[fn]
-        ts_form = (
-            f"date_trunc('{unit}', CAST({x} AS TIMESTAMP))"
-            if unit
-            else f"CAST({x} AS TIMESTAMP)"
-        )
-        return (
-            f"(CASE WHEN typeof({x}) LIKE 'timestamp%' "
-            f"OR typeof({x}) = 'string' OR typeof({x}) = 'date' "
-            f"THEN {ts_form} ELSE {intconv.format(x=x)} END)"
-        )
-
-    q = rewrite_calls(q, tuple(units), to_timestamp)
-
-    # math edge semantics (functions/src/math): Rust's ln/log of 0 is
-    # -Infinity and of negatives NaN (Spark: NULL); 1-arg log is BASE 10;
-    # nanvl propagates NULL args; signum(+0) is 1.0
-    def _log_guard(inner: str, x: str) -> str:
-        return (
-            f"(CASE WHEN ({x}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
-            f"WHEN ({x}) < 0 THEN CAST('NaN' AS DOUBLE) "
-            f"ELSE {inner} END)"
-        )
-
-    def log(fn: str, parts: list[str], _after: str) -> str | None:
-        if fn != "log":
-            return _log_guard(f"{fn}({parts[0]})", parts[0]) if len(parts) == 1 else None
-        if len(parts) == 1:  # log(x) = log10 in the reference
-            return _log_guard(f"log10({parts[0]})", parts[0])
-        if len(parts) == 2:
-            # negative BASE is NaN too (f64::log semantics)
-            return (
-                f"(CASE WHEN ({parts[0]}) < 0 "
-                "THEN CAST('NaN' AS DOUBLE) ELSE "
-                + _log_guard(f"log({parts[0]}, {parts[1]})", parts[1])
-                + " END)"
-            )
+@_calls("nanvl")
+def _nanvl(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
         return None
-
-    q = rewrite_calls(q, ("ln", "log2", "log10", "log"), log)
-
-    def nanvl(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 2:
-            return None
-        x, y = parts
-        return (
-            f"(CASE WHEN ({x}) IS NULL OR ({y}) IS NULL THEN NULL "
-            f"ELSE nanvl({x}, {y}) END)"
-        )
-
-    q = rewrite_calls(q, "nanvl", nanvl)
-    q = rewrite_calls(
-        q,
-        "signum",
-        lambda _fn, args, _after: (
-            f"(CASE WHEN ({', '.join(args)}) = 0 THEN CAST(1.0 AS DOUBLE) "
-            f"ELSE sign({', '.join(args)}) END)"
-        ),
+    x, y = parts
+    return (
+        f"(CASE WHEN ({x}) IS NULL OR ({y}) IS NULL THEN NULL "
+        f"ELSE nanvl({x}, {y}) END)"
     )
-    # integer-literal division TRUNCATES in the reference (Int64 / Int64
-    # → Int64); Spark's / is always fractional. Only statically-integer
-    # literal pairs are rewritten — column operand types are unknowable
-    # at the text layer (documented §1.2 divergence). A parenthesized
-    # bare literal is the same operand one token away — `(7)/(2)` must
-    # truncate like `7/2` (r12 verdict What's-wrong #2); the lookbehind
-    # keeps `f(7)/(2)` (a CALL result, unknowable type) out of the fold.
-    q = re.sub(
-        r"(?<![\w.])(\(\s*\d+\s*\)|\d+)\s*/\s*(\(\s*\d+\s*\)|\d+)(?![\w.])",
-        r"(\1 div \2)",
-        q,
+
+
+@_calls("signum")
+def _signum(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str:
+    return (
+        f"(CASE WHEN ({', '.join(args)}) = 0 THEN CAST(1.0 AS DOUBLE) "
+        f"ELSE sign({', '.join(args)}) END)"
     )
-    # DDL/cast type spelling Spark's parser rejects
-    q = re.sub(
-        r"\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b", "TIMESTAMP", q, flags=re.IGNORECASE
-    )
+
+
+# integer-literal division TRUNCATES in the reference (Int64 / Int64
+# → Int64); Spark's / is always fractional. Only statically-integer
+# literal pairs are rewritten — column operand types are unknowable
+# at the text layer (documented §1.2 divergence). A parenthesized
+# bare literal is the same operand one token away — `(7)/(2)` must
+# truncate like `7/2` (r12 verdict What's-wrong #2); the lookbehind
+# keeps `f(7)/(2)` (a CALL result, unknowable type) out of the fold.
+_sub(
+    "int_literal_division",
+    r"(?<![\w.])(\(\s*\d+\s*\)|\d+)\s*/\s*(\(\s*\d+\s*\)|\d+)(?![\w.])",
+    r"(\1 div \2)",
+)
+# DDL/cast type spelling Spark's parser rejects
+_sub("timestamp_with_time_zone", r"\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b", "TIMESTAMP")
+
+
+@_pass(r"\bIN\s*\(")
+def _in_subquery_parens(q: str, _lx: Lexed, _scope: Scope) -> str:
     # IN ((SELECT ...)) — Spark's parser rejects the doubled parens the
     # reference accepts around a subquery list
     pos = 0
     while True:
         m = re.compile(r"\bIN\s*\(", re.IGNORECASE).search(q, pos)
         if m is None:
-            break
+            return q
         o = m.end() - 1
         c = _match_paren(q, o)
         if c is None:
@@ -2088,154 +2170,157 @@ def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
             q = q[: o + 1] + inner[1:-1] + q[c:]
         pos = o + 1
 
-    # struct(...) with positional args: the reference names fields c0..cN
-    # (struct.rs); Spark derives col1..colN / source column names
-    def struct(_fn: str, parts: list[str], _after: str) -> str | None:
-        if any(not p or p == "*" or p.endswith(".*") for p in parts) or any(
-            re.search(r"\bAS\s+\w+\s*$", p, re.IGNORECASE) for p in parts
-        ):
-            return None
-        return (
-            "named_struct("
-            + ", ".join(f"'c{i}', {p}" for i, p in enumerate(parts))
-            + ")"
-        )
 
-    q = rewrite_calls(q, "struct", struct)
-
-    # RIGHT SEMI/ANTI JOIN → mirrored LEFT form (Spark has left-only
-    # semi/anti; the relation swap is exactly the reference's planning)
-    q = re.sub(
-        r"\bFROM\s+([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+"
-        r"RIGHT\s+(SEMI|ANTI)\s+JOIN\s+"
-        r"([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+(ON)\b",
-        r"FROM \3 LEFT \2 JOIN \1 \4",
-        q,
-        flags=re.IGNORECASE,
+# struct(...) with positional args: the reference names fields c0..cN
+# (struct.rs); Spark derives col1..colN / source column names
+@_calls("struct")
+def _struct(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if any(not p or p == "*" or p.endswith(".*") for p in parts) or any(
+        re.search(r"\bAS\s+\w+\s*$", p, re.IGNORECASE) for p in parts
+    ):
+        return None
+    return (
+        "named_struct("
+        + ", ".join(f"'c{i}', {p}" for i, p in enumerate(parts))
+        + ")"
     )
 
-    # array_agg KEEPS null elements in the reference (array_agg.rs
-    # accumulates the raw column, nulls included); Spark's collect_list
-    # drops them. DISTINCT form: re-attach one typed NULL when the input
-    # had any. Plain form: collect non-null STRUCT wrappers and unwrap.
-    def array_agg(_fn: str, args: list[str], after: str) -> str | None:
-        argstr = ", ".join(args)
-        md = re.match(r"\s*DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
-        if _top_level_order_by(argstr) is not None:
+
+# RIGHT SEMI/ANTI JOIN → mirrored LEFT form (Spark has left-only
+# semi/anti; the relation swap is exactly the reference's planning)
+_sub(
+    "right_semi_anti_join",
+    r"\bFROM\s+([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+"
+    r"RIGHT\s+(SEMI|ANTI)\s+JOIN\s+"
+    r"([A-Za-z_][\w]*(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?)\s+(ON)\b",
+    r"FROM \3 LEFT \2 JOIN \1 \4",
+)
+
+
+# array_agg KEEPS null elements in the reference (array_agg.rs
+# accumulates the raw column, nulls included); Spark's collect_list
+# drops them. DISTINCT form: re-attach one typed NULL when the input
+# had any. Plain form: collect non-null STRUCT wrappers and unwrap.
+@_calls("array_agg")
+def _array_agg(_lx: Lexed, _fn: str, args: list[str], after: str) -> str | None:
+    argstr = ", ".join(args)
+    md = re.match(r"\s*DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
+    if _top_level(argstr, _ORDER_BY) is not None:
+        return None
+    if not md:
+        x = argstr.strip()
+        if not x or "*" in x or re.match(r"\s*OVER\b", after, re.IGNORECASE):
+            # window form: the transform wrapper would detach OVER from
+            # the aggregate — leave Spark's native (null-dropping)
             return None
-        if not md:
-            x = argstr.strip()
-            if not x or "*" in x or re.match(r"\s*OVER\b", after, re.IGNORECASE):
-                # window form: the transform wrapper would detach OVER from
-                # the aggregate — leave Spark's native (null-dropping)
-                return None
-            return f"transform(array_agg(struct(({x}) AS __v)), s -> s.__v)"
-        x = md.group(1).strip()
-        typed_null = f"array(first(CASE WHEN false THEN {x} END))"
-        return (
-            f"(CASE WHEN count(*) > count({x}) "
-            f"THEN concat({typed_null}, array_agg(DISTINCT {x})) "
-            f"ELSE array_agg(DISTINCT {x}) END)"
-        )
-
-    q = rewrite_calls(q, "array_agg", array_agg)
-
-    # array_intersect keeps FIRST-array element order in the reference
-    # (set_ops.rs); Spark's hash-based kernel reorders — express as an
-    # order-preserving null-safe filter
-    def array_intersect(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 2:
-            return None
-        a1, a2 = parts
-        # the reference's kernel emits the distinct intersection ASCENDING
-        # (array.slt 5455-5482: [false, true], [1, 3], [11, 33])
-        return (
-            f"array_sort(filter(array_distinct({a1}), "
-            f"x -> exists({a2}, y -> y <=> x)))"
-        )
-
-    q = rewrite_calls(q, "array_intersect", array_intersect)
-
-    # array_append(NULL, v) builds [v] in the reference (array_append.rs
-    # treats a NULL list as empty); Spark propagates the NULL
-    def array_append(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 2:
-            return None
-        arr, v = parts
-        return (
-            f"(CASE WHEN ({arr}) IS NULL THEN array({v}) "
-            f"ELSE array_append({arr}, {v}) END)"
-        )
-
-    q = rewrite_calls(q, "array_append", array_append)
-
-    # array_remove removes the FIRST occurrence in the reference
-    # (array_remove.rs; Spark's removes all) and accepts NULL needles —
-    # null-safe first-index lookup + splice. array_remove_all IS Spark's.
-    def remove(fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 2:
-            return None
-        arr, v = parts
-        if fn == "array_remove_all":
-            # NULL needle keeps the array in the reference; Spark's
-            # array_remove would propagate NULL
-            return (
-                f"(CASE WHEN ({v}) IS NULL THEN {arr} "
-                f"ELSE array_remove({arr}, {v}) END)"
-            )
-        p_expr = (
-            f"try_element_at(filter(sequence(1, size({arr})), "
-            f"i -> try_element_at({arr}, i) <=> {v}), 1)"
-        )
-        return (
-            # size=0 first: sequence(1, 0) would step BACKWARD to index 0
-            f"(CASE WHEN ({arr}) IS NULL THEN NULL "
-            f"WHEN size({arr}) = 0 THEN {arr} "
-            f"WHEN {p_expr} IS NULL THEN {arr} "
-            f"ELSE concat(slice({arr}, 1, {p_expr} - 1), "
-            f"slice({arr}, {p_expr} + 1, size({arr}) - {p_expr})) END)"
-        )
-
-    q = rewrite_calls(q, ("array_remove_all", "array_remove"), remove)
-
-    # cardinality counts LEAF elements recursively and returns NULL for a
-    # flat empty array (functions-array cardinality.rs — not Spark's size)
-    def cardinality(_fn: str, parts: list[str], _after: str) -> str | None:
-        if len(parts) != 1:
-            return None
-        x = parts[0]
-        return (
-            f"(CASE WHEN typeof({x}) LIKE 'array<array<array%' "
-            f"THEN size(flatten(flatten({x}))) "
-            f"WHEN typeof({x}) LIKE 'array<array%' "
-            f"THEN size(flatten({x})) ELSE nullif(size({x}), 0) END)"
-        )
-
-    q = rewrite_calls(q, "cardinality", cardinality)
-    # functions-array SQL surface (templates mirror the registry)
-    q = _rewrite_array_fns(q)
-    # postfix subscripts: 1-based indexing / inclusive slices
-    q = _rewrite_subscripts(q, lx)
-    # unnest → explode/inline where a Spark generator can express it
-    q = _rewrite_unnest(q)
-    # ordered-set aggregates: agg(expr ORDER BY keys) → sorted collect
-    q = _rewrite_ordered_aggs(q)
-    # ranking/offset window functions: drop frames Spark rejects
-    q = _strip_rank_frames(q)
-    # frame shorthands + narrow-int RANGE keys Spark rejects
-    q = _fix_window_specs(q)
-    # make the reference's (Postgres) default null placement explicit
-    q = _add_null_ordering(q)
-
-    # string-literal column aliases (``AS 'order count'`` — accepted by
-    # the reference's parser) → backticked identifiers
-    q = re.sub(
-        rf"\bAS\s+({LIT})",
-        lambda m: f"AS `{lx.string(m.group(1))}`",
-        q,
-        flags=re.IGNORECASE,
+        return f"transform(array_agg(struct(({x}) AS __v)), s -> s.__v)"
+    x = md.group(1).strip()
+    typed_null = f"array(first(CASE WHEN false THEN {x} END))"
+    return (
+        f"(CASE WHEN count(*) > count({x}) "
+        f"THEN concat({typed_null}, array_agg(DISTINCT {x})) "
+        f"ELSE array_agg(DISTINCT {x}) END)"
     )
-    return lx.unshield(q)
+
+
+# array_intersect keeps FIRST-array element order in the reference
+# (set_ops.rs); Spark's hash-based kernel reorders — express as an
+# order-preserving null-safe filter
+@_calls("array_intersect", cites=("array.slt:5455",))
+def _array_intersect(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
+        return None
+    a1, a2 = parts
+    # the reference's kernel emits the distinct intersection ASCENDING
+    # (array.slt 5455-5482: [false, true], [1, 3], [11, 33])
+    return (
+        f"array_sort(filter(array_distinct({a1}), "
+        f"x -> exists({a2}, y -> y <=> x)))"
+    )
+
+
+# array_append(NULL, v) builds [v] in the reference (array_append.rs
+# treats a NULL list as empty); Spark propagates the NULL
+@_calls("array_append")
+def _array_append(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
+        return None
+    arr, v = parts
+    return (
+        f"(CASE WHEN ({arr}) IS NULL THEN array({v}) "
+        f"ELSE array_append({arr}, {v}) END)"
+    )
+
+
+# array_remove removes the FIRST occurrence in the reference
+# (array_remove.rs; Spark's removes all) and accepts NULL needles —
+# null-safe first-index lookup + splice. array_remove_all IS Spark's.
+@_calls(("array_remove_all", "array_remove"))
+def _array_remove(_lx: Lexed, fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 2:
+        return None
+    arr, v = parts
+    if fn == "array_remove_all":
+        # NULL needle keeps the array in the reference; Spark's
+        # array_remove would propagate NULL
+        return (
+            f"(CASE WHEN ({v}) IS NULL THEN {arr} "
+            f"ELSE array_remove({arr}, {v}) END)"
+        )
+    p_expr = (
+        f"try_element_at(filter(sequence(1, size({arr})), "
+        f"i -> try_element_at({arr}, i) <=> {v}), 1)"
+    )
+    return (
+        # size=0 first: sequence(1, 0) would step BACKWARD to index 0
+        f"(CASE WHEN ({arr}) IS NULL THEN NULL "
+        f"WHEN size({arr}) = 0 THEN {arr} "
+        f"WHEN {p_expr} IS NULL THEN {arr} "
+        f"ELSE concat(slice({arr}, 1, {p_expr} - 1), "
+        f"slice({arr}, {p_expr} + 1, size({arr}) - {p_expr})) END)"
+    )
+
+
+# cardinality counts LEAF elements recursively and returns NULL for a
+# flat empty array (functions-array cardinality.rs — not Spark's size)
+@_calls("cardinality")
+def _cardinality(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | None:
+    if len(parts) != 1:
+        return None
+    x = parts[0]
+    return (
+        f"(CASE WHEN typeof({x}) LIKE 'array<array<array%' "
+        f"THEN size(flatten(flatten({x}))) "
+        f"WHEN typeof({x}) LIKE 'array<array%' "
+        f"THEN size(flatten({x})) ELSE nullif(size({x}), 0) END)"
+    )
+
+
+# functions-array SQL surface (templates mirror the registry)
+_calls(_ARRAY_FNS, cites=("array.slt:6523",))(_array_fns)
+# postfix subscripts: 1-based indexing / inclusive slices
+_pass(r"\[")(_subscripts)
+# unnest → explode/inline where a Spark generator can express it
+_pass(r"\bunnest\s*\(")(_unnest)
+# ordered-set aggregates: agg(expr ORDER BY keys) → sorted collect
+_calls(_ORDERED_AGG_FNS)(_ordered_aggs)
+# ranking/offset window functions: drop frames Spark rejects
+_pass(rf"\b(?:{'|'.join(_FRAMELESS_WINDOW_FNS)})\s*\(")(_strip_rank_frames)
+# frame shorthands + narrow-int RANGE keys Spark rejects
+_pass(r"\bOVER\s*\(")(_fix_window_specs)
+# make the reference's (Postgres) default null placement explicit
+_pass(r"\bORDER\s+BY\b")(_add_null_ordering)
+# string-literal column aliases (``AS 'order count'`` — accepted by
+# the reference's parser) → backticked identifiers
+_sub("string_aliases", rf"\bAS\s+({LIT})", lambda m, lx: f"AS `{lx.string(m.group(1))}`")
+
+REWRITE_PASSES = tuple(_PASSES)
+
+
+def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
+    """``lx`` after the stateless passes, literals restored: the front
+    end without a session."""
+    return lx.unshield(run_passes(REWRITE_PASSES, lx, Scope(pfad=pfad)))
 
 
 def _lower_approx_percentile(

@@ -1,18 +1,17 @@
 """The type-aware SQL rewrites: the passes that read the types of the
 columns a statement names.
 
-``SessionContext._spark_sql`` runs ``TYPED_PASSES`` in order over a
-statement's shielded text, before the stateless ``_rewrite_sql`` layer.
-Each entry is ``(name, trigger, fn)``: ``trigger`` is a cheap pattern
-searched in the current text, so a statement with no rewrite surface skips
-the pass, and ``fn(ctx, q, lx, rel)`` returns the rewritten text. This is
-the shape of DataFusion's analyzer rule list (analyzer/mod.rs:90-94).
-
-Every pass reads types through one ``Relations`` value per statement. It
-resolves the statement's FROM/JOIN relations against the catalog at most
-once, on first use, so a statement whose passes type nothing looks nothing
-up. A pass whose operand does not resolve (subquery FROMs, expressions,
-ambiguous columns) keeps Spark's semantics: the documented §1.2 residual.
+``TYPED_PASSES`` holds them as ``Pass`` records (sql/rewrite.py), and
+``SessionContext._spark_sql`` runs them first, then the stateless
+``REWRITE_PASSES``, in one ``run_passes`` loop under the same contract:
+the order is fixed, and a pass runs only when its trigger matches the
+current text, so a trigger must match every text its pass would change.
+A pass reads types through ``scope.rel``, the statement's one
+``Relations`` value. It resolves the statement's FROM/JOIN relations
+against the catalog at most once, on first use, so a statement whose
+passes type nothing looks nothing up. A pass whose operand does not
+resolve (subquery FROMs, expressions, ambiguous columns) keeps Spark's
+semantics: the documented §1.2 residual.
 """
 
 from __future__ import annotations
@@ -37,6 +36,8 @@ from pyspark.sql.types import (
 
 from arrow_datafusion_spark.sql.lex import LIT, Lexed, quote
 from arrow_datafusion_spark.sql.rewrite import (
+    Pass,
+    Scope,
     _lower_approx_percentile,
     _match_paren,
     _split_top_level,
@@ -296,7 +297,7 @@ def _inline_values(q: str, pos: int) -> tuple[int, str, list] | None:
 # -- the passes, in TYPED_PASSES order ---------------------------------------
 
 
-def tz_date_trunc(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def tz_date_trunc(q: str, lx: Lexed, scope: Scope) -> str:
     """Zone-aware date_trunc over NAMED-TZ columns (timestamps.slt #8899
     battery; datetime/date_trunc.rs truncates in the value's own time
     zone): when the argument column's view declared a
@@ -309,8 +310,8 @@ def tz_date_trunc(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     reference (the Berlin DST hour repeats in its golden — a wall-clock
     path could not produce that), and instants are zone-independent.
     Unresolvable shapes keep Spark's UTC trunc (§1.2 residual)."""
-    zones = ctx._column_tz()
-    if not zones or rel.schema is None:
+    zones = scope.ctx._column_tz()
+    if not zones or scope.rel.schema is None:
         return q
 
     def call(_fn: str, parts: list[str], _after: str) -> str | None:
@@ -321,7 +322,7 @@ def tz_date_trunc(ctx, q: str, lx: Lexed, rel: Relations) -> str:
         if unit not in ("day", "week", "month", "quarter", "year") or mcol is None:
             return None
         col = mcol.group(2).lower()
-        tzs = {zones.get(t, {}).get(col) for t in rel.tables} - {None}
+        tzs = {zones.get(t, {}).get(col) for t in scope.rel.tables} - {None}
         if len(tzs) != 1:
             return None
         tz_lit = lx.add(quote(next(iter(tzs))))
@@ -333,7 +334,7 @@ def tz_date_trunc(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     return rewrite_calls(q, "date_trunc", call)
 
 
-def median(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def median(q: str, lx: Lexed, scope: Scope) -> str:
     """Type-preserving exact median (median.rs calculate_median): the
     reference returns the INPUT type — for an even count the two middle
     values are averaged in the native type's arithmetic, i.e. TRUNCATING
@@ -355,7 +356,7 @@ def median(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     value-identical for odd counts and for floats; even integer/decimal
     counts then interpolate in double instead of truncating — the
     documented trade at scale."""
-    if rel.schema is None or rel.over_cap():
+    if scope.rel.schema is None or scope.rel.over_cap():
         return q
 
     def call(_fn: str, args: list[str], after: str) -> str | None:
@@ -364,7 +365,7 @@ def median(ctx, q: str, lx: Lexed, rel: Relations) -> str:
         argstr = ", ".join(args)
         md = re.match(r"DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
         x = (md.group(1) if md else argstr).strip()
-        dtype = rel.column_type(x)
+        dtype = scope.rel.column_type(x)
         collect = "collect_set" if md else "collect_list"
         A = f"array_sort({collect}({x}))"
         m1 = f"element_at({A}, CAST((size({A}) + 1) div 2 AS INT))"
@@ -396,7 +397,7 @@ def median(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     return rewrite_calls(q, "median", call)
 
 
-def decimal_avg(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def decimal_avg(q: str, lx: Lexed, scope: Scope) -> str:
     """Decimal AVG with the reference's TRUNCATING division
     (functions-aggregate/src/average.rs DecimalAverager: the i128 sum is
     integer-divided by the count, truncating toward zero at result scale
@@ -421,7 +422,7 @@ def decimal_avg(ctx, q: str, lx: Lexed, rel: Relations) -> str:
         if re.match(r"\s*(OVER|FILTER)\b", after, re.IGNORECASE):
             return None
         arg = ", ".join(args)
-        dt = rel.column_type(arg)
+        dt = scope.rel.column_type(arg)
         if not isinstance(dt, DecimalType) or dt.scale + 4 > 19:
             return None
         p, s = dt.precision, dt.scale
@@ -447,7 +448,7 @@ _DEC_DIVISION = re.compile(
 )
 
 
-def decimal_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def decimal_division(q: str, lx: Lexed, scope: Scope) -> str:
     """Decimal / decimal division with arrow-rs's result type and
     TRUNCATION (arrow-arith numeric.rs decimal ``Op::Div``: result scale
     s1+4, precision min(p1+s2+4, 38); the i128 quotient of
@@ -474,7 +475,7 @@ def decimal_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
         )
         if cm:
             return int(cm.group(1)), int(cm.group(2))
-        dt = rel.column_type(tok)
+        dt = scope.rel.column_type(tok)
         return (dt.precision, dt.scale) if isinstance(dt, DecimalType) else None
 
     def repl(m: re.Match) -> str:
@@ -519,7 +520,7 @@ def decimal_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
 
 # the functions deep_array_fns lowers, by kind. cardinality counts LEAF
 # elements recursively, NULL for a flat empty array (functions-array
-# cardinality.rs). The runtime typeof-CASE fallback (in _rewrite_sql)
+# cardinality.rs). The runtime typeof-CASE fallback (the cardinality pass)
 # cannot type-check for FLAT inputs — static depth makes those exact too.
 # Same for array_dims (per-level sizes via a try_element_at chain) and
 # 2-arg array_length (size along a dimension): their templates' probe
@@ -576,7 +577,7 @@ def _array_arg_depth(arg: str, rel: Relations, lx: Lexed) -> int | None:
     return d or None
 
 
-def deep_array_fns(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def deep_array_fns(q: str, lx: Lexed, scope: Scope) -> str:
     """flatten / array_to_string over NESTED arrays, the reference's
     recursive leaf semantics (functions-array flatten.rs flattens
     RECURSIVELY; array_to_string joins the leaves of any nesting). Spark's
@@ -599,7 +600,7 @@ def deep_array_fns(ctx, q: str, lx: Lexed, rel: Relations) -> str:
             kind == "len" and len(parts) != 2
         ):
             return None
-        d = _array_arg_depth(parts[0], rel, lx)
+        d = _array_arg_depth(parts[0], scope.rel, lx)
         if d is None or (kind == "join" and d <= 1):
             return None
         arg = parts[0]
@@ -641,7 +642,7 @@ def deep_array_fns(ctx, q: str, lx: Lexed, rel: Relations) -> str:
 
 
 # t::bigint — the lookbehind blocks the tail of a ::timestamp::bigint
-# chain (handled by the chain rewrite in _rewrite_sql)
+# chain (handled by the timestamp_bigint_casts pass)
 _COLON_BIGINT = re.compile(
     rf"(?<![\w.:])({COL})\s*::\s*BIGINT\b(?:\s*/\s*(\d+))?", re.IGNORECASE
 )
@@ -650,7 +651,7 @@ _CAST_BIGINT = re.compile(
 )
 
 
-def ts_bigint_bare(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def ts_bigint_bare(q: str, lx: Lexed, scope: Scope) -> str:
     """Bare (hop-less) timestamp→integer cast: ``CAST(t AS BIGINT)`` /
     ``t::bigint`` over a TimestampType column lowers to
     ``unix_micros(t) * 1000`` — the epoch-NS count, the same unit the
@@ -667,7 +668,7 @@ def ts_bigint_bare(ctx, q: str, lx: Lexed, rel: Relations) -> str:
 
     def _repl(m: "re.Match[str]") -> str:
         src, dv = m.group(1), m.group(2)
-        if not isinstance(rel.column_type(src), (TimestampType, TimestampNTZType)):
+        if not isinstance(scope.rel.column_type(src), (TimestampType, TimestampNTZType)):
             return m.group(0)
         ns = f"(unix_micros({src}) * 1000)"
         return f"({ns} div {dv})" if dv else ns
@@ -694,19 +695,19 @@ _INT_DIVISION = re.compile(
 _INT_CAST = re.compile(rf"(?:{_CAST_INT}|{_COLON_INT})\s*$", re.IGNORECASE)
 
 
-def int_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def int_division(q: str, lx: Lexed, scope: Scope) -> str:
     """Integer COLUMN division truncates in the reference (Int64/Int64 →
     Int64, like Rust's `/`); Spark's `/` is always fractional. The
-    literal/literal pair is folded in _rewrite_sql; this closes the column
-    cases the text layer alone cannot type: `a / b` where each operand is
-    an integer literal or a column of INTEGRAL type lowers to `a div b` —
-    Spark's `div` is Int64 truncating division, the reference's exact
-    semantics. Subqueries in FROM and non-integral operands keep Spark's
-    `/` (documented §1.2 residual). Statically-integral operand spellings
-    — integer literals, integer CASTs in either ``CAST(x AS T)`` or
-    ``x::T`` form, and redundant parens around any of those — need no
-    schema, so they divide truncating even in FROM-less or
-    unresolvable-FROM statements."""
+    literal/literal pair is folded by the int_literal_division pass; this
+    closes the column cases the text layer alone cannot type: `a / b`
+    where each operand is an integer literal or a column of INTEGRAL type
+    lowers to `a div b` — Spark's `div` is Int64 truncating division, the
+    reference's exact semantics. Subqueries in FROM and non-integral
+    operands keep Spark's `/` (documented §1.2 residual).
+    Statically-integral operand spellings — integer literals, integer
+    CASTs in either ``CAST(x AS T)`` or ``x::T`` form, and redundant parens
+    around any of those — need no schema, so they divide truncating even
+    in FROM-less or unresolvable-FROM statements."""
 
     def integral(tok: str) -> bool:
         if re.fullmatch(r"\d+", tok) or _INT_CAST.match(tok):
@@ -718,7 +719,7 @@ def int_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
         if pm:  # parenthesized operand — same token one () away
             return integral(pm.group(1))
         return isinstance(
-            rel.column_type(tok), (ByteType, ShortType, IntegerType, LongType)
+            scope.rel.column_type(tok), (ByteType, ShortType, IntegerType, LongType)
         )
 
     def repl(m: re.Match) -> str:
@@ -731,7 +732,7 @@ def int_division(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     return _INT_DIVISION.sub(repl, q)
 
 
-def f32_math(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def f32_math(q: str, lx: Lexed, scope: Scope) -> str:
     """Float32 math kernels. §1.2 widens f32 compute to f64, and the slt
     comparator absorbs that at ≤9 significant digits — but three corpus
     shapes carry f32 artifacts OUTSIDE that window, where the reference
@@ -762,7 +763,7 @@ def f32_math(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     Every other shape keeps Spark's f64 math (§1.2 policy)."""
 
     def call(fn: str, args: list[str], _after: str) -> str | None:
-        if not isinstance(rel.column_type(args[0]), FloatType) or len(args) > (
+        if not isinstance(scope.rel.column_type(args[0]), FloatType) or len(args) > (
             1 if fn == "sqrt" else 2
         ):
             return None
@@ -780,7 +781,7 @@ def f32_math(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     return rewrite_calls(q, ("round", "sqrt"), call)
 
 
-def approx_percentile(ctx, q: str, lx: Lexed, rel: Relations) -> str:
+def approx_percentile(q: str, lx: Lexed, scope: Scope) -> str:
     """approx_percentile_cont / approx_median /
     approx_percentile_cont_with_weight → the faithful t-digest aggregate
     (functions/tdigest.py — the reference's merging-digest semantics,
@@ -808,30 +809,31 @@ def approx_percentile(ctx, q: str, lx: Lexed, rel: Relations) -> str:
     unsized and fail open, documented."""
     from arrow_datafusion_spark.functions.tdigest import register_udafs
 
-    if not getattr(ctx, "_tdigest_registered", False):
-        register_udafs(ctx.spark)
-        ctx._tdigest_registered = True
-    return _lower_approx_percentile(q, lx, rel.column_type, rel.over_cap())
+    if not getattr(scope.ctx, "_tdigest_registered", False):
+        register_udafs(scope.ctx.spark)
+        scope.ctx._tdigest_registered = True
+    return _lower_approx_percentile(q, lx, scope.rel.column_type, scope.rel.over_cap())
 
 
-# (name, trigger, fn), run in this order. A trigger is searched in the
-# text as the earlier passes left it.
+# Run in this order, before sql/rewrite.py REWRITE_PASSES.
 TYPED_PASSES = (
-    ("tz_date_trunc", re.compile(r"\bdate_trunc\s*\(", re.IGNORECASE), tz_date_trunc),
-    ("median", re.compile(r"\bmedian\s*\(", re.IGNORECASE), median),
-    ("decimal_avg", re.compile(r"\bavg\s*\(", re.IGNORECASE), decimal_avg),
-    ("decimal_division", re.compile("/"), decimal_division),
-    (
+    Pass("tz_date_trunc", re.compile(r"\bdate_trunc\s*\(", re.I), tz_date_trunc),
+    Pass("median", re.compile(r"\bmedian\s*\(", re.I), median),
+    Pass("decimal_avg", re.compile(r"\bavg\s*\(", re.I), decimal_avg),
+    Pass("decimal_division", re.compile("/"), decimal_division, ("decimal.slt:397",)),
+    Pass(
         "deep_array_fns",
-        re.compile("flatten|to_string|_join|cardinality|dims|length", re.IGNORECASE),
+        re.compile("flatten|to_string|_join|cardinality|dims|length", re.I),
         deep_array_fns,
     ),
-    ("ts_bigint_bare", re.compile("BIGINT|::", re.IGNORECASE), ts_bigint_bare),
-    ("int_division", re.compile("/"), int_division),
-    ("f32_math", re.compile(r"\b(?:round|sqrt)\s*\(", re.IGNORECASE), f32_math),
-    (
+    Pass("ts_bigint_bare", re.compile("BIGINT|::", re.I), ts_bigint_bare),
+    Pass("int_division", re.compile("/"), int_division),
+    Pass(
+        "f32_math", re.compile(r"\b(?:round|sqrt)\s*\(", re.I), f32_math, ("scalar.slt:567",)
+    ),
+    Pass(
         "approx_percentile",
-        re.compile(r"\bapprox_(?:median|percentile_cont)", re.IGNORECASE),
+        re.compile(r"\bapprox_(?:median|percentile_cont)", re.I),
         approx_percentile,
     ),
 )

@@ -4,9 +4,10 @@
 statement: the input SQL and either the exact text the rewrite layer
 produces or the class of the error it raises. Two kinds of record:
 
-- *pure* records replay ``lex`` → ``_rewrite_sql`` (which unshields on
-  return) with no Spark session. Their sources are every ``SELECT``/``WITH``
-  string constant in ``tests/test_*.py`` and
+- *pure* records replay ``lex`` → the stateless passes
+  (``sql/rewrite.py`` ``REWRITE_PASSES``, via ``_rewrite_sql``, which
+  unshields on return) with no Spark session. Their sources are every
+  ``SELECT``/``WITH`` string constant in ``tests/test_*.py`` and
   ``arrow_datafusion_spark/queries/*.py`` and the hand-written ``EXTRA``
   statements below, which reach every call rewrite; a statement that
   carries ``arrow_typeof`` is also replayed under
@@ -16,12 +17,14 @@ produces or the class of the error it raises. Two kinds of record:
   against live table schemas, and ``spark.sql`` is stubbed so the text it
   would receive is captured instead of planned.
 
-``tools/bless_frontend_rewrite.py`` regenerates the file.
+``tools/bless_frontend_rewrite.py`` regenerates the file. ``unfired``
+names the passes no record reaches.
 """
 
 from __future__ import annotations
 
 import ast
+import contextlib
 import difflib
 import glob
 import json
@@ -118,6 +121,12 @@ EXTRA = (
     "SELECT array_has_all(array_has_all(a, b), c), cardinality(cardinality(a)) FROM t",
     "SELECT range(range(3)), array_distinct(array_distinct(a)) FROM t",
     "SELECT date_bin(INTERVAL '1 day', date_bin(INTERVAL '1 hour', ts)) FROM t",
+    # every regex of the multi-regex passes, and the passes no source reaches
+    "SELECT CAST(CAST(x AS INT) AS DATE), CAST(x::INT AS DATE), CAST(x AS INT)::DATE FROM t",
+    "SELECT CAST(TIMESTAMP '2020-01-01 00:00:00' AS BIGINT), CAST('2020-01-01'::timestamp AS BIGINT) FROM t",
+    "SELECT CAST(CAST(i AS TIMESTAMP) AS BIGINT), TIMESTAMP '2020-01-01'::timestamp::bigint / 10 FROM t",
+    "SELECT TIME '12:00:00.123456789', TIME '01:02:03.5', CAST(s AS TIMESTAMP WITH TIME ZONE) FROM t",
+    "SELECT CAST(a AS int4[]), b::bool, CAST(c AS varchar), -2 ^ 2 << 1, 1 >> d ^ 2 FROM t",
 )
 
 # Type-aware statements over the typed_catalog relations, one or more
@@ -191,7 +200,7 @@ def pure_inputs() -> list[dict]:
 
 
 def rewrite_pure(sql: str, pfad: bool) -> dict:
-    """``lex`` → ``_rewrite_sql`` (unshielded) or the error class."""
+    """``lex`` → the stateless passes (unshielded) or the error class."""
     from arrow_datafusion_spark.sql.rewrite import _rewrite_sql
     from arrow_datafusion_spark.sql.lex import lex
 
@@ -218,14 +227,16 @@ def typed_catalog(ctx) -> None:
     )
 
 
-def rewrite_typed(ctx, sql: str) -> dict:
+def rewrite_typed(ctx, sql: str, fresh: bool = True) -> dict:
     """The text ``SessionContext._spark_sql`` hands to ``spark.sql`` (or
-    the error class), with ``spark.sql`` stubbed for the one call."""
+    the error class), with ``spark.sql`` stubbed for the one call. A
+    ``fresh`` call empties the rewrite memo first, so the passes run."""
     from arrow_datafusion_spark.sql.lex import lex
 
     spark = ctx.spark
     captured: list[str] = []
-    ctx._rw_cache.clear()
+    if fresh:
+        ctx._rw_cache.clear()
     spark.sql = lambda text, args=None, **kw: captured.append(text)
     try:
         ctx._spark_sql(lex(sql))
@@ -234,6 +245,47 @@ def rewrite_typed(ctx, sql: str) -> dict:
     finally:
         del spark.sql
     return {"out": captured[-1]}
+
+
+@contextlib.contextmanager
+def passes_edited(edit):
+    """Run the front end with ``edit(pass)`` in place of every pass, in
+    both the session's list and the stateless one."""
+    from arrow_datafusion_spark import context
+    from arrow_datafusion_spark.sql import rewrite
+
+    saved = context.PASSES, rewrite.REWRITE_PASSES
+    context.PASSES, rewrite.REWRITE_PASSES = (tuple(map(edit, ps)) for ps in saved)
+    try:
+        yield
+    finally:
+        context.PASSES, rewrite.REWRITE_PASSES = saved
+
+
+def unfired(ctx, records: list[dict]) -> list[str]:
+    """The passes that change neither the text nor the literal table of
+    any of ``records`` (typed ones replay through ``ctx``), in run order."""
+    from arrow_datafusion_spark import context
+
+    fired: set[str] = set()
+
+    def watched(p):
+        def fn(q, lx, scope):
+            lits = list(lx.lits)
+            out = p.fn(q, lx, scope)
+            if out != q or lx.lits != lits:
+                fired.add(p.name)
+            return out
+
+        return p._replace(fn=fn)
+
+    with passes_edited(watched):
+        for rec in records:
+            if rec.get("typed"):
+                rewrite_typed(ctx, rec["sql"])
+            else:
+                rewrite_pure(rec["sql"], rec["pfad"])
+    return [p.name for p in context.PASSES if p.name not in fired]
 
 
 def load() -> list[dict]:

@@ -54,30 +54,52 @@ def test_typed_records_replay(typed_ctx):
     )
 
 
-def test_every_typed_pass_fires(typed_ctx, monkeypatch):
-    # each entry of the declared pass list changes the text of at least
-    # one typed record, so a pass the corpus cannot reach is seen
+def test_typed_records_replay_from_the_memo(typed_ctx, monkeypatch):
+    # a repeated statement takes the memo's hit path: its text is the
+    # golden one, no pass runs and the memo does not grow
     from arrow_datafusion_spark import context
 
-    fired = set()
+    def no_passes(*_args):
+        raise AssertionError("a memo hit ran the passes")
 
-    def watched(name, rewrite):
-        def run(ctx, q, lx, rel):
-            out = rewrite(ctx, q, lx, rel)
-            if out != q:
-                fired.add(name)
-            return out
-
-        return run
-
-    passes = context.TYPED_PASSES
-    monkeypatch.setattr(
-        context, "TYPED_PASSES", tuple((n, t, watched(n, f)) for n, t, f in passes)
-    )
     for rec in RECORDS:
-        if rec.get("typed"):
-            fc.rewrite_typed(typed_ctx, rec["sql"])
-    assert [n for n, _, _ in passes if n not in fired] == []
+        if not rec.get("typed") or "error" in rec:  # a failed miss memoizes nothing
+            continue
+        assert fc.mismatch(rec, fc.rewrite_typed(typed_ctx, rec["sql"])) is None
+        size = len(typed_ctx._rw_cache)
+        with monkeypatch.context() as mp:
+            mp.setattr(context, "run_passes", no_passes)
+            again = fc.rewrite_typed(typed_ctx, rec["sql"], fresh=False)
+        assert fc.mismatch(rec, again) is None
+        assert len(typed_ctx._rw_cache) == size
+
+
+def test_every_pass_fires(typed_ctx):
+    # each typed and stateless pass changes the text or the literal table
+    # of at least one record, so a pass the corpus cannot reach is seen
+    assert fc.unfired(typed_ctx, RECORDS) == []
+
+
+def test_triggers_are_exact(typed_ctx):
+    # a trigger matches every text its pass would change: with every
+    # trigger matching everything, every record replays the same
+    import re
+
+    always = re.compile("")
+    with fc.passes_edited(lambda p: p._replace(trigger=always)):
+        test_pure_records_replay()
+        test_typed_records_replay(typed_ctx)
+
+
+def test_passes_are_named_once_and_cite_slt_lines():
+    import re
+
+    from arrow_datafusion_spark.context import PASSES
+
+    names = [p.name for p in PASSES]
+    assert len(names) == len(set(names))
+    cites = [c for p in PASSES for c in p.cites]
+    assert cites and all(re.fullmatch(r"\w+\.slt:\d+", c) for c in cites), cites
 
 
 # fast/full tier (tests/conftest.py): reduced derandomized prefix by default

@@ -174,6 +174,43 @@ def test_filtered_fact_broadcast_is_byte_gated(spark, name, monkeypatch):
     assert "ShuffledHashJoin" in plan_big, plan_big
 
 
+# Every F.broadcast call in the library operators, by (file, function):
+# the count of calls there. A new call site fails the ratchet below; route
+# it through a byte cap like _verify_pairs_jaccard's instead.
+_BROADCAST_SITES = {
+    # ungated: each still needs a byte-capped gate (ROADMAP item 2(b))
+    ("similarity.py", "cosine_topk"): 1,
+    ("similarity.py", "lsh_cosine_topk"): 1,
+    ("similarity.py", "ivf_cosine_topk"): 1,
+    # gated by _BROADCAST_TEXT_BYTES_CAP
+    ("dedup.py", "_verify_pairs_jaccard"): 2,
+}
+
+
+def test_operator_broadcasts_are_the_known_sites():
+    import ast
+    import glob
+    from collections import Counter
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sites: Counter = Counter()
+
+    def visit(node, where):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, (where[0], child.name))
+                continue
+            callee = getattr(child, "func", None)
+            if getattr(callee, "attr", getattr(callee, "id", None)) == "broadcast":
+                sites[where] += 1
+            visit(child, where)
+
+    for path in glob.glob(os.path.join(root, "arrow_datafusion_spark", "operators", "*.py")):
+        with open(path, encoding="utf-8") as f:
+            visit(ast.parse(f.read()), (os.path.basename(path), "<module>"))
+    assert dict(sites) == _BROADCAST_SITES
+
+
 def test_q15_single_partition_collapse_is_byte_gated(spark, monkeypatch):
     """q15's coalesce(1)-before-window holds one agg row per supplier on a
     single task — a function of SF, so it is byte-gated like the broadcast
@@ -223,32 +260,6 @@ def test_substrait_consumed_plan_gets_pushdown_and_pruning(spark):
     cols = re.search(r"FileScan parquet \[([^\]]*)\]", scan).group(1)
     assert len(cols.split(",")) == 7, scan
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in scan
-
-
-def test_minhash_fast_kernel_matches_md5_verified_pairs(spark, sf_dir):
-    """kernel="fast" (crc32-affine vectorized banding, the r10 profile's
-    CPU-headroom path) must verify the SAME near-duplicate pairs as the
-    oracle-parity md5 kernel on the fixture corpus: candidates differ
-    only in LSH recall at the threshold margin, and exact-Jaccard
-    verification pins the output. At sf0.1 both kernels produced the
-    identical 256-pair set (r10 A/B); sf0.01 here for suite budget."""
-    from arrow_datafusion_spark.operators.dedup import minhash_near_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    md5_pairs = {
-        tuple(r)
-        for r in minhash_near_duplicates(docs, "doc_id", "text")
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    fast_pairs = {
-        tuple(r)
-        for r in minhash_near_duplicates(docs, "doc_id", "text", kernel="fast")
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    assert md5_pairs, "fixture must contain near-duplicates"
-    assert fast_pairs == md5_pairs
 
 
 def test_minhash_prune_keeps_verified_pairs_byte_identical(spark, sf_dir):

@@ -5,7 +5,9 @@ Usage: python tools/bless_frontend_rewrite.py
 
 Pure records need no Spark; the typed records start a local session.
 Review the diff of the file before committing it: every changed record
-is a change in the text the front end hands to Spark.
+is a change in the text the front end hands to Spark. The tool also names
+the passes that fire on no record (change no record's text or literal
+table), so a re-bless shows a pass that stopped being reached.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ def main() -> None:
         for sql in fc.TYPED:
             records.append({"src": "typed", "sql": sql, "typed": True,
                             **fc.rewrite_typed(ctx, sql)})
+        unfired = fc.unfired(ctx, records)
     finally:
         spark.stop()
     os.makedirs(os.path.dirname(fc.GOLDEN), exist_ok=True)
@@ -39,6 +42,7 @@ def main() -> None:
         for rec in records:
             f.write(json.dumps(rec, ensure_ascii=False) + "\n")
     print(f"{len(records)} records -> {os.path.relpath(fc.GOLDEN)}")
+    print("passes that fire on no record:", ", ".join(unfired) or "none")
 
 
 if __name__ == "__main__":
