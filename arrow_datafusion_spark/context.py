@@ -411,6 +411,132 @@ def _split_recursive_union(body: str) -> tuple[str, str, bool]:
     return body[: last.start()], body[last.end() :], distinct
 
 
+# one OPTIONS entry: a key (a dotted name or a quoted string), then an
+# optional `=` and a value (a quoted string, a number or a bare word)
+_OPTION = re.compile(r"\s*([^\s=]+)\s*(?:=?\s*([^\s=]+))?\s*")
+
+
+def _parse_options(lx: Lexed, body: str | None) -> dict[str, str]:
+    """An ``OPTIONS (...)`` body (shielded) → lower-cased key → value, as
+    parser.rs ``parse_value_options`` reads it: comma-separated ``key
+    value`` entries whose key and value may each be quoted or bare. A key
+    alone reads ``true``; an entry of more than two tokens (``'k' 55 +
+    102``) is an error, as the reference rejects a non-literal value."""
+    opts: dict[str, str] = {}
+    for item in _split_top_level(body or ""):
+        if not item.strip():
+            continue
+        m = _OPTION.fullmatch(item)
+        if not m:
+            raise ValueError(f"invalid OPTIONS entry: {lx.unshield(item).strip()!r}")
+        key, value = (t if t is None or lx.literal(t) is None else lx.string(t)
+                      for t in m.groups())
+        opts[key.lower()] = "true" if value is None else value
+    return opts
+
+
+# the clauses each statement's tail takes (parser.rs parse_copy,
+# parse_create_external_table)
+_COPY_CLAUSES = frozenset(("stored", "partitioned", "options"))
+_EXTERNAL_CLAUSES = _COPY_CLAUSES | {
+    "location", "order", "header", "delimiter", "compression"
+}
+# COPY's source (after a parenthesized query, if any) and its target
+_COPY_TO = re.compile(rf"(.*?)\s*\bTO\s+({LIT})", re.IGNORECASE | re.DOTALL)
+
+
+def _scan_clauses(lx: Lexed, rest: str, allowed: frozenset[str]) -> dict:
+    """The clause tail of COPY and CREATE EXTERNAL TABLE, scanned as
+    parser.rs ``parse_copy`` and ``parse_create_external_table`` scan it:
+    the clauses may appear in any order, each at most once (WITH ORDER may
+    repeat), and nothing else is accepted. ``allowed`` names the clauses
+    the statement takes, of ``stored``, ``location``, ``options``,
+    ``partitioned``, ``order``, ``header``, ``delimiter`` and
+    ``compression``; any other token, a repeated clause or a malformed one
+    raises the reference's ParserError shape. ``rest`` is shielded text.
+    Returns ``fmt``, ``location``, ``options`` (parsed, see
+    ``_parse_options``), ``partitioned`` (the shielded parenthesis body),
+    ``header_row`` and ``delimiter``; an absent clause reads None (False
+    for ``header_row``)."""
+    n = len(rest)
+    seen: set[str] = set()
+    out: dict = {"fmt": None, "location": None, "options": None,
+                 "partitioned": None, "header_row": False, "delimiter": None}
+
+    def once(clause: str, label: str) -> None:
+        if clause in seen:
+            raise ValueError(f'ParserError("{label} specified more than once")')
+        seen.add(clause)
+
+    def paren(j: int) -> tuple[int, int]:
+        """The span of the parenthesis that opens at ``j`` after blanks."""
+        while j < n and rest[j].isspace():
+            j += 1
+        if j >= n or rest[j] != "(":
+            tok = re.match(r"(\S+)", rest[j:])
+            raise ValueError(
+                f'ParserError("Expected (, found: {tok.group(1) if tok else "EOF"}")'
+            )
+        close = _match_paren(rest, j)
+        if close is None:
+            raise ValueError('ParserError("Expected ), found: EOF")')
+        return j, close + 1
+
+    def clause(name: str, pattern: str) -> re.Match | None:
+        return re.match(pattern, tail, re.IGNORECASE) if name in allowed else None
+
+    i = 0
+    while True:
+        while i < n and (rest[i].isspace() or rest[i] == ";"):
+            i += 1
+        if i >= n:
+            return out
+        tail = rest[i:]
+        if m := clause("stored", r"STORED\s+AS\s+(\w+)"):
+            once("stored", "STORED AS")
+            out["fmt"] = m.group(1).lower()
+            i += m.end()
+        elif m := clause("location", rf"LOCATION\s+({LIT})"):
+            once("location", "LOCATION")
+            out["location"] = lx.string(m.group(1))
+            i += m.end()
+        elif m := clause("options", r"OPTIONS\b"):
+            once("options", "OPTIONS")
+            start, i = paren(i + m.end())
+            out["options"] = _parse_options(lx, rest[start + 1 : i - 1])
+        elif m := clause("partitioned", r"PARTITIONED\b(\s+BY\b)?"):
+            if not m.group(1):
+                nxt = re.match(r"PARTITIONED\s+(\S+)", tail, re.IGNORECASE)
+                raise ValueError(
+                    f'ParserError("Expected BY, found: {nxt.group(1) if nxt else "EOF"}")'
+                )
+            once("partitioned", "PARTITIONED BY")
+            start, i = paren(i + m.end())
+            out["partitioned"] = rest[start + 1 : i - 1]
+        elif m := clause("order", r"WITH\s+ORDER\b"):
+            i = paren(i + m.end())[1]
+        elif m := clause("header", r"WITH\s+HEADER\b(\s+ROW\b)?"):
+            if not m.group(1):
+                nxt = re.match(r"WITH\s+HEADER\s+(\S+)", tail, re.IGNORECASE)
+                raise ValueError(
+                    f'ParserError("Expected ROW, found: {nxt.group(1) if nxt else "EOF"}")'
+                )
+            out["header_row"] = True
+            i += m.end()
+        elif m := clause("order", r"WITH\s+(\w+)"):
+            raise ValueError(f'ParserError("Expected HEADER, found: {m.group(1)}")')
+        elif m := clause("delimiter", rf"DELIMITER\s+({LIT})"):
+            out["delimiter"] = lx.string(m.group(1))
+            i += m.end()
+        elif m := clause("compression", r"COMPRESSION\s+TYPE\s+\w+"):
+            i += m.end()
+        else:
+            tok = re.match(r"(\S+)", tail)
+            raise ValueError(
+                f'ParserError("Unexpected token {lx.unshield(tok.group(1))}")'
+            )
+
+
 # a single-part SQL identifier: the names a temp view can take
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -472,19 +598,6 @@ class SessionContext:
         # every per-table record, read and written through _key only
         self._records: dict[str, _Table] = {}
         self._prepared: dict[str, str] = {}
-        # SQL-rewrite memo: query text → final rewritten string. The whole
-        # rewrite pipeline is a pure function of (query text, catalog
-        # state, settings), so repeated statements (bench min-of-N loops,
-        # warm passes) skip the Python regex/schema passes — measured
-        # 10-60 ms per ClickBench statement. Invalidation: _rw_version
-        # bumps on every registration/deregistration and every
-        # catalog-mutating statement head (sql()), and the settings
-        # registry's own mutation counter joins the key, so no stale
-        # rewrite can survive a schema or settings change. Only the
-        # rewritten STRING is cached — parse/plan/execution happen per
-        # call, unchanged.
-        self._rw_cache: dict = {}
-        self._rw_version = 0
         # DataFusion-compatible config registry (settings.py): SET/SHOW
         # SQL, information_schema.df_settings, and live Spark conf mapping.
         # datafusion-cli enables information_schema at startup — this
@@ -645,7 +758,6 @@ class SessionContext:
         if re.fullmatch(_IDENT, name):
             rec.df.createOrReplaceTempView(name)
         self._records[_key(name)] = rec
-        self._rw_version += 1
 
     def _record(self, name: str) -> _Table:
         """The record of table ``name``, or an empty one."""
@@ -776,12 +888,10 @@ class SessionContext:
             _VIEW_CACHE.pop((sid, t), None)
         for t, df in load_tables(self.spark, sf_dir).items():
             self._records[_key(t)] = _Table(df)
-        self._rw_version += 1
 
     def deregister_table(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
         self._records.pop(_key(name), None)
-        self._rw_version += 1
         # keep session.load_tables' registered-view memo honest
         _VIEW_CACHE.pop((session_key(self.spark), _key(name)), None)
 
@@ -831,9 +941,10 @@ class SessionContext:
         """Parse/plan/optimize via Catalyst (SURVEY.md §3.1 steps 1–7).
 
         Lex once: the statement is lexed (sql/lex.py) and every later step —
-        memo bump, default-schema strip, dispatch, plan-time checks, each
-        rewrite pass — reads that one shielded text and literal table;
-        ``_spark_sql`` restores the literals for ``spark.sql``.
+        default-schema strip, dispatch, plan-time checks, each rewrite
+        pass — reads that one shielded text and literal table;
+        ``_spark_sql`` rewrites it afresh on every call and restores the
+        literals for ``spark.sql``.
 
         ``params`` binds ``$1`` (list) / ``$name`` (dict) placeholders (the
         ``Placeholder`` expression, datafusion/expr/src/expr.rs:925) as
@@ -857,10 +968,6 @@ class SessionContext:
             lx, args = lx.bind(params)
         return self._run(lx, args)
 
-    # statements that may mutate the catalog or settings (possibly via a
-    # path that doesn't route through register_table, e.g. native CTAS /
-    # saveAsTable): they conservatively invalidate the rewrite memo
-    _MUTATING = frozenset(("CREATE", "DROP", "INSERT", "COPY", "ALTER", "SET"))
     # DDL/utility statements whose default catalog/schema qualifiers are
     # stripped (DML queries resolve through Spark's catalog, which has no
     # 'public' schema)
@@ -899,8 +1006,6 @@ class SessionContext:
         """Dispatch one lexed (and bound) statement — see ``sql``."""
         head = lx.head(6)
         first = head[0] if head else ""
-        if first in self._MUTATING:
-            self._rw_version += 1
         if first in self._QUALIFIED:
             lx = self._strip_default_schema(lx)
         entry = self._STATEMENTS.get(first)
@@ -1885,130 +1990,12 @@ class SessionContext:
         return lx.derive(query)
 
     def _external_clauses(self, lx: Lexed, rest: str, cols: str | None) -> dict:
-        """Strict clause-tail scan mirroring parser.rs
-        ``parse_create_external_table``: the clauses may appear in any
-        order, each at most once (WITH ORDER may repeat), and nothing else
-        is accepted. Raises the reference's ParserError shapes on unknown
-        tokens, duplicate clauses, and malformed WITH/ORDER; then applies
-        the planner's semantic checks (partition column membership,
-        CsvOptions key validity, single-file partitioned location,
-        on-disk partition-order inference). ``rest`` is shielded text.
-        Returns the clauses: ``fmt``, ``location``, the ``options`` and
-        ``partitioned`` parenthesis bodies (shielded), ``header_row`` and
-        ``delimiter``."""
-        n = len(rest)
-
-        def balanced_end(i: int) -> int:  # rest[i] == "(" (caller-checked)
-            j = _match_paren(rest, i)
-            if j is None:
-                raise ValueError('ParserError("Expected ), found: EOF")')
-            return j + 1
-
-        seen: set[str] = set()
-        part_inner: str | None = None
-        fmt: str | None = None
-        opt_inner: str | None = None
-        location = delimiter = None
-        header_row = False
-        i = 0
-        while True:
-            while i < n and (rest[i].isspace() or rest[i] == ";"):
-                i += 1
-            if i >= n:
-                break
-            tail = rest[i:]
-            m = re.match(r"STORED\s+AS\s+(\w+)", tail, re.IGNORECASE)
-            if m:
-                if "stored" in seen:
-                    raise ValueError('ParserError("STORED AS specified more than once")')
-                seen.add("stored")
-                fmt = m.group(1).lower()
-                i += m.end()
-                continue
-            m = re.match(rf"LOCATION\s+({LIT})", tail, re.IGNORECASE)
-            if m:
-                if "location" in seen:
-                    raise ValueError('ParserError("LOCATION specified more than once")')
-                seen.add("location")
-                location = lx.string(m.group(1))
-                i += m.end()
-                continue
-            m = re.match(r"OPTIONS\s*\(", tail, re.IGNORECASE)
-            if m:
-                if "options" in seen:
-                    raise ValueError('ParserError("OPTIONS specified more than once")')
-                seen.add("options")
-                end = balanced_end(i + m.end() - 1)
-                opt_inner = rest[i + m.end() : end - 1]
-                i = end
-                continue
-            m = re.match(r"PARTITIONED(\s+BY)?", tail, re.IGNORECASE)
-            if m:
-                if not m.group(1):
-                    nxt = re.match(r"PARTITIONED\s+(\S+)", tail, re.IGNORECASE)
-                    raise ValueError(
-                        f'ParserError("Expected BY, found: '
-                        f'{nxt.group(1) if nxt else "EOF"}")'
-                    )
-                if "partitioned" in seen:
-                    raise ValueError(
-                        'ParserError("PARTITIONED BY specified more than once")'
-                    )
-                seen.add("partitioned")
-                j = i + m.end()
-                while j < n and rest[j].isspace():
-                    j += 1
-                if j >= n or rest[j] != "(":
-                    tok = re.match(r"(\S+)", rest[j:])
-                    raise ValueError(
-                        f'ParserError("Expected (, found: '
-                        f'{tok.group(1) if tok else "EOF"}")'
-                    )
-                end = balanced_end(j)
-                part_inner = rest[j + 1 : end - 1]
-                i = end
-                continue
-            m = re.match(r"WITH\s+(\w+)", tail, re.IGNORECASE)
-            if m:
-                kw = m.group(1).upper()
-                if kw == "ORDER":
-                    j = i + m.end()
-                    while j < n and rest[j].isspace():
-                        j += 1
-                    if j >= n or rest[j] != "(":
-                        tok = re.match(r"(\S+)", rest[j:])
-                        raise ValueError(
-                            f'ParserError("Expected (, found: '
-                            f'{tok.group(1) if tok else "EOF"}")'
-                        )
-                    i = balanced_end(j)
-                    continue
-                if kw == "HEADER":
-                    m2 = re.match(r"WITH\s+HEADER\s+ROW", tail, re.IGNORECASE)
-                    if not m2:
-                        nxt = re.match(r"WITH\s+HEADER\s+(\S+)", tail, re.IGNORECASE)
-                        raise ValueError(
-                            f'ParserError("Expected ROW, found: '
-                            f'{nxt.group(1) if nxt else "EOF"}")'
-                        )
-                    header_row = True
-                    i += m2.end()
-                    continue
-                raise ValueError(f'ParserError("Expected HEADER, found: {m.group(1)}")')
-            m = re.match(rf"DELIMITER\s+({LIT})", tail, re.IGNORECASE)
-            if m:
-                delimiter = lx.string(m.group(1))
-                i += m.end()
-                continue
-            m = re.match(r"COMPRESSION\s+TYPE\s+\w+", tail, re.IGNORECASE)
-            if m:
-                i += m.end()
-                continue
-            tok = re.match(r"(\S+)", tail)
-            raise ValueError(
-                f'ParserError("Unexpected token {lx.unshield(tok.group(1))}")'
-            )
-        # ---- planner semantic checks ----
+        """CREATE EXTERNAL TABLE's clause tail (``_scan_clauses``), then
+        the planner's semantic checks: partition column membership,
+        CsvOptions key validity, single-file partitioned location and
+        on-disk partition-order inference. ``rest`` is shielded text."""
+        clauses = _scan_clauses(lx, rest, _EXTERNAL_CLAUSES)
+        part_inner, location = clauses["partitioned"], clauses["location"]
         if part_inner is not None and cols is not None:
             schema_names = [
                 re.match(r'\s*(?:"([^"]+)"|([A-Za-z_]\w*))', c).group(0).strip().strip('"').lower()
@@ -2034,7 +2021,7 @@ class SessionContext:
                         f"Schema error: Schema contains duplicate "
                         f"unqualified field name {pname}"
                     )
-        if opt_inner is not None and fmt == "csv":
+        if clauses["options"] and clauses["fmt"] == "csv":
             valid = {
                 "has_header", "delimiter", "quote", "terminator", "escape",
                 "comment", "compression", "schema_infer_max_rec",
@@ -2042,8 +2029,7 @@ class SessionContext:
                 "timestamp_tz_format", "time_format", "null_value",
                 "null_regex", "double_quote", "newlines_in_values",
             }
-            for k, _v in re.findall(rf"({LIT})\s*=?\s*({LIT})", opt_inner):
-                kl = lx.string(k).lower()
+            for kl in clauses["options"]:
                 if kl.startswith("format.") and kl[len("format."):] not in valid:
                     raise ValueError(
                         f'Config value "{kl[len("format."):]}" not found on CsvOptions'
@@ -2056,9 +2042,7 @@ class SessionContext:
                     if it.split()
                 ]
                 self._check_disk_partitions(location, declared)
-        return {"fmt": fmt, "location": location, "options": opt_inner,
-                "partitioned": part_inner, "header_row": header_row,
-                "delimiter": delimiter}
+        return clauses
 
     @staticmethod
     def _check_disk_partitions(path: str, declared: list[str]) -> None:
@@ -2141,10 +2125,9 @@ class SessionContext:
                     f"CREATE EXTERNAL TABLE missing {clause}: {lx.unshield()[:80]!r}"
                 )
         fmt, path = clauses["fmt"], clauses["location"]
-        # format options: current OPTIONS('k' 'v' | 'k' = 'v', ...) plus the
-        # legacy standalone clauses the reference used to accept
-        kvs = re.findall(rf"({LIT})\s*=?\s*({LIT})", clauses["options"] or "")
-        opts = {lx.string(k).lower(): lx.string(v) for k, v in kvs}
+        # format options: current OPTIONS plus the legacy standalone
+        # clauses the reference used to accept
+        opts = clauses["options"] or {}
         header = clauses["header_row"] or opts.get(
             "format.has_header", opts.get("has_header", "")
         ).lower() in ("true", "1")
@@ -2217,39 +2200,26 @@ class SessionContext:
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
         """Rewritten query → spark.sql, carrying bound parameters if any.
 
-        ``PASSES`` runs in one loop (``run_passes``): the type-aware
-        passes (sql/typed.py), then the stateless ones (sql/rewrite.py),
-        in their declared order. A pass runs only when its trigger matches
-        the text so far, so a trigger matches every text its pass would
-        change. Every pass reads the lexed statement's shielded text, so
-        none can match function-call or operator text INSIDE a quoted
-        string ('select median(x)' stays text). A pass that emits a
-        literal registers it on a private copy of the literal table."""
+        Every call rewrites its statement afresh, as the reference plans
+        every ``sql()`` call from its text: nothing carries over between
+        calls, so a catalog or settings change made through any path shows
+        at the next statement. ``PASSES`` runs in one loop
+        (``run_passes``): the type-aware passes (sql/typed.py), then the
+        stateless ones (sql/rewrite.py), in their declared order. A pass
+        runs only when its trigger matches the text so far, so a trigger
+        matches every text its pass would change. Every pass reads the
+        lexed statement's shielded text, so none can match function-call
+        or operator text INSIDE a quoted string ('select median(x)' stays
+        text). A pass that emits a literal registers it on a private copy
+        of the literal table."""
         pfad = self.settings.get_bool(
             "datafusion.sql_parser.parse_float_as_decimal"
-        )
-        memo_key = (
-            lx.text, tuple(lx.lits), pfad, self._rw_version, self.settings.version
         )
         # one relation scope per statement, resolved from the pre-rewrite
         # text at most once (the passes never edit a FROM/JOIN clause)
         rel = Relations(self.spark, lx.text)
-        hit = self._rw_cache.get(memo_key)
-        # A rewrite that read column types is replayed only while the
-        # relations still resolve to the schema it read: table schemas can
-        # change through paths _rw_version cannot see (e.g.
-        # createOrReplaceTempView directly on the SparkSession). The
-        # fingerprint is None for a schema-independent rewrite.
-        if hit is not None and (hit[1] is None or hit[1] == (rel.schema,)):
-            rewritten = hit[0]
-        else:
-            work = lx.copy()
-            rewritten = work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
-            if len(self._rw_cache) >= 512:  # bound a long session's memo
-                self._rw_cache.clear()
-            self._rw_cache[memo_key] = (
-                rewritten, (rel.schema,) if rel.resolved else None
-            )
+        work = lx.copy()
+        rewritten = work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
         if args:
             return self.spark.sql(rewritten, args=args)
         return self.spark.sql(rewritten)
@@ -2260,7 +2230,9 @@ class SessionContext:
         return {k: rec.column_tz for k, rec in self._records.items() if rec.column_tz}
 
     def _sql_copy_to(self, lx: Lexed, args=None) -> DataFrame:
-        """``COPY (query | table) TO 'path' [STORED AS fmt]`` → write_sink.
+        """``COPY (query | table) TO 'path'`` → write_sink, the clauses
+        ``STORED AS fmt``, ``PARTITIONED BY (cols)`` and ``OPTIONS (...)``
+        in any order (``_scan_clauses``).
 
         Mirrors DataFusion's CopyTo statement (sql/src/statement.rs:186,
         logical plan CopyTo): the source runs as a regular query, the sink
@@ -2268,41 +2240,23 @@ class SessionContext:
         statement returns a single-row ``count`` DataFrame like the
         reference does.
         """
-        m = re.match(
-            rf"\s*COPY\s+(.+?)\s+TO\s+({LIT})"
-            r"(?:\s+STORED\s+AS\s+(\w+)|\s+FORMAT\s+(\w+))?"
-            r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
-            r"(?:\s+OPTIONS\s*\(((?:[^()]|\([^()]*\))*)\))?"
-            r"\s*;?\s*$",
-            lx.text,
-            re.IGNORECASE | re.DOTALL,
-        )
+        text = lx.text
+        start = re.match(r"\s*COPY\b\s*", text, re.IGNORECASE).end()
+        end = start
+        if text.startswith("(", start):  # a query: its balanced parenthesis
+            close = _match_paren(text, start)
+            end = start if close is None else close + 1
+        m = _COPY_TO.match(text, end)
         if not m:
             raise ValueError(f"cannot parse COPY statement: {lx.unshield()[:80]!r}")
-        source, path, fmt = m.group(1).strip(), lx.string(m.group(2)), (
-            m.group(3) or m.group(4) or ""
-        ).lower()
+        source, path = (text[start:end] + m.group(1)).strip(), lx.string(m.group(2))
+        clauses = _scan_clauses(lx, text[m.end():], _COPY_CLAUSES)
+        fmt, copts = clauses["fmt"] or "", clauses["options"] or {}
         part_cols = [
             c.strip().strip("'\"")
-            for c in lx.unshield(m.group(5) or "").split(",")
+            for c in lx.unshield(clauses["partitioned"] or "").split(",")
             if c.strip()
         ]
-        # OPTIONS('k' 'v' | k v, ...) — values may be bare words/numbers
-        copts: dict[str, str] = {}
-        for item in _split_top_level(m.group(6) or ""):
-            toks = [
-                t if (s := lx.string(t)) is None else s for t in item.split()
-            ]
-            if len(toks) == 2:
-                copts[toks[0].lower()] = toks[1]
-            elif len(toks) == 1 and toks[0]:
-                copts[toks[0].lower()] = "true"
-            elif len(toks) > 2:
-                # non-literal option value (e.g. `row_group_size 55 + 102`)
-                # — the reference rejects these at plan time
-                raise ValueError(
-                    f"invalid COPY option value: {lx.unshield(item).strip()!r}"
-                )
         if copts.get("execution.keep_partition_by_columns", "").lower() not in (
             "",
             "true",

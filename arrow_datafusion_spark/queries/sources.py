@@ -7,15 +7,18 @@ arrow_file.rs:49, DataSinkExec insert.rs:83, file-format writers
 (parquet.rs:351, csv.rs:338, json.rs:234); corpus csv_files.slt, copy.slt,
 insert.slt.
 
-Each entry materializes a derived file under a per-process temp dir, reads
-it back through SessionContext registration, and aggregates — the oracle
-computes the same aggregate straight from the fixture parquet, so a broken
-writer/reader/inference path shows up as a hash mismatch.
+Each entry materializes a derived file under a per-process temp dir (removed
+at interpreter exit), reads it back through SessionContext registration, and
+aggregates — the oracle computes the same aggregate straight from the
+fixture parquet, so a broken writer/reader/inference path shows up as a hash
+mismatch.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,12 +29,18 @@ from arrow_datafusion_spark.sources.sink import write_sink
 from arrow_datafusion_spark.session import load_tables
 
 _DEC = "decimal(38,6)"
+_ROOT: str | None = None
 
 
 def _tmp(name: str) -> str:
-    root = os.path.join(tempfile.gettempdir(), f"adfspark-{os.getpid()}")
-    os.makedirs(root, exist_ok=True)
-    return os.path.join(root, name)
+    """``name`` under this process's scratch directory, which is made on
+    first use and removed at interpreter exit: the entries return lazy
+    frames over its files, so nothing in it can go earlier."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix=f"adfspark-{os.getpid()}-")
+        atexit.register(shutil.rmtree, _ROOT, True)
+    return os.path.join(_ROOT, name)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -284,7 +293,7 @@ def sql_ddl_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = SessionContext(spark)
     load_tables(spark, sf_dir, names=("nation", "region"))
     # fresh empty dir per invocation — CTAS refuses a non-empty LOCATION
-    loc = tempfile.mkdtemp(prefix="adfspark-nation-summary-")
+    loc = tempfile.mkdtemp(prefix="nation-summary-", dir=_tmp(""))
     ctx.sql("DROP TABLE IF EXISTS nation_summary")
     ctx.sql(f"""
         CREATE TABLE nation_summary USING PARQUET LOCATION '{loc}'

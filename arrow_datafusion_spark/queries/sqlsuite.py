@@ -235,14 +235,12 @@ def sql_copy_to(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes distributed parquet, then the written files are re-scanned and
     aggregated — a broken writer or a wrong written row set shows up
     against the fixture-side oracle."""
-    import os
     import shutil
-    import tempfile
+
+    from arrow_datafusion_spark.queries.sources import _tmp
 
     ctx = _ctx(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"adfspark-{os.getpid()}", "orders_copy"
-    )
+    path = _tmp("orders_copy")
     # COPY TO a directory APPENDS files (reference semantics) — re-runs in
     # the same process must start from an empty target
     shutil.rmtree(path, ignore_errors=True)

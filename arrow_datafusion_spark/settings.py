@@ -397,10 +397,6 @@ class Settings:
     def __init__(self, spark):
         self.spark = spark
         self._values: dict[str, str | None] = {}
-        # mutation counter: SessionContext's SQL-rewrite memo keys on it so
-        # any settings change (SQL SET or direct .set) invalidates cached
-        # rewrite strings that may have consulted a setting
-        self.version = 0
         for key, (default, _typ) in _REGISTRY.items():
             self._values[key] = default(spark) if callable(default) else default
 
@@ -443,7 +439,6 @@ class Settings:
             raw = raw[1:-1]
         value = self._parse(suffix, typ, raw)
         self._values[suffix] = value
-        self.version += 1
         self._apply(suffix, value)
 
     @staticmethod

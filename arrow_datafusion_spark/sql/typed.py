@@ -79,11 +79,6 @@ class Relations:
         self._text = text
         self._got: tuple | None = None
 
-    @property
-    def resolved(self) -> bool:
-        """Whether a pass has looked the relations up."""
-        return self._got is not None
-
     def _get(self) -> tuple:
         if self._got is None:
             self._got = _resolve(self._spark, self._text)

@@ -227,16 +227,13 @@ def typed_catalog(ctx) -> None:
     )
 
 
-def rewrite_typed(ctx, sql: str, fresh: bool = True) -> dict:
+def rewrite_typed(ctx, sql: str) -> dict:
     """The text ``SessionContext._spark_sql`` hands to ``spark.sql`` (or
-    the error class), with ``spark.sql`` stubbed for the one call. A
-    ``fresh`` call empties the rewrite memo first, so the passes run."""
+    the error class), with ``spark.sql`` stubbed for the one call."""
     from arrow_datafusion_spark.sql.lex import lex
 
     spark = ctx.spark
     captured: list[str] = []
-    if fresh:
-        ctx._rw_cache.clear()
     spark.sql = lambda text, args=None, **kw: captured.append(text)
     try:
         ctx._spark_sql(lex(sql))

@@ -609,7 +609,6 @@ def test_median_exact_lowering_has_a_scale_guard(spark, sf_dir, monkeypatch):
     exact = ctx.sql(q).collect()[0][0]
     assert exact == 12 and not isinstance(exact, float)
     monkeypatch.setattr(typed, "EXACT_MAX_BYTES", 0)
-    ctx._rw_cache.clear()  # the budget is a constant: the memo omits it
     native = ctx.sql(q).collect()[0][0]
     assert float(native) == 12.0 and isinstance(native, float)
     # in-memory relation: size unknown → exact lowering regardless of cap
@@ -1065,12 +1064,11 @@ def test_scalar_subquery_one_row_contract(spark):
         run_json_plan(ctx, plan([[1], [2]])).collect()
 
 
-def test_rewrite_memo_revalidates_out_of_band_schema_changes(spark):
-    # ADVICE r13: a temp view replaced DIRECTLY on the SparkSession (not
-    # through SessionContext) changes rewrite-relevant schema without
-    # bumping _rw_version; the memo must not replay the stale type-aware
-    # lowering. int/int -> `div` lowering is the observable: it fires only
-    # when BOTH operands resolve integral.
+def test_out_of_band_schema_change_is_seen(spark):
+    # a temp view replaced DIRECTLY on the SparkSession (not through
+    # SessionContext) changes the schema the type-aware passes read; the
+    # same text run again must see it. int/int -> `div` lowering is the
+    # observable: it fires only when BOTH operands resolve integral.
     ctx = SessionContext(spark)
     try:
         spark.createDataFrame([(7, 2)], "a int, b int").createOrReplaceTempView(
@@ -1078,8 +1076,8 @@ def test_rewrite_memo_revalidates_out_of_band_schema_changes(spark):
         )
         q = "SELECT a / b AS r FROM memo_reval_t"
         assert ctx.sql(q).collect()[0][0] == 3  # integer division
-        ctx.sql(q)  # memo hit, same schema: still integral
-        # out-of-band replacement with DOUBLE columns — same memo key
+        ctx.sql(q)  # the same text, the same schema: still integral
+        # out-of-band replacement with DOUBLE columns, the same text
         spark.createDataFrame(
             [(7.0, 2.0)], "a double, b double"
         ).createOrReplaceTempView("memo_reval_t")
@@ -1089,10 +1087,40 @@ def test_rewrite_memo_revalidates_out_of_band_schema_changes(spark):
         spark.catalog.dropTempView("memo_reval_t")
 
 
+def test_registered_schema_change_is_seen(spark):
+    # register_table replacing a table's columns with another type: the
+    # same text run again reads the new types
+    ctx = SessionContext(spark)
+    q = "SELECT a / b AS r FROM reg_schema_t"
+    try:
+        ctx.register_table(
+            "reg_schema_t", spark.createDataFrame([(7, 2)], "a int, b int")
+        )
+        assert ctx.sql(q).collect()[0][0] == 3  # integer division
+        ctx.register_table(
+            "reg_schema_t", spark.createDataFrame([(7.0, 2.0)], "a double, b double")
+        )
+        r = ctx.sql(q).collect()[0][0]
+        assert r == 3.5 and isinstance(r, float)
+    finally:
+        ctx.deregister_table("reg_schema_t")
+
+
+def test_settings_change_is_seen(spark):
+    # SET parse_float_as_decimal between two runs of the same text: an
+    # integer literal beyond u64 types Float64, then Decimal128 (options.slt)
+    ctx = SessionContext(spark)
+    q = "SELECT arrow_typeof(99999999999999999999999) AS t"
+    assert ctx.sql(q).first().t == "Float64"
+    ctx.sql("SET datafusion.sql_parser.parse_float_as_decimal = true")
+    assert ctx.sql(q).first().t == "Decimal128(23, 0)"
+    ctx.sql("SET datafusion.sql_parser.parse_float_as_decimal = false")
+    assert ctx.sql(q).first().t == "Float64"
+
+
 def test_typed_statement_resolves_its_relations_once(spark, monkeypatch):
-    # one relation scope per statement: a memo miss resolves the FROM
-    # relations once for every pass and the fingerprint together, and a
-    # memo hit resolves them once to revalidate; a statement no pass types
+    # one relation scope per statement: each run resolves the FROM
+    # relations once for every pass, and a statement no pass types
     # resolves nothing
     from arrow_datafusion_spark.sql import typed
 
@@ -1107,30 +1135,14 @@ def test_typed_statement_resolves_its_relations_once(spark, monkeypatch):
     ).createOrReplaceTempView("memo_once_t")
     try:
         q = "SELECT sum(a / b) AS r, median(a) AS m, max(round(f, 1)) AS x FROM memo_once_t"
-        assert ctx.sql(q).collect()[0]["r"] == 3  # miss
+        assert ctx.sql(q).collect()[0]["r"] == 3
         assert len(calls) == 1
-        assert ctx.sql(q).collect()[0]["r"] == 3  # hit
+        assert ctx.sql(q).collect()[0]["r"] == 3  # the same text: once more
         assert len(calls) == 2
         ctx.sql("SELECT 7 / 2 AS r, a FROM memo_once_t").collect()
         assert len(calls) == 2
     finally:
         spark.catalog.dropTempView("memo_once_t")
-
-
-def test_rewrite_memo_invalidated_by_commented_mutation(spark):
-    # ADVICE r13: a mutating statement behind a leading SQL comment must
-    # still bump the rewrite-memo version (the head regex previously saw
-    # the comment, not CREATE).
-    ctx = SessionContext(spark)
-    v0 = ctx._rw_version
-    ctx.sql("-- create something\nCREATE TABLE memo_cmt_t AS SELECT 1 AS x")
-    try:
-        assert ctx._rw_version > v0
-        v1 = ctx._rw_version
-        ctx.sql("/* block\ncomment */ DROP TABLE memo_cmt_t")
-        assert ctx._rw_version > v1
-    finally:
-        spark.sql("DROP TABLE IF EXISTS memo_cmt_t")
 
 
 @pytest.mark.parametrize("lead", ["-- it's a comment\n", "/* it's a\nblock */ "])

@@ -54,26 +54,6 @@ def test_typed_records_replay(typed_ctx):
     )
 
 
-def test_typed_records_replay_from_the_memo(typed_ctx, monkeypatch):
-    # a repeated statement takes the memo's hit path: its text is the
-    # golden one, no pass runs and the memo does not grow
-    from arrow_datafusion_spark import context
-
-    def no_passes(*_args):
-        raise AssertionError("a memo hit ran the passes")
-
-    for rec in RECORDS:
-        if not rec.get("typed") or "error" in rec:  # a failed miss memoizes nothing
-            continue
-        assert fc.mismatch(rec, fc.rewrite_typed(typed_ctx, rec["sql"])) is None
-        size = len(typed_ctx._rw_cache)
-        with monkeypatch.context() as mp:
-            mp.setattr(context, "run_passes", no_passes)
-            again = fc.rewrite_typed(typed_ctx, rec["sql"], fresh=False)
-        assert fc.mismatch(rec, again) is None
-        assert len(typed_ctx._rw_cache) == size
-
-
 def test_every_pass_fires(typed_ctx):
     # each typed and stateless pass changes the text or the literal table
     # of at least one record, so a pass the corpus cannot reach is seen

@@ -232,3 +232,45 @@ def test_timestamps_are_written_as_int64_micros(ctx, tmp_path):
     finally:
         ctx.deregister_table("ts_ext")
         ctx.deregister_table("ts_copied")
+
+
+def test_copy_takes_its_clauses_in_either_order(ctx, tmp_path):
+    # COPY's clause tail is scanned like CREATE EXTERNAL TABLE's: any
+    # order, each clause at most once (parser.rs parse_copy)
+    lines = {}
+    for name, clauses in (
+        ("stored_first", "STORED AS CSV OPTIONS ('format.has_header' 'true')"),
+        ("options_first", "OPTIONS ('format.has_header' 'true') STORED AS CSV"),
+    ):
+        target = tmp_path / f"{name}.csv"
+        assert _run(ctx, f"COPY ({SRC}) TO '{target}' {clauses}") == (25, 1)
+        lines[name] = target.read_text().splitlines()
+    first, second = lines["stored_first"], lines["options_first"]
+    assert first[0] == second[0] == "k,name"
+    assert sorted(first[1:]) == sorted(second[1:]) and len(first) == 26
+
+
+@pytest.mark.parametrize(
+    "options",
+    [
+        "('format.has_header' 'true')",
+        "(format.has_header true)",
+        "('format.has_header' true)",
+        "(format.has_header 'true')",
+    ],
+)
+def test_options_keys_and_values_quoted_or_bare(ctx, tmp_path, options):
+    # one OPTIONS parser for COPY and CREATE EXTERNAL TABLE: a key and a
+    # value may each be quoted or bare (parser.rs parse_value_options)
+    path = tmp_path / "two.csv"
+    path.write_text("a,b\n1,x\n2,y\n")
+    name = f"opts_{uuid.uuid4().hex[:8]}"
+    ctx.sql(
+        f"CREATE EXTERNAL TABLE {name} (a INT, b VARCHAR) STORED AS CSV "
+        f"LOCATION '{path}' OPTIONS {options}"
+    )
+    try:
+        got = ctx.sql(f"SELECT a, b FROM {name}").collect()
+        assert sorted(tuple(r) for r in got) == [(1, "x"), (2, "y")]
+    finally:
+        ctx.deregister_table(name)

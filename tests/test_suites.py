@@ -51,3 +51,35 @@ def test_entry_matches_oracle(name, spark, sf_dir, con):
         compare(df, con, _ORACLES[name])
     else:  # rows-only entries (non-SQL-expressible ops)
         assert df.count() >= 0
+
+
+def test_source_entries_leave_no_scratch_behind(tmp_path):
+    # the source entries' scratch files (queries/sources.py) live under one
+    # per-process root that goes at interpreter exit; sql_ddl_insert's
+    # fresh CTAS location is inside it. No Spark: the context is stubbed.
+    import json
+    import subprocess
+
+    code = (
+        "import json, os\n"
+        "from arrow_datafusion_spark.queries import sources as s\n"
+        "texts = []\n"
+        "class Ctx:\n"
+        "    def __init__(self, spark): pass\n"
+        "    def sql(self, text): texts.append(text)\n"
+        "s.SessionContext, s.load_tables = Ctx, lambda *a, **k: {}\n"
+        "s.sql_ddl_insert(None, '')\n"
+        "with open(s._tmp('probe'), 'w') as f: f.write('x')\n"
+        "print(json.dumps({'root': os.path.dirname(s._tmp('probe')), 'texts': texts}))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert os.path.dirname(got["root"]) == str(tmp_path)
+    assert any(f"LOCATION '{got['root']}/nation-summary-" in t for t in got["texts"])
+    assert not os.path.exists(got["root"])
+    assert os.listdir(tmp_path) == []

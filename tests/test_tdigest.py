@@ -151,7 +151,6 @@ def test_approx_sql_surface_has_a_byte_guard(ctx, monkeypatch):
     exact = ctx.sql(q).collect()[0][0]  # under the 1 GiB cap
     with monkeypatch.context() as mp:
         mp.setattr(typed, "EXACT_MAX_BYTES", 0)
-        ctx._rw_cache.clear()  # the cap is a constant: the memo omits it
         df = ctx.sql(q)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "tdigest_from_list" not in plan
@@ -182,7 +181,6 @@ def test_approx_sql_surface_has_a_byte_guard(ctx, monkeypatch):
             )
         finally:
             spark.catalog.dropTempView("apx_guard_t")
-    ctx._rw_cache.clear()
 
 
 def test_windowed_fallbacks_keep_the_input_type(ctx):
@@ -229,7 +227,6 @@ def test_approx_byte_guard_covers_subquery_froms(ctx, monkeypatch):
     exact = ctx.sql(q).collect()[0][0]
     with monkeypatch.context() as mp:
         mp.setattr(typed, "EXACT_MAX_BYTES", 0)
-        ctx._rw_cache.clear()  # the cap is a constant: the memo omits it
         df = ctx.sql(q)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "collect_list" not in plan
@@ -245,4 +242,3 @@ def test_approx_byte_guard_covers_subquery_froms(ctx, monkeypatch):
             df._jdf.queryExecution().optimizedPlan().toString()
         )
         df.collect()
-    ctx._rw_cache.clear()
