@@ -38,6 +38,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
+from arrow_datafusion_spark import typenames
 from arrow_datafusion_spark.session import (
     _VIEW_CACHE,
     ALL_TABLES,
@@ -58,7 +59,6 @@ from arrow_datafusion_spark.sources.sink import (
 )
 from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex
 from arrow_datafusion_spark.sql.rewrite import (
-    _TYPE_MAP,
     REWRITE_PASSES,
     Scope,
     _match_paren,
@@ -90,27 +90,12 @@ _SQL_MACROS = (
     # datafusion/functions/src/datetime/to_unixtime.rs
     "CREATE OR REPLACE TEMPORARY FUNCTION to_unixtime(ts TIMESTAMP) "
     "RETURNS BIGINT RETURN unix_timestamp(ts)",
-    "CREATE OR REPLACE TEMPORARY FUNCTION to_timestamp_seconds(n BIGINT) "
-    "RETURNS TIMESTAMP RETURN timestamp_seconds(n)",
-    "CREATE OR REPLACE TEMPORARY FUNCTION to_timestamp_millis(n BIGINT) "
-    "RETURNS TIMESTAMP RETURN timestamp_millis(n)",
-    "CREATE OR REPLACE TEMPORARY FUNCTION to_timestamp_micros(n BIGINT) "
-    "RETURNS TIMESTAMP RETURN timestamp_micros(n)",
-    "CREATE OR REPLACE TEMPORARY FUNCTION to_timestamp_nanos(n BIGINT) "
-    "RETURNS TIMESTAMP RETURN timestamp_micros(n div 1000)",
-    # datafusion/functions-array aliases over Spark natives (array_has is
-    # the semantic array_has pass — false for NULL needle, not a macro)
-    "CREATE OR REPLACE TEMPORARY FUNCTION array_to_string(a ARRAY<STRING>, sep STRING) "
-    "RETURNS STRING RETURN array_join(a, sep)",
     # NULL separator splits per character; EMPTY separator does NOT split
     # (Postgres string_to_array('abc','') = {abc}; array.slt:6433)
     "CREATE OR REPLACE TEMPORARY FUNCTION string_to_array(s STRING, sep STRING) "
     "RETURNS ARRAY<STRING> RETURN CASE WHEN sep = '' THEN array(s) "
     "ELSE split(s, CASE WHEN sep IS NULL THEN '' "
     "ELSE regexp_replace(sep, '([\\\\^$.|?*+()\\\\[\\\\]{}])', '\\\\\\\\$1') END) END",
-    # datafusion/functions/src/core/nvl.rs & friends
-    "CREATE OR REPLACE TEMPORARY FUNCTION list_element(a ARRAY<STRING>, i INT) "
-    "RETURNS STRING RETURN element_at(a, i)",
     # datafusion/functions/src/math/gcd.rs, lcm.rs — Euclid as a bounded
     # fold (63 iterations covers any int64 pair; same construction as the
     # DataFrame registry's _gcd, expressed in SQL)
@@ -125,53 +110,6 @@ _SQL_MACROS = (
     "CREATE OR REPLACE TEMPORARY FUNCTION iszero(x DOUBLE) "
     "RETURNS BOOLEAN RETURN x = CAST(0.0 AS DOUBLE)",
 )
-
-
-def _arrow_type_display(dt) -> str:
-    """Spark DataType → Arrow's Debug display (what the reference's
-    DESCRIBE prints — information_schema columns / describe.rs)."""
-    from pyspark.sql import types as T
-
-    def field(name: str, inner, nullable: bool) -> str:
-        return (
-            f'Field {{ name: "{name}", data_type: {_arrow_type_display(inner)}, '
-            f"nullable: {str(nullable).lower()}, dict_id: 0, "
-            "dict_is_ordered: false, metadata: {} }"
-        )
-
-    if isinstance(dt, T.ArrayType):
-        return f"List({field('item', dt.elementType, dt.containsNull)})"
-    if isinstance(dt, T.MapType):
-        entries = (
-            "Struct(["
-            + field("key", dt.keyType, False)
-            + ", "
-            + field("value", dt.valueType, dt.valueContainsNull)
-            + "])"
-        )
-        return (
-            'Map(Field { name: "entries", data_type: '
-            + entries
-            + ", nullable: false, dict_id: 0, dict_is_ordered: false, "
-            "metadata: {} }, false)"
-        )
-    if isinstance(dt, T.StructType):
-        return (
-            "Struct(["
-            + ", ".join(field(f.name, f.dataType, f.nullable) for f in dt.fields)
-            + "])"
-        )
-    if isinstance(dt, T.DecimalType):
-        return f"Decimal128({dt.precision}, {dt.scale})"
-    names = {
-        "byte": "Int8", "short": "Int16", "int": "Int32", "integer": "Int32",
-        "long": "Int64", "bigint": "Int64", "float": "Float32",
-        "double": "Float64", "string": "Utf8", "boolean": "Boolean",
-        "binary": "Binary", "date": "Date32",
-        "timestamp": 'Timestamp(Microsecond, Some("UTC"))',
-        "timestamp_ntz": "Timestamp(Microsecond, None)", "void": "Null",
-    }
-    return names.get(dt.simpleString(), dt.simpleString())
 
 
 # simpleString → widening rank; a cast up the ranks never nulls a value
@@ -287,7 +225,7 @@ def _listing_base(path: str) -> str:
 def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
     """'name type, ...' column defs → Spark DDL schema string: split on
     top-level commas only (types like DECIMAL(10,2) contain commas) and map
-    postgres type names."""
+    each type spelling (typenames.sql_type)."""
     defs, depth, start = [], 0, 0
     for i, c in enumerate(cols + ","):
         if c == "(":
@@ -320,34 +258,7 @@ def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
                 ctype,
                 flags=re.IGNORECASE,
             )
-            # unsigned ints: widen one tier (§1.2 policy — Spark has no
-            # unsigned). BIGINT UNSIGNED stays BIGINT: integer arithmetic/
-            # display parity with the reference's UInt64 beats preserving
-            # the >2^63 half-range the test corpus never uses.
-            mu = re.fullmatch(
-                r"(tinyint|smallint|int|integer|bigint)\s+unsigned",
-                ctype,
-                re.IGNORECASE,
-            )
-            if mu:
-                ctype = {
-                    "tinyint": "SMALLINT",
-                    "smallint": "INT",
-                    "int": "BIGINT",
-                    "integer": "BIGINT",
-                    "bigint": "BIGINT",
-                }[mu.group(1).lower()]
-            # Spark rejects char/varchar in table schemas — they ARE string
-            if re.fullmatch(r"(?:var)?char\s*(?:\(\s*\d+\s*\))?", ctype, re.IGNORECASE):
-                ctype = "STRING"
-            # postgres array-type suffix: int[] / text[] / int[][]
-            mb = re.fullmatch(r"(\w+(?:\([^)]*\))?)((?:\s*\[\s*\])+)", ctype)
-            if mb:
-                base = _TYPE_MAP.get(mb.group(1).lower(), mb.group(1))
-                for _ in range(mb.group(2).count("[")):
-                    base = f"ARRAY<{base}>"
-                ctype = base
-            defs.append(f"{cname} {_TYPE_MAP.get(ctype.lower(), ctype)}")
+            defs.append(f"{cname} {typenames.sql_type(ctype)}")
     return ", ".join(defs)
 
 
@@ -589,7 +500,7 @@ class SessionContext:
     # is memoized per SparkSession object — weakly, so a stopped session
     # doesn't pin memory. Still shared across SessionContext instances on
     # the same session: code that builds a fresh context per query (the
-    # source entries do) would otherwise replay 11 DDL round-trips each
+    # source entries do) would otherwise replay every registration each
     # time (~0.2 s/query of pure overhead).
     _MACROS_DONE: "weakref.WeakSet[SparkSession]" = None  # initialized below
 
@@ -619,126 +530,11 @@ class SessionContext:
         if self.spark not in SessionContext._MACROS_DONE:
             for ddl in _SQL_MACROS:
                 self.spark.sql(ddl)
-            # blake2 digests (crypto/digest.rs Blake2s/Blake2b): no Spark
-            # primitive — Arrow-batched hashlib UDF (cold path; never in a
-            # scan/join pipeline). hashlib's defaults match the reference
-            # (blake2s 32 B, blake2b 64 B).
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
+            # the Python kernels the rewrites call by their df_* names
+            from arrow_datafusion_spark.functions.kernels import SESSION_UDFS
 
-            def _blake2_batch(s, algo):
-                import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
-                import hashlib
-
-                def h(v, a):
-                    if v is None:
-                        return None
-                    b = v if isinstance(v, (bytes, bytearray)) else str(v).encode()
-                    return getattr(hashlib, a)(b).digest()
-
-                return pd.Series([h(v, a) for v, a in zip(s, algo)])
-
-            _blake2_batch.__annotations__ = {
-                "s": pd.Series, "algo": pd.Series, "return": pd.Series
-            }
-            self.spark.udf.register("df_blake2", pandas_udf(_blake2_batch, "binary"))
-
-            # blake3 (crypto/digest.rs Blake3 arm): no Spark, hashlib, or
-            # DuckDB primitive — pure-Python spec implementation, validated
-            # against the reference implementation's published test vectors
-            # (functions/blake3.py; tests/test_api.py blake3 vectors)
-            def _blake3_batch(s):
-                import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
-                from arrow_datafusion_spark.functions.blake3 import blake3 as _b3
-
-                def h(v):
-                    if v is None:
-                        return None
-                    b = v if isinstance(v, (bytes, bytearray)) else str(v).encode()
-                    return _b3(bytes(b))
-
-                return pd.Series([h(v) for v in s])
-
-            _blake3_batch.__annotations__ = {"s": pd.Series, "return": pd.Series}
-            self.spark.udf.register("df_blake3", pandas_udf(_blake3_batch, "binary"))
-
-            # regexp_match (regex/regexpmatch.rs, Postgres semantics): the
-            # FIRST match's capture groups as List<Utf8> — whole match when
-            # the pattern has no groups, NULL when any argument is NULL or
-            # nothing matches. No Spark primitive returns the group LIST
-            # for runtime patterns, so Arrow-batched `re`.
-            def _regexp_match_batch(s, p, f):
-                import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
-                try:  # `regex` supports \p{...} properties like Rust's crate
-                    import regex as _re
-                except ImportError:
-                    import re as _re
-
-                _FL = {"i": _re.I, "s": _re.S, "m": _re.M, "x": _re.X}
-
-                def one(v, pat, fl):
-                    if v is None or pat is None:
-                        return None
-                    flags = 0
-                    for ch in fl or "":  # NULL flags = no flags (regex.rs)
-                        if ch == "g":
-                            raise ValueError(
-                                "regexp_match() does not support the global flag"
-                            )
-                        flags |= _FL.get(ch, 0)
-                    m = _re.search(pat, v, flags)
-                    if m is None:
-                        return None
-                    return list(m.groups()) if m.re.groups else [m.group(0)]
-
-                return pd.Series([one(*args) for args in zip(s, p, f)])
-
-            _regexp_match_batch.__annotations__ = {
-                "s": pd.Series, "p": pd.Series, "f": pd.Series, "return": pd.Series
-            }
-            self.spark.udf.register(
-                "df_regexp_match", pandas_udf(_regexp_match_batch, "array<string>")
-            )
-
-            # regexp_replace (regex/regexpreplace.rs, Postgres semantics):
-            # replaces the FIRST match unless the 'g' flag is given, back-
-            # references are \1-style, and a NULL in ANY argument (flags
-            # included) yields NULL. The ctx.sql rewrite keeps the pure
-            # replace-all no-backref form on Spark's JVM kernel and routes
-            # only the divergent forms here.
-            def _regexp_replace_batch(s, p, r, f):
-                import arrow_datafusion_spark.worker  # noqa: F401  (zip shim)
-                try:
-                    import regex as _re
-                except ImportError:
-                    import re as _re
-
-                _FL = {"i": _re.I, "s": _re.S, "m": _re.M, "x": _re.X}
-
-                def one(v, pat, rep, fl):
-                    if v is None or pat is None or rep is None or fl is None:
-                        return None
-                    flags, count = 0, 1
-                    for ch in fl:
-                        if ch == "g":
-                            count = 0
-                        else:
-                            flags |= _FL.get(ch, 0)
-                    # '\\1' (escaped backslash in the SQL text) and '\1'
-                    # both mean group 1 — collapse to the \1 form re.sub
-                    # interprets
-                    rep = rep.replace("\\\\", "\\")
-                    return _re.sub(pat, rep, v, count=count, flags=flags)
-
-                return pd.Series([one(*args) for args in zip(s, p, r, f)])
-
-            _regexp_replace_batch.__annotations__ = {
-                "s": pd.Series, "p": pd.Series, "r": pd.Series,
-                "f": pd.Series, "return": pd.Series,
-            }
-            self.spark.udf.register(
-                "df_regexp_replace", pandas_udf(_regexp_replace_batch, "string")
-            )
+            for name, udf in SESSION_UDFS.items():
+                self.spark.udf.register(name, udf)
             SessionContext._MACROS_DONE.add(self.spark)
 
     def register_table(self, name: str, df: DataFrame) -> None:
@@ -1576,6 +1372,8 @@ class SessionContext:
                 r"\s+(NOT\s+NULL|PRIMARY\s+KEY|UNIQUE)\s*$", "", expr,
                 flags=re.IGNORECASE,
             )
+            # rewritten once, here: the record holds Spark's text
+            expr = self._spark_text(lex(expr))
             try:  # plan the expression standalone — column refs must fail
                 self.spark.sql(f"SELECT {expr}")
             except Exception as exc:
@@ -1861,7 +1659,7 @@ class SessionContext:
             lst = self._record(tname).listing
             schema = lst["schema"] if lst and lst["schema"] else self.spark.table(tname).schema
             for i, f in enumerate(schema):
-                arrow = _arrow_type_display(f.dataType)
+                arrow = typenames.arrow_name(f.dataType)
                 char_octet = prec = radix = scale = None
                 if arrow in ("Utf8", "Binary"):
                     char_octet = 2147483647
@@ -2198,9 +1996,16 @@ class SessionContext:
         return self._empty_result()
 
     def _spark_sql(self, lx: Lexed, args=None) -> DataFrame:
-        """Rewritten query → spark.sql, carrying bound parameters if any.
+        """Rewritten query → spark.sql, carrying bound parameters if any."""
+        rewritten = self._spark_text(lx)
+        if args:
+            return self.spark.sql(rewritten, args=args)
+        return self.spark.sql(rewritten)
 
-        Every call rewrites its statement afresh, as the reference plans
+    def _spark_text(self, lx: Lexed) -> str:
+        """The Spark SQL text of a lexed statement or expression.
+
+        Every call rewrites its text afresh, as the reference plans
         every ``sql()`` call from its text: nothing carries over between
         calls, so a catalog or settings change made through any path shows
         at the next statement. ``PASSES`` runs in one loop
@@ -2219,10 +2024,7 @@ class SessionContext:
         # text at most once (the passes never edit a FROM/JOIN clause)
         rel = Relations(self.spark, lx.text)
         work = lx.copy()
-        rewritten = work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
-        if args:
-            return self.spark.sql(rewritten, args=args)
-        return self.spark.sql(rewritten)
+        return work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
 
     def _column_tz(self) -> dict[str, dict[str, str]]:
         """The named time zones views declared for their columns, by
@@ -2274,7 +2076,7 @@ class SessionContext:
                 )
             fmt = EXT_FORMATS.get(path.rsplit(".", 1)[-1].lower(), "parquet")
         if source.startswith("("):
-            df = self._spark_sql(lx.derive(source[1:-1].strip()), args)
+            df = self._spark_sql(self._check_query(lx.derive(source[1:-1].strip())), args)
         else:
             df = self.table(source)
         # writer options from COPY OPTIONS (format.* namespace)

@@ -6,8 +6,8 @@ Closes the last crypto-family gap vs the reference
 (datafusion/functions/src/crypto/digest.rs, DigestAlgorithm::Blake3):
 neither hashlib, Spark, nor DuckDB exposes BLAKE3, so `digest(x,'blake3')`
 needs its own kernel. Correctness-oriented — this is Python-speed and is
-invoked through an Arrow-batched pandas UDF at the call site
-(SessionContext df_blake3); it is a compatibility surface, not a hot-path
+invoked through an Arrow-batched pandas UDF (functions/kernels.py
+``blake3``); it is a compatibility surface, not a hot-path
 kernel. Verified against the reference implementation's published test
 vectors (tests/test_api.py::test_blake3_known_vectors).
 """

@@ -1,6 +1,6 @@
 """Scalar function layer: every DataFusion scalar function name mapped to an
-idiomatic PySpark Column expression (JVM-side, codegen-friendly — no Python
-UDFs anywhere in this module).
+idiomatic PySpark Column expression (JVM-side, codegen-friendly; only the
+blake digests call a Python kernel, functions/kernels.py).
 
 Reference registries mirrored (names + arities follow these):
 - string:   datafusion/functions/src/string/mod.rs:48-73
@@ -25,6 +25,8 @@ from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from arrow_datafusion_spark import typenames
 
 __all__ = ["SCALAR", "FAMILIES"]
 
@@ -106,10 +108,9 @@ UNICODE: dict[str, Callable[..., Column]] = {
 REGEX: dict[str, Callable[..., Column]] = {
     "regexp_like": lambda s, p, *flags: F.regexp_like(_c(s), _regex_flags(p, flags)),
     # DataFusion regexp_match returns the first match's capture LIST —
-    # served exactly by the df_regexp_match session UDF on the SQL surface
-    # (context._ensure_macros); this DataFrame-registry fallback keeps the
-    # scalar whole-match form for sessions without a SessionContext. The
-    # common scalar use (match text) maps to extract of group 0.
+    # served exactly by the kernels.regexp_match UDF on the SQL surface;
+    # the DataFrame registry keeps the scalar whole-match form (extract of
+    # group 0), the common scalar use (match text).
     "regexp_match": lambda s, p, *flags: F.regexp_extract(_c(s), _pat(p, flags), 0),
     "regexp_replace": lambda s, p, r, *flags: F.regexp_replace(
         _c(s), _pat(p, flags), r if isinstance(r, str) else r
@@ -280,72 +281,21 @@ MATH: dict[str, Callable[..., Column]] = {
 # --------------------------------------------------------------------------
 # core / conditional (datafusion/functions/src/core/)
 
-_ARROW_TO_SPARK_TYPE = {
-    "utf8": "string", "largeutf8": "string", "utf8view": "string",
-    "int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "bigint",
-    "uint8": "smallint", "uint16": "int", "uint32": "bigint",
-    "uint64": "decimal(20,0)",
-    "float16": "float", "float32": "float", "float64": "double",
-    "boolean": "boolean", "binary": "binary", "largebinary": "binary",
-    "date32": "date", "date64": "date",
-    "timestamp(microsecond, none)": "timestamp_ntz",
-    "timestamp(nanosecond, none)": "timestamp_ntz",
-}
-
-
-# time32/time64 → BIGINT nanoseconds since midnight; decimal256 → Spark
-# DECIMAL iff precision ≤ 38, explicit reject above (sources/arrow_ipc.py
-# applies the same policy on the scan side; reference types at
-# common/src/scalar/mod.rs:206,255-261).
-_TIME_UNIT_NS = {"second": 1_000_000_000, "millisecond": 1_000_000,
-                 "microsecond": 1_000, "nanosecond": 1}
-
-
 def _arrow_cast(c, typename) -> Column:
-    import re as _re
-
-    t = str(typename).strip().strip("'\"").lower()
-    m = _re.fullmatch(r"time(?:32|64)\(\s*(\w+)\s*\)", t)
-    if m:
-        factor = _TIME_UNIT_NS.get(m.group(1))
-        if factor is None:
-            raise ValueError(f"unknown time unit in arrow_cast: {t!r}")
+    t = str(typename).strip().strip("'\"")
+    factor = typenames.time_unit_ns(t)
+    if factor is not None:
         return _c(c).cast("bigint") * F.lit(factor)
-    m = _re.fullmatch(r"decimal256\(\s*(\d+)\s*,\s*(-?\d+)\s*\)", t)
-    if m:
-        p, s = int(m.group(1)), int(m.group(2))
-        if p > 38:
-            raise ValueError(
-                f"Decimal256({p}, {s}) exceeds Spark's DECIMAL(38) "
-                "precision ceiling; re-scale to precision <= 38"
-            )
-        return _c(c).cast(f"decimal({p},{s})")
-    m = _re.fullmatch(r"decimal128\(\s*(\d+)\s*,\s*(-?\d+)\s*\)", t)
-    if m:
-        return _c(c).cast(f"decimal({m.group(1)},{m.group(2)})")
-    return _c(c).cast(_ARROW_TO_SPARK_TYPE.get(t, t))
-
-
-# Spark typeof() names → the Arrow names DataFusion's arrow_typeof prints
-# (datafusion/functions/src/core/arrowtypeof.rs). Complex/parameterized
-# types fall through to the Spark spelling.
-_SPARK_TO_ARROW_NAME = {
-    "tinyint": "Int8", "smallint": "Int16", "int": "Int32", "bigint": "Int64",
-    "float": "Float32", "double": "Float64", "string": "Utf8",
-    "boolean": "Boolean", "binary": "Binary", "date": "Date32",
-    "timestamp": 'Timestamp(Microsecond, Some("UTC"))',
-    "timestamp_ntz": "Timestamp(Microsecond, None)",
-    "void": "Null",
-}
+    return _c(c).cast(typenames.arrow_type(t) or t)
 
 
 def _arrow_typeof(c) -> Column:
     t = F.typeof(_c(c))
-    out = None
-    for spark_name, arrow_name in _SPARK_TO_ARROW_NAME.items():
-        cond = F.when(t == spark_name, F.lit(arrow_name))
-        out = cond if out is None else out.when(t == spark_name, F.lit(arrow_name))
-    return out.otherwise(t)
+    names = F.create_map(*[F.lit(x) for kv in typenames.ARROW_NAMES.items() for x in kv])
+    return F.coalesce(
+        F.element_at(names, t),
+        F.regexp_replace(t, typenames.DECIMAL_NAME, typenames.DECIMAL_ARROW),
+    )
 
 
 CORE: dict[str, Callable[..., Column]] = {
@@ -373,14 +323,13 @@ def _digest(c, algo) -> Column:
         return F.sha1(_c(c))
     if a.startswith("sha"):
         return F.sha2(_c(c), int(a[3:]))
-    if a in ("blake2b", "blake2s"):
-        # hashlib-backed UDF registered by SessionContext._ensure_macros;
-        # resolves when a SessionContext is live in the session
-        return F.call_udf("df_blake2", _c(c), F.lit(a))
-    if a == "blake3":
-        # pure-Python spec implementation (functions/blake3.py), registered
-        # alongside df_blake2 by SessionContext._ensure_macros
-        return F.call_udf("df_blake3", _c(c))
+    if a in ("blake2b", "blake2s", "blake3"):
+        # the Python kernels (functions/kernels.py)
+        from arrow_datafusion_spark.functions import kernels
+
+        if a == "blake3":
+            return kernels.blake3(_c(c))
+        return kernels.blake2(_c(c), F.lit(a))
     raise ValueError(f"unsupported digest algorithm: {algo}")
 
 

@@ -25,7 +25,6 @@ __all__ = [
     "exact_dedup_groups",
     "minhash_candidate_pairs",
     "minhash_near_duplicates",
-    "simhash16",
     "simhash16_arrow",
     "simhash64_arrow",
     "word_ngrams",
@@ -430,45 +429,19 @@ def _verify_pairs_jaccard(
     )
 
 
-def simhash16(tokens: Column) -> Column:
-    """16-bit SimHash over a token array (near-dup signature for Hamming
-    bucketing): bit j is the sign of sum over tokens of ±1 according to bit j
-    of the token's md5 (one bit per hex digit, parity of the digit value).
-
-    Pure integer arithmetic end-to-end — exact on any engine.
-    """
-    toks = F.array_distinct(tokens)
-
-    def hex_digit_val(t: Column, j: int) -> Column:
-        # value of hex digit j of md5(token): position in '0123456789abcdef'
-        return (
-            F.call_function(
-                "locate", F.substring(F.md5(t), j + 1, 1), F.lit("0123456789abcdef")
-            )
-            - 1
-        )
-
-    def contrib_fn(j: int):  # closure factory — see arity note above
-        return lambda acc, t: acc + ((hex_digit_val(t, j) % 2) * 2 - 1)
-
-    out = F.lit(0)
-    for j in range(16):
-        contrib = F.aggregate(toks, F.lit(0), contrib_fn(j))
-        out = out + F.when(contrib > 0, F.lit(1)).otherwise(F.lit(0)) * (1 << j)
-    return out
-
-
 _SIMHASH_UDF = []
 
 
 def simhash16_arrow(tokens: Column) -> Column:
-    """Arrow-batched (pandas UDF) variant of :func:`simhash16` —
-    value-identical (md5 is md5; hex-digit parity is engine-independent),
-    measured ~6× faster at sf0.1 (the JVM form is 16 interpreted
-    ``aggregate`` HOFs per row). Consumes the already-split JVM token
-    array, so tokenization cannot diverge. Tokens repeat heavily across a
-    corpus, so the per-batch memo turns ~1M md5 calls into ~vocab-size
-    calls. Narrow and shuffle-free — same 100 TB shape as the HOF."""
+    """16-bit SimHash over a token array (near-dup signature for Hamming
+    bucketing), Arrow-batched: bit j is the sign of the sum over the
+    distinct tokens of ±1, by the parity of hex digit j of the token's md5.
+    The ``dedup_simhash`` entry's DuckDB oracle
+    (queries/llm.py ``DEDUP_SIMHASH_SQL``) computes the same bits in SQL
+    and pins the values. Consumes the already-split JVM token array, so
+    tokenization cannot diverge. Tokens repeat heavily across a corpus, so
+    the per-batch memo turns ~1M md5 calls into ~vocab-size calls. Narrow
+    and shuffle-free."""
     if not _SIMHASH_UDF:
         import hashlib
 

@@ -180,10 +180,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py simhash64_arrow; 100× probe evidence in
     BENCH_SCALE.md)."""
     d = _docs(spark, sf_dir)
-    # Arrow-batched kernel (r13): value-identical to the simhash16 Column
-    # form (md5 hex-digit parity is engine-independent; the kernel memoizes
-    # per-token masks) — the 16 interpreted aggregate HOFs were this
-    # entry's whole cost; dedup_components already rides the same kernel
+    # Arrow-batched kernel (the kernel memoizes per-token masks);
+    # dedup_components rides the same kernel
     sig = D.simhash16_arrow(T.ws_tokens(F.col("text")))
     from pyspark.sql import Window
 

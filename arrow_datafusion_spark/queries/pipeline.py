@@ -174,7 +174,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(component²) rows on big near-dup clusters — measured 117 s at sf0.1
     where this loop takes ~2 s — fine for the oracle's sf0.01 gate, fatal
     at corpus scale. The SimHash key uses the Arrow-batched kernel
-    (simhash16_arrow — value-identical to the HOF form, measured ~6×)."""
+    (simhash16_arrow)."""
     d = _docs(spark, sf_dir)
     # k2 is the 64-BIT simhash: the 16-bit form has 65,536 buckets, which
     # saturate at corpus scale and chain unrelated docs into giant

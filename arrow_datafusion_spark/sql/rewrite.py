@@ -41,20 +41,8 @@ from collections.abc import Callable
 from functools import lru_cache, partial
 from typing import NamedTuple
 
+from arrow_datafusion_spark import typenames
 from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, quote
-
-# PostgreSQL-ish type names DataFusion accepts that Spark SQL spells differently
-_TYPE_MAP = {
-    "text": "STRING",
-    "bytea": "BINARY",
-    "float4": "FLOAT",
-    "float8": "DOUBLE",
-    "int2": "SMALLINT",
-    "int4": "INT",
-    "int8": "BIGINT",
-    "bool": "BOOLEAN",
-}
-
 
 # SQL-level list_* → array_* renames: semantics verified identical between
 # the DataFusion alias and the Spark native (1-based positions, sort order,
@@ -91,29 +79,6 @@ _SQL_LIST_ALIASES = {
     "list_push_front": "array_prepend",
     "make_array": "array",
 }
-
-
-# Arrow type-name (lowercased) → Spark SQL type name, for arrow_cast in SQL
-# (shares the semantic table with functions/scalar._ARROW_TO_SPARK_TYPE).
-_ARROW_SQL_TYPES = {
-    "utf8": "STRING", "largeutf8": "STRING", "utf8view": "STRING",
-    "int8": "TINYINT", "int16": "SMALLINT", "int32": "INT", "int64": "BIGINT",
-    "uint8": "SMALLINT", "uint16": "INT", "uint32": "BIGINT",
-    "uint64": "DECIMAL(20,0)",
-    "float16": "FLOAT", "float32": "FLOAT", "float64": "DOUBLE",
-    "boolean": "BOOLEAN", "binary": "BINARY", "largebinary": "BINARY",
-    "date32": "DATE", "date64": "DATE",
-}
-
-# typeof() name → Arrow display name for arrow_typeof in SQL (same table as
-# functions/scalar._SPARK_TO_ARROW_NAME, inlined as a map literal).
-_TYPEOF_MAP_SQL = (
-    "map('tinyint','Int8','smallint','Int16','int','Int32','bigint','Int64',"
-    "'float','Float32','double','Float64','string','Utf8','boolean','Boolean',"
-    "'binary','Binary','date','Date32',"
-    "'timestamp','Timestamp(Microsecond, Some(\"UTC\"))',"
-    "'timestamp_ntz','Timestamp(Microsecond, None)','void','Null')"
-)
 
 
 def _match_paren(q: str, i: int) -> int | None:
@@ -946,43 +911,6 @@ def _split_top_level(s: str) -> list[str]:
     return out
 
 
-def _arrow_type_to_sql(t: str) -> str | None:
-    """Arrow type display name → Spark SQL type, or None when the cast
-    needs an expression wrapper (time types). Raises on Decimal256 > 38."""
-    tl = t.strip().lower()
-    m = re.fullmatch(r"decimal(?:128|256)\(\s*(\d+)\s*,\s*(-?\d+)\s*\)", tl)
-    if m:
-        p, s = int(m.group(1)), int(m.group(2))
-        if p > 38:
-            raise ValueError(
-                f"Decimal256({p}, {s}) exceeds Spark's DECIMAL(38) precision ceiling"
-            )
-        return f"DECIMAL({p},{s})"
-    m = re.fullmatch(r"dictionary\(\s*[^,]+,\s*(.+)\)", tl)
-    if m:  # dictionary encoding is physical; cast to the value type
-        return _arrow_type_to_sql(m.group(1))
-    # List kinds are all ARRAY<T> in Spark (size/offset-width are physical)
-    m = re.fullmatch(r"(?:large)?list\((.+)\)", tl)
-    if m:
-        inner = _arrow_type_to_sql(m.group(1).strip())
-        return f"ARRAY<{inner}>" if inner else None
-    m = re.fullmatch(r"fixedsizelist\(\s*\d+\s*,\s*(.+)\)", tl)
-    if m:
-        inner = _arrow_type_to_sql(m.group(1).strip())
-        return f"ARRAY<{inner}>" if inner else None
-    m = re.fullmatch(r"timestamp\(\s*\w+\s*,\s*none\s*\)", tl)
-    if m:
-        return "TIMESTAMP_NTZ"
-    m = re.fullmatch(r"timestamp\(\s*\w+\s*,\s*some\(.*\)\s*\)", tl)
-    if m:
-        return "TIMESTAMP"
-    return _ARROW_SQL_TYPES.get(tl)
-
-
-_TIME_UNIT_NS_SQL = {"second": 1_000_000_000, "millisecond": 1_000_000,
-                     "microsecond": 1_000, "nanosecond": 1}
-
-
 def _validate_arrow_tz(tz: str) -> None:
     """Reject timezones arrow's parser rejects (arrow_typeof.slt:338's
     +25:00 'statement error' golden) — and anything Java's ZoneId would
@@ -1021,12 +949,11 @@ def _arrow_calls(q: str, lx: Lexed, scope: Scope) -> str:
         tname = lx.string(tlit)
         if tname is None:
             tname = tlit.strip("'")
-        tm = re.fullmatch(r"time(?:32|64)\(\s*(\w+)\s*\)", tname.strip(), re.IGNORECASE)
-        if tm:
-            factor = _TIME_UNIT_NS_SQL[tm.group(1).lower()]
+        factor = typenames.time_unit_ns(tname)
+        if factor is not None:
             repl = f"(CAST({expr} AS BIGINT) * {factor})"
         else:
-            sql_type = _arrow_type_to_sql(tname)
+            sql_type = typenames.arrow_type(tname)
             repl = f"CAST({expr} AS {sql_type})" if sql_type else f"CAST({expr} AS {tname})"
             # NAMED/OFFSET timezone target (Timestamp(unit, Some("tz"))):
             # arrow's NTZ→TZ cast is WALL-CLOCK-PRESERVING — the stored
@@ -1141,14 +1068,7 @@ def _arrow_calls(q: str, lx: Lexed, scope: Scope) -> str:
             if 0 <= v < 2**64:
                 return "'UInt64'"
             return f"'Decimal128({len(str(abs(v)))}, 0)'" if scope.pfad else "'Float64'"
-        # exact-name map first; parameterized decimals fall through to a
-        # regexp rename (decimal(p,s) → Decimal128(p, s)); anything else
-        # keeps its Spark name (documented §1.2 display fallback)
-        return (
-            f"coalesce(element_at({_TYPEOF_MAP_SQL}, typeof({expr})), "
-            f"regexp_replace(typeof({expr}), "
-            "'^decimal\\\\((\\\\d+),(\\\\d+)\\\\)$', 'Decimal128($1, $2)'))"
-        )
+        return typenames.arrow_typeof_sql(expr)
 
     q = rewrite_calls(q, "arrow_typeof", typeof)
     # NULL-propagating isnan (nans.rs): Spark's builtin returns false on
@@ -1387,7 +1307,7 @@ def _regexp_replace(lx: Lexed, _fn: str, parts: list[str], _after: str) -> str |
     return f"df_regexp_replace({parts[0]}, {parts[1]}, {parts[2]}, {parts[3]})"
 
 
-# regexp_match → the session UDF (registered by _ensure_macros); the
+# regexp_match → the session UDF (functions/kernels.py); the
 # 2-arg form means "no flags" — pass '' (a NULL flags COLUMN stays
 # NULL-strict like Postgres)
 @_calls("regexp_match")
@@ -1399,22 +1319,21 @@ def _regexp_match(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | 
     return f"df_regexp_match({parts[0]}, {parts[1]}, {parts[2]})"
 
 
-@_pass(r"\[\s*\]|\b(?:text|bytea|float4|float8|int2|int4|int8|bool)\b")
-def _pg_type_names(q: str, _lx: Lexed, _scope: Scope) -> str:
-    # postgres type names — only in cast positions (``::type`` or
-    # ``CAST(x AS type)``), since names like ``text`` are also valid columns
-    # postgres array-type casts FIRST (the [] would otherwise read as a
-    # subscript/literal): ::int[] → ::ARRAY<INT>
-    def _arr_cast(m: "re.Match[str]") -> str:
-        base = _TYPE_MAP.get(m.group(2).lower(), m.group(2))
-        return f"{m.group(1)}ARRAY<{base}>{m.group(3)}"
+# a type spelling in cast position, ``::T`` or ``CAST(x AS T)`` (names like
+# ``text`` are valid columns elsewhere), or TIMESTAMP WITH TIME ZONE in any
+# position (a typed literal's type too; no column can be named so)
+_CAST_TYPE = re.compile(
+    rf"(::\s*|\bAS\s+(?=(?:{typenames.SQL_SPELLING})\s*\))"
+    rf"|(?=\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b))({typenames.SQL_SPELLING})",
+    re.IGNORECASE,
+)
 
-    q = re.sub(r"(::\s*)(\w+)\s*\[\s*\]()", _arr_cast, q)
-    q = re.sub(r"(\bAS\s+)(\w+)\s*\[\s*\](\s*\))", _arr_cast, q, flags=re.IGNORECASE)
-    for pg, sp in _TYPE_MAP.items():
-        q = re.sub(rf"::\s*{pg}\b", f"::{sp}", q, flags=re.IGNORECASE)
-        q = re.sub(rf"\bAS\s+{pg}\s*\)", f"AS {sp})", q, flags=re.IGNORECASE)
-    return q
+
+@_pass(typenames.SQL_KEYWORDS)
+def _sql_type_names(q: str, _lx: Lexed, _scope: Scope) -> str:
+    # DataFusion's SQL type spellings Spark rejects or reads differently
+    # (typenames.sql_type): TEXT, INT8, VARCHAR, INT UNSIGNED, int[], ...
+    return _CAST_TYPE.sub(lambda m: m.group(1) + typenames.sql_type(m.group(2)), q)
 
 
 @_pass(r"\bDATE\b")
@@ -1563,20 +1482,11 @@ def _timestamp_bigint_casts(q: str, lx: Lexed, _scope: Scope) -> str:
     )
 
 
-@_pass(r"\bvarchar\b")
-def _bare_varchar(q: str, _lx: Lexed, _scope: Scope) -> str:
-    # bare VARCHAR in cast position: DataFusion's VARCHAR is unbounded
-    # (→ Utf8); Spark 4 requires a length parameter — only the
-    # parameterless spelling is rewritten (VARCHAR(10) stays)
-    q = re.sub(r"::\s*varchar\b(?!\s*\()", "::STRING", q, flags=re.IGNORECASE)
-    return re.sub(r"\bAS\s+varchar\s*\)", "AS STRING)", q, flags=re.IGNORECASE)
-
-
 # digest(x, 'algo') / shaN(x) (functions/src/crypto): binary digests.
 # Spark's md5/sha1/sha2 return HEX STRINGS — unhex() recovers the
 # reference's binary return type (slt displays binary as lower-hex,
-# so round-tripping through hex is exact). blake2 → hashlib UDF;
-# blake3 → the pure-Python spec implementation (functions/blake3.py).
+# so round-tripping through hex is exact). blake2 and blake3 → the
+# Python kernels (functions/kernels.py).
 _DIGEST_FORMS = {
     "md5": "unhex(md5({0}))",
     "sha1": "unhex(sha1({0}))",
@@ -2143,8 +2053,6 @@ _sub(
     r"(?<![\w.])(\(\s*\d+\s*\)|\d+)\s*/\s*(\(\s*\d+\s*\)|\d+)(?![\w.])",
     r"(\1 div \2)",
 )
-# DDL/cast type spelling Spark's parser rejects
-_sub("timestamp_with_time_zone", r"\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b", "TIMESTAMP")
 
 
 @_pass(r"\bIN\s*\(")

@@ -127,6 +127,8 @@ EXTRA = (
     "SELECT CAST(CAST(i AS TIMESTAMP) AS BIGINT), TIMESTAMP '2020-01-01'::timestamp::bigint / 10 FROM t",
     "SELECT TIME '12:00:00.123456789', TIME '01:02:03.5', CAST(s AS TIMESTAMP WITH TIME ZONE) FROM t",
     "SELECT CAST(a AS int4[]), b::bool, CAST(c AS varchar), -2 ^ 2 << 1, 1 >> d ^ 2 FROM t",
+    "SELECT CAST(x AS INT UNSIGNED), y::bigint unsigned, CAST(s AS VARCHAR(10)), s::char(3), CAST(s AS CHAR) FROM t",
+    "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00', CAST(a AS text[][]) FROM t",
 )
 
 # Type-aware statements over the typed_catalog relations, one or more

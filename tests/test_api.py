@@ -211,6 +211,40 @@ def test_sql_copy_to_roundtrip(spark, sf_dir, tmp_path):
     assert res["count"] == spark.table("nation").count()
 
 
+def test_copy_source_binds_information_schema(spark, tmp_path):
+    # COPY's source query runs the plan-time checks like any query
+    ctx = SessionContext(spark)
+    out = tmp_path / "o.csv"
+    res = ctx.sql(
+        f"COPY (SELECT table_name FROM information_schema.tables) TO '{out}'"
+    ).first()
+    assert res["count"] == ctx.information_schema_tables().count()
+    assert ctx.sql("DESCRIBE information_schema.tables").count() == 4
+
+
+def test_copy_source_rejects_a_dropped_function(spark, tmp_path):
+    ctx = SessionContext(spark)
+    ctx.sql("DROP FUNCTION abs")
+    with pytest.raises(ValueError, match="Invalid function 'abs'"):
+        ctx.sql(f"COPY (SELECT abs(-1) AS a) TO '{tmp_path / 'abs.csv'}'")
+
+
+def test_column_defaults_take_the_rewrite_passes(spark):
+    # a DEFAULT is rewritten once, at CREATE time: DataFusion spellings
+    # such as '::text' and arrow_cast work there as in a query
+    ctx = SessionContext(spark)
+    ctx.sql("DROP TABLE IF EXISTS defaults_rw_t")
+    try:
+        ctx.sql(
+            "CREATE TABLE defaults_rw_t (a INT, s TEXT DEFAULT 'x'::text, "
+            "n BIGINT DEFAULT arrow_cast(1, 'Int64'))"
+        )
+        ctx.sql("INSERT INTO defaults_rw_t (a) VALUES (7)")
+        assert [tuple(r) for r in ctx.table("defaults_rw_t").collect()] == [(7, "x", 1)]
+    finally:
+        ctx.sql("DROP TABLE IF EXISTS defaults_rw_t")
+
+
 def test_analyze_reports_runtime_metrics(spark, sf_dir):
     """EXPLAIN ANALYZE analog (physical-plan/src/analyze.rs:42): executed
     plan must carry real runtime row counts."""

@@ -82,6 +82,22 @@ def test_passes_are_named_once_and_cite_slt_lines():
     assert cites and all(re.fullmatch(r"\w+\.slt:\d+", c) for c in cites), cites
 
 
+def test_every_sql_macro_is_reachable():
+    # a pass that lowers every call of a macro's name shadows the macro:
+    # each registered name must survive the passes in a one-call statement
+    import re
+
+    from arrow_datafusion_spark.context import _SQL_MACROS
+    from arrow_datafusion_spark.sql.lex import lex
+    from arrow_datafusion_spark.sql.rewrite import _rewrite_sql
+
+    for ddl in _SQL_MACROS:
+        m = re.search(r"FUNCTION (\w+)\((.*?)\) RETURNS", ddl)
+        name, params = m.group(1), re.findall(r"(\w+) [A-Z]", m.group(2))
+        out = _rewrite_sql(lex(f"SELECT {name}({', '.join(params)}) FROM t"))
+        assert re.search(rf"\b{name}\(", out), (name, out)
+
+
 # fast/full tier (tests/conftest.py): reduced derandomized prefix by default
 _FULL = bool(os.environ.get("SPARK_GRAFT_FULL_TESTS"))
 
