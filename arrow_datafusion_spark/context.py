@@ -57,14 +57,16 @@ from arrow_datafusion_spark.sources.sink import (
     local_path,
     write_sink,
 )
-from arrow_datafusion_spark.sql.lex import LIT, Lexed, lex
-from arrow_datafusion_spark.sql.rewrite import (
-    REWRITE_PASSES,
-    Scope,
-    _match_paren,
-    _split_top_level,
-    run_passes,
+from arrow_datafusion_spark.sql.lex import (
+    LIT,
+    Lexed,
+    close,
+    enclosing,
+    lex,
+    split,
+    top_level,
 )
+from arrow_datafusion_spark.sql.rewrite import REWRITE_PASSES, Scope, run_passes
 from arrow_datafusion_spark.sql.typed import TYPED_PASSES, Relations
 
 # The front end's rewrite passes in run order: the type-aware ones, then
@@ -226,39 +228,32 @@ def _column_defs_to_ddl(cols: str, normalize: bool = True) -> str:
     """'name type, ...' column defs → Spark DDL schema string: split on
     top-level commas only (types like DECIMAL(10,2) contain commas) and map
     each type spelling (typenames.sql_type)."""
-    defs, depth, start = [], 0, 0
-    for i, c in enumerate(cols + ","):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            coldef = cols[start:i].strip()
-            start = i + 1
-            if not coldef:
-                continue
-            cname, _, ctype = coldef.partition(" ")
-            ctype = ctype.strip()
-            # quoted identifiers: '"date" DATE' → backticked Spark DDL,
-            # case preserved; UNQUOTED names lowercase — the reference's
-            # enable_ident_normalization (default true, ddl.slt's
-            # "Check column name is in uppercase" golden)
-            if cname[:1] == '"' and cname[-1:] == '"':
-                cname = f"`{cname[1:-1]}`"
-            elif cname[:1] != "`" and normalize:
-                cname = cname.lower()
-            # DEFAULT clauses are recorded separately (_constraints)
-            # and applied at INSERT time — strip them from the DDL type
-            ctype = re.sub(r"\s+DEFAULT\s+.+$", "", ctype, flags=re.IGNORECASE | re.DOTALL)
-            # constraint suffixes are advisory here (Spark DDL schema
-            # strings carry no NOT NULL) — drop them
-            ctype = re.sub(
-                r"\s+(?:NOT\s+NULL|NULL|PRIMARY\s+KEY|UNIQUE)\s*$",
-                "",
-                ctype,
-                flags=re.IGNORECASE,
-            )
-            defs.append(f"{cname} {typenames.sql_type(ctype)}")
+    defs = []
+    for coldef in (d.strip() for d in split(cols)):
+        if not coldef:
+            continue
+        cname, _, ctype = coldef.partition(" ")
+        ctype = ctype.strip()
+        # quoted identifiers: '"date" DATE' → backticked Spark DDL,
+        # case preserved; UNQUOTED names lowercase — the reference's
+        # enable_ident_normalization (default true, ddl.slt's
+        # "Check column name is in uppercase" golden)
+        if cname[:1] == '"' and cname[-1:] == '"':
+            cname = f"`{cname[1:-1]}`"
+        elif cname[:1] != "`" and normalize:
+            cname = cname.lower()
+        # DEFAULT clauses are recorded separately (_constraints)
+        # and applied at INSERT time — strip them from the DDL type
+        ctype = re.sub(r"\s+DEFAULT\s+.+$", "", ctype, flags=re.IGNORECASE | re.DOTALL)
+        # constraint suffixes are advisory here (Spark DDL schema
+        # strings carry no NOT NULL) — drop them
+        ctype = re.sub(
+            r"\s+(?:NOT\s+NULL|NULL|PRIMARY\s+KEY|UNIQUE)\s*$",
+            "",
+            ctype,
+            flags=re.IGNORECASE,
+        )
+        defs.append(f"{cname} {typenames.sql_type(ctype)}")
     return ", ".join(defs)
 
 
@@ -282,21 +277,20 @@ def _parse_with_ctes(lx: Lexed) -> tuple[list[tuple[str, tuple[str, ...] | None,
         name = m.group(1)
         pos = m.end()
         cols: tuple[str, ...] | None = None
-        if query[pos : pos + 1] == "(":
-            close = query.index(")", pos)
-            cols = tuple(c.strip() for c in query[pos + 1 : close].split(","))
-            pos = close + 1
+        if query[pos : pos + 1] == "(" and (end := close(query, pos)) is not None:
+            cols = tuple(c.strip() for c in split(query[pos + 1 : end]))
+            pos = end + 1
         m = re.compile(r"\s*AS\s*\(", re.IGNORECASE).match(query, pos)
         if not m:
             raise ValueError(f"expected AS ( at: {lx.unshield(query[pos:pos + 40])!r}")
         start = m.end()
-        close = _match_paren(query, start - 1)
-        if close is None:
+        end = close(query, start - 1)
+        if end is None:
             raise ValueError(
                 f"unbalanced CTE body at: {lx.unshield(query[start:start + 40])!r}"
             )
-        i = close + 1
-        ctes.append((name, cols, query[start:close]))
+        i = end + 1
+        ctes.append((name, cols, query[start:end]))
         m = re.compile(r"\s*,").match(query, i)
         if not m:
             return ctes, query[i:]
@@ -307,19 +301,35 @@ def _split_recursive_union(body: str) -> tuple[str, str, bool]:
     """Split a recursive CTE body at its LAST top-level UNION [ALL] (the
     recursive term is the final branch, per PostgreSQL/DataFusion semantics).
     Returns (base_sql, step_sql, distinct) of shielded text."""
-    depth, last = 0, None
-    for m in re.finditer(r"\(|\)|\bUNION(?:\s+ALL)?\b", body, re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            last = m
+    last = None
+    for last in top_level(body, r"\bUNION(?:\s+ALL)?\b"):
+        pass
     if last is None:
         raise ValueError("recursive CTE body has no top-level UNION")
     distinct = "ALL" not in last.group(0).upper()
     return body[: last.start()], body[last.end() :], distinct
+
+
+# what ends a FROM list at its own depth
+_FROM_END = (
+    r"\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|LIMIT|OFFSET|FETCH|UNION"
+    r"|EXCEPT|INTERSECT)\b"
+)
+
+
+def _table_refs(text: str, name: str) -> int:
+    """How many times shielded ``text`` reads the table ``name``: as a FROM
+    list item or a JOIN target, at any depth. A column qualified by the
+    name (``name.col``) is not a read."""
+    table = rf"\s*{re.escape(name)}\b(?!\s*[.(])"
+    refs = len(re.findall(rf"\bJOIN\s{table}", text, re.IGNORECASE))
+    for m in re.finditer(r"\bFROM\b", text, re.IGNORECASE):
+        group = enclosing(text, m.start())
+        end = len(text) if group is None else close(text, group) or len(text)
+        stop = next(top_level(text, _FROM_END, m.end(), end), None)
+        items = split(text[m.end() : end if stop is None else stop.start()])
+        refs += sum(re.match(table, it, re.IGNORECASE) is not None for it in items)
+    return refs
 
 
 # one OPTIONS entry: a key (a dotted name or a quoted string), then an
@@ -334,7 +344,7 @@ def _parse_options(lx: Lexed, body: str | None) -> dict[str, str]:
     alone reads ``true``; an entry of more than two tokens (``'k' 55 +
     102``) is an error, as the reference rejects a non-literal value."""
     opts: dict[str, str] = {}
-    for item in _split_top_level(body or ""):
+    for item in split(body or ""):
         if not item.strip():
             continue
         m = _OPTION.fullmatch(item)
@@ -388,10 +398,10 @@ def _scan_clauses(lx: Lexed, rest: str, allowed: frozenset[str]) -> dict:
             raise ValueError(
                 f'ParserError("Expected (, found: {tok.group(1) if tok else "EOF"}")'
             )
-        close = _match_paren(rest, j)
-        if close is None:
+        end = close(rest, j)
+        if end is None:
             raise ValueError('ParserError("Expected ), found: EOF")')
-        return j, close + 1
+        return j, end + 1
 
     def clause(name: str, pattern: str) -> re.Match | None:
         return re.match(pattern, tail, re.IGNORECASE) if name in allowed else None
@@ -931,7 +941,7 @@ class SessionContext:
             raise ValueError("IS $n is not a valid placeholder position")
         used = [int(n) for n in re.findall(r"\$(\d+)", body)]
         if typelist is not None:
-            ntypes = len(_split_top_level(typelist[1:-1]))
+            ntypes = len(split(typelist[1:-1]))
             if used and max(used) > ntypes:
                 raise ValueError(
                     f"prepared statement uses ${max(used)} but only "
@@ -1359,7 +1369,7 @@ class SessionContext:
         omits, and REJECTS one that references columns at plan time — so
         call this before the table is created."""
         nn, out = set(), {}
-        for d in _split_top_level(coldefs):
+        for d in split(coldefs):
             toks = d.strip().split()
             if toks and re.search(r"\bNOT\s+NULL\b", d, re.IGNORECASE):
                 nn.add(toks[0].strip('"`').lower())
@@ -1505,7 +1515,7 @@ class SessionContext:
             coldefs,
             self.settings.get_bool("datafusion.sql_parser.enable_ident_normalization"),
         )
-        defs = _split_top_level(ddl)
+        defs = split(ddl)
         # placeholders were already bound by sql(); go straight to Spark
         src = _by_position(self._spark_sql(body.derive(body.text.strip().rstrip(";")), args))
         if re.match(r"\s*\(?\s*VALUES\b", body.text, re.IGNORECASE):
@@ -1797,13 +1807,13 @@ class SessionContext:
         if part_inner is not None and cols is not None:
             schema_names = [
                 re.match(r'\s*(?:"([^"]+)"|([A-Za-z_]\w*))', c).group(0).strip().strip('"').lower()
-                for c in _split_top_level(cols)
+                for c in split(cols)
                 if re.match(r'\s*(?:"[^"]+"|[A-Za-z_]\w*)', c)
                 and not re.match(
                     r"\s*(PRIMARY|FOREIGN|UNIQUE|CONSTRAINT|CHECK)\b", c, re.IGNORECASE
                 )
             ]
-            for item in _split_top_level(part_inner):
+            for item in split(part_inner):
                 toks = item.split()
                 if not toks:
                     continue
@@ -1836,7 +1846,7 @@ class SessionContext:
             if re.match(r"^(/|\./|[A-Za-z]:)", location) or "://" not in location:
                 declared = [
                     it.split()[0].strip('"').lower()
-                    for it in _split_top_level(part_inner)
+                    for it in split(part_inner)
                     if it.split()
                 ]
                 self._check_disk_partitions(location, declared)
@@ -1911,10 +1921,10 @@ class SessionContext:
         pos = head.end()
         cols = None
         if query[pos : pos + 1] == "(":  # balanced scan: types may nest parens
-            close = _match_paren(query, pos)
-            close = len(query) if close is None else close
-            cols = lx.unshield(query[pos + 1 : close])
-            pos = close + 1
+            end = close(query, pos)
+            end = len(query) if end is None else end
+            cols = lx.unshield(query[pos + 1 : end])
+            pos = end + 1
         rest = query[pos:]
         clauses = self._external_clauses(lx, rest, cols)
         for clause, key in (("STORED AS", "fmt"), ("LOCATION", "location")):
@@ -2046,8 +2056,8 @@ class SessionContext:
         start = re.match(r"\s*COPY\b\s*", text, re.IGNORECASE).end()
         end = start
         if text.startswith("(", start):  # a query: its balanced parenthesis
-            close = _match_paren(text, start)
-            end = start if close is None else close + 1
+            shut = close(text, start)
+            end = start if shut is None else shut + 1
         m = _COPY_TO.match(text, end)
         if not m:
             raise ValueError(f"cannot parse COPY statement: {lx.unshield()[:80]!r}")
@@ -2168,20 +2178,7 @@ class SessionContext:
                     # need per-iteration self-joins; operationally each
                     # composed step would embed the frontier plan TWICE, so
                     # the unrolled plan grows 2^k — exponential analysis.
-                    refs = len(
-                        re.findall(
-                            rf"\b(?:FROM|JOIN)\s+{re.escape(name)}\b",
-                            step_sql,
-                            re.IGNORECASE,
-                        )
-                    ) + len(
-                        re.findall(
-                            rf",\s*{re.escape(name)}\b(?!\s*\()",
-                            step_sql,
-                            re.IGNORECASE,
-                        )
-                    )
-                    if refs > 1:
+                    if _table_refs(step_sql, name) > 1:
                         raise ValueError(
                             "This feature is not implemented: Multiple "
                             "recursive references to the same CTE are not "

@@ -31,7 +31,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from arrow_datafusion_spark.sql.lex import LIT, lex, quote
+from arrow_datafusion_spark.sql.lex import LIT, lex, quote, split, top_level
 
 
 @dataclass
@@ -589,19 +589,13 @@ def _split_outside_parens(line: str) -> list[str]:
     return out
 
 
+_ORDER_BY = r"\bORDER\s+BY\b"
+
+
 def _has_top_level_order_by(sql: str) -> bool:
     """True iff ORDER BY appears at paren depth 0 (i.e. orders the final
     result, not a window spec / subquery / aggregate argument)."""
-    depth = 0
-    for m in re.finditer(r"[()\[\]]|\bORDER\s+BY\b", sql, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return True
-    return False
+    return next(top_level(lex(sql).text, _ORDER_BY), None) is not None
 
 
 def _norm_interval_arrays(line: str) -> str | None:
@@ -630,38 +624,6 @@ def _norm_interval_arrays(line: str) -> str | None:
     return out if changed else None
 
 
-def _top_level_clause(sql: str, keyword: str) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0 occurrence of ``keyword`` (a regex),
-    or None."""
-    depth = 0
-    for m in re.finditer(r"[()\[\]]|" + keyword, sql, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return m.span()
-    return None
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    out, cur, depth = [], [], 0
-    for ch in s:
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return [p for p in out if p]
-
-
 def _norm_expr(e: str) -> str:
     return re.sub(r"\s+", " ", e.strip().lower())
 
@@ -671,13 +633,20 @@ def _order_by_output_positions(sql: str, ncols: int) -> list[int] | None:
     constrains. ORDER BY items naming non-output expressions are ignored
     (they constrain nothing visible — the tie source). None = unparseable.
     """
-    ob = _top_level_clause(sql, r"\bORDER\s+BY\b")
-    sel = _top_level_clause(sql, r"\bSELECT\b")
-    frm = _top_level_clause(sql, r"\bFROM\b")
+    lx = lex(sql)
+    sql = lx.text
+
+    def first(keyword: str, start: int = 0) -> re.Match | None:
+        return next(top_level(sql, keyword, start), None)
+
+    def parts(text: str) -> list[str]:
+        return [p for p in (lx.unshield(p).strip() for p in split(text)) if p]
+
+    ob, sel, frm = first(_ORDER_BY), first(r"\bSELECT\b"), first(r"\bFROM\b")
     if not ob or not sel:
         return None
-    sel_end = frm[0] if frm and frm[0] > sel[1] else ob[0]
-    items = _split_top_level_commas(sql[sel[1] : sel_end])
+    sel_end = frm.start() if frm and frm.start() > sel.end() else ob.start()
+    items = parts(sql[sel.end() : sel_end])
     if len(items) != ncols or any(
         re.fullmatch(r"(?:[A-Za-z_][A-Za-z0-9_]*\.)?\*", it) for it in items
     ):
@@ -690,9 +659,8 @@ def _order_by_output_positions(sql: str, ncols: int) -> list[int] | None:
         # a bare column reference is its own alias ("t2.a" → a)
         bare = re.fullmatch(r"(?:[A-Za-z_][A-Za-z0-9_]*\.)?([A-Za-z_][A-Za-z0-9_]*)", it.strip())
         cols.append((_norm_expr(expr if alias else it), (alias or (bare.group(1) if bare else None) or "").lower() or None))
-    tail = sql[ob[1] :]
-    lim = _top_level_clause(tail, r"\b(?:LIMIT|OFFSET)\b")
-    ob_items = _split_top_level_commas(tail[: lim[0] if lim else len(tail)])
+    lim = first(r"\b(?:LIMIT|OFFSET)\b", ob.end())
+    ob_items = parts(sql[ob.end() : lim.start() if lim else len(sql)])
     positions: list[int] = []
     for item in ob_items:
         item = re.sub(

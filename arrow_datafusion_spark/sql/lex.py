@@ -1,6 +1,6 @@
 """Statement lexer: the one place that knows how SQL text delimits string
-literals, quoted identifiers and comments, and how a shielded literal is
-spelled in the text the front-end passes read.
+literals, quoted identifiers and comments, how a shielded literal is
+spelled in the text the front-end passes read, and what nests in what.
 
 ``lex`` scans a statement once, left to right, as the reference tokenizes
 once before dispatching on the parsed statement (``DFParser``,
@@ -16,11 +16,18 @@ datafusion/sql/src/parser.rs:264):
 
 Slices and rewrites of the shielded text stay valid against the same
 literal table (``Lexed.derive``).
+
+Its second job is nesting. ``close``, ``enclosing``, ``top_level`` and
+``split`` read shielded text with one rule: ``(`` and ``[`` open, ``)``
+and ``]`` close, and a quoted identifier is skipped whole, so a bracket or
+comma inside ``"c)d"`` nests nothing. Passes edit the text between
+lookups, so each call scans the text it is given; no index is kept.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
 # Brackets a shielded literal's table index; NUL cannot occur in SQL text.
 MARK = "\x00"
@@ -28,14 +35,19 @@ MARK = "\x00"
 LIT = f"{MARK}\\d+{MARK}"
 
 _LIT_INDEX = re.compile(f"{MARK}(\\d+){MARK}")
+# a quoted identifier; a doubled quote inside it is an escape
+_QUOTED_IDENT = r'"(?:[^"]|"")*"|`(?:[^`]|``)*`'
 _SCAN = re.compile(
     r"'(?:[^']|'')*'"  # string literal
-    r'|"(?:[^"]|"")*"|`(?:[^`]|``)*`'  # quoted identifiers
+    rf"|{_QUOTED_IDENT}"
     r"|--[^\n]*"  # line comment (its newline stays)
     r"|/\*(?!\+).*?\*/",  # block comment, not a /*+ hint */
     re.DOTALL,
 )
 _WORD = re.compile(r"\s*([A-Za-z_]\w*)")
+# The tokens nesting reads: a quoted identifier (skipped whole) or a bracket.
+_NEST = rf"{_QUOTED_IDENT}|[()\[\]]"
+_BRACKETS = re.compile(_NEST)
 
 
 def quote(value: str) -> str:
@@ -148,3 +160,59 @@ def lex(sql: str) -> Lexed:
         return "" if tok[0] == "-" else " "
 
     return Lexed(_SCAN.sub(token, sql), lits)
+
+
+def close(text: str, i: int) -> int | None:
+    """The index of the bracket that closes the one at ``i``, or None."""
+    depth = 0
+    for m in _BRACKETS.finditer(text, i):
+        t = m.group()
+        if t in ("(", "["):
+            depth += 1
+        elif t in (")", "]"):
+            depth -= 1
+            if depth == 0:
+                return m.start()
+    return None
+
+
+def enclosing(text: str, i: int) -> int | None:
+    """The index of the innermost opener before ``i`` that is still open
+    at ``i``, or None at depth 0."""
+    opened: list[int] = []
+    for m in _BRACKETS.finditer(text, 0, i):
+        t = m.group()
+        if t in ("(", "["):
+            opened.append(m.start())
+        elif t in (")", "]") and opened:
+            opened.pop()
+    return opened[-1] if opened else None
+
+
+def top_level(
+    text: str, pattern: str, start: int = 0, end: int | None = None
+) -> Iterator[re.Match]:
+    """The matches of ``pattern`` (a case-insensitive regex that matches
+    no bracket) at depth 0 of ``text[start:end]``."""
+    # the nesting tokens come first, so ``pattern`` never matches inside a
+    # quoted identifier; they capture nothing, so its groups keep their numbers
+    nested = re.compile(f"{_NEST}|(?:{pattern})", re.IGNORECASE)
+    depth = 0
+    for m in nested.finditer(text, start, len(text) if end is None else end):
+        t = m.group()
+        if t in ("(", "["):
+            depth += 1
+        elif t in (")", "]"):
+            depth -= 1
+        elif depth == 0 and t[:1] not in ('"', "`"):
+            yield m
+
+
+def split(text: str, sep: str = ",") -> list[str]:
+    """``text`` cut at the depth-0 matches of ``sep`` (a regex)."""
+    parts, pos = [], 0
+    for m in top_level(text, sep):
+        parts.append(text[pos : m.start()])
+        pos = m.end()
+    parts.append(text[pos:])
+    return parts

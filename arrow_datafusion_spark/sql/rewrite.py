@@ -42,7 +42,16 @@ from functools import lru_cache, partial
 from typing import NamedTuple
 
 from arrow_datafusion_spark import typenames
-from arrow_datafusion_spark.sql.lex import LIT, MARK, Lexed, quote
+from arrow_datafusion_spark.sql.lex import (
+    LIT,
+    MARK,
+    Lexed,
+    close,
+    enclosing,
+    quote,
+    split,
+    top_level,
+)
 
 # SQL-level list_* → array_* renames: semantics verified identical between
 # the DataFusion alias and the Spark native (1-based positions, sort order,
@@ -81,19 +90,6 @@ _SQL_LIST_ALIASES = {
 }
 
 
-def _match_paren(q: str, i: int) -> int | None:
-    """Index of the ')' matching the '(' at ``i`` (brackets count too)."""
-    depth = 0
-    for j in range(i, len(q)):
-        if q[j] in "([":
-            depth += 1
-        elif q[j] in ")]":
-            depth -= 1
-            if depth == 0:
-                return j
-    return None
-
-
 def _wrap_values(q: str, _lx: Lexed, _scope: Scope) -> str:
     """Rename inline-VALUES columns to the reference's names: DataFusion
     derives ``column1..columnN`` (sql/src/planner.rs values planning) where
@@ -114,11 +110,11 @@ def _wrap_values(q: str, _lx: Lexed, _scope: Scope) -> str:
         arity = None
         end = None
         while True:
-            j = _match_paren(q, i)
+            j = close(q, i)
             if j is None:
                 return q  # malformed — leave for Spark's parser to report
             if arity is None:
-                arity = len(_split_top_level(q[i + 1 : j]))
+                arity = len(split(q[i + 1 : j]))
             k = j + 1
             while k < len(q) and q[k].isspace():
                 k += 1
@@ -157,20 +153,6 @@ _FRAMELESS_WINDOW_FNS = (
 _ORDER_BY = r"\bORDER\s+BY\b"
 
 
-def _top_level(s: str, keyword: str) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0 match of ``keyword`` in ``s``."""
-    depth = 0
-    for m in re.finditer(rf"[()\[\]]|{keyword}", s, re.IGNORECASE):
-        t = m.group(0)
-        if t in "([":
-            depth += 1
-        elif t in ")]":
-            depth -= 1
-        elif depth == 0:
-            return m.start(), m.end()
-    return None
-
-
 def _strip_rank_frames(q: str, _lx: Lexed, _scope: Scope) -> str:
     for fn in _FRAMELESS_WINDOW_FNS:
         pos = 0
@@ -187,20 +169,20 @@ def _strip_rank_frames(q: str, _lx: Lexed, _scope: Scope) -> str:
                 pos = e
                 continue
             o_open = m.end() - 1
-            o_close = _match_paren(q, o_open)
+            o_close = close(q, o_open)
             if o_close is None:
                 pos = e
                 continue
             spec = q[o_open + 1 : o_close]
             # first top-level frame keyword starts the frame clause, which
             # is always the final window-spec component
-            cut = _top_level(spec, r"\b(?:ROWS|RANGE|GROUPS)\b")
+            cut = next(top_level(spec, r"\b(?:ROWS|RANGE|GROUPS)\b"), None)
             if cut is not None:
-                spec = spec[: cut[0]].rstrip()
+                spec = spec[: cut.start()].rstrip()
             # DataFusion runs ranking/offset functions over an UNORDERED
             # window (natural order; all rows peers for rank) where Spark
             # demands an ORDER BY — a constant key reproduces exactly that
-            if _top_level(spec, _ORDER_BY) is None:
+            if next(top_level(spec, _ORDER_BY), None) is None:
                 spec = (spec.rstrip() + " ORDER BY 1").lstrip()
             if spec != q[o_open + 1 : o_close]:
                 q = q[: o_open + 1] + spec + q[o_close:]
@@ -225,7 +207,7 @@ def _fix_window_specs(q: str, _lx: Lexed, _scope: Scope) -> str:
         if m is None:
             return q
         o_open = m.end() - 1
-        o_close = _match_paren(q, o_open)
+        o_close = close(q, o_open)
         if o_close is None:
             pos = o_open + 1
             continue
@@ -247,7 +229,7 @@ def _fix_window_specs(q: str, _lx: Lexed, _scope: Scope) -> str:
             ob = re.search(r"\bORDER\s+BY\b", spec, re.IGNORECASE)
             if bounds and max(bounds) > 127 and ob:
                 seg = spec[ob.end() : fr.start()]
-                items = _split_top_level(seg)
+                items = split(seg)
                 if len(items) == 1:
                     it = items[0].strip()
                     mm = re.match(
@@ -523,21 +505,13 @@ def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
         if j < 0 or not (q[j].isalnum() or q[j] in "_)]`"):
             i += 1
             continue
-        close = _match_paren(q, i)
-        if close is None:
+        end = close(q, i)
+        if end is None:
             i += 1
             continue
         if q[j] in ")]":
-            depth, k = 0, j
-            while k >= 0:
-                if q[k] in ")]":
-                    depth += 1
-                elif q[k] in "([":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
-            k -= 1
+            k = enclosing(q, j)
+            k = -1 if k is None else k - 1
             while k >= 0 and (q[k].isalnum() or q[k] in "_."):
                 k -= 1
             start = k + 1
@@ -547,22 +521,9 @@ def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
                 k -= 1
             start = k + 1
         base = q[start : j + 1].strip()
-        inner = q[i + 1 : close]
-        # split a top-level single colon (not '::' casts)
-        parts, depth, cut = None, 0, None
-        for ci, ch in enumerate(inner):
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif (
-                ch == ":"
-                and depth == 0
-                and inner[ci - 1 : ci] != ":"
-                and inner[ci + 1 : ci + 2] != ":"
-            ):
-                cut = ci
-                break
+        inner = q[i + 1 : end]
+        # split at a top-level single colon (not '::' casts)
+        cut = next(top_level(inner, r"(?<!:):(?!:)"), None)
         # struct['field']: a string subscript on a struct constructor is
         # FIELD ACCESS (the reference resolves it against the c0..cN
         # names) — element_at only works for maps/arrays
@@ -571,12 +532,12 @@ def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
             r"(named_)?struct\s*\(", base, re.IGNORECASE
         ):
             repl = f"{base}.{fieldname}"
-            q = q[:start] + repl + q[close + 1 :]
+            q = q[:start] + repl + q[end + 1 :]
             i = start + len(repl)
             continue
         if cut is not None:
-            a = inner[:cut].strip() or "1"
-            b = inner[cut + 1 :].strip() or f"size({base})"
+            a = inner[: cut.start()].strip() or "1"
+            b = inner[cut.end() :].strip() or f"size({base})"
             # start 0 behaves as 1; END 0 stays 0 (x[0:0] is empty);
             # negative ends count from the back
             # NULL bounds are unbounded; negative bounds count from the
@@ -601,7 +562,7 @@ def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
             )
         else:
             repl = f"try_element_at({base}, {inner.strip()})"
-        q = q[:start] + repl + q[close + 1 :]
+        q = q[:start] + repl + q[end + 1 :]
         i = start + len(repl)
     return q
 
@@ -631,11 +592,11 @@ def _unnest(q: str, _lx: Lexed, _scope: Scope) -> str:
         if m is None:
             break
         o = m.end() - 1
-        c = _match_paren(q, o)
+        c = close(q, o)
         if c is None:
             pos = o + 1
             continue
-        args = [a.strip() for a in _split_top_level(q[o + 1 : c])]
+        args = [a.strip() for a in split(q[o + 1 : c])]
         if len(args) != 1:
             pos = c
             continue
@@ -648,7 +609,7 @@ def _unnest(q: str, _lx: Lexed, _scope: Scope) -> str:
         hit = _find_call(q, "unnest", 0)
         if hit is not None:
             s_i, a, e = hit
-            args = [x.strip() for x in _split_top_level(q[a:e])]
+            args = [x.strip() for x in split(q[a:e])]
             before = q[:s_i].rstrip().lower()
             if len(args) == 1 and (
                 before.endswith("select") or before.endswith(",")
@@ -675,17 +636,17 @@ def _ordered_aggs(_lx: Lexed, fn: str, args: list[str], after: str) -> str | Non
     ):
         return None  # window/WITHIN-GROUP form, not the agg-arg form
     argstr = ", ".join(args)
-    ob = _top_level(argstr, _ORDER_BY)
+    ob = next(top_level(argstr, _ORDER_BY), None)
     if ob is None:
         return None
-    head, sortseg = argstr[: ob[0]], argstr[ob[1] :]
+    head, sortseg = argstr[: ob.start()], argstr[ob.end() :]
     if re.match(r"\s*DISTINCT\b", head, re.IGNORECASE):
         return None
-    exprs = [p.strip() for p in _split_top_level(head) if p.strip()]
+    exprs = [p.strip() for p in split(head) if p.strip()]
     if not exprs:
         return None
     keys = []
-    for it in (x.strip() for x in _split_top_level(sortseg)):
+    for it in (x.strip() for x in split(sortseg)):
         if not it:
             continue
         mnf = re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", it, re.IGNORECASE)
@@ -727,21 +688,11 @@ def _ordered_aggs(_lx: Lexed, fn: str, args: list[str], after: str) -> str | Non
     return f"try_element_at({sorted_vals}, {n_arg})"
 
 
-_SORT_TERMINATORS = frozenset(
-    {
-        "LIMIT",
-        "OFFSET",
-        "ROWS",
-        "RANGE",
-        "GROUPS",
-        "WINDOW",
-        "FETCH",
-        "UNION",
-        "EXCEPT",
-        "INTERSECT",
-        "HAVING",
-        "QUALIFY",
-    }
+# what ends an ORDER BY list at its own depth, besides the bracket that
+# closes the list's enclosing group
+_SORT_END = (
+    r";|\b(?:LIMIT|OFFSET|ROWS|RANGE|GROUPS|WINDOW|FETCH|UNION|EXCEPT"
+    r"|INTERSECT|HAVING|QUALIFY)\b"
 )
 
 
@@ -759,33 +710,12 @@ def _add_null_ordering(q: str, _lx: Lexed, _scope: Scope) -> str:
         if not m:
             return q
         start = m.end()
-        depth = 0
-        j = start
-        end = len(q)
-        while j < len(q):
-            c = q[j]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    end = j
-                    break
-                depth -= 1
-            elif c == ";" and depth == 0:
-                end = j
-                break
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                k = j
-                while k < len(q) and (q[k].isalnum() or q[k] == "_"):
-                    k += 1
-                if q[j:k].upper() in _SORT_TERMINATORS:
-                    end = j
-                    break
-                j = k
-                continue
-            j += 1
+        group = enclosing(q, m.start())
+        end = len(q) if group is None else close(q, group) or len(q)
+        stop = next(top_level(q, _SORT_END, start, end), None)
+        end = end if stop is None else stop.start()
         items = []
-        for it in _split_top_level(q[start:end]):
+        for it in split(q[start:end]):
             s = it.strip()
             if not s or re.search(r"\bNULLS\s+(FIRST|LAST)\s*$", s, re.IGNORECASE):
                 items.append(s)
@@ -850,8 +780,8 @@ def _find_call(q: str, name: str, start: int = 0) -> tuple[int, int, int] | None
     (string literals must already be shielded). Only for the scans that
     edit text outside the call itself; everything else uses rewrite_calls."""
     m = re.compile(rf"\b{name}\s*\(", re.IGNORECASE).search(q, start)
-    close = _match_paren(q, m.end() - 1) if m else None
-    return None if close is None else (m.start(), m.end(), close)
+    end = close(q, m.end() - 1) if m else None
+    return None if end is None else (m.start(), m.end(), end)
 
 
 CallRewrite = Callable[[str, list[str], str], "str | None"]
@@ -877,38 +807,22 @@ def rewrite_calls(q: str, names: str | tuple[str, ...], fn: CallRewrite) -> str:
 def _rewrite_span(q: str, start: int, end: int, pat: re.Pattern, fn: CallRewrite) -> str:
     out, pos = [], start
     while (m := pat.search(q, pos, end)) is not None:
-        close = _match_paren(q, m.end() - 1)
-        if close is None:  # unbalanced: not a call, but its text may hold some
+        shut = close(q, m.end() - 1)
+        if shut is None:  # unbalanced: not a call, but its text may hold some
             out.append(q[pos : m.end()])
             pos = m.end()
             continue
-        args = _rewrite_span(q, m.end(), close, pat, fn)
+        args = _rewrite_span(q, m.end(), shut, pat, fn)
         repl = fn(
             m.group(1).lower(),
-            [a.strip() for a in _split_top_level(args)],
-            q[close + 1 :],
+            [a.strip() for a in split(args)],
+            q[shut + 1 :],
         )
         out.append(q[pos : m.start()])
         out.append(q[m.start() : m.end()] + args + ")" if repl is None else repl)
-        pos = close + 1
+        pos = shut + 1
     out.append(q[pos:end])
     return "".join(out)
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
 
 
 def _validate_arrow_tz(tz: str) -> None:
@@ -1094,17 +1008,10 @@ def _array_literals(q: str, _lx: Lexed, _scope: Scope) -> str:
         m = re.search(r"\barray\s*\[", q, re.IGNORECASE)
         if not m:
             return q
-        depth, i = 1, m.end()
-        while i < len(q) and depth:
-            if q[i] == "[":
-                depth += 1
-            elif q[i] == "]":
-                depth -= 1
-            i += 1
-        if depth:
+        end = close(q, m.end() - 1)
+        if end is None:
             return q
-        inner = q[m.end():i - 1]
-        q = q[:m.start()] + "array(" + inner + ")" + q[i:]
+        q = q[: m.start()] + "array(" + q[m.end() : end] + ")" + q[end + 1 :]
 
 
 def _bracket_literals(q: str, _lx: Lexed, _scope: Scope) -> str:
@@ -1135,11 +1042,11 @@ def _bracket_literals(q: str, _lx: Lexed, _scope: Scope) -> str:
             ):
                 i += 1
                 continue
-        close = _match_paren(q, i)
-        if close is None:
+        end = close(q, i)
+        if end is None:
             i += 1
             continue
-        q = q[:i] + "array(" + q[i + 1 : close] + ")" + q[close + 1 :]
+        q = q[:i] + "array(" + q[i + 1 : end] + ")" + q[end + 1 :]
         i += len("array(")
     return q
 
@@ -1320,20 +1227,32 @@ def _regexp_match(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | 
 
 
 # a type spelling in cast position, ``::T`` or ``CAST(x AS T)`` (names like
-# ``text`` are valid columns elsewhere), or TIMESTAMP WITH TIME ZONE in any
-# position (a typed literal's type too; no column can be named so)
+# ``text`` are valid columns elsewhere, and ``AS text)`` may end a
+# subquery's alias), or TIMESTAMP WITH TIME ZONE in any position (a typed
+# literal's type too; no column can be named so)
 _CAST_TYPE = re.compile(
     rf"(::\s*|\bAS\s+(?=(?:{typenames.SQL_SPELLING})\s*\))"
     rf"|(?=\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b))({typenames.SQL_SPELLING})",
     re.IGNORECASE,
 )
+_CAST_CALL = re.compile(r"\b(?:TRY_)?CAST\Z", re.IGNORECASE)
+
+
+def _cast_type(m: re.Match) -> str:
+    q, lead = m.string, m.group(1)
+    if lead[:1] in ("a", "A"):  # ``AS T)``: only a CAST's own target
+        group = enclosing(q, q.index(")", m.end()))
+        head = "" if group is None else q[:group].rstrip()
+        if not _CAST_CALL.search(head, max(0, len(head) - 8)):
+            return m.group(0)
+    return lead + typenames.sql_type(m.group(2))
 
 
 @_pass(typenames.SQL_KEYWORDS)
 def _sql_type_names(q: str, _lx: Lexed, _scope: Scope) -> str:
     # DataFusion's SQL type spellings Spark rejects or reads differently
     # (typenames.sql_type): TEXT, INT8, VARCHAR, INT UNSIGNED, int[], ...
-    return _CAST_TYPE.sub(lambda m: m.group(1) + typenames.sql_type(m.group(2)), q)
+    return _CAST_TYPE.sub(_cast_type, q)
 
 
 @_pass(r"\bDATE\b")
@@ -1726,7 +1645,7 @@ def _overlay(_lx: Lexed, _fn: str, args: list[str], _after: str) -> str | None:
     if mp:
         so, c, p, ln = (g.strip() if g else None for g in mp.groups())
     else:
-        parts = [x.strip() for x in _split_top_level(inner)]
+        parts = [x.strip() for x in split(inner)]
         if len(parts) not in (3, 4):
             return None
         so, c, p = parts[:3]
@@ -2065,14 +1984,14 @@ def _in_subquery_parens(q: str, _lx: Lexed, _scope: Scope) -> str:
         if m is None:
             return q
         o = m.end() - 1
-        c = _match_paren(q, o)
+        c = close(q, o)
         if c is None:
             pos = o + 1
             continue
         inner = q[o + 1 : c].strip()
         if (
             inner.startswith("(")
-            and _match_paren(inner, 0) == len(inner) - 1
+            and close(inner, 0) == len(inner) - 1
             and re.match(r"\(\s*select\b", inner, re.IGNORECASE)
         ):
             q = q[: o + 1] + inner[1:-1] + q[c:]
@@ -2113,7 +2032,7 @@ _sub(
 def _array_agg(_lx: Lexed, _fn: str, args: list[str], after: str) -> str | None:
     argstr = ", ".join(args)
     md = re.match(r"\s*DISTINCT\s+(.+)$", argstr, re.IGNORECASE | re.DOTALL)
-    if _top_level(argstr, _ORDER_BY) is not None:
+    if next(top_level(argstr, _ORDER_BY), None) is not None:
         return None
     if not md:
         x = argstr.strip()
@@ -2269,7 +2188,7 @@ def _lower_approx_percentile(
             if hit is None:
                 break
             s_i, a, e = hit
-            parts = [p.strip() for p in _split_top_level(q[a:e])]
+            parts = [p.strip() for p in split(q[a:e])]
             if parts and re.match(r"DISTINCT\b", parts[0], re.IGNORECASE):
                 pos = e  # reference rejects DISTINCT here — let the
                 continue  # name fall through to Spark's resolver error
@@ -2368,10 +2287,10 @@ def _lower_approx_percentile(
                     )
                     if not cm:
                         break
-                    close = _match_paren(q, end + cm.end() - 1)
-                    if close is None:
+                    shut = close(q, end + cm.end() - 1)
+                    if shut is None:
                         break
-                    end = close + 1
+                    end = shut + 1
                 if re.match(r"\s*(OVER|FILTER)\b", q[end:], re.IGNORECASE):
                     # named-window `OVER w` — can't bound the clause,
                     # keep the untyped double estimate

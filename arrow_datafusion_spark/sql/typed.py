@@ -34,13 +34,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from arrow_datafusion_spark.sql.lex import LIT, Lexed, quote
+from arrow_datafusion_spark.sql.lex import LIT, Lexed, close, quote, split
 from arrow_datafusion_spark.sql.rewrite import (
     Pass,
     Scope,
     _lower_approx_percentile,
-    _match_paren,
-    _split_top_level,
     rewrite_calls,
 )
 
@@ -227,7 +225,7 @@ def _inline_values(q: str, pos: int) -> tuple[int, str, list] | None:
     if m is None:
         return None
     open_at = pos + q[pos:].index("(")
-    i = _match_paren(q, open_at)
+    i = close(q, open_at)
     if i is None:
         return None
     body = q[open_at + 1 : i]
@@ -242,11 +240,11 @@ def _inline_values(q: str, pos: int) -> tuple[int, str, list] | None:
     cols = [c.strip().lower() for c in am.group(2).split(",") if c.strip()]
     rows_txt = body[len(body) - len(body.lstrip()) + 6 :]  # past VALUES
     row_cells: list[list[str]] = []
-    for part in _split_top_level(rows_txt):
+    for part in split(rows_txt):
         part = part.strip()
         if not (part.startswith("(") and part.endswith(")")):
             return None
-        row_cells.append(_split_top_level(part[1:-1]))
+        row_cells.append(split(part[1:-1]))
     if not row_cells or not cols or any(len(r) != len(cols) for r in row_cells):
         return None
 
@@ -546,9 +544,9 @@ def _array_arg_depth(arg: str, rel: Relations, lx: Lexed) -> int | None:
     input): both are seen through."""
     arg = arg.strip()
     low = arg.lower()
-    if arg.startswith("(") and _match_paren(arg, 0) == len(arg) - 1:
+    if arg.startswith("(") and close(arg, 0) == len(arg) - 1:
         return _array_arg_depth(arg[1:-1], rel, lx)
-    if low.startswith("flatten(") and _match_paren(arg, 7) == len(arg) - 1:
+    if low.startswith("flatten(") and close(arg, 7) == len(arg) - 1:
         d = _array_arg_depth(arg[8:-1], rel, lx)
         return d - 1 if d and d > 1 else None
     if arg.startswith("["):
@@ -557,11 +555,11 @@ def _array_arg_depth(arg: str, rel: Relations, lx: Lexed) -> int | None:
         return m.group(0).count("[")
     for fn in ("make_array(", "array_repeat("):
         if low.startswith(fn) and arg.endswith(")"):
-            inner = _split_top_level(arg[len(fn) : -1])
+            inner = split(arg[len(fn) : -1])
             d = _array_arg_depth(inner[0], rel, lx) if inner else None
             return (d or 0) + 1
     if low.startswith("arrow_cast(") and arg.endswith(")"):
-        parts = _split_top_level(arg[len("arrow_cast(") : -1])
+        parts = split(arg[len("arrow_cast(") : -1])
         if len(parts) == 2:
             t = lx.literal(parts[1]) or parts[1].strip()
             return len(re.findall(r"(?:Fixed_?Size|Large)?List\s*\(", t, re.I)) or None

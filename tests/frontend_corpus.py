@@ -129,6 +129,17 @@ EXTRA = (
     "SELECT CAST(a AS int4[]), b::bool, CAST(c AS varchar), -2 ^ 2 << 1, 1 >> d ^ 2 FROM t",
     "SELECT CAST(x AS INT UNSIGNED), y::bigint unsigned, CAST(s AS VARCHAR(10)), s::char(3), CAST(s AS CHAR) FROM t",
     "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00', CAST(a AS text[][]) FROM t",
+    # a bracket or comma inside a quoted identifier nests and splits nothing
+    'SELECT x FROM t ORDER BY "c)d", x',
+    'SELECT x FROM t ORDER BY "c(d", x',
+    'SELECT array_length("a,b") FROM t',
+    'SELECT * FROM (VALUES (1, "a,b"))',
+    # ``AS <type>)`` is a cast target only inside CAST or TRY_CAST
+    "SELECT text FROM (SELECT 1 AS text)",
+    "SELECT CAST(a AS text), TRY_CAST(b AS int8), CAST((c) AS text) FROM t",
+    # TIMESTAMP WITH TIME ZONE is a type in any position, parens or none
+    "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00'",
+    "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00', f(x) FROM t",
 )
 
 # Type-aware statements over the typed_catalog relations, one or more

@@ -38,6 +38,9 @@ import pytest
 
 _QUERIES_SQL = "/root/reference/benchmarks/queries/clickbench/queries.sql"
 _EXTENDED_SQL = "/root/reference/benchmarks/queries/clickbench/extended.sql"
+for _path in (_QUERIES_SQL, _EXTENDED_SQL):
+    if not os.path.exists(_path):
+        pytest.skip(f"reference clickbench queries absent: {_path}", allow_module_level=True)
 
 # rows-only checks: result set under-determined (see module docstring)
 _ROWS_ONLY = {
@@ -92,9 +95,6 @@ def hits_ctx(spark):
     return ctx, con
 
 
-@pytest.mark.skipif(
-    not os.path.exists(_QUERIES_SQL), reason="reference clickbench queries absent"
-)
 @pytest.mark.parametrize("name,sql", _STATEMENTS, ids=[n for n, _ in _STATEMENTS])
 def test_clickbench_verbatim(hits_ctx, name, sql):
     from tests.oracle_harness import _norm, _sort_key, _values_close

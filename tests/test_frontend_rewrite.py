@@ -143,3 +143,37 @@ def test_lex_round_trips_all_but_comments():
         assert lex(sql).unshield() == "".join(p[1] for p in pieces), sql
 
     check()
+
+
+def test_nesting_primitives():
+    from arrow_datafusion_spark.sql.lex import close, enclosing, split, top_level
+
+    q = 'f(a[1], (b), "c)d", `e(,``)`)[g(2)]'
+    assert close(q, 1) == q.index(")[")
+    assert close(q, 3) == 5  # a bracket closes a bracket
+    assert close(q, q.index("[g")) == len(q) - 1
+    assert enclosing(q, q.index("a")) == 1
+    assert enclosing(q, q.index("b")) == q.index("(b")
+    assert enclosing(q, q.index("c)d")) == 1  # inside an identifier: f's paren
+    assert enclosing(q, q.index("g")) == q.index("[g")
+    assert enclosing(q, 0) is None
+    assert enclosing(q, len(q)) is None
+    assert split(q[2 : close(q, 1)]) == ["a[1]", " (b)", ' "c)d"', " `e(,``)`"]
+    assert split('"a"",b", c') == ['"a"",b"', " c"]
+    assert split("") == [""]
+    assert split("x[1:2]::int", r"(?<!:):(?!:)") == ["x[1:2]::int"]
+    assert split("1:2::int", r"(?<!:):(?!:)") == ["1", "2::int"]
+    # unbalanced input
+    assert close("f((a)", 1) is None
+    assert close('f("(")', 1) == 5
+    assert close('f("a)"', 1) is None
+    assert close('f(")', 1) == 3  # an unclosed quote is no identifier
+    # top_level: depth 0 of text[start:end], case-insensitive
+    text = "a FROM (b FROM t) u FROM v from w"
+    assert [m.start() for m in top_level(text, r"\bFROM\b")] == [2, 20, 27]
+    assert [m.start() for m in top_level(text, r"\bFROM\b", 8, 16)] == [10]
+    assert [m.start() for m in top_level(text, r"\bFROM\b", 0, 12)] == [2]
+    assert [m.start() for m in top_level(text, r"\bFROM\b", 21)] == [27]
+    assert list(top_level('x "from" `from`', r"\bFROM\b")) == []
+    m = next(top_level("a ORDER  BY b", r"ORDER\s+(BY)"))
+    assert m.group(1) == "BY"  # the pattern keeps its own groups

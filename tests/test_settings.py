@@ -128,6 +128,22 @@ def test_recursive_cte_gate_and_multi_reference(ctx):
         )
 
 
+def test_recursive_cte_counts_table_reads_not_qualified_columns(ctx):
+    # ``r.m`` after a comma names a column of the one read of r
+    rows = ctx.sql(
+        "WITH RECURSIVE r(n, m) AS (SELECT 1, 1 UNION ALL "
+        "SELECT r.n + 1, r.m FROM r WHERE r.n < 3) SELECT * FROM r"
+    ).collect()
+    assert sorted(tuple(row) for row in rows) == [(1, 1), (2, 1), (3, 1)]
+    # two reads of r, as a FROM item and a JOIN target, are still refused
+    with pytest.raises(ValueError, match="Multiple recursive references"):
+        ctx.sql(
+            "WITH RECURSIVE r(n, m) AS (SELECT 1, 1 UNION ALL "
+            "SELECT a.n + 1, b.m FROM r a JOIN r b ON a.n = b.n WHERE a.n < 3) "
+            "SELECT * FROM r"
+        )
+
+
 def test_drop_function_registry(ctx):
     assert ctx.sql("SELECT sinh(0.0) AS x").collect()[0].x == 0.0
     ctx.sql("DROP FUNCTION sinh")

@@ -615,3 +615,24 @@ def test_tie_order_constrained_cells_checked_in_order():
         ["1 10", "2 20"],
     )
     assert not _tie_order_equivalent(rec, [(2, 20), (1, 10)])
+
+
+def test_top_level_order_by_reads_past_literals_and_identifiers():
+    # a ')' inside a literal or a quoted identifier opens and closes nothing
+    from arrow_datafusion_spark.slt import (
+        _has_top_level_order_by,
+        _order_by_output_positions,
+    )
+
+    assert _has_top_level_order_by("SELECT ')' AS a FROM t ORDER BY a")
+    assert _has_top_level_order_by('SELECT "(" FROM t ORDER BY 1')
+    assert not _has_top_level_order_by(
+        "SELECT first_value(a ORDER BY b) FROM t"
+    )
+    assert _order_by_output_positions(
+        "SELECT a, ')' AS b FROM t ORDER BY b", 2
+    ) == [1]
+    # equal literals on both sides still match as one expression
+    assert _order_by_output_positions(
+        "SELECT a, b || ', ' FROM t ORDER BY b || ', ' LIMIT 1", 2
+    ) == [1]
