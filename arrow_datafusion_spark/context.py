@@ -61,7 +61,6 @@ from arrow_datafusion_spark.sql.lex import (
     LIT,
     Lexed,
     close,
-    enclosing,
     lex,
     split,
     top_level,
@@ -308,28 +307,6 @@ def _split_recursive_union(body: str) -> tuple[str, str, bool]:
         raise ValueError("recursive CTE body has no top-level UNION")
     distinct = "ALL" not in last.group(0).upper()
     return body[: last.start()], body[last.end() :], distinct
-
-
-# what ends a FROM list at its own depth
-_FROM_END = (
-    r"\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|LIMIT|OFFSET|FETCH|UNION"
-    r"|EXCEPT|INTERSECT)\b"
-)
-
-
-def _table_refs(text: str, name: str) -> int:
-    """How many times shielded ``text`` reads the table ``name``: as a FROM
-    list item or a JOIN target, at any depth. A column qualified by the
-    name (``name.col``) is not a read."""
-    table = rf"\s*{re.escape(name)}\b(?!\s*[.(])"
-    refs = len(re.findall(rf"\bJOIN\s{table}", text, re.IGNORECASE))
-    for m in re.finditer(r"\bFROM\b", text, re.IGNORECASE):
-        group = enclosing(text, m.start())
-        end = len(text) if group is None else close(text, group) or len(text)
-        stop = next(top_level(text, _FROM_END, m.end(), end), None)
-        items = split(text[m.end() : end if stop is None else stop.start()])
-        refs += sum(re.match(table, it, re.IGNORECASE) is not None for it in items)
-    return refs
 
 
 # one OPTIONS entry: a key (a dotted name or a quoted string), then an
@@ -2178,7 +2155,22 @@ class SessionContext:
                     # need per-iteration self-joins; operationally each
                     # composed step would embed the frontier plan TWICE, so
                     # the unrolled plan grows 2^k — exponential analysis.
-                    if _table_refs(step_sql, name) > 1:
+                    # A column qualified by the CTE's name (``, r.m``) is
+                    # not a reference.
+                    refs = len(
+                        re.findall(
+                            rf"\b(?:FROM|JOIN)\s+{re.escape(name)}\b",
+                            step_sql,
+                            re.IGNORECASE,
+                        )
+                    ) + len(
+                        re.findall(
+                            rf",\s*{re.escape(name)}\b(?!\s*[.(])",
+                            step_sql,
+                            re.IGNORECASE,
+                        )
+                    )
+                    if refs > 1:
                         raise ValueError(
                             "This feature is not implemented: Multiple "
                             "recursive references to the same CTE are not "

@@ -26,6 +26,7 @@ lookups, so each call scans the text it is given; no index is kept.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Iterator
 
@@ -46,7 +47,8 @@ _SCAN = re.compile(
 )
 _WORD = re.compile(r"\s*([A-Za-z_]\w*)")
 # The tokens nesting reads: a quoted identifier (skipped whole) or a bracket.
-_NEST = rf"{_QUOTED_IDENT}|[()\[\]]"
+# Each alternative opens with a literal, so the scan jumps between them.
+_NEST = rf"{_QUOTED_IDENT}|\(|\)|\[|\]"
 _BRACKETS = re.compile(_NEST)
 
 
@@ -163,16 +165,18 @@ def lex(sql: str) -> Lexed:
 
 
 def close(text: str, i: int) -> int | None:
-    """The index of the bracket that closes the one at ``i``, or None."""
+    """The index of the bracket that closes the group the bracket at ``i``
+    opens (at a character outside brackets and quoted identifiers: the
+    innermost group ``i`` is in), or None."""
     depth = 0
-    for m in _BRACKETS.finditer(text, i):
+    for m in _BRACKETS.finditer(text, i + 1):
         t = m.group()
         if t in ("(", "["):
             depth += 1
         elif t in (")", "]"):
-            depth -= 1
             if depth == 0:
                 return m.start()
+            depth -= 1
     return None
 
 
@@ -189,16 +193,20 @@ def enclosing(text: str, i: int) -> int | None:
     return opened[-1] if opened else None
 
 
+@functools.lru_cache(maxsize=64)
+def _nested(pattern: str) -> re.Pattern:
+    # the nesting tokens come first, so ``pattern`` never matches inside a
+    # quoted identifier; they capture nothing, so its groups keep their numbers
+    return re.compile(f"{_NEST}|(?:{pattern})", re.IGNORECASE)
+
+
 def top_level(
     text: str, pattern: str, start: int = 0, end: int | None = None
 ) -> Iterator[re.Match]:
     """The matches of ``pattern`` (a case-insensitive regex that matches
     no bracket) at depth 0 of ``text[start:end]``."""
-    # the nesting tokens come first, so ``pattern`` never matches inside a
-    # quoted identifier; they capture nothing, so its groups keep their numbers
-    nested = re.compile(f"{_NEST}|(?:{pattern})", re.IGNORECASE)
-    depth = 0
-    for m in nested.finditer(text, start, len(text) if end is None else end):
+    depth, end = 0, len(text) if end is None else end
+    for m in _nested(pattern).finditer(text, start, end):
         t = m.group()
         if t in ("(", "["):
             depth += 1
@@ -208,10 +216,10 @@ def top_level(
             yield m
 
 
-def split(text: str, sep: str = ",") -> list[str]:
-    """``text`` cut at the depth-0 matches of ``sep`` (a regex)."""
+def split(text: str) -> list[str]:
+    """``text`` cut at its depth-0 commas."""
     parts, pos = [], 0
-    for m in top_level(text, sep):
+    for m in top_level(text, ","):
         parts.append(text[pos : m.start()])
         pos = m.end()
     parts.append(text[pos:])

@@ -689,7 +689,7 @@ def _ordered_aggs(_lx: Lexed, fn: str, args: list[str], after: str) -> str | Non
 
 
 # what ends an ORDER BY list at its own depth, besides the bracket that
-# closes the list's enclosing group
+# closes the group it is in
 _SORT_END = (
     r";|\b(?:LIMIT|OFFSET|ROWS|RANGE|GROUPS|WINDOW|FETCH|UNION|EXCEPT"
     r"|INTERSECT|HAVING|QUALIFY)\b"
@@ -710,8 +710,8 @@ def _add_null_ordering(q: str, _lx: Lexed, _scope: Scope) -> str:
         if not m:
             return q
         start = m.end()
-        group = enclosing(q, m.start())
-        end = len(q) if group is None else close(q, group) or len(q)
+        end = close(q, m.start())
+        end = len(q) if end is None else end
         stop = next(top_level(q, _SORT_END, start, end), None)
         end = end if stop is None else stop.start()
         items = []
@@ -1235,15 +1235,14 @@ _CAST_TYPE = re.compile(
     rf"|(?=\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b))({typenames.SQL_SPELLING})",
     re.IGNORECASE,
 )
-_CAST_CALL = re.compile(r"\b(?:TRY_)?CAST\Z", re.IGNORECASE)
+_CAST_CALL = re.compile(r"\b(?:TRY_)?CAST\s*\Z", re.IGNORECASE)
 
 
 def _cast_type(m: re.Match) -> str:
     q, lead = m.string, m.group(1)
     if lead[:1] in ("a", "A"):  # ``AS T)``: only a CAST's own target
         group = enclosing(q, q.index(")", m.end()))
-        head = "" if group is None else q[:group].rstrip()
-        if not _CAST_CALL.search(head, max(0, len(head) - 8)):
+        if group is None or not _CAST_CALL.search(q, 0, group):
             return m.group(0)
     return lead + typenames.sql_type(m.group(2))
 

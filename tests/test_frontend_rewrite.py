@@ -158,11 +158,17 @@ def test_nesting_primitives():
     assert enclosing(q, q.index("g")) == q.index("[g")
     assert enclosing(q, 0) is None
     assert enclosing(q, len(q)) is None
+    # at any other character, close finds the end of the group it is in
+    assert close(q, q.index("a")) == q.index(")[")
+    assert close(q, q.index("(b") - 2) == q.index(")[")
+    assert close(q, q.index("g")) == len(q) - 1
+    assert close(q, 0) is None
     assert split(q[2 : close(q, 1)]) == ["a[1]", " (b)", ' "c)d"', " `e(,``)`"]
     assert split('"a"",b", c') == ['"a"",b"', " c"]
     assert split("") == [""]
-    assert split("x[1:2]::int", r"(?<!:):(?!:)") == ["x[1:2]::int"]
-    assert split("1:2::int", r"(?<!:):(?!:)") == ["1", "2::int"]
+    colon = r"(?<!:):(?!:)"  # a slice's colon, not a ``::`` cast
+    assert [m.start() for m in top_level("1:2::int", colon)] == [1]
+    assert list(top_level("x[1:2]::int", colon)) == []
     # unbalanced input
     assert close("f((a)", 1) is None
     assert close('f("(")', 1) == 5
