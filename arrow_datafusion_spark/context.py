@@ -65,11 +65,11 @@ from arrow_datafusion_spark.sql.lex import (
     split,
     top_level,
 )
-from arrow_datafusion_spark.sql.rewrite import REWRITE_PASSES, Scope, run_passes
+from arrow_datafusion_spark.sql.rewrite import LITERAL_PASSES, REWRITE_PASSES, Scope, run_passes
 from arrow_datafusion_spark.sql.typed import TYPED_PASSES, Relations
 
-# The front end's rewrite passes in run order: the type-aware ones, then
-# the stateless layer.
+# The front end's rewrite passes after LITERAL_PASSES, in run order: the
+# type-aware ones, then the stateless layer.
 PASSES = TYPED_PASSES + REWRITE_PASSES
 
 # SQL-macro definitions (Spark 4 SQL UDFs) registered once per session so
@@ -639,7 +639,7 @@ class SessionContext:
         self._register_view(name, lex(sql))
 
     def _register_view(self, name: str, lx: Lexed) -> None:
-        rec = _Table(self._run(lx), view_sql=lx.unshield())
+        rec = _Table(self._run(lx), view_sql=lx.written())
         # per-column NAMED TIME ZONES (timestamps.slt:1289-1435, issue
         # #8899): the reference's Timestamp(unit, Some("tz")) rides the
         # column type; Spark holds a single session zone, so record the
@@ -1119,7 +1119,7 @@ class SessionContext:
         if m and m.group(4):
             return self._sql_create_table_cols(
                 m.group(2),
-                lx.unshield(m.group(3)),
+                lx.written(m.group(3)),
                 lx.derive(m.group(4)),
                 bool(m.group(1)),
                 args,
@@ -1129,7 +1129,7 @@ class SessionContext:
             # the schema run through the DataFusion→Spark type map (TEXT,
             # TIMESTAMP WITH TIME ZONE, unsigned widening — Spark's native
             # DDL parser rejects those spellings)
-            name, coldefs = m.group(2), lx.unshield(m.group(3))
+            name, coldefs = m.group(2), lx.written(m.group(3))
             if self._name_taken(name, m.group(1)):
                 return self._empty_result()
             declared = self._constraints(coldefs)
@@ -1549,7 +1549,7 @@ class SessionContext:
             r"SET\s+TIME\s*ZONE\s*(?:TO\s+|=\s*)?(.+)$", q, re.IGNORECASE
         )
         if m:
-            self.settings.set("datafusion.execution.time_zone", lx.unshield(m.group(1)))
+            self.settings.set("datafusion.execution.time_zone", lx.written(m.group(1)))
             return self._empty_result()
         m = re.match(
             r"SET\s+([A-Za-z_][\w.]*)\s*(?:TO\s+|=\s*)(.+)$",
@@ -1557,9 +1557,9 @@ class SessionContext:
             re.IGNORECASE | re.DOTALL,
         )
         if m:
-            key, value = m.group(1), lx.unshield(m.group(2).strip())
+            key, value = m.group(1), lx.written(m.group(2).strip())
             if key.lower().startswith("spark."):
-                return self.spark.sql(lx.unshield(q))  # native Spark conf
+                return self.spark.sql(lx.written(q))  # native Spark conf
             self.settings.set(key, value)  # raises on unknown namespace
             return self._empty_result()
         m = re.match(r"SHOW\s+(ALL|TIME\s*ZONE)\s*(VERBOSE)?$", q, re.IGNORECASE)
@@ -1583,7 +1583,7 @@ class SessionContext:
         if m:
             key, verbose = m.group(1), bool(m.group(2))
             if key.lower().startswith("spark."):
-                return self.spark.sql(lx.unshield(q))
+                return self.spark.sql(lx.written(q))
             self._require_info_schema("SHOW [VARIABLE]")
             name = "datafusion." + self.settings._suffix(key)
             v = self.settings.get(key)
@@ -1608,7 +1608,7 @@ class SessionContext:
                     "Error during planning: SHOW COLUMNS with WHERE or LIKE "
                     "is not supported"
                 )
-            return self._show_columns(lx.unshield(rest), full)
+            return self._show_columns(lx.written(rest), full)
         return None
 
     def _resolve_user_table(self, ident: str) -> str:
@@ -1900,7 +1900,7 @@ class SessionContext:
         if query[pos : pos + 1] == "(":  # balanced scan: types may nest parens
             end = close(query, pos)
             end = len(query) if end is None else end
-            cols = lx.unshield(query[pos + 1 : end])
+            cols = lx.written(query[pos + 1 : end])
             pos = end + 1
         rest = query[pos:]
         clauses = self._external_clauses(lx, rest, cols)
@@ -1995,9 +1995,10 @@ class SessionContext:
         Every call rewrites its text afresh, as the reference plans
         every ``sql()`` call from its text: nothing carries over between
         calls, so a catalog or settings change made through any path shows
-        at the next statement. ``PASSES`` runs in one loop
-        (``run_passes``): the type-aware passes (sql/typed.py), then the
-        stateless ones (sql/rewrite.py), in their declared order. A pass
+        at the next statement. ``LITERAL_PASSES`` run first, then
+        ``PASSES`` in one loop (``run_passes``): the type-aware passes
+        (sql/typed.py), then the stateless ones (sql/rewrite.py), in their
+        declared order. A pass
         runs only when its trigger matches the text so far, so a trigger
         matches every text its pass would change. Every pass reads the
         lexed statement's shielded text, so none can match function-call
@@ -2007,10 +2008,11 @@ class SessionContext:
         pfad = self.settings.get_bool(
             "datafusion.sql_parser.parse_float_as_decimal"
         )
-        # one relation scope per statement, resolved from the pre-rewrite
-        # text at most once (the passes never edit a FROM/JOIN clause)
-        rel = Relations(self.spark, lx.text)
         work = lx.copy()
+        work.text = run_passes(LITERAL_PASSES, work, Scope(pfad=pfad))
+        # one relation scope per statement, resolved from that text at most
+        # once (the later passes never edit a FROM/JOIN clause)
+        rel = Relations(self.spark, work.text)
         return work.unshield(run_passes(PASSES, work, Scope(self, rel, pfad)))
 
     def _column_tz(self) -> dict[str, dict[str, str]]:

@@ -852,12 +852,30 @@ def _slt_base_dir(path: str) -> str | None:
     """The reference runs its slt harness with cwd = the sqllogictest crate
     root, so relative LOCATIONs like '../../testing/data/...' resolve
     against the PARENT of the test_files dir the .slt file lives in."""
-    import os as _os
-
-    parts = _os.path.abspath(path).split(_os.sep)
+    parts = os.path.abspath(path).split(os.sep)
     if "test_files" in parts:
-        return _os.sep.join(parts[: parts.index("test_files")])
-    return _os.path.dirname(_os.path.abspath(path)) or None
+        return os.sep.join(parts[: parts.index("test_files")])
+    return os.path.dirname(os.path.abspath(path)) or None
+
+
+# Reference inputs this checkout lacks, by a fragment of their path, and
+# the directory under tests/fixtures holding a regenerated copy of each
+# file (same name):
+# - parquet-testing's files;
+# - the dbgen .tbl CSVs tpch/*.slt reads (the reference's data/ dir is an
+#   empty placeholder): tests/tpch_tbl.py regenerates byte-equivalent SF0.1
+#   tables with duckdb's tpch extension, a faithful dbgen port;
+# - the `testing` submodule's avro files: tests/avro_fixtures.py
+#   re-materializes them (same rows, schemas and codecs, reconstructed from
+#   the reference's own expected outputs).
+_SUBSTITUTES = (
+    ("/parquet-testing/data/", "parquet_gen"),
+    ("/test_files/tpch/data/", "tpch_tbl"),
+    ("/testing/data/avro/", "avro_gen"),
+)
+_FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures"
+)
 
 
 def _resolve_rel_paths(sql: str, base_dir: str | None) -> str:
@@ -876,112 +894,24 @@ def _resolve_rel_paths(sql: str, base_dir: str | None) -> str:
 
     def fix(m: "re.Match[str]") -> str:
         p = lx.string(m.group(2))
-        if not p or p.startswith(("/", "file:", "s3", "hdfs:")) or p.startswith(
-            "test_files/scratch"
-        ):
+        if not p or p.startswith(("/", "file:", "s3", "hdfs:", "test_files/scratch")):
             return m.group(0)
-        import os as _os
-
-        full = _os.path.normpath(_os.path.join(base_dir, p))
-        if not _os.path.exists(full) and "/parquet-testing/data/" in full:
-            alt = _os.path.join(
-                _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-                "tests", "fixtures", "parquet_gen", _os.path.basename(full),
-            )
-            if _os.path.exists(alt):
+        full = os.path.normpath(os.path.join(base_dir, p))
+        for fragment, copies in _SUBSTITUTES:
+            alt = os.path.join(_FIXTURES, copies, os.path.basename(full))
+            if fragment in full and not os.path.exists(full) and os.path.exists(alt):
                 full = alt
-        if (
-            not _os.path.isfile(full)
-            and "/test_files/tpch/data/" in full.replace(_os.sep, "/")
-        ):
-            # the reference's tpch/*.slt goldens read dbgen .tbl CSVs the
-            # repo doesn't ship (its data/ dir is an empty placeholder) —
-            # tests/tpch_tbl.py regenerates byte-equivalent SF0.1 tables
-            # (duckdb's tpch extension is a faithful dbgen port; q1-q22
-            # golden answers match); substitute the generated copy
-            alt = _os.path.join(
-                _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-                "tests", "fixtures", "tpch_tbl", _os.path.basename(full),
-            )
-            if _os.path.exists(alt):
-                full = alt
-        if not _os.path.exists(full) and "/testing/data/avro/" in full:
-            # the reference's `testing` submodule is not checked out —
-            # tests/avro_fixtures.py re-materializes these files (same
-            # rows/schemas/codecs, reconstructed from the reference's own
-            # expected outputs); substitute the generated copy
-            alt = _os.path.join(
-                _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-                "tests", "fixtures", "avro_gen", _os.path.basename(full),
-            )
-            if _os.path.exists(alt):
-                full = alt
-        if not _os.path.exists(full) and _os.path.basename(full) == (
-            "aggregate_test_100.csv"
-        ):
-            # the reference vendors this 100-row fixture via its `testing`
-            # submodule (not present here); core/tests/data ships the SAME
-            # rows sorted by c1 — row SET is identical, so every ORDER BY
-            # query agrees and natural-order records fall to rowsort
-            alt = _os.path.normpath(
-                _os.path.join(
-                    base_dir,
-                    "../core/tests/data/aggregate_test_100_order_by_c1_asc.csv",
-                )
-            )
-            if _os.path.exists(alt):
-                full = alt
+        # the `testing` submodule's 100-row fixture: core/tests/data ships
+        # the SAME rows sorted by c1, so every ORDER BY query agrees and
+        # natural-order records fall to rowsort
+        alt = os.path.join(base_dir, "../core/tests/data/aggregate_test_100_order_by_c1_asc.csv")
+        if os.path.basename(full) == "aggregate_test_100.csv" and not os.path.exists(full):
+            full = os.path.normpath(alt) if os.path.exists(alt) else full
         return m.group(1) + lx.add(quote(full))
 
-    return lx.unshield(
+    return lx.written(
         re.sub(rf"((?:LOCATION|TO)\s+)({LIT})", fix, lx.text, flags=re.IGNORECASE)
     )
-
-
-_BETWEEN_ARITH_RE = re.compile(
-    r"\bBETWEEN\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)\s+AND"
-    r"\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)(?=$|[,)]|\s+[A-Za-z])",
-    re.IGNORECASE,
-)
-
-
-def _fold_between_literal_arith(sql: str) -> str:
-    """Constant-fold literal-only arithmetic in BETWEEN bounds at DECIMAL
-    precision (``l_discount BETWEEN 0.06 - 0.01 AND 0.06 + 0.01``, tpch
-    q6). The reference evaluates the bound in Float64 but COMPARES it
-    against a decimal column by coercing the f64 to Decimal128(30,15)
-    (expr/src/type_coercion/binary.rs:759 coerce_numeric_type_to_decimal),
-    which rounds the f64 representation error away at 15 digits — i.e.
-    the predicate behaves as if the bound were exact decimal arithmetic
-    ([0.05, 0.07] inclusive). Folding the literal arithmetic with exact
-    Decimal and emitting the folded literal reproduces that: both the
-    column and the folded bound then survive any further double coercion
-    identically."""
-    from decimal import Decimal
-
-    def fold(m: "re.Match[str]") -> str:
-        out = []
-        for expr in (m.group(1), m.group(2)):
-            if not re.search(r"[+\-*/]\s*\d", expr) or not re.search(
-                r"\d+\.\d+", expr
-            ):
-                out.append(expr.strip())  # no decimal arithmetic to fold
-                continue
-            try:
-                val = eval(  # noqa: S307 — operands restricted by the regex
-                    re.sub(r"\d+(?:\.\d+)?", lambda n: f"Decimal('{n.group(0)}')", expr),
-                    {"__builtins__": {}},
-                    {"Decimal": Decimal},
-                )
-                out.append(format(val, "f"))
-            except Exception:
-                out.append(expr.strip())
-        return f"BETWEEN {out[0]} AND {out[1]}"
-
-    return _BETWEEN_ARITH_RE.sub(fold, sql)
-
-
-_FLOAT_LIT_RE = re.compile(r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])")
 
 
 def _expand_includes(text: str, base_dir: str, depth: int = 0) -> str:
@@ -1069,20 +999,18 @@ def run_slt_file(
     views_before: set[str] = set()
     dbs_before: set[str] = set()
     if isolate:
-        import re as _re
-
-        db = "slt_" + _re.sub(r"\W", "_", path.rsplit("/", 1)[-1])
+        db = "slt_" + re.sub(r"\W", "_", path.rsplit("/", 1)[-1])
         ctx.spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         # a file that CREATEs databases/schemas (e.g.
         # information_schema_multiple_catalogs.slt) must start clean even
         # when a previous crashed run left them in the warehouse — pre-drop
         # every database name the file is about to create, then drop
         # whatever the run materialized afterwards (snapshot diff)
-        for m in _re.finditer(
+        for m in re.finditer(
             r"create\s+(?:database|schema)\s+(?:if\s+not\s+exists\s+)?"
             r"([A-Za-z_][\w.]*)",
             text,
-            _re.IGNORECASE,
+            re.IGNORECASE,
         ):
             first = m.group(1).split(".")[0]
             if first.lower() not in ("default", db.lower()):
@@ -1162,41 +1090,10 @@ def _run_records(ctx, records, rep: SltReport, stop_on_fail: bool) -> None:
         finally:
             t.cancel()
 
-    def _effective_sql(sql: str) -> str:
-        """Dialect normalization at the slt boundary, on the lexed record:
-
-        - The reference lexes '...' literals with NO backslash-escape
-          processing (Postgres standard_conforming_strings); Spark's
-          default lexer processes them ('\\b' → backspace). Doubling each
-          backslash inside literals makes Spark reconstruct the reference's
-          exact bytes (the engine's own generated SQL, written for Spark's
-          lexer, is untouched).
-        - The reference's parser types bare decimal literals Float64
-          (§1.2); Spark types them DECIMAL(p,s), which changes arithmetic
-          precision (2.0/3 → 6-digit decimal) and display (1 vs 1.0), so
-          each becomes an explicit DOUBLE cast. Not in SET/SHOW statement
-          values, and not while datafusion.sql_parser.parse_float_as_decimal
-          is set (then Spark's native DECIMAL literal typing is exactly the
-          reference's configured behavior — options.slt:112+)."""
-        lx = lex(sql)
-        lx.lits[:] = [lit.replace("\\", "\\\\") for lit in lx.lits]
-        settings = getattr(ctx, "settings", None)
-        if lx.head(1) in (("SET",), ("SHOW",)) or (
-            settings is not None
-            and settings.get_bool("datafusion.sql_parser.parse_float_as_decimal")
-        ):
-            return lx.unshield()
-        text = _FLOAT_LIT_RE.sub(
-            lambda m: f"CAST({m.group(1)} AS DOUBLE)",
-            _fold_between_literal_arith(lx.text),
-        )
-        return lx.unshield(text)
-
     for rec in records:
-        sql = _effective_sql(rec.sql)
         if rec.kind == "statement_error":
             try:
-                run_bounded(lambda: ctx.sql(sql).collect())
+                run_bounded(lambda: ctx.sql(rec.sql).collect())
                 rep.divergences += 1  # we accept what the reference rejects
                 rep.divnotes.append(f"{rec.line}: stmt-error accepted: {rec.sql!r}"[:300])
             except Exception:
@@ -1206,7 +1103,7 @@ def _run_records(ctx, records, rep: SltReport, stop_on_fail: bool) -> None:
             try:
 
                 def _stmt():
-                    df = ctx.sql(sql)
+                    df = ctx.sql(rec.sql)
                     if df is not None:
                         df.collect()
 
@@ -1227,13 +1124,10 @@ def _run_records(ctx, records, rep: SltReport, stop_on_fail: bool) -> None:
             rep.skipped += 1
             rep.skips.append(f"{rec.line}: SHOW CREATE TABLE (engine-specific)")
             continue
-        # backslashes in literals are safe: _effective_sql doubles them
-        # rewrites them at this boundary, matching the reference's
-        # Postgres-style (non-escaping) lexing without a session-wide conf
         try:
             rows = run_bounded(
                 lambda: [
-                    tuple(r) for r in _map_order_safe(ctx.sql(sql)).collect()
+                    tuple(r) for r in _map_order_safe(ctx.sql(rec.sql)).collect()
                 ]
             )
         except Exception as exc:

@@ -1,6 +1,7 @@
 """Statement lexer: the one place that knows how SQL text delimits string
-literals, quoted identifiers and comments, how a shielded literal is
-spelled in the text the front-end passes read, and what nests in what.
+literals, quoted identifiers and comments, how a literal is spelled for
+Spark, how a shielded literal is spelled in the text the front-end passes
+read, and what nests in what.
 
 ``lex`` scans a statement once, left to right, as the reference tokenizes
 once before dispatching on the parsed statement (``DFParser``,
@@ -17,10 +18,20 @@ datafusion/sql/src/parser.rs:264):
 Slices and rewrites of the shielded text stay valid against the same
 literal table (``Lexed.derive``).
 
-Its second job is nesting. ``close``, ``enclosing``, ``top_level`` and
+Its second job is literal escaping. The reference reads a ``'...'``
+literal byte for byte (no backslash escapes, as PostgreSQL's
+standard_conforming_strings); Spark's lexer reads ``\\b`` as a
+backspace and ``\\s`` as ``s``. So the table holds Spark's spelling of
+each literal, every backslash doubled, and ``quote`` writes the same
+spelling. ``unshield`` gives the text for Spark; a value the engine reads
+for its own use (``string``, ``values``, ``written``) keeps the bytes the
+user wrote.
+
+Its third job is nesting. ``close``, ``enclosing``, ``top_level`` and
 ``split`` read shielded text with one rule: ``(`` and ``[`` open, ``)``
 and ``]`` close, and a quoted identifier is skipped whole, so a bracket or
-comma inside ``"c)d"`` nests nothing. Passes edit the text between
+comma inside ``"c)d"`` nests nothing. ``unquoted`` and ``sub`` find a
+pattern anywhere outside quoted identifiers. Passes edit the text between
 lookups, so each call scans the text it is given; no index is kept.
 """
 
@@ -28,7 +39,7 @@ from __future__ import annotations
 
 import functools
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 # Brackets a shielded literal's table index; NUL cannot occur in SQL text.
 MARK = "\x00"
@@ -37,10 +48,10 @@ LIT = f"{MARK}\\d+{MARK}"
 
 _LIT_INDEX = re.compile(f"{MARK}(\\d+){MARK}")
 # a quoted identifier; a doubled quote inside it is an escape
-_QUOTED_IDENT = r'"(?:[^"]|"")*"|`(?:[^`]|``)*`'
+QUOTED_IDENT = r'"(?:[^"]|"")*"|`(?:[^`]|``)*`'
 _SCAN = re.compile(
     r"'(?:[^']|'')*'"  # string literal
-    rf"|{_QUOTED_IDENT}"
+    rf"|{QUOTED_IDENT}"
     r"|--[^\n]*"  # line comment (its newline stays)
     r"|/\*(?!\+).*?\*/",  # block comment, not a /*+ hint */
     re.DOTALL,
@@ -48,18 +59,22 @@ _SCAN = re.compile(
 _WORD = re.compile(r"\s*([A-Za-z_]\w*)")
 # The tokens nesting reads: a quoted identifier (skipped whole) or a bracket.
 # Each alternative opens with a literal, so the scan jumps between them.
-_NEST = rf"{_QUOTED_IDENT}|\(|\)|\[|\]"
-_BRACKETS = re.compile(_NEST)
+_BRACKETS = re.compile(rf"{QUOTED_IDENT}|\(|\)|\[|\]")
 
 
 def quote(value: str) -> str:
-    """``value`` as a SQL string literal."""
-    return "'" + value.replace("'", "''") + "'"
+    """``value`` as a Spark SQL string literal (the table's spelling)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _written(literal: str) -> str:
+    """A table literal as the user wrote it: each backslash undoubled."""
+    return literal.replace("\\\\", "\\")
 
 
 class Lexed:
     """A lexed statement: shielded ``text`` and the table of quoted
-    literals (``lits``) its sentinels index."""
+    literals (``lits``, in Spark's spelling) its sentinels index."""
 
     __slots__ = ("text", "lits")
 
@@ -89,9 +104,9 @@ class Lexed:
         return self.lits[int(m.group(1))] if m else None
 
     def string(self, tok: str) -> str | None:
-        """The string value when ``tok`` is exactly one sentinel."""
+        """The string value as written, when ``tok`` is exactly one sentinel."""
         lit = self.literal(tok)
-        return None if lit is None else lit[1:-1].replace("''", "'")
+        return None if lit is None else _written(lit)[1:-1].replace("''", "'")
 
     def add(self, literal: str) -> str:
         """Register a quoted literal a pass emits; returns its sentinel."""
@@ -103,11 +118,17 @@ class Lexed:
         self.lits[int(_LIT_INDEX.fullmatch(tok.strip()).group(1))] = literal
 
     def unshield(self, text: str | None = None) -> str:
-        """``text`` (default: the statement) with its literals restored."""
+        """``text`` (default: the statement) with its literals in Spark's spelling."""
         text = self.text if text is None else text
         if MARK not in text:
             return text
         return _LIT_INDEX.sub(lambda m: self.lits[int(m.group(1))], text)
+
+    def written(self, text: str | None = None) -> str:
+        """``text`` (default: the statement) with its literals restored as
+        the user wrote them: text the engine keeps or lexes again."""
+        text = self.text if text is None else text
+        return _LIT_INDEX.sub(lambda m: _written(self.lits[int(m.group(1))]), text)
 
     def bind(self, params) -> tuple[Lexed, dict]:
         """Rewrite DataFusion placeholders outside literals to Spark
@@ -155,7 +176,7 @@ def lex(sql: str) -> Lexed:
     def token(m: re.Match) -> str:
         tok = m.group(0)
         if tok[0] == "'":
-            lits.append(tok)
+            lits.append(tok.replace("\\", "\\\\"))
             return f"{MARK}{len(lits) - 1}{MARK}"
         if tok[0] in "\"`":
             return tok
@@ -194,10 +215,31 @@ def enclosing(text: str, i: int) -> int | None:
 
 
 @functools.lru_cache(maxsize=64)
-def _nested(pattern: str) -> re.Pattern:
-    # the nesting tokens come first, so ``pattern`` never matches inside a
-    # quoted identifier; they capture nothing, so its groups keep their numbers
-    return re.compile(f"{_NEST}|(?:{pattern})", re.IGNORECASE)
+def _unquoted(pattern: str) -> re.Pattern:
+    # a quoted identifier comes first, so ``pattern`` never matches inside
+    # one; it captures nothing, so ``pattern``'s groups keep their numbers
+    return re.compile(f"{QUOTED_IDENT}|(?:{pattern})", re.IGNORECASE)
+
+
+def unquoted(
+    text: str, pattern: str, start: int = 0, end: int | None = None
+) -> Iterator[re.Match]:
+    """The matches of ``pattern`` (a case-insensitive regex) in
+    ``text[start:end]`` outside quoted identifiers."""
+    end = len(text) if end is None else end
+    for m in _unquoted(pattern).finditer(text, start, end):
+        if m.group()[:1] not in ('"', "`"):
+            yield m
+
+
+def sub(text: str, pattern: str, repl: Callable[[re.Match], str]) -> str:
+    """``text`` with each ``unquoted`` match of ``pattern`` replaced by
+    ``repl(match)``."""
+    out, pos = [], 0
+    for m in unquoted(text, pattern):
+        out += (text[pos : m.start()], repl(m))
+        pos = m.end()
+    return "".join(out) + text[pos:]
 
 
 def top_level(
@@ -205,14 +247,15 @@ def top_level(
 ) -> Iterator[re.Match]:
     """The matches of ``pattern`` (a case-insensitive regex that matches
     no bracket) at depth 0 of ``text[start:end]``."""
-    depth, end = 0, len(text) if end is None else end
-    for m in _nested(pattern).finditer(text, start, end):
+    depth = 0
+    # the brackets come before ``pattern``, so it never matches one
+    for m in unquoted(text, rf"[(\[]|[)\]]|{pattern}", start, end):
         t = m.group()
         if t in ("(", "["):
             depth += 1
         elif t in (")", "]"):
             depth -= 1
-        elif depth == 0 and t[:1] not in ('"', "`"):
+        elif depth == 0:
             yield m
 
 

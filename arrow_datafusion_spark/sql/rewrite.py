@@ -45,12 +45,15 @@ from arrow_datafusion_spark import typenames
 from arrow_datafusion_spark.sql.lex import (
     LIT,
     MARK,
+    QUOTED_IDENT,
     Lexed,
     close,
     enclosing,
     quote,
     split,
+    sub,
     top_level,
+    unquoted,
 )
 
 # SQL-level list_* → array_* renames: semantics verified identical between
@@ -493,12 +496,10 @@ def _subscripts(q: str, lx: Lexed, _scope: Scope) -> str:
     inclusive 1-based slice with negative ends counting from the back.
     Spark's native ``[]`` is 0-based array access — rewrite to
     try_element_at / slice. Runs after array-literal rewriting, so every
-    remaining postfix bracket is a subscript."""
+    remaining postfix bracket outside a quoted identifier is a subscript."""
     i = 0
-    while i < len(q):
-        if q[i] != "[":
-            i += 1
-            continue
+    while (bracket := next(unquoted(q, r"\[", i), None)) is not None:
+        i = bracket.start()
         j = i - 1
         while j >= 0 and q[j].isspace():
             j -= 1
@@ -703,10 +704,9 @@ def _add_null_ordering(q: str, _lx: Lexed, _scope: Scope) -> str:
     both sort output and RANGE-frame membership whenever a sort key is
     nullable. Applies to every ORDER BY — top-level, window spec, and
     aggregate-internal — leaving explicit NULLS FIRST/LAST untouched."""
-    pat = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
     pos = 0
     while True:
-        m = pat.search(q, pos)
+        m = next(unquoted(q, r"\bORDER\s+BY\b", pos), None)
         if not m:
             return q
         start = m.end()
@@ -1081,6 +1081,56 @@ def run_passes(passes: tuple[Pass, ...], lx: Lexed, scope: Scope) -> str:
     return q
 
 
+# -- the reference's literal rules -------------------------------------------
+#
+# DataFusion's parser types a bare decimal literal Float64 (SURVEY §1.2);
+# Spark types it DECIMAL(p,s), which changes precision (2.0 / 3) and
+# display (1 vs 1.0). Under sql_parser.parse_float_as_decimal Spark's
+# typing is the reference's (options.slt:112), and these passes change
+# nothing. They run first: the relations and every later pass read the
+# text they leave.
+
+_BETWEEN_ARITH = (
+    r"\bBETWEEN\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)\s+AND"
+    r"\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)(?=$|[,)]|\s+[A-Za-z])"
+)
+_FLOAT = r"(?<![\w.])\d+\.\d+(?:e[+-]?\d+)?(?![\w.])"
+
+
+def _exact(bound: str) -> str:
+    """A BETWEEN bound holding decimal arithmetic, evaluated exactly."""
+    from decimal import Decimal
+
+    if not re.search(r"[+\-*/]\s*\d", bound) or "." not in bound:
+        return bound.strip()
+    exact = re.sub(r"\d+(?:\.\d+)?", lambda n: f"Decimal('{n[0]}')", bound)
+    try:  # _BETWEEN_ARITH admits numbers and operators only
+        value = eval(exact, {"__builtins__": {}}, {"Decimal": Decimal})  # noqa: S307
+    except (SyntaxError, TypeError, ArithmeticError):
+        return bound.strip()
+    return format(value, "f")
+
+
+def _between_literal_arith(q: str, _lx: Lexed, scope: Scope) -> str:
+    """Fold literal arithmetic in BETWEEN bounds exactly (TPC-H q6's
+    ``l_discount BETWEEN 0.06 - 0.01 AND 0.06 + 0.01``). The reference
+    computes the bound in Float64, then compares it with a decimal column
+    as Decimal128(30,15) (type_coercion/binary.rs:759), which rounds the
+    f64 error away: the bound behaves as exact ([0.05, 0.07])."""
+    if scope.pfad:
+        return q
+    return sub(q, _BETWEEN_ARITH, lambda m: f"BETWEEN {_exact(m[1])} AND {_exact(m[2])}")
+
+
+def _float_literals(q: str, _lx: Lexed, scope: Scope) -> str:
+    return q if scope.pfad else sub(q, _FLOAT, lambda m: f"CAST({m[0]} AS DOUBLE)")
+
+
+LITERAL_PASSES = (
+    Pass("between_literal_arith", re.compile(_BETWEEN_ARITH, re.I), _between_literal_arith),
+    Pass("float_literals", re.compile(_FLOAT, re.I), _float_literals, ("options.slt:112",)),
+)
+
 # The stateless passes, declared in run order by the helpers below.
 _PASSES: list[Pass] = []
 
@@ -1129,8 +1179,16 @@ def _sub(name: str, pattern: str, repl, *, cites: tuple[str, ...] = ()):
 # so only the PostgreSQL-isms below remain.
 
 # double-quoted IDENTIFIERS (SQL standard / Postgres — the reference
-# never treats "..." as a string) → Spark backticks
-_sub("quoted_identifiers", r'"([^"]*)"', lambda m, _lx: f"`{m.group(1)}`")
+# never treats "..." as a string; ``""`` is a quote in the name) → Spark
+# backticks. A backticked identifier is matched too, and kept whole.
+def _backticked(m: re.Match, _lx: Lexed) -> str:
+    name = m.group()
+    if name[0] == "`":
+        return name
+    return "`" + name[1:-1].replace('""', '"').replace("`", "``") + "`"
+
+
+_sub("quoted_identifiers", QUOTED_IDENT, _backticked)
 
 
 @_pass("~")
@@ -1230,10 +1288,9 @@ def _regexp_match(_lx: Lexed, _fn: str, parts: list[str], _after: str) -> str | 
 # ``text`` are valid columns elsewhere, and ``AS text)`` may end a
 # subquery's alias), or TIMESTAMP WITH TIME ZONE in any position (a typed
 # literal's type too; no column can be named so)
-_CAST_TYPE = re.compile(
+_CAST_TYPE = (
     rf"(::\s*|\bAS\s+(?=(?:{typenames.SQL_SPELLING})\s*\))"
-    rf"|(?=\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b))({typenames.SQL_SPELLING})",
-    re.IGNORECASE,
+    rf"|(?=\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b))({typenames.SQL_SPELLING})"
 )
 _CAST_CALL = re.compile(r"\b(?:TRY_)?CAST\s*\Z", re.IGNORECASE)
 
@@ -1251,7 +1308,7 @@ def _cast_type(m: re.Match) -> str:
 def _sql_type_names(q: str, _lx: Lexed, _scope: Scope) -> str:
     # DataFusion's SQL type spellings Spark rejects or reads differently
     # (typenames.sql_type): TEXT, INT8, VARCHAR, INT UNSIGNED, int[], ...
-    return _CAST_TYPE.sub(_cast_type, q)
+    return sub(q, _CAST_TYPE, _cast_type)
 
 
 @_pass(r"\bDATE\b")
@@ -2144,9 +2201,9 @@ REWRITE_PASSES = tuple(_PASSES)
 
 
 def _rewrite_sql(lx: Lexed, pfad: bool = False) -> str:
-    """``lx`` after the stateless passes, literals restored: the front
-    end without a session."""
-    return lx.unshield(run_passes(REWRITE_PASSES, lx, Scope(pfad=pfad)))
+    """``lx`` after the literal and the stateless passes, literals
+    restored: the front end without a session."""
+    return lx.unshield(run_passes(LITERAL_PASSES + REWRITE_PASSES, lx, Scope(pfad=pfad)))
 
 
 def _lower_approx_percentile(

@@ -4,14 +4,15 @@
 statement: the input SQL and either the exact text the rewrite layer
 produces or the class of the error it raises. Two kinds of record:
 
-- *pure* records replay ``lex`` → the stateless passes
-  (``sql/rewrite.py`` ``REWRITE_PASSES``, via ``_rewrite_sql``, which
-  unshields on return) with no Spark session. Their sources are every
-  ``SELECT``/``WITH`` string constant in ``tests/test_*.py`` and
-  ``arrow_datafusion_spark/queries/*.py`` and the hand-written ``EXTRA``
-  statements below, which reach every call rewrite; a statement that
-  carries ``arrow_typeof`` is also replayed under
-  ``parse_float_as_decimal``.
+- *pure* records replay ``lex`` → the literal and stateless passes
+  (``sql/rewrite.py`` ``LITERAL_PASSES`` and ``REWRITE_PASSES``, via
+  ``_rewrite_sql``, which unshields on return) with no Spark session.
+  Their sources are every ``SELECT``/``WITH`` string constant in
+  ``tests/test_*.py`` and ``arrow_datafusion_spark/queries/*.py``, the
+  SELECT texts of perfbench's ``pipeline`` workload and the hand-written
+  ``EXTRA`` statements below, which reach every call rewrite; a statement
+  that holds a decimal literal or carries ``arrow_typeof`` is also
+  replayed under ``parse_float_as_decimal``.
 - *typed* records replay ``SessionContext._spark_sql`` over the small
   catalog built by ``typed_catalog``: the schema-reading passes run
   against live table schemas, and ``spark.sql`` is stubbed so the text it
@@ -140,6 +141,17 @@ EXTRA = (
     # TIMESTAMP WITH TIME ZONE is a type in any position, parens or none
     "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00'",
     "SELECT TIMESTAMP WITH TIME ZONE '2020-01-01 00:00:00', f(x) FROM t",
+    # no pass rewrites the text of a quoted identifier; ``""`` is a quote
+    'SELECT "order by" FROM t',
+    'SELECT "x::text" FROM t',
+    'SELECT "a[1]" FROM t',
+    'SELECT "1.5" FROM t',
+    'SELECT "a""b" FROM t',
+    # the reference's literal rules: a literal's bytes as written, a bare
+    # decimal typed Float64, BETWEEN literal arithmetic folded exactly
+    "SELECT regexp_replace('a  b', '\\s+', '-', 'g'), 'a  b' ~ '\\s', length('a\\tb')",
+    "SELECT arrow_typeof(1.5), 2.0 / 3, round(2.5), 1.5e3, x.5, 1.",
+    "SELECT 0.07 BETWEEN 0.06 - 0.01 AND 0.06 + 0.01, x BETWEEN 1 AND 2.5 * 2 FROM t",
 )
 
 # Type-aware statements over the typed_catalog relations, one or more
@@ -204,11 +216,38 @@ def source_statements() -> list[tuple[str, str]]:
     return [(src, text) for text, src in seen.items()]
 
 
+def pipeline_statements() -> list[tuple[str, str]]:
+    """(source, text) for the SELECT texts perfbench's ``pipeline``
+    workload hands to ``SessionContext.sql`` at a fixed seed: the COPY
+    source, the INSERT source and the read-back."""
+    from perfbench.workloads import Passes
+
+    copy, _create, insert, read_back = Passes("pipeline", 7, "w")._etl_write(0)
+    return [
+        ("perfbench/workloads.py", text)
+        for text in (
+            re.match(r"COPY \((.*)\) TO ", copy.text).group(1),
+            re.match(r"INSERT INTO \w+ (.*)", insert.text).group(1),
+            read_back.text,
+        )
+    ]
+
+
+def _holds_decimal(text: str) -> bool:
+    from arrow_datafusion_spark.sql.lex import lex, unquoted
+    from arrow_datafusion_spark.sql.rewrite import _FLOAT
+
+    return next(unquoted(lex(text).text, _FLOAT), None) is not None
+
+
 def pure_inputs() -> list[dict]:
+    sources = source_statements() + pipeline_statements() + [("extra", t) for t in EXTRA]
     return [
         {"src": src, "sql": text, "pfad": pfad}
-        for src, text in source_statements() + [("extra", t) for t in EXTRA]
-        for pfad in ((False, True) if "arrow_typeof" in text else (False,))
+        for src, text in sources
+        for pfad in (
+            (False, True) if "arrow_typeof" in text or _holds_decimal(text) else (False,)
+        )
     ]
 
 
@@ -260,16 +299,24 @@ def rewrite_typed(ctx, sql: str) -> dict:
 @contextlib.contextmanager
 def passes_edited(edit):
     """Run the front end with ``edit(pass)`` in place of every pass, in
-    both the session's list and the stateless one."""
+    the session's lists and the stateless ones."""
     from arrow_datafusion_spark import context
     from arrow_datafusion_spark.sql import rewrite
 
-    saved = context.PASSES, rewrite.REWRITE_PASSES
-    context.PASSES, rewrite.REWRITE_PASSES = (tuple(map(edit, ps)) for ps in saved)
+    lists = [
+        (context, "LITERAL_PASSES"),
+        (context, "PASSES"),
+        (rewrite, "LITERAL_PASSES"),
+        (rewrite, "REWRITE_PASSES"),
+    ]
+    saved = [getattr(module, name) for module, name in lists]
+    for (module, name), passes in zip(lists, saved):
+        setattr(module, name, tuple(map(edit, passes)))
     try:
         yield
     finally:
-        context.PASSES, rewrite.REWRITE_PASSES = saved
+        for (module, name), passes in zip(lists, saved):
+            setattr(module, name, passes)
 
 
 def unfired(ctx, records: list[dict]) -> list[str]:
@@ -295,7 +342,9 @@ def unfired(ctx, records: list[dict]) -> list[str]:
                 rewrite_typed(ctx, rec["sql"])
             else:
                 rewrite_pure(rec["sql"], rec["pfad"])
-    return [p.name for p in context.PASSES if p.name not in fired]
+    return [
+        p.name for p in context.LITERAL_PASSES + context.PASSES if p.name not in fired
+    ]
 
 
 def load() -> list[dict]:

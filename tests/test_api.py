@@ -1152,6 +1152,46 @@ def test_settings_change_is_seen(spark):
     assert ctx.sql(q).first().t == "Float64"
 
 
+def test_literal_rules_follow_the_reference(spark):
+    # the reference reads a '...' literal byte for byte and types a bare
+    # decimal Float64 (DFParser); each answer is the reference's
+    from pyspark.sql.types import DoubleType
+
+    ctx = SessionContext(spark)
+
+    def one(q):
+        return ctx.sql(q).first()[0]
+
+    assert one(r"SELECT regexp_replace('a  b', '\s+', '-', 'g')") == "a-b"
+    assert one(r"SELECT 'a  b' ~ '\s'") is True
+    assert one(r"SELECT regexp_like('x1', '\d')") is True
+    assert one(r"SELECT length('a\tb')") == 4
+    assert one("SELECT arrow_typeof(1.5)") == "Float64"
+    assert one("SELECT 2.0 / 3") == 0.6666666666666666
+    rounded = ctx.sql("SELECT round(2.5) AS r")
+    assert rounded.schema["r"].dataType == DoubleType() and rounded.first().r == 3.0
+    # BETWEEN literal arithmetic folds exactly: in DOUBLE, 0.06 + 0.01
+    # is below 0.07
+    assert one("SELECT 0.07 BETWEEN 0.06 - 0.01 AND 0.06 + 0.01") is True
+    ctx.sql("SET datafusion.sql_parser.parse_float_as_decimal = true")
+    try:
+        assert one("SELECT arrow_typeof(1.5)") == "Decimal128(2, 1)"
+    finally:
+        ctx.sql("SET datafusion.sql_parser.parse_float_as_decimal = false")
+
+
+def test_values_the_engine_reads_keep_the_written_bytes(spark):
+    # a literal the engine reads itself is not respelled for Spark
+    ctx = SessionContext(spark)
+    ctx.sql("PREPARE lit_bytes AS SELECT $1 AS v")
+    try:
+        assert ctx.sql(r"EXECUTE lit_bytes('a\b')").first().v == "a\\b"
+        assert ctx.sql("EXECUTE lit_bytes(1.5)").first().v == 1.5
+    finally:
+        ctx.sql("DEALLOCATE lit_bytes")
+    assert ctx.sql(r"SELECT 1 AS 'a\b'").columns == ["a\\b"]
+
+
 def test_typed_statement_resolves_its_relations_once(spark, monkeypatch):
     # one relation scope per statement: each run resolves the FROM
     # relations once for every pass, and a statement no pass types

@@ -74,11 +74,12 @@ def test_triggers_are_exact(typed_ctx):
 def test_passes_are_named_once_and_cite_slt_lines():
     import re
 
-    from arrow_datafusion_spark.context import PASSES
+    from arrow_datafusion_spark.context import LITERAL_PASSES, PASSES
 
-    names = [p.name for p in PASSES]
+    passes = LITERAL_PASSES + PASSES
+    names = [p.name for p in passes]
     assert len(names) == len(set(names))
-    cites = [c for p in PASSES for c in p.cites]
+    cites = [c for p in passes for c in p.cites]
     assert cites and all(re.fullmatch(r"\w+\.slt:\d+", c) for c in cites), cites
 
 
@@ -107,12 +108,13 @@ def _ex(full_count: int) -> int:
 
 
 def _piece():
-    """(text, text after lexing and unshielding): the lexer drops a line
-    comment (its newline stays) and turns a block comment into one space."""
+    """(text, text after lexing and restoring the written literals): the
+    lexer drops a line comment (its newline stays) and turns a block
+    comment into one space."""
     from hypothesis import strategies as st
 
     word = st.text("abcXYZ019_ ,.()=<>+\n\t", min_size=1, max_size=8)
-    inner = st.text("ab c'\"`-/*+\n", max_size=8)
+    inner = st.text("ab c'\"`-/*+\n\\", max_size=8)
     return st.one_of(
         word.map(lambda w: (w, w)),
         inner.map(lambda t: "'" + t.replace("'", "''") + "'").map(lambda t: (t, t)),
@@ -140,13 +142,32 @@ def test_lex_round_trips_all_but_comments():
     @given(st.lists(_piece(), max_size=12))
     def check(pieces):
         sql = "".join(p[0] for p in pieces)
-        assert lex(sql).unshield() == "".join(p[1] for p in pieces), sql
+        assert lex(sql).written() == "".join(p[1] for p in pieces), sql
 
     check()
 
 
+def test_literals_are_spelled_for_spark():
+    from arrow_datafusion_spark.sql.lex import lex, quote
+
+    lx = lex(r"SELECT 'a\b''c', x FROM t WHERE y = '\'")
+    assert lx.unshield() == r"SELECT 'a\\b''c', x FROM t WHERE y = '\\'"
+    assert lx.written() == r"SELECT 'a\b''c', x FROM t WHERE y = '\'"
+    tok = lx.text.split(",")[0].removeprefix("SELECT ")
+    assert lx.string(tok) == "a\\b'c"
+    assert lx.values(tok) == ["a\\b'c"]
+    assert quote("a\\b'c") == lx.literal(tok) == r"'a\\b''c'"
+
+
 def test_nesting_primitives():
-    from arrow_datafusion_spark.sql.lex import close, enclosing, split, top_level
+    from arrow_datafusion_spark.sql.lex import (
+        close,
+        enclosing,
+        split,
+        sub,
+        top_level,
+        unquoted,
+    )
 
     q = 'f(a[1], (b), "c)d", `e(,``)`)[g(2)]'
     assert close(q, 1) == q.index(")[")
@@ -183,3 +204,8 @@ def test_nesting_primitives():
     assert list(top_level('x "from" `from`', r"\bFROM\b")) == []
     m = next(top_level("a ORDER  BY b", r"ORDER\s+(BY)"))
     assert m.group(1) == "BY"  # the pattern keeps its own groups
+    # unquoted and sub: any depth, quoted identifiers skipped
+    q = 'f(a[1]) "a[2]" `b[3]`[4]'
+    assert [m.start() for m in unquoted(q, r"\[")] == [3, q.index("[4")]
+    assert sub(q, r"\[(\d)\]", lambda m: f"<{m[1]}>") == 'f(a<1>) "a[2]" `b[3]`<4>'
+

@@ -636,3 +636,35 @@ def test_top_level_order_by_reads_past_literals_and_identifiers():
     assert _order_by_output_positions(
         "SELECT a, b || ', ' FROM t ORDER BY b || ', ' LIMIT 1", 2
     ) == [1]
+
+
+def test_records_reach_ctx_sql_unchanged():
+    # the harness hands each record's text to ctx.sql as written: the
+    # literal rules are the engine's, not the harness's
+    from types import SimpleNamespace
+
+    from arrow_datafusion_spark.slt import Record, SltReport, _run_records
+
+    seen = []
+
+    class Frame:
+        schema = ()
+
+        def collect(self):
+            return []
+
+    sc = SimpleNamespace(setJobGroup=lambda *a: None, cancelJobGroup=lambda *a: None)
+    ctx = SimpleNamespace(
+        spark=SimpleNamespace(sparkContext=sc),
+        sql=lambda text: seen.append(text) or Frame(),
+    )
+    texts = [
+        r"SELECT regexp_replace('a  b', '\s+', '-', 'g')",
+        "SELECT 2.0 / 3, 0.07 BETWEEN 0.06 - 0.01 AND 0.06 + 0.01",
+        "SET datafusion.sql_parser.parse_float_as_decimal = true",
+        r"SELECT 1 AS 'a\b'",
+    ]
+    kinds = ["query", "statement_ok", "statement_ok", "statement_error"]
+    records = [Record(k, t, n) for n, (k, t) in enumerate(zip(kinds, texts))]
+    _run_records(ctx, records, SltReport("synthetic.slt"), stop_on_fail=False)
+    assert seen == texts

@@ -14,20 +14,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from arrow_datafusion_spark.context import SessionContext
+    from arrow_datafusion_spark.session import build_spark
     from arrow_datafusion_spark.slt import run_slt_file
 
     show_skips = "-s" in sys.argv
     files = [a for a in sys.argv[1:] if not a.isdigit() and a != "-s"]
     nshow = next((int(a) for a in sys.argv[1:] if a.isdigit()), 10)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = build_spark(app="slt-run")
     spark.sparkContext.setLogLevel("ERROR")
     for f in files:
         ctx = SessionContext(spark)
