@@ -1090,10 +1090,13 @@ def run_passes(passes: tuple[Pass, ...], lx: Lexed, scope: Scope) -> str:
 # nothing. They run first: the relations and every later pass read the
 # text they leave.
 
-_BETWEEN_ARITH = (
-    r"\bBETWEEN\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)\s+AND"
-    r"\s+((?:\d+(?:\.\d+)?|[+\-*/()]|\s)+?)(?=$|[,)]|\s+[A-Za-z])"
-)
+# a bound is numbers and operators with whitespace only between them, and
+# a number is read one way only (the lookahead stops a digit run being
+# split): a failed match does not try every way to split a run of digits
+# or blanks
+_TOKEN = r"(?:\d+(?:\.\d+)?(?![\d.])|[+\-*/()])"
+_BOUND = rf"({_TOKEN}(?:\s*{_TOKEN})*?)"
+_BETWEEN_ARITH = rf"\bBETWEEN\s+{_BOUND}\s+AND\s+{_BOUND}(?=\s*(?:$|[,)])|\s+[A-Za-z])"
 _FLOAT = r"(?<![\w.])\d+\.\d+(?:e[+-]?\d+)?(?![\w.])"
 
 

@@ -434,8 +434,12 @@ def decimal_avg(q: str, lx: Lexed, scope: Scope) -> str:
     return rewrite_calls(q, "avg", avg)
 
 
-# the cast operand may hold one group: the DOUBLE cast of a decimal literal
-_CAST_DEC = r"CAST\s*\(\s*(?:[^()]|\([^()]*\))*?\s+AS\s+DECIMAL\s*\(\s*\d+\s*,\s*\d+\s*\)\s*\)"
+# the operand holds no group, or is the DOUBLE cast float_literals gives
+# a decimal literal
+_CAST_DEC = (
+    r"CAST\s*\(\s*(?:CAST\s*\(\s*\d+\.\d+(?:e[+-]?\d+)?\s+AS\s+DOUBLE\s*\)|[^()]*?)"
+    r"\s+AS\s+DECIMAL\s*\(\s*\d+\s*,\s*\d+\s*\)\s*\)"
+)
 _DEC_OPERAND = rf"{_CAST_DEC}|\(\s*{COL}\s*\)|{COL}"
 _DEC_DIVISION = re.compile(
     rf"(?<![\w.])({_DEC_OPERAND})\s*/\s*({_DEC_OPERAND})(?![\w.])", re.IGNORECASE

@@ -159,6 +159,26 @@ def test_literals_are_spelled_for_spark():
     assert quote("a\\b'c") == lx.literal(tok) == r"'a\\b''c'"
 
 
+def test_between_bounds_with_long_numbers_fail_fast():
+    import time
+
+    # a bound the fold cannot read, after a long number: each digit run
+    # and each run of blanks is matched one way only, so the search fails
+    # at once instead of trying every way to split the run
+    digits = "1" * 40
+    for q, out in (
+        (f"SELECT * FROM t WHERE id BETWEEN {digits} AND hi", None),
+        (f"SELECT * FROM t WHERE x BETWEEN 1{' ' * 2000}AND hi", None),
+        (
+            f"SELECT * FROM t WHERE x BETWEEN 0.{digits} AND hi",
+            f"SELECT * FROM t WHERE x BETWEEN CAST(0.{digits} AS DOUBLE) AND hi",
+        ),
+    ):
+        start = time.perf_counter()
+        assert fc.rewrite_pure(q, False) == {"out": out or q}
+        assert time.perf_counter() - start < 1.0
+
+
 def test_nesting_primitives():
     from arrow_datafusion_spark.sql.lex import (
         close,
